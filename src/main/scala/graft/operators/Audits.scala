@@ -849,22 +849,15 @@ final case class MergeAuditReport(
 
 object MergeAudit {
   def audit(source: DataFrame, target: DataFrame, spec: MergeSpec): MergeAuditReport = {
-    val withId = Matcher.withSourceId(source)
-    val exact = Matcher.matchRecords(withId, target, spec.matchSpec)
-    val matched =
-      if (spec.matchSpec.fuzzyColumns.nonEmpty)
-        Fuzzy.fuzzyMatch(exact, target, spec.matchSpec.targetPk,
-          spec.matchSpec.fuzzyColumns, spec.matchSpec.groups.size,
-          spec.matchSpec.fuzzyLimit)
-      else exact
-    val cached = matched.persist()
-    val total = cached.count()
-    val counts = cached.filter(col(Matcher.MatchGroup).isNotNull)
-      .groupBy(col(Matcher.MatchGroup)).count()
-      .collect()
+    val staged = Matcher.stage(source, target, spec.matchSpec)
+    // one pass: the unmatched rows are the null group, so the total is
+    // the sum over all groups and the match needs no cache of its own
+    val byGroup =
+      try staged.matched.groupBy(col(Matcher.MatchGroup)).count().collect()
+      finally staged.unpersist()
+    val counts = byGroup.filterNot(_.isNullAt(0))
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    cached.unpersist()
-    MergeAuditReport(total, counts)
+    MergeAuditReport(byGroup.map(_.getLong(1)).sum, counts)
   }
 }
 

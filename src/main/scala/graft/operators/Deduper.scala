@@ -32,12 +32,14 @@ final case class DedupResult(
     duplicates: DataFrame,
     reflexiveCount: Long,
     symmetricCount: Long,
-    /** The persisted match join the outputs are built on (general path
-      * only; the window fast path caches nothing). Caller-owned. */
-    private[graft] val cachedMatch: Option[DataFrame] = None) {
-  /** Release the match cache once the outputs have been consumed.
+    /** The caches the outputs are built on (general path only; the
+      * window fast path caches nothing): the persisted match join, plus
+      * the exact match [[Matcher.stage]] persists when fuzzy columns
+      * follow it. Caller-owned. */
+    private[graft] val caches: Seq[DataFrame] = Nil) {
+  /** Release the caches once the outputs have been consumed.
     * Safe no-op on the fast path / after a prior call. */
-  def unpersist(): Unit = { cachedMatch.foreach(_.unpersist()); () }
+  def unpersist(): Unit = caches.foreach(_.unpersist())
 }
 
 object Deduper {
@@ -141,15 +143,9 @@ object Deduper {
     val ms = ms0.copy(groups = ms0.groups.map(g =>
       g.copy(constraints = g.constraints :+ orient)))
 
-    val withId = Matcher.withSourceId(table)
-    val matched0 = Matcher.matchRecords(withId, table, ms)
-    val matched =
-      if (ms.fuzzyColumns.nonEmpty)
-        Fuzzy.fuzzyMatch(matched0, table, pk, ms.fuzzyColumns,
-          ms.groups.size, ms.fuzzyLimit)
-      else matched0
-
-    val cached = matched.persist()
+    val staged = Matcher.stage(table, table, ms)
+    val cached = staged.matched.persist()
+    val caches = staged.caches :+ cached
     val (reflexive, symmetric) =
       try {
         val r = Matcher.reflexiveCount(cached, pk)
@@ -159,7 +155,7 @@ object Deduper {
           require(s == 0, s"dedup invariant violated: $s symmetric matches")
         }
         (r, s)
-      } catch { case e: Throwable => cached.unpersist(); throw e }
+      } catch { case e: Throwable => caches.foreach(_.unpersist()); throw e }
 
     val dupes = cached.filter(col(TargetId).isNotNull)
     val survivors = table.join(
@@ -206,8 +202,8 @@ object Deduper {
     val folded = joined.select(outCols.toIndexedSeq: _*)
     // cached stays persisted: the returned DataFrames are built on it
     // and would otherwise recompute the whole match per caller action.
-    // The handle rides in the result — DedupResult.unpersist() releases
-    // it (Gateway cache cleanup remains the backstop).
-    DedupResult(folded, dupes, reflexive, symmetric, Some(cached))
+    // The handles ride in the result — DedupResult.unpersist() releases
+    // them (Gateway cache cleanup remains the backstop).
+    DedupResult(folded, dupes, reflexive, symmetric, caches)
   }
 }

@@ -169,7 +169,17 @@ object Fuzzy {
       limit: Double = DefaultLimit,
       maxTrigramFreq: Long = DefaultMaxTrigramFreq,
       broadcastLimit: Long = DefaultBroadcastLimit,
-      maxCrossPairs: Long = DefaultMaxCrossPairs): DataFrame = {
+      maxCrossPairs: Long = DefaultMaxCrossPairs): DataFrame =
+    pairsWithCaches(source, sourceId, sourceCol, target, targetId, targetCol,
+      limit, maxTrigramFreq, broadcastLimit, maxCrossPairs)._1
+
+  /** [[candidatePairs]] plus the trigram-prep caches its lazy result still
+    * reads; the caller releases them once the pairs are materialized. */
+  private def pairsWithCaches(
+      source: DataFrame, sourceId: String, sourceCol: String,
+      target: DataFrame, targetId: String, targetCol: String,
+      limit: Double, maxTrigramFreq: Long, broadcastLimit: Long,
+      maxCrossPairs: Long): (DataFrame, Seq[DataFrame]) = {
     // materialized: each side feeds multiple consumers (count probe /
     // frequency cap / join) — without a barrier the trigram prep would
     // be recomputed per consumer
@@ -211,6 +221,8 @@ object Fuzzy {
         sPrep.collect().map(r =>
           (r.get(0), r.getSeq[Long](1).toArray, r.getInt(2))),
         overCap)
+      // the pairs read the broadcast index, not the source prep
+      sPrep.unpersist()
       val bIdx = spark.sparkContext.broadcast(idx)
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(sourceId,
@@ -266,7 +278,7 @@ object Fuzzy {
             acc.result()
           }
         }
-      spark.createDataFrame(pairsRdd, outSchema)
+      (spark.createDataFrame(pairsRdd, outSchema), Seq(tPrep))
     } else {
       val sTri = sPrep.select(col(sourceId),
         explode(col("__sh")).as("__h"), col("__sn"))
@@ -280,7 +292,7 @@ object Fuzzy {
         .filter(col("count") <= maxTrigramFreq && col("tcount") <= maxTrigramFreq)
         .select("__h")
 
-      sTri
+      val pairs = sTri
         .hint("shuffle_hash") // partition the inverted-index join by trigram
         .join(freqOk, Seq("__h"))
         .join(tTri, Seq("__h"))
@@ -295,6 +307,7 @@ object Fuzzy {
         .withColumn("distance", lit(1.0) - col("__sim"))
         .filter(col("distance") < limit)
         .select(col(sourceId), col(targetId), col("distance"))
+      (pairs, Seq(sPrep, tPrep))
     }
   }
 
@@ -331,6 +344,16 @@ object Fuzzy {
   private[graft] val lastAssignMode =
     new java.util.concurrent.atomic.AtomicReference[String]("")
 
+  /** Drop the blocks of a `localCheckpoint` result once nothing reads it
+    * any more (the checkpoint RDD is private to this object, so no
+    * caller's cache can share it). */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   def greedyAssign(pairs: DataFrame, sourceId: String, targetId: String,
                    maxRounds: Int = 200,
                    driverLimit: Long = DefaultDriverAssignLimit): DataFrame = {
@@ -358,6 +381,7 @@ object Fuzzy {
           out.add(r)
         }
       }
+      releaseCheckpoint(remaining)
       spark.createDataFrame(out, pairs.schema)
     } else {
       val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -381,11 +405,14 @@ object Fuzzy {
             .join(winners.select(col(sourceId)), Seq(sourceId), "left_anti")
             .join(winners.select(col(targetId)), Seq(targetId), "left_anti")
             .localCheckpoint()
+          releaseCheckpoint(remaining)
           remaining = next
           if (next.isEmpty) done = true
         }
         round += 1
       }
+      // the result reads only the per-round winners
+      releaseCheckpoint(remaining)
       if (rounds.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pairs.schema)
@@ -398,7 +425,12 @@ object Fuzzy {
    * unmatched sources against still-unclaimed targets. `matched` is the
    * exact-phase output (with Matcher.TargetId / Matcher.MatchGroup);
    * returns it with fuzzy assignments folded in (tagged with group
-   * indices following the exact groups).
+   * indices following the exact groups). Each fuzzy column reads
+   * `matched` three times (unmatched sources, claimed targets, the
+   * fold-back join): pass it persisted, as [[Matcher.stage]] does, or
+   * it is evaluated once per reader. The trigram-prep caches and the
+   * pair checkpoint are released inside this call (the distributed
+   * assignment's per-round winners stay: the result reads them).
    */
   def fuzzyMatch(matched: DataFrame, target: DataFrame, targetPk: String,
                  fuzzyColumns: Seq[String], nExactGroups: Int,
@@ -411,11 +443,16 @@ object Fuzzy {
       val claimed = current.filter(col(TargetId).isNotNull)
         .select(col(TargetId).as(targetPk)).distinct()
       val available = target.join(claimed, Seq(targetPk), "left_anti")
-      val pairs = candidatePairs(
+      val (pairs, prep) = pairsWithCaches(
         unmatchedSrc.select(col(SourceId), col(fcol)), SourceId, fcol,
         available.select(col(targetPk), col(fcol)), targetPk, fcol,
-        limit)
-      val assignment = greedyAssign(pairs, SourceId, targetPk)
+        limit, DefaultMaxTrigramFreq, DefaultBroadcastLimit,
+        DefaultMaxCrossPairs)
+      // greedyAssign materializes the assignment, so the prep is done
+      val assigned =
+        try greedyAssign(pairs, SourceId, targetPk)
+        finally prep.foreach(_.unpersist())
+      val assignment = assigned
         .select(col(SourceId),
           col(targetPk).as("__fuzzy_tid"),
           lit(nExactGroups + 1 + i).as("__fuzzy_grp"))

@@ -68,6 +68,14 @@ final case class MatchSpec(
     copy(groups = groups ++ nested.groups)
 }
 
+/** A staged match: the source with its working id, the match on it
+  * (see [[Matcher.matchRecords]]), and the caches the staging created —
+  * the persisted exact match when a fuzzy pass ran, else none. */
+final case class StagedMatch(source: DataFrame, matched: DataFrame,
+                             caches: Seq[DataFrame]) {
+  def unpersist(): Unit = caches.foreach(_.unpersist())
+}
+
 object Matcher {
 
   val SourceId = "working_source_id"
@@ -83,6 +91,13 @@ object Matcher {
    * Ensure the working source id column exists.
    * `monotonically_increasing_id` is unique-not-dense, which is all the
    * reference uses SERIAL for (a join key, record_matcher.rb:43).
+   *
+   * The id is assigned per evaluation, from partition layout: it is
+   * stable across re-evaluations only when the source itself is
+   * deterministic (same rows in the same partitions). Merge, audit and
+   * dedup therefore evaluate it once per call — through [[stage]], whose
+   * cached exact match feeds every fuzzy consumer, and through the
+   * persisted match the later phases read.
    */
   def withSourceId(source: DataFrame): DataFrame =
     if (source.columns.contains(SourceId)) source
@@ -136,6 +151,28 @@ object Matcher {
       .drop("__rn")
 
     sourceWithId.join(resolved, Seq(SourceId), "left")
+  }
+
+  /**
+   * Stage the whole match the way merge, audit and dedup run it: assign
+   * `working_source_id`, run the exact groups, then the fuzzy columns.
+   * When a fuzzy pass follows, the exact result is persisted first, so
+   * the pass's three consumers (unmatched sources, claimed targets, the
+   * fold-back join) read one evaluation of the source and its ids — the
+   * reference likewise matches one materialized working table in place
+   * (record_matcher.rb:37-68, fuzzy_merger.rb:38-67). Without fuzzy
+   * columns nothing is persisted. The caller owns `caches`.
+   */
+  def stage(source: DataFrame, target: DataFrame, spec: MatchSpec): StagedMatch = {
+    val withId = withSourceId(source)
+    val exact = matchRecords(withId, target, spec)
+    if (spec.fuzzyColumns.isEmpty) StagedMatch(withId, exact, Nil)
+    else {
+      val cached = exact.persist()
+      try StagedMatch(withId, Fuzzy.fuzzyMatch(cached, target, spec.targetPk,
+        spec.fuzzyColumns, spec.groups.size, spec.fuzzyLimit), Seq(cached))
+      catch { case e: Throwable => cached.unpersist(); throw e }
+    }
   }
 
   /**

@@ -36,6 +36,17 @@ import graft.types.Template
  * projection; the union is free. Inserted rows get fresh pks generated as
  * max(existing)+dense rank — one tiny extra aggregate, deterministic for
  * the oracle, unique at any scale.
+ *
+ * The match is evaluated once per merge: [[Matcher.stage]] caches the
+ * exact match before a fuzzy pass, and the persisted `matched` feeds the
+ * update, insert and write-back phases, so the source (and the
+ * `working_source_id` it gets) is read once per call. The write-back
+ * reads source rows from `matched` and takes returned pks straight from
+ * the match/insert key; only returned non-pk columns join `newTarget`
+ * (a spec that rewrites the pk column on update returns the key it
+ * matched). Under duplicate target pks that makes a pk-only write-back return each
+ * source row once, while a non-pk write-back still repeats the row once
+ * per duplicate target row.
  */
 final case class MergeSpec(
     matchSpec: MatchSpec,
@@ -57,16 +68,25 @@ final case class MergeSpec(
       * reference's destructive list mutation, SURVEY §7.5). */
     insertConstraints: Seq[MatchConstraint] = Nil)
 
-/** Outputs of a merge. `matched` is the match join feeding all phases;
-  * when more than one phase consumes it, `Merger.merge` persists it and
-  * the CALLER owns the cache: call `unpersist()` after the outputs have
-  * been evaluated (it is a safe no-op when nothing was persisted). */
+/** Outputs of a merge. `matched` is the match join feeding all phases.
+  * The CALLER owns every cache the merge created; call `unpersist()`
+  * after the outputs have been evaluated (outputs evaluated later
+  * recompute from the source). `caches` lists them:
+  *  - the exact match, persisted by [[Matcher.stage]] when fuzzy columns
+  *    follow it;
+  *  - `matched`, persisted when more than one phase consumes it (upsert,
+  *    or any mode with RETURNING);
+  *  - the insert phase's distributed-rank frame (see
+  *    `Merger.withDistributedRank`), unless update-only.
+  * The fuzzy pass releases its own trigram-prep caches and pair
+  * checkpoint before `merge` returns. */
 final case class MergeResult(
     newTarget: DataFrame,
     updatedSource: DataFrame,
-    matched: DataFrame) {
-  /** Release the match cache (blocking=false). No-op if not persisted. */
-  def unpersist(): Unit = { matched.unpersist(); () }
+    matched: DataFrame,
+    caches: Seq[DataFrame] = Nil) {
+  /** Release every cache in `caches` (blocking=false). */
+  def unpersist(): Unit = caches.foreach(_.unpersist())
 }
 
 object Merger {
@@ -104,7 +124,13 @@ object Merger {
    * Adds `rankCol` = `base` + rank (LongType).
    */
   private[graft] def withDistributedRank(df: DataFrame, orderCol: String,
-                                         rankCol: String, base: Long): DataFrame = {
+                                         rankCol: String, base: Long): DataFrame =
+    rankWithCache(df, orderCol, rankCol, base)._1
+
+  /** [[withDistributedRank]] plus the persisted ranged frame its result
+    * reads, for callers that release it. */
+  private def rankWithCache(df: DataFrame, orderCol: String, rankCol: String,
+                            base: Long): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val LocalMask = (1L << 33) - 1
@@ -124,12 +150,13 @@ object Merger {
     }.toSeq
     import spark.implicits._
     val offDf = offRows.toDF("__pid", "__mstart", "__off")
-    ranged
+    val ranked = ranged
       .withColumn("__pid", shiftright(col("__mono"), 33))
       .join(broadcast(offDf), Seq("__pid"))
       .withColumn(rankCol,
         lit(base) + col("__off") + (col("__mono") - col("__mstart")) + 1)
       .drop("__pid", "__mono", "__mstart", "__off")
+    (ranked, ranged)
   }
 
   /**
@@ -141,13 +168,8 @@ object Merger {
   def merge(source: DataFrame, target: DataFrame, spec: MergeSpec): MergeResult = {
     val ms = spec.matchSpec
     val pk = ms.targetPk
-    val withId = Matcher.withSourceId(source)
-    val exact = Matcher.matchRecords(withId, target, ms)
-    val matchPlan =
-      if (ms.fuzzyColumns.nonEmpty)
-        Fuzzy.fuzzyMatch(exact, target, pk, ms.fuzzyColumns,
-          ms.groups.size, ms.fuzzyLimit)
-      else exact
+    val staged = Matcher.stage(source, target, ms)
+    val withId = staged.source
     // Persist ONLY when >1 phase consumes the match join — without the
     // barrier the source×target shuffle join would run once per
     // consumer. updateOnly/insertOnly without RETURNING have exactly
@@ -160,7 +182,9 @@ object Merger {
       (if (spec.insertOnly) 0 else 1) +   // update phase: best-per-target
       (if (spec.updateOnly) 0 else 1) +   // insert phase: unmatched set
       returningUses                       // write-back key maps
-    val matched = if (nConsumers > 1) matchPlan.persist() else matchPlan
+    val matched =
+      if (nConsumers > 1) staged.matched.persist() else staged.matched
+    val matchCaches = staged.caches ++ (if (nConsumers > 1) Seq(matched) else Nil)
 
     val corr = mergeableColumns(withId, target, spec)
 
@@ -220,16 +244,16 @@ object Merger {
         df.filter(Template.toColumn(c.template, Some(c.column)))
       }
 
-    val (newTarget, insertedKeyMap) =
-      if (spec.updateOnly) (newTargetUpdated, None)
+    val (newTarget, insertedKeyMap, rankCache) =
+      if (spec.updateOnly) (newTargetUpdated, None, None)
       else {
         // fresh pks: max(existing) + global rank by source id —
         // deterministic and unique; the max() is a single tiny agg.
         val maxPk = target.agg(max(col(pk)).cast("long")).collect()(0)
         val base = if (maxPk.isNullAt(0)) 0L else maxPk.getLong(0)
-        val withPk = withDistributedRank(unmatched, SourceId, "__new_pk", base)
-          .withColumn("__new_pk",
-            col("__new_pk").cast(target.schema(pk).dataType))
+        val (ranked, ranged) = rankWithCache(unmatched, SourceId, "__new_pk", base)
+        val withPk = ranked.withColumn("__new_pk",
+          col("__new_pk").cast(target.schema(pk).dataType))
         val insertVals: Map[String, Column] = {
           val exprs = spec.insertExpressions.map { case (c, tpl) =>
             c -> Template.toColumn(tpl, Some(c))
@@ -248,54 +272,52 @@ object Merger {
         }
         val inserted = withPk.select((projected :+ col(SourceId).as("__src_id")).toIndexedSeq: _*)
         (newTargetUpdated.unionByName(inserted.drop("__src_id")),
-          Some(inserted.select(col("__src_id").as(SourceId), col(pk).as("__ret_pk"))))
+          Some(inserted.select(col("__src_id").as(SourceId), col(pk).as("__ret_pk"))),
+          Some(ranged))
       }
 
     // ---- RETURNING write-back (M4) -----------------------------------
     // The reference's RETURNING yields the POST-merge row
-    // (record_merger.rb:70-80,97-107), so values come from `newTarget`:
-    // matched rows are addressed by their match key, inserted rows by
-    // their generated pk. Any target column can be returned, not just
-    // the pk. Mode rules follow the suppressed phases: update_only
-    // writes back only for matched rows, insert_only only for inserts.
+    // (record_merger.rb:70-80,97-107): matched rows are addressed by
+    // their match key, inserted rows by their generated pk. Any target
+    // column can be returned, not just the pk. Mode rules follow the
+    // suppressed phases: update_only writes back only for matched rows,
+    // insert_only only for inserts.
     val updatedSource: DataFrame =
       if (spec.returnToSource.isEmpty) withId
       else {
-        // ONE source-keyed map of every row's post-merge target key:
-        // matched rows address by match key, inserted rows by their
-        // generated pk (the sets are disjoint — inserts come from the
-        // unmatched side), so a union + single join replaces the
-        // former two left joins against the source.
-        val matchedMap =
-          if (spec.insertOnly) // no update phase → no matched write-back
-            matched.filter(lit(false))
-              .select(col(SourceId), col(TargetId).as("__ret_key"))
-          else
-            matched.filter(col(TargetId).isNotNull)
-              .select(col(SourceId), col(TargetId).as("__ret_key"))
-        val retMap = insertedKeyMap match {
-          case Some(ins) => matchedMap.unionByName(
-            ins.select(col(SourceId), col("__ret_pk").as("__ret_key")))
-          case None => matchedMap
+        // every source row with its post-merge target key, read off the
+        // (persisted) match: the match key unless insert-only, else the
+        // generated pk — disjoint, since inserts come from the unmatched
+        val matchKey =
+          if (spec.insertOnly) lit(null).cast(target.schema(pk).dataType)
+          else col(TargetId)
+        val keyed0 = matched.select(
+          withId.columns.map(col).toIndexedSeq :+ matchKey.as("__ret_key"): _*)
+        val keyed = insertedKeyMap.fold(keyed0) { ins =>
+          keyed0.join(ins, Seq(SourceId), "left")
+            .withColumn("__ret_key", coalesce(col("__ret_key"), col("__ret_pk")))
         }
-        var src = withId.as("src")
-          .join(retMap.as("m"), Seq(SourceId), "left")
-        val retTargetCols = spec.returnToSource.map(_._1).distinct
-        val tvals = newTarget.select(
-          col(pk).as("__tv_key") +:
-            retTargetCols.map(c => col(c).as(s"__tv_$c")): _*)
-        src = src.join(tvals, col("__ret_key") === col("__tv_key"), "left")
+        // the key IS the returned pk; other returned columns are read
+        // from newTarget
+        val viaTarget = spec.returnToSource.map(_._1).distinct.filter(_ != pk)
+        val src =
+          if (viaTarget.isEmpty) keyed
+          else keyed.join(
+            newTarget.select(col(pk).as("__tv_key") +:
+              viaTarget.map(c => col(c).as(s"__tv_$c")): _*),
+            col("__ret_key") === col("__tv_key"), "left")
         val outCols = withId.columns.map { c =>
           spec.returnToSource.find(_._2 == c) match {
             case Some((tcol, _)) =>
-              coalesce(col(s"__tv_$tcol"), col(s"src.$c"))
-                .cast(withId.schema(c).dataType).as(c)
-            case None => col(s"src.$c").as(c)
+              val v = if (viaTarget.contains(tcol)) col(s"__tv_$tcol") else col("__ret_key")
+              coalesce(v, col(c)).cast(withId.schema(c).dataType).as(c)
+            case None => col(c)
           }
         }
         src.select(outCols.toIndexedSeq: _*)
       }
 
-    MergeResult(newTarget, updatedSource, matched)
+    MergeResult(newTarget, updatedSource, matched, matchCaches ++ rankCache)
   }
 }

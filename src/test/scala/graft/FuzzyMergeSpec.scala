@@ -41,6 +41,47 @@ class FuzzyMergeSpec extends SparkSpec {
     assert(out.keySet == Set(1L, 2L, 3L, 4L))  // insert got pk 4
   }
 
+  test("a fuzzy merge with RETURNING evaluates the source match once") {
+    // every evaluation of a source row runs the UDF once per scan; one
+    // evaluation of the exact match scans the source once per group
+    // join plus once for the join back onto the source
+    val evals = spark.sparkContext.longAccumulator("source-row evaluations")
+    val bump = udf((s: String) => { evals.add(1); s })
+    val names = Seq("alice cooper", "bob dylan", "carol king", "dave brubeck",
+      "ella fitzgerald", "frank sinatra", "gil evans", "herbie hancock")
+    val target = (names.zipWithIndex.map { case (n, i) => (i + 1L, n, s"c$i", 0L) } ++
+      Seq((9L, "kenny dorham", "c8", 0L), (10L, "lee morgan", "c9", 0L)))
+      .toDF("id", "name", "city", "hits")
+    val rows = names.zipWithIndex.flatMap { case (n, i) => Seq(
+      (100L + i, n, "zz", -1L),                  // exact on name
+      (200L + i, n.toUpperCase, s"c$i", -1L),    // exact on city
+      (300L + i, n.reverse + " q", "zz", -1L))   // inserted
+    } ++ Seq((400L, "kenny dorhem", "zz", -1L), (401L, "lee morgen", "zz", -1L))
+    // an RDD, not a local relation: the optimizer would fold the UDF
+    val source = spark.sparkContext.parallelize(rows, 2)
+      .toDF("working_source_id", "raw", "city", "ret")
+      .select(col("working_source_id"), bump(col("raw")).as("name"),
+        col("city"), col("ret"))
+    val spec = MergeSpec(
+      matchSpec = MatchSpec(
+        groups = Seq(ExactGroup.onColumns("name"), ExactGroup.onColumns("city")),
+        targetPk = "id",
+        fuzzyColumns = Seq("name")),
+      excludedColumns = Seq("ret"),
+      mergeExpressions = Map("hits" -> "$T + 1"),
+      returnToSource = Seq("id" -> "ret"))
+    val res = Merger.merge(source, target, spec)
+    try {
+      val groups = res.matched.groupBy("working_exact_match_group").count()
+        .as[(Option[Int], Long)].collect().toMap
+      assert(groups == Map(Some(1) -> 8L, Some(2) -> 8L, Some(3) -> 2L, None -> 8L))
+      assert(res.newTarget.count() == 10 + 8)
+      assert(res.updatedSource.filter(col("ret") > 0).count() == rows.size)
+    } finally res.unpersist()
+    val bound = (spec.matchSpec.groups.size + 1L) * rows.size
+    assert(evals.value <= bound, s"${evals.value} source-row evaluations")
+  }
+
   test("fuzzy never claims a target taken by an exact stage") {
     val target = Seq((1L, "same text here")).toDF("id", "name")
     val source = Seq(

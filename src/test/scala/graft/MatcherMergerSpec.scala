@@ -183,6 +183,26 @@ class MatcherMergerSpec extends SparkSpec {
     }
     assert(tgt.count() == 4)
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+
+    // fuzzy upsert with RETURNING: the staged exact match, the match,
+    // the distributed rank, and the fuzzy pass's trigram preps and pair
+    // checkpoint must all be gone after unpersist()
+    val fuzzySpec = MergeSpec(
+      matchSpec = spec.copy(fuzzyColumns = Seq("name")),
+      excludedColumns = Seq("tgt_id"),
+      returnToSource = Seq(("id", "tgt_id")))
+    val typo = src2.union(Seq((104L, "davey", "XX", 5.0))
+      .toDF("working_source_id", "name", "city", "bal")
+      .withColumn("tgt_id", lit(null).cast("long")))
+    (1 to 2).foreach { _ =>
+      val res = Merger.merge(typo, target, fuzzySpec)
+      res.newTarget.write.format("noop").mode("overwrite").save()
+      res.updatedSource.write.format("noop").mode("overwrite").save()
+      assert(res.matched.filter(col("working_exact_match_group") === 3)
+        .count() == 1) // davey → dave
+      res.unpersist()
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    }
   }
 
   test("merge audit reports per-group rates without mutation") {

@@ -85,6 +85,62 @@ class MergePropertiesSpec extends SparkSpec {
     }
   }
 
+  test("pk write-back from the key map equals the newTarget-join formula") {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    (1 to 4).foreach { r =>
+      val t = sample(genTarget, 400 + r)
+      val s = sample(genSource, 3000 + r)
+      val target = t.toDF("id", "k", "v")
+      val source = s.toDF("working_source_id", "k", "v")
+        .withColumn("ret", lit(-1L)).withColumn("ret_v", lit(-1.0))
+      val maxPk = t.map(_._1).max
+      Seq("upsert" -> MergeSpec(matchSpec = null),
+        "update-only" -> MergeSpec(matchSpec = null, updateOnly = true),
+        "insert-only" -> MergeSpec(matchSpec = null, insertOnly = true)
+      ).foreach { case (mode, m) =>
+        val spec = m.copy(
+          matchSpec = MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"),
+          excludedColumns = Seq("ret", "ret_v"),
+          mergeExpressions = Map("v" -> "$T + $S"),
+          returnToSource = Seq("id" -> "ret"))
+        val res = Merger.merge(source, target, spec)
+        // the former formula: every source row's post-merge key (match
+        // key, or the pk of its insert, found by its copied unique v),
+        // looked up in newTarget
+        val matchKeys =
+          if (spec.insertOnly) Seq.empty[(Long, Long)].toDF("sid", "key")
+          else res.matched.filter(col("working_target_id").isNotNull)
+            .select(col("working_source_id").as("sid"), col("working_target_id").as("key"))
+        val insertKeys = res.newTarget.filter(col("id") > maxPk)
+          .join(source.select(col("working_source_id").as("sid"), col("v")), Seq("v"))
+          .select(col("sid"), col("id").as("key"))
+        val former = source
+          .join(matchKeys.union(insertKeys),
+            col("working_source_id") === col("sid"), "left")
+          .join(res.newTarget.select(col("id").as("tv")),
+            col("key") === col("tv"), "left")
+          .select(col("working_source_id"), coalesce(col("tv"), col("ret")).as("ret"))
+        val got = res.updatedSource.select("working_source_id", "ret")
+        assert(got.count() == s.size, s"round $r $mode")
+        assert(got.exceptAll(former).isEmpty && former.exceptAll(got).isEmpty,
+          s"round $r $mode")
+        res.unpersist()
+      }
+      // a returned non-pk column still reads the post-merge target row
+      val both = Merger.merge(source, target, MergeSpec(
+        matchSpec = MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"),
+        excludedColumns = Seq("ret", "ret_v"),
+        mergeExpressions = Map("v" -> "$T + $S"),
+        returnToSource = Seq("id" -> "ret", "v" -> "ret_v")))
+      val wrong = both.updatedSource
+        .join(both.newTarget.select(col("id"), col("v").as("tv")),
+          col("ret") === col("id"), "left")
+        .filter(col("tv").isNull || col("ret_v") =!= col("tv"))
+      assert(wrong.isEmpty, s"round $r: non-pk write-back")
+      both.unpersist()
+    }
+  }
+
   test("dedup: survivors are per-key min pks; invariants always 0") {
     (1 to Rounds).foreach { r =>
       val t = sample(genTarget, 90 + r)
