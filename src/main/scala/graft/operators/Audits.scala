@@ -884,6 +884,10 @@ final case class DedupAuditReport(
   }
 }
 
+/** Dedup dry-run audit: the self-match of [[Deduper]]'s general path
+  * (exact groups plus the orientation constraint), reported by
+  * [[Matcher.selfMatchReport]] — one aggregation over the unpersisted
+  * match, so the audit is one Spark action and caches nothing. */
 object DedupAudit {
   def audit(table: DataFrame, spec: MergeSpec,
             orientation: Option[MatchConstraint] = None): DedupAuditReport = {
@@ -891,16 +895,8 @@ object DedupAudit {
     val orient = orientation.getOrElse(Deduper.defaultOrientation(pk))
     val ms = spec.matchSpec.copy(groups = spec.matchSpec.groups.map(g =>
       g.copy(constraints = g.constraints :+ orient)))
-    val withId = Matcher.withSourceId(table)
-    val matched = Matcher.matchRecords(withId, table, ms).persist()
-    val total = matched.count()
-    val counts = matched.filter(col(Matcher.MatchGroup).isNotNull)
-      .groupBy(col(Matcher.MatchGroup)).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val refl = Matcher.reflexiveCount(matched, pk)
-    val symm = Matcher.symmetricCount(matched, pk)
-    matched.unpersist()
-    DedupAuditReport(total, counts, refl, symm)
+    val matched = Matcher.matchRecords(Matcher.withSourceId(table), table, ms)
+    Matcher.selfMatchReport(matched, ms)
   }
 }
 
@@ -951,31 +947,44 @@ final case class CsvAuditReport(
 }
 
 object CsvAudit {
+  /** One pass over `df`. Per-key duplicate counts (csv_audit.rb:34-37
+    * runs one GROUP BY per key) are folded into one aggregation: each
+    * row contributes one (key, value) record per audited key, a single
+    * shuffle counts value multiplicities for every key at once, and
+    * only the ≤|keys|-row result reaches the driver. The coverage
+    * counts ride the first key's records (one per row) through the same
+    * aggregation; without keys they are [[Audits.coverage]]. */
   def audit(df: DataFrame, keys: Seq[String], columns: Seq[String],
             malformedCount: Long = 0L): CsvAuditReport = {
-    val cov = Audits.coverage(df, columns).collect()(0)
-    val total = cov.getLong(0)
-    val covMap = columns.zipWithIndex.map { case (c, i) =>
-      c -> cov.getLong(i + 1)
-    }.toMap
-    // Per-key duplicate counts (csv_audit.rb:34-37 runs one GROUP BY
-    // per key) — folded into ONE pass here: each row contributes one
-    // (key, value) pair per audited key, a single shuffle counts value
-    // multiplicities for every key at once, and only the ≤|keys|-row
-    // result reaches the driver.
-    val kd: Map[String, Long] =
-      if (keys.isEmpty) Map.empty
-      else {
-        val pairs = df.select(explode(array(keys.map(k =>
-          struct(lit(k).as("k"), col(k).cast("string").as("v"))): _*)).as("p"))
-        pairs.select(col("p.k").as("k"), col("p.v").as("v"))
-          .groupBy(col("k"), col("v")).agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1)
-          .groupBy(col("k")).agg(count(lit(1)).as("dups"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val covCols = "__total" +: columns.indices.map(i => s"__cov$i")
+    // one Long per coverage column (total first) and one per key
+    val (cov, kd) =
+      if (keys.isEmpty) {
+        val r = Audits.coverage(df, columns).head()
+        (covCols.indices.map(r.getLong), Map.empty[String, Long])
+      } else {
+        val flags = lit(1) +: columns.map(c =>
+          when(Audits.nonBlank(col(c)), 1).otherwise(0))
+        val zeros = flags.map(_ => lit(0))
+        val pairs = df.select(explode(array(keys.zipWithIndex.map { case (k, i) =>
+          struct(lit(k).as("k") +: col(k).cast("string").as("v") +:
+            (if (i == 0) flags else zeros).zip(covCols).map { case (f, n) => f.as(n) }: _*)
+        }: _*)).as("p")).select(col("p.*"))
+        val rows = pairs
+          .groupBy(col("k"), col("v"))
+          .agg(count(lit(1)).as("c"), covCols.map(c => sum(col(c)).as(c)): _*)
+          .groupBy(col("k"))
+          .agg(count(when(col("c") > 1, true)).as("dups"),
+            covCols.map(c => sum(col(c)).as(c)): _*)
+          .collect()
+        // an empty frame yields no rows: all counts 0
+        val first = rows.find(_.getString(0) == keys.head)
+        (covCols.indices.map(i => first.fold(0L)(_.getLong(2 + i))),
+          rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
       }
+    val covMap = columns.zipWithIndex.map { case (c, i) => c -> cov(i + 1) }.toMap
     val keyDups = keys.map(k => k -> kd.getOrElse(k, 0L)).toMap
-    CsvAuditReport(total, malformedCount, keyDups, covMap, keys, columns)
+    CsvAuditReport(cov.head, malformedCount, keyDups, covMap, keys, columns)
   }
 }
 

@@ -22,10 +22,13 @@ import graft.types.Template
  *     survivors via the merge column routing (dedup_driver.rb:65-82).
  *
  * Spark rebuild: survivors = table ⟖(anti) duplicates-by-pk; fold = the
- * M1 update join with the duplicate rows as source. The invariant counts
- * are deliberate mid-pipeline actions, so the matched DF is cached first
- * (SURVEY §7.4-5). Transitive chains (a→b→c) violate the symmetric
- * invariant and raise, exactly like the reference.
+ * M1 update join with the duplicate rows as source. Both invariant
+ * counts come from ONE mid-pipeline action
+ * ([[Matcher.selfMatchReport]]: one aggregation, no self-join) that
+ * runs before any output is built; the matched DF is cached first
+ * because that action and the outputs both read it (SURVEY §7.4-5).
+ * Transitive chains (a→b→c) violate the symmetric invariant and raise,
+ * exactly like the reference.
  */
 final case class DedupResult(
     newTable: DataFrame,
@@ -148,8 +151,8 @@ object Deduper {
     val caches = staged.caches :+ cached
     val (reflexive, symmetric) =
       try {
-        val r = Matcher.reflexiveCount(cached, pk)
-        val s = Matcher.symmetricCount(cached, pk)
+        val report = Matcher.selfMatchReport(cached, ms)
+        val (r, s) = (report.reflexiveCount, report.symmetricCount)
         if (enforceInvariants) {
           require(r == 0, s"dedup invariant violated: $r reflexive matches")
           require(s == 0, s"dedup invariant violated: $s symmetric matches")

@@ -176,20 +176,60 @@ object Matcher {
   }
 
   /**
-   * Self-join invariant counts used by dedup + audits (J8,
-   * merge_audit_sql.rb:21-36, enforced dedup_driver.rb:22-28):
-   * reflexive = rows matched to themselves; symmetric = pairs where a
-   * survivor is itself matched away.
+   * The dedup report over a self-match (J8, merge_audit_sql.rb:10-36,
+   * enforced dedup_driver.rb:22-28) as ONE aggregation, no join: the
+   * total row count, the per-group match counts, the reflexive count
+   * (rows matched to themselves) and the symmetric count (pairs where a
+   * survivor is itself matched away).
+   *
+   * For a key value k let A(k) = rows whose target is k and whose own
+   * pk is non-null and ≠ k, and B(k) = matched rows whose pk is k. The
+   * symmetric self-join `s1.target = s2.pk ∧ s2.target IS NOT NULL ∧
+   * s1.pk ≠ s2.pk` pairs exactly those rows, so its count is
+   * Σₖ A(k)·B(k). Each matched row emits one record keyed by its pk and
+   * one keyed by its target, each unmatched row one record under a null
+   * key (partial aggregation collapses those map-side); one `groupBy`
+   * on the key gives A, B and the per-key counts, and one global sum
+   * the report. The products carry multiplicity, so duplicate pks are
+   * exact; a null pk lands under the null key, whose A is 0 (a target
+   * is never null), as a null never joins.
+   *
+   * Group indices are 1 … `spec.groups.size + spec.fuzzyColumns.size`
+   * (exact groups, then [[fuzzyGroupIndex]]); only non-zero groups are
+   * reported.
    */
-  def reflexiveCount(matched: DataFrame, pk: String): Long =
-    matched.filter(col(TargetId).isNotNull && col(TargetId) === col(pk))
-      .count()
-
-  def symmetricCount(matched: DataFrame, pk: String): Long =
-    matched.as("s1")
-      .join(matched.as("s2"),
-        col(s"s1.$TargetId") === col(s"s2.$pk") &&
-          col(s"s2.$TargetId").isNotNull &&
-          col(s"s1.$pk") =!= col(s"s2.$pk"))
-      .count()
+  def selfMatchReport(matched: DataFrame, spec: MatchSpec): DedupAuditReport = {
+    val pk = col(spec.targetPk)
+    val tgt = col(TargetId)
+    val groups = 1 to spec.groups.size + spec.fuzzyColumns.size
+    // a record: its key, its share of A(k) and B(k), the reflexive flag,
+    // whether it counts as a row of the total, and the match group
+    def rec(key: Column, a: Column, b: Int, r: Column, n: Int,
+            g: Column): Column =
+      struct(key.as("k"), a.cast("int").as("a"), lit(b).as("b"),
+        r.cast("int").as("r"), lit(n).as("n"), g.as("g"))
+    val none = lit(null).cast(matched.schema(spec.targetPk).dataType)
+    val noGroup = lit(null).cast("int")
+    val records = when(tgt.isNull,
+      array(rec(none, lit(0), 0, lit(0), 1, noGroup))
+    ).otherwise(array(
+      rec(pk, lit(0), 1, coalesce(tgt === pk, lit(false)), 1,
+        col(MatchGroup)),
+      rec(tgt, coalesce(pk =!= tgt, lit(false)), 0, lit(0), 0, noGroup)))
+    val perKey = matched.select(explode(records).as("e")).select(col("e.*"))
+      .groupBy(col("k"))
+      .agg(sum(col("a")).as("a"), Seq(sum(col("b")).as("b"),
+        sum(col("r")).as("r"), sum(col("n")).as("n")) ++
+        groups.map(g => count(when(col("g") === g, true)).as(s"g$g")): _*)
+    val totals = Seq(sum(col("n")), sum(col("a") * col("b")), sum(col("r"))) ++
+      groups.map(g => sum(col(s"g$g")))
+    val row = perKey.agg(totals.head, totals.tail: _*).head()
+    def at(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
+    DedupAuditReport(
+      totalCount = at(0),
+      groupCounts = groups.zipWithIndex.map { case (g, i) => g -> at(3 + i) }
+        .filter(_._2 > 0).toMap,
+      reflexiveCount = at(2),
+      symmetricCount = at(1))
+  }
 }

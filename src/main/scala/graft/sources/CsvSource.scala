@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -42,22 +42,43 @@ object CsvSource {
   /** Read the header line and return the all-string schema it implies
     * (csv_file.rb:154-171: headers are sniffed, lowercased, and become
     * TEXT columns). */
-  def sniffSchema(spark: SparkSession, spec: CsvSpec): StructType = {
-    val first = spark.read
-      .option("encoding", spec.encoding)
-      .text(spec.path)
-      .limit(1)
-      .collect()
-    // an empty input has no header row — zero columns, not a crash
-    if (first.isEmpty) return new StructType()
-    val header = first(0).getString(0)
-    val cleaned = spec.removeExpression
-      .map(re => header.replaceAll(re, ""))
-      .getOrElse(header)
-    StructType(splitQuoteAware(cleaned, spec.delimiter, spec.quote).map { h =>
-      StructField(normalizeHeader(h, spec.quote), StringType, nullable = true)
-    })
+  def sniffSchema(spark: SparkSession, spec: CsvSpec): StructType =
+    schemaOf(header(spark, spec), spec)
+
+  /** The first line with `removeExpression` applied, or None for an
+    * empty input — one small action. `String.replaceAll` has the same
+    * java.util.regex semantics as the `regexp_replace` the data lines
+    * go through, so the result equals the cleaned first line. */
+  private def header(spark: SparkSession, spec: CsvSpec): Option[String] =
+    spark.read.option("encoding", spec.encoding).text(spec.path)
+      .limit(1).collect().headOption.map { r =>
+        val h = r.getString(0)
+        spec.removeExpression.fold(h)(h.replaceAll(_, ""))
+      }
+
+  /** The schema a header implies; an empty input has no header row —
+    * zero columns, not a crash. */
+  private def schemaOf(header: Option[String], spec: CsvSpec): StructType =
+    StructType(header.toSeq.flatMap(h =>
+      splitQuoteAware(h, spec.delimiter, spec.quote).map { c =>
+        StructField(normalizeHeader(c, spec.quote), StringType, nullable = true)
+      }))
+
+  /** Raw text lines (column `value`) with `removeExpression` stripped
+    * — the reference's sed pass (csv_file.rb:30-38). */
+  private def cleanedLines(spark: SparkSession, spec: CsvSpec): DataFrame = {
+    val lines = spark.read.option("encoding", spec.encoding).text(spec.path)
+    spec.removeExpression.fold(lines)(re =>
+      lines.withColumn("value", regexp_replace(col("value"), re, "")))
   }
+
+  /** Data lines: every cleaned line except the header, dropped by value
+    * equality (the header is constant; names come from the schema). */
+  private def isData(header: Option[String]): Column =
+    header.fold(lit(true))(h => col("value") =!= lit(h))
+
+  private def isPlain(spec: CsvSpec): Boolean =
+    spec.removeExpression.isEmpty && !spec.dropMalformed
 
   /** Lowercase, trim, and strip quotes from a sniffed header cell
     * (csv_file.rb:166-171 lowercases headers for column names). */
@@ -97,9 +118,15 @@ object CsvSource {
    * is WorkingTable's job, exactly like the reference's split between
    * CSVFile and WorkingTable.
    */
-  def read(spark: SparkSession, spec: CsvSpec): DataFrame = {
-    val schema = sniffSchema(spark, spec)
-    if (spec.removeExpression.isEmpty && !spec.dropMalformed) {
+  def read(spark: SparkSession, spec: CsvSpec): DataFrame =
+    readWith(spark, spec, header(spark, spec))
+
+  private def readWith(spark: SparkSession, spec: CsvSpec,
+                       header: Option[String]): DataFrame = {
+    val schema = schemaOf(header, spec)
+    // an empty input: zero columns, no rows (from_csv rejects an empty schema)
+    if (header.isEmpty) spark.emptyDataFrame
+    else if (isPlain(spec)) {
       // plain path: the native distributed CSV reader
       val r = spark.read
         .option("header", "true")
@@ -117,35 +144,26 @@ object CsvSource {
       // (The native reader cannot express the reference's arity
       // contract: CSV column pruning skips unprojected columns, so
       // wrong-arity rows survive undetected.)
-      val lines = spark.read
-        .option("encoding", spec.encoding)
-        .text(spec.path)
-      val cleaned = spec.removeExpression match {
-        case Some(re) =>
-          lines.withColumn("value", regexp_replace(col("value"), re, ""))
-        case None => lines
-      }
-      // Drop the header line by value equality on the first row
-      // (header is constant; names come from the sniffed schema).
-      val headerLine = cleaned.limit(1).collect()(0).getString(0)
-      val body = cleaned.filter(col("value") =!= lit(headerLine))
       val opts = Map(
         "sep" -> spec.delimiter,
         "quote" -> (if (spec.quote.isEmpty) " " else spec.quote),
         "mode" -> "PERMISSIVE")
-      val parsed = body
-        .select(from_csv(col("value"), schema, opts).as("r"), col("value"))
-      val arityOk =
-        if (spec.dropMalformed)
-          parsed.filter(csvArity(col("value"), spec) === lit(schema.size))
-        else parsed
-      arityOk.select(col("r.*"))
+      cleanedLines(spark, spec)
+        .filter(isData(header) && arityOk(spec, schema))
+        .select(from_csv(col("value"), schema, opts).as("r"))
+        .select(col("r.*"))
     }
   }
 
+  /** The repair path's arity contract on a raw line: always true when
+    * malformed rows are kept. */
+  private def arityOk(spec: CsvSpec, schema: StructType): Column =
+    if (spec.dropMalformed) csvArity(col("value"), spec) === lit(schema.size)
+    else lit(true)
+
   /** Number of quote-aware fields in a raw line, as a Column (UDF —
     * only used on the repair path, which is inherently line-oriented). */
-  private def csvArity(line: org.apache.spark.sql.Column, spec: CsvSpec) = {
+  private def csvArity(line: Column, spec: CsvSpec) = {
     val d = spec.delimiter
     val q = spec.quote
     val f = udf((s: String) =>
@@ -163,24 +181,13 @@ object CsvSource {
    * pass; no shuffle.
    */
   def quarantine(spark: SparkSession, spec: CsvSpec): DataFrame = {
-    val schema = sniffSchema(spark, spec)
-    val lines = spark.read.option("encoding", spec.encoding).text(spec.path)
-    val cleaned = spec.removeExpression match {
-      case Some(re) =>
-        lines.withColumn("value", regexp_replace(col("value"), re, ""))
-      case None => lines
-    }
-    // an empty input has no header row — return the (empty) frame
-    // with the contract schema instead of throwing on collect()(0)
-    val noHeader = cleaned.limit(1).collect().headOption match {
-      case Some(r) => cleaned.filter(col("value") =!= lit(r.getString(0)))
-      case None => cleaned
-    }
-    noHeader
+    val head = header(spark, spec)
+    val n = schemaOf(head, spec).size
+    cleanedLines(spark, spec).filter(isData(head))
       .select(col("value").as("line"),
         csvArity(col("value"), spec).as("n_fields"))
-      .filter(col("n_fields") =!= lit(schema.size))
-      .withColumn("expected", lit(schema.size))
+      .filter(col("n_fields") =!= lit(n))
+      .withColumn("expected", lit(n))
   }
 
   /**
@@ -216,10 +223,22 @@ object CsvSource {
     read(spark, spec).unionByName(replay(spark, spec, corrected, lineCol))
 
   /** Count of malformed rows (for CSVAudit, A1/csv_audit.rb:119-133):
-    * total raw data lines minus parsed rows. */
+    * raw lines minus the header minus parsed rows. The repair path
+    * counts all cleaned lines and the kept ones (data lines passing
+    * the arity contract, exactly what [[read]] returns) in one
+    * conditional-count aggregate, so the call is two small actions:
+    * the header line and that aggregate. An empty input counts 0. */
   def malformedCount(spark: SparkSession, spec: CsvSpec): Long = {
-    val raw = spark.read.option("encoding", spec.encoding).text(spec.path).count() - 1
-    val parsed = read(spark, spec).count()
-    math.max(0L, raw - parsed)
+    val head = header(spark, spec)
+    val (lines, parsed) =
+      if (isPlain(spec))
+        (cleanedLines(spark, spec).count(), readWith(spark, spec, head).count())
+      else {
+        val keep = isData(head) && arityOk(spec, schemaOf(head, spec))
+        val r = cleanedLines(spark, spec)
+          .agg(count(lit(1)), count(when(keep, true))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+    math.max(0L, lines - 1 - parsed)
   }
 }

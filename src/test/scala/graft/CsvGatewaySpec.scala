@@ -59,6 +59,23 @@ class CsvGatewaySpec extends SparkSpec {
     assert(bad.columns.toSeq == Seq("line", "n_fields", "expected"))
   }
 
+  test("an empty or header-only file reads as an empty frame, not a crash") {
+    // empty: no header row, so zero columns and no malformed lines
+    val empty = CsvSpec(tempCsv(""), quote = "\"")
+    val e = CsvSource.read(spark, empty)
+    assert(e.columns.isEmpty && e.count() == 0)
+    assert(CsvSource.malformedCount(spark, empty) == 0)
+    // the native-reader path agrees
+    val plain = empty.copy(dropMalformed = false)
+    assert(CsvSource.read(spark, plain).columns.isEmpty)
+    assert(CsvSource.malformedCount(spark, plain) == 0)
+    // header only: the header's columns, no rows, nothing malformed
+    val headerOnly = CsvSpec(tempCsv("a,b\n"), quote = "\"")
+    val h = CsvSource.read(spark, headerOnly)
+    assert(h.columns.toSeq == Seq("a", "b") && h.count() == 0)
+    assert(CsvSource.malformedCount(spark, headerOnly) == 0)
+  }
+
   test("replay re-ingests corrected quarantine lines under the same contract") {
     val p = tempCsv("a,b\n1,x\n2,y,EXTRA\n3\n4,z\n")
     val spec = CsvSpec(p, quote = "\"")

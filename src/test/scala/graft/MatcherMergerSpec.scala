@@ -134,6 +134,31 @@ class MatcherMergerSpec extends SparkSpec {
     assert(res.duplicates.count() == 2)
   }
 
+  test("non-zero dedup invariants: audit counts them, dedup refuses") {
+    val t = Seq((1L, "k"), (2L, "k"), (3L, "k"), (4L, "z")).toDF("id", "k")
+    val spec = MergeSpec(matchSpec =
+      MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"))
+    def orient(tpl: String) = Some(MatchConstraint("id", tpl))
+    // $T <= $S: 1, 2, 3 → 1 and 4 → 4; reflexive 1→1 and 4→4,
+    // symmetric (2→1, 1→1) and (3→1, 1→1)
+    assert(DedupAudit.audit(t, spec, orient("$T <= $S")) ==
+      DedupAuditReport(4, Map(1 -> 4L), 2, 2))
+    val refl = intercept[IllegalArgumentException](
+      Deduper.dedup(t, spec, orient("$T <= $S")))
+    assert(refl.getMessage.contains("2 reflexive matches"))
+    val unchecked = Deduper.dedup(t, spec, orient("$T <= $S"),
+      enforceInvariants = false)
+    assert((unchecked.reflexiveCount, unchecked.symmetricCount) == ((2L, 2L)))
+    unchecked.unpersist()
+    // $T <> $S: 1 → 2, 2 → 1, 3 → 1, 4 unmatched; symmetric (1→2, 2→1),
+    // (2→1, 1→2) and (3→1, 1→2)
+    assert(DedupAudit.audit(t, spec, orient("$T <> $S")) ==
+      DedupAuditReport(4, Map(1 -> 3L), 0, 3))
+    val symm = intercept[IllegalArgumentException](
+      Deduper.dedup(t, spec, orient("$T <> $S")))
+    assert(symm.getMessage.contains("3 symmetric matches"))
+  }
+
   test("single-consumer merges skip the match cache; unpersist clears it") {
     import org.apache.spark.storage.StorageLevel
     // CacheManager matches by canonical plan: earlier tests cached an

@@ -141,6 +141,39 @@ class MergePropertiesSpec extends SparkSpec {
     }
   }
 
+  test("one-pass self-match report equals the count and self-join formulas") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import Matcher.{TargetId, MatchGroup}
+    // the formulas the report replaces: a count, a group count, a
+    // filter and the symmetric self-join (merge_audit_sql.rb:21-36)
+    def reference(m: DataFrame): DedupAuditReport = DedupAuditReport(
+      m.count(),
+      m.filter(col(MatchGroup).isNotNull).groupBy(MatchGroup).count()
+        .as[(Int, Long)].collect().toMap,
+      m.filter(col(TargetId).isNotNull && col(TargetId) === col("id")).count(),
+      m.as("s1").join(m.as("s2"),
+        col(s"s1.$TargetId") === col("s2.id") &&
+          col(s"s2.$TargetId").isNotNull &&
+          col("s1.id") =!= col("s2.id")).count())
+    // rows (pk, target, group): pks 0-5 with repeats and nulls; targets
+    // drawn from the same range make self-matches and a→b→c chains
+    val genRow: Gen[(Option[Long], Option[Long], Option[Int])] = for {
+      pk <- Gen.frequency(5 -> Gen.choose(0L, 5L).map(Some(_)), 1 -> Gen.const(None))
+      tgt <- Gen.frequency(3 -> Gen.choose(0L, 5L).map(Some(_)), 2 -> Gen.const(None))
+      g <- Gen.choose(1, 3)
+    } yield (pk, tgt, tgt.map(_ => g))
+    val chain = Seq((Some(7L), Some(8L), Some(1)), (Some(8L), Some(9L), Some(2)),
+      (Some(9L), None, None))
+    val spec = MatchSpec(Seq.fill(3)(ExactGroup.onColumns("k")), targetPk = "id")
+    val rounds = Seq(Nil) ++ (1 to Rounds).map(r =>
+      chain ++ sample(Gen.listOfN(24, genRow), 700 + r))
+    rounds.zipWithIndex.foreach { case (rows, r) =>
+      val m = rows.toDF("id", TargetId, MatchGroup)
+      assert(Matcher.selfMatchReport(m, spec) == reference(m), s"round $r")
+    }
+  }
+
   test("dedup: survivors are per-key min pks; invariants always 0") {
     (1 to Rounds).foreach { r =>
       val t = sample(genTarget, 90 + r)
