@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,24 +19,27 @@ import graft.functions.Trigram
  * stages. Result is order-dependent in Postgres; our rebuild is the
  * deterministic greedy matching by (distance, source id, target pk).
  *
- * Spark-first design — two scale decisions:
+ * Spark-first design — two scale decisions, each a size dispatch whose
+ * branches give identical results:
  *
- *  1. CANDIDATE GENERATION is an inverted-index join, not a cross join
- *     and not a per-row KNN: explode each side into its distinct padded
- *     trigrams, join on the trigram (this plays the role of the
- *     reference's gist_trgm_ops index), count shared trigrams per
- *     (source, target) pair, and compute the EXACT pg_trgm similarity
- *     algebraically: sim = shared / (|A| + |B| - shared). One shuffle on
- *     trigram + one aggregation; no UDF in the pairwise hot path, and
- *     pairs below the threshold never materialize past the aggregation.
+ *  1. CANDIDATE GENERATION counts shared padded trigrams per (source,
+ *     target) pair and computes the EXACT pg_trgm similarity
+ *     algebraically: sim = shared / (|A| + |B| - shared). Pairs sharing
+ *     no trigram are never formed and no UDF runs per pair. By default
+ *     (the source is what the exact groups left, at most
+ *     [[DefaultBroadcastLimit]] rows) the source becomes an in-memory
+ *     postings index, the role of the reference's gist_trgm_ops index,
+ *     broadcast and probed by every target row; the target crosses the
+ *     shuffle once, as its (pk, string) projection. A larger source, or
+ *     a pair product above [[DefaultMaxCrossPairs]], takes the
+ *     inverted-index join instead: explode both sides into trigram
+ *     hashes, join on the hash, aggregate per pair.
  *
- *  2. ASSIGNMENT is an iterative driver loop over the (small, filtered)
- *     candidate-pair table: repeatedly take each source's best pair,
- *     resolve target conflicts by keeping the globally best pair per
- *     target, remove assigned sources and targets, loop until stable.
- *     The loop converges quickly because each round assigns every
- *     conflict-free best pair; only pairs (not base tables) are
- *     re-scanned per round.
+ *  2. ASSIGNMENT is the sequential greedy. The (thresholded, usually
+ *     small) pair set is checkpointed, and up to
+ *     [[DefaultDriverAssignLimit]] pairs are collected in order and
+ *     scanned on the driver: two jobs. Larger sets run distributed
+ *     rounds of local-minimum pairs (see [[greedyAssign]]).
  */
 object Fuzzy {
 
@@ -50,11 +53,11 @@ object Fuzzy {
     * bound is configurable for exactness-sensitive callers. */
   val DefaultMaxTrigramFreq: Long = 100000L
 
-  /** One side at or below this many rows switches candidate generation
-    * to a broadcast cross-kernel (exact same pair distances, no
-    * inverted-index shuffle). Trigram universes are tiny — a few
-    * thousand distinct trigrams cover a language — so posting lists on
-    * short-string corpora are fat and the index join degenerates the
+  /** A source side at or below this many rows switches candidate
+    * generation to the broadcast postings probe (exact same pair
+    * distances, no inverted-index shuffle). Trigram universes are tiny —
+    * a few thousand distinct trigrams cover a language — so posting lists
+    * on short-string corpora are fat and the index join degenerates the
     * same way small-vocabulary prefix filtering does. */
   val DefaultBroadcastLimit: Long = 100000L
 
@@ -140,29 +143,31 @@ object Fuzzy {
 
   private def prepTrigrams(df: DataFrame, idCol: String, strCol: String,
                            nCol: String) =
+    // no filter on the set size: Catalyst would inline it and run the UDF
+    // twice per row; an empty set has no postings and explodes to no
+    // rows, so it never forms a pair on either branch
     df.select(col(idCol), col(strCol))
       .filter(col(strCol).isNotNull)
       .withColumn("__sh", triHashes(col(strCol)))
-      .withColumn(nCol, size(col("__sh")))
-      .filter(col(nCol) > 0)
-      .select(col(idCol), col("__sh"), col(nCol))
+      .select(col(idCol), col("__sh"), size(col("__sh")).as(nCol))
+
+  /** Probe-path pair budget: the probe costs one increment per shared
+    * (trigram, source, target) co-occurrence, so |S|·|T| pairs is only
+    * its worst case (every pair shares a trigram); above this product a
+    * small source against a huge target still takes the index path. */
+  val DefaultMaxCrossPairs: Long = 500000000L
 
   /**
    * All (sourceId, targetId, distance) pairs with distance < limit.
    * sim = shared/(|A| + |B| − shared) over the padded-trigram sets —
    * the exact pg_trgm formula, computed algebraically.
    *
-   * Small source sides broadcast and compare directly (one merge-
-   * intersection kernel per pair, streamed side repartitioned so the
-   * pair work spreads across cores); large ones go through the
-   * inverted-index join on trigram hashes with a frequency cap against
-   * ultra-common-trigram blow-up.
+   * Small source sides become a broadcast postings index probed by the
+   * target rows (the target's (pk, string) projection is repartitioned
+   * first so the trigram prep and the probe spread across cores); large
+   * ones go through the inverted-index join on trigram hashes with a
+   * frequency cap against ultra-common-trigram blow-up.
    */
-  /** Cross-path pair budget: the broadcast nested loop runs |S|·|T|
-    * kernels with no pruning, so a small source against a huge target
-    * must still take the index path. */
-  val DefaultMaxCrossPairs: Long = 500000000L
-
   def candidatePairs(
       source: DataFrame, sourceId: String, sourceCol: String,
       target: DataFrame, targetId: String, targetCol: String,
@@ -182,15 +187,25 @@ object Fuzzy {
       maxCrossPairs: Long): (DataFrame, Seq[DataFrame]) = {
     // materialized: each side feeds multiple consumers (count probe /
     // frequency cap / join) — without a barrier the trigram prep would
-    // be recomputed per consumer
+    // be recomputed per consumer. The source is counted before the
+    // target prep is planned: a target read off a cached upstream (the
+    // claimed targets of a cached exact match) is then planned against
+    // that cache's real size, so a small claimed set is broadcast rather
+    // than the target hash-shuffled.
     val sPrep = prepTrigrams(source, sourceId, sourceCol, "__sn").persist()
-    val tPrep = prepTrigrams(target, targetId, targetCol, "__tn").persist()
+    val sCount = sPrep.count()
+    val probe = sCount <= broadcastLimit
     val nPart = source.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
-
-    val sCount = sPrep.count()
+    // the probe streams the target: spread its narrow (pk, string)
+    // projection, not the hash arrays, so the trigram prep and the probe
+    // run on every core (a small input often sits in one partition)
+    val tPrep = prepTrigrams(
+      if (probe) target.select(col(targetId), col(targetCol)).repartition(nPart)
+      else target,
+      targetId, targetCol, "__tn").persist()
     lazy val tCount = tPrep.count()
-    if (sCount <= broadcastLimit && sCount * tCount <= maxCrossPairs) {
+    if (probe && sCount * tCount <= maxCrossPairs) {
       // result parity with the index path: its frequency cap drops
       // ultra-common trigrams from the shared counts, so collect the
       // (few) over-cap trigram hashes and skip them in the kernel too
@@ -231,53 +246,49 @@ object Fuzzy {
           target.schema(targetId).dataType),
         org.apache.spark.sql.types.StructField("distance",
           org.apache.spark.sql.types.DoubleType, nullable = false)))
-      val pairsRdd = tPrep
-        // spread the streamed side: a persisted DF this small often sits
-        // in one partition, which would serialize the probe work
-        .repartition(nPart)
-        .rdd.mapPartitions { it =>
-          val ix = bIdx.value
-          val nSrc = ix.ids.length
-          val counts = new Array[Int](nSrc)
-          val touched = new Array[Int](nSrc)
-          it.flatMap { row =>
-            val tid = row.get(0)
-            val sh = row.getSeq[Long](1)
-            val tn = row.getInt(2)
-            var nTouched = 0
-            val shIt = sh.iterator
-            while (shIt.hasNext) {
-              val h = shIt.next()
-              val ki = java.util.Arrays.binarySearch(ix.keys, h)
-              if (ki >= 0) {
-                var p = ix.postStart(ki)
-                val end = ix.postStart(ki + 1)
-                while (p < end) {
-                  val s = ix.postings(p)
-                  if (counts(s) == 0) { touched(nTouched) = s; nTouched += 1 }
-                  counts(s) += 1
-                  p += 1
-                }
+      val pairsRdd = tPrep.rdd.mapPartitions { it =>
+        val ix = bIdx.value
+        val nSrc = ix.ids.length
+        val counts = new Array[Int](nSrc)
+        val touched = new Array[Int](nSrc)
+        it.flatMap { row =>
+          val tid = row.get(0)
+          val sh = row.getSeq[Long](1)
+          val tn = row.getInt(2)
+          var nTouched = 0
+          val shIt = sh.iterator
+          while (shIt.hasNext) {
+            val h = shIt.next()
+            val ki = java.util.Arrays.binarySearch(ix.keys, h)
+            if (ki >= 0) {
+              var p = ix.postStart(ki)
+              val end = ix.postStart(ki + 1)
+              while (p < end) {
+                val s = ix.postings(p)
+                if (counts(s) == 0) { touched(nTouched) = s; nTouched += 1 }
+                counts(s) += 1
+                p += 1
               }
             }
-            val acc = Seq.newBuilder[org.apache.spark.sql.Row]
-            var t = 0
-            while (t < nTouched) {
-              val s = touched(t)
-              val shared = counts(s)
-              counts(s) = 0
-              // EXACT expression order of the index path: sim first,
-              // then distance, compared against limit — `sim > 1-limit`
-              // is not IEEE-equivalent at the boundary
-              val sim = shared.toDouble / (ix.setSizes(s) + tn - shared)
-              val dist = 1.0 - sim
-              if (dist < limit)
-                acc += org.apache.spark.sql.Row(ix.ids(s), tid, dist)
-              t += 1
-            }
-            acc.result()
           }
+          val acc = Seq.newBuilder[org.apache.spark.sql.Row]
+          var t = 0
+          while (t < nTouched) {
+            val s = touched(t)
+            val shared = counts(s)
+            counts(s) = 0
+            // EXACT expression order of the index path: sim first,
+            // then distance, compared against limit — `sim > 1-limit`
+            // is not IEEE-equivalent at the boundary
+            val sim = shared.toDouble / (ix.setSizes(s) + tn - shared)
+            val dist = 1.0 - sim
+            if (dist < limit)
+              acc += org.apache.spark.sql.Row(ix.ids(s), tid, dist)
+            t += 1
+          }
+          acc.result()
         }
+      }
       (spark.createDataFrame(pairsRdd, outSchema), Seq(tPrep))
     } else {
       val sTri = sPrep.select(col(sourceId),
@@ -317,6 +328,29 @@ object Fuzzy {
     * the assignment is identical, the job count is not. */
   val DefaultDriverAssignLimit: Long = 1000000L
 
+  /** Diagnostic mirror of [[Clusters.lastFinishMode]]: "driver-scan" or
+    * "distributed-rounds" for the last greedyAssign on this JVM. */
+  private[graft] val lastAssignMode =
+    new java.util.concurrent.atomic.AtomicReference[String]("")
+
+  /** Drop the blocks of a `localCheckpoint` result once nothing reads it
+    * any more (the checkpoint RDD is private to this object, so no
+    * caller's cache can share it). */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
+  /** `df` locally checkpointed (eager), with its row count observed on
+    * the checkpoint's own job rather than counted by another. */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val cp = df.observe(rows, count(lit(1)).as("rows")).localCheckpoint()
+    (cp, rows.get("rows").asInstanceOf[Long])
+  }
+
   /**
    * Deterministic greedy one-to-one assignment over candidate pairs:
    * EXACTLY the matching produced by scanning pairs in ascending
@@ -337,43 +371,31 @@ object Fuzzy {
    *
    * Small filtered pair sets (the common case — candidates are already
    * thresholded) skip the loop: one sorted collect and a linear scan on
-   * the driver compute the same matching in one job.
+   * the driver compute the same matching. With the checkpoint that
+   * counts the pairs, that path is two jobs.
    */
-  /** Diagnostic mirror of [[Clusters.lastFinishMode]]: "driver-scan" or
-    * "distributed-rounds" for the last greedyAssign on this JVM. */
-  private[graft] val lastAssignMode =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
-
-  /** Drop the blocks of a `localCheckpoint` result once nothing reads it
-    * any more (the checkpoint RDD is private to this object, so no
-    * caller's cache can share it). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
-
   def greedyAssign(pairs: DataFrame, sourceId: String, targetId: String,
                    maxRounds: Int = 200,
                    driverLimit: Long = DefaultDriverAssignLimit): DataFrame = {
     val spark = pairs.sparkSession
     // localCheckpoint (eager): truncates the logical plan (the loop
     // cannot grow an unbounded lineage) and materializes the pair set
-    // once so the count probe and the rounds re-scan, not recompute.
-    var remaining = pairs.localCheckpoint()
-    val nPairs = remaining.count()
+    // once so the scan or the rounds re-read it, not recompute it.
+    val (checkpoint, nPairs) = checkpointCounted(pairs)
     lastAssignMode.set(
       if (nPairs <= driverLimit) "driver-scan" else "distributed-rounds")
     if (nPairs <= driverLimit) {
-      val ordered = remaining
-        .orderBy(col("distance").asc, col(sourceId).asc, col(targetId).asc)
+      // one task sorts the whole checkpoint: the total order of a global
+      // orderBy, without its range-sampling job and shuffle
+      val ordered = checkpoint.coalesce(1)
+        .sortWithinPartitions(
+          col("distance").asc, col(sourceId).asc, col(targetId).asc)
         .collect()
       val usedS = new java.util.HashSet[Any]
       val usedT = new java.util.HashSet[Any]
       val out = new java.util.ArrayList[org.apache.spark.sql.Row]
-      val si = remaining.schema.fieldIndex(sourceId)
-      val ti = remaining.schema.fieldIndex(targetId)
+      val si = checkpoint.schema.fieldIndex(sourceId)
+      val ti = checkpoint.schema.fieldIndex(targetId)
       ordered.foreach { r =>
         if (!usedS.contains(r.get(si)) && !usedT.contains(r.get(ti))) {
           usedS.add(r.get(si))
@@ -381,9 +403,10 @@ object Fuzzy {
           out.add(r)
         }
       }
-      releaseCheckpoint(remaining)
+      releaseCheckpoint(checkpoint)
       spark.createDataFrame(out, pairs.schema)
     } else {
+      var remaining = checkpoint
       val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var round = 0
       var done = false
@@ -392,22 +415,20 @@ object Fuzzy {
           .orderBy(col("distance").asc, col(targetId).asc)
         val byTarget = Window.partitionBy(col(targetId))
           .orderBy(col("distance").asc, col(sourceId).asc)
-        val winners = remaining
+        val (winners, nWinners) = checkpointCounted(remaining
           .withColumn("__rs", row_number().over(bySource))
           .withColumn("__rt", row_number().over(byTarget))
           .filter(col("__rs") === 1 && col("__rt") === 1)
-          .drop("__rs", "__rt")
-          .localCheckpoint()
-        if (winners.isEmpty) done = true
+          .drop("__rs", "__rt"))
+        if (nWinners == 0) done = true
         else {
           rounds += winners
-          val next = remaining
+          val (next, nNext) = checkpointCounted(remaining
             .join(winners.select(col(sourceId)), Seq(sourceId), "left_anti")
-            .join(winners.select(col(targetId)), Seq(targetId), "left_anti")
-            .localCheckpoint()
+            .join(winners.select(col(targetId)), Seq(targetId), "left_anti"))
           releaseCheckpoint(remaining)
           remaining = next
-          if (next.isEmpty) done = true
+          if (nNext == 0) done = true
         }
         round += 1
       }

@@ -57,6 +57,25 @@ class FuzzySpec extends SparkSpec {
     assert(bc != uncapped)
   }
 
+  test("values with no trigrams form no pairs on either branch") {
+    val src = Seq((1L, "Jon Smith"), (2L, "Mary Jones"), (3L, "Bob"))
+    val tgt = Seq((10L, "John Smith"), (20L, "Marie Jones"), (30L, "Alice"))
+    val blanks = Seq("", "!!!", "  ")
+    def pairs(s: Seq[(Long, String)], t: Seq[(Long, String)], broadcastLimit: Long) =
+      Fuzzy.candidatePairs(s.toDF("sid", "s"), "sid", "s", t.toDF("tid", "t"),
+        "tid", "t", limit = 1.0, broadcastLimit = broadcastLimit)
+        .as[(Long, Long, Double)].collect().toSet
+    for (broadcastLimit <- Seq(Fuzzy.DefaultBroadcastLimit, 0L)) {
+      val want = pairs(src, tgt, broadcastLimit)
+      assert(want.nonEmpty)
+      val got = pairs(
+        src ++ blanks.zipWithIndex.map { case (b, i) => (100L + i, b) },
+        tgt ++ blanks.zipWithIndex.map { case (b, i) => (1000L + i, b) },
+        broadcastLimit)
+      assert(got == want, s"broadcastLimit $broadcastLimit")
+    }
+  }
+
   test("greedyAssign is one-to-one and nearest-first") {
     // s1 prefers t1 (0.1) over t2 (0.2); s2 only matches t1 (0.3).
     // greedy: (s1,t1) wins; s2 can't take t1 → s2 gets nothing from t1,
@@ -97,6 +116,15 @@ class FuzzySpec extends SparkSpec {
     val b = Fuzzy.greedyAssign(pairs, "sid", "tid", driverLimit = 0L)
       .as[(Long, Long, Double)].collect().toSet
     assert(a == b)
+  }
+
+  test("greedyAssign on an empty pair set assigns nothing (both paths)") {
+    val empties = Seq(
+      Seq.empty[(Long, Long, Double)].toDF("sid", "tid", "distance"),
+      Seq((1L, 10L, 0.1)).toDF("sid", "tid", "distance").filter(col("sid") < 0))
+    for (pairs <- empties; driverLimit <- Seq(Fuzzy.DefaultDriverAssignLimit, 0L))
+      assert(Fuzzy.greedyAssign(pairs, "sid", "tid", driverLimit = driverLimit)
+        .count() == 0)
   }
 
   test("greedyAssign ties break by (distance, sid, tid)") {

@@ -1,8 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftshim.ListenerDrain
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -11,7 +12,9 @@ import graft.operators._
 import graft.sources.{CsvSource, CsvSpec}
 
 /** Each report is one aggregation: the number of SQL executions a
-  * report call runs, counted by a QueryExecutionListener. */
+  * report call runs, counted by a QueryExecutionListener. The fuzzy
+  * assignment and candidate generation are held to the same standard:
+  * no action and no shuffle beyond the ones that produce their result. */
 class ReportExecutionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,6 +32,24 @@ class ReportExecutionsSpec extends SparkSpec {
       ListenerDrain.drain(spark.sparkContext)
       (a, n.get)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The shuffle bytes written by the tasks `body` runs, with its result. */
+  private def shuffleBytes[A](body: => A): (A, Long) = {
+    val sc = spark.sparkContext
+    val bytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null)
+          bytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      ListenerDrain.drain(sc)
+      (a, bytes.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   private val table = Seq((1L, "k", "a"), (2L, "k", "b"), (3L, "j", "c"),
@@ -68,5 +89,36 @@ class ReportExecutionsSpec extends SparkSpec {
     // the header line, then one conditional-count aggregate
     val (malformed, nMalformed) = executions(CsvSource.malformedCount(spark, csv))
     assert(malformed == 1 && nMalformed == 2)
+  }
+
+  test("the driver-scan assignment is two executions and caches nothing") {
+    val pairs = Seq((1L, 10L, 0.1), (1L, 20L, 0.2), (2L, 10L, 0.3), (2L, 20L, 0.6))
+      .toDF("sid", "tid", "distance")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    // the checkpoint that counts the pairs, then the sorted collect
+    val (asg, n) = executions(Fuzzy.greedyAssign(pairs, "sid", "tid"))
+    assert(Fuzzy.lastAssignMode.get() == "driver-scan")
+    assert(n == 2)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assert(asg.as[(Long, Long, Double)].collect().toSet ==
+      Set((1L, 10L, 0.1), (2L, 20L, 0.6)))
+  }
+
+  test("the probe branch shuffles the target once, as its (pk, string) projection") {
+    val rnd = new scala.util.Random(17)
+    def word() = Seq.fill(4 + rnd.nextInt(5))(('a' + rnd.nextInt(26)).toChar).mkString
+    val names = Seq.fill(4000)(Seq.fill(3)(word()).mkString(" "))
+    val tgt = names.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("tid", "t")
+    // one-typo copies of some targets, so the probe finds pairs
+    val src = names.take(60).zipWithIndex.map { case (s, i) => (i.toLong, s.drop(1)) }
+      .toDF("sid", "s")
+    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val (_, oneShuffle) = shuffleBytes(
+      tgt.select("tid", "t").repartition(nPart).foreach(_ => ()))
+    val (nPairs, pairBytes) = shuffleBytes(
+      Fuzzy.candidatePairs(src, "sid", "s", tgt, "tid", "t").count())
+    assert(nPairs >= 60)
+    assert(pairBytes <= 1.2 * oneShuffle,
+      s"candidatePairs wrote $pairBytes shuffle bytes, one target shuffle $oneShuffle")
   }
 }
