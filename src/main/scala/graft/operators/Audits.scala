@@ -853,7 +853,7 @@ object MergeAudit {
     // one pass: the unmatched rows are the null group, so the total is
     // the sum over all groups and the match needs no cache of its own
     val byGroup =
-      try staged.matched.groupBy(col(Matcher.MatchGroup)).count().collect()
+      try Audits.matchGroupCounts(staged.matched).collect()
       finally staged.unpersist()
     val counts = byGroup.filterNot(_.isNullAt(0))
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -884,18 +884,15 @@ final case class DedupAuditReport(
   }
 }
 
-/** Dedup dry-run audit: the self-match of [[Deduper]]'s general path
-  * (exact groups plus the orientation constraint), reported by
+/** Dedup dry-run audit: [[Deduper.selfMatch]], the self-match of
+  * [[Deduper]]'s general path (exact groups plus the orientation
+  * constraint; fuzzy columns are refused), reported by
   * [[Matcher.selfMatchReport]] — one aggregation over the unpersisted
   * match, so the audit is one Spark action and caches nothing. */
 object DedupAudit {
   def audit(table: DataFrame, spec: MergeSpec,
             orientation: Option[MatchConstraint] = None): DedupAuditReport = {
-    val pk = spec.matchSpec.targetPk
-    val orient = orientation.getOrElse(Deduper.defaultOrientation(pk))
-    val ms = spec.matchSpec.copy(groups = spec.matchSpec.groups.map(g =>
-      g.copy(constraints = g.constraints :+ orient)))
-    val matched = Matcher.matchRecords(Matcher.withSourceId(table), table, ms)
+    val (ms, matched) = Deduper.selfMatch(table, spec, orientation)
     Matcher.selfMatchReport(matched, ms)
   }
 }

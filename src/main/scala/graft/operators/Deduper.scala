@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.types.Template
-
 /**
  * Self-table dedup with merge orientation + safety invariants (M5/M6,
  * SURVEY.md §2.4) — lib/voter_file/dedup_driver.rb rebuilt.
@@ -21,24 +19,26 @@ import graft.types.Template
  *  4. DELETE the duplicate rows and fold their values into the
  *     survivors via the merge column routing (dedup_driver.rb:65-82).
  *
- * Spark rebuild: survivors = table ⟖(anti) duplicates-by-pk; fold = the
- * M1 update join with the duplicate rows as source. Both invariant
- * counts come from ONE mid-pipeline action
- * ([[Matcher.selfMatchReport]]: one aggregation, no self-join) that
- * runs before any output is built; the matched DF is cached first
- * because that action and the outputs both read it (SURVEY §7.4-5).
- * Transitive chains (a→b→c) violate the symmetric invariant and raise,
- * exactly like the reference.
+ * Spark rebuild: dedup is a merge of the table into itself, as the
+ * reference's `RecordDeduper < RecordMerger` has it. survivors = table
+ * ⟖(anti) duplicates-by-pk; fold = the M1 update, [[Merger.fold]], with
+ * the duplicate rows as source. The self-match ([[Deduper.selfMatch]])
+ * is shared with [[DedupAudit]]. Both invariant counts come from ONE
+ * mid-pipeline action ([[Matcher.selfMatchReport]]: one aggregation,
+ * no self-join) that runs before any output is built; the matched DF
+ * is cached first because that action and the outputs both read it
+ * (SURVEY §7.4-5). Transitive chains (a→b→c) violate the symmetric
+ * invariant and raise, exactly like the reference. Both paths return
+ * the table's columns in the table's order.
  */
 final case class DedupResult(
     newTable: DataFrame,
     duplicates: DataFrame,
     reflexiveCount: Long,
     symmetricCount: Long,
-    /** The caches the outputs are built on (general path only; the
-      * window fast path caches nothing): the persisted match join, plus
-      * the exact match [[Matcher.stage]] persists when fuzzy columns
-      * follow it. Caller-owned. */
+    /** The cache the outputs are built on: the persisted self-match
+      * join (general path only; the fast path caches nothing).
+      * Caller-owned. */
     private[graft] val caches: Seq[DataFrame] = Nil) {
   /** Release the caches once the outputs have been consumed.
     * Safe no-op on the fast path / after a prior call. */
@@ -67,12 +67,12 @@ object Deduper {
 
   /**
    * Fast path for the canonical dedup (single equality key group, keep
-   * min pk): survivor assignment is ONE window over the key partition —
-   * no self-join, no working-source materialization, and the
+   * min pk): survivor assignment is ONE per-key min joined back — no
+   * self-join, no working-source materialization, and the
    * reflexive/symmetric invariants are provably zero (every duplicate
    * points at its group's min pk; the min never points anywhere).
    * Semantically identical to the general path (the oracle SQL for
-   * q_dedup is written in exactly this window form).
+   * q_dedup is written in the equivalent window form).
    */
   private def dedupFast(table: DataFrame, spec: MergeSpec): DedupResult = {
     val pk = spec.matchSpec.targetPk
@@ -86,7 +86,7 @@ object Deduper {
     // Spark broadcasts it when it fits.
     // Null keys never match in the join formulation (NULL ≠ NULL) and a
     // left join leaves their group-min null — force null-keyed rows to
-    // be their own survivors, same contract as before.
+    // be their own survivors, as in the general path.
     val anyNullKey = keys.map(_.isNull).reduce(_ || _)
     val mins = table.groupBy(keys: _*).agg(min(col(pk)).as("__gmin"))
     val tagged = table.join(mins, keyNames, "left")
@@ -99,34 +99,8 @@ object Deduper {
       col(pk).isNotNull && col(pk) =!= col("__survivor"))
     val survivors = tagged.filter(
       col(pk).isNull || col(pk) === col("__survivor"))
-      .drop("__survivor")
-    // fold the min-pk duplicate into each survivor (M1 routing) —
-    // min_by aggregate for the same hot-key reason as above (and as
-    // Merger.bestPerTarget); pk is unique so the winner is well-defined
-    val dupeCols = dupes0.columns.filter(_ != "__survivor")
-    val best = dupes0
-      .groupBy(col("__survivor"))
-      .agg(min_by(struct(dupeCols.map(col).toIndexedSeq: _*),
-        col(pk)).as("__bd"))
-      .select(col("__survivor") +:
-        dupeCols.map(c => col(s"__bd.$c").as(c)).toIndexedSeq: _*)
-    val joined = survivors.as("t").join(best.as("s"),
-      col(s"t.$pk") === col("s.__survivor"), "left")
-    val hit = col("s.__survivor").isNotNull
-    val updateSet: Map[String, org.apache.spark.sql.Column] = {
-      val moves = spec.columnMap.map { case (src, dst) =>
-        dst -> col(s"t.$src") }.toMap
-      val merges = spec.mergeExpressions.map { case (c, tpl) =>
-        c -> Template.toColumn(tpl, Some(s"s.$c"), Some(s"t.$c")) }
-      moves ++ merges
-    }
-    val outCols = survivors.columns.map { c =>
-      updateSet.get(c) match {
-        case Some(v) => when(hit, v).otherwise(col(s"t.$c")).as(c)
-        case None    => col(s"t.$c").as(c)
-      }
-    }
-    val folded = joined.select(outCols.toIndexedSeq: _*)
+      .select(table.columns.map(col).toIndexedSeq: _*)
+    val folded = Merger.fold(survivors, pk, dupes0, "__survivor", pk, spec, Nil)
     // duplicates report in the general path's working shape
     val dupes = dupes0
       .withColumn(SourceId, col(pk))
@@ -136,19 +110,33 @@ object Deduper {
     DedupResult(folded, dupes, reflexiveCount = 0L, symmetricCount = 0L)
   }
 
+  /**
+   * The self-match both [[dedup]]'s general path and [[DedupAudit]] run:
+   * every exact group gains the orientation constraint, and the table is
+   * matched against itself. Returned unpersisted with the oriented spec.
+   * Fuzzy columns are refused: the fuzzy pass has no orientation, so an
+   * unmatched row's nearest unclaimed neighbour is itself (distance 0).
+   */
+  private[operators] def selfMatch(table: DataFrame, spec: MergeSpec,
+                                   orientation: Option[MatchConstraint])
+      : (MatchSpec, DataFrame) = {
+    val ms0 = spec.matchSpec
+    require(ms0.fuzzyColumns.isEmpty, "dedup cannot match on fuzzy columns " +
+      s"(${ms0.fuzzyColumns.mkString(", ")}): the fuzzy pass has no merge " +
+      "orientation, so every unmatched row would match itself")
+    val orient = orientation.getOrElse(defaultOrientation(ms0.targetPk))
+    val ms = ms0.copy(groups = ms0.groups.map(g =>
+      g.copy(constraints = g.constraints :+ orient)))
+    (ms, Matcher.matchRecords(Matcher.withSourceId(table), table, ms))
+  }
+
   def dedup(table: DataFrame, spec: MergeSpec,
             orientation: Option[MatchConstraint] = None,
             enforceInvariants: Boolean = true): DedupResult = {
     if (isFastPath(spec, orientation)) return dedupFast(table, spec)
-    val ms0 = spec.matchSpec
-    val pk = ms0.targetPk
-    val orient = orientation.getOrElse(defaultOrientation(pk))
-    val ms = ms0.copy(groups = ms0.groups.map(g =>
-      g.copy(constraints = g.constraints :+ orient)))
-
-    val staged = Matcher.stage(table, table, ms)
-    val cached = staged.matched.persist()
-    val caches = staged.caches :+ cached
+    val pk = spec.matchSpec.targetPk
+    val (ms, matched) = selfMatch(table, spec, orientation)
+    val cached = matched.persist()
     val (reflexive, symmetric) =
       try {
         val report = Matcher.selfMatchReport(cached, ms)
@@ -158,55 +146,21 @@ object Deduper {
           require(s == 0, s"dedup invariant violated: $s symmetric matches")
         }
         (r, s)
-      } catch { case e: Throwable => caches.foreach(_.unpersist()); throw e }
+      } catch { case e: Throwable => cached.unpersist(); throw e }
 
     val dupes = cached.filter(col(TargetId).isNotNull)
     val survivors = table.join(
       dupes.select(col(pk)).distinct(), Seq(pk), "left_anti")
-
-    // fold duplicate values into survivors (M1 routing, dupes as
-    // source) — min_by aggregate, not a per-survivor window (hot-key
-    // funnel; see dedupFast / Merger.bestPerTarget)
-    val dupeCols = dupes.columns.filter(_ != TargetId)
-    val bestPerSurvivor = dupes
-      .groupBy(col(TargetId))
-      .agg(min_by(struct(dupeCols.map(col).toIndexedSeq: _*),
-        col(pk)).as("__bd"))
-      .select(col(TargetId) +:
-        dupeCols.map(c => col(s"__bd.$c").as(c)).toIndexedSeq: _*)
-
-    val corr = survivors.columns.toSeq
-      .filterNot(spec.excludedColumns.contains)
-      .filterNot(spec.preservedColumns.contains)
-      .filterNot(_ == pk)
-      .filterNot(Seq(SourceId, TargetId, MatchGroup).contains)
-
-    val joined = survivors.as("t").join(
-      bestPerSurvivor.as("s"),
-      col(s"t.$pk") === col(s"s.$TargetId"), "left")
-    val hit = col(s"s.$TargetId").isNotNull
-    val updateSet: Map[String, org.apache.spark.sql.Column] = {
-      val moves = spec.columnMap.map { case (src, dst) =>
-        dst -> col(s"t.$src") }.toMap
-      val merges = spec.mergeExpressions.map { case (c, tpl) =>
-        c -> Template.toColumn(tpl, Some(s"s.$c"), Some(s"t.$c")) }
-      // dedup folds ONLY explicit merge expressions/moves by default:
-      // blind source-copy would overwrite survivor values with duplicate
-      // values, which the reference only does for explicitly routed
-      // columns in practice (dedup jobs set merge expressions).
-      moves ++ merges
-    }
-    val outCols = survivors.columns.map { c =>
-      updateSet.get(c) match {
-        case Some(v) => when(hit, v).otherwise(col(s"t.$c")).as(c)
-        case None    => col(s"t.$c").as(c)
-      }
-    }
-    val folded = joined.select(outCols.toIndexedSeq: _*)
+      .select(table.columns.map(col).toIndexedSeq: _*)
+    // dedup folds ONLY explicit merge expressions/moves: blind
+    // source-copy would overwrite survivor values with duplicate values,
+    // which the reference only does for explicitly routed columns in
+    // practice (dedup jobs set merge expressions)
+    val folded = Merger.fold(survivors, pk, dupes, TargetId, pk, spec, Nil)
     // cached stays persisted: the returned DataFrames are built on it
     // and would otherwise recompute the whole match per caller action.
-    // The handles ride in the result — DedupResult.unpersist() releases
-    // them (Gateway cache cleanup remains the backstop).
-    DedupResult(folded, dupes, reflexive, symmetric, caches)
+    // DedupResult.unpersist() releases it (Gateway cache cleanup remains
+    // the backstop).
+    DedupResult(folded, dupes, reflexive, symmetric, Seq(cached))
   }
 }

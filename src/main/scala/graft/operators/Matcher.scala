@@ -154,7 +154,7 @@ object Matcher {
   }
 
   /**
-   * Stage the whole match the way merge, audit and dedup run it: assign
+   * Stage the whole match the way merge and its audit run it: assign
    * `working_source_id`, run the exact groups, then the fuzzy columns.
    * When a fuzzy pass follows, the exact result is persisted first, so
    * the pass's three consumers (unmatched sources, claimed targets, the

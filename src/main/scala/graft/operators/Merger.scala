@@ -30,9 +30,10 @@ import graft.types.Template
  * and RETURNING write-back (M4, record_merger.rb:158-176) is just
  * another join: matches are data here, not side effects.
  *
- * Scale notes: the update join shuffles on the target pk once (or
- * broadcasts the matched side when small — it is keyed, pre-aggregated,
- * and column-pruned before the join); the insert branch is a narrow
+ * Scale notes: the update is [[Merger.fold]], which [[Deduper]] shares;
+ * its join shuffles on the target pk once (or broadcasts the matched
+ * side when small — it is keyed by a `min_by` aggregate, so a hot key
+ * combines map-side, before the join); the insert branch is a narrow
  * projection; the union is free. Inserted rows get fresh pks generated as
  * max(existing)+dense rank — one tiny extra aggregate, deterministic for
  * the oracle, unique at any scale.
@@ -160,6 +161,48 @@ object Merger {
   }
 
   /**
+   * The M1 update, shared by merge and dedup (record_merger.rb:118-136;
+   * dedup_driver.rb:65-82 folds duplicates the same way): the row of
+   * `rows` with the smallest `pick` per `rowKey` is folded into the
+   * `base` row whose `baseKey` equals it. Each `base` column is routed
+   * through, later entries winning: `copies` (the row's value),
+   * `spec.columnMap` (base's old value of another column), then
+   * `spec.mergeExpressions` (`$S` = the row's value, `$T` = base's).
+   * Unrouted columns and unmatched base rows keep base's values; the
+   * result has `base`'s columns in `base`'s order.
+   *
+   * The best row is a `min_by` AGGREGATE, not a per-key window: an
+   * aggregate gets map-side partial combine, so a hot key (millions of
+   * rows folding into one base row) reduces in parallel instead of
+   * funneling its whole window partition through one task. `pick` is
+   * unique among `rows`, so the winner is well-defined (Postgres
+   * UPDATE..FROM picks an arbitrary one; SURVEY §7.4).
+   */
+  private[operators] def fold(base: DataFrame, baseKey: String, rows: DataFrame,
+                              rowKey: String, pick: String, spec: MergeSpec,
+                              copies: Seq[String]): DataFrame = {
+    val rest = rows.columns.filter(_ != rowKey)
+    val best = rows
+      .groupBy(col(rowKey))
+      .agg(min_by(struct(rest.map(col).toIndexedSeq: _*), col(pick)).as("__best"))
+      .select(col(rowKey) +: rest.map(c => col(s"__best.$c").as(c)).toIndexedSeq: _*)
+    val joined = base.as("t").join(best.as("s"),
+      col(s"t.$baseKey") === col(s"s.$rowKey"), "left")
+    val hit = col(s"s.$rowKey").isNotNull
+    val routes: Map[String, Column] =
+      copies.map(c => c -> col(s"s.$c")).toMap ++
+        spec.columnMap.map { case (src, dst) => dst -> col(s"t.$src") } ++
+        spec.mergeExpressions.map { case (c, tpl) =>
+          c -> Template.toColumn(tpl, Some(s"s.$c"), Some(s"t.$c")) }
+    joined.select(base.columns.map { c =>
+      routes.get(c) match {
+        case Some(v) => when(hit, v).otherwise(col(s"t.$c")).as(c)
+        case None    => col(s"t.$c").as(c)
+      }
+    }.toIndexedSeq: _*)
+  }
+
+  /**
    * Run match + merge. `source` must be conformed; `target` is the
    * current target table state. Returns the new target, the source with
    * RETURNING write-backs applied, and the matched working source (for
@@ -189,52 +232,10 @@ object Merger {
     val corr = mergeableColumns(withId, target, spec)
 
     // ---- UPDATE phase (M1) -------------------------------------------
-    val newTargetUpdated: DataFrame =
+    val newTargetUpdated =
       if (spec.insertOnly) target
-      else {
-        // one source row per target: deterministic min working_source_id
-        // (Postgres UPDATE..FROM picks an arbitrary one; SURVEY §7.4).
-        // min_by AGGREGATE, not a per-target window: an aggregate gets
-        // map-side partial combine, so a hot target key (millions of
-        // source rows matching one target) reduces in parallel instead
-        // of funneling its whole window partition through one task.
-        // Same result: SourceId is the unique working-source id, so the
-        // (min SourceId)-row per target is well-defined either way.
-        val hitRows = matched.filter(col(TargetId).isNotNull)
-        val restCols = hitRows.columns.filter(_ != TargetId)
-        val bestPerTarget = hitRows
-          .groupBy(col(TargetId))
-          .agg(min_by(struct(restCols.map(col).toIndexedSeq: _*),
-            col(SourceId)).as("__best"))
-          .select(col(TargetId) +:
-            restCols.map(c => col(s"__best.$c").as(c)).toIndexedSeq: _*)
-        val joined = target.as("t").join(
-          bestPerTarget.as("s"),
-          col(s"t.$pk") === col(s"s.$TargetId"),
-          "left")
-        val hit = col(s"s.$TargetId").isNotNull
-        val updateSet: Map[String, Column] = {
-          val moves = spec.columnMap.map { case (src, dst) =>
-            dst -> col(s"t.$src")
-          }.toMap
-          val merges = spec.mergeExpressions.map { case (c, tpl) =>
-            c -> Template.toColumn(tpl, Some(s"s.$c"), Some(s"t.$c"))
-          }
-          val copies = corr
-            .filterNot(spec.preservedColumns.contains)
-            .filterNot(moves.contains)
-            .filterNot(merges.contains)
-            .map(c => c -> col(s"s.$c")).toMap
-          moves ++ merges ++ copies
-        }
-        val outCols = target.columns.map { c =>
-          updateSet.get(c) match {
-            case Some(newVal) => when(hit, newVal).otherwise(col(s"t.$c")).as(c)
-            case None         => col(s"t.$c").as(c)
-          }
-        }
-        joined.select(outCols.toIndexedSeq: _*)
-      }
+      else fold(target, pk, matched.filter(col(TargetId).isNotNull), TargetId,
+        SourceId, spec, corr.filterNot(spec.preservedColumns.contains))
 
     // ---- INSERT phase (M2) -------------------------------------------
     val unmatched0 = matched.filter(col(TargetId).isNull)

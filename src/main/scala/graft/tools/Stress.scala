@@ -102,7 +102,6 @@ object Stress {
       // generations; keep the legacy conf so that layout reads as long
       // (we don't touch the ts column here either way)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", sys.env.getOrElse("STRESS_DRIVER_MEM", "8g"))
       // 13 legs of caller-owned persists accumulate in unified memory;
       // the default 4096-row reader batches over leg 14's shingle-set
       // ARRAY column then fail to reserve buffer space ("Cannot reserve

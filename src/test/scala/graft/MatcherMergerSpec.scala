@@ -159,6 +159,56 @@ class MatcherMergerSpec extends SparkSpec {
     assert(symm.getMessage.contains("3 symmetric matches"))
   }
 
+  test("dedup refuses fuzzy columns in both the audit and the dedup") {
+    // the fuzzy pass has no orientation: 3 and 4 (unmatched by k) would
+    // each match themselves at distance 0
+    val t = Seq((1L, "k1", "alice smith"), (2L, "k1", "alice smyth"),
+      (3L, "k2", "bob jones"), (4L, "k3", "carol white")).toDF("id", "k", "name")
+    val spec = MergeSpec(matchSpec = MatchSpec(Seq(ExactGroup.onColumns("k")),
+      targetPk = "id", fuzzyColumns = Seq("name")))
+    val audit = intercept[IllegalArgumentException](DedupAudit.audit(t, spec))
+    assert(audit.getMessage.contains("fuzzy columns (name)"))
+    intercept[IllegalArgumentException](Deduper.dedup(t, spec))
+    intercept[IllegalArgumentException](
+      Deduper.dedup(t, spec, enforceInvariants = false))
+  }
+
+  test("column_map routes the old target value in merge and in dedup") {
+    val tgt = Seq((1L, "alice", "NY", 10.0, "a"), (2L, "bob", "LA", 20.0, "b"),
+      (3L, "carol", "NY", 30.0, "c"), (4L, "dave", "SF", 40.0, "d"))
+      .toDF("id", "name", "city", "bal", "note")
+    // zed → 1 by city loses to alice (min working_source_id); davey → 4
+    // by city
+    val src = Seq((100L, "alice", "LA", 1.0, "x"), (101L, "bob", "LA", 2.0, "y"),
+      (102L, "zed", "NY", 3.0, "z"), (103L, "davey", "SF", 4.0, "w"))
+      .toDF("working_source_id", "name", "city", "bal", "note")
+    val merged = Merger.merge(src, tgt, MergeSpec(matchSpec = spec,
+      columnMap = Seq("note" -> "city"), preservedColumns = Seq("city"),
+      mergeExpressions = Map("bal" -> "$T + $S")))
+    assert(merged.newTarget.orderBy("id").as[(Long, String, String, Double, String)]
+      .collect().toSeq == Seq((1L, "alice", "a", 11.0, "x"),
+        (2L, "bob", "b", 22.0, "y"), (3L, "carol", "NY", 30.0, "c"),
+        (4L, "davey", "d", 44.0, "w")))
+    merged.unpersist()
+
+    val t = Seq((1L, "k", "a", 1.0), (2L, "k", "b", 2.0), (3L, "l", "c", 3.0),
+      (4L, "l", "d", 4.0), (5L, "m", "e", 5.0)).toDF("id", "k", "note", "v")
+    val dspec = MergeSpec(
+      matchSpec = MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"),
+      columnMap = Seq("note" -> "k"), mergeExpressions = Map("v" -> "$T + $S"))
+    // fast path (default orientation) and general path, also with the pk
+    // not in the first column: rows and column order are the table's
+    for (table <- Seq(t, t.select("note", "id", "k", "v"));
+         orientation <- Seq(None, Some(Deduper.defaultOrientation("id")))) {
+      val res = Deduper.dedup(table, dspec, orientation)
+      assert(res.newTable.columns sameElements table.columns)
+      assert(res.newTable.select("id", "k", "note", "v").orderBy("id")
+        .as[(Long, String, String, Double)].collect().toSeq ==
+        Seq((1L, "a", "a", 3.0), (3L, "c", "c", 7.0), (5L, "m", "e", 5.0)))
+      res.unpersist()
+    }
+  }
+
   test("single-consumer merges skip the match cache; unpersist clears it") {
     import org.apache.spark.storage.StorageLevel
     // CacheManager matches by canonical plan: earlier tests cached an

@@ -226,6 +226,8 @@ class MergePropertiesSpec extends SparkSpec {
       val fast = Deduper.dedup(table, spec) // default orientation → fast
       val general = Deduper.dedup(table, spec, // explicit → general path
         orientation = Some(Deduper.defaultOrientation("id")))
+      assert(fast.newTable.columns sameElements table.columns, s"round $r")
+      assert(general.newTable.columns sameElements table.columns, s"round $r")
       val a = fast.newTable.select("id", "k", "v")
       val b = general.newTable.select("id", "k", "v")
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"round $r")
