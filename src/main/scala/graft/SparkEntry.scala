@@ -1047,15 +1047,15 @@ object SparkEntry {
         s"graft_bm25f_${tmpToken(dir)}").getAbsolutePath
       val docs = t(s, dir, "documents").filter(col("doc_id") % 2 === 0)
       Retrieval.saveBm25Index(docs, "doc_id", "text", idx, nBuckets = 8)
-      Retrieval.tombstoneBm25Index(
+      Retrieval.bm25Index(idx).tombstone(
         docs.filter(col("doc_id") % 7 === 2).select(col("doc_id")),
-        "doc_id", idx)
+        "doc_id")
       val pre = Retrieval
         .bm25TopKIndexed(s, idx, "doc_id", Bm25Queries, k = 10)
         .select(lit("tombstoned").as("phase"), col("qid"),
           col("doc_id"), col("score"))
         .localCheckpoint()
-      Retrieval.compactBm25Index(s, idx)
+      Retrieval.bm25Index(idx).compact(s)
       val post = Retrieval
         .bm25TopKIndexed(s, idx, "doc_id", Bm25Queries, k = 10)
         .select(lit("compacted").as("phase"), col("qid"),
@@ -2191,10 +2191,10 @@ object SparkEntry {
         .filter(col("id") % 9 === 4).distinct()
       graft.sources.SnapshotStore.forgetEverywhere(purge, s"$base/cat",
         Map("docs" -> "doc_id", "vecs" -> "vec_id"),
-        minhashIndexes = Seq(s"$base/mh"),
-        ivfPqIndexes = Seq(s"$base/ann"),
-        bm25Indexes = Seq(s"$base/bm"),
-        hnswIndexes = Seq(s"$base/hnsw"))
+        indexes = Seq(TextDedup.minhashIndex(s"$base/mh"),
+          Similarity.ivfPqIndex(s"$base/ann"),
+          Retrieval.bm25Index(s"$base/bm"),
+          graft.ops.Hnsw.hnswIndex(s"$base/hnsw")))
       val sCat = graft.sources.SnapshotStore
         .readTable(s, s"$base/cat", "docs")
         .select(lit("cat:docs").as("surface"), col("doc_id").as("key"),
@@ -2394,8 +2394,8 @@ object SparkEntry {
       // and re-paying its job count here would be pure bench weight
       graft.sources.SnapshotStore.forgetEverywhere(purge, s"$base/cat",
         Map("docs" -> "doc_id"),
-        minhashIndexes = Seq(s"$base/mh"),
-        ivfPqIndexes = Seq(s"$base/ann"),
+        indexes = Seq(TextDedup.minhashIndex(s"$base/mh"),
+          Similarity.ivfPqIndex(s"$base/ann")),
         sinkCorpora = Seq(s"$base/dcorp" -> "doc_id",
           s"$base/acorp" -> "vec_id"),
         compactIndexes = false)

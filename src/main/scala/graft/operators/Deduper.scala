@@ -101,12 +101,11 @@ object Deduper {
       col(pk).isNull || col(pk) === col("__survivor"))
       .select(table.columns.map(col).toIndexedSeq: _*)
     val folded = Merger.fold(survivors, pk, dupes0, "__survivor", pk, spec, Nil)
-    // duplicates report in the general path's working shape
-    val dupes = dupes0
-      .withColumn(SourceId, col(pk))
-      .withColumn(TargetId, col("__survivor"))
-      .withColumn(MatchGroup, lit(1))
-      .drop("__survivor")
+    // duplicates report in the general path's working shape and order:
+    // source id, the table's columns, target id, match group
+    val dupes = dupes0.select(col(pk).as(SourceId) +:
+      table.columns.toIndexedSeq.map(col) :+
+      col("__survivor").as(TargetId) :+ lit(1).as(MatchGroup): _*)
     DedupResult(folded, dupes, reflexiveCount = 0L, symmetricCount = 0L)
   }
 

@@ -456,7 +456,7 @@ object Hnsw {
   // after an append is the standard Malkov-Yashunin incremental result
   // (hnswlib's mode), which differs from a from-scratch build on the
   // union — candidate RECALL may differ; scores never do (the exact
-  // re-rank rides the shared kernel either way). [[compactHnswIndex]]
+  // re-rank rides the shared kernel either way). Compaction ([[hnswIndex]])
   // IS rebuild-equivalent, spec-pinned against a fresh save.
 
   private val NodesDir = "nodes"
@@ -496,22 +496,19 @@ object Hnsw {
     * recovery state, never "empty"). */
   private def nodesOrEmpty(spark: org.apache.spark.sql.SparkSession,
                            path: String): DataFrame =
-    Layout.readParquetIfData(spark, s"$path/$NodesDir").getOrElse {
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("vec",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.FloatType)),
-            org.apache.spark.sql.types.StructField("links",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.LongType))),
-            org.apache.spark.sql.types.StructField("shard",
-              org.apache.spark.sql.types.IntegerType))))
-    }
+    IndexLayout.readOrEmpty(spark, s"$path/$NodesDir",
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("vec",
+          org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.FloatType)),
+        org.apache.spark.sql.types.StructField("links",
+          org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.ArrayType(
+              org.apache.spark.sql.types.LongType))),
+        org.apache.spark.sql.types.StructField("shard",
+          org.apache.spark.sql.types.IntegerType))))
 
   /** Rename-aside root for [[appendHnswIndex]]'s per-shard swaps —
     * OUTSIDE the hive-partitioned nodes root (an aside dir named
@@ -625,10 +622,8 @@ object Hnsw {
     require(m >= 2, s"m must be >= 2: $m")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val idType = corpus.schema(idCol).dataType
-    require(Similarity.integralType(idType),
-      s"saveHnswIndex requires an integral id column, got $idType: " +
-        "sharding, levels and the delete lifecycle all ride the long id")
+    // sharding and levels ride the long id too
+    IndexLayout.requireIntegralId(corpus, idCol, "saveHnswIndex")
     val shards =
       if (nShards > 0) nShards
       else math.max(1, spark.sparkContext.defaultParallelism)
@@ -746,7 +741,7 @@ object Hnsw {
 
   /** Candidate-set size above which the tombstone prune switches from
     * a pushed-down IN literal (rides the parquet bloom written by
-    * [[tombstoneHnswIndex]] — row groups skip at the scan) to a
+    * the [[hnswIndex]] tombstone writer — row groups skip at the scan) to a
     * driver Bloom + broadcast semi-join (the
     * [[graft.ops.BloomJoin]] convention for big key sets). */
   private val TombstonePushLimit = 2048L
@@ -810,10 +805,10 @@ object Hnsw {
       .get("graft.hnsw.tombstonePruneBytes", (8L << 20).toString).toLong
     val prune = tombstoneBytes(spark, path) > pruneBytes
     val cand = if (prune) liveCaches.add(cand0.persist()) else cand0
+    val tomb = hnswIndex(path).tombstones(spark)
     val dead =
-      if (!prune) hnswTombstones(spark, path)
+      if (!prune) tomb
       else {
-        val tomb = hnswTombstones(spark, path)
         val candIds = cand.select(col("__cid")).distinct()
         val nCand = candIds.count()
         val pushLimit = spark.conf.get("graft.hnsw.tombstonePushLimit",
@@ -839,12 +834,12 @@ object Hnsw {
       .join(cands, Seq("__cid"))
       .join(broadcast(q), Seq("__qid"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      // the delete lifecycle: a tombstoned id is dead to every query,
-      // below the scoring kernel — `dead` is broadcast-sized on every
-      // tier (the full small list, or the candidate-bounded prune)
-      .join(dead, col("__cid") === col("__tomb"), "left_anti")
+    // the delete lifecycle: a tombstoned id is dead to every query,
+    // below the scoring kernel — `dead` is broadcast-sized on every
+    // tier (the full small list, or the candidate-bounded prune)
+    val live = IndexLayout.liveRows(scored, col("__cid"), dead)
       .withColumn("cosine", Similarity.cosine(col("__qv"), col("__cv")))
-    Similarity.heapTopK(scored, k, org.apache.spark.sql.types.LongType)
+    Similarity.heapTopK(live, k, org.apache.spark.sql.types.LongType)
   }
 
   /**
@@ -923,9 +918,7 @@ object Hnsw {
                       path: String): Unit = {
     val spark = newRows.sparkSession
     import spark.implicits._
-    val idType = newRows.schema(idCol).dataType
-    require(Similarity.integralType(idType),
-      s"appendHnswIndex requires an integral id column, got $idType")
+    IndexLayout.requireIntegralId(newRows, idCol, "appendHnswIndex")
     val (m, efC, shards, dim) = readMeta(spark, path)
     // heal any crashed prior append BEFORE reading the nodes table —
     // a shard parked at the aside must count as existing
@@ -1022,78 +1015,28 @@ object Hnsw {
   }
 
   /**
-   * Tombstone indexed vectors — the delete face of the persisted HNSW
-   * index: ids land in `<path>/tombstones` and every subsequent
-   * [[hnswTopKIndexed]] drops them below the re-rank, so a deleted
-   * vector can never be RETURNED again (it keeps routing greedy
-   * descents until [[compactHnswIndex]] physically erases it — the
-   * hnswlib mark-deleted contract). A re-appended id stays dead while
-   * its tombstone stands; resurrect by compacting first, then
-   * re-appending — the same lifecycle as the other three families.
+   * The delete lifecycle of a [[saveHnswIndex]] layout
+   * ([[IndexLayout]]): a tombstoned vector is never RETURNED by a later
+   * [[hnswTopKIndexed]] or held [[HnswHandle]] (it keeps routing greedy
+   * descents until compaction — the hnswlib mark-deleted contract),
+   * and its tombstones carry a parquet bloom for the probe's prune
+   * tiers. `compact` REBUILDS every shard from scratch on its
+   * survivors (a dead node participates in every neighbor list, so
+   * erase ≡ rebuild is the only correct operation); the result is
+   * row-for-row identical to a fresh [[saveHnswIndex]] on the purged
+   * corpus (spec-pinned). Every step heals crashed appends first.
    */
-  def tombstoneHnswIndex(ids: DataFrame, idCol: String,
-                         path: String): Unit = {
-    require(Similarity.integralType(ids.schema(idCol).dataType),
-      s"tombstoneHnswIndex requires an integral id column, got " +
-        s"${ids.schema(idCol).dataType}: tombstones match through a " +
-        "long cast, which yields null (matches nothing) otherwise")
-    ids.select(col(idCol).cast("long").as("__tomb")).distinct()
-      .write.mode("append")
-      // a parquet bloom on the id lets a probe's small-candidate-set
-      // pushdown (IN literal) skip row groups when the tombstone list
-      // has grown to index scale — see the probeKernel prune tiers
-      .option("parquet.bloom.filter.enabled#__tomb", "true")
-      .option("parquet.bloom.filter.expected.ndv#__tomb", "1000000")
-      .parquet(s"$path/tombstones")
-  }
+  def hnswIndex(path: String): IndexHandle = IndexHandle(HnswFamily, path)
 
-  /** True iff any of `ids` is a node of the index — the
-    * `forgetEverywhere` pre-flight; see
-    * [[graft.ops.TextDedup.minhashAnyLive]] for the contract. Heals
-    * crashed appends first, like every other entry point. */
-  def hnswAnyLive(ids: DataFrame, idCol: String,
-                  path: String): Boolean = {
-    val spark = ids.sparkSession
-    healAppendLeftovers(spark, path)
-    !nodesOrEmpty(spark, path)
-      .select(col("id").as("__cid"))
-      .join(ids.select(col(idCol).cast("long").as("__cid")).distinct(),
-        Seq("__cid"), "left_semi").isEmpty
-  }
+  private val HnswFamily = new IndexLayout.Family("hnsw",
+    roster = NodesDir, fixedCols = Set("shard"), swapOrder = Seq(NodesDir),
+    kernel = compactKernel, tombBloom = true, heal = healAppendLeftovers)
 
-  /** Tombstoned ids of an index (empty if none were written). */
-  def hnswTombstones(spark: org.apache.spark.sql.SparkSession,
-                     path: String): DataFrame = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__tomb",
-          org.apache.spark.sql.types.LongType))))
-      .parquet(s"$path/tombstones").distinct()
-    else Seq.empty[Long].toDF("__tomb")
-  }
-
-  /**
-   * Compact a [[saveHnswIndex]] layout: physically erase tombstoned
-   * nodes by REBUILDING every shard from scratch on its survivors
-   * (sorted-id insertion — the graph is a mutable structure whose dead
-   * nodes participate in every neighbor list, so erase ≡ rebuild is
-   * not a shortcut here, it is the only correct operation), promote
-   * via one atomic whole-dir swap, then clear the tombstone list.
-   * After a completed compaction the index is row-for-row identical to
-   * a fresh [[saveHnswIndex]] on the purged corpus (spec-pinned).
-   */
-  def compactHnswIndex(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Unit = {
+  private def compactKernel(spark: org.apache.spark.sql.SparkSession,
+                            path: String, tomb: DataFrame): Boolean = {
     import spark.implicits._
     val (m, efC, shards, dim) = readMeta(spark, path)
-    healAppendLeftovers(spark, path)
-    val nodes = nodesOrEmpty(spark, path)
-    val live = nodes.join(hnswTombstones(spark, path),
-      col("id") === col("__tomb"), "left_anti")
-    val rebuilt = live
+    val rebuilt = IndexLayout.liveRows(nodesOrEmpty(spark, path), col("id"), tomb)
       .select(col("shard").cast("int").as("__s"), col("id").as("__id"),
         col("vec").as("__v"))
       .repartition(shards, col("__id"))
@@ -1102,9 +1045,6 @@ object Hnsw {
       .mapPartitions(it => buildRuns(it, m, efC, dim))
     rebuilt.toDF().write.mode("overwrite").partitionBy("shard")
       .parquet(s"$path/$NodesDir.__compact")
-    Layout.atomicSwap(spark, s"$path/$NodesDir.__compact",
-      s"$path/$NodesDir")
-    val tp = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
+    true
   }
 }

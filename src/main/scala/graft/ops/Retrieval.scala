@@ -29,6 +29,10 @@ import org.apache.spark.sql.functions._
  */
 object Retrieval {
 
+  /** Expected distinct terms per bucket, sizing the `term` bloom in
+    * every postings write (save, append and compaction). */
+  private val DefaultTermNdv = 1L << 17
+
   // Written-layout schemas, pinned so the index metadata reads skip
   // parquet schema inference: every bare `spark.read.parquet` runs one
   // driver footer-reading job before anything else, and a lifecycle
@@ -54,9 +58,6 @@ object Retrieval {
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("bucket",
       org.apache.spark.sql.types.IntegerType)))
-  private val TombstoneSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("__tomb",
-      org.apache.spark.sql.types.LongType)))
 
   /**
    * Sliding-window token chunking (the RAG ingestion shape): one output
@@ -226,18 +227,9 @@ object Retrieval {
    */
   def saveBm25Index(docs: DataFrame, idCol: String, textCol: String,
                     path: String, nBuckets: Int = 64,
-                    termNdvPerBucket: Long = 1L << 17): Unit = {
+                    termNdvPerBucket: Long = DefaultTermNdv): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1: $nBuckets")
-    // the delete lifecycle (tombstone/compact/forgetEverywhere)
-    // anti-joins on cast('long') — for a non-integral id the cast
-    // yields null, no tombstone ever matches, and a "deleted" doc
-    // keeps being served SILENTLY. Refuse to build an unpurgeable
-    // index rather than fail the purge years later.
-    require(Similarity.integralType(docs.schema(idCol).dataType),
-      s"saveBm25Index requires an integral id column, got " +
-        s"${docs.schema(idCol).dataType}: the tombstone/compact " +
-        "lifecycle matches ids through a long cast, which is lossy " +
-        "(silently no-op) for any other type")
+    IndexLayout.requireIntegralId(docs, idCol, "saveBm25Index")
     val spark = docs.sparkSession
     import spark.implicits._
     val base = docs.select(col(idCol),
@@ -271,7 +263,7 @@ object Retrieval {
       lit(nBuckets).as("n_buckets"))
       .repartition(1).write.mode("overwrite").parquet(s"$path/stats")
     // one (id, dl) row per doc — queries never read it; it is what
-    // lets compactBm25Index recompute n_docs/sum_dl EXACTLY on the
+    // lets compaction recompute n_docs/sum_dl EXACTLY on the
     // purged corpus (a zero-token doc has no postings row, so corpus
     // membership is not reconstructible from postings alone)
     base.select(col(idCol), col("dl"))
@@ -303,7 +295,8 @@ object Retrieval {
    */
   def appendBm25Index(docs: DataFrame, idCol: String, textCol: String,
                       path: String,
-                      termNdvPerBucket: Long = 1L << 17): Unit = {
+                      termNdvPerBucket: Long = DefaultTermNdv): Unit = {
+    IndexLayout.requireIntegralId(docs, idCol, "appendBm25Index")
     val spark = docs.sparkSession
     import spark.implicits._
     val (nDocs0, sumDl0, nBuckets) = spark.read.schema(StatsSchema)
@@ -340,7 +333,7 @@ object Retrieval {
     // publication point, and the roster must never lag it — a crash
     // between a published stats and a missing doclens row would make
     // the next compaction recompute stats WITHOUT these docs while
-    // their postings survive (compactBm25Index additionally heals any
+    // their postings survive (compaction additionally heals any
     // missing roster rows from the postings themselves)
     base.select(col(idCol), col("dl"))
       .write.mode("append").parquet(s"$path/doclens")
@@ -353,132 +346,64 @@ object Retrieval {
   }
 
   /**
-   * Tombstone indexed documents — the delete face of the BM25 index,
-   * closing the one persisted index family a right-to-be-forgotten
-   * purge previously could not reach (MinHash and IVF-PQ have had this
-   * lifecycle since r7): the ids land in `<path>/tombstones` and every
-   * subsequent [[bm25TopKIndexed]] drops them from the candidate set
-   * below the scoring kernel, so a deleted document can never be
-   * SERVED again, immediately and without rewriting the append-only
-   * posting files. Collection statistics (df, n_docs, avgdl) keep
-   * counting the deleted doc until [[compactBm25Index]] physically
-   * erases it — the standard inverted-index soft-delete contract
-   * (Lucene's deleted-docs-until-merge semantics): scores of SURVIVING
-   * docs shift only at compaction, deleted docs surface never. A
-   * re-appended id stays dead while its tombstone stands (resurrect by
-   * compacting first, then re-appending — the MinHash lifecycle,
-   * identically).
+   * The delete lifecycle of a [[saveBm25Index]] layout ([[IndexLayout]]):
+   * `tombstone` drops ids from every later [[bm25TopKIndexed]] below the
+   * scoring kernel, without rewriting the append-only posting files.
+   * Collection statistics (df, n_docs, avgdl) keep counting a deleted
+   * doc until `compact` erases it — Lucene's deleted-docs-until-merge
+   * contract: scores of SURVIVING docs shift only at compaction.
+   *
+   * After a completed compaction the index is probe-for-probe identical
+   * to a fresh [[saveBm25Index]] on the purged corpus: postings lose the
+   * dead docs' rows, `terms/` is recomputed from the surviving postings
+   * (collapsing append deltas AND the dead docs' df), and `stats/`
+   * recomputes from the purged `doclens/` roster — doclens is what
+   * keeps zero-token documents (present in n_docs, absent from
+   * postings) exact through the cycle.
    */
-  def tombstoneBm25Index(ids: DataFrame, idCol: String,
-                         path: String): Unit = {
-    // fail-fast (r10 advice, medium): a non-integral purge id would
-    // cast to null, match nothing in the probe/compact anti-joins,
-    // and the next compaction would DELETE the tombstone list —
-    // permanently discarding the purge intent as a silent no-op
-    require(Similarity.integralType(ids.schema(idCol).dataType),
-      s"tombstoneBm25Index requires an integral id column, got " +
-        s"${ids.schema(idCol).dataType}: tombstones match through a " +
-        "long cast, which yields null (matches nothing, silently) " +
-        "for any other type")
-    ids.select(col(idCol).cast("long").as("__tomb")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
-  }
+  def bm25Index(path: String): IndexHandle = IndexHandle(Bm25Family, path)
 
-  /** True iff any of `ids` is a corpus member of the index (its
-    * doclens table — corpus membership, which postings alone cannot
-    * reconstruct) — the `forgetEverywhere` pre-flight; see
-    * [[graft.ops.TextDedup.minhashAnyLive]] for the contract. */
-  def bm25AnyLive(ids: DataFrame, idCol: String,
-                  path: String): Boolean = {
-    val spark = ids.sparkSession
-    Layout.readParquetIfData(spark, s"$path/doclens").exists { dl =>
-      val did = dl.schema.fields.filterNot(_.name == "dl").head.name
-      !dl.select(col(did).cast("long").as("__cid"))
-        .join(ids.select(col(idCol).cast("long").as("__cid")).distinct(),
-          Seq("__cid"), "left_semi").isEmpty
-    }
-  }
+  private val Bm25Family = new IndexLayout.Family("bm25",
+    roster = "doclens", fixedCols = Set("dl", "term", "tf", "bucket"),
+    swapOrder = Seq("postings", "terms", "doclens", "stats"),
+    kernel = compactKernel)
 
   /** The postings table of a [[saveBm25Index]] layout, schema-safe
     * when the directory holds NO data files — the state a compaction
-    * of a fully-tombstoned index leaves behind (a partitioned write
-    * of zero rows emits only _SUCCESS; schema inference over it
-    * throws). The empty-dir schema derives from `doclens/` (always
-    * present after any compaction, and written by every save since
-    * r9) plus the fixed posting columns; an index with neither
-    * readable is genuinely corrupt and rethrows the original error. */
+    * of a fully-tombstoned index leaves behind. The empty schema
+    * derives from the `doclens/` roster plus the fixed posting columns. */
   private def postingsOrEmpty(spark: SparkSession,
                               path: String): DataFrame =
-    Layout.readParquetIfData(spark, s"$path/postings").getOrElse {
-      val idField = spark.read.parquet(s"$path/doclens")
-        .schema.fields.filterNot(_.name == "dl").head
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          idField,
-          org.apache.spark.sql.types.StructField("dl",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("term",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("tf",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("bucket",
-            org.apache.spark.sql.types.IntegerType))))
-    }
+    IndexLayout.readOrEmpty(spark, s"$path/postings",
+      org.apache.spark.sql.types.StructType(Seq(
+        Bm25Family.rosterIdField(spark, path),
+        org.apache.spark.sql.types.StructField("dl",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("term",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("tf",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("bucket",
+          org.apache.spark.sql.types.IntegerType))))
 
-  /** Tombstoned ids of a BM25 index (empty if none were written). */
-  def bm25Tombstones(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(TombstoneSchema)
-      .parquet(s"$path/tombstones").distinct()
-    else Seq.empty[Long].toDF("__tomb")
-  }
-
-  /**
-   * Compact a [[saveBm25Index]] layout: physically ERASE tombstoned
-   * documents and fold append-accumulated delta files. After a
-   * completed compaction the index is probe-for-probe identical to a
-   * fresh [[saveBm25Index]] on the purged corpus: postings lose the
-   * dead docs' rows, `terms/` is recomputed from the surviving
-   * postings (collapsing append deltas AND the dead docs' df), and
-   * `stats/` recomputes from the purged `doclens/` roster — doclens is
-   * what keeps zero-token documents (present in n_docs, absent from
-   * postings) exact through the cycle. Every directory is rewritten
-   * beside itself and promoted with [[Layout.atomicSwap]]; the swap
-   * order (postings, terms, doclens, stats, then the tombstone-list
-   * delete) keeps each crash window consistent — postings-only
-   * promoted is exactly the logical-exclusion state, and the tombstone
-   * list drops only when nothing it names remains, so an interrupted
-   * compaction is finished by running it again.
-   */
-  def compactBm25Index(spark: SparkSession, path: String,
-                       termNdvPerBucket: Long = 1L << 17): Unit = {
+  private def compactKernel(spark: SparkSession, path: String,
+                            tomb: DataFrame): Boolean = {
     import spark.implicits._
     val nBuckets = spark.read.schema(StatsSchema).parquet(s"$path/stats")
       .select(col("n_buckets").cast("int")).as[Int].head()
     val postings = postingsOrEmpty(spark, path)
-    val idCol = postings.columns
-      .filterNot(Set("dl", "term", "tf", "bucket")).head
-    val tomb = bm25Tombstones(spark, path)
+    val idCol = Bm25Family.idField(postings.schema).name
     // the purged postings PERSIST for the compaction: the rewrite, the
     // df recompute and the roster heal all read the same rows, and the
-    // cache is exactly what the `.__compact` files hold (a
-    // deterministic frame, materialized by the write below) — earlier
-    // rounds re-read the written files for each derivation instead,
-    // two extra full scans + schema plumbing for the zero-data-file
-    // case (guide §2, fewer passes; every derivation still lands
-    // before any swap, so the crash windows are unchanged)
-    val purged = postings
-      .join(tomb, col(idCol).cast("long") === col("__tomb"), "left_anti")
+    // cache is exactly what the `.__compact` files hold
+    val purged = IndexLayout.liveRows(postings, col(idCol), tomb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     purged
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .option("parquet.bloom.filter.enabled#term", "true")
       .option("parquet.bloom.filter.expected.ndv#term",
-        termNdvPerBucket.toString)
+        DefaultTermNdv.toString)
       .parquet(s"$path/postings.__compact")
     purged
       .groupBy(col("term"), col("bucket"))
@@ -506,16 +431,13 @@ object Retrieval {
         spark.read.schema(doclensSchema).parquet(s"$path/doclens")
           .select(col(idCol), col("dl"))
       else postings.select(col(idCol), col("dl")).limit(0)
-    // heal from the PURGED cache (the same rows the rewrite just
-    // wrote, already tombstone-free) rather than re-scanning any
-    // postings dir — a tombstoned id's rows can't resurface from it,
-    // and a roster id is excluded by the anti-join, so only genuinely
-    // missing live docs are recovered
+    // heal from the PURGED cache (already tombstone-free) rather than
+    // re-scanning any postings dir: a roster id is excluded by the
+    // anti-join, so only genuinely missing live docs are recovered
     val fromPostings = purged
       .select(col(idCol), col("dl")).distinct()
       .join(roster0.select(col(idCol)), Seq(idCol), "left_anti")
-    roster0
-      .join(tomb, col(idCol).cast("long") === col("__tomb"), "left_anti")
+    IndexLayout.liveRows(roster0, col(idCol), tomb)
       .unionByName(fromPostings)
       .write.mode("overwrite").parquet(s"$path/doclens.__compact")
     purged.unpersist()
@@ -523,13 +445,8 @@ object Retrieval {
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("sum_dl"),
         lit(nBuckets).as("n_buckets"))
-      .repartition(1).write.mode("overwrite").parquet(s"$path/stats.__tmp")
-    Layout.atomicSwap(spark, s"$path/postings.__compact", s"$path/postings")
-    Layout.atomicSwap(spark, s"$path/terms.__compact", s"$path/terms")
-    Layout.atomicSwap(spark, s"$path/doclens.__compact", s"$path/doclens")
-    Layout.atomicSwap(spark, s"$path/stats.__tmp", s"$path/stats")
-    val tp = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
+      .repartition(1).write.mode("overwrite").parquet(s"$path/stats.__compact")
+    true
   }
 
   /**
@@ -557,8 +474,7 @@ object Retrieval {
     // without touching it (the idCol type comes from the doclens
     // roster, which every compaction rewrites)
     if (nDocs == 0L) {
-      val idField = spark.read.parquet(s"$path/doclens").schema
-        .fields.filterNot(_.name == "dl").head.copy(name = idCol)
+      val idField = Bm25Family.rosterIdField(spark, path).copy(name = idCol)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
@@ -576,17 +492,14 @@ object Retrieval {
     val buckets = termSet.toDF("term")
       .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
       .as[Long].collect().distinct.sorted
-    // tombstoned docs are dead to every query (the delete lifecycle —
-    // [[tombstoneBm25Index]]): the anti-join sits below the scoring
-    // kernel, is bounded by the deleted-id cardinality (broadcast),
-    // and rides on top of the already bucket/bloom-pruned scan. df and
-    // the corpus scalars keep their saved values until compaction —
-    // the documented soft-delete contract.
-    val tf = postingsOrEmpty(spark, path)
+    // tombstoned docs are dead to every query ([[bm25Index]]): the
+    // anti-join rides on top of the already bucket/bloom-pruned scan.
+    // df and the corpus scalars keep their saved values until
+    // compaction — the documented soft-delete contract.
+    val tf = IndexLayout.liveRows(postingsOrEmpty(spark, path)
       .filter(col("bucket").isin(buckets: _*) &&
-        col("term").isin(termSet: _*))
-      .join(bm25Tombstones(spark, path),
-        col(idCol).cast("long") === col("__tomb"), "left_anti")
+        col("term").isin(termSet: _*)),
+      col(idCol), bm25Index(path).tombstones(spark))
       .select(col(idCol), col("dl"), col("term"), col("tf"))
     // sum per term: a base save writes one df row per term, and each
     // appendBm25Index batch adds a delta row — document frequencies

@@ -45,9 +45,6 @@ object Similarity {
     org.apache.spark.sql.types.StructField("center",
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.DoubleType, containsNull = false))))
-  private val TombSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("__tomb",
-      org.apache.spark.sql.types.LongType)))
 
 
   /**
@@ -1011,13 +1008,7 @@ object Similarity {
                      trainFraction: Double = 1.0): Unit = {
     require(trainFraction > 0 && trainFraction <= 1.0,
       s"trainFraction must be in (0,1]: $trainFraction")
-    // the delete lifecycle matches ids through a long cast — lossy
-    // (silent purge no-op) for non-integral ids; refuse to build an
-    // unpurgeable index (r10 advice, the BM25 sibling check)
-    require(integralType(corpus.schema(idCol).dataType),
-      s"saveIvfPqIndex requires an integral id column, got " +
-        s"${corpus.schema(idCol).dataType}: tombstone/compact match " +
-        "ids through a long cast, which is lossy for any other type")
+    IndexLayout.requireIntegralId(corpus, idCol, "saveIvfPqIndex")
     val spark = corpus.sparkSession
     val assigned = ivfAssign(corpus, idCol, vecCol, nCells)
     // codebook training runs `iterations` full passes over its input;
@@ -1056,6 +1047,7 @@ object Similarity {
    */
   def appendIvfPqIndex(newRows: DataFrame, idCol: String, vecCol: String,
                        path: String): Unit = {
+    IndexLayout.requireIntegralId(newRows, idCol, "appendIvfPqIndex")
     val spark = newRows.sparkSession
     val cb = loadPqCodebook(spark, s"$path/codebook")
     val (cellIds, centroids) =
@@ -1069,94 +1061,33 @@ object Similarity {
   }
 
   /**
-   * Tombstone indexed vectors — the delete face of the ANN index
-   * (right-to-be-forgotten without rewriting the cell-partitioned
-   * codes): the ids land in `<path>/tombstones` and every subsequent
-   * [[ivfPqTopKIndexed]] drops them below the codes scan, so deleted
-   * vectors can never be returned as neighbors. A tombstone holds
-   * until [[compactIvfPqIndex]] physically erases the rows and clears
-   * the list (the minhash index's lifecycle, identically).
-   */
-  def tombstoneIvfPqIndex(ids: DataFrame, idCol: String,
-                          path: String): Unit = {
-    // fail-fast (r10 advice): a non-integral purge id casts to null,
-    // matches nothing in the probe/compact anti-joins, and the next
-    // compaction discards the tombstone list — a SILENT lost purge
-    require(integralType(ids.schema(idCol).dataType),
-      s"tombstoneIvfPqIndex requires an integral id column, got " +
-        s"${ids.schema(idCol).dataType}: tombstones match through a " +
-        "long cast, which yields null (matches nothing) otherwise")
-    ids.select(col(idCol).cast("long").as("__tomb")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
-  }
-
-  /** True iff any of `ids` is encoded in the index (its codes table)
-    * — the `forgetEverywhere` pre-flight; see
-    * [[TextDedup.minhashAnyLive]] for the contract. */
-  def ivfPqAnyLive(ids: DataFrame, idCol: String,
-                   path: String): Boolean = {
-    val spark = ids.sparkSession
-    Layout.readParquetIfData(spark, s"$path/codes").exists { codes =>
-      val cid = codes.schema.fields
-        .filterNot(f => f.name == "cell_id" || f.name == "pq_codes")
-        .filterNot(_.dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType])
-        .head.name
-      !codes.select(col(cid).cast("long").as("__cid"))
-        .join(ids.select(col(idCol).cast("long").as("__cid")).distinct(),
-          Seq("__cid"), "left_semi").isEmpty
-    }
-  }
-
-  /** Tombstoned ids of an ANN index (empty if none were written). */
-  def ivfPqTombstones(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(TombSchema)
-      .parquet(s"$path/tombstones").distinct()
-    else Seq.empty[Long].toDF("__tomb")
-  }
-
-  /**
-   * Compact a [[saveIvfPqIndex]] layout: physically erase tombstoned
-   * vectors from the cell-partitioned codes (one atomic swap — a crash
-   * before the tombstone-list delete leaves a consistent, still-
-   * tombstoned index) and fold append-accumulated small files back to
+   * The delete lifecycle of a [[saveIvfPqIndex]] layout
+   * ([[IndexLayout]]) — right-to-be-forgotten without rewriting the
+   * cell-partitioned codes: tombstoned ids drop out below the codes
+   * scan of every later [[ivfPqTopKIndexed]], and `compact` erases
+   * their rows while folding append-accumulated small files back to
    * one per cell. `cells/` and `codebook/` are untouched — the coarse
-   * geometry is fixed at train time (the append convention), so probes
-   * and appends keep working across the compaction unchanged.
+   * geometry is fixed at train time (the append convention).
    */
-  def compactIvfPqIndex(spark: SparkSession, path: String): Unit = {
-    // an index already compacted down to zero rows has a codes dir
-    // with no data files (partitioned zero-row write) — nothing to
-    // erase; clearing the tombstone list is the whole compaction
-    // (contract: post-compact ≡ fresh save on the purged corpus). A
-    // MISSING codes dir is NOT that state — readParquetIfData throws
-    // on it, so a swap-crash recovery state can never silently
-    // discard the purge intent (r11 review finding).
-    val codes = Layout.readParquetIfData(spark, s"$path/codes")
-      .getOrElse {
-        val tp0 = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-        tp0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(tp0, true)
-        return
-      }
-    // the id is the one non-layout scalar column (the vector column's
-    // name is caller-chosen, but it is always an array)
-    val idCol = codes.schema.fields
-      .filterNot(f => f.name == "cell_id" || f.name == "pq_codes")
-      .filterNot(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      .head.name
-    val live = codes.join(ivfPqTombstones(spark, path),
-      col(idCol).cast("long") === col("__tomb"), "left_anti")
-    live.repartition(col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id")
-      .parquet(s"$path/codes.__compact")
-    Layout.atomicSwap(spark, s"$path/codes.__compact", s"$path/codes")
-    val tp = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
-  }
+  def ivfPqIndex(path: String): IndexHandle = IndexHandle(IvfPqFamily, path)
+
+  private val IvfPqFamily = new IndexLayout.Family("ivfpq",
+    roster = "codes", fixedCols = Set("cell_id", "pq_codes"),
+    swapOrder = Seq("codes"), kernel = compactKernel)
+
+  /** An index compacted down to zero rows has a codes dir with no data
+    * files: nothing to erase, and clearing the tombstone list is the
+    * whole compaction. A MISSING codes dir throws instead. */
+  private def compactKernel(spark: SparkSession, path: String,
+                            tomb: DataFrame): Boolean =
+    Layout.readParquetIfData(spark, s"$path/codes").fold(false) { codes =>
+      IndexLayout.liveRows(codes, col(IvfPqFamily.idField(codes.schema).name),
+        tomb)
+        .repartition(col("cell_id"))
+        .write.mode("overwrite").partitionBy("cell_id")
+        .parquet(s"$path/codes.__compact")
+      true
+    }
 
   /**
    * IVF-PQ top-k over a [[saveIvfPqIndex]] layout. Probe cells are
@@ -1208,11 +1139,10 @@ object Similarity {
             org.apache.spark.sql.types.StructField("cosine",
               org.apache.spark.sql.types.DoubleType))))
       }
-    val codes = codesRaw
-      .filter(col("cell_id").isin(probed: _*))
-      // deleted vectors are dead to every query (tombstone lifecycle)
-      .join(ivfPqTombstones(spark, path),
-        col(idCol).cast("long") === col("__tomb"), "left_anti")
+    // deleted vectors are dead to every query ([[ivfPqIndex]])
+    val codes = IndexLayout.liveRows(
+      codesRaw.filter(col("cell_id").isin(probed: _*)), col(idCol),
+      ivfPqIndex(path).tombstones(spark))
     // the delegate re-selects per-query probes; hand it the SAVED
     // means (restricted to probed cells) instead of letting it
     // re-aggregate them from the pruned corpus — at scale that pass

@@ -36,6 +36,10 @@ import graft.functions.FastHash
  */
 object TextDedup {
 
+  /** Expected distinct band hashes per row group, sizing the `bh`
+    * bloom in every bands write (save, append and compaction). */
+  private val DefaultBhNdv = 1L << 17
+
   // Written-layout schemas for the minhash index's fixed-shape
   // metadata, pinned so their reads skip parquet schema inference
   // (one driver footer job per bare spark.read.parquet — the index
@@ -51,21 +55,7 @@ object TextDedup {
       org.apache.spark.sql.types.IntegerType),
     org.apache.spark.sql.types.StructField("seed",
       org.apache.spark.sql.types.LongType)))
-  private val CidTombSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("__cid",
-      org.apache.spark.sql.types.LongType)))
 
-
-  /** Distinct k-char shingles of a (lowercased, whitespace-squashed)
-    * string as an array column. Per-document only — pair paths use
-    * [[shingleHashes]]. */
-  def charShingles(text: Column, k: Int): Column = {
-    val norm = lower(regexp_replace(trim(text), "\\s+", " "))
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(lit(1), length(norm) - lit(k - 1))),
-        i => norm.substr(i, lit(k))))
-  }
 
   /** Distinct whitespace word n-gram shingles; documents with fewer
     * than n words yield an EMPTY set (no truncated grams). One JIT'd
@@ -346,18 +336,6 @@ object TextDedup {
       sig
     })
     kernel(hashes)
-  }
-
-  /** MinHash signature over a string-shingle array (API-compat wrapper:
-    * hashes each shingle, then [[minhashSignatureFromHashes]]). */
-  def minhashSignature(shingles: Column, k: Int = 128,
-                       seed: Long = 42L): Column = {
-    val toHashes = udf((sh: Seq[String]) => {
-      val hs = sh.map(FastHash.hash64).toArray
-      java.util.Arrays.sort(hs)
-      hs
-    })
-    minhashSignatureFromHashes(toHashes(shingles), k, seed)
   }
 
   /** LSH band hashes: b bands of r contiguous signature rows, each
@@ -1256,15 +1234,9 @@ object TextDedup {
                        path: String, shingleLen: Int = 5,
                        numHashes: Int = 128, bands: Int = 32,
                        seed: Long = 42L,
-                       bhNdvPerGroup: Long = 1L << 17): Unit = {
+                       bhNdvPerGroup: Long = DefaultBhNdv): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    // the delete lifecycle matches ids through a long cast — lossy
-    // (silent purge no-op) for non-integral ids; refuse to build an
-    // unpurgeable index (r10 advice, the BM25 sibling check)
-    require(graft.ops.Similarity.integralType(df.schema(idCol).dataType),
-      s"saveMinhashIndex requires an integral id column, got " +
-        s"${df.schema(idCol).dataType}: tombstone/compact match ids " +
-        "through a long cast, which is lossy for any other type")
+    IndexLayout.requireIntegralId(df, idCol, "saveMinhashIndex")
     val spark = df.sparkSession
     import spark.implicits._
     val rows = numHashes / bands
@@ -1309,7 +1281,8 @@ object TextDedup {
    */
   def appendMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                          path: String,
-                         bhNdvPerGroup: Long = 1L << 17): Unit = {
+                         bhNdvPerGroup: Long = DefaultBhNdv): Unit = {
+    IndexLayout.requireIntegralId(df, idCol, "appendMinhashIndex")
     val spark = df.sparkSession
     import spark.implicits._
     val (shingleLen, numHashes, bands, seed) =
@@ -1341,119 +1314,51 @@ object TextDedup {
   }
 
   /**
-   * Tombstone indexed documents — the delete face of the index
-   * (right-to-be-forgotten without rewriting band/sets files, which
-   * are append-only by design): the ids land in `<path>/tombstones`
-   * and every subsequent [[minhashProbeIndexed]] excludes them from
-   * its candidate set, so deleted documents can never re-link. A
-   * re-appended id stays dead while its tombstone stands (resurrect by
-   * compacting first — [[compactMinhashIndex]] physically erases the
-   * dead rows and clears the list, after which the id is simply absent
-   * and a fresh append of it is a new document). The lifecycle mirrors
-   * the snapshot store's deleteCommit-then-vacuum sequence.
+   * The delete lifecycle of a [[saveMinhashIndex]] layout
+   * ([[IndexLayout]]) — right-to-be-forgotten without rewriting the
+   * append-only band/sets files: tombstoned docs drop out of every
+   * later [[minhashProbeIndexed]] candidate set, so they can never
+   * re-link, and `compact` erases them from `bands/` and `sets/` while
+   * folding append-accumulated small files back into one file per band
+   * partition. `meta/` (the immutable hash geometry) is untouched, so
+   * probes and appends keep working across the compaction.
    */
-  def tombstoneMinhashIndex(ids: DataFrame, idCol: String,
-                            path: String): Unit = {
-    // fail-fast (r10 advice): a non-integral purge id casts to null,
-    // matches nothing, and compaction then discards the tombstone
-    // list — the purge intent would be lost SILENTLY
-    require(graft.ops.Similarity.integralType(ids.schema(idCol).dataType),
-      s"tombstoneMinhashIndex requires an integral id column, got " +
-        s"${ids.schema(idCol).dataType}: tombstones match through a " +
-        "long cast, which yields null (matches nothing) otherwise")
-    ids.select(col(idCol).cast("long").as("__cid")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
-  }
+  def minhashIndex(path: String): IndexHandle = IndexHandle(MinhashFamily, path)
 
-  /** True iff any of `ids` is present in the index (its sets table) —
-    * `forgetEverywhere`'s pre-flight: an idempotent purge RE-RUN (the
-    * scheduled-compliance pattern) skips the family's tombstone write
-    * and compaction rebuild when nothing matches, costing a probe
-    * instead of an index rewrite. Loud on a MISSING layout
-    * ([[Layout.readParquetIfData]]); a valid-empty index reads as
-    * nothing-live. */
-  def minhashAnyLive(ids: DataFrame, idCol: String,
-                     path: String): Boolean = {
-    val spark = ids.sparkSession
-    Layout.readParquetIfData(spark, s"$path/sets").exists { sets =>
-      val sid = sets.schema.fields.filterNot(_.name == "__shh").head.name
-      !sets.select(col(sid).cast("long").as("__cid"))
-        .join(ids.select(col(idCol).cast("long").as("__cid")).distinct(),
-          Seq("__cid"), "left_semi").isEmpty
-    }
-  }
+  private val MinhashFamily = new IndexLayout.Family("minhash",
+    roster = "sets", fixedCols = Set("__shh", "bh", "band"),
+    swapOrder = Seq("bands", "sets"), kernel = compactKernel,
+    tombColumn = "__cid")
 
-  /** The bands table of a [[saveMinhashIndex]] layout, schema-safe
-    * when the directory holds no data files — the state a compaction
-    * of a fully-tombstoned index leaves (a partitioned zero-row write
-    * emits only _SUCCESS, and schema inference over it throws). The
-    * empty schema derives from `sets/` (unpartitioned, so its footer
-    * survives even a zero-row rewrite) plus the fixed band columns. */
+  /** The bands table, schema-safe when the directory holds no data
+    * files (a fully-tombstoned compaction's partitioned zero-row
+    * write): the empty schema derives from the unpartitioned `sets/`
+    * roster, whose footer survives a zero-row rewrite. */
   private def bandsOrEmpty(spark: org.apache.spark.sql.SparkSession,
                            path: String): DataFrame =
-    Layout.readParquetIfData(spark, s"$path/bands").getOrElse {
-      val idField = spark.read.parquet(s"$path/sets")
-        .schema.fields.filterNot(_.name == "__shh").head
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          idField,
-          org.apache.spark.sql.types.StructField("bh",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("band",
-            org.apache.spark.sql.types.IntegerType))))
-    }
+    IndexLayout.readOrEmpty(spark, s"$path/bands",
+      org.apache.spark.sql.types.StructType(Seq(
+        MinhashFamily.rosterIdField(spark, path),
+        org.apache.spark.sql.types.StructField("bh",
+          org.apache.spark.sql.types.IntegerType),
+        org.apache.spark.sql.types.StructField("band",
+          org.apache.spark.sql.types.IntegerType))))
 
-  /** Tombstoned ids of an index (empty frame if none were ever
-    * written). */
-  def minhashTombstones(spark: org.apache.spark.sql.SparkSession,
-                        path: String): DataFrame = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(CidTombSchema)
-      .parquet(s"$path/tombstones").distinct()
-    else Seq.empty[Long].toDF("__cid")
-  }
-
-  /**
-   * Compact a [[saveMinhashIndex]] layout: physically ERASE tombstoned
-   * documents from `bands/` and `sets/` (the vacuum step completing
-   * the tombstone lifecycle — probes already excluded them logically)
-   * and fold the append-accumulated small files back into one file per
-   * band partition. Each directory is rewritten beside itself and
-   * promoted with [[graft.ops.Layout.atomicSwap]]; the swap ORDER
-   * (bands, then sets, then the tombstone list) keeps every crash
-   * window consistent — a compacted bands dir with an uncompacted sets
-   * dir merely carries unreachable set rows, and the tombstone list is
-   * only dropped once nothing it names remains. `meta/` (the immutable
-   * hash geometry) is untouched, so probes and appends keep working
-   * across the compaction unchanged.
-   */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          bhNdvPerGroup: Long = 1L << 17): Unit = {
+  private def compactKernel(spark: org.apache.spark.sql.SparkSession,
+                            path: String, tomb: DataFrame): Boolean = {
     val sets = spark.read.parquet(s"$path/sets")
-    val idCol = sets.columns.filterNot(_ == "__shh").head
-    val tomb = minhashTombstones(spark, path)
-      .withColumnRenamed("__cid", "__tomb")
-    val bands = bandsOrEmpty(spark, path)
-    bands
-      .join(tomb, col(idCol).cast("long") === col("__tomb"), "left_anti")
+    val idCol = MinhashFamily.idField(sets.schema).name
+    IndexLayout.liveRows(bandsOrEmpty(spark, path), col(idCol), tomb)
       .repartition(col("band"))
       .write.mode("overwrite").partitionBy("band")
       .option("parquet.bloom.filter.enabled#bh", "true")
-      .option("parquet.bloom.filter.expected.ndv#bh", bhNdvPerGroup.toString)
+      .option("parquet.bloom.filter.expected.ndv#bh", DefaultBhNdv.toString)
       .parquet(s"$path/bands.__compact")
-    Layout.atomicSwap(spark, s"$path/bands.__compact", s"$path/bands")
-    sets
-      .join(tomb, col(idCol).cast("long") === col("__tomb"), "left_anti")
+    IndexLayout.liveRows(sets, col(idCol), tomb)
       .write.mode("overwrite")
       .option("parquet.bloom.filter.enabled#" + idCol, "true")
       .parquet(s"$path/sets.__compact")
-    Layout.atomicSwap(spark, s"$path/sets.__compact", s"$path/sets")
-    val tp = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
+    true
   }
 
   /**
@@ -1516,7 +1421,7 @@ object TextDedup {
     // zero-data-file bands dir reads as the empty frame directly (a
     // MISSING bands dir still throws at load — the loudness contract).
     val setsRaw = spark.read.parquet(s"$path/sets")
-    val setsIdField = setsRaw.schema.fields.filterNot(_.name == "__shh").head
+    val setsIdField = MinhashFamily.idField(setsRaw.schema)
     val bandsSchema = org.apache.spark.sql.types.StructType(Seq(
       setsIdField,
       org.apache.spark.sql.types.StructField("bh",
@@ -1555,8 +1460,9 @@ object TextDedup {
     // tombstoned corpus docs are dead to the probe (delete face); the
     // tombstone set is id-cardinality-bounded and the anti-join rides
     // the same candidate frame every downstream stage reads
-    val candidates = joined.select(col("__bid"), col("__cid")).distinct()
-      .join(minhashTombstones(spark, path), Seq("__cid"), "left_anti")
+    val candidates = IndexLayout.liveRows(
+        joined.select(col("__bid"), col("__cid")).distinct(),
+        col("__cid"), minhashIndex(path).tombstones(spark))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sets = setsRaw
       .select(col(idCol).cast("long").as("__cid"),

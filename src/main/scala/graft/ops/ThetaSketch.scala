@@ -58,7 +58,7 @@ object ThetaSketch {
   def sketch(df: DataFrame, groupCols: Seq[String], valueCol: String,
              k: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2: $k")
-    // integral input required up front (the tombstoneHnswIndex
+    // integral input required up front (the index tombstone
     // convention): values hash through a long cast, and on a non-ANSI
     // session a failed cast would become a NULL hash that survives the
     // isNotNull filter and sorts FIRST in every ascending k-min window

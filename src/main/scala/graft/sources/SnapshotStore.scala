@@ -463,31 +463,33 @@ object SnapshotStore {
 
   /**
    * One-call right-to-be-forgotten across EVERY persisted surface: the
-   * catalog's tables ([[deleteCommitAll]] — one atomic new version)
-   * plus the four index families a corpus typically carries beside
-   * its tables — MinHash near-dup, IVF-PQ ANN, BM25 retrieval, and
-   * (since r11) persisted HNSW graph-ANN — plus, via `sinkCorpora`,
-   * the streaming sinks' published `ingest_batch=N` corpora
-   * ([[graft.streaming.SinkCorpus.purge]] — only affected partitions
-   * rewritten), closing the last manual step (the sink corpus held the
-   * rows its index was built from, and purging the index alone left
-   * them readable). This is
-   * the orchestration [[deleteCommitAll]] alone could not honestly
-   * claim (r9 verdict: a forgotten doc_id kept being SERVED by any
-   * retrieval index built from the corpus until that index was purged
-   * separately, and before r10 the BM25 family had no purge at all).
+   * catalog's tables ([[deleteCommitAll]] — one atomic new version),
+   * the index families a corpus carries beside its tables — each
+   * `indexes` handle ([[graft.ops.IndexHandle]]: BM25, MinHash, IVF-PQ
+   * or HNSW, all on the one [[graft.ops.IndexLayout]] lifecycle) — and,
+   * via `sinkCorpora`, the streaming sinks' published `ingest_batch=N`
+   * corpora ([[graft.streaming.SinkCorpus.purge]] — only affected
+   * partitions rewritten; they hold the rows the sinks' indexes were
+   * built from).
    *
    * Order of operations, and why:
-   *  1. index TOMBSTONES land first — the serving paths (similarity /
-   *     retrieval probes) stop surfacing the entity immediately,
-   *     before anything else, because they are the surfaces an end
-   *     user actually queries;
+   *  0. pre-flight: each index's `anyLive` probe; an index holding none
+   *     of the ids (an idempotent re-run — the scheduled-compliance
+   *     pattern) skips its tombstone write and its compaction rebuild.
+   *     A standing tombstone from an earlier deferred-compaction run
+   *     still counts as live (its ids are still in the data), so
+   *     deferred erases complete here;
+   *  1. index TOMBSTONES land first — the serving paths stop
+   *     surfacing the entity immediately, because they are the
+   *     surfaces an end user actually queries;
    *  2. the catalog commit ([[deleteCommitAll]]) flips all tables to
    *     the purged state in one atomic version;
-   *  3. with `compactIndexes = true` (the default), each index is
+   *  3. with `compactIndexes = true` (the default), each live index is
    *     compacted — PHYSICAL erase, completing the lifecycle; pass
    *     false to defer the rewrite cost to scheduled maintenance
    *     (tombstones keep every probe clean meanwhile).
+   * Each phase's per-directory steps are independent and run as
+   * concurrent Spark jobs.
    *
    * Old catalog versions still hold the rows (time travel is the
    * store's contract): finish compliance with [[vacuumCatalog]] once
@@ -497,10 +499,7 @@ object SnapshotStore {
    */
   def forgetEverywhere(ids: DataFrame, catalogPath: String,
                        pkByTable: Map[String, String],
-                       minhashIndexes: Seq[String] = Nil,
-                       ivfPqIndexes: Seq[String] = Nil,
-                       bm25Indexes: Seq[String] = Nil,
-                       hnswIndexes: Seq[String] = Nil,
+                       indexes: Seq[graft.ops.IndexHandle] = Nil,
                        sinkCorpora: Seq[(String, String)] = Nil,
                        compactIndexes: Boolean = true): Long = {
     val spark = ids.sparkSession
@@ -510,73 +509,17 @@ object SnapshotStore {
     val idCol = ids.columns.head
     val purge = ids.select(col(idCol)).distinct().persist()
     try {
-      // PRE-FLIGHT (r11): probe which index families actually HOLD a
-      // purged id. An idempotent RE-RUN — the scheduled-compliance
-      // pattern — and any purge of ids that never reached an index
-      // then skip that family's tombstone write AND its compaction
-      // rebuild entirely: the cost is a pruned probe, not an index
-      // rewrite. First-run behavior is unchanged (every family that
-      // holds an id still tombstones and compacts), and a standing
-      // tombstone from an earlier deferred-compaction run still
-      // counts as live (its ids are still IN the data tables), so
-      // deferred erases complete here. Probes are per-directory
-      // independent — concurrent like every other phase.
-      val live = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      inParallel(
-        minhashIndexes.map(p => () => { if (
-          graft.ops.TextDedup.minhashAnyLive(purge, idCol, p))
-            live.add(s"mh:$p"); () }) ++
-        ivfPqIndexes.map(p => () => { if (
-          graft.ops.Similarity.ivfPqAnyLive(purge, idCol, p))
-            live.add(s"pq:$p"); () }) ++
-        bm25Indexes.map(p => () => { if (
-          graft.ops.Retrieval.bm25AnyLive(purge, idCol, p))
-            live.add(s"bm:$p"); () }) ++
-        hnswIndexes.map(p => () => { if (
-          graft.ops.Hnsw.hnswAnyLive(purge, idCol, p))
-            live.add(s"hw:$p"); () }))
-      val liveMh = minhashIndexes.filter(p => live.contains(s"mh:$p"))
-      val livePq = ivfPqIndexes.filter(p => live.contains(s"pq:$p"))
-      val liveBm = bm25Indexes.filter(p => live.contains(s"bm:$p"))
-      val liveHw = hnswIndexes.filter(p => live.contains(s"hw:$p"))
-      // the live families' tombstone writes touch DISJOINT
-      // directories and read only the shared materialized purge set —
-      // run them as concurrent Spark jobs (r10 verdict #6: the RTBF
-      // wall is fixed job-count overhead, not data cost; overlapping
-      // the independent phases is pure latency hygiene)
-      val tombstonePhases: Seq[() => Unit] =
-        liveMh.map(p => () =>
-          graft.ops.TextDedup.tombstoneMinhashIndex(purge, idCol, p)) ++
-        livePq.map(p => () =>
-          graft.ops.Similarity.tombstoneIvfPqIndex(purge, idCol, p)) ++
-        liveBm.map(p => () =>
-          graft.ops.Retrieval.tombstoneBm25Index(purge, idCol, p)) ++
-        liveHw.map(p => () =>
-          graft.ops.Hnsw.tombstoneHnswIndex(purge, idCol, p)) ++
-        // streaming sink corpora (`<path>/ingest_batch=N/` layouts —
-        // the rows the sinks' indexes were built FROM) have no
-        // tombstone phase: their purge IS the physical erase, rewriting
-        // only the affected batch partitions, so it rides the first
-        // wave with the tombstones. (corpusPath, corpusIdCol) pairs.
+      val held = new Array[Boolean](indexes.size)
+      inParallel(indexes.indices.map(i => () =>
+        held(i) = indexes(i).anyLive(purge, idCol)))
+      val live = indexes.indices.filter(held(_)).map(indexes)
+      // sink corpora have no tombstone phase: their purge IS the
+      // physical erase, so it rides the first wave with the tombstones
+      inParallel(live.map(h => () => h.tombstone(purge, idCol)) ++
         sinkCorpora.map { case (p, c) => () =>
-          graft.streaming.SinkCorpus.purge(purge, idCol, p, c); () }
-      inParallel(tombstonePhases)
+          graft.streaming.SinkCorpus.purge(purge, idCol, p, c); () })
       val v = deleteCommitAll(purge, catalogPath, pkByTable)
-      if (compactIndexes) {
-        // compactions are likewise per-directory independent; each is
-        // internally crash-safe (tmp + atomic swap), so concurrency
-        // changes wall time only. Only the pre-flight's LIVE families
-        // rebuild.
-        inParallel(
-          liveMh.map(p => () =>
-            graft.ops.TextDedup.compactMinhashIndex(spark, p)) ++
-          livePq.map(p => () =>
-            graft.ops.Similarity.compactIvfPqIndex(spark, p)) ++
-          liveBm.map(p => () =>
-            graft.ops.Retrieval.compactBm25Index(spark, p)) ++
-          liveHw.map(p => () =>
-            graft.ops.Hnsw.compactHnswIndex(spark, p)))
-      }
+      if (compactIndexes) inParallel(live.map(h => () => h.compact(spark)))
       v
     } finally purge.unpersist()
   }

@@ -145,7 +145,7 @@ object AnnSink {
     // compaction folds them (and erases tombstoned rows) AFTER the
     // marker — a replayed compaction is an idempotent rewrite
     if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-      Similarity.compactIvfPqIndex(spark, indexPath)
+      Similarity.ivfPqIndex(indexPath).compact(spark)
     // return the WRITTEN rows (the DedupSink convention): after the
     // append, re-evaluating the survivor lineage would probe the grown
     // index, where every survivor now self-links

@@ -171,7 +171,7 @@ object DedupSink {
     // marker — a replayed compaction is harmless (idempotent rewrite),
     // answers are unchanged by contract (spec-pinned).
     if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-      TextDedup.compactMinhashIndex(spark, indexPath)
+      TextDedup.minhashIndex(indexPath).compact(spark)
     // return the WRITTEN rows, not the live plan: after the index
     // append, re-evaluating the survivors lineage would probe the
     // grown index — where every survivor now links to ITSELF — and

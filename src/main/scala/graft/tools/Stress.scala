@@ -956,9 +956,9 @@ object Stress {
     tme(s"bm25 forget ($nBm docs: save+tombstone+probe+compact+probe)") {
       graft.ops.Retrieval.saveBm25Index(bmCorpus, "doc_id", "text",
         bmDir, nBuckets = 32)
-      graft.ops.Retrieval.tombstoneBm25Index(
+      graft.ops.Retrieval.bm25Index(bmDir).tombstone(
         bmCorpus.filter(col("doc_id") % 10 === 3).select(col("doc_id")),
-        "doc_id", bmDir)
+        "doc_id")
       val queries = Seq(1L -> "spark join merge", 2L -> "fast scan filter")
       val soft = graft.ops.Retrieval.bm25TopKIndexed(spark, bmDir,
         "doc_id", queries, k = 50).persist()
@@ -967,7 +967,7 @@ object Stress {
         "a tombstoned doc surfaced while its tombstone stood")
       soft.unpersist()
       graft.ops.Retrieval.releaseCaches()
-      graft.ops.Retrieval.compactBm25Index(spark, bmDir)
+      graft.ops.Retrieval.bm25Index(bmDir).compact(spark)
       val hard = graft.ops.Retrieval.bm25TopKIndexed(spark, bmDir,
         "doc_id", queries, k = 50).persist()
       assert(hard.count() == 100L && hard
@@ -1155,15 +1155,15 @@ object Stress {
       }
       assert(both >= 198,
         s"append: $both/200 queries see original then appended twin")
-      Hnsw.tombstoneHnswIndex(
+      Hnsw.hnswIndex(hnswIdx).tombstone(
         hnswCorpus.filter(col("vec_id") % 1000 === 7L)
-          .select(col("vec_id")), "vec_id", hnswIdx)
+          .select(col("vec_id")), "vec_id")
       val t2 = top(1)
       val dead = t2.count { case (q, ns) => ns == Seq(q + 1000000L) }
       assert(dead >= 198 &&
         !t2.exists { case (q, ns) => ns.contains(q - 1000000L) },
         s"tombstone: $dead/200 serve the appended twin, originals dead")
-      Hnsw.compactHnswIndex(spark, hnswIdx)
+      Hnsw.hnswIndex(hnswIdx).compact(spark)
       val t3 = top(1)
       assert(t3.count { case (q, ns) => ns == Seq(q + 1000000L) } >= 198 &&
         !t3.exists { case (q, ns) => ns.contains(q - 1000000L) },
@@ -1202,9 +1202,9 @@ object Stress {
     // post-RTBF indexes).
     tme("hnsw mass-tombstone probe prune (20k dead of 200k)") {
       import graft.ops.Hnsw
-      Hnsw.tombstoneHnswIndex(
+      Hnsw.hnswIndex(hnswIdx).tombstone(
         hnswCorpus.filter(col("vec_id") % 10 === 3L).select(col("vec_id")),
-        "vec_id", hnswIdx)
+        "vec_id")
       def top1(): Map[Long, Seq[Long]] =
         Hnsw.hnswTopKIndexed(spark, hnswIdx, hnswQ, "vec_id",
           "embedding", k = 1)

@@ -91,8 +91,8 @@ class HnswIndexSpec extends SparkSpec {
     val dead = Seq(11L, 42L, 199L)
     Hnsw.saveHnswIndex(corpus, "vec_id", "embedding", s"$base/live",
       m = 6, efConstruction = 24, nShards = 3)
-    Hnsw.tombstoneHnswIndex(dead.toDF("vec_id"), "vec_id", s"$base/live")
-    Hnsw.compactHnswIndex(spark, s"$base/live")
+    Hnsw.hnswIndex(s"$base/live").tombstone(dead.toDF("vec_id"), "vec_id")
+    Hnsw.hnswIndex(s"$base/live").compact(spark)
     Hnsw.saveHnswIndex(corpus.filter(!col("vec_id").isin(dead: _*)),
       "vec_id", "embedding", s"$base/rebuilt",
       m = 6, efConstruction = 24, nShards = 3)
@@ -117,9 +117,9 @@ class HnswIndexSpec extends SparkSpec {
     Hnsw.saveHnswIndex(corpus, "vec_id", "embedding", dir,
       m = 6, efConstruction = 24, nShards = 3)
     // kill every 4th id — deletes at a scale where probes must prune
-    Hnsw.tombstoneHnswIndex(
+    Hnsw.hnswIndex(dir).tombstone(
       corpus.filter(col("vec_id") % 4 === 0L).select(col("vec_id")),
-      "vec_id", dir)
+      "vec_id")
     def probe(): Set[(Long, Long, Int, Double)] =
       Hnsw.hnswTopKIndexed(spark, dir, q, "vec_id", "embedding",
         k = 5, efSearch = 24)
@@ -179,7 +179,7 @@ class HnswIndexSpec extends SparkSpec {
         "vec_id", "embedding", s"$dir.bad")
     }
     intercept[IllegalArgumentException] {
-      Hnsw.tombstoneHnswIndex(Seq("a").toDF("vec_id"), "vec_id", dir)
+      Hnsw.hnswIndex(dir).tombstone(Seq("a").toDF("vec_id"), "vec_id")
     }
   }
 
@@ -286,8 +286,8 @@ class HnswIndexSpec extends SparkSpec {
     // top-1 self-twin disappears while the graph structure still serves
     val victim = viaHandle.groupBy(_._1).map { case (_, rows) =>
       rows.minBy(_._3)._2 }.head
-    graft.ops.Hnsw.tombstoneHnswIndex(Seq(victim).toDF("vec_id"),
-      "vec_id", dir)
+    graft.ops.Hnsw.hnswIndex(dir).tombstone(Seq(victim).toDF("vec_id"),
+      "vec_id")
     val after = h.topK(q, "vec_id", "embedding", k = 5, efSearch = 24)
       .as[(Long, Long, Int, Double)].collect().toSet
     assert(!after.exists(_._2 == victim),

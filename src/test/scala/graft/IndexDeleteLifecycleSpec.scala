@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Retrieval, Similarity, TextDedup}
+import graft.ops.{Hnsw, IndexHandle, Retrieval, Similarity, TextDedup}
 
 /**
  * The four persisted index families — MinHash (text near-dup), IVF-PQ
- * (embedding ANN), BM25 (lexical retrieval) and HNSW (graph ANN, the
- * persisted face new in r11) — must expose ONE observable delete
- * lifecycle (r9 verdict #2 closed the BM25 gap):
+ * (embedding ANN), BM25 (lexical retrieval) and HNSW (graph ANN) — run
+ * ONE delete lifecycle, `graft.ops.IndexLayout`, through their
+ * `IndexHandle`s:
  *
  *   1. tombstone  → the id stops being SERVED immediately (logical
  *                   exclusion below every query path), and stays dead
@@ -22,7 +22,9 @@ import graft.ops.{Retrieval, Similarity, TextDedup}
  *
  * A right-to-be-forgotten purge that runs tombstone-then-compact on
  * every index beside `SnapshotStore.deleteCommitAll` therefore leaves
- * NO query path that can surface the entity.
+ * NO query path that can surface the entity. The lifecycle,
+ * fully-tombstoned, missing-component and id-type tests run over all
+ * four families (`families`), so each family gets every case.
  */
 class IndexDeleteLifecycleSpec extends SparkSpec {
   import spark.implicits._
@@ -30,126 +32,120 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
   private def exists(p: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(p))
 
-  private def lifecycle(name: String, served: () => Set[Long],
-                        tombstone: () => Unit, reAppend: () => Unit,
-                        compact: () => Unit, tombstonesDir: String): Unit = {
-    assert(served() == Set(1L), s"$name: baseline must serve doc 1")
-    tombstone()
-    assert(!served().contains(1L), s"$name: tombstoned id still served")
-    reAppend()
-    assert(!served().contains(1L),
-      s"$name: re-appended id must stay dead while its tombstone stands")
-    compact()
-    assert(!exists(tombstonesDir),
-      s"$name: compaction must clear the tombstone list")
-    assert(!served().contains(1L),
-      s"$name: physically erased id surfaced post-compaction")
-    reAppend()
-    assert(served() == Set(1L),
-      s"$name: a fresh append after compaction must resurrect the id")
+  private def oneHot(d: Int, m: Float): Array[Float] =
+    Array.tabulate(8)(i => if (i == d % 8) m else 0f)
+
+  /** One index family under test. `rows(ids)` builds documents in which
+    * id 1 is the only one `served` can surface; `servedAll` is the same
+    * probe with no relevance cut (every id it returns at all);
+    * `corpus` is the saved id set; `component` is a directory an
+    * interrupted swap can leave missing (parked at `.__old`). */
+  private final case class Family(
+      name: String, idCol: String, corpus: Seq[Long],
+      rows: Seq[Long] => DataFrame,
+      save: (DataFrame, String) => Unit,
+      append: (DataFrame, String) => Unit,
+      served: String => Set[Long],
+      servedAll: String => Set[Long],
+      handle: String => IndexHandle,
+      component: String)
+
+  private def texts(ids: Seq[Long]): DataFrame = ids.map { i =>
+    (i, if (i == 1L) "alpha beta gamma the quick brown fox jumps over " +
+      "the lazy dog again and again"
+    else s"delta epsilon zeta, unrelated words about spark plans $i")
+  }.toDF("doc_id", "text")
+
+  private def vectors(ids: Seq[Long]): DataFrame = ids.map { i =>
+    (i, if (i == 1L) oneHot(1, 2f) else oneHot(i.toInt, 1f + (i % 3)))
+  }.toDF("vec_id", "embedding")
+
+  // i % 8 == 1 excluded: vector 1 must be the ONLY direction-1 vector
+  private val vectorIds = 1L +: (2L to 24L).filter(_ % 8 != 1)
+  private lazy val qVec = Seq((200L, oneHot(1, 5f))).toDF("vec_id", "embedding")
+
+  private def minhashServed(p: String): Set[Long] = TextDedup
+    .minhashProbeIndexed(spark, p, texts(Seq(1L))
+      .withColumn("doc_id", lit(100L)), "doc_id", "text", 0.9)
+    .select(col("corpus_id").cast("long")).as[Long].collect().toSet
+
+  private def bm25Served(p: String): Set[Long] = {
+    val got = Retrieval
+      .bm25TopKIndexed(spark, p, "doc_id", Seq((1L, "alpha")), k = 5)
+      .select(col("doc_id")).as[Long].collect().toSet
+    Retrieval.releaseCaches()
+    got
   }
+
+  /** The ANN top-3 for a direction-1 query; `nearOnly` keeps only the
+    * near-exact neighbours (cosine > 0.99), i.e. vector 1 alone. */
+  private def neighbours(top: DataFrame, nearOnly: Boolean): Set[Long] =
+    (if (nearOnly) top.filter(col("cosine") > 0.99) else top)
+      .select(col("neighbor_id").cast("long")).as[Long].collect().toSet
+
+  private def ivfPqServed(p: String, nearOnly: Boolean): Set[Long] =
+    neighbours(Similarity.ivfPqTopKIndexed(spark, p, qVec, "vec_id",
+      "embedding", k = 3, nProbe = 2), nearOnly)
+
+  private def hnswServed(p: String, nearOnly: Boolean): Set[Long] =
+    neighbours(Hnsw.hnswTopKIndexed(spark, p, qVec, "vec_id", "embedding",
+      k = 3, efSearch = 24), nearOnly)
+
+  private lazy val families = Seq(
+    Family("minhash", "doc_id", Seq(1L, 2L, 3L), texts,
+      save = (df, p) => TextDedup.saveMinhashIndex(df, "doc_id", "text", p,
+        numHashes = 16, bands = 8),
+      append = (df, p) => TextDedup.appendMinhashIndex(df, "doc_id", "text", p),
+      served = minhashServed, servedAll = minhashServed,
+      handle = TextDedup.minhashIndex, component = "bands"),
+    Family("ivfpq", "vec_id", vectorIds, vectors,
+      save = (df, p) => Similarity.saveIvfPqIndex(df, "vec_id", "embedding",
+        p, nCells = 2, m = 4, k = 4, iterations = 2),
+      append = (df, p) => Similarity.appendIvfPqIndex(df, "vec_id",
+        "embedding", p),
+      served = ivfPqServed(_, nearOnly = true),
+      servedAll = ivfPqServed(_, nearOnly = false),
+      handle = Similarity.ivfPqIndex, component = "codes"),
+    Family("hnsw", "vec_id", vectorIds, vectors,
+      save = (df, p) => Hnsw.saveHnswIndex(df, "vec_id", "embedding", p,
+        m = 4, efConstruction = 24, nShards = 2),
+      append = (df, p) => Hnsw.appendHnswIndex(df, "vec_id", "embedding", p),
+      served = hnswServed(_, nearOnly = true),
+      servedAll = hnswServed(_, nearOnly = false),
+      handle = Hnsw.hnswIndex, component = "nodes"),
+    Family("bm25", "doc_id", Seq(1L, 2L, 3L), texts,
+      save = (df, p) => Retrieval.saveBm25Index(df, "doc_id", "text", p,
+        nBuckets = 4),
+      append = (df, p) => Retrieval.appendBm25Index(df, "doc_id", "text", p),
+      served = bm25Served, servedAll = bm25Served,
+      handle = Retrieval.bm25Index, component = "postings"))
+
+  private def fresh(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
 
   test("the four index families share one delete lifecycle: tombstone " +
     "excludes (re-append stays dead), compact erases + clears, " +
     "fresh append resurrects") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_idxdel").toString
-
-    // --- MinHash ---------------------------------------------------
-    val mh = s"$base/minhash"
-    val doc1 = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"))
-      .toDF("doc_id", "text")
-    val docsMh = doc1.unionByName(Seq(
-      (2L, "a completely different sentence about spark physical plans"),
-      (3L, "yet another unrelated string of words for the index test"))
-      .toDF("doc_id", "text"))
-    TextDedup.saveMinhashIndex(docsMh, "doc_id", "text", mh,
-      numHashes = 16, bands = 8)
-    val probeMh = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog again and again"))
-      .toDF("doc_id", "text")
-    lifecycle("minhash",
-      served = () => TextDedup
-        .minhashProbeIndexed(spark, mh, probeMh, "doc_id", "text", 0.9)
-        .select(col("corpus_id").cast("long")).as[Long].collect().toSet,
-      tombstone = () => TextDedup
-        .tombstoneMinhashIndex(Seq(1L).toDF("doc_id"), "doc_id", mh),
-      reAppend = () => TextDedup
-        .appendMinhashIndex(doc1, "doc_id", "text", mh),
-      compact = () => TextDedup.compactMinhashIndex(spark, mh),
-      tombstonesDir = s"$mh/tombstones")
-
-    // --- IVF-PQ ----------------------------------------------------
-    val ann = s"$base/ivfpq"
-    def oneHot(d: Int, m: Float): Array[Float] =
-      Array.tabulate(8)(i => if (i == d % 8) m else 0f)
-    val vec1 = Seq((1L, oneHot(1, 2f))).toDF("vec_id", "embedding")
-    val corpusAnn = vec1.unionByName(
-      // i % 8 == 1 excluded: doc 1 must be the ONLY direction-1 vector
-      (2 to 24).filter(_ % 8 != 1)
-        .map(i => (i.toLong, oneHot(i, 1f + (i % 3))))
-        .toDF("vec_id", "embedding"))
-    Similarity.saveIvfPqIndex(corpusAnn, "vec_id", "embedding", ann,
-      nCells = 2, m = 4, k = 4, iterations = 2)
-    val qAnn = Seq((200L, oneHot(1, 5f))).toDF("vec_id", "embedding")
-    lifecycle("ivfpq",
-      served = () => Similarity
-        .ivfPqTopKIndexed(spark, ann, qAnn, "vec_id", "embedding",
-          k = 3, nProbe = 2)
-        .filter(col("cosine") > 0.99)
-        .select(col("neighbor_id").cast("long")).as[Long].collect().toSet,
-      tombstone = () => Similarity
-        .tombstoneIvfPqIndex(Seq(1L).toDF("vec_id"), "vec_id", ann),
-      reAppend = () => Similarity
-        .appendIvfPqIndex(vec1, "vec_id", "embedding", ann),
-      compact = () => Similarity.compactIvfPqIndex(spark, ann),
-      tombstonesDir = s"$ann/tombstones")
-
-    // --- HNSW (the 4th family, persisted face new in r11) -----------
-    val hn = s"$base/hnsw"
-    val hnVec1 = Seq((1L, oneHot(1, 2f))).toDF("vec_id", "embedding")
-    val corpusHn = hnVec1.unionByName(
-      (2 to 24).filter(_ % 8 != 1)
-        .map(i => (i.toLong, oneHot(i, 1f + (i % 3))))
-        .toDF("vec_id", "embedding"))
-    graft.ops.Hnsw.saveHnswIndex(corpusHn, "vec_id", "embedding", hn,
-      m = 4, efConstruction = 24, nShards = 2)
-    val qHn = Seq((200L, oneHot(1, 5f))).toDF("vec_id", "embedding")
-    lifecycle("hnsw",
-      served = () => graft.ops.Hnsw
-        .hnswTopKIndexed(spark, hn, qHn, "vec_id", "embedding",
-          k = 3, efSearch = 24)
-        .filter(col("cosine") > 0.99)
-        .select(col("neighbor_id")).as[Long].collect().toSet,
-      tombstone = () => graft.ops.Hnsw
-        .tombstoneHnswIndex(Seq(1L).toDF("vec_id"), "vec_id", hn),
-      reAppend = () => graft.ops.Hnsw
-        .appendHnswIndex(hnVec1, "vec_id", "embedding", hn),
-      compact = () => graft.ops.Hnsw.compactHnswIndex(spark, hn),
-      tombstonesDir = s"$hn/tombstones")
-
-    // --- BM25 ------------------------------------------------------
-    val bm = s"$base/bm25"
-    val bmDoc1 = Seq((1L, "alpha beta gamma alpha")).toDF("doc_id", "text")
-    val docsBm = bmDoc1.unionByName(Seq(
-      (2L, "delta epsilon zeta"),
-      (3L, "eta theta iota kappa")).toDF("doc_id", "text"))
-    Retrieval.saveBm25Index(docsBm, "doc_id", "text", bm, nBuckets = 4)
-    lifecycle("bm25",
-      served = () => {
-        val got = Retrieval
-          .bm25TopKIndexed(spark, bm, "doc_id", Seq((1L, "alpha")), k = 5)
-          .select(col("doc_id")).as[Long].collect().toSet
-        Retrieval.releaseCaches()
-        got
-      },
-      tombstone = () => Retrieval
-        .tombstoneBm25Index(Seq(1L).toDF("doc_id"), "doc_id", bm),
-      reAppend = () => Retrieval
-        .appendBm25Index(bmDoc1, "doc_id", "text", bm),
-      compact = () => Retrieval.compactBm25Index(spark, bm),
-      tombstonesDir = s"$bm/tombstones")
+    val base = fresh("idxdel")
+    families.foreach { f =>
+      val dir = s"$base/${f.name}"
+      f.save(f.rows(f.corpus), dir)
+      val doc1 = f.rows(Seq(1L))
+      assert(f.served(dir) == Set(1L), s"${f.name}: baseline must serve doc 1")
+      f.handle(dir).tombstone(Seq(1L).toDF(f.idCol), f.idCol)
+      assert(!f.served(dir).contains(1L), s"${f.name}: tombstoned id still served")
+      f.append(doc1, dir)
+      assert(!f.served(dir).contains(1L),
+        s"${f.name}: re-appended id must stay dead while its tombstone stands")
+      f.handle(dir).compact(spark)
+      assert(!exists(s"$dir/tombstones"),
+        s"${f.name}: compaction must clear the tombstone list")
+      assert(!f.served(dir).contains(1L),
+        s"${f.name}: physically erased id surfaced post-compaction")
+      f.append(doc1, dir)
+      assert(f.served(dir) == Set(1L),
+        s"${f.name}: a fresh append after compaction must resurrect the id")
+    }
   }
 
   test("bm25 compaction is probe-identical to a rebuild on the purged " +
@@ -168,8 +164,8 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
     val queries = Seq((1L, "alpha beta"), (2L, "delta zeta"))
     val live = s"$base/live"
     Retrieval.saveBm25Index(docs, "doc_id", "text", live, nBuckets = 4)
-    Retrieval.tombstoneBm25Index(Seq(2L, 4L).toDF("doc_id"), "doc_id", live)
-    Retrieval.compactBm25Index(spark, live)
+    Retrieval.bm25Index(live).tombstone(Seq(2L, 4L).toDF("doc_id"), "doc_id")
+    Retrieval.bm25Index(live).compact(spark)
     val rebuilt = s"$base/rebuilt"
     Retrieval.saveBm25Index(docs.filter(!col("doc_id").isin(2L, 4L)),
       "doc_id", "text", rebuilt, nBuckets = 4)
@@ -206,8 +202,8 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
     val dlP = new org.apache.hadoop.fs.Path(s"$base/doclens")
     dlP.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(dlP, true)
-    Retrieval.tombstoneBm25Index(Seq(2L).toDF("doc_id"), "doc_id", base)
-    Retrieval.compactBm25Index(spark, base) // must not throw
+    Retrieval.bm25Index(base).tombstone(Seq(2L).toDF("doc_id"), "doc_id")
+    Retrieval.bm25Index(base).compact(spark) // must not throw
     val served = Retrieval
       .bm25TopKIndexed(spark, base, "doc_id", Seq((1L, "alpha beta")), k = 5)
       .select(col("doc_id")).as[Long].collect().toSet
@@ -227,6 +223,27 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$base/doclens")))
   }
 
+  test("a bm25 id column may share a name with the terms/ table's df: " +
+    "the handle finds it in postings and doclens") {
+    val base = fresh("bm25_dfid")
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma"), (3L, "gamma"))
+      .toDF("df", "text")
+    Retrieval.saveBm25Index(docs, "df", "text", base, nBuckets = 2)
+    val h = Retrieval.bm25Index(base)
+    assert(h.anyLive(Seq(2L).toDF("id"), "id"))
+    h.tombstone(Seq(2L).toDF("id"), "id")
+    h.compact(spark)
+    def roster = spark.read.parquet(s"$base/doclens")
+      .select(col("df")).as[Long].collect().toSet
+    assert(roster == Set(1L, 3L))
+    h.tombstone(Seq(1L, 3L).toDF("id"), "id")
+    h.compact(spark)
+    assert(roster.isEmpty && !exists(s"$base/tombstones"))
+    val empty = Retrieval.bm25TopKIndexed(spark, base, "df",
+      Seq((1L, "alpha")), k = 5)
+    assert(empty.isEmpty && empty.columns.toSeq == Seq("qid", "df", "score"))
+  }
+
   test("forgetEverywhere with compactIndexes = false: probes are clean " +
     "immediately, tombstones stand until maintenance compacts") {
     import graft.sources.SnapshotStore
@@ -241,7 +258,8 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
       s"$base/bm", nBuckets = 2)
     val v = SnapshotStore.forgetEverywhere(
       Seq(2L).toDF("id"), s"$base/cat", Map("docs" -> "doc_id"),
-      bm25Indexes = Seq(s"$base/bm"), compactIndexes = false)
+      indexes = Seq(Retrieval.bm25Index(s"$base/bm")),
+      compactIndexes = false)
     assert(v >= 2L)
     // catalog flipped atomically to the purged state
     assert(SnapshotStore.readTable(spark, s"$base/cat", "docs")
@@ -255,7 +273,7 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
     // ...and the physical erase is still owed to maintenance
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$base/bm/tombstones")))
-    graft.ops.Retrieval.compactBm25Index(spark, s"$base/bm")
+    Retrieval.bm25Index(s"$base/bm").compact(spark)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$base/bm/tombstones")))
   }
@@ -278,14 +296,16 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
     // run 1 DEFERS compaction: tombstones stand, data files keep the id
     SnapshotStore.forgetEverywhere(
       Seq(2L).toDF("id"), s"$base/cat", Map("docs" -> "doc_id"),
-      minhashIndexes = Seq(s"$base/mh"), bm25Indexes = Seq(s"$base/bm"),
+      indexes = Seq(TextDedup.minhashIndex(s"$base/mh"),
+        Retrieval.bm25Index(s"$base/bm")),
       compactIndexes = false)
     assert(exists(s"$base/bm/tombstones"))
     // run 2 with compaction: the id is still IN the data tables
     // (deferred), so anyLive reads it as live and the erase COMPLETES
     SnapshotStore.forgetEverywhere(
       Seq(2L).toDF("id"), s"$base/cat", Map("docs" -> "doc_id"),
-      minhashIndexes = Seq(s"$base/mh"), bm25Indexes = Seq(s"$base/bm"))
+      indexes = Seq(TextDedup.minhashIndex(s"$base/mh"),
+        Retrieval.bm25Index(s"$base/bm")))
     assert(!exists(s"$base/bm/tombstones"), "deferred erase not completed")
     assert(!exists(s"$base/mh/tombstones"))
     def fileState(p: String): Set[(String, Long)] = {
@@ -299,7 +319,8 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
     // live — no tombstone dirs appear, no index file is rewritten
     SnapshotStore.forgetEverywhere(
       Seq(2L).toDF("id"), s"$base/cat", Map("docs" -> "doc_id"),
-      minhashIndexes = Seq(s"$base/mh"), bm25Indexes = Seq(s"$base/bm"))
+      indexes = Seq(TextDedup.minhashIndex(s"$base/mh"),
+        Retrieval.bm25Index(s"$base/bm")))
     assert(!exists(s"$base/bm/tombstones") && !exists(s"$base/mh/tombstones"),
       "re-run wrote tombstones for absent ids")
     assert(fileState(s"$base/mh/sets") == mhSets,
@@ -317,197 +338,65 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
   test("compacting a FULLY tombstoned index leaves a valid empty layout " +
     "in every family: compaction completes (twice), probes answer " +
     "empty, a fresh append resurrects service (r10 advice)") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_idxempty").toString
-
-    // --- BM25: the advice's named case — partitioned zero-row
-    // rewrites leave no inferable files, and the terms/stats
-    // recompute must not abort midway
-    val bm = s"$base/bm25"
-    val bmDocs = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon"))
-      .toDF("doc_id", "text")
-    Retrieval.saveBm25Index(bmDocs, "doc_id", "text", bm, nBuckets = 2)
-    Retrieval.tombstoneBm25Index(Seq(1L, 2L).toDF("doc_id"), "doc_id", bm)
-    Retrieval.compactBm25Index(spark, bm)
-    assert(!exists(s"$bm/tombstones"))
-    assert(!exists(s"$bm/postings.__compact") &&
-      !exists(s"$bm/terms.__compact"),
-      "compaction must not strand .__compact dirs")
-    def bmServed(): Set[Long] = {
-      val got = Retrieval
-        .bm25TopKIndexed(spark, bm, "doc_id", Seq((1L, "alpha")), k = 5)
-        .select(col("doc_id")).as[Long].collect().toSet
-      Retrieval.releaseCaches()
-      got
+    val base = fresh("idxempty")
+    families.foreach { f =>
+      // partitioned zero-row rewrites leave no inferable files, and a
+      // multi-component recompute (BM25 terms/stats) must not abort
+      // midway
+      val dir = s"$base/${f.name}"
+      f.save(f.rows(f.corpus), dir)
+      f.handle(dir).tombstone(f.corpus.toDF(f.idCol), f.idCol)
+      f.handle(dir).compact(spark)
+      assert(!exists(s"$dir/tombstones"), f.name)
+      assert(!new java.io.File(dir).list().exists(_.endsWith(".__compact")),
+        s"${f.name}: compaction must not strand .__compact dirs")
+      assert(f.servedAll(dir).isEmpty,
+        s"${f.name}: empty index must answer empty, not crash")
+      // compacting the ALREADY-empty index is a no-op, not a crash
+      f.handle(dir).compact(spark)
+      f.append(f.rows(Seq(1L)), dir)
+      assert(f.servedAll(dir) == Set(1L),
+        s"${f.name}: append into the empty layout must serve")
     }
-    assert(bmServed().isEmpty, "empty index must answer empty, not crash")
-    // compacting the ALREADY-empty index is a no-op, not a crash
-    Retrieval.compactBm25Index(spark, bm)
-    Retrieval.appendBm25Index(
-      Seq((5L, "alpha alpha")).toDF("doc_id", "text"), "doc_id", "text", bm)
-    assert(bmServed() == Set(5L), "append into the empty layout must serve")
-
-    // --- MinHash ---------------------------------------------------
-    val mh = s"$base/minhash"
-    val mhDocs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog tonight"),
-      (2L, "a different sentence about catalyst physical planning"))
-      .toDF("doc_id", "text")
-    TextDedup.saveMinhashIndex(mhDocs, "doc_id", "text", mh,
-      numHashes = 16, bands = 8)
-    TextDedup.tombstoneMinhashIndex(Seq(1L, 2L).toDF("doc_id"),
-      "doc_id", mh)
-    TextDedup.compactMinhashIndex(spark, mh)
-    assert(!exists(s"$mh/tombstones"))
-    val probeMh = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog tonight"))
-      .toDF("doc_id", "text")
-    def mhServed(): Set[Long] = TextDedup
-      .minhashProbeIndexed(spark, mh, probeMh, "doc_id", "text", 0.9)
-      .select(col("corpus_id").cast("long")).as[Long].collect().toSet
-    assert(mhServed().isEmpty)
-    TextDedup.compactMinhashIndex(spark, mh) // already-empty: no-op
-    TextDedup.appendMinhashIndex(
-      mhDocs.filter(col("doc_id") === 1L), "doc_id", "text", mh)
-    assert(mhServed() == Set(1L))
-
-    // --- IVF-PQ ----------------------------------------------------
-    val ann = s"$base/ivfpq"
-    def oneHot(d: Int, m: Float): Array[Float] =
-      Array.tabulate(8)(i => if (i == d % 8) m else 0f)
-    val corpusAnn = (1 to 16).map(i => (i.toLong, oneHot(i, 1f + (i % 3))))
-      .toDF("vec_id", "embedding")
-    Similarity.saveIvfPqIndex(corpusAnn, "vec_id", "embedding", ann,
-      nCells = 2, m = 4, k = 4, iterations = 2)
-    Similarity.tombstoneIvfPqIndex(
-      (1 to 16).map(_.toLong).toDF("vec_id"), "vec_id", ann)
-    Similarity.compactIvfPqIndex(spark, ann)
-    assert(!exists(s"$ann/tombstones"))
-    val qAnn = Seq((200L, oneHot(1, 5f))).toDF("vec_id", "embedding")
-    def annServed(): Set[Long] = Similarity
-      .ivfPqTopKIndexed(spark, ann, qAnn, "vec_id", "embedding",
-        k = 3, nProbe = 2)
-      .select(col("neighbor_id").cast("long")).as[Long].collect().toSet
-    assert(annServed().isEmpty)
-    Similarity.compactIvfPqIndex(spark, ann) // already-empty: no-op
-    Similarity.appendIvfPqIndex(
-      Seq((1L, oneHot(1, 2f))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", ann)
-    assert(annServed() == Set(1L))
-
-    // --- HNSW --------------------------------------------------------
-    val hn = s"$base/hnsw"
-    val corpusHn = (1 to 12).map(i => (i.toLong, oneHot(i, 1f + (i % 3))))
-      .toDF("vec_id", "embedding")
-    graft.ops.Hnsw.saveHnswIndex(corpusHn, "vec_id", "embedding", hn,
-      m = 4, efConstruction = 24, nShards = 2)
-    graft.ops.Hnsw.tombstoneHnswIndex(
-      (1 to 12).map(_.toLong).toDF("vec_id"), "vec_id", hn)
-    graft.ops.Hnsw.compactHnswIndex(spark, hn)
-    assert(!exists(s"$hn/tombstones"))
-    val qHn = Seq((200L, oneHot(1, 5f))).toDF("vec_id", "embedding")
-    def hnServed(): Set[Long] = graft.ops.Hnsw
-      .hnswTopKIndexed(spark, hn, qHn, "vec_id", "embedding",
-        k = 3, efSearch = 24)
-      .select(col("neighbor_id")).as[Long].collect().toSet
-    assert(hnServed().isEmpty)
-    graft.ops.Hnsw.compactHnswIndex(spark, hn) // already-empty: no-op
-    graft.ops.Hnsw.appendHnswIndex(
-      Seq((1L, oneHot(1, 2f))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", hn)
-    assert(hnServed() == Set(1L))
   }
 
   test("a MISSING index component is LOUD in every family — never " +
     "'validly empty': the swap-crash recovery state must not serve " +
     "zero rows or let a compaction discard the purge intent") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_idxmissing").toString
-    def mv(from: String, to: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(from)
+    val base = fresh("idxmissing")
+    families.foreach { f =>
+      val dir = s"$base/${f.name}"
+      f.save(f.rows(f.corpus), dir)
+      f.handle(dir).tombstone(Seq(1L).toDF(f.idCol), f.idCol)
+      // the component parked at .__old: the atomicSwap crash shape
+      val p = new org.apache.hadoop.fs.Path(s"$dir/${f.component}")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fs.rename(p, new org.apache.hadoop.fs.Path(to)))
-    }
-    // BM25: postings parked at .__old (atomicSwap crash shape)
-    val bm = s"$base/bm"
-    Retrieval.saveBm25Index(Seq((1L, "alpha beta")).toDF("doc_id", "text"),
-      "doc_id", "text", bm, nBuckets = 2)
-    mv(s"$bm/postings", s"$bm/postings.__old")
-    intercept[IllegalStateException] {
-      Retrieval.bm25TopKIndexed(spark, bm, "doc_id",
-        Seq((1L, "alpha")), k = 5).collect()
-    }
-    // IVF-PQ: a missing codes dir must NOT let compaction delete the
-    // tombstone list (the silent-lost-purge shape)
-    val ann = s"$base/ann"
-    Similarity.saveIvfPqIndex(
-      (1 to 8).map(i => (i.toLong, Array.tabulate(4)(j =>
-        if (j == i % 4) 1f else 0f))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", ann, nCells = 2, m = 2, k = 2)
-    Similarity.tombstoneIvfPqIndex(Seq(1L).toDF("vec_id"), "vec_id", ann)
-    mv(s"$ann/codes", s"$ann/codes.__old")
-    intercept[IllegalStateException] {
-      Similarity.compactIvfPqIndex(spark, ann)
-    }
-    assert(exists(s"$ann/tombstones"),
-      "the purge intent must survive a refused compaction")
-    // MinHash: bands parked aside — probes are loud
-    val mh = s"$base/mh"
-    TextDedup.saveMinhashIndex(
-      Seq((1L, "alpha beta gamma delta epsilon zeta"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", mh, numHashes = 16, bands = 8)
-    mv(s"$mh/bands", s"$mh/bands.__old")
-    intercept[IllegalStateException] {
-      TextDedup.minhashProbeIndexed(spark, mh,
-        Seq((9L, "alpha beta gamma delta epsilon zeta"))
-          .toDF("doc_id", "text"),
-        "doc_id", "text", 0.8).collect()
+      assert(fs.rename(p, new org.apache.hadoop.fs.Path(s"$p.__old")))
+      intercept[IllegalStateException](f.served(dir))
+      intercept[IllegalStateException](f.handle(dir).compact(spark))
+      assert(exists(s"$dir/tombstones"),
+        s"${f.name}: the purge intent must survive a refused compaction")
     }
   }
 
   test("non-integral ids are refused LOUDLY at save and tombstone time " +
     "in every family — never a silent purge no-op (r10 advice, medium)") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_idxtype").toString
-    val strDocs = Seq(("a", "alpha beta")).toDF("doc_id", "text")
-    val strVecs = Seq(("a", Array(1f, 0f))).toDF("vec_id", "embedding")
-    val strIds = Seq("a").toDF("doc_id")
-    // save: an index a purge could never reach must not be buildable
-    intercept[IllegalArgumentException] {
-      Retrieval.saveBm25Index(strDocs, "doc_id", "text", s"$base/bm")
-    }
-    intercept[IllegalArgumentException] {
-      TextDedup.saveMinhashIndex(strDocs, "doc_id", "text", s"$base/mh")
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.saveIvfPqIndex(strVecs, "vec_id", "embedding",
-        s"$base/ann", nCells = 2)
-    }
-    // tombstone: a purge id that would cast to null must be refused,
-    // not written as a tombstone that matches nothing
-    val bm = s"$base/bm_ok"
-    Retrieval.saveBm25Index(Seq((1L, "alpha")).toDF("doc_id", "text"),
-      "doc_id", "text", bm, nBuckets = 2)
-    intercept[IllegalArgumentException] {
-      Retrieval.tombstoneBm25Index(strIds, "doc_id", bm)
-    }
-    val mh = s"$base/mh_ok"
-    TextDedup.saveMinhashIndex(
-      Seq((1L, "alpha beta gamma delta epsilon zeta"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", mh, numHashes = 16, bands = 8)
-    intercept[IllegalArgumentException] {
-      TextDedup.tombstoneMinhashIndex(strIds, "doc_id", mh)
-    }
-    val ann = s"$base/ann_ok"
-    Similarity.saveIvfPqIndex(
-      (1 to 8).map(i => (i.toLong, Array.tabulate(4)(j =>
-        if (j == i % 4) 1f else 0f))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", ann, nCells = 2, m = 2, k = 2)
-    intercept[IllegalArgumentException] {
-      Similarity.tombstoneIvfPqIndex(Seq("a").toDF("vec_id"),
-        "vec_id", ann)
+    val base = fresh("idxtype")
+    families.foreach { f =>
+      val dir = s"$base/${f.name}"
+      val strRows = f.rows(Seq(1L)).withColumn(f.idCol, lit("a"))
+      // save: an index a purge could never reach must not be buildable
+      intercept[IllegalArgumentException](f.save(strRows, s"$dir.bad"))
+      f.save(f.rows(f.corpus), dir)
+      // append: string ids landing beside long ones would break every
+      // later read of the component with a parquet type mismatch
+      intercept[IllegalArgumentException](f.append(strRows, dir))
+      // tombstone: a purge id that would cast to null must be refused,
+      // not written as a tombstone that matches nothing
+      intercept[IllegalArgumentException](
+        f.handle(dir).tombstone(Seq("a").toDF(f.idCol), f.idCol))
+      assert(f.served(dir) == Set(1L),
+        s"${f.name}: a refused call must leave the index serving")
     }
   }
 }

@@ -159,6 +159,27 @@ class MatcherMergerSpec extends SparkSpec {
     assert(symm.getMessage.contains("3 symmetric matches"))
   }
 
+  test("the default orientation keeps the symmetric count at zero only " +
+    "for a single group: two groups can chain duplicates") {
+    // phone: 3 → 2; email: 2 → 1. Each group alone is oriented
+    // ($T < $S), but across groups row 2 is both a target and a
+    // duplicate — one symmetric match. No row matches itself.
+    val t = Seq((1L, "p", "x"), (2L, "q", "x"), (3L, "q", "y"))
+      .toDF("id", "phone", "email")
+    val spec = MergeSpec(matchSpec = MatchSpec(
+      Seq(ExactGroup.onColumns("phone"), ExactGroup.onColumns("email")),
+      targetPk = "id"))
+    assert(DedupAudit.audit(t, spec) ==
+      DedupAuditReport(3, Map(1 -> 1L, 2 -> 1L), 0, 1))
+    val e = intercept[IllegalArgumentException](Deduper.dedup(t, spec))
+    assert(e.getMessage.contains("1 symmetric matches"))
+    // unchecked, both 2 and 3 are folded away: only 1 survives
+    val unchecked = Deduper.dedup(t, spec, enforceInvariants = false)
+    assert(unchecked.newTable.as[(Long, String, String)].collect().toSeq ==
+      Seq((1L, "p", "x")))
+    unchecked.unpersist()
+  }
+
   test("dedup refuses fuzzy columns in both the audit and the dedup") {
     // the fuzzy pass has no orientation: 3 and 4 (unmatched by k) would
     // each match themselves at distance 0

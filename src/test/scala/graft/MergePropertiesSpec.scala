@@ -232,6 +232,8 @@ class MergePropertiesSpec extends SparkSpec {
       val b = general.newTable.select("id", "k", "v")
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"round $r")
       assert(fast.duplicates.count() == general.duplicates.count(), s"round $r")
+      assert(fast.duplicates.columns.toSeq == general.duplicates.columns.toSeq,
+        s"round $r")
     }
   }
 }

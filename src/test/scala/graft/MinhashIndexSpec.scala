@@ -50,8 +50,8 @@ class MinhashIndexSpec extends SparkSpec {
     TextDedup.saveMinhashIndex(corpus, "doc_id", "text", dir)
     // kill docs 0-9; near-copies of them must stop linking while
     // near-copies of live docs keep linking through every probe path
-    TextDedup.tombstoneMinhashIndex(
-      (0 until 10).map(_.toLong).toDF("doc_id"), "doc_id", dir)
+    TextDedup.minhashIndex(dir).tombstone(
+      (0 until 10).map(_.toLong).toDF("doc_id"), "doc_id")
     def run(maxBloomKeys: Long, pushdownLimit: Long) =
       TextDedup.minhashProbeIndexed(spark, dir, batch, "doc_id", "text",
         jaccardThreshold = 0.8, maxBloomKeys = maxBloomKeys,
@@ -73,7 +73,7 @@ class MinhashIndexSpec extends SparkSpec {
     // compaction physically erases the dead rows (incl. the re-appended
     // copy of 5), clears the list, and changes NO live answer
     val before = run(10L * 1000 * 1000, TextDedup.pushdownKeyLimit)
-    TextDedup.compactMinhashIndex(spark, dir)
+    TextDedup.minhashIndex(dir).compact(spark)
     assert(run(10L * 1000 * 1000, TextDedup.pushdownKeyLimit) == before)
     val liveIds = spark.read.parquet(s"$dir/sets")
       .select($"doc_id".cast("long")).as[Long].collect().toSet

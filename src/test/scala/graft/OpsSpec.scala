@@ -412,8 +412,8 @@ class OpsSpec extends SparkSpec {
       // tombstone lifecycle: a deleted vector is never returned, its
       // exact-duplicate probe falls to the next-best neighbor
       val deadIds = hits.take(5).map(_._2)
-      Similarity.tombstoneIvfPqIndex(
-        deadIds.toSeq.toDF("vec_id"), "vec_id", dir)
+      Similarity.ivfPqIndex(dir).tombstone(
+        deadIds.toSeq.toDF("vec_id"), "vec_id")
       val afterDel = Similarity.ivfPqTopKIndexed(spark, dir, probes,
         "vec_id", "embedding", k = 1, nProbe = 2)
         .select("neighbor_id").as[Long].collect().toSet
@@ -421,7 +421,7 @@ class OpsSpec extends SparkSpec {
         "a tombstoned vector was returned as a neighbor")
       // compaction erases the rows, clears the list, changes no answer
       val totalBefore = spark.read.parquet(s"$dir/codes").count()
-      Similarity.compactIvfPqIndex(spark, dir)
+      Similarity.ivfPqIndex(dir).compact(spark)
       assert(spark.read.parquet(s"$dir/codes").count() ==
         totalBefore - deadIds.length)
       assert(!new java.io.File(s"$dir/tombstones").exists())
@@ -1025,9 +1025,9 @@ class OpsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     Hnsw.saveHnswIndex(vecs, "vec_id", "embedding", hdir,
       m = 4, efConstruction = 8, nShards = 1)
-    Hnsw.tombstoneHnswIndex(
+    Hnsw.hnswIndex(hdir).tombstone(
       vecs.filter(col("vec_id") % 5 === 0L).select(col("vec_id")),
-      "vec_id", hdir)
+      "vec_id")
     spark.conf.set("graft.hnsw.tombstonePruneBytes", "0")
     val probe = try Hnsw.hnswTopKIndexed(spark, hdir,
       vecs.filter(col("vec_id") === 1L), "vec_id", "embedding",

@@ -141,7 +141,7 @@ class SinkCorpusSpec extends SparkSpec {
     graft.sources.SnapshotStore.commitAll(Map("docs" -> docs), s"$dir/cat")
     graft.sources.SnapshotStore.forgetEverywhere(
       Seq(3L, 7L).toDF("id"), s"$dir/cat", Map("docs" -> "doc_id"),
-      minhashIndexes = Seq(idx),
+      indexes = Seq(graft.ops.TextDedup.minhashIndex(idx)),
       sinkCorpora = Seq((corpus, "doc_id")))
     assert(graft.sources.SnapshotStore.readTable(spark, s"$dir/cat", "docs")
       .select("doc_id").as[Long].collect().toSet ==
