@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is fully evaluated through the
   * `noop` sink (a bare count() would let Catalyst prune the very
@@ -71,14 +69,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Gateway.localSession(cpus.toInt)
     // warmup: session/codegen/parquet-footer costs land here, not on
     // whichever query happens to sort first
     try spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -93,10 +84,7 @@ object Bench {
     // round as a speedup) is shed by whichever window ran clean; a
     // genuinely slower host inflates BOTH windows and still reads true.
     val calibStart = median(Seq.fill(3)(calibrate()))
-    // optional comma-separated query filter for targeted profiling
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val queries = SparkEntry.selected.sortBy(_.name).map(g => g.name -> g.build)
     // reps are interleaved ROUND-ROBIN across queries (rep 1 of all,
     // then rep 2, …), not run consecutively per query: a multi-second
     // host stall used to poison ALL reps of whichever query it landed
@@ -171,7 +159,7 @@ object Bench {
     // a filtered profiling run must never clobber the full-map artifact
     // (a 6-query bench_full.json once shipped exactly that way)
     val artifact =
-      if (only.isDefined) "bench_only.json" else "bench_full.json"
+      if (SparkEntry.only.isDefined) "bench_only.json" else "bench_full.json"
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(artifact),
       (fullJson + "\n").getBytes("UTF-8"))

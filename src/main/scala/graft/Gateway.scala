@@ -147,7 +147,11 @@ object Gateway {
     finally gw.cleanUp()
   }
 
-  /** Local session tuned per the harness contract. */
+  /** Local session tuned per the harness contract: the one builder
+    * every main uses (`Bench`, `Verify` and the tools), so their confs
+    * cannot drift apart. A tool that needs more sets it on the returned
+    * session. `tools.Smoke` alone keeps a vanilla session, the one an
+    * external caller of `SparkEntry.entry` brings. */
   def localSession(cpus: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

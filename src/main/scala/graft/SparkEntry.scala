@@ -1,9911 +1,47 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.operators._
-import graft.ops.{QualityClassifier, Retrieval, Similarity, TextAnalysis, TextDedup, Multimodal}
+import graft.gates._
 
 /**
  * Driver contract — one named query per implemented operator from
  * SURVEY.md §2 (+ the training-data-pipeline extensions), each paired
- * with ANSI SQL in [[SparkEntry.oracleSql]] for the DuckDB oracle.
- *
- * Oracle-parity rules observed throughout:
- *  - aliases match exactly between the Spark result and the SQL;
- *  - double aggregation goes through DECIMAL (exact, order-independent)
- *    before a final cast back to double;
- *  - per-row double arithmetic keeps the same expression tree on both
- *    sides (bit-identical IEEE results);
- *  - array folds (dot products, list sums) use sequential fold order on
- *    both sides;
- *  - every top-k has a deterministic tiebreak.
+ * with ANSI SQL for the DuckDB oracle. Every gate is one [[Gate]] value,
+ * its query and oracle written side by side in a family object under
+ * [[graft.gates]]; this object indexes them.
  */
 object SparkEntry {
 
-  /** Temp-dir disambiguator for the round-trip/write gates: stable
-    * within a run (bench reps overwrite-then-reread the same path) but
-    * distinct across processes, so two concurrent harness runs over the
-    * same data dir cannot race on a shared path, and `dir.hashCode`
-    * collisions across data dirs cannot silently share one. */
-  private def tmpToken(dir: String): String =
-    s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-
-  /** Search workload for the BM25 gate — shared by query, oracle, and
-    * the 10× stress scenario (graft-visible so Stress cannot silently
-    * diverge from the gated workload). */
-  private[graft] val Bm25Queries: Seq[(Long, String)] = Seq(
-    1L -> "spark join merge",
-    2L -> "fast scan filter",
-    3L -> "window agg group")
-
-  /** Pinned dictionary for the keyword-tagging gate — chosen to force
-    * the automaton's interesting transitions on the fixture vocabulary:
-    * a phrase sharing a prefix with a word ("scan"/"scan slow"), a term
-    * that only occurs inside another ("ast" ⊂ "fast"), and a
-    * self-overlapping phrase ("table table"). Shared with the oracle's
-    * VALUES list. */
-  private[graft] val KeywordTagList: Seq[String] =
-    Seq("scan", "scan slow", "table table", "fast", "ast", "a row")
-
-  /** Inferred-schema memo for the fixture tables, keyed by data path.
-    * Every bare `spark.read.parquet` runs one driver footer-inference
-    * job before anything else (profiled: 1–2 such jobs in EVERY gate,
-    * a fixed tax on all 229 of them — the same cost class the index
-    * metadata reads shed in r15 via pinned schemas). A table's schema
-    * is metadata, not data: inferring it once per process and passing
-    * it explicitly is exactly what a catalog-backed table does, and at
-    * production scale it is the difference between one footer job per
-    * QUERY and one per TABLE. The rows are still read from parquet on
-    * every evaluation — nothing about the data is memoized. */
-  private val tSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      // events.ts has shipped as both parquet TIMESTAMP(NANOS) (which
-      // Spark 4 only reads as a long under
-      // spark.sql.legacy.parquet.nanosAsLong) and plain TIMESTAMP
-      // (MICROS); adapt on the column's resolved type rather than
-      // assuming either fixture layout. Either way the result is the
-      // session-zoned microsecond timestamp DuckDB sees (UTC session,
-      // so the NTZ→TZ cast is wall-clock-identical). The conf is set
-      // BEFORE the memoized inference so the cached schema is the one
-      // that conf produces (LongType for a NANOS fixture).
-      if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.schema(tSchema(s, dir, name))
-        .parquet(s"$dir/$name.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-        case _ => raw
-      }
-    } else s.read.schema(tSchema(s, dir, name))
-      .parquet(s"$dir/$name.parquet")
-
-  private def tSchema(s: SparkSession, dir: String,
-                      name: String): org.apache.spark.sql.types.StructType =
-    tSchemas.computeIfAbsent(s"$dir/$name.parquet",
-      p => s.read.parquet(p).schema)
-
-  // ---- shared builders ---------------------------------------------------
-
-  /** Synthetic (item, annotator, label) rating table for the
-    * annotation-consolidation gates — events folded so items collect
-    * several raters with genuinely mixed labels. */
-  private def annotations(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .filter(col("event_id").isNotNull && col("user_id").isNotNull &&
-        col("event_type").isNotNull)
-      .select((col("event_id") % 500).as("item"),
-        (col("user_id") % 11).as("annot"),
-        col("event_type").as("label"))
-
-  /** Conformed per-user source for the merge family (events → customer
-    * shape), with working_source_id preset to the natural key so insert
-    * pk generation is deterministic. */
-  private def mergeSource(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(
-        min(col("event_id")).as("__min_event"),
-        sum(col("value").cast("decimal(18,2)")).as("__sum_value"))
-      .select(
-        col("user_id").as("c_custkey"),
-        concat(lit("User#"), col("user_id").cast("string")).as("c_name"),
-        (col("__min_event") % 25).cast("int").as("c_nationkey"),
-        col("__sum_value").cast("double").as("c_acctbal"),
-        lit("NEW").as("c_mktsegment"))
-      .withColumn("working_source_id", col("c_custkey"))
-      .withColumn("matched_custkey", lit(null).cast("long"))
-
-  private def mergeTarget(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer").filter(col("c_custkey") < 100)
-
-  private def mergeSpecBase = MergeSpec(
-    matchSpec = MatchSpec(
-      groups = Seq(ExactGroup.onColumns("c_custkey")),
-      targetPk = "c_custkey"),
-    preservedColumns = Seq("c_mktsegment"),
-    mergeExpressions = Map("c_acctbal" -> "$T + $S"),
-    insertExpressions = Map("c_mktsegment" -> "'NEW'"),
-    excludedColumns = Seq("matched_custkey"),
-    returnToSource = Seq(("c_custkey", "matched_custkey")))
-
-  /** Shared oracle CTE prefix for the merge family. */
-  private val mergeOracleCtes: String =
-    """WITH src AS (
-      |  SELECT user_id AS c_custkey,
-      |         'User#' || CAST(user_id AS VARCHAR) AS c_name,
-      |         CAST(min(event_id) % 25 AS INTEGER) AS c_nationkey,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS c_acctbal,
-      |         'NEW' AS c_mktsegment
-      |  FROM events GROUP BY user_id),
-      |tgt AS (SELECT * FROM customer WHERE c_custkey < 100),
-      |upd AS (
-      |  SELECT t.c_custkey,
-      |         CASE WHEN s.c_custkey IS NOT NULL THEN s.c_name ELSE t.c_name END AS c_name,
-      |         CASE WHEN s.c_custkey IS NOT NULL THEN s.c_nationkey ELSE t.c_nationkey END AS c_nationkey,
-      |         CASE WHEN s.c_custkey IS NOT NULL THEN t.c_acctbal + s.c_acctbal ELSE t.c_acctbal END AS c_acctbal,
-      |         t.c_mktsegment
-      |  FROM tgt t LEFT JOIN src s ON t.c_custkey = s.c_custkey),
-      |ins AS (
-      |  SELECT 99 + row_number() OVER (ORDER BY s.c_custkey) AS c_custkey,
-      |         s.c_name, s.c_nationkey, s.c_acctbal,
-      |         'NEW' AS c_mktsegment
-      |  FROM src s LEFT JOIN tgt t ON s.c_custkey = t.c_custkey
-      |  WHERE t.c_custkey IS NULL)
-      |""".stripMargin
-
-  /** Probabilistic-linkage fields shared by gate, oracle and spec:
-    * name agreement within 1 edit (m=0.95, u=0.05), segment equality
-    * (m=0.9, u=0.2). Weight literals derive from ProbLink.weights on
-    * the driver, so the oracle embeds the identical decimals. */
-  private[graft] val ProblinkNameW = ProbLink.weights(0.95, 0.05)
-  private[graft] val ProblinkSegW = ProbLink.weights(0.9, 0.2)
-
-  private def problinkFields = Seq(
-    // banded levenshtein: the 3-arg form early-exits above the bound
-    // (O(len·k) instead of the full DP table) and returns -1 there, so
-    // ">= 0" IS "distance <= 1" — the oracle's plain `<= 1` agrees
-    ProbLink.LinkField("name", 0.95, 0.05, "name", "c_name",
-      (s, t) => levenshtein(s, t, 1) >= 0),
-    ProbLink.LinkField("seg", 0.9, 0.2, "seg", "c_mktsegment",
-      (s, t) => s === t))
-
-  /** Blocked, scored candidate pairs for the probabilistic-linkage
-    * family: source = every 4th customer with a deterministic
-    * SQL-reproducible perturbation (name+X on custkey%3, segment
-    * blanked on custkey%5), target = customer, blocked on nationkey. */
-  private def problinkSrc(s: SparkSession, dir: String,
-                          srcMod: Int): DataFrame =
-    t(s, dir, "customer").filter(col("c_custkey") % srcMod === 0).select(
-      col("c_custkey").as("src_id"), col("c_nationkey"),
-      when(col("c_custkey") % 3 === 0, concat(col("c_name"), lit("X")))
-        .otherwise(col("c_name")).as("name"),
-      when(col("c_custkey") % 5 === 0, lit("UNKNOWN"))
-        .otherwise(col("c_mktsegment")).as("seg"))
-
-  private def problinkTgt(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer").select(col("c_custkey").as("tgt_id"),
-      col("c_nationkey"), col("c_name"), col("c_mktsegment"))
-
-  private def problinkScored(s: SparkSession, dir: String,
-                             srcMod: Int = 8): DataFrame =
-    ProbLink.scorePairs(problinkSrc(s, dir, srcMod), "src_id",
-      problinkTgt(s, dir), "tgt_id",
-      Seq(("c_nationkey", "c_nationkey")), problinkFields)
-
-  /** Graded (multi-level) comparison for the Splink-model gate: exact
-    * name beats within-1-edit beats else; segment stays two-level. */
-  private[graft] val ProblinkGradedName = ProbLink.GradedField(
-    "name", "name", "c_name", Seq(
-      ProbLink.LinkLevel("exact", 0.7, 0.02, (s, t) => s === t),
-      ProbLink.LinkLevel("close", 0.25, 0.05,
-        (s, t) => levenshtein(s, t, 1) >= 0)))
-  private[graft] val ProblinkGradedSeg = ProbLink.GradedField(
-    "seg", "seg", "c_mktsegment", Seq(
-      ProbLink.LinkLevel("eq", 0.9, 0.2, (s, t) => s === t)))
-
-  /** DuckDB oracle for the probabilistic-linkage gates; the weight
-    * decimals interpolate from the SAME driver-side ProbLink.weights
-    * call the Spark plan uses, so both engines add identical literals. */
-  private def problinkOracle(best: Boolean): String = {
-    val (nA, nD) = ProblinkNameW
-    val (sA, sD) = ProblinkSegW
-    val ctes =
-      s"""WITH src AS (
-         | SELECT c_custkey AS src_id, c_nationkey,
-         |  CASE WHEN c_custkey % 3 = 0 THEN c_name || 'X' ELSE c_name END AS name,
-         |  CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg
-         | FROM customer WHERE c_custkey % 8 = 0),
-         |p AS (
-         | SELECT s.src_id, t.c_custkey AS tgt_id,
-         |  levenshtein(s.name, t.c_name) <= 1 AS agree_name,
-         |  s.seg = t.c_mktsegment AS agree_seg
-         | FROM src s JOIN customer t ON s.c_nationkey = t.c_nationkey),
-         |w AS (
-         | SELECT src_id, tgt_id, agree_name, agree_seg,
-         |  (CASE WHEN agree_name THEN CAST($nA AS DECIMAL(28,6))
-         |        ELSE CAST($nD AS DECIMAL(28,6)) END +
-         |   CASE WHEN agree_seg THEN CAST($sA AS DECIMAL(28,6))
-         |        ELSE CAST($sD AS DECIMAL(28,6)) END) AS mw
-         | FROM p)
-         |""".stripMargin
-    if (!best)
-      ctes +
-        """SELECT src_id, tgt_id, agree_name, agree_seg,
-          | CAST(mw AS DOUBLE) AS match_weight
-          |FROM w""".stripMargin
-    else
-      ctes +
-        """SELECT src_id, tgt_id, CAST(mw AS DOUBLE) AS match_weight
-          |FROM (SELECT src_id, tgt_id, mw,
-          |       row_number() OVER (PARTITION BY src_id
-          |                          ORDER BY mw DESC, tgt_id) AS rn
-          |      FROM w WHERE mw >= 0)
-          |WHERE rn = 1""".stripMargin
-  }
-
-  /** Oracle for q_er_resolve: every blocked source, left-joined to its
-    * best accepted link (same CTEs as the best-gate oracle). */
-  private def problinkResolveOracle: String =
-    problinkOracle(best = true).replace(
-      """SELECT src_id, tgt_id, CAST(mw AS DOUBLE) AS match_weight
-        |FROM (SELECT src_id, tgt_id, mw,
-        |       row_number() OVER (PARTITION BY src_id
-        |                          ORDER BY mw DESC, tgt_id) AS rn
-        |      FROM w WHERE mw >= 0)
-        |WHERE rn = 1""".stripMargin,
-      """, b AS (
-        | SELECT src_id, tgt_id, mw
-        | FROM (SELECT src_id, tgt_id, mw,
-        |        row_number() OVER (PARTITION BY src_id
-        |                           ORDER BY mw DESC, tgt_id) AS rn
-        |       FROM w WHERE mw >= 6)
-        | WHERE rn = 1)
-        |SELECT s.src_id, b.tgt_id, CAST(b.mw AS DOUBLE) AS match_weight
-        |FROM (SELECT DISTINCT src_id FROM w) s
-        |LEFT JOIN b ON s.src_id = b.src_id""".stripMargin)
-
-  /** DuckDB oracle for the graded-comparison gate — level weights
-    * interpolate from the SAME gradedWeights call the plan uses. */
-  private def problinkGradedOracle: String = {
-    val nw = ProbLink.gradedWeights(ProblinkGradedName)
-    val sw = ProbLink.gradedWeights(ProblinkGradedSeg)
-    s"""WITH src AS (
-       | SELECT c_custkey AS src_id, c_nationkey,
-       |  CASE WHEN c_custkey % 3 = 0 THEN c_name || 'X' ELSE c_name END AS name,
-       |  CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg
-       | FROM customer WHERE c_custkey % 8 = 0),
-       |p AS (
-       | SELECT s.src_id, t.c_custkey AS tgt_id,
-       |  CASE WHEN s.name = t.c_name THEN 0
-       |       WHEN levenshtein(s.name, t.c_name) <= 1 THEN 1
-       |       ELSE 2 END AS level_name,
-       |  CASE WHEN s.seg = t.c_mktsegment THEN 0 ELSE 1 END AS level_seg
-       | FROM src s JOIN customer t ON s.c_nationkey = t.c_nationkey)
-       |SELECT src_id, tgt_id, level_name, level_seg,
-       | CAST(
-       |  CASE level_name WHEN 0 THEN CAST(${nw(0)} AS DECIMAL(28,6))
-       |                  WHEN 1 THEN CAST(${nw(1)} AS DECIMAL(28,6))
-       |                  ELSE CAST(${nw(2)} AS DECIMAL(28,6)) END +
-       |  CASE level_seg WHEN 0 THEN CAST(${sw(0)} AS DECIMAL(28,6))
-       |                 ELSE CAST(${sw(1)} AS DECIMAL(28,6)) END
-       | AS DOUBLE) AS match_weight
-       |FROM p""".stripMargin
-  }
-
-  /** DuckDB oracle for q_problink_em: ProbLink.emFit unrolled as three
-    * CTE generations (params row → E-step responsibilities → decimal
-    * sufficient statistics → next params row). Cross-engine exact by
-    * the op's own design: responsibilities round to 9 decimals before
-    * DECIMAL(38,9) sums (order-free), every double op (products in
-    * field order, divisions, clamps) is written in the identical IEEE
-    * tree, and the final face rounds HALF_EVEN to 6 (round_even). */
-  private def problinkEmOracle: String = {
-    val fields = Seq("name", "seg")
-    val d0 = "CAST(0 AS DECIMAL(38,9))"
-    val one = "CAST(1 AS DECIMAL(38,9))"
-    def iterCtes(i: Int): String = {
-      val p = s"p${i - 1}"; val e = s"e$i"; val pn = s"p$i"
-      def prod(mu: String): String = fields.map { f =>
-        s"(CASE WHEN agree_$f IS NULL THEN CAST(1.0 AS DOUBLE) " +
-          s"WHEN agree_$f THEN $p.$mu$f " +
-          s"ELSE CAST(1.0 AS DOUBLE) - $p.$mu$f END)"
-      }.mkString(" * ")
-      val sums = Seq("count(*) AS n", "sum(r) AS sr") ++ fields.flatMap(f => Seq(
-        s"sum(CASE WHEN agree_$f THEN r ELSE $d0 END) AS srA_$f",
-        s"sum(CASE WHEN agree_$f IS NOT NULL THEN r ELSE $d0 END) AS srN_$f",
-        s"sum(CASE WHEN agree_$f THEN $one - r ELSE $d0 END) AS scA_$f",
-        s"sum(CASE WHEN agree_$f IS NOT NULL THEN $one - r ELSE $d0 END) AS scN_$f"))
-      val ag = fields.map(f => s"agree_$f").mkString(", ")
-      def clamp(x: String): String =
-        s"greatest(CAST(1e-6 AS DOUBLE), least(CAST(1.0 AS DOUBLE) - 1e-6, $x))"
-      val newp = Seq(
-        clamp("CAST(sr AS DOUBLE) / CAST(n AS DOUBLE)") + " AS lam") ++
-        fields.flatMap(f => Seq(
-          clamp(s"CASE WHEN srN_$f = 0 THEN CAST(0.5 AS DOUBLE) " +
-            s"ELSE CAST(srA_$f AS DOUBLE) / CAST(srN_$f AS DOUBLE) END") +
-            s" AS m$f",
-          clamp(s"CASE WHEN scN_$f = 0 THEN CAST(0.5 AS DOUBLE) " +
-            s"ELSE CAST(scA_$f AS DOUBLE) / CAST(scN_$f AS DOUBLE) END") +
-            s" AS u$f"))
-      s"""$e AS (
-         | SELECT ${sums.mkString(",\n  ")}
-         | FROM (
-         |  SELECT $ag,
-         |   CAST(round(($p.lam * pm) /
-         |     ($p.lam * pm + (CAST(1.0 AS DOUBLE) - $p.lam) * pu), 9)
-         |    AS DECIMAL(38,9)) AS r
-         |  FROM (SELECT $ag, ${prod("m")} AS pm, ${prod("u")} AS pu
-         |        FROM pairs, $p), $p
-         | )),
-         |$pn AS (
-         | SELECT ${newp.mkString(",\n  ")}
-         | FROM $e, $p)""".stripMargin
-    }
-    val init = (Seq("CAST(0.1 AS DOUBLE) AS lam") ++
-      fields.flatMap(f => Seq(s"CAST(0.9 AS DOUBLE) AS m$f",
-        s"CAST(0.1 AS DOUBLE) AS u$f"))).mkString(", ")
-    val finalRows = fields.map(f =>
-      s"""SELECT '$f' AS field, round_even(m$f, 6) AS m,
-         | round_even(u$f, 6) AS u, round_even(lam, 6) AS lambda
-         |FROM p3""".stripMargin).mkString("\n UNION ALL\n")
-    s"""WITH src AS (
-       | SELECT c_custkey AS src_id, c_nationkey,
-       |  CASE WHEN c_custkey % 3 = 0 THEN c_name || 'X' ELSE c_name END AS name,
-       |  CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg
-       | FROM customer WHERE c_custkey % 16 = 0),
-       |pairs AS (
-       | SELECT levenshtein(s.name, t.c_name) <= 1 AS agree_name,
-       |        s.seg = t.c_mktsegment AS agree_seg
-       | FROM src s JOIN customer t ON s.c_nationkey = t.c_nationkey),
-       |p0 AS (SELECT $init),
-       |${(1 to 3).map(iterCtes).mkString(",\n")}
-       |$finalRows""".stripMargin
-  }
-
-  /** DuckDB oracle for q_problink_em_graded: emFitGraded unrolled the
-    * same way, with per-(field, level) statistics and the clamp-floor
-    * + renormalize M-step written as the identical left-to-right sum
-    * (Scala's Array.sum ≡ the SQL chain `(c0 + c1) + c2`). */
-  private def problinkEmGradedOracle: String = {
-    val fields = Seq(("name", 3), ("seg", 2))
-    val d0 = "CAST(0 AS DECIMAL(38,9))"
-    val one = "CAST(1 AS DECIMAL(38,9))"
-    def iterCtes(i: Int): String = {
-      val p = s"p${i - 1}"; val e = s"e$i"; val pn = s"p$i"
-      def prod(mu: String): String = fields.map { case (f, k) =>
-        val cases = (0 until k)
-          .map(l => s"WHEN level_$f = $l THEN $p.${mu}_${f}_$l").mkString(" ")
-        s"(CASE WHEN level_$f IS NULL THEN CAST(1.0 AS DOUBLE) $cases " +
-          "ELSE CAST(1.0 AS DOUBLE) END)"
-      }.mkString(" * ")
-      val sums = Seq("count(*) AS n", "sum(r) AS sr") ++
-        fields.flatMap { case (f, k) =>
-          Seq(
-            s"sum(CASE WHEN level_$f IS NOT NULL THEN r ELSE $d0 END) AS srN_$f",
-            s"sum(CASE WHEN level_$f IS NOT NULL THEN $one - r ELSE $d0 END) AS scN_$f") ++
-            (0 until k).flatMap(l => Seq(
-              s"sum(CASE WHEN level_$f = $l THEN r ELSE $d0 END) AS srL_${f}_$l",
-              s"sum(CASE WHEN level_$f = $l THEN $one - r ELSE $d0 END) AS scL_${f}_$l"))
-        }
-      val lv = fields.map { case (f, _) => s"level_$f" }.mkString(", ")
-      val newp = Seq(
-        "greatest(CAST(1e-6 AS DOUBLE), least(CAST(1.0 AS DOUBLE) - 1e-6, " +
-          "CAST(sr AS DOUBLE)/CAST(n AS DOUBLE))) AS lam") ++
-        fields.flatMap { case (f, k) =>
-          Seq(("m", s"srN_$f", "srL"), ("u", s"scN_$f", "scL")).flatMap {
-            case (mu, sN, sL) =>
-              val cs = (0 until k).map(l =>
-                s"greatest(CAST(1e-6 AS DOUBLE), " +
-                  s"CAST(${sL}_${f}_$l AS DOUBLE)/CAST($sN AS DOUBLE))")
-              val inner = cs.zipWithIndex
-                .map { case (c, j) => s"$c AS c$j" }.mkString(", ")
-              val ssum = (0 until k).map(l => s"c$l").mkString(" + ")
-              (0 until k).map { l =>
-                s"CASE WHEN $sN = 0 THEN $p.${mu}_${f}_$l " +
-                  s"ELSE (SELECT c$l / ($ssum) FROM (SELECT $inner)) " +
-                  s"END AS ${mu}_${f}_$l"
-              }
-          }
-        }
-      s"""$e AS (
-         | SELECT ${sums.mkString(",\n  ")}
-         | FROM (
-         |  SELECT $lv,
-         |   CAST(round(($p.lam * pm) /
-         |     ($p.lam * pm + (CAST(1.0 AS DOUBLE) - $p.lam) * pu), 9)
-         |    AS DECIMAL(38,9)) AS r
-         |  FROM (SELECT $lv, ${prod("m")} AS pm, ${prod("u")} AS pu
-         |        FROM pairs, $p), $p
-         | )),
-         |$pn AS (
-         | SELECT ${newp.mkString(",\n  ")}
-         | FROM $e, $p)""".stripMargin
-    }
-    val init = (Seq("CAST(0.1 AS DOUBLE) AS lam") ++
-      fields.flatMap { case (f, k) =>
-        (0 until k).map { l =>
-          val v = if (l == 0) 0.7 else 0.3 / (k - 1)
-          s"CAST($v AS DOUBLE) AS m_${f}_$l"
-        } ++ (0 until k).map { l =>
-          val v = if (l == k - 1) 0.7 else 0.3 / (k - 1)
-          s"CAST($v AS DOUBLE) AS u_${f}_$l"
-        }
-      }).mkString(", ")
-    val finalRows = fields.flatMap { case (f, k) =>
-      (0 until k).map(l =>
-        s"""SELECT '$f' AS field, CAST($l AS INT) AS level,
-           | round_even(m_${f}_$l, 6) AS m, round_even(u_${f}_$l, 6) AS u,
-           | round_even(lam, 6) AS lambda
-           |FROM p3""".stripMargin)
-    }.mkString("\n UNION ALL\n")
-    s"""WITH src AS (
-       | SELECT c_custkey AS src_id, c_nationkey,
-       |  CASE WHEN c_custkey % 3 = 0 THEN c_name || 'X' ELSE c_name END AS name,
-       |  CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg
-       | FROM customer WHERE c_custkey % 16 = 0),
-       |pairs AS (
-       | SELECT
-       |  CASE WHEN s.name IS NULL OR t.c_name IS NULL THEN NULL
-       |       WHEN s.name = t.c_name THEN 0
-       |       WHEN levenshtein(s.name, t.c_name) <= 1 THEN 1
-       |       ELSE 2 END AS level_name,
-       |  CASE WHEN s.seg IS NULL OR t.c_mktsegment IS NULL THEN NULL
-       |       WHEN s.seg = t.c_mktsegment THEN 0 ELSE 1 END AS level_seg
-       | FROM src s JOIN customer t ON s.c_nationkey = t.c_nationkey),
-       |p0 AS (SELECT $init),
-       |${(1 to 3).map(iterCtes).mkString(",\n")}
-       |$finalRows""".stripMargin
-  }
+  /** Every gate, family by family. Built once per process, and refused
+    * at initialization if two gates share a name. */
+  val gates: Seq[Gate] = Gate.registry(
+    ImportGates.all, TextGates.all, TokenGates.all, IndexGates.all,
+    VectorGates.all, GraphGates.all, TableGates.all, StatsGates.all,
+    MultimodalGates.all)
 
   /** Flagship: the reference's central use case — conform + staged match
-    * + merge (SURVEY §7.2) — on sf0.001. */
+    * + merge (SURVEY §7.2), the `q_merge_upsert` gate — on sf0.001. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    Merger.merge(mergeSource(spark, dir), mergeTarget(spark, dir),
-      mergeSpecBase).newTarget
+    queries("q_merge_upsert")(spark, dir)
   }
 
-  // ---- query inventory ---------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // P1/P2/P3: typed projection + added column + row constraints
-    "q_conform" -> ((s, dir) => {
-      val spec = new WorkingTableSpec()
-        .mapColumn("event_id", sqlType = "BIGINT")
-        .mapColumn("user_id", sqlType = "BIGINT")
-        .mapColumn("type_name", from = "event_type", as = "upper($S)")
-        .mapColumn("event_day", from = "ts", as = "cast($S as date)", sqlType = "DATE")
-        .mapColumn("value", sqlType = "DOUBLE")
-        .addColumn("note")
-        .constrainColumn("event_type", "$S <> 'error'")
-        .constrainColumn("value", "$S IS NOT NULL")
-      WorkingTable.conform(t(s, dir, "events"), spec)
-    }),
-
-    // P4: in-load GROUP BY collapse
-    "q_group_records" -> ((s, dir) => {
-      val spec = new WorkingTableSpec()
-        .mapColumn("l_orderkey", sqlType = "BIGINT")
-        .mapColumn("l_quantity", sqlType = "DOUBLE")
-        .mapColumn("l_extendedprice", sqlType = "DOUBLE")
-        .groupRecordsBy("l_orderkey")
-      WorkingTable.conform(t(s, dir, "lineitem"), spec)
-    }),
-
-    // P5: correlated cross-table column update
-    "q_correlated_update" -> ((s, dir) =>
-      WorkingTable.mapColumnFromTable(
-        t(s, dir, "customer"), t(s, dir, "nation"),
-        targetColumn = "c_mktsegment", sourceColumn = "n_name",
-        keys = Seq(("c_nationkey", "n_nationkey")),
-        template = "$T || '/' || $S")),
-
-    // P6: geocoding prep
-    "q_geocode_prep" -> ((s, dir) => {
-      val base = t(s, dir, "customer")
-        .withColumn("residential_lat",
-          when(col("c_acctbal") < 0, lit(null).cast("double"))
-            .when(col("c_custkey") % 10 === 0, lit(0.0))
-            .otherwise(col("c_acctbal") % 90.0))
-        .withColumn("residential_lng", col("c_nationkey") * 7.5 - 90.0)
-      val prepped = WorkingTable.prepareForGeocoding(base, "c_name")
-      prepped.select(
-        col("c_custkey"), col("residential_lat"), col("residential_lng"),
-        col("needs_geocoding"),
-        when(col("residential_lat").isNotNull && col("residential_lng").isNotNull,
-          format_string("POINT(%.6f %.6f)",
-            col("residential_lng"), col("residential_lat"))).as("point_wkt"))
-    }),
-
-    // J1/J3: staged exact match, first-match-wins + theta constraints
-    "q_exact_match" -> ((s, dir) => {
-      val src = t(s, dir, "events")
-        .withColumn(Matcher.SourceId, col("event_id"))
-      val spec = MatchSpec(
-        groups = Seq(
-          ExactGroup(Seq(KeyPair("user_id", "c_custkey")),
-            constraints = Seq(MatchConstraint("value", "$S > 100"))),
-          ExactGroup(Seq(KeyPair("user_id", "c_custkey")),
-            constraints = Seq(MatchConstraint("c_acctbal", "$T >= 0"))),
-          ExactGroup(Seq(KeyPair("user_id", "c_custkey")))),
-        targetPk = "c_custkey")
-      Matcher.matchRecords(src, t(s, dir, "customer"), spec)
-        .select(col("event_id"), col(Matcher.TargetId), col(Matcher.MatchGroup))
-    }),
-
-    // J5: nested matcher — a sub-matcher's groups spliced after the
-    // outer group, sharing one first-match-wins resolution
-    // (record_matcher.rb:48-58,92-102)
-    "q_match_nested" -> ((s, dir) => {
-      val src = t(s, dir, "events")
-        .withColumn(Matcher.SourceId, col("event_id"))
-      val outer = MatchSpec(
-        groups = Seq(
-          ExactGroup(Seq(KeyPair("user_id", "c_custkey")),
-            constraints = Seq(MatchConstraint("value", "$S > 200")))),
-        targetPk = "c_custkey")
-      val nested = MatchSpec(
-        groups = Seq(
-          ExactGroup(Seq(KeyPair("user_id", "c_custkey")),
-            constraints = Seq(MatchConstraint("c_acctbal", "$T < 0"))),
-          ExactGroup(Seq(KeyPair("user_id", "c_custkey")))),
-        targetPk = "c_custkey")
-      Matcher.matchRecords(src, t(s, dir, "customer"),
-        outer.withNested(nested))
-        .select(col("event_id"), col(Matcher.TargetId), col(Matcher.MatchGroup))
-    }),
-
-    // J4: auxiliary join table participating in the match condition
-    "q_match_aux" -> ((s, dir) => {
-      val src = t(s, dir, "lineitem")
-        .withColumn(Matcher.SourceId,
-          col("l_orderkey") * 10 + col("l_linenumber"))
-      val spec = MatchSpec(
-        groups = Seq(ExactGroup(
-          Seq(KeyPair("l_suppkey", "s_suppkey")),
-          auxJoins = Seq(AuxJoin(t(s, dir, "nation"), "aux",
-            "t.s_nationkey = aux.n_nationkey AND aux.n_regionkey < 2")))),
-        targetPk = "s_suppkey")
-      Matcher.matchRecords(src, t(s, dir, "supplier"), spec)
-        .select(col(Matcher.SourceId), col(Matcher.TargetId),
-          col(Matcher.MatchGroup))
-    }),
-
-    // A6: match-rate counts over the staged match
-    "q_match_rate" -> ((s, dir) => {
-      val src = t(s, dir, "events")
-        .withColumn(Matcher.SourceId, col("event_id"))
-      val spec = MatchSpec(
-        groups = Seq(
-          ExactGroup(Seq(KeyPair("user_id", "c_custkey")),
-            constraints = Seq(MatchConstraint("value", "$S > 100"))),
-          ExactGroup(Seq(KeyPair("user_id", "c_custkey")),
-            constraints = Seq(MatchConstraint("c_acctbal", "$T >= 0"))),
-          ExactGroup(Seq(KeyPair("user_id", "c_custkey")))),
-        targetPk = "c_custkey")
-      Audits.matchGroupCounts(
-        Matcher.matchRecords(src, t(s, dir, "customer"), spec))
-    }),
-
-    // M1+M2 (+M4 keys): full upsert — update matched, insert rest
-    "q_merge_upsert" -> ((s, dir) =>
-      Merger.merge(mergeSource(s, dir), mergeTarget(s, dir),
-        mergeSpecBase).newTarget),
-
-    // S7 real-write gate: the SAME upsert routed through the production
-    // parquet write-commit path and re-read — every other merge gate
-    // evaluates through the noop sink / judge-side dump, which left the
-    // target-sink leg of the job lifecycle (import_job.rb:16-23)
-    // unexercised. Also exercises the MergeResult.unpersist() contract
-    // mid-query: the cache is released after the write commits.
-    "q_merge_upsert_written" -> ((s, dir) => {
-      val out = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_target_${tmpToken(dir)}")
-      val res = Merger.merge(mergeSource(s, dir), mergeTarget(s, dir),
-        mergeSpecBase)
-      res.newTarget.write.mode("overwrite").parquet(out.getAbsolutePath)
-      res.unpersist()
-      s.read.parquet(out.getAbsolutePath)
-    }),
-
-    // M3: update_only
-    "q_merge_update_only" -> ((s, dir) =>
-      Merger.merge(mergeSource(s, dir), mergeTarget(s, dir),
-        mergeSpecBase.copy(updateOnly = true)).newTarget),
-
-    // M3: insert_only
-    "q_merge_insert_only" -> ((s, dir) =>
-      Merger.merge(mergeSource(s, dir), mergeTarget(s, dir),
-        mergeSpecBase.copy(insertOnly = true)).newTarget),
-
-    // M4: RETURNING write-back into the source
-    "q_merge_returning" -> ((s, dir) =>
-      Merger.merge(mergeSource(s, dir), mergeTarget(s, dir), mergeSpecBase)
-        .updatedSource
-        .select(col("c_custkey"), col("c_name"), col("matched_custkey"))),
-
-    // M5/M6: self-table dedup with orientation + fold
-    "q_dedup" -> ((s, dir) => {
-      val spec = MergeSpec(
-        matchSpec = MatchSpec(
-          groups = Seq(ExactGroup.onColumns("o_custkey", "o_orderdate")),
-          targetPk = "o_orderkey"),
-        mergeExpressions = Map("o_totalprice" -> "$T + $S"))
-      Deduper.dedup(t(s, dir, "orders"), spec).newTable
-    }),
-
-    // A1/A2: one-pass per-column coverage profile
-    "q_audit_coverage" -> ((s, dir) =>
-      Audits.coverage(t(s, dir, "customer"),
-        Seq("c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))),
-
-    // A3: duplicate-key detection
-    "q_audit_dupkeys" -> ((s, dir) =>
-      Audits.duplicateKeys(t(s, dir, "orders"),
-        Seq("o_custkey", "o_orderdate"))),
-
-    // A4: value distribution top-k with deterministic tiebreak
-    "q_audit_distribution" -> ((s, dir) =>
-      Audits.distribution(t(s, dir, "events"), "event_type", 20)),
-
-    // A5: boolean-expression distribution
-    "q_audit_expr_dist" -> ((s, dir) =>
-      Audits.expressionDistribution(t(s, dir, "events"),
-        col("value") > 50.0)),
-
-    // lossless blocked Levenshtein self-join (Ed-Join rarest-prefix
-    // candidates + banded verify) on a customer-name subset — every
-    // pair within 2 edits, oracle = the plain quadratic form
-    "q_edit_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_custkey") % 8 === 0)
-      val a = c.select(col("c_custkey").as("a_id"),
-        col("c_name").as("a_name"))
-      val b = c.select(col("c_custkey").as("b_id"),
-        col("c_name").as("b_name"))
-      graft.operators.EditJoin.editJoin(
-        a, "a_id", "a_name", b, "b_id", "b_name", maxDist = 2)
-        .filter(col("a_id") < col("b_id"))
-    }),
-
-    // J6: trigram fuzzy KNN + greedy 1:1, oracled cross-engine: the
-    // DuckDB side rebuilds pg_trgm shingling in SQL and peels the
-    // sequential greedy one pair per recursive-CTE level.
-    // Source = perturbed document snippets (e→3 leetspeak); the fuzzy
-    // matcher should re-link most of them to their original document.
-    "q_fuzzy_match" -> ((s, dir) => {
-      val snippet = substring(col("text"), 1, 60)
-      val src = t(s, dir, "documents")
-        .filter(col("doc_id") % 37 === 0)
-        .select(col("doc_id").as(Matcher.SourceId),
-          translate(snippet, "e", "3").as("snippet"))
-      val tgt = t(s, dir, "documents")
-        .select(col("doc_id"), snippet.as("snippet"))
-      val pairs = Fuzzy.candidatePairs(
-        src, Matcher.SourceId, "snippet", tgt, "doc_id", "snippet")
-      Fuzzy.greedyAssign(pairs, Matcher.SourceId, "doc_id")
-        .select(col(Matcher.SourceId), col("doc_id").as("matched_key"),
-          round(col("distance"), 6).as("distance"))
-    }),
-
-    // Fellegi-Sunter probabilistic linkage: nationkey-blocked pairs of
-    // (deterministically perturbed customer) x customer, scored by the
-    // log2 Bayes factor of name/segment agreement; driver-rounded
-    // decimal weight literals make the score hash-exact cross-engine
-    "q_problink" -> ((s, dir) =>
-      problinkScored(s, dir)
-        .select(col("src_id"), col("tgt_id"),
-          col("agree_name"), col("agree_seg"),
-          col("match_weight").cast("double").as("match_weight"))),
-
-    // one-target-per-source resolution of the same scored pairs: max
-    // weight, ties to the smallest target id, below-threshold sources
-    // dropped — a min_by AGGREGATE (hot-source-key safe), not a window
-    "q_problink_best" -> ((s, dir) =>
-      ProbLink.bestLinks(problinkScored(s, dir), "src_id", "tgt_id",
-        minWeight = BigDecimal(0))
-        .select(col("src_id"), col("tgt_id"),
-          col("match_weight").cast("double").as("match_weight"))),
-
-    // graded (multi-level) FS comparisons — the full Splink model:
-    // exact-name evidence outweighs within-1-edit evidence outweighs
-    // the catch-all; level picked by a first-match-wins codegen CASE,
-    // weights exact decimal literals as in the binary gates
-    "q_problink_graded" -> ((s, dir) =>
-      ProbLink.scorePairsGraded(
-        problinkSrc(s, dir, srcMod = 8), "src_id", problinkTgt(s, dir),
-        "tgt_id", Seq(("c_nationkey", "c_nationkey")),
-        Seq(ProblinkGradedName, ProblinkGradedSeg))
-        .select(col("src_id"), col("tgt_id"),
-          col("level_name"), col("level_seg"),
-          col("match_weight").cast("double").as("match_weight"))),
-
-    // term-frequency-adjusted FS scoring (Splink's TF adjustment):
-    // agreeing on a segment held by 20% of targets is weaker evidence
-    // than agreeing on a rare one; share table broadcast, log2 in
-    // engine + round(6) per the BM25-idf parity convention
-    "q_problink_tf" -> ((s, dir) =>
-      ProbLink.scorePairs(
-        problinkSrc(s, dir, srcMod = 8), "src_id", problinkTgt(s, dir),
-        "tgt_id", Seq(("c_nationkey", "c_nationkey")),
-        Seq(
-          ProbLink.LinkField("name", 0.95, 0.05, "name", "c_name",
-            (a, b) => levenshtein(a, b, 1) >= 0),
-          ProbLink.LinkField("seg", 0.9, 0.2, "seg", "c_mktsegment",
-            (a, b) => a === b, tfAdjust = true)))
-        .select(col("src_id"), col("tgt_id"),
-          col("agree_name"), col("agree_seg"),
-          col("match_weight").cast("double").as("match_weight"))),
-
-    // blocking-rule pre-flight: exact pair counts per candidate rule
-    // from per-key counts (Splink's count_comparisons; no pair
-    // materialized) — the dial a 100 TB linkage job turns FIRST
-    "q_blocking_profile" -> ((s, dir) => {
-      val src = problinkSrc(s, dir, srcMod = 8)
-      val tgt = problinkTgt(s, dir)
-      ProbLink.blockingProfile(src, tgt, Seq(
-        ("nation", Seq(("c_nationkey", "c_nationkey"))),
-        ("segment", Seq(("seg", "c_mktsegment"))),
-        ("nation_segment",
-          Seq(("c_nationkey", "c_nationkey"), ("seg", "c_mktsegment")))))
-        .select(col("rule"),
-          col("est_pairs").cast("double").as("est_pairs"),
-          col("matched_keys"),
-          col("max_block_pairs").cast("double").as("max_block_pairs"))
-    }),
-
-    // graded EM on the level patterns, oracled the same unrolled way —
-    // fit the full per-level (m, u) tables from a deterministic sample
-    "q_problink_em_graded" -> ((s, dir) => {
-      val scored = ProbLink.scorePairsGraded(
-        problinkSrc(s, dir, srcMod = 16), "src_id", problinkTgt(s, dir),
-        "tgt_id", Seq(("c_nationkey", "c_nationkey")),
-        Seq(ProblinkGradedName, ProblinkGradedSeg))
-      val fit = ProbLink.emFitGraded(scored,
-        Seq(("name", 3), ("seg", 2)), iterations = 3)
-      import s.implicits._
-      fit.fields.flatMap(f => f.levels.zipWithIndex.map { case ((m, u), li) =>
-        (f.name, li,
-          BigDecimal(m).setScale(6, BigDecimal.RoundingMode.HALF_EVEN).toDouble,
-          BigDecimal(u).setScale(6, BigDecimal.RoundingMode.HALF_EVEN).toDouble,
-          BigDecimal(fit.lambda).setScale(6, BigDecimal.RoundingMode.HALF_EVEN).toDouble)
-      }).toDF("field", "level", "m", "u", "lambda")
-    }),
-
-    // the ER workflow end-to-end: every source row leaves resolved
-    // (best target + weight) or explicitly unmatched (nulls) — the
-    // left-join face of bestLinks, i.e. the reference's
-    // working_target_id contract in Fellegi-Sunter form
-    "q_er_resolve" -> ((s, dir) => {
-      val scored = problinkScored(s, dir)
-      // threshold 6 needs BOTH fields to agree: the segment-blanked
-      // sources stay unmatched, exercising the null face
-      val best = ProbLink.bestLinks(scored, "src_id", "tgt_id",
-        minWeight = BigDecimal(6))
-      scored.select(col("src_id")).distinct()
-        .join(best, Seq("src_id"), "left")
-        .select(col("src_id"), col("tgt_id"),
-          col("match_weight").cast("double").as("match_weight"))
-    }),
-
-    // EM-fitted (m, u, lambda) over the agreement patterns (Winkler
-    // 1988) — oracled cross-engine by UNROLLING the three iterations as
-    // CTE generations (decimal-summed responsibilities make the fit
-    // bit-identical across layouts AND engines; spec'd too).
-    // Estimation runs on a deterministic source SAMPLE (every 16th
-    // customer) — the Splink discipline: at 100 TB you estimate m/u on
-    // a sample and score the full corpus with the fitted params
-    "q_problink_em" -> ((s, dir) => {
-      val fit = ProbLink.emFit(problinkScored(s, dir, srcMod = 16),
-        Seq("name", "seg"), iterations = 3)
-      import s.implicits._
-      fit.fields.map(f => (f.name,
-          BigDecimal(f.m).setScale(6, BigDecimal.RoundingMode.HALF_EVEN).toDouble,
-          BigDecimal(f.u).setScale(6, BigDecimal.RoundingMode.HALF_EVEN).toDouble,
-          BigDecimal(fit.lambda).setScale(6, BigDecimal.RoundingMode.HALF_EVEN).toDouble))
-        .toDF("field", "m", "u", "lambda")
-    }),
-
-    // ---- training-data pipeline extensions ----
-
-    // exact hash-groupBy dedup
-    "q_dedup_exact" -> ((s, dir) =>
-      TextDedup.exactGroups(t(s, dir, "documents"), "doc_id", "text")),
-
-    // MinHash+LSH near-dup — oracled END-TO-END: the DuckDB side
-    // (dedupMinhashOracle) replays shingle hashing, the pinned minhash
-    // family, the Murmur3 band hash, and the bucket join, so even the
-    // probabilistic recall pattern must agree pair-for-pair
-    "q_dedup_minhash" -> ((s, dir) =>
-      TextDedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleLen = 5, numHashes = 64, bands = 8,
-        jaccardThreshold = 0.8)),
-
-    // persisted MinHash-LSH index: shingle/minhash/band two thirds of
-    // the corpus ONCE into a band-partitioned bloom-filtered layout,
-    // then dedup the remaining third against the saved index (the
-    // incremental-crawl storage face) — oracled end-to-end via the
-    // same LSH replay as q_dedup_minhash at the index's 32/8 geometry
-    // (minhashIndexedOracle); the bloom/pushdown tiers being oracled
-    // AROUND are pure I/O avoidance, so the pair set must match
-    "q_minhash_indexed" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val tmp = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_mhidx_${tmpToken(dir)}").getAbsolutePath
-      TextDedup.saveMinhashIndex(
-        docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", tmp,
-        numHashes = 32, bands = 8)
-      // small-batch probe (every 9th doc): the incremental-crawl
-      // asymmetry, and small enough to ride the pushdown fast path
-      TextDedup.minhashProbeIndexed(s, tmp,
-        docs.filter(col("doc_id") % 9 === 0), "doc_id", "text",
-        jaccardThreshold = 0.8)
-        .select(col("batch_id"), col("corpus_id"),
-          round(col("jaccard"), 6).as("jaccard"))
-    }),
-
-    // exact substring (duplicated-span) dedup: verbatim >=8-token runs
-    // appearing in more than one document, merged per doc into maximal
-    // token intervals — the suffix-array semantics of Lee et al. 2021
-    // distributed as k-gram fingerprints (integer output, hash-exact)
-    "q_substring_spans" -> ((s, dir) =>
-      TextDedup.duplicateSpans(t(s, dir, "documents"), "doc_id", "text",
-        k = 8)),
-
-    // cleaned-corpus face of the same: duplicated spans stripped, text
-    // rebuilt in normalized token form + kept/removed token accounting
-    "q_substring_clean" -> ((s, dir) =>
-      TextDedup.stripDuplicateSpans(t(s, dir, "documents"), "doc_id",
-        "text", k = 8)),
-
-    // exact n-gram Jaccard threshold join at a moderate threshold —
-    // rarest-first (frequency-ordered) prefix filtering keeps the
-    // candidate buckets tiny even though the prefix is half the doc
-    "q_ngram_jaccard" -> ((s, dir) =>
-      TextDedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleLen = 5, threshold = 0.5)),
-
-    // exact Jaccard THRESHOLD JOIN via lossless prefix filtering
-    // (AllPairs/PPJoin) — the high-threshold variant, no band caveat
-    "q_jaccard_threshold" -> ((s, dir) =>
-      TextDedup.ngramJaccardPairs(
-        t(s, dir, "documents").filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", shingleLen = 5, threshold = 0.8)),
-
-    // tumbling-window aggregate — the STREAMING transform run in batch
-    // mode, oracle-gated (same code path readStream uses; parity with
-    // an actual stream is asserted in StreamingSpec)
-    "q_windowed_counts" -> ((s, dir) =>
-      graft.streaming.EventStream.windowedCounts(t(s, dir, "events"))
-        .select(unix_micros(col("window_start")).as("window_start_us"),
-          col("event_type"), col("n"), col("total_value"))),
-
-    // streaming per-window quantiles: the DDSketch bucket table as a
-    // plain windowed aggregate (append-capable, no custom state) +
-    // the rollup walk with window_start as a dim — "p90 per 6h window
-    // from a stream" with state bounded at windows × bucket grid
-    "q_stream_quantiles" -> ((s, dir) => {
-      val hist = graft.streaming.EventStream
-        .windowedQuantileHistogram(t(s, dir, "events"))
-        .select(unix_micros(col("window_start")).as("win_start_us"),
-          col("qb"), col("cnt"))
-      graft.operators.Audits.rollupQuantiles(hist,
-        Seq("win_start_us"), Seq(0.5, 0.9))
-    }),
-
-    // URL extraction (planted deterministically — the fixture corpus
-    // has no URLs): first URL, registrable host, path
-    "q_url_extract" -> ((s, dir) => {
-      val planted = when(col("doc_id") % 3 === 0,
-        concat(col("text"), lit(" see https://sub"),
-          (col("doc_id") % 7).cast("string"),
-          lit(".example-site.org/p/"), col("doc_id").cast("string"),
-          lit(" end"))).otherwise(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.urlParts(planted).as("u"))
-        .select(col("doc_id"), col("u.url").as("url"),
-          col("u.domain").as("domain"), col("u.path").as("path"),
-          (col("u.url") =!= "").as("has_url"))
-    }),
-
-    // URL canonicalization + URL-level dedup: five syntactic variants
-    // of the same page (case, www, default port, utm params, fragment,
-    // trailing slash) planted per id-group; variants 0-2 must collapse
-    // to ONE canonical key and the first doc_id per key wins
-    "q_url_canonical" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val m = expr("doc_id div 15").cast("string")
-      val url = expr("(doc_id div 3) % 5") match { case v =>
-        when(v === 0, concat(lit("https://WWW.Example-Site.org/p/"), m, lit("/")))
-          .when(v === 1, concat(lit("https://example-site.org:443/p/"), m,
-            lit("?utm_source=x")))
-          .when(v === 2, concat(lit("https://www.example-site.org/p/"), m,
-            lit("#frag")))
-          .when(v === 3, concat(lit("https://Example-site.ORG/p/"), m,
-            lit("?id=7&utm_campaign=c&x=2")))
-          .otherwise(concat(lit("http://example-site.org:80/p/"), m,
-            lit("/?utm_a=1&utm_b=2")))
-      }
-      val w = Window.partitionBy(col("canon")).orderBy(col("doc_id"))
-      t(s, dir, "documents").filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), url.as("url"))
-        .withColumn("canon", TextAnalysis.canonicalUrl(col("url")))
-        .withColumn("keep", row_number().over(w) === 1)
-    }),
-
-    // scrape cleaning: tag strip → entity decode → NFC (native
-    // codegen'd expression; Spark has no builtin) → whitespace
-    // collapse. Tags/entities/decomposed accents planted on a cadence
-    "q_clean_text" -> ((s, dir) => {
-      val planted = when(col("doc_id") % 4 === 0,
-        concat(lit("<p class=\"x\">"), col("text"),
-          lit("</p> &amp; cafe" + "\u0301" + " &lt;tag&gt;")))
-        .otherwise(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.cleanText(planted).as("clean"))
-    }),
-
-    // incremental dedup: the day's batch (doc_id % 10 = 0) probed
-    // against the accepted corpus — exact hash index then ASYMMETRIC
-    // shingle-postings near-dup; never pairs the corpus with itself
-    "q_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextDedup.incrementalDedup(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", shingleLen = 5, threshold = 0.5)
-    }),
-
-    // per-domain corpus stats — the domain-level quality/filtering view
-    // a pretraining pipeline curates by (count, summed quality, token
-    // mass per registered domain). Composes urlParts + qualityScore;
-    // quality sums go through DECIMAL(12,4) so the aggregate is
-    // order-free exact and the final double cast matches DuckDB
-    "q_domain_stats" -> ((s, dir) => {
-      val planted = when(col("doc_id") % 3 === 0,
-        concat(col("text"), lit(" see https://sub"),
-          (col("doc_id") % 7).cast("string"),
-          lit(".example-site.org/p/"), col("doc_id").cast("string"),
-          lit(" end"))).otherwise(col("text"))
-      t(s, dir, "documents")
-        .select(
-          TextAnalysis.urlParts(planted).getField("domain").as("domain"),
-          TextAnalysis.qualityScore(planted).as("q"),
-          TextAnalysis.tokenCount(planted).cast("long").as("nt"))
-        .groupBy(col("domain"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("q").cast("decimal(12,4)")).cast("double").as("sum_quality"),
-          sum(col("nt")).as("n_toks"))
-    }),
-
-    // RAG-style sliding-window chunking: 32-token windows every 24
-    // tokens — pure narrow pass (no shuffle), chunk identity a function
-    // of (doc, offset) so ids are stable at any cluster size
-    "q_chunk" -> ((s, dir) =>
-      Retrieval.chunk(t(s, dir, "documents"), "doc_id", "text", 32, 24)),
-
-    // BM25 lexical top-k: three search queries against documents; the
-    // candidate set is the inverted-index access path (explode + term
-    // filter inside the scan stage), top-k per query through
-    // TakeOrderedAndProject — no global sort, no hot-key window
-    "q_bm25" -> ((s, dir) =>
-      Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-        Bm25Queries, 10)),
-
-    // persisted BM25 inverted index (term-bucketed postings + bloom
-    // filters): save once, search without re-tokenizing the corpus —
-    // bit-identical to q_bm25, so it shares that oracle
-    "q_bm25_indexed" -> ((s, dir) => {
-      val idx = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_bm25_${tmpToken(dir)}").getAbsolutePath
-      Retrieval.saveBm25Index(t(s, dir, "documents"), "doc_id", "text",
-        idx, nBuckets = 16)
-      Retrieval.bm25TopKIndexed(s, idx, "doc_id", Bm25Queries, k = 10)
-    }),
-
-    // incremental index maintenance: build the BM25 index on half of
-    // a corpus slice, APPEND the other half (no corpus re-tokenize —
-    // batch postings + df deltas + stats swap), probe — hash-exact
-    // against the whole-SLICE oracle, i.e. append ≡ rebuild (the gate
-    // pays for TWO index generations per run, so it takes a third of
-    // the corpus; the oracle carries the same slice predicate)
-    "q_bm25_append" -> ((s, dir) => {
-      val idx = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_bm25a_${tmpToken(dir)}").getAbsolutePath
-      val docs = t(s, dir, "documents").filter(col("doc_id") % 3 === 0)
-      Retrieval.saveBm25Index(docs.filter(col("doc_id") % 6 === 0),
-        "doc_id", "text", idx, nBuckets = 8)
-      Retrieval.appendBm25Index(docs.filter(col("doc_id") % 6 === 3),
-        "doc_id", "text", idx)
-      Retrieval.bm25TopKIndexed(s, idx, "doc_id", Bm25Queries, k = 10)
-    }),
-
-    // right-to-be-forgotten on the BM25 index (r9 verdict #2 — the one
-    // persisted index family a purge couldn't reach): build the index,
-    // tombstone the doc_id % 7 = 2 slice, probe (phase 'tombstoned' —
-    // deleted docs excluded below the scoring kernel, df/stats still
-    // the saved full-corpus values: the Lucene soft-delete contract),
-    // compact (physical erase + stats/df recompute), probe again
-    // (phase 'compacted' — probe-identical to a rebuild on the purged
-    // corpus). Both phases hash-exact against a DuckDB replay of their
-    // respective statistics scopes. The pre-compaction probe is
-    // checkpointed BEFORE the compaction swaps its files out.
-    "q_bm25_forget" -> ((s, dir) => {
-      val idx = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_bm25f_${tmpToken(dir)}").getAbsolutePath
-      val docs = t(s, dir, "documents").filter(col("doc_id") % 2 === 0)
-      Retrieval.saveBm25Index(docs, "doc_id", "text", idx, nBuckets = 8)
-      Retrieval.bm25Index(idx).tombstone(
-        docs.filter(col("doc_id") % 7 === 2).select(col("doc_id")),
-        "doc_id")
-      val pre = Retrieval
-        .bm25TopKIndexed(s, idx, "doc_id", Bm25Queries, k = 10)
-        .select(lit("tombstoned").as("phase"), col("qid"),
-          col("doc_id"), col("score"))
-        .localCheckpoint()
-      Retrieval.bm25Index(idx).compact(s)
-      val post = Retrieval
-        .bm25TopKIndexed(s, idx, "doc_id", Bm25Queries, k = 10)
-        .select(lit("compacted").as("phase"), col("qid"),
-          col("doc_id"), col("score"))
-      pre.unionByName(post)
-    }),
-
-    // PMI collocations: top-50 bigrams by pointwise mutual information
-    // (the phrase-detection statistic) — rounded-PMI ordering with a
-    // gram tiebreak keeps ranks engine-exact
-    "q_pmi" -> ((s, dir) =>
-      TextAnalysis.pmiCollocations(t(s, dir, "documents"), "text",
-        minCount = 5, k = 50)),
-
-    // multi-pattern keyword tagging (blocklist/PII-screen shape): ONE
-    // Aho–Corasick pass tags every dictionary hit with position+count —
-    // O(chars), dictionary-size-free, zero shuffles; the oracle
-    // recomputes each cell with SQL position/replace per keyword (the
-    // O(docs × patterns) shape the automaton exists to avoid). The
-    // pinned list exercises suffix links ("ast" ⊂ "fast"), phrase
-    // prefixes ("scan" ⊂ "scan slow"), and self-overlap ("table table")
-    "q_keyword_tags" -> ((s, dir) =>
-      TextAnalysis.keywordTags(t(s, dir, "documents"), "doc_id", "text",
-        KeywordTagList)),
-
-    // deflate compression ratio — the long-range-repetition quality
-    // signal (compressible = templated/repetitive); zlib output is
-    // JVM-library-specific → rows-only, ordering pinned in OpsSpec
-    "q_compression" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          round(TextAnalysis.compressionRatio(col("text")), 4)
-            .as("compression_ratio"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))),
-
-    // corpus-trained bigram LM perplexity (add-α smoothing) — the
-    // count-based quality filter: two map-side-combined count tables,
-    // re-join by key, nothing on the driver but the V scalar
-    "q_lm_perplexity" -> ((s, dir) =>
-      TextAnalysis.bigramLmScore(t(s, dir, "documents"), "doc_id", "text")),
-
-    // CCNet head/middle/tail perplexity tiers: quantile thresholds
-    // trained on a content-hash half-sample (bounded exact-percentile
-    // state), then one broadcast-literal CASE over the scored corpus
-    "q_ppl_buckets" -> ((s, dir) =>
-      TextAnalysis.perplexityBuckets(
-        TextAnalysis.bigramLmScore(t(s, dir, "documents"),
-          "doc_id", "text"),
-        "doc_id", sampleFraction = 0.5)),
-
-    // trigram stupid-backoff LM on a held-out hash split: counts from
-    // the 'train' split score the OTHER splits, so unseen trigrams
-    // actually exercise both backoff orders (scoring the training
-    // corpus itself never would)
-    "q_lm_backoff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").withColumn("split",
-        TextAnalysis.assignSplit(col("doc_id"), trainPct = 0.8,
-          validPct = 0.1))
-      TextAnalysis.trigramLmScore(
-        docs.filter(col("split") === "train"),
-        docs.filter(col("split") =!= "train"), "doc_id", "text")
-    }),
-
-    // deterministic stratified hash sampling: source 'src0' at 1/2,
-    // everything else at 1/4 — membership is a pure function of the
-    // id (reproducible subsets at 100 TB: no RNG, no seed plumbing)
-    "q_sample_strata" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .filter(when(col("source") === "src0",
-          TextAnalysis.sampleByHash(col("doc_id"), 0.5))
-          .otherwise(TextAnalysis.sampleByHash(col("doc_id"), 0.25)))
-        .select(col("doc_id"), col("source"))),
-
-    // END-TO-END pipeline composition: exact dedup → near-dup cluster
-    // dedup → content-hash split → per-split corpus stats. One gate
-    // proving the operators COMPOSE (each stage is also gated alone).
-    "q_pipeline_e2e" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val uniq = TextDedup.exactDedup(docs, "doc_id", "text")
-      val pairs = TextDedup.ngramJaccardPairs(uniq, "doc_id", "text",
-        shingleLen = 5, threshold = 0.5)
-      val kept = graft.ops.Clusters.dedupByPairs(uniq, "doc_id", pairs)
-      kept.withColumn("split",
-          TextAnalysis.assignSplit(col("doc_id"), trainPct = 0.8,
-            validPct = 0.1))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"))
-    }),
-
-    // pairs → CLUSTERS: connected components over the near-dup pair
-    // graph (alternating large-star/small-star), every doc labeled
-    // with its component's min doc_id (self if unpaired) — the step
-    // that turns pair-finding into actual deduplication
-    // incremental connected components: yesterday's assignment (a
-    // star-contracted form of yesterday's graph) plus today's batch of
-    // pairs — identical to a full recompute, at batch cost; oracle
-    // closes over the FULL pair set
-    "q_cc_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleLen = 5, threshold = 0.5).persist()
-      val old = pairs.filter((col("id_a") + col("id_b")) % 2 === 0)
-      val batch = pairs.filter((col("id_a") + col("id_b")) % 2 =!= 0)
-      val assign = graft.ops.Clusters
-        .connectedComponents(old, "id_a", "id_b")
-      graft.ops.Clusters
-        .incrementalComponents(assign, batch, "id_a", "id_b")
-    }),
-
-    // frequent-pair association rules over order baskets: support /
-    // confidence / lift from exact counts — the co-purchase signal,
-    // basket-capped before the pair join
-    "q_assoc_rules" -> ((s, dir) =>
-      graft.ops.Features.frequentPairs(
-        t(s, dir, "lineitem").filter(col("l_orderkey") % 3 === 0),
-        "l_orderkey", "l_partkey", minPairCount = 1,
-        maxBasketSize = 1000)),
-
-    // smoothed target encoding: per-brand mean price shrunk toward the
-    // global prior (m-estimate) — the high-cardinality categorical
-    // featurizer; DECIMAL sums keep it engine-exact
-    "q_target_encode" -> ((s, dir) =>
-      graft.ops.Features.targetEncode(
-        t(s, dir, "lineitem")
-          .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-          .select(col("p_brand"), col("l_extendedprice")),
-        "p_brand", "l_extendedprice", m = 10.0)),
-
-    // multi-annotator label consolidation: most-voted label per item,
-    // smallest label on ties, plus the agreement fraction — a min_by
-    // aggregate, never a per-item window (hub-item safe)
-    "q_majority_vote" -> ((s, dir) =>
-      graft.ops.Features.majorityVote(
-        annotations(s, dir), "item", "annot", "label")),
-
-    // Fleiss' kappa over the same rating table: chance-corrected
-    // agreement, variable raters per item — the annotation-batch
-    // go/no-go statistic, one scalar row
-    "q_fleiss_kappa" -> ((s, dir) =>
-      graft.ops.Features.fleissKappa(
-        annotations(s, dir), "item", "annot", "label")),
-
-    // per-annotator accuracy vs the consolidated label — the rater
-    // quality score (who disagrees, not just whether the batch does)
-    "q_annotator_accuracy" -> ((s, dir) =>
-      graft.ops.Features.annotatorAccuracy(
-        annotations(s, dir), "item", "annot", "label")),
-
-    // per-key interval union (gaps-and-islands): overlapping/touching
-    // spans collapse — the contamination-span / redaction cleanup pass
-    "q_merge_intervals" -> ((s, dir) =>
-      graft.ops.Timeseries.mergeIntervals(
-        t(s, dir, "lineitem").select(
-          (col("l_suppkey") % 50).cast("long").as("k"),
-          (col("l_partkey") % 500).cast("long").as("s"),
-          (col("l_partkey") % 500 + col("l_orderkey") % 20 + 1)
-            .cast("long").as("e")),
-        "k", "s", "e")),
-
-    // token-distribution drift between two snapshot halves: per-token
-    // chi-square homogeneity over the top-50 combined tokens — pure
-    // rational arithmetic (log-free), hash-exact
-    "q_token_drift" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextAnalysis.tokenDistributionDrift(
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1),
-        "text", topN = 50)
-    }),
-
-    // Krippendorff's alpha over the same ratings: the missing-data-
-    // tolerant agreement statistic (coincidence-matrix identities)
-    "q_krippendorff" -> ((s, dir) =>
-      graft.ops.Features.krippendorffAlpha(
-        annotations(s, dir), "item", "annot", "label")),
-
-    // dialog-structure audit: per-conversation turn counts, role-
-    // alternation violations, opening role — the chat-format
-    // validation an SFT corpus runs before templating
-    "q_dialog_audit" -> ((s, dir) =>
-      TextAnalysis.dialogTurnAudit(
-        t(s, dir, "events"), "user_id", "ts", "event_id", "event_type")),
-
-    // head-to-head win rates + Wilson lower bounds over the same
-    // preference pairs: the uncertainty-priced scoreboard
-    "q_win_rates" -> ((s, dir) =>
-      graft.ops.Features.winRates(
-        t(s, dir, "lineitem")
-          .select((col("l_partkey") % 100).cast("long").as("w"),
-            (col("l_suppkey") % 100).cast("long").as("l"))
-          .filter(col("w") =!= col("l")),
-        "w", "l", z = 1.96)),
-
-    // Bradley-Terry strengths from pairwise preferences (MM iteration,
-    // 2 rounds, half-win smoothing) — the reward-modeling primitive;
-    // comparisons collapse to pair counts before any join
-    "q_bradley_terry" -> ((s, dir) =>
-      graft.ops.Features.bradleyTerry(
-        t(s, dir, "lineitem")
-          .select((col("l_partkey") % 100).cast("long").as("w"),
-            (col("l_suppkey") % 100).cast("long").as("l"))
-          .filter(col("w") =!= col("l")),
-        "w", "l", iterations = 2, pseudo = 0.5)),
-
-    // HITS hubs & authorities on the supplier->part link graph —
-    // pageRank's mutual-reinforcement complement; L1-normalized
-    // fixed iterations, DECIMAL contribution sums
-    "q_hits" -> ((s, dir) =>
-      graft.ops.Graphs.hits(
-        t(s, dir, "lineitem").select(
-          (-col("l_suppkey").cast("long")).as("src"),
-          col("l_partkey").cast("long").as("dst")),
-        "src", "dst", iterations = 2)),
-
-    // l-diversity: quasi-identifier groups whose SENSITIVE attribute
-    // has too few distinct values — k-anonymity's leak the release
-    // gate also has to catch
-    "q_ldiversity" -> ((s, dir) =>
-      graft.operators.Audits.lDiversity(
-        t(s, dir, "customer")
-          .select(col("c_nationkey"),
-            (col("c_custkey") % 40).cast("long").as("bucket"),
-            col("c_mktsegment")),
-        Seq("c_nationkey", "bucket"), "c_mktsegment", l = 4)),
-
-    // approximate functional-dependency profile: X→Y confidence under
-    // the best mapping — exact-FD discovery plus near-FD dirty-row
-    // detection over an unfamiliar dump
-    "q_fd_profile" -> ((s, dir) =>
-      graft.operators.Audits.fdConfidence(
-        t(s, dir, "orders"),
-        Seq("o_orderkey" -> "o_custkey",
-          "o_custkey" -> "o_orderstatus",
-          "o_orderstatus" -> "o_orderpriority"))),
-
-    // token-budget subset: maximal whole-document prefix in md5 order
-    // whose tokens fit the budget — the reproducible "N-token slice"
-    // a training run is provisioned by (distributed prefix sum)
-    "q_token_budget" -> ((s, dir) =>
-      TextAnalysis.tokenBudgetSample(
-        t(s, dir, "documents"), "doc_id", "text",
-        budgetTokens = 15000L)),
-
-    // MAD robust outlier flags: median/MAD fence per event type — the
-    // heavy-tail-safe z-score (two exact-percentile aggregates)
-    "q_mad_outliers" -> ((s, dir) =>
-      graft.ops.Ranking.madOutliers(
-        t(s, dir, "events")
-          .select(col("event_id"), col("event_type"), col("value")),
-        "event_type", "value", k = 3.5)
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("med"), col("mad"), col("robust_z"), col("is_outlier"))),
-
-    // temperature-scaled mixture rates (the mT5/XLM-R n^alpha rule):
-    // alpha=0.5 flattens the language head, sqrt keeps it bit-exact
-    "q_temperature_mix" -> ((s, dir) =>
-      TextAnalysis.temperatureMixtureRates(
-        t(s, dir, "documents")
-          .select(col("lang"), TextAnalysis.tokenCount(col("text")).as("nt")),
-        "lang", "nt", budget = 10000L, alpha = 0.5)),
-
-    // k-center greedy coreset (farthest-point sampling): 10 maximally
-    // diverse embeddings — oracled bit-exact: the sequential sweep is
-    // a recursive CTE on the DuckDB side (one center per level), and
-    // both engines build cosine from the same index-order sums;
-    // OpsSpec additionally pins cluster coverage, determinism, and
-    // batch-round equivalence
-    "q_kcenter" -> ((s, dir) =>
-      graft.ops.Similarity.kCenterGreedy(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 10)),
-
-    // embedding centroid drift between two snapshot halves: per-label
-    // centroid cosine + L2 shift — the vector-space tableDiff
-    "q_embed_drift" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.ops.Similarity.embeddingDrift(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1),
-        "label", "embedding")
-    }),
-
-    // ranked lists -> preference pairs (the DPO/reward-data prep step,
-    // bradleyTerry's input shape); group-capped before the self-join
-    "q_preference_pairs" -> ((s, dir) =>
-      graft.ops.Features.preferencePairs(
-        t(s, dir, "lineitem"), "l_orderkey", "l_partkey",
-        "l_extendedprice", maxGroupSize = 1000)),
-
-    // exact ROC-AUC via the Mann-Whitney rank probability: per-score
-    // counts + a distributed prefix sum — never a global window
-    "q_roc_auc" -> ((s, dir) =>
-      graft.operators.Audits.rocAuc(
-        t(s, dir, "events")
-          .select(col("value"),
-            (col("event_type") === "purchase").as("y")),
-        "value", "y")),
-
-    // reliability table (the ECE ledger): per-bin confidence vs
-    // accuracy of a [0,1] score against a boolean label
-    "q_calibration" -> ((s, dir) =>
-      graft.operators.Audits.calibrationTable(
-        t(s, dir, "events")
-          .select(((col("event_id") % 97) / lit(97.0)).as("score"),
-            (col("event_type") === "purchase").as("y")),
-        "score", "y", bins = 10)),
-
-    "q_cluster_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleLen = 5, threshold = 0.5)
-      val assign = graft.ops.Clusters
-        .connectedComponents(pairs, "id_a", "id_b")
-        .withColumnRenamed("id", "doc_id")
-      docs.select(col("doc_id")).join(assign, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-    }),
-
-    // leakage-proof split: near-dup components assigned to splits as
-    // a unit (split key = component representative), so no test doc
-    // has a near-duplicate in train — the contamination a row-level
-    // hash split cannot prevent
-    "q_split_leakproof" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleLen = 5, threshold = 0.5)
-      graft.ops.Clusters.leakSafeSplit(
-        docs.select(col("doc_id")), "doc_id", pairs,
-        trainPct = 0.8, validPct = 0.1)
-    }),
-
-    // the audit face of cluster dedup: every dropped doc with its
-    // surviving representative — what a reviewer actually reads
-    "q_dedup_dropped" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleLen = 5, threshold = 0.5)
-      graft.ops.Clusters
-        .droppedByPairs(docs.select(col("doc_id")), "doc_id", pairs)
-        .select(col("doc_id"), col("cluster_id").as("kept_id"))
-    }),
-
-    // quality-aware dedup: survivor per near-dup component is the
-    // LONGEST doc (n_chars desc, doc_id tiebreak), not the min id
-    "q_cluster_dedup_best" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleLen = 5, threshold = 0.5)
-      graft.ops.Clusters.dedupByPairsBest(
-        docs.select(col("doc_id"), col("n_chars")), "doc_id", pairs,
-        Seq(col("n_chars").desc, col("doc_id").asc))
-    }),
-
-    // as-of join (backward): each click event attached to the same
-    // user's most recent purchase at-or-before it — union + one window,
-    // no join (operators/AsOfJoin.scala)
-    "q_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      // unique reference rows per (user, ts): deterministic max_by
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("p_event_id"),
-          max_by(col("value"), col("event_id")).as("p_value"))
-      AsOfJoin.backward(clicks, purchases, Seq("user_id"),
-          leftTs = "ts", rightTs = "ts",
-          payload = Seq("p_event_id", "p_value"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"),
-          col("p_event_id"), col("p_value"))
-    }),
-
-    // gap-based batch sessionization (6 h inactivity — the events
-    // fixture averages ~2 events/user/day, so shorter gaps degenerate
-    // to singleton sessions) — the oracle-checkable face of the
-    // streaming sessionization
-    "q_sessionize" -> ((s, dir) =>
-      graft.streaming.EventStream.sessionizeBatch(
-        t(s, dir, "events"), gapMinutes = 360)),
-
-    // streaming exact dedup, batch face: first event per content key
-    // by (ts, event_id) — the same transform runs stateful under
-    // readStream (dropDuplicatesWithinWatermark; replay parity in
-    // StreamingSpec). Timestamps exported as epoch micros so engine
-    // timestamp types never enter the oracle comparison.
-    "q_dedup_events" -> ((s, dir) =>
-      graft.streaming.EventStream.dedupEvents(t(s, dir, "events"))
-        .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("user_id"), col("event_type"), col("value"), col("props"))),
-
-    // snapshot diff: row-level added/removed/changed audit between two
-    // versions of a table, with the differing column names
-    "q_table_diff" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
-      val after = c.filter(col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 5 === 0, col("c_acctbal") + 1.0)
-            .otherwise(col("c_acctbal")).as("c_acctbal"),
-          when(col("c_custkey") % 11 === 0, lit("NEWSEG"))
-            .otherwise(col("c_mktsegment")).as("c_mktsegment"))
-        .unionAll(c.filter(col("c_custkey") % 100 === 1)
-          .select((col("c_custkey") + 1000000L).as("c_custkey"),
-            col("c_acctbal"), col("c_mktsegment")))
-      graft.operators.Audits.tableDiff(c, after, "c_custkey")
-    }),
-
-    // reciprocal-rank fusion: BM25 top-20 fused with a doc-length
-    // prior ranking — lexical + prior without score calibration
-    "q_rrf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val wq = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("doc_id").asc)
-      val bmRank = Retrieval
-        .bm25TopK(docs, "doc_id", "text", Bm25Queries, k = 20)
-        .withColumn("rank", row_number().over(wq))
-        .select(col("qid"), col("doc_id"), col("rank"))
-      val top20 = docs
-        .orderBy(col("n_chars").asc, col("doc_id").asc).limit(20)
-        .select(col("doc_id"), col("n_chars"))
-      val wp = Window.partitionBy(col("qid"))
-        .orderBy(col("n_chars").asc, col("doc_id").asc)
-      val priorRank = top20
-        .crossJoin(Bm25Queries.map(_._1).distinct.toDF("qid"))
-        .withColumn("rank", row_number().over(wp))
-        .select(col("qid"), col("doc_id"), col("rank"))
-      Retrieval.rrfFuse(Seq(bmRank, priorRank), "qid", "doc_id")
-    }),
-
-    // retrieval-quality eval: a longest-doc-first run per query term
-    // scored against containment-derived graded qrels (rel 2 for en
-    // docs, 1 otherwise) — recall@10 / MRR@10 / nDCG@10 per query
-    "q_retrieval_eval" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val terms = Seq((1L, "the"), (2L, "data"), (3L, "der"))
-      val cand = terms.map { case (qid, term) =>
-        docs.filter(col("text").contains(term))
-          .select(lit(qid).as("qid"), col("doc_id"),
-            col("n_chars").cast("double").as("score"),
-            (lit(1) + when(col("lang") === "en", 1).otherwise(0)).as("rel"))
-      }.reduce(_ unionAll _)
-      val run = graft.ops.Ranking.groupedTopK(cand, Seq("qid"),
-        Seq(col("score").desc, col("doc_id").asc), k = 20)
-        .select(col("qid"), col("doc_id"), col("score"))
-      val qrels = cand.select(col("qid"), col("doc_id"), col("rel"))
-      Retrieval.evalRanking(run, "qid", "doc_id", "score",
-        qrels, "rel", k = 10)
-    }),
-
-    // PageRank centrality (3 iterations) over the supplier→part supply
-    // graph — the authority signal a web-corpus pipeline weights
-    // documents by; per-iteration DECIMAL sums + rounding make the
-    // iterative float computation oracle-exact
-    "q_pagerank" -> ((s, dir) => {
-      val edges = t(s, dir, "lineitem").select(
-        (-col("l_suppkey").cast("long")).as("src"),
-        col("l_partkey").cast("long").as("dst"))
-      graft.ops.Graphs.pageRank(edges, "src", "dst", iterations = 3)
-    }),
-
-    // forward as-of: the next purchase at-or-after each click — the
-    // mirror of q_asof_join, traversed in descending time
-    "q_asof_forward" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("p_event_id"),
-          max_by(col("value"), col("event_id")).as("p_value"))
-      AsOfJoin.forward(clicks, purchases, Seq("user_id"),
-          leftTs = "ts", rightTs = "ts",
-          payload = Seq("p_event_id", "p_value"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"),
-          col("p_event_id"), col("p_value"))
-    }),
-
-    // event-sequence funnel: follows within 30 minutes of a lead event
-    // of the same user — the batch face of the stream-stream interval
-    // join (StreamingSpec asserts replay parity)
-    "q_follow_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      graft.streaming.EventStream.followWithin(ev, ev,
-        maxDelay = "30 minutes")
-    }),
-
-    // fixed-grid resample + forward fill over the event stream (6h
-    // buckets): gaps materialize with the last observed total
-    "q_resample" -> ((s, dir) =>
-      graft.ops.Timeseries.resampleFfill(t(s, dir, "events"),
-        "user_id", "ts", "value", bucketMicros = 6L * 3600 * 1000000)),
-
-    // rolling z-score anomaly flags: each event scored against its
-    // user's trailing-12h mean/σ (exact DECIMAL window sums, mirrored
-    // IEEE z chain) — the monitoring pre-filter for a stream of
-    // metrics; |z| > 2 with ≥5 points flags
-    "q_anomaly" -> ((s, dir) =>
-      graft.ops.Timeseries.rollingAnomalies(t(s, dir, "events"),
-        "user_id", "ts", "value", windowMicros = 12L * 3600 * 1000000,
-        k = 2.0, minN = 5, idCols = Seq("event_id"))),
-
-    // fixed-grid resample + LINEAR interpolation (6h buckets): interior
-    // gaps take the line between the neighboring observed totals —
-    // the trend-preserving sibling of q_resample's step fill
-    "q_interpolate" -> ((s, dir) =>
-      graft.ops.Timeseries.interpolate(t(s, dir, "events"),
-        "user_id", "ts", "value", bucketMicros = 6L * 3600 * 1000000)),
-
-    // first-order Markov transition matrix over per-user event
-    // sequences (keyed window + two map-side-combined aggregates);
-    // probability is one long/long IEEE division — engine-exact
-    "q_transitions" -> ((s, dir) =>
-      graft.ops.Timeseries.transitionMatrix(t(s, dir, "events"),
-        "user_id", "event_type", "ts", "event_id")),
-
-    // grouping sets: ROLLUP revenue over (nation, segment) — subtotal
-    // and grand-total rows from ONE pass (Catalyst expands the sets;
-    // no per-level re-aggregation), DECIMAL sums for exact parity
-    "q_rollup" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .join(t(s, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .rollup(col("c_nationkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").as("revenue"))),
-
-    // video-side frame sampling on a REAL multi-frame container:
-    // 6-frame animated GIF (one true LZW stream per frame), keep every
-    // 2nd frame, re-decode each — per-frame means gated in closed form
-    "q_multimodal_frames" -> ((s, dir) => {
-      import s.implicits._
-      graft.ops.Dispatch.fanOut(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 2)
-          .select(col("doc_id")), col("doc_id")).as[Long]
-        .flatMap { id =>
-          val fs = Multimodal
-            .frameSample(Multimodal.gifAnimBytes(id, 6), 2).get
-          fs.zipWithIndex.map { case (f, i) =>
-            (id, i * 2, f(0), f(1), f(3)) }
-        }.toDF("doc_id", "frame_idx", "w", "h", "mean_red")
-    }),
-
-    // margin-based bitext mining (ratio margin): align the even-id
-    // "language" with the odd-id one; hub penalty via top-4 mean cos
-    "q_bitext_mine" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.mineBitext(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1),
-        "vec_id", "embedding", k = 4, threshold = 1.0)
-    }),
-
-    // domain blocklist filter: broadcast LEFT ANTI join on the
-    // registrable domain — the crawl-exclusion step before any dedup
-    "q_blocklist" -> ((s, dir) => {
-      import s.implicits._
-      val planted = when(col("doc_id") % 3 === 0,
-        concat(col("text"), lit(" see https://sub"),
-          (col("doc_id") % 7).cast("string"),
-          lit(".example-site.org/p/"), col("doc_id").cast("string"),
-          lit(" end"))).otherwise(col("text"))
-      val blocked = Seq("sub1.example-site.org", "sub4.example-site.org")
-        .toDF("domain")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.urlParts(planted).getField("domain").as("domain"))
-        .join(broadcast(blocked), Seq("domain"), "left_anti")
-    }),
-
-    // audio preprocess: PCM WAV decimation ÷4 (real chunk re-emission)
-    // then re-decode — rate, frame count and mean gated in closed form
-    "q_multimodal_decimate" -> ((s, dir) => {
-      import s.implicits._
-      graft.ops.Dispatch.fanOut(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 1)
-          .select(col("doc_id")), col("doc_id")).as[Long]
-        .map { id =>
-          val out = Multimodal.decimateWav(Multimodal.wavBytes(id), 4).get
-          val f = Multimodal.decodeWav(out).get
-          (id, f(0), f(2), f(3))
-        }.toDF("doc_id", "rate_out", "n_out", "mean_out")
-    }),
-
-    // hot-topics composition: the streaming windowed-counts face piped
-    // into grouped top-k — top 3 event types per hour window
-    "q_window_topk" -> ((s, dir) =>
-      graft.ops.Ranking.groupedTopK(
-        graft.streaming.EventStream.windowedCounts(t(s, dir, "events"))
-          .select(unix_micros(col("window_start")).as("ws_us"),
-            col("event_type"), col("n")),
-        Seq("ws_us"), Seq(col("n").desc, col("event_type").asc), k = 3)),
-
-    // synchronous label propagation (2 rounds) over the supplier-part
-    // graph — deterministic communities, unrolled-SQL-gated
-    "q_labelprop" -> ((s, dir) =>
-      graft.ops.Graphs.labelPropagation(
-        t(s, dir, "lineitem").select(
-          (-col("l_suppkey").cast("long")).as("src"),
-          col("l_partkey").cast("long").as("dst")),
-        "src", "dst", iterations = 2)),
-
-    // per-node triangle counts on the co-purchase projection graph
-    // (parts sharing an order form a clique — every ≥3-item order
-    // contributes triangles); degree-ordered orientation bounds hub
-    // fan-out, oracle uses the orientation-free id-order form
-    "q_triangles" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 7 === 0)
-        .select(col("l_orderkey"), col("l_partkey").cast("long").as("p"))
-      val e = li
-        .join(li.select(col("l_orderkey"), col("p").as("p2")), "l_orderkey")
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      graft.ops.Graphs.triangleCount(e, "src", "dst")
-    }),
-
-    // TextRank keywords: PageRank over the word co-occurrence graph
-    // (window 2) of a document subset — keyword scores through the
-    // same unrolled-oracle-exact power iteration as q_pagerank
-    "q_textrank" -> ((s, dir) =>
-      graft.ops.TextAnalysis.textRankKeywords(
-        t(s, dir, "documents").filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", window = 2, iterations = 2, k = 30)),
-
-    // bounded 3-core peel (3 synchronous rounds) on the co-purchase
-    // graph — the dense-community extraction; oracle unrolls exactly
-    // the same 3 peel rounds, early exit provably equal
-    "q_kcore" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 7 === 0)
-        .select(col("l_orderkey"), col("l_partkey").cast("long").as("p"))
-      val e = li
-        .join(li.select(col("l_orderkey"), col("p").as("p2")), "l_orderkey")
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      graft.ops.Graphs.kCore(e, "src", "dst", k = 3, maxRounds = 3)
-    }),
-
-    // local clustering coefficient on the same graph — per-node
-    // neighborhood density from exact integer (deg, triangles) and ONE
-    // IEEE division, so it is oracle-exact with no rounding grid
-    "q_clustering" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 7 === 0)
-        .select(col("l_orderkey"), col("l_partkey").cast("long").as("p"))
-      val e = li
-        .join(li.select(col("l_orderkey"), col("p").as("p2")), "l_orderkey")
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      graft.ops.Graphs.clusteringCoefficient(e, "src", "dst")
-    }),
-
-    // personalized PageRank (TrustRank): authority relative to the
-    // same 3-supplier seed set q_sssp measures hop-distance from —
-    // restart mass only on seeds, unrolled-oracle-exact like pagerank
-    "q_ppr" -> ((s, dir) => {
-      val edges = t(s, dir, "lineitem").select(
-        (-col("l_suppkey").cast("long")).as("src"),
-        col("l_partkey").cast("long").as("dst"))
-      graft.ops.Graphs.personalizedPageRank(edges, "src", "dst",
-        Seq(-1L, -2L, -3L), iterations = 3)
-    }),
-
-    // weighted shortest paths (bounded Bellman-Ford, 4 relaxation
-    // rounds) over the same bidirectional graph with per-edge costs —
-    // min-cost ≤4-edge paths, oracled by a hops-tracked recursive CTE
-    "q_wsp" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        (-col("l_suppkey").cast("long")).as("src"),
-        col("l_partkey").cast("long").as("dst"),
-        (col("l_quantity").cast("long") % 3 + 1).as("w"))
-      val e = li.unionAll(li.select(col("dst").as("src"),
-        col("src").as("dst"), col("w")))
-      graft.ops.Graphs.weightedShortestPaths(e, "src", "dst", "w",
-        Seq(-1L, -2L, -3L), rounds = 4)
-    }),
-
-    // multi-source BFS distances (4-hop horizon) over the
-    // bidirectionalized supplier↔part graph — the trusted-seed
-    // distance feature (TrustRank-style); frontier expansion with
-    // min aggregates, oracled by a depth-bounded recursive CTE
-    "q_sssp" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        (-col("l_suppkey").cast("long")).as("src"),
-        col("l_partkey").cast("long").as("dst"))
-      val e = li.unionAll(
-        li.select(col("dst").as("src"), col("src").as("dst")))
-      graft.ops.Graphs.shortestPaths(e, "src", "dst",
-        Seq(-1L, -2L, -3L), maxIter = 4)
-    }),
-
-    // Matryoshka truncation: 64 → 16 dims + exact L2 renormalize,
-    // exploded to (vec_id, i, v) scalar rows for hash verification
-    "q_mrl_truncate" -> ((s, dir) =>
-      Similarity.mrlTruncate(t(s, dir, "embeddings"), "embedding", 16)
-        .select(col("vec_id"),
-          posexplode(col("embedding_mrl")).as(Seq("i", "v")))),
-
-    // k-anonymity audit: (lang, source) groups re-identifiable below
-    // k=50 — the privacy pre-flight before a corpus release
-    "q_kanon" -> ((s, dir) =>
-      graft.operators.Audits.kAnonymity(
-        t(s, dir, "documents"), Seq("lang", "source"), k = 50)),
-
-    // differentially-private count release (r11 — the geometric
-    // mechanism, Ghosh et al. 2009): noisy_n = count + (G1 − G2),
-    // G geometric(α=1/2) ⇒ ε = ln 2 for sensitivity-1 counts. The
-    // noise is PRG-seeded (the production DP model — the seed is the
-    // secret) and PURE INTEGER: two 31-bit fields of
-    // fmix64(hash64(key) ⊕ seed), each drawn by counting power-of-two
-    // thresholds — so the release is layout-invariant and the oracle
-    // replays hash, fields, and draws bit-for-bit (no exp/log, which
-    // is what keeps arbitrary-ε Laplace un-oracle-able)
-    "q_dp_counts" -> ((s, dir) =>
-      graft.operators.Audits.dpCounts(t(s, dir, "events"),
-        Seq("event_type"), seed = 42L)),
-
-    // exact heavy hitters (count > N/k) via per-partition Misra-Gries
-    // nomination + broadcast recount — no full-vocabulary shuffle
-    "q_heavy_hitters" -> ((s, dir) =>
-      graft.ops.HeavyHitters.frequentItems(
-        t(s, dir, "documents")
-          .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
-          .filter(col("tok") =!= ""),
-        "tok", k = 50)),
-
-    // Bloom-prefiltered fact join: expensive orders (top ~2%) join
-    // lineitem with the fact side bloom-filtered before its shuffle —
-    // no false negatives, so the result IS the plain join (the gate)
-    "q_bloom_join" -> ((s, dir) => {
-      val dim = t(s, dir, "orders")
-        .filter(col("o_totalprice") > 350000.0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      graft.ops.BloomJoin.prefiltered(
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"),
-            col("l_extendedprice")),
-        dim, "o_orderkey")
-    }),
-
-    // deterministic Lloyd k-means (k=4, 2 update rounds): init from
-    // the 4 smallest ids, sequential-fold L2, DECIMAL mean sums —
-    // assignment gated bit-for-bit against the unrolled SQL oracle
-    "q_kmeans" -> ((s, dir) =>
-      graft.ops.KMeans.fit(t(s, dir, "embeddings"),
-        "vec_id", "embedding", k = 4, iters = 2)),
-
-    // interval-OVERLAP join (both sides intervals) via first-shared-
-    // bin binning — span conflicts without the nested loop
-    "q_overlap_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events").filter(col("ts").isNotNull)
-        .select(col("event_id"), unix_micros(col("ts")).as("lo_us"),
-          (unix_micros(col("ts")) + (col("event_id") % 50) * 60000000L)
-            .as("hi_us"))
-      val l = ev.filter(col("event_id") % 17 === 0)
-        .select(col("event_id").as("a_id"), col("lo_us").as("a_lo"),
-          col("hi_us").as("a_hi"))
-      val r = ev.filter(col("event_id") % 23 === 0)
-        .select(col("event_id").as("b_id"), col("lo_us").as("b_lo"),
-          col("hi_us").as("b_hi"))
-      graft.operators.RangeJoin
-        .overlapBinned(l, "a_lo", "a_hi", r, "b_lo", "b_hi",
-          binWidth = 1800e6)
-        .select(col("a_id"), col("b_id"),
-          greatest(col("a_lo"), col("b_lo")).as("ov_lo_us"),
-          least(col("a_hi"), col("b_hi")).as("ov_hi_us"))
-    }),
-
-    // stream-static enrichment (batch face, oracle-gated; streaming
-    // parity in StreamingSpec): events + broadcast customer dimension
-    "q_enrich" -> ((s, dir) =>
-      graft.streaming.EventStream.enrichStatic(
-        t(s, dir, "events")
-          .select(col("user_id"), col("event_id"), col("event_type")),
-        t(s, dir, "customer")
-          .select(col("c_custkey").as("user_id"),
-            col("c_mktsegment").as("segment")),
-        "user_id")),
-
-    // real pixel work on the multimodal path: nearest-neighbor BMP
-    // thumbnail (image-space mapping, true stride/padding) then
-    // re-decode — the mean is gated against the closed-form oracle
-    "q_multimodal_resize" -> ((s, dir) => {
-      import s.implicits._
-      graft.ops.Dispatch.fanOut(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 0)
-          .select(col("doc_id")), col("doc_id")).as[Long]
-        .map { id =>
-          val rz = Multimodal
-            .resizeBmp(Multimodal.bmpBytes(id), 8, 8).get
-          val f = Multimodal.decodeBmp(rz).get
-          (id, f(0), f(1), f(3))
-        }.toDF("doc_id", "w_out", "h_out", "mean_blue")
-    }),
-
-    // perceptual image dedup: dHash (9×8 luma gradient signs) through
-    // the SAME 64-bit hamming dispatch text SimHash uses — ids sharing
-    // a pattern key synthesize byte-identical BMPs, so the pair set
-    // has a closed form the oracle pins WITHOUT decoding (the 50-key
-    // cross-hamming floor that makes this sound is spec-asserted)
-    "q_image_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val imgs = graft.ops.Dispatch.fanOut(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 0)
-          .select(col("doc_id")), col("doc_id")).as[Long]
-        .map(id => (id, Multimodal.bmpPatternBytes(id % 50)))
-        .toDF("doc_id", "payload")
-      Multimodal.imageNearDup(imgs, "doc_id", maxHamming = 4)
-    }),
-
-    // audio near-dup: PCM energy-envelope fingerprint through the
-    // same hamming dispatch (text/image/audio all dedup through ONE
-    // kernel) — closed-form oracle on the keyed fixtures, cross-key
-    // floor spec-asserted like q_image_neardup
-    "q_audio_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val clips = graft.ops.Dispatch.fanOut(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 1)
-          .select(col("doc_id")), col("doc_id")).as[Long]
-        .map(id => (id, Multimodal.wavPatternBytes(id % 40)))
-        .toDF("doc_id", "payload")
-      Multimodal.audioNearDup(clips, "doc_id", maxHamming = 4)
-    }),
-
-    // Z-order (Morton) clustering key — the layout pass that gives
-    // parquet min/max pruning on BOTH join columns; pure bit
-    // arithmetic inside codegen, gated bit-for-bit against the oracle
-    "q_zorder" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"),
-          graft.ops.Layout.zOrder2(col("l_partkey"), col("l_suppkey"))
-            .as("zval"))),
-
-    // parquet bloom-filter layout: write orders through
-    // Layout.bloomFilterWrite (per-row-group bloom on the key), read
-    // the copy back through a key lookup — the gate proves write/read
-    // fidelity of the bloom-optioned files; the row-group SKIPPING is
-    // measured in OpsSpec from scan metrics (1 of 8 groups read)
-    "q_bloom_layout" -> ((s, dir) => {
-      val tmp = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_bloomlayout_${tmpToken(dir)}")
-      graft.ops.Layout.bloomFilterWrite(
-        t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        Map("o_orderkey" -> 20000L), tmp.getAbsolutePath, numFiles = 8)
-      s.read.parquet(tmp.getAbsolutePath)
-        .filter(col("o_orderkey") % 997 === 0)
-    }),
-
-    // file-level min/max manifest (the data-skipping half of a table
-    // format): range-clustered write + sidecar manifest, then a range
-    // read that prunes the FILE LIST at plan time — unselected files
-    // are never listed into the scan or given tasks (stronger than
-    // parquet's footer row-group stats, which cost a task per file to
-    // consult). The residual filter on top makes pruning a pure plan
-    // optimization — the oracle is the plain full-scan range filter
-    "q_manifest_prune" -> ((s, dir) => {
-      val tmp = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_manifest_${tmpToken(dir)}")
-      graft.ops.Layout.writeWithManifest(
-        t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        Seq("o_totalprice"), tmp.getAbsolutePath, numFiles = 8)
-      graft.ops.Layout.readPruned(s, tmp.getAbsolutePath,
-        "o_totalprice", 1000.0, 2000.0)
-    }),
-
-    // weekly cohort retention over the event stream — who from each
-    // first-seen cohort is still active N weeks later
-    "q_retention" -> ((s, dir) =>
-      graft.ops.Timeseries.cohortRetention(t(s, dir, "events"),
-        "user_id", "ts", bucketMicros = 7L * 86400 * 1000000)),
-
-    // trailing 7-day rolling count/sum per user — ONE keyed range
-    // window, not a time-range self-join
-    "q_rolling" -> ((s, dir) =>
-      graft.ops.Timeseries.rollingAgg(t(s, dir, "events"),
-        "user_id", "ts", "value", windowMicros = 7L * 86400 * 1000000,
-        idCols = Seq("event_id"))),
-
-    // funnel conversion rates: for each (lead, follow) event-type pair
-    // the share of lead events followed within 30 min — the summary a
-    // product pipeline reports over the sequence join
-    "q_funnel_rate" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      val conv = graft.streaming.EventStream
-        .followWithin(ev, ev, maxDelay = "30 minutes")
-        .select(col("lead_type"), col("follow_type"), col("lead_id"))
-        .distinct()
-        .groupBy(col("lead_type"), col("follow_type"))
-        .agg(count(lit(1)).as("n_converted"))
-      val totals = ev.groupBy(col("event_type").as("lead_type"))
-        .agg(count(lit(1)).as("n_leads"))
-      conv.join(totals, "lead_type")
-        .select(col("lead_type"), col("follow_type"),
-          col("n_converted"), col("n_leads"),
-          (col("n_converted").cast("double") /
-            col("n_leads").cast("double")).as("conversion"))
-    }),
-
-    // join fan-out pre-flight: exact predicted output size of
-    // events×orders on the customer key — no row of either table
-    // joins. The operator's overflow-proof DECIMAL(38,0) estimates
-    // cross the gate boundary as DOUBLE (the float-parity convention;
-    // exact below 2^53, which covers every test SF)
-    "q_join_audit" -> ((s, dir) =>
-      graft.operators.Audits.joinFanout(
-        t(s, dir, "events"), "user_id",
-        t(s, dir, "orders"), "o_custkey")
-        .withColumn("est_output_rows",
-          col("est_output_rows").cast("double"))
-        .withColumn("max_key_fanout",
-          col("max_key_fanout").cast("double"))),
-
-    // mergeable distinct-count sketches: per-type HLL sketch table
-    // rolled up per type AND to the grand total by UNIONING registers
-    // (sketch once, answer any rollup later — never re-scan, never add
-    // estimates). ORACLED since r11 by outcome pinning: DataSketches
-    // HLL registers are order-invariant maxes, so the pure-integer
-    // outputs are a layout-independent function of the value set —
-    // pinned as constants (SketchRollupPins), tripwire-re-derived in
-    // PqPinSpec; mergeability and error bounds stay spec-pinned.
-    // DuckDB cannot replay the sketch registers — that recompute gap
-    // is what kept this rows-only.
-    "q_sketch_rollup" -> ((s, dir) => {
-      val sk = graft.operators.Audits.distinctSketches(
-        t(s, dir, "events"), Seq("event_type"), "user_id")
-      val perType = graft.operators.Audits
-        .rollupSketches(sk, Seq("event_type"))
-      val total = graft.operators.Audits.rollupSketches(sk, Nil)
-        .select(lit("__ALL__").as("event_type"), col("n_rows"),
-          col("approx_distinct"))
-      perType.unionByName(total)
-    }),
-
-    // KMV / theta distinct-count sketches (r11): the mergeable-sketch
-    // capability HLL registers CANNOT provide — set INTERSECTION
-    // ("users who did BOTH A and B"). State = the k smallest distinct
-    // fmix64 hashes per group: pure integers, order-free by
-    // construction, so unlike q_sketch_rollup's register pins this
-    // gate is a FULL DuckDB recompute — the oracle replays the hash
-    // (the q_simhash HUGEINT machinery), the k-min sets, and the
-    // estimator's exact IEEE tree. Faces: d:<type> per-type distinct
-    // estimate, u:__ALL__ the union rollup, i:<a>|<b> every pairwise
-    // audience-overlap estimate.
-    "q_theta_sketch" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
-      val sk = graft.ops.ThetaSketch.sketch(ev, Seq("event_type"),
-        "user_id", k = 64)
-      val perType = sk.select(lit("d").as("face"),
-        col("event_type").as("key"),
-        graft.ops.ThetaSketch.estimate(col("theta_ks"), 64).as("est"))
-      val total = graft.ops.ThetaSketch.rollup(sk, Nil, 64)
-        .select(lit("u").as("face"), lit("__ALL__").as("key"),
-          graft.ops.ThetaSketch.estimate(col("theta_ks"), 64).as("est"))
-      val pairs = graft.ops.ThetaSketch
-        .intersect(sk, sk, Seq("event_type"), 64)
-        .filter(col("a_event_type") < col("b_event_type"))
-        .select(lit("i").as("face"),
-          concat(col("a_event_type"), lit("|"), col("b_event_type"))
-            .as("key"),
-          col("est_intersection").as("est"))
-      perType.unionByName(total).unionByName(pairs)
-    }),
-
-    // one-call corpus datasheet: totals, per-language counts, and
-    // DDSketch length quantiles as a tall (metric, value) table —
-    // every number layout-invariant and oracle-exact, so two corpus
-    // versions' cards diff cleanly
-    "q_dataset_card" -> ((s, dir) =>
-      graft.ops.DatasetCard.build(t(s, dir, "documents"),
-        "text", "lang")),
-
-    // versioned snapshots with time travel: commit v1 (a filtered
-    // corpus), commit v2 (the full corpus), roll back to v1 — the
-    // current read must be exactly v1's data (history intact, nothing
-    // copied or deleted); commit = write-gen-then-atomic-version-file
-    // multi-table atomic snapshot: commit {orders, cust} slices as ONE
-    // catalog version, commit the full tables as the next, then
-    // time-travel BOTH back to v1 and join — the all-or-nothing
-    // cross-table consistency a star schema needs (facts and dims
-    // advance together)
-    "q_snapshot_multi" -> ((s, dir) => {
-      val path = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_cat_${tmpToken(dir)}").getAbsolutePath
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"))
-      val v1 = graft.sources.SnapshotStore.commitAll(Map(
-        "orders" -> orders.filter(col("o_orderkey") % 2 === 0),
-        "cust" -> cust.filter(col("c_custkey") % 2 === 0)), path)
-      graft.sources.SnapshotStore.commitAll(Map(
-        "orders" -> orders, "cust" -> cust), path)
-      val o1 = graft.sources.SnapshotStore
-        .readTableVersion(s, path, "orders", v1)
-      val c1 = graft.sources.SnapshotStore
-        .readTableVersion(s, path, "cust", v1)
-      o1.join(c1, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").as("revenue"))
-    }),
-
-    // catalog-level right-to-be-forgotten: ONE atomic commit purges an
-    // entity from fact and dim together (per-table deletes could
-    // expose orphaned fact rows between commits); a third table
-    // carries over by re-linking its generation. Output unions the
-    // surviving key occurrences per table so the oracle checks BOTH
-    // purges independently — a join would hide a single-side failure.
-    "q_snapshot_delete_all" -> ((s, dir) => {
-      val path = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_catdel_${tmpToken(dir)}").getAbsolutePath
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .filter(col("o_orderkey") % 2 === 0)
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"))
-        .filter(col("c_custkey") % 2 === 0)
-      val nation = t(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name"))
-      graft.sources.SnapshotStore.commitAll(Map(
-        "orders" -> orders, "cust" -> cust, "nation" -> nation), path)
-      // the forget-set spans the FULL key domain (an odd multiple of 7
-      // may appear in orders but not in the committed cust slice)
-      val purge = t(s, dir, "customer")
-        .filter(col("c_custkey") % 7 === 0).select(col("c_custkey"))
-      graft.sources.SnapshotStore.deleteCommitAll(purge, path,
-        Map("cust" -> "c_custkey", "orders" -> "o_custkey"))
-      val o2 = graft.sources.SnapshotStore.readTable(s, path, "orders")
-        .select(col("o_custkey").as("key"), lit("orders").as("tbl"))
-      val c2 = graft.sources.SnapshotStore.readTable(s, path, "cust")
-        .select(col("c_custkey").as("key"), lit("cust").as("tbl"))
-      o2.unionByName(c2).groupBy(col("key"), col("tbl"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // one-call right-to-be-forgotten across EVERY persisted surface
-    // (SnapshotStore.forgetEverywhere): catalog tables + all FOUR
-    // index families (minhash, IVF-PQ, BM25, and persisted HNSW since
-    // r11) purged in one orchestration — the composition the
-    // per-family lifecycles exist for. Output unions per-surface
-    // evidence so the oracle checks each surface independently:
-    //   cat:*       surviving keys of both catalog tables (exact SQL);
-    //   minhash     probes of exact copies of purged docs — count of
-    //               hits landing on a purged corpus id (must be 0);
-    //   minhash_ctl probes of surviving docs — self-hit indicator
-    //               (must be 1: the probe path stayed alive through
-    //               tombstone + compaction);
-    //   ann/ann_ctl the same two faces in embedding space (hits at
-    //               cosine >= 0.99 — exact by the fixture's 0.985
-    //               no-natural-pair margin, the q_ann_sink pin);
-    //   hnsw/hnsw_ctl the same two faces through the persisted HNSW
-    //               graph (an exact scaled twin is cosine 1.0 and
-    //               found by the greedy descent — the planted-twin
-    //               pin; post-compaction the purged node is gone, so
-    //               0 hits needs no recall argument at all);
-    //   bm25:<qid>  the post-purge BM25 top-10 verbatim (compaction
-    //               equals a purged rebuild, so the oracle is the
-    //               purged-corpus scoring SQL).
-    // Bench note: this gate's wall time is lifecycle stages (4 index
-    // saves, tombstones, catalog commit + purge, 4 compactions, 7
-    // probes), each dominated by fixed job overhead at fixture scale —
-    // profiled stage-by-stage in r10: no stage data-bound, i.e. the
-    // cost is lifecycle DEPTH that amortizes away at real corpus
-    // sizes, not a kernel to optimize. Since r11 the independent
-    // per-family tombstone and compaction phases run as CONCURRENT
-    // Spark jobs (forgetEverywhere.inParallel), trimming that fixed
-    // overhead.
-    "q_rtbf_everywhere" -> ((s, dir) => {
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_rtbf_${tmpToken(dir)}").getAbsolutePath
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def absent(p: String) =
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$base/$p"))
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .filter(col("doc_id") % 4 === 0)
-      val emb = t(s, dir, "embeddings")
-      // build ONCE per process (each save guarded on its
-      // written-LAST component); bench reps then measure the
-      // idempotent RE-RUN — forgetEverywhere's anyLive pre-flight
-      // finds the ids already gone and skips tombstones and
-      // compaction, so the rep cost is probes + one catalog commit,
-      // exactly the scheduled-compliance re-drive shape
-      if (graft.sources.SnapshotStore.currentVersion(s, s"$base/cat")
-          .isEmpty)
-        graft.sources.SnapshotStore.commitAll(Map(
-          "docs" -> docs,
-          "vecs" -> emb.select(col("vec_id"), col("label"))), s"$base/cat")
-      // geometry kept small on purpose: the oracle's per-surface
-      // expectations are geometry-independent (exact-copy probes link
-      // at jaccard/cosine 1.0 under ANY banding/cell split), and the
-      // gate's cost is dominated by lifecycle JOB COUNT, not rows —
-      // fewer buckets/cells = fewer files per write/compact
-      if (absent("mh/meta"))
-        TextDedup.saveMinhashIndex(docs, "doc_id", "text", s"$base/mh",
-          numHashes = 16, bands = 4)
-      if (absent("ann/codebook"))
-        Similarity.saveIvfPqIndex(emb, "vec_id", "embedding",
-          s"$base/ann", nCells = 8)
-      if (absent("bm/doclens"))
-        Retrieval.saveBm25Index(docs, "doc_id", "text", s"$base/bm",
-          nBuckets = 8)
-      // the 4th family (r11): persisted HNSW, purged through the same
-      // one-call orchestration; probe faces mirror ann/ann_ctl (an
-      // exact scaled twin is cosine 1.0 and always found — the
-      // planted-twin pin), at q_hnsw_topk's recall-pinned parameters
-      if (absent("hnsw/meta"))
-        graft.ops.Hnsw.saveHnswIndex(emb, "vec_id", "embedding",
-          s"$base/hnsw", m = 8, efConstruction = 48, nShards = 4)
-      val purge = docs.select(col("doc_id").as("id"))
-        .unionByName(emb.select(col("vec_id").as("id")))
-        .filter(col("id") % 9 === 4).distinct()
-      graft.sources.SnapshotStore.forgetEverywhere(purge, s"$base/cat",
-        Map("docs" -> "doc_id", "vecs" -> "vec_id"),
-        indexes = Seq(TextDedup.minhashIndex(s"$base/mh"),
-          Similarity.ivfPqIndex(s"$base/ann"),
-          Retrieval.bm25Index(s"$base/bm"),
-          graft.ops.Hnsw.hnswIndex(s"$base/hnsw")))
-      val sCat = graft.sources.SnapshotStore
-        .readTable(s, s"$base/cat", "docs")
-        .select(lit("cat:docs").as("surface"), col("doc_id").as("key"),
-          lit(1.0).as("n"))
-        .unionByName(graft.sources.SnapshotStore
-          .readTable(s, s"$base/cat", "vecs")
-          .select(lit("cat:vecs").as("surface"), col("vec_id").as("key"),
-            lit(1.0).as("n")))
-      val shingleable = col("text").isNotNull && trim(col("text")) =!= ""
-      val probedP = docs.filter(col("doc_id") % 9 === 4)
-      val probedC = docs.filter(col("doc_id") % 9 === 5 && shingleable)
-      // BATCHED minhash probe: the main face (+1e7) and control face
-      // (+2e7) carry disjoint batch-id ranges and the banded probe is
-      // row-independent per batch doc, so ONE indexed probe replaces
-      // two whole meta/bands/sets read pipelines; probe(P ∪ C) ≡
-      // probe(P) ∪ probe(C) row-for-row, and each face recovers its
-      // slice by batch-id range. The eager localCheckpoint
-      // materializes the (small) hit set once for both faces.
-      // face-id arithmetic is load-bearing for face separation (the
-      // main face lives in [1e7, 2e7), control in [2e7, 3e7)), so an
-      // id outside [0, 1e7) must FAIL the gate, not silently misroute
-      // its rows — enforced inline (raise_error costs one codegen
-      // branch per row, no extra job; r14 advice, low)
-      def facedId(c: org.apache.spark.sql.Column,
-                  offset: Long): org.apache.spark.sql.Column =
-        when(c.isNull || c < 0L || c >= 10000000L,
-          raise_error(concat(
-            lit("RTBF batched probe requires ids in [0, 1e7); got "),
-            c.cast("string"))).cast("long"))
-          .otherwise(c + lit(offset))
-      def mhFaces() = {
-        val mhHits = TextDedup.minhashProbeIndexed(s, s"$base/mh",
-            probedP.select(facedId(col("doc_id"), 10000000L).as("doc_id"),
-              col("text"))
-              .unionByName(probedC.select(
-                facedId(col("doc_id"), 20000000L).as("doc_id"), col("text"))),
-            "doc_id", "text", 0.8)
-          .localCheckpoint()
-        val mhHitsP = mhHits
-          .filter(col("batch_id") < 20000000L)
-          .filter(col("corpus_id") % 9 === 4)
-          .groupBy((col("batch_id") - 10000000L).as("key"))
-          .agg(count(lit(1)).cast("double").as("hits"))
-        val sMh = probedP.select(col("doc_id").as("key"))
-          .join(mhHitsP, Seq("key"), "left")
-          .select(lit("minhash").as("surface"), col("key"),
-            coalesce(col("hits"), lit(0.0)).as("n"))
-        val mhHitsC = mhHits
-          .filter(col("batch_id") >= 20000000L)
-          .filter(col("corpus_id") === col("batch_id") - 20000000L)
-          .select((col("batch_id") - 20000000L).as("key")).distinct()
-          .withColumn("hit", lit(1.0))
-        val sMhC = probedC.select(col("doc_id").as("key"))
-          .join(mhHitsC, Seq("key"), "left")
-          .select(lit("minhash_ctl").as("surface"), col("key"),
-            coalesce(col("hit"), lit(0.0)).as("n"))
-        sMh.unionByName(sMhC)
-      }
-      // one embedding-space probe face PAIR, parameterized on the
-      // index being probed (ann = IVF-PQ, hnsw = persisted graph):
-      // queries are exact scaled copies of the mod-decile's vectors,
-      // hits are neighbors at cosine >= 0.99, keyed back to the
-      // original ids — ONE implementation so the two families'
-      // evidence can never drift (r11 review). The main (+1e7) and
-      // control (+2e7) query batches probe in ONE indexed call (the
-      // top-k kernel is per-query independent, so the batched probe
-      // is row-for-row the two separate probes), halving each
-      // family's codebook/meta read pipelines.
-      def embFaces(probe: DataFrame => DataFrame)(
-          name: String, ctlName: String) = {
-        def qOf(mod: Int, offset: Long) = emb
-          .filter(col("vec_id") % 9 === mod)
-          .select(facedId(col("vec_id"), offset).as("vec_id"),
-            transform(col("embedding"), x => x * lit(2.0f))
-              .as("embedding"))
-        val hits = probe(
-            qOf(4, 10000000L).unionByName(qOf(5, 20000000L)))
-          .filter(col("cosine") >= 0.99)
-          .localCheckpoint()
-        def face(mod: Int, offset: Long, nm: String) = {
-          val slice = if (offset == 10000000L)
-            hits.filter(col("query_id") < 20000000L)
-          else hits.filter(col("query_id") >= 20000000L)
-          val h = slice
-            .groupBy((col("query_id") - offset).as("key"))
-            .agg(count(lit(1)).cast("double").as("hits"))
-          emb.filter(col("vec_id") % 9 === mod)
-            .select(col("vec_id").as("key"))
-            .join(h, Seq("key"), "left")
-            .select(lit(nm).as("surface"), col("key"),
-              coalesce(col("hits"), lit(0.0)).as("n"))
-        }
-        face(4, 10000000L, name).unionByName(face(5, 20000000L, ctlName))
-      }
-      // the four surface families are independent reads of
-      // already-purged layouts, but CONSTRUCTING each runs its own
-      // metadata jobs (bucket lists, stats scalars, meta frames — this
-      // gate is lifecycle-JOB-COUNT bound). Build them from a small
-      // thread pool so those driver round-trips overlap
-      // (optimization-guide §2.6, "overlap independent jobs").
-      val faceThunks: Seq[() => DataFrame] = Seq(
-        () => mhFaces(),
-        () => embFaces(q => Similarity.ivfPqTopKIndexed(s,
-          s"$base/ann", q, "vec_id", "embedding", k = 4, nProbe = 8))(
-          "ann", "ann_ctl"),
-        () => embFaces(q => graft.ops.Hnsw.hnswTopKIndexed(s,
-          s"$base/hnsw", q, "vec_id", "embedding", k = 4,
-          efSearch = 48))("hnsw", "hnsw_ctl"),
-        () => Retrieval.bm25TopKIndexed(s, s"$base/bm", "doc_id",
-            Bm25Queries, k = 10)
-          .select(concat(lit("bm25:"), col("qid")).as("surface"),
-            col("doc_id").as("key"), col("score").as("n")))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      try {
-        import scala.jdk.CollectionConverters._
-        // invokeAll waits for EVERY task before returning (so there is
-        // nothing left to cancel here); unwrap the ExecutionException
-        // so a failing face surfaces its real gate error, not the
-        // executor wrapper (r14 advice, low)
-        val faces = pool.invokeAll(
-          faceThunks.map(f => new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame = f()
-          }).asJava).asScala.map { fut =>
-          try fut.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          }
-        }
-        faces.foldLeft(sCat)(_ unionByName _)
-      } finally pool.shutdown()
-    }),
-
-    // cross-surface RTBF reaches the STREAMING SINKS' published
-    // corpora too (r11 — survey candidate #4 closed): a sink's
-    // `ingest_batch=N` corpus dirs hold the very rows its index was
-    // built from, and before this round forgetEverywhere purged
-    // catalog + indexes but left those rows readable — a manual
-    // rewrite per sink. One call now covers catalog, index families,
-    // AND sink corpora (SinkCorpus.purge — ONLY the batch partitions
-    // holding a purged id are rewritten; untouched partitions are
-    // never read, the 100 TB shape). The gate drives BOTH sinks for
-    // two batches each at NO-LINK thresholds — jaccard 1.0 over
-    // per-doc-unique suffixed texts (strict shingle-set equality is
-    // impossible across distinct uid suffixes), cosine 0.99 under the
-    // AnnSinkSpec-pinned 0.985 no-natural-pair fixture margin — so
-    // every batch row publishes deterministically and the oracle is
-    // the slice minus the purge set: the PURGE is under test here,
-    // not the dedup decisions (q_dedup_sink / q_ann_sink own those).
-    "q_rtbf_sinks" -> ((s, dir) => {
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_rtbfs_${tmpToken(dir)}").getAbsolutePath
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        concat_ws(" ", col("text"),
-          concat(lit("zqx"), col("doc_id"), lit("zqx"))).as("text"))
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val dBatchSrc = docs.filter(col("doc_id") % 5 === 1)
-      val aBatchSrc = emb.filter(col("vec_id") % 5 === 1)
-      // build ONCE per process (the q_dedup_sink convention): bench
-      // reps replay through the sinks' own batch markers and the
-      // purge re-runs idempotently (finds nothing affected), so the
-      // measured median is lifecycle RE-DRIVE cost, not a from-scratch
-      // rebuild per rep — exactly how a production compliance job
-      // behaves on re-run
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$base/mh/meta")))
-        TextDedup.saveMinhashIndex(docs.filter(col("doc_id") % 5 === 0),
-          "doc_id", "text", s"$base/mh", numHashes = 16, bands = 4)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$base/ann/codebook")))
-        Similarity.saveIvfPqIndex(emb.filter(col("vec_id") % 5 === 0),
-          "vec_id", "embedding", s"$base/ann", nCells = 8)
-      // two batches per sink — enough to prove affected-vs-untouched
-      // partition handling (the purge set straddles both); bench cost
-      // is lifecycle job count, so the batch count stays minimal
-      (0 to 1).foreach { b =>
-        graft.streaming.DedupSink.applyBatch(s, s"$base/mh",
-          s"$base/dcorp", "doc_id", "text", jaccardThreshold = 1.0,
-          dBatchSrc.filter(col("doc_id") % 2 === b), b.toLong)
-        graft.streaming.AnnSink.applyBatch(s, s"$base/ann",
-          s"$base/acorp", "vec_id", "embedding", cosineThreshold = 0.99,
-          aBatchSrc.filter(col("vec_id") % 2 === b), b.toLong,
-          nProbe = 4, batchCells = 8)
-      }
-      if (graft.sources.SnapshotStore.currentVersion(s, s"$base/cat")
-          .isEmpty)
-        graft.sources.SnapshotStore.commitAll(
-          Map("docs" -> dBatchSrc.select(col("doc_id"))), s"$base/cat")
-      val purge = dBatchSrc.select(col("doc_id").as("id"))
-        .unionByName(aBatchSrc.select(col("vec_id").as("id")))
-        .filter(col("id") % 9 === 4).distinct()
-      // compactIndexes = false: this gate's CHECKED evidence is the
-      // sink-corpus purge (it probes no index face); the index
-      // tombstone/compact lifecycle is q_rtbf_everywhere's evidence,
-      // and re-paying its job count here would be pure bench weight
-      graft.sources.SnapshotStore.forgetEverywhere(purge, s"$base/cat",
-        Map("docs" -> "doc_id"),
-        indexes = Seq(TextDedup.minhashIndex(s"$base/mh"),
-          Similarity.ivfPqIndex(s"$base/ann")),
-        sinkCorpora = Seq(s"$base/dcorp" -> "doc_id",
-          s"$base/acorp" -> "vec_id"),
-        compactIndexes = false)
-      graft.sources.SnapshotStore.readTable(s, s"$base/cat", "docs")
-        .select(lit("cat:docs").as("surface"), col("doc_id").as("key"),
-          lit(1.0).as("n"))
-        .unionByName(s.read.parquet(s"$base/dcorp")
-          .select(lit("dedup").as("surface"), col("doc_id").as("key"),
-            col("ingest_batch").cast("double").as("n")))
-        .unionByName(s.read.parquet(s"$base/acorp")
-          .select(lit("ann").as("surface"), col("vec_id").as("key"),
-            col("ingest_batch").cast("double").as("n")))
-    }),
-
-    // sentence-aligned chunking: budget-aligned packing that never cuts
-    // a sentence — chunk_id is a closed-form window cumsum (one keyed
-    // window + one aggregate; no sequential greedy state)
-    "q_sentence_chunks" -> ((s, dir) =>
-      graft.ops.Retrieval.sentenceChunks(
-        t(s, dir, "documents").filter(col("doc_id") % 4 === 1),
-        "doc_id", "text", budget = 200)),
-
-    // unicode script profile: per-doc character counts by writing
-    // system — the script evidence the stopword language vote can't
-    // see; exact integers, one narrow pass
-    "q_script_profile" -> ((s, dir) =>
-      graft.ops.TextAnalysis.scriptProfile(
-        t(s, dir, "documents").filter(col("doc_id") % 7 === 2),
-        "doc_id", "text")),
-
-    // feature hashing (signed hashing trick): fixed-dimension sparse
-    // vectors with NO vocabulary pass — the streaming-safe featurizer;
-    // md5 buckets/signs keep it engine-exact
-    "q_feature_hash" -> ((s, dir) =>
-      graft.ops.TextAnalysis.hashingVectorize(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 0),
-        "doc_id", "text", dim = 128)),
-
-    // snapshot upsert: a CDC batch (changed rows + fresh rows) applied
-    // to the current version through ONE atomic commit — delta wins on
-    // pk, the rest carries over; readers see old or new, never half
-    "q_snapshot_upsert" -> ((s, dir) => {
-      val path = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_ups_${tmpToken(dir)}").getAbsolutePath
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
-      graft.sources.SnapshotStore.commit(cust, path)
-      val delta = cust.filter(col("c_custkey") % 5 === 0)
-        .select(col("c_custkey"),
-          (col("c_acctbal") + lit(100.0)).as("c_acctbal"),
-          col("c_mktsegment"))
-        .unionByName(cust.filter(col("c_custkey") % 100 === 1)
-          .select((col("c_custkey") + 1000000L).as("c_custkey"),
-            col("c_acctbal"), col("c_mktsegment")))
-      graft.sources.SnapshotStore.upsertCommit(delta, path, "c_custkey")
-      graft.sources.SnapshotStore.read(s, path)
-    }),
-
-    // versioned table × manifest layout: commitClustered writes the
-    // generation range-clustered WITH its file min/max manifest, a
-    // plain commit supersedes it, then a PRUNED TIME-TRAVEL read of
-    // the first version — files outside the range never enter the
-    // scan, and rows equal the plain range filter (the oracle)
-    "q_snapshot_pruned" -> ((s, dir) => {
-      val path = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_snapprune_${tmpToken(dir)}").getAbsolutePath
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val ord = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val v1 = graft.sources.SnapshotStore.commitClustered(
-        ord, path, Seq("o_totalprice"), numFiles = 8)
-      graft.sources.SnapshotStore.commit(ord.limit(10), path)
-      graft.sources.SnapshotStore.readVersionPruned(s, path, v1,
-        Seq(("o_totalprice", 3000.0, 5000.0)))
-    }),
-
-    // right-to-be-forgotten over the store: commit, deleteCommit the
-    // targeted pks (one anti-join, new version), read back — the SQL
-    // oracle is the same anti-join, so the whole sequence gates exact
-    "q_snapshot_delete" -> ((s, dir) => {
-      val path = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_del_${tmpToken(dir)}").getAbsolutePath
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
-      graft.sources.SnapshotStore.commit(cust, path)
-      graft.sources.SnapshotStore.deleteCommit(
-        cust.filter(col("c_custkey") % 7 === 0).select(col("c_custkey")),
-        path, "c_custkey")
-      graft.sources.SnapshotStore.read(s, path)
-    }),
-
-    "q_snapshot_rollback" -> ((s, dir) => {
-      val path = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_snap_${tmpToken(dir)}").getAbsolutePath
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      val v1 = graft.sources.SnapshotStore.commit(
-        docs.filter(col("doc_id") % 3 === 0), path)
-      graft.sources.SnapshotStore.commit(docs, path)
-      graft.sources.SnapshotStore.rollback(s, path, v1)
-      graft.sources.SnapshotStore.read(s, path)
-    }),
-
-    // mergeable quantile histograms (DDSketch buckets): per-lang
-    // n_chars quantiles AND the grand total from ONE histogram table —
-    // bucket counts are order-free long sums, so rollups union
-    // EXACTLY (unlike estimates) and the whole chain is hash-exact
-    // vs an oracle reproducing the bucket/walk/decode arithmetic
-    "q_quantile_rollup" -> ((s, dir) => {
-      val hist = graft.operators.Audits.quantileHistogram(
-        t(s, dir, "documents"), Seq("lang"), "n_chars")
-      val qs = Seq(0.5, 0.9, 0.99)
-      val perLang = graft.operators.Audits
-        .rollupQuantiles(hist, Seq("lang"), qs)
-        .select(col("lang"), col("q"), col("n_rows"), col("approx_value"))
-      val total = graft.operators.Audits.rollupQuantiles(hist, Nil, qs)
-        .select(lit("__ALL__").as("lang"), col("q"), col("n_rows"),
-          col("approx_value"))
-      perLang.unionByName(total)
-    }),
-
-    // referential integrity: event user_ids with no customer row —
-    // the orphan-FK pre-flight before a star join drops or null-fills
-    // facts; distinct-key anti-join, no fact row joined
-    "q_fk_orphans" -> ((s, dir) =>
-      graft.operators.Audits.orphanKeys(
-        t(s, dir, "events"), "user_id",
-        t(s, dir, "customer"), "c_custkey")),
-
-    // join-key skew pre-flight: one-row shape report for the user_id
-    // key — the audit that decides whether q_salted_join's treatment
-    // is needed before a big run
-    "q_skew_audit" -> ((s, dir) =>
-      graft.operators.Audits.keySkew(t(s, dir, "events"), "user_id")),
-
-    // geospatial distance join: customers to suppliers within 120 km
-    // on synthetic key-derived coordinates — lossless adaptive grid
-    // blocking (never all-pairs); oracle brute-forces the same
-    // haversine tree over the small cross product
-    "q_geo_join" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select(col("c_custkey"),
-        ((col("c_custkey") % 1200).cast("double") / 10.0 - 60.0)
-          .as("clat"),
-        ((col("c_custkey") * 7 % 3600).cast("double") / 10.0 - 180.0)
-          .as("clon"))
-      val supp = t(s, dir, "supplier").select(col("s_suppkey"),
-        ((col("s_suppkey") * 13 % 1200).cast("double") / 10.0 - 60.0)
-          .as("slat"),
-        ((col("s_suppkey") * 31 % 3600).cast("double") / 10.0 - 180.0)
-          .as("slon"))
-      graft.operators.GeoJoin.withinDistance(
-        cust, "clat", "clon", Seq("c_custkey"),
-        supp, "slat", "slon", Seq("s_suppkey"), radiusKm = 120.0)
-    }),
-
-    // declarative data contract: a 7-rule expectation suite over the
-    // event stream evaluated as ONE aggregate over one scan — the
-    // pre-promotion gate a snapshot pipeline runs per version
-    "q_expectations" -> ((s, dir) => {
-      import graft.operators.Audits.Expect._
-      graft.operators.Audits.expectations(t(s, dir, "events"), Seq(
-        NotNull("event_id"),
-        NonBlank("event_type"),
-        Unique(Seq("event_id")),
-        Between("value", 0.0, 500.0),
-        Matches("event_type", "^[a-z_]+$"),
-        InSet("event_type", Seq("click", "view", "purchase", "signup")),
-        Holds("ts_set", col("ts").isNotNull)))
-    }),
-
-    // mergeable count-min frequency sketch: per-type CMS of user_id
-    // counters rolled up to the grand total by long SUM (the exact
-    // sketch union), then point-frequency probes for a fixed key set —
-    // est ≥ truth, engine-exact via the md5 bucket hash convention
-    "q_cms_rollup" -> ((s, dir) => {
-      val cms = graft.operators.Audits.cmsHistogram(
-        t(s, dir, "events"), Seq("event_type"), "user_id")
-      val total = graft.operators.Audits.rollupCms(cms, Nil)
-      graft.operators.Audits.cmsEstimate(total,
-        Seq("1", "2", "3", "42", "777", "100000"))
-    }),
-
-    // top-5 longest documents per (source, lang) bucket — grouped
-    // curation pick with a total order (unique doc_id last)
-    "q_group_topk" -> ((s, dir) =>
-      graft.ops.Ranking.groupedTopK(
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("source"), col("lang"), col("n_chars")),
-        Seq("source", "lang"),
-        Seq(col("n_chars").desc, col("doc_id").asc), k = 5)),
-
-    // deterministic exact-30-per-source subsample: content-hash order
-    // makes the pick reproducible AND nested across budget changes
-    "q_sample_k" -> ((s, dir) =>
-      graft.ops.Ranking.hashSampleK(
-        t(s, dir, "documents").select(col("doc_id"), col("source")),
-        Seq("source"), "doc_id", k = 30)),
-
-    // weighted sampling without replacement (Efraimidis–Spirakis):
-    // 100 docs picked with probability ∝ length, content-hash uniform
-    // + rounded-score/id tiebreak so the pick is engine-exact
-    "q_weighted_sample" -> ((s, dir) =>
-      graft.ops.Ranking.weightedSampleK(
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        "doc_id", col("n_chars"), k = 100)),
-
-    // token-budget mixture assembly: 4000-token mix at 50/25/12.5/12.5
-    // weights (binary-exact doubles) — src0's share exceeds its supply
-    // so it caps at rate 1, unlisted sources drop; keep decision is
-    // the deterministic md5 sampler
-    "q_token_mixture" -> ((s, dir) => {
-      val withTok = t(s, dir, "documents").select(
-        col("doc_id"), col("source"),
-        TextAnalysis.tokenCount(col("text")).as("n_tok"))
-      val rates = TextAnalysis.mixtureRates(withTok, "source", "n_tok",
-        budget = 4000L,
-        weights = Seq("src0" -> 0.5, "src1" -> 0.25,
-          "src2" -> 0.125, "src3" -> 0.125))
-      withTok.filter(TextAnalysis.mixtureSample(col("doc_id"),
-          col("source"), rates))
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // per-type p05/p95 winsorization — outlier clamping with the same
-    // percentile interpolation the oracle's quantile_cont uses
-    "q_winsorize" -> ((s, dir) => {
-      val ev = t(s, dir, "events").filter(col("value").isNotNull)
-      val pct = ev.groupBy(col("event_type")).agg(
-        expr("percentile(value, 0.05)").as("p05"),
-        expr("percentile(value, 0.95)").as("p95"))
-      ev.join(broadcast(pct), Seq("event_type"))
-        .select(col("event_id"), col("event_type"), col("value"),
-          least(greatest(col("value"), col("p05")), col("p95"))
-            .as("value_w"))
-    }),
-
-    // BPE apply: encode the corpus with merges learned by the trainer
-    // (rows-only gate — the iterative merge contraction has no SQL
-    // oracle; OpsSpec pins the encoding semantics). The subtoken list
-    // is flattened to one space-joined string: the checker sorts rows
-    // in pandas, which cannot order an array column.
-    // BPE apply under a PINNED ranked merge table (the
-    // q_unigram_encode pattern: train-once/segment-100TB is the
-    // production shape, and a fixed table makes the greedy
-    // leftmost-best-rank merge loop fully oracle-able — the DuckDB
-    // side replays it as a recursive CTE generated from the SAME
-    // literal, see bpeEncodeOracle). The trained-merge composition
-    // stays covered by q_bpe_train + OpsSpec parity pins.
-    "q_bpe_encode" -> ((s, dir) =>
-      TextAnalysis.applyBpe(t(s, dir, "documents"), "doc_id", "text",
-          PinnedBpeMerges)
-        .select(col("doc_id"), col("pos"),
-          concat_ws(" ", col("subtokens")).as("subtokens"))),
-
-    // salted skew join: hot fact keys spread over saltFactor reducers,
-    // result row-for-row the plain inner join (which is the oracle)
-    "q_salted_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("event_id"),
-        (col("user_id") % 25).cast("int").as("nk"), col("value"))
-      val dim = t(s, dir, "nation")
-        .select(col("n_nationkey").cast("int").as("nk"), col("n_name"))
-      graft.operators.SkewJoin.salted(ev, dim, Seq("nk"), saltFactor = 8)
-        .select(col("event_id"), col("n_name"), col("value"))
-    }),
-
-    // SCD2 history-preserving upsert: changed keys close their current
-    // version and append a new one; identical re-loads are no-ops
-    "q_scd2" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val target = c.select(col("c_custkey"),
-          col("c_acctbal").cast("double").as("acctbal"),
-          col("c_mktsegment").as("mktsegment"))
-        .withColumn("valid_from", lit(0L))
-        .withColumn("valid_to", lit(null).cast("long"))
-      val src = c.filter(col("c_custkey") % 2 === 0)
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 3 === 0,
-            col("c_acctbal").cast("double") + 100.0)
-            .otherwise(col("c_acctbal").cast("double")).as("acctbal"),
-          col("c_mktsegment").as("mktsegment"))
-      graft.operators.Scd2.merge(target, src, "c_custkey",
-        Seq("acctbal", "mktsegment"), lit(100L))
-    }),
-
-    // point-in-interval range join via interval binning — the equi-key
-    // rewrite of a join Spark would otherwise run as a nested loop
-    "q_range_join" -> ((s, dir) => {
-      val iv = t(s, dir, "nation").select(col("n_nationkey"),
-        (col("n_nationkey") * 4).cast("double").as("lo"),
-        (col("n_nationkey") * 4 + lit(3.5)).as("hi"))
-      graft.operators.RangeJoin.binned(
-        t(s, dir, "events").select(col("event_id"), col("value")),
-        "value", iv, "lo", "hi", binWidth = 2.0)
-        .select(col("event_id"), col("n_nationkey"), col("value"))
-    }),
-
-    // DSIR importance weights: per-doc bigram log-likelihood ratio
-    // between a target slice (doc_id % 10 = 0) and the raw corpus —
-    // the importance-resampling statistic for domain-targeted data
-    // selection (Xie et al. 2023)
-    "q_dsir" -> ((s, dir) =>
-      TextAnalysis.dsirWeights(t(s, dir, "documents"), "doc_id", "text",
-        isTarget = col("doc_id") % 10 === 0, n = 2)),
-
-    // word-repetition quality metrics (Gopher-style filter inputs)
-    "q_repetition" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.repetitionMetrics(col("text")).as("m"))
-        .select(col("doc_id"), col("m.n_words").as("n_words"),
-          col("m.dup_word_frac").as("dup_word_frac"),
-          col("m.top_bigram_frac").as("top_bigram_frac"))),
-
-    // Gopher document-quality rules: the published MassiveWeb metric
-    // set + keep/drop CASE in one narrow pass. Symbol/bullet/ellipsis
-    // structure is planted deterministically (the fixture text has
-    // none) so every rule fires on some doc
-    "q_gopher_rules" -> ((s, dir) => {
-      val planted = when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" ### tail trails off ..."),
-            lit("\n- bullet one\n- bullet two")))
-        .when(col("doc_id") % 7 === 1,
-          concat(col("text"), lit("\nshort trailing thought …")))
-        .otherwise(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), planted.as("t2"))
-        .select(col("doc_id"),
-          TextAnalysis.gopherMetrics(col("t2")).as("m"))
-        .select(col("doc_id"), col("m.n_words").as("n_words"),
-          col("m.mean_word_len").as("mean_word_len"),
-          col("m.frac_alpha_words").as("frac_alpha_words"),
-          col("m.symbol_ratio").as("symbol_ratio"),
-          col("m.frac_bullet_lines").as("frac_bullet_lines"),
-          col("m.frac_ellipsis_lines").as("frac_ellipsis_lines"),
-          col("m.n_stopwords").as("n_stopwords"),
-          TextAnalysis.gopherPass(col("m"), minWords = 20,
-            minStopwords = 1).as("keep"))
-    }),
-
-    // intra-doc line dedup + Gopher duplicate-line metrics: repeated
-    // boilerplate lines planted (a nav/footer string twice, and the
-    // whole body repeated for doc_id%3==0), first occurrence kept
-    "q_line_dedup" -> ((s, dir) => {
-      val t2 = concat_ws("\n", col("text"),
-        lit("subscribe to our newsletter"),
-        substring(col("text"), 1, 25),
-        lit("subscribe to our newsletter"),
-        when(col("doc_id") % 3 === 0, col("text"))
-          .otherwise(concat(lit("closing line for doc "),
-            col("doc_id").cast("string"))))
-      TextAnalysis.dedupLinesWithMetrics(
-        t(s, dir, "documents").select(col("doc_id"), t2.as("text")),
-        "doc_id", "text")
-    }),
-
-    // corpus Zipf / type-token profile: rank-frequency slope over the
-    // top-200 terms + TTR, one row
-    "q_zipf" -> ((s, dir) =>
-      TextAnalysis.zipfStats(t(s, dir, "documents"), "text", topN = 200)),
-
-    // vocabulary coverage: per-doc OOV rate under the corpus top-500
-    // term vocab (ties broken term-asc on both engines)
-    "q_vocab_coverage" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val vocab = TextAnalysis.buildVocab(docs, "text", maxSize = 500)
-        .map(_._1).toSeq
-      TextAnalysis.vocabCoverage(docs, "doc_id", "text", vocab)
-    }),
-
-    // clipped n-gram overlap (ROUGE-2 / BLEU-2 with clipping) between
-    // adjacent-doc pairs; the reference is seeded with the candidate's
-    // first 80 chars so every pair has real partial overlap
-    "q_ngram_overlap" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val pairs = d.as("a")
-        .join(d.as("b"), col("b.doc_id") === col("a.doc_id") + 1)
-        .select(col("a.doc_id").as("doc_id"), col("a.text").as("cand"),
-          concat(substring(col("a.text"), 1, 80), lit(" "),
-            col("b.text")).as("ref"))
-      TextAnalysis.ngramOverlap(pairs, "doc_id", "cand", "ref", n = 2)
-    }),
-
-    // CROSS-corpus boilerplate strip (C4's corpus-wide line removal):
-    // lines whose trimmed form appears in >=20 distinct docs drop
-    // everywhere. Planted: a banner in every doc, an indented banner
-    // variant (trim-matched), a half-corpus cookie line, and per-doc
-    // unique footer/closing lines that must survive
-    "q_boilerplate" -> ((s, dir) => {
-      val t2 = concat_ws("\n", col("text"),
-        lit("subscribe to our newsletter"),
-        when(col("doc_id") % 2 === 0, lit("  cookie consent required"))
-          .otherwise(concat(lit("footer for doc "),
-            col("doc_id").cast("string"))),
-        lit("   subscribe to our newsletter"),
-        concat(lit("closing line for doc "), col("doc_id").cast("string")))
-      TextAnalysis.stripBoilerplate(
-        t(s, dir, "documents").select(col("doc_id"), t2.as("text")),
-        "doc_id", "text", minDocs = 20)
-    }),
-
-    // character-distribution entropy (bits/char): the cheap gibberish
-    // detector — explode collapses map-side to docs×alphabet rows,
-    // p·log2(p) through the round-12 DECIMAL sum
-    "q_char_entropy" -> ((s, dir) =>
-      TextAnalysis.charEntropy(t(s, dir, "documents"), "doc_id",
-        "text")),
-
-    // C4 line/document cleaning: the published line rules (terminal
-    // punctuation, >=5 words, no "javascript") + document rules
-    // ("lorem ipsum", '{', >=3 surviving lines). The fixture text is
-    // single-line and unpunctuated, so the gate builds a deterministic
-    // 5-line document around it: 3 clean sentences, 1 short line, 1
-    // unpunctuated line, with javascript/lorem planted by doc_id mod —
-    // every rule fires, and the oracle reconstructs the same lines
-    "q_c4_filter" -> ((s, dir) => {
-      val line1 = concat(lit("The opening sentence keeps "),
-        substring(col("text"), 1, 30), lit(" going fine."))
-      val line4 = when(col("doc_id") % 7 === 0,
-        lit("This javascript line would pollute the corpus badly."))
-        .otherwise(lit("Another clean sentence with enough words here!"))
-      val line5 = when(col("doc_id") % 11 === 0,
-        lit("Lorem ipsum dolor sit amet forever."))
-        .otherwise(concat(lit("Closing thoughts from source "),
-          col("source"), lit(" wrap this up?")))
-      val t2 = concat_ws("\n", line1, lit("too short"),
-        lit("unpunctuated line with plenty of words present"),
-        line4, line5)
-      TextAnalysis.c4Filter(
-        t(s, dir, "documents").select(col("doc_id"), t2.as("text")),
-        "doc_id", "text", minLineWords = 5, minLines = 3)
-    }),
-
-    // benchmark-contamination check: per held-out doc, max shingle
-    // containment against the training corpus
-    "q_contamination" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      TextDedup.contaminationScores(
-        d.filter(col("doc_id") % 5 === 0),
-        d.filter(col("doc_id") % 5 =!= 0),
-        "doc_id", "text", shingleLen = 5, threshold = 0.5)
-    }),
-
-    // span-level contamination forensics: WHERE in each test doc the
-    // leaked shingles sit, per qualifying (test, train) pair
-    "q_contamination_spans" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      TextDedup.contaminationSpans(
-        d.filter(col("doc_id") % 5 === 0),
-        d.filter(col("doc_id") % 5 =!= 0),
-        "doc_id", "text", shingleLen = 5, threshold = 0.5)
-    }),
-
-    // PII scrubbing: plant synthetic emails/SSNs/phones, redact with
-    // the typed placeholders, report per-doc whether anything changed
-    "q_redact_pii" -> ((s, dir) => {
-      val planted = when(col("doc_id") % 5 === 0,
-        concat(col("text"), lit(" contact user"),
-          col("doc_id").cast("string"), lit("@example.com now")))
-        .when(col("doc_id") % 5 === 1,
-          concat(col("text"), lit(" ssn 123-45-6789 end")))
-        .when(col("doc_id") % 5 === 2,
-          concat(col("text"), lit(" call 555-123-4567 today")))
-        .otherwise(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), planted.as("__planted"))
-        .select(col("doc_id"),
-          TextAnalysis.redactPii(col("__planted")).as("clean"),
-          (TextAnalysis.redactPii(col("__planted")) =!= col("__planted"))
-            .as("was_redacted"))
-    }),
-
-    // deterministic content-hash train/valid/test split — stable across
-    // runs, row order, and cluster size; per-split counts + value sums
-    "q_data_split" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("split",
-          TextAnalysis.assignSplit(col("doc_id"), trainPct = 0.8,
-            validPct = 0.1))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"))),
-
-    // corpus-wide word-bigram frequencies, top-k with deterministic
-    // tiebreak — the n-gram language-statistics pass of a training-data
-    // pipeline (exercises wordShingles end to end)
-    "q_word_ngrams" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(explode(TextDedup.wordShingles(col("text"), 2)).as("gram"))
-        .filter(col("gram") =!= "")
-        .groupBy(col("gram"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("n_docs").desc, col("gram").asc)
-        .limit(20)),
-
-    // frequency-ordered token vocabulary (the dictionary half of a
-    // tokenizer): top-256 tokens, id = deterministic rank
-    "q_vocab" -> ((s, dir) =>
-      TextAnalysis.vocabDf(s,
-        TextAnalysis.buildVocab(t(s, dir, "documents"), "text", 256))),
-
-    // dictionary encoding: (doc, pos, token_id), OOV = -1 against a
-    // deliberately tiny top-64 vocabulary so both branches are exercised
-    "q_tokenize" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val vocab = TextAnalysis.buildVocab(docs, "text", 64)
-      TextAnalysis.tokenize(docs.filter(col("doc_id") % 25 === 0),
-        "doc_id", "text", vocab)
-    }),
-
-    // BPE trainer statistics (first merge iteration): corpus-wide
-    // counts of adjacent character pairs inside words, top-50 with a
-    // total tiebreak order — pure codegen (explode+substring, no HOFs)
-    "q_bpe_pairs" -> ((s, dir) => {
-      val w = t(s, dir, "documents")
-        .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
-        .filter(length(col("w")) >= 2)
-      w.select(col("w"), explode(sequence(lit(1), length(col("w")) - 1)).as("i"))
-        .select(expr("substring(w, i, 2)").as("pair"))
-        .groupBy(col("pair")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("pair").asc)
-        .limit(50)
-    }),
-
-    // full BPE trainer (q_bpe_pairs is its first iteration): one
-    // corpus-scale word-count aggregate, then the driver merge loop on
-    // the bounded word-frequency table. Deterministic merge list.
-    // ORACLED (new in r9): the training loop is replayed in DuckDB as
-    // 40 UNROLLED materialized-CTE iterations (see [[bpeTrainOracle]])
-    // — count pairs, argmax with the (count DESC, left, right)
-    // tiebreak, apply the merge. The only sequential step — greedy
-    // LEFTMOST non-overlapping application — reduces to a windowed
-    // islands-parity rule because overlapping candidates can only be
-    // CONSECUTIVE runs of one repeated symbol (l==r): take even
-    // offsets within each candidate island.
-    "q_bpe_train" -> ((s, dir) => {
-      val merges = TextAnalysis.trainBpeMerges(
-        t(s, dir, "documents"), "text", nMerges = 40)
-      TextAnalysis.bpeMergesDf(s, merges)
-    }),
-
-    // WordPiece trainer (r11 — the THIRD subword family, completing
-    // the set real LLM pipelines choose from: BPE, unigram-LM,
-    // WordPiece/BERT). Same bounded-driver shape as q_bpe_train; the
-    // merge objective is likelihood gain c(l,r)/(c(l)·c(r)) instead of
-    // raw pair frequency. Oracled by FULL SQL replay: the score is ONE
-    // IEEE tree (one multiply, one divide over exact integer counts),
-    // so DuckDB's doubles are bit-equal and the per-iteration argmax
-    // agrees; the output carries the integer counts behind every
-    // choice so the oracle re-derives each merge, not just trusts it.
-    "q_wordpiece_train" -> ((s, dir) => {
-      val merges = TextAnalysis.trainWordPiece(
-        t(s, dir, "documents"), "text", nMerges = 40)
-      TextAnalysis.wordPieceMergesDf(s, merges)
-    }),
-
-    // WordPiece encoder: greedy longest-match-first against the
-    // trained vocab (the BERT WordpieceTokenizer algorithm; an
-    // unmatchable position voids the whole word to [UNK]). Broadcast
-    // vocab, narrow per-word kernel — no shuffle. The vocab is the
-    // PINNED fixture-trained one (PinnedWordPieceVocab — tripwire spec
-    // re-derives it, the q_bpe_encode pattern), and the oracle replays
-    // the greedy walk as a recursive CTE over distinct words.
-    "q_wordpiece_encode" -> ((s, dir) =>
-      TextAnalysis.applyWordPiece(t(s, dir, "documents"), "doc_id",
-          "text", PinnedWordPieceVocab.toSet)
-        .select(col("doc_id"), col("pos"),
-          concat_ws(" ", col("subtokens")).as("subtokens"))),
-
-    // unigram-LM (SentencePiece-family) tokenizer trainer: the other
-    // major subword family beside BPE. Same bounded-driver shape as
-    // q_bpe_train — one corpus word-count aggregate, then driver EM
-    // over the bounded word table. Rows-only BY NECESSITY (unlike
-    // q_bpe_train, which unrolls into exact SQL): the EM scores are
-    // math.log values, and JVM fdlibm vs DuckDB libm may differ in the
-    // last ulp — a 1-ulp flip in a Viterbi comparison changes the
-    // winning segmentation, hence the COUNTS, hence the vocabulary
-    // itself, so even the integer part of the output is not
-    // cross-engine stable. OpsSpec pins exact parity on a hand-checked
-    // corpus instead
-    // unigram-LM tokenizer training. ORACLED since r11 by outcome
-    // pinning: ONE exact integer word-count aggregate + driver
-    // arithmetic = bit-deterministic at any layout (tripwire +
-    // repartition invariance in PqPinSpec); the libm-ulp blocker only
-    // ever applied to RECOMPUTING the logs cross-engine
-    "q_unigram_train" -> ((s, dir) => {
-      val vocab = TextAnalysis.trainUnigramLm(
-        t(s, dir, "documents"), "text", vocabSize = 60)
-      TextAnalysis.unigramVocabDf(s, vocab)
-    }),
-
-    // unigram apply: Viterbi-segment the corpus under a PINNED vocab
-    // (broadcast table, narrow pass — the exact production shape of
-    // "train once, segment 100 TB" via saveUnigramVocab). The vocab is
-    // pinned as a shared literal with dyadic log-probs (multiples of
-    // 0.25 — every DP path sum is binary-exact in both engines), which
-    // makes the Viterbi lattice walk fully oracle-able: the DuckDB
-    // side replays it as a recursive CTE generated from the SAME
-    // literal (see unigramEncodeOracle). The trained-vocab composition
-    // stays covered by q_unigram_train + OpsSpec parity pins. Pieces
-    // flattened to one space-joined string — the checker cannot sort
-    // an array column
-    "q_unigram_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextAnalysis.applyUnigram(docs, "doc_id", "text", PinnedUnigramVocab)
-        .select(col("doc_id"), col("pos"),
-          concat_ws(" ", col("pieces")).as("pieces"))
-    }),
-
-    // deterministic global shuffle: dense 0-based training positions
-    // in md5(id+salt) order, distributed rank (no global window)
-    "q_shuffle" -> ((s, dir) =>
-      graft.ops.Packing.shufflePositions(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "doc_id", "epoch0")),
-
-    // training shards: the shuffled order chopped into loader-facing
-    // fixed-size blocks (shard = pos / N) — writeShards materializes
-    // one file per shard; the gate verifies the membership math
-    "q_shards" -> ((s, dir) =>
-      graft.ops.Packing.shardPositions(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "doc_id", "epoch0", docsPerShard = 64)),
-
-    // curriculum interleave (r11, rank made scale-safe r12):
-    // easiest-first within each domain, round-robin across domains,
-    // assigned in CLOSED FORM ((rank−1)·nDomains + domainIdx) — a
-    // total training order that never needs a global sort OR a
-    // per-domain window (a Window.partitionBy(domain) holds each
-    // domain's whole row set in one task). Distributed range rank +
-    // broadcast domain-index/offset join; exact SQL replay.
-    "q_curriculum" -> ((s, dir) =>
-      graft.ops.Packing.curriculumInterleave(
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("lang"), col("n_chars")),
-        "doc_id", "lang", "n_chars")
-        .select(col("doc_id"), col("lang"), col("domain_idx"),
-          col("domain_rank"), col("global_pos"))),
-
-    // UniMax budget allocation (r11, Chung et al. 2023): split a token
-    // budget across languages as uniformly as the per-language repeat
-    // cap allows — smallest language first, each takes
-    // min(maxEpochs·tokens, ⌊remaining/left⌋), leftovers waterfall to
-    // the larger languages. All-integer floor arithmetic over the
-    // bounded language table (the corpus-scale work is the one token
-    // aggregate), replayed in SQL as a recursive CTE. The fixture
-    // exercises BOTH regimes: caps bind for the four small languages,
-    // the budget binds for en.
-    "q_unimax" -> ((s, dir) =>
-      graft.ops.Packing.unimaxAllocation(
-        t(s, dir, "documents").groupBy(col("lang"))
-          .agg(sum(length(col("text"))).as("tokens")),
-        "lang", "tokens", budget = 400000L, maxEpochs = 3)),
-
-    // exact per-group quantiles (linear interpolation — Spark
-    // `percentile` and DuckDB `quantile_cont` share the (n-1)p+1
-    // definition, and integer inputs keep the interpolation bit-exact)
-    "q_quantiles" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("n_chars")).as("min_chars"),
-          max(col("n_chars")).as("max_chars"),
-          expr("percentile(n_chars, 0.5)").as("p50"),
-          expr("percentile(n_chars, 0.9)").as("p90"))),
-
-    // per-type percent-rank (empirical CDF position) under rank ties —
-    // the distribution-free normalization. NOT a keyed window (r12,
-    // same audit catch as q_ntile): distributed range rank within the
-    // bounded event_type domain, tie-minimized through one map-side-
-    // combined (type, value) aggregate + AQE-skew-splittable join
-    // back, then the closed form (rank−1)/(c−1) — bit-equal to
-    // percent_rank (one exact-integer IEEE divide)
-    "q_percent_rank" -> ((s, dir) => {
-      val ev = t(s, dir, "events").filter(col("value").isNotNull)
-        .select(col("event_id"), col("event_type"), col("value"))
-      val (ranked, _) = graft.ops.Packing.boundedDomainRank(
-        ev, "event_type", Seq(col("value"), col("event_id")))
-      val ties = ranked.groupBy(col("event_type"), col("value"))
-        .agg(min(col("__domain_rank")).as("__tie_rank"))
-      ranked.join(ties, Seq("event_type", "value"))
-        .select(col("event_id"), col("event_type"), col("value"),
-          when(col("__domain_count") > 1L,
-            (col("__tie_rank") - 1L).cast("double") /
-              (col("__domain_count") - 1L).cast("double"))
-            .otherwise(lit(0.0)).as("pr"))
-    }),
-
-    // per-type robust scaling (median/IQR) — the outlier-insensitive
-    // normalization; quantiles use the SAME interpolation as the
-    // oracle's quantile_cont (proven by q_quantiles/q_winsorize)
-    "q_robust_scale" -> ((s, dir) => {
-      val ev = t(s, dir, "events").filter(col("value").isNotNull)
-      val q = ev.groupBy(col("event_type")).agg(
-        expr("percentile(value, 0.25)").as("q1"),
-        expr("percentile(value, 0.5)").as("med"),
-        expr("percentile(value, 0.75)").as("q3"))
-      ev.join(broadcast(q), Seq("event_type"))
-        .select(col("event_id"), col("event_type"), col("value"),
-          when(!(col("q3") - col("q1") > 0.0), lit(0.0))
-            .otherwise((col("value") - col("med")) /
-              (col("q3") - col("q1"))).as("scaled"))
-    }),
-
-    // per-type z-score normalization — exact DECIMAL first/second
-    // moments, one fixed IEEE tree for mean/var/z on both engines;
-    // degenerate groups (n<2 or zero variance) emit z=0
-    "q_zscore" -> ((s, dir) => {
-      val ev = t(s, dir, "events").filter(col("value").isNotNull)
-      val nD = col("n").cast("double")
-      val s1 = col("s1")
-      val s2 = col("s2")
-      val mean = s1 / nD
-      val variance = (nD * s2 - s1 * s1) / (nD * (nD - lit(1.0)))
-      val stats = ev.groupBy(col("event_type")).agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("s1"),
-        sum((col("value") * col("value")).cast("decimal(28,6)"))
-          .cast("double").as("s2"))
-      ev.join(broadcast(stats), Seq("event_type"))
-        .select(col("event_id"), col("event_type"), col("value"),
-          when(col("n") < 2 || !(variance > 0.0), lit(0.0))
-            .otherwise((col("value") - mean) / sqrt(variance)).as("z"))
-    }),
-
-    // equi-depth decile bucketing per event type — the feature-
-    // engineering face of q_quantiles: every row gets its decile under
-    // a total order (value, event_id). NOT a keyed window (r12):
-    // event_type is bounded-cardinality, so ntile().over(partitionBy(
-    // event_type)) holds each type's whole row set in one task —
-    // closed-form ntile over the distributed range rank instead
-    "q_ntile" -> ((s, dir) =>
-      graft.ops.Packing.equiDepthBuckets(
-        t(s, dir, "events").filter(col("value").isNotNull)
-          .select(col("event_id"), col("event_type"), col("value")),
-        "event_type", Seq(col("value"), col("event_id")), 10, "decile")
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("decile"))),
-
-    // data mixing: per-language sampling rates over one corpus pass,
-    // content-deterministic (md5-threshold) and nested across reweights
-    "q_mixture" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      docs.filter(TextAnalysis.mixtureSample(col("doc_id"), col("lang"),
-          Seq("en" -> 0.5, "zh" -> 1.0, "de" -> 0.25, "fr" -> 0.1,
-            "es" -> 0.0)))
-        .select(col("doc_id"), col("lang"), col("source"))
-    }),
-
-    // GPT-style sequence packing: concat docs in id order, cut every
-    // 512 tokens; distributed prefix sum, pure integer arithmetic
-    "q_seq_pack" -> ((s, dir) =>
-      graft.ops.Packing.packSequences(
-        t(s, dir, "documents"), "doc_id", "text", seqLen = 512)),
-
-    // per-sequence occupancy over the packing (every sequence full at
-    // 512 toks except the ragged last)
-    "q_pack_stats" -> ((s, dir) =>
-      graft.ops.Packing.packStats(graft.ops.Packing.packSequences(
-        t(s, dir, "documents"), "doc_id", "text", seqLen = 512))),
-
-    // top-k TF-IDF terms per document (deterministic, log-free idf —
-    // see TextAnalysis.tfIdfTopK for the bit-stability argument)
-    "q_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfIdfTopK(t(s, dir, "documents")
-          .filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", k = 5)),
-
-    // SimHash near-dup — oracled: the FastHash kernel is replayed in
-    // DuckDB HUGEINT arithmetic (see oracleSql)
-    "q_simhash" -> ((s, dir) =>
-      TextDedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
-        maxHamming = 12)),
-
-    // brute-force cosine top-k (correctness baseline for ANN)
-    "q_embed_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(
-        emb, emb.filter(col("vec_id") % 20 === 0),
-        "vec_id", "embedding", k = 3)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // sharded graph-ANN (HNSW): disjoint hash shards each build a
-    // deterministic graph (id-hash levels, sorted-id insertion) and
-    // search the broadcast queries; the candidate union re-ranks with
-    // the EXACT cosine kernel. Oracled against the same brute-force
-    // SQL as q_embed_topk: at these parameters the union provably
-    // covers the true top-3 (HnswSpec pins recall 1.0 on the fixture),
-    // so approximate candidate generation + exact re-rank must equal
-    // the exhaustive baseline row for row
-    "q_hnsw_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.ops.Hnsw.topK(emb, emb.filter(col("vec_id") % 20 === 0),
-        "vec_id", "embedding", k = 3, m = 8, efConstruction = 48,
-        efSearch = 48, nShards = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // persisted HNSW (r11, the 4th index family): save the sharded
-    // graphs, then probe the STORED adjacency — shares q_hnsw_topk's
-    // brute-force oracle verbatim because a freshly saved index
-    // answers bit-identically to the in-memory topK at equal
-    // parameters (probe-parity spec-pinned in HnswIndexSpec) and
-    // recall at these parameters is 1.0 on the fixture (HnswSpec pin)
-    "q_hnsw_index" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val idx = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_hnswidx_${tmpToken(dir)}").getAbsolutePath
-      val ip = new org.apache.hadoop.fs.Path(idx)
-      ip.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ip, true)
-      graft.ops.Hnsw.saveHnswIndex(emb, "vec_id", "embedding", idx,
-        m = 8, efConstruction = 48, nShards = 4)
-      graft.ops.Hnsw.hnswTopKIndexed(s, idx,
-        emb.filter(col("vec_id") % 20 === 0), "vec_id", "embedding",
-        k = 3, efSearch = 48)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // the SERVING face of the persisted HNSW family (r11): load once,
-    // probe repeatedly — the shard graphs persist as built objects in
-    // the block manager, so every probe after the first skips the
-    // scan, the shard shuffle, and the O(nodes+edges) graph builds
-    // (hnswTopKIndexed pays all three per call; that is the right
-    // shape for one-shot probes, this is the right shape for a query
-    // service). The gate probes TWICE and returns the second — the
-    // answer the driver hashes is the one served from cache, proving
-    // the cached path oracle-exact, not just the cold one. Shares the
-    // brute-force oracle via the same probe kernel + recall pin as
-    // q_hnsw_index.
-    "q_hnsw_handle" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val idx = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_hnswhdl_${tmpToken(dir)}").getAbsolutePath
-      val ip = new org.apache.hadoop.fs.Path(idx)
-      ip.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ip, true)
-      graft.ops.Hnsw.saveHnswIndex(emb, "vec_id", "embedding", idx,
-        m = 8, efConstruction = 48, nShards = 4)
-      val h = graft.ops.Hnsw.loadHnswIndex(s, idx)
-      val q = emb.filter(col("vec_id") % 20 === 0)
-      h.topK(q, "vec_id", "embedding", k = 3, efSearch = 48).count()
-      val warm = h.topK(q, "vec_id", "embedding", k = 3, efSearch = 48)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-        // materialize THROUGH the cache before unload releases it
-        .localCheckpoint()
-      h.unload()
-      warm
-    }),
-
-    // kNN label spread: every non-seed vector classified by majority
-    // vote of its 5 nearest seeds (vec_id % 10 == 0 keep their true
-    // label); vote ties break to the smallest label
-    "q_knn_classify" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.knnClassify(
-        emb.filter(col("vec_id") % 10 =!= 0)
-          .select(col("vec_id"), col("embedding")),
-        emb.filter(col("vec_id") % 10 === 0),
-        "vec_id", "embedding", "label", k = 5)
-    }),
-
-    // hard-negative mining: top-k nearest NON-relevant vectors per
-    // query (qrels = matching residues mod 7), ranks dense after the
-    // exclusion — the near-miss training examples for a dual encoder
-    "q_hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") % 20 === 0)
-      val qrels = queries.select(col("vec_id").as("query_id"))
-        .join(emb.select(col("vec_id").as("rel_id")),
-          col("rel_id") % 7 === col("query_id") % 7)
-      Similarity.hardNegatives(emb, queries, "vec_id", "embedding",
-          qrels, k = 3)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // IVF-probed approximate top-k. ORACLED in full (r11, the
-    // q_semdedup recompute technique extended to the probe path):
-    // the seeded assignment is a pure per-row function, so DuckDB
-    // recomputes assignment → per-cell means → per-query top-nProbe
-    // cell selection → exact in-cell cosine top-k. The two float
-    // compares that could diverge cross-engine are margin-pinned in
-    // SemDedupPinSpec at both SFs: the 4th-vs-5th probe-cell gap
-    // (≥ 2.6e-4; cell means are order-dependent double sums, so they
-    // differ in ulps between engines — far below the gap) and the
-    // adjacent candidate-cosine gaps through rank 4 (≥ 1.3e-4; exact
-    // float ties are safe either way — both engines break them on
-    // id). The output drops the cosine column, so no float crosses
-    // the gate boundary at all.
-    "q_simsearch_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", 16)
-      Similarity.ivfTopK(assigned, emb.filter(col("vec_id") % 20 === 0),
-        "vec_id", "embedding", k = 3, nCells = 16, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // product-quantized ANN: 64 floats → 16 byte codes, ADC shortlist,
-    // exact cosine re-rank (recall vs brute force spec-asserted).
-    // ORACLED since r11: quantized-long centroid training is a pure
-    // function of content → output pinned (SimsearchPins, PqPinSpec
-    // tripwire)
-    "q_simsearch_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = Similarity.pqTrain(emb, "vec_id", "embedding")
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") % 20 === 0),
-        "vec_id", "embedding", cb, k = 3)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // IVF-PQ composition (the FAISS IVF-ADC shape): cell-probe pruning
-    // over 16-byte PQ codes + exact re-rank. ORACLED since r11 via the
-    // SimsearchPins outcome pin (quantized training + seeded cells =
-    // pure function); recall + nProbe=nCells≡pure-PQ equivalence in
-    // OpsSpec
-    "q_simsearch_ivfpq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", 16)
-      val cb = Similarity.pqTrain(emb, "vec_id", "embedding")
-      Similarity.ivfPqTopK(assigned, emb.filter(col("vec_id") % 20 === 0),
-        "vec_id", "embedding", cb, k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // IVF-PQ over its PERSISTED layout: codes hive-partitioned by
-    // cell_id (saveIvfPqIndex) so the probe filter prunes input
-    // splits, then the same ADC/re-rank kernel. ORACLED since r11 via
-    // the SimsearchPins outcome pin; indexed≡in-memory equality and
-    // measured file skipping are spec-asserted in OpsSpec
-    "q_simsearch_indexed" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val idx = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_ivfpq_${tmpToken(dir)}").getAbsolutePath
-      Similarity.saveIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nCells = 16)
-      Similarity.ivfPqTopKIndexed(s, idx,
-        emb.filter(col("vec_id") % 20 === 0),
-        "vec_id", "embedding", k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // streaming dedup-ingest as a gated operator: index 2/3 of the
-    // corpus, drive the remaining third through one sink micro-batch —
-    // docs near-duplicating the indexed corpus (the testdata's planted
-    // dup groups) drop, intra-batch groups collapse, survivors publish
-    // + grow the index. Oracled end-to-end (dedupSinkOracle): the
-    // DuckDB side replays the banding, both verify joins, and the
-    // component collapse, so the published survivor set must match
-    // row-for-row. Lifecycle semantics in DedupSinkSpec. Bench reps
-    // after the first hit the replay guard and return the same
-    // written survivors — deterministic by construction.
-    "q_dedup_sink" -> ((s, dir) => {
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_dsk_${tmpToken(dir)}").getAbsolutePath
-      val docs = t(s, dir, "documents")
-      val idxP = new org.apache.hadoop.fs.Path(s"$base/idx/meta")
-      if (!idxP.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .exists(idxP))
-        TextDedup.saveMinhashIndex(docs.filter(col("doc_id") % 3 =!= 0),
-          "doc_id", "text", s"$base/idx", numHashes = 32, bands = 8)
-      graft.streaming.DedupSink.applyBatch(s, s"$base/idx",
-        s"$base/corpus", "doc_id", "text", jaccardThreshold = 0.8,
-        docs.filter(col("doc_id") % 3 === 0), 0L)
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // streaming SEMANTIC-dedup ingest (AnnSink — DedupSink's
-    // embedding-space twin): index 2/3 of the vectors, drive the
-    // remaining third + planted scaled near-dups through one sink
-    // micro-batch — planted dups drop against the index (exact
-    // re-ranked cosine), within-batch twins collapse to min id,
-    // survivors publish + append. ORACLED at the survivor-set level
-    // (r9 verdict #6): the fixture has NO natural pair at cosine ≥
-    // 0.985 at any SF (measured in DuckDB, 0.005 margin below the 0.99
-    // gate threshold — pinned by AnnSinkSpec's fixture-assumption
-    // test), so the k-means internals cannot change the outcome — a
-    // planted dup's indexed twin is its own cell's top probe and the
-    // globally-minimal-ADC shortlist entry, batch twins share their
-    // original's cell, and no other pair reaches threshold. The
-    // survivor set is therefore EXACTLY the vec_id % 3 = 0 slice; any
-    // probe/SemDeDup/publish regression (a planted dup surviving, an
-    // original wrongly dropped) flips the hash. Replay/crash-window/
-    // streamed semantics in AnnSinkSpec. Reps replay via the batch
-    // marker — deterministic.
-    "q_ann_sink" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_annsk_${tmpToken(dir)}").getAbsolutePath
-      val cbP = new org.apache.hadoop.fs.Path(s"$base/idx/codebook")
-      if (!cbP.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .exists(cbP))
-        graft.ops.Similarity.saveIvfPqIndex(
-          emb.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding",
-          s"$base/idx", nCells = 16)
-      val planted = emb.filter(col("vec_id") % 3 =!= 0 &&
-          col("vec_id") % 40 === 1)
-        .select((col("vec_id") + 2000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(2.0f)).as("embedding"),
-          col("label"))
-      val batchBase = emb.filter(col("vec_id") % 3 === 0)
-      val twins = batchBase.filter(col("vec_id") % 30 === 0)
-        .select((col("vec_id") + 3000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(3.0f)).as("embedding"),
-          col("label"))
-      graft.streaming.AnnSink.applyBatch(s, s"$base/idx", s"$base/corpus",
-        "vec_id", "embedding", cosineThreshold = 0.99,
-        batchBase.unionByName(planted).unionByName(twins), 0L,
-        nProbe = 8, batchCells = 16)
-        .select(col("vec_id"), col("label"))
-    }),
-
-    // incremental ANN index maintenance: save the index on 2/3 of the
-    // embeddings, APPEND the remaining third (saved-means routing,
-    // saved-codebook encoding, new files only), then probe — appended
-    // vectors must be retrievable through the same pruned layout.
-    // ORACLED since r11 via the SimsearchPins outcome pin; append
-    // semantics spec'd
-    "q_simsearch_append" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val idx = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_ivfpqa_${tmpToken(dir)}").getAbsolutePath
-      Similarity.saveIvfPqIndex(emb.filter(col("vec_id") % 3 =!= 0),
-        "vec_id", "embedding", idx, nCells = 16)
-      Similarity.appendIvfPqIndex(emb.filter(col("vec_id") % 3 === 0),
-        "vec_id", "embedding", idx)
-      Similarity.ivfPqTopKIndexed(s, idx,
-        emb.filter(col("vec_id") % 20 === 0),
-        "vec_id", "embedding", k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // OPQ: PQ in a PCA-rotated space (Ge et al. parametric solution) —
-    // eigenvalue allocation balances per-subspace variance before
-    // encoding; recall lift vs plain PQ spec-asserted (0.33 → 1.00 on
-    // variance-skewed data). ORACLED since r11 via the SimsearchPins
-    // outcome pin (the rotation rides Pca.train's order-free moments,
-    // the codebook the quantized-long trainer — a pure function; the
-    // eigensolve still has no SQL recompute, which the pin sidesteps).
-    "q_simsearch_opq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.opqTopK(emb, emb.filter(col("vec_id") % 20 === 0),
-        "vec_id", "embedding", k = 3)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // symmetric int8 embedding quantization (storage/bandwidth path),
-    // exploded to scalar rows for hash-exact verification
-    "q_embed_quantize" -> ((s, dir) =>
-      Similarity.quantizeInt8(
-        t(s, dir, "embeddings").filter(col("vec_id") % 10 === 0),
-        "vec_id", "embedding")),
-
-    // embedding-cosine near-dup, exact pairs (dedup-flavored)
-    "q_embed_neardup" -> ((s, dir) =>
-      Similarity.cosineNearDupPairs(t(s, dir, "embeddings"),
-        "vec_id", "embedding", threshold = 0.4)),
-
-    // embedding-cosine near-dup, LSH-bucketed scale path. The gate
-    // plants power-of-two-scaled copies (2.0f multiply is EXACT in
-    // float): sign-LSH is invariant to positive scaling, so every
-    // (id, id+1000000) planted pair collides in all tables at cosine
-    // exactly 1.0 — the r8 verdict flagged the old 0.4-threshold gate
-    // vacuous (sign-LSH has ~0 recall at cos 0.4 by construction, so
-    // 0 rows verified nothing). ORACLED (new in r9): because the only
-    // pairs ≥0.99 in the fixture are the planted exact-scaled copies
-    // (max natural cosine at sf0.01 is 0.513) and LSH recall on
-    // exact-scaled copies is 1 by IEEE sign preservation, the LSH
-    // output equals the exhaustive exact pair set, which DuckDB
-    // recomputes with the same union + double cosine. The gate drops
-    // the cosine column (ids only) so the hash compare never rides a
-    // last-ulp float difference between engines.
-    "q_embed_neardup_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val planted = emb.filter(col("vec_id") % 50 === 0)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(2.0f)).as("embedding"),
-          col("label"))
-      Similarity.cosineNearDupPairsLsh(emb.unionByName(planted),
-        "vec_id", "embedding", threshold = 0.99, dim = 64)
-        .select(col("id_a"), col("id_b"))
-    }),
-
-    // SemDeDup semantic dedup: cells bound the candidate pairs;
-    // survivors = min-id per cosine-threshold component. ORACLED in
-    // full (r10 advice #2): with refineIterations = 0 the centroids
-    // are the SEED vectors (first nCells by id — no float k-means
-    // iteration anywhere), so the whole pipeline is a pure per-row
-    // function of content: DuckDB recomputes assignment (argmax
-    // cosine to seeds, lowest-id ties), within-cell pairs >= 0.4, the
-    // connected components (recursive closure), and the min-id
-    // survivor rule. Fixture margins guard the cross-engine float
-    // compares (min |cos-0.4| = 1.3e-4, min assignment gap = 2.3e-4
-    // at sf0.01 — SemDedupPinSpec pins both at both SFs). The REFINED
-    // variant stays spec-covered in OpsSpec (recall vs exact baseline);
-    // its centroid update is the one float-iteration step that has no
-    // cross-engine form (partition-order float sums).
-    "q_semdedup" -> ((s, dir) =>
-      Similarity.semDedup(t(s, dir, "embeddings"), "vec_id", "embedding",
-        nCells = 16, threshold = 0.4, refineIterations = 0)
-        .select(col("vec_id"), col("label"))),
-
-    // PCA whitening of the embedding table — deterministic training
-    // (order-free quantized-long moments + fixed-sweep Jacobi).
-    // ORACLED since r11 by outcome pinning: the eigensolve still has
-    // no SQL form, but training was bit-identical across layouts all
-    // along (spec-pinned since r8) and projection is a pure per-row
-    // kernel, so the whitened output is a well-defined property of
-    // the fixture — pinned as exact round-trip decimal strings
-    // (PcaPins), tripwire-re-derived in PqPinSpec.
-    // Spectrum/orthonormal/whitening invariants asserted in OpsSpec.
-    // Scalar pc columns by design: flat doubles survive the driver's
-    // pandas row sort.
-    "q_pca" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val model = graft.ops.Pca.train(emb, "embedding", k = 4)
-      graft.ops.Pca.project(emb, "vec_id", "embedding", model,
-        whiten = true)
-    }),
-
-    // trainable quality classifier on heuristic weak labels — the
-    // fastText-shaped self-training loop (hashed uni+bigram features,
-    // one treeAggregate per epoch, driver holds only the weight
-    // vector). ORACLED since r11: the epoch gradient accumulates
-    // order-free quantized longs, so the trained weights — and the
-    // prediction set — are a pure function of fixture content
-    // (bit-identical across layouts, PqPinSpec). The oracle
-    // RECOMPUTES weak_label in SQL (the proven-exact qualityScore
-    // replay) and pins the prediction set as constants (float
-    // training has no SQL recompute); the gate output drops the raw
-    // probability so no float crosses the boundary. Separability
-    // still asserted in OpsSpec.
-    "q_quality_classifier" -> ((s, dir) => {
-      val labeled = t(s, dir, "documents").select(col("doc_id"), col("text"),
-        (TextAnalysis.qualityScore(col("text")) >= 0.9).cast("int")
-          .as("weak_label"))
-      val model = QualityClassifier.train(labeled, "text", "weak_label",
-        dim = 4096, epochs = 8, lr = 4.0)
-      QualityClassifier.score(labeled, "doc_id", "text", model)
-        .join(labeled.select(col("doc_id"), col("weak_label")), "doc_id")
-        .select(col("doc_id"), col("quality_pred"), col("weak_label"))
-    }),
-
-    // text → hashed doc vectors → SemDeDup: semantic near-dup removal
-    // of a raw text corpus with NO precomputed embedding table
-    // (feature-hashing preserves cosine in expectation). With
-    // refineIterations = 0 the pipeline is a pure per-row function of
-    // content (seed centroids, no float iteration) — oracled r10-r11
-    // by outcome pinning, upgraded r12 to a FULL DuckDB recompute:
-    // the featurize kernel (Java String.hashCode 31-polynomial +
-    // 0x85ebca6b mix, single-assignment float32 slots, float32
-    // normalize) replays exactly in SQL (see the oracle's comment).
-    // SemDedupPinSpec stays as the margin tripwire: min |cos-0.9|
-    // margin 6.2e-2 at sf0.01 (5.9e-2 at sf0.001), zero zero-norm
-    // vectors, layout invariance under repartition — sum-order ulp
-    // differences between engines can never flip a decision.
-    "q_text_semdedup" -> ((s, dir) => {
-      // fan the raw docs out BEFORE attaching the featurize UDF: below
-      // a repartition the UDF would still evaluate on the single-split
-      // scan's one task per consuming job (exchanges don't commute
-      // with projections), so the spread must happen on the raw text
-      val docs = graft.ops.Dispatch.fanOut(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          col("text")), col("doc_id"))
-      val vecs = docs.select(col("doc_id"), col("source"),
-        QualityClassifier.hashedDocVector(col("text")).as("embedding"))
-      Similarity.semDedup(vecs, "doc_id", "embedding",
-        nCells = 64, threshold = 0.9, refineIterations = 0)
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // per-document text analysis profile
-    "q_text_profile" -> ((s, dir) =>
-      TextAnalysis.profile(t(s, dir, "documents"), "doc_id", "text")),
-
-    // multimodal: payload + typed metadata (metadata-only query prunes
-    // the payload column at the parquet scan)
-    "q_multimodal_meta" -> ((s, dir) =>
-      Multimodal.attachPayload(t(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc_id"),
-          col("media_meta.media_type").as("media_type"),
-          col("media_meta.byte_length").as("byte_length"),
-          col("media_meta.checksum").as("checksum"))),
-
-    // semi-structured: JSON path extraction over the events props column
-    "q_json_extract" -> ((s, dir) =>
-      t(s, dir, "events")
-        .select(get_json_object(col("props"), "$.k").cast("bigint")
-          .as("k_value"))
-        .groupBy(col("k_value"))
-        .agg(count(lit(1)).as("count"))),
-
-    // window analytics (beyond-reference surface): per-user ordered
-    // rank, running total, and previous-event pointer
-    "q_window_analytics" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").asc, col("event_id").asc)
-      val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
-        .select(
-          col("event_id"), col("user_id"),
-          row_number().over(w).as("rn"),
-          sum(col("value").cast("decimal(18,2)")).over(running)
-            .cast("double").as("running_value"),
-          lag(col("event_id"), 1).over(w).as("prev_event_id"))
-    }),
-
-    // SQL extensions (nb_* session UDFs) exercised through expr() —
-    // the $S/$T template path the reference installs them for
-    "q_sql_extensions" -> ((s, dir) => {
-      graft.functions.Functions.register(s)
-      t(s, dir, "orders")
-        .withColumn("date_text",
-          date_format(col("o_orderdate"), "yyyy-MM-dd"))
-        .withColumn("code",
-          element_at(array(lit("pr"), lit("ge"), lit("pp"), lit("sp"), lit("xx")),
-            (col("o_orderkey") % 5 + 1).cast("int")))
-        .withColumn("email",
-          when(col("o_orderkey") % 7 === 0,
-            concat(lit("user"), col("o_orderkey").cast("string"), lit("@nodot")))
-            .otherwise(concat(lit("user"), col("o_orderkey").cast("string"),
-              lit("@example.com"))))
-        .withColumn("maybe_date",
-          when(col("o_orderkey") % 3 === 0, lit("garbage"))
-            .otherwise(date_format(col("o_orderdate"), "yyyy-MM-dd")))
-        .select(
-          col("o_orderkey"),
-          expr("nb_parse_election_name(date_text, code)").as("election"),
-          expr("nb_is_email_address_valid(email)").as("email_ok"),
-          expr("nb_coerce_to_date_or_null(maybe_date)").as("coerced_date"))
-    }),
-
-    // columnar-format parity beyond parquet: ORC round trip through
-    // Spark's built-in datasource (typed schema preserved end to end —
-    // oracle = identity over the original parquet)
-    "q_orc_roundtrip" -> ((s, dir) => {
-      val tmp = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_orc_${tmpToken(dir)}")
-      t(s, dir, "documents").write.mode("overwrite")
-        .orc(tmp.getAbsolutePath)
-      s.read.orc(tmp.getAbsolutePath)
-    }),
-
-    // S1-analogue for the LLM-corpus interchange format: export the
-    // documents table as JSONL and re-read it through an explicit
-    // schema — values, nulls, and escapes must survive the round trip
-    // (oracle = identity over the original parquet)
-    "q_jsonl_roundtrip" -> ((s, dir) => {
-      val tmp = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_jsonl_${tmpToken(dir)}")
-      val docs = t(s, dir, "documents")
-      graft.sources.JsonlSource.write(docs, tmp.getAbsolutePath)
-      graft.sources.JsonlSource.read(s,
-        graft.sources.JsonlSpec(tmp.getAbsolutePath, Some(docs.schema)))
-    }),
-
-    // S1-S4 CSV dialect: write a CSV, re-read through CsvSource (header
-    // sniff + all-text schema), conform types — must round-trip exactly
-    "q_csv_roundtrip" -> ((s, dir) => {
-      val tmp = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_csv_${tmpToken(dir)}")
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("header", "true").option("quote", "\"")
-        .csv(tmp.getAbsolutePath)
-      // directory path, NOT a /*.csv glob: Spark probes glob paths for
-      // streaming-sink metadata and logs a FileNotFoundException WARN
-      // trace per read; the directory read is equivalent (_SUCCESS and
-      // other _-prefixed files are ignored) and silent
-      val raw = graft.sources.CsvSource.read(s,
-        graft.sources.CsvSpec(tmp.getAbsolutePath, quote = "\""))
-      val spec = new WorkingTableSpec()
-        .mapColumn("event_id", sqlType = "BIGINT")
-        .mapColumn("user_id", sqlType = "BIGINT")
-        .mapColumn("event_type")
-        .mapColumn("value", sqlType = "DOUBLE")
-      WorkingTable.conform(raw, spec)
-    }),
-
-    // S3: remove_expression pre-repair — a regex is stripped from the
-    // raw bytes BEFORE parsing and the arity check (csv_file.rb:30-38,
-    // spec/csv_driver_csv_file_spec.rb:48-66). The planted junk
-    // contains a delimiter, so rows only survive the malformed-row
-    // filter because the strip runs first.
-    "q_remove_expression" -> ((s, dir) => {
-      val tmp = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_dirty_${tmpToken(dir)}")
-      val ev = t(s, dir, "events")
-      val dirtyType = when(col("event_id") % 7 === 0,
-        concat(lit("\","), col("event_type"))).otherwise(col("event_type"))
-      val line = concat_ws(",",
-        coalesce(col("event_id").cast("string"), lit("")),
-        coalesce(col("user_id").cast("string"), lit("")),
-        coalesce(dirtyType, lit("")),
-        coalesce(col("value").cast("string"), lit("")))
-      val header = s.createDataFrame(
-        java.util.Arrays.asList(org.apache.spark.sql.Row("event_id,user_id,event_type,value", 0)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__ord", org.apache.spark.sql.types.IntegerType))))
-      header.unionByName(ev.select(line.as("value"), lit(1).as("__ord")))
-        .coalesce(1).sortWithinPartitions(col("__ord")).select(col("value"))
-        .write.mode("overwrite").text(tmp.getAbsolutePath)
-      // directory path, not a /*.txt glob (see q_csv_roundtrip note)
-      val raw = graft.sources.CsvSource.read(s,
-        graft.sources.CsvSpec(tmp.getAbsolutePath,
-          quote = "", removeExpression = Some("\","),
-          dropMalformed = true))
-      val spec = new WorkingTableSpec()
-        .mapColumn("event_id", sqlType = "BIGINT")
-        .mapColumn("user_id", sqlType = "BIGINT")
-        .mapColumn("event_type")
-        .mapColumn("value", sqlType = "DOUBLE")
-      WorkingTable.conform(raw, spec)
-    }),
-
-    // multimodal: batched (stub) decode — plumbing check, rows-only
-    // real file-based multimodal ingestion: BMP files on disk read
-    // through Spark's binaryFile source (the production image-corpus
-    // access path — content + path metadata as columns), ids parsed
-    // from filenames, bytes decoded by the real header/stride parser;
-    // fixture files are deterministic so the oracle stays closed-form
-    "q_binary_source" -> ((s, dir) => {
-      val outDir = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_bin_${tmpToken(dir)}")
-      outDir.mkdirs()
-      // the fixture files are fabricated DISTRIBUTED (foreachPartition)
-      // — never via a driver collect + local write loop, which would be
-      // an unbounded driver materialization at corpus scale (r14
-      // verdict #6). Idempotent under retries: bytes are a
-      // deterministic function of the id and each id owns its file.
-      // In local mode every task shares the driver's filesystem, which
-      // is also what the binaryFile read below scans; a cluster
-      // deployment of this scaffolding would point both at shared
-      // storage.
-      val outPath = outDir.getAbsolutePath
-      t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"))
-        .foreachPartition { rows: java.util.Iterator[org.apache.spark.sql.Row] =>
-          rows.forEachRemaining { r =>
-            val id = r.getLong(0)
-            val f = new java.io.File(outPath, s"img_$id.bmp")
-            if (!f.exists())
-              java.nio.file.Files.write(f.toPath, Multimodal.bmpBytes(id))
-          }
-        }
-      val bin = s.read.format("binaryFile")
-        .load(outDir.getAbsolutePath + "/*.bmp")
-        .select(regexp_extract(col("path"), "img_(\\d+)\\.bmp$", 1)
-          .cast("long").as("doc_id"),
-          col("content").as("payload"))
-      Multimodal.decodeMedia(bin, "doc_id")
-        .select(col("doc_id"), col("media_type"),
-          element_at(col("feature"), 1).as("w"),
-          element_at(col("feature"), 2).as("h"),
-          element_at(col("feature"), 4).as("mean_b"))
-    }),
-
-    // stub-decode batching plumbing; the gate's visible columns are
-    // closed-form (payload = text bytes, feature(0) = byte length), so
-    // it verifies against a SQL oracle even with the decoder stubbed
-    "q_multimodal_decode" -> ((s, dir) => {
-      val payload = Multimodal.attachPayload(
-        t(s, dir, "documents"), "doc_id", "text")
-      Multimodal.decodeFeatures(payload, "doc_id")
-        .select(col("doc_id"), col("media_type"), col("n_bytes"),
-          element_at(col("feature"), 1).as("f_len"))
-    }),
-
-    // multimodal REAL decode: synthesize format-valid BMP/WAV bytes,
-    // then parse them back (headers, row stride, RIFF chunk walk) —
-    // the oracle recomputes the decoded features from their closed
-    // forms, so the gate verifies the write→parse round trip
-    "q_multimodal_decode_real" -> ((s, dir) => {
-      val media = Multimodal.synthesizeMedia(
-        t(s, dir, "documents").filter(col("doc_id") % 3 < 2),
-        "doc_id", "text")
-      Multimodal.decodeMedia(media, "doc_id")
-        .select(col("doc_id"), col("media_type"),
-          element_at(col("feature"), 1).as("f1"),
-          element_at(col("feature"), 2).as("f2"),
-          element_at(col("feature"), 3).as("f3"),
-          element_at(col("feature"), 4).as("f4"))
-    }),
-
-    // multimodal REAL decode round 2: zlib-compressed grayscale PNG
-    // (inflate + all-filter scanline reconstruction) and STEREO PCM WAV
-    // (multi-channel RIFF leg) — synthesized with closed-form features
-    // so the oracle checks the inflate→un-filter→mean pipeline exactly
-    "q_multimodal_png" -> ((s, dir) => {
-      val media = Multimodal.synthesizePngWav(
-        t(s, dir, "documents"), "doc_id")
-      Multimodal.decodeMedia(media, "doc_id")
-        .select(col("doc_id"), col("media_type"),
-          element_at(col("feature"), 1).as("f1"),
-          element_at(col("feature"), 2).as("f2"),
-          element_at(col("feature"), 3).as("f3"),
-          element_at(col("feature"), 4).as("f4"))
-    }),
-
-    // REAL GIF decode: header/palette walk + full variable-width LZW
-    // dictionary decode with only the JDK — features hash-exact
-    // against the synthesis pixel law's closed form
-    "q_multimodal_gif" -> ((s, dir) => {
-      val media = Multimodal.synthesizeGif(t(s, dir, "documents"), "doc_id")
-      Multimodal.decodeMedia(media, "doc_id")
-        .select(col("doc_id"), col("media_type"),
-          element_at(col("feature"), 1).as("f1"),
-          element_at(col("feature"), 2).as("f2"),
-          element_at(col("feature"), 3).as("f3"),
-          element_at(col("feature"), 4).as("f4"))
-    }),
-
-    // REAL JPEG decode via the JDK's bundled imageio reader (huffman +
-    // IDCT ship in every stock JVM — no external codec library). JPEG
-    // is lossy and decoder-specific, so the gate is rows-only and
-    // projects only the deterministic faces (type, byte count, dims);
-    // the decoded-mean accuracy is spec-bounded in OpsSpec
-    "q_multimodal_jpeg" -> ((s, dir) => {
-      val media = Multimodal.synthesizeJpeg(t(s, dir, "documents"), "doc_id")
-      Multimodal.decodeMedia(media, "doc_id")
-        .select(col("doc_id"), col("media_type"), col("n_bytes"),
-          element_at(col("feature"), 1).as("width"),
-          element_at(col("feature"), 2).as("height"))
-    })
-  )
-
-  // ---- oracle SQL (DuckDB dialect, same parquet tables) ------------------
-
-  def oracleSql: Map[String, String] = Map(
-    "q_conform" ->
-      """SELECT event_id, user_id, upper(event_type) AS type_name,
-        | CAST(ts AS DATE) AS event_day, value, CAST(NULL AS VARCHAR) AS note
-        |FROM events WHERE event_type <> 'error' AND value IS NOT NULL""".stripMargin,
-
-    "q_group_records" ->
-      """SELECT l_orderkey, min(l_quantity) AS l_quantity,
-        | min(l_extendedprice) AS l_extendedprice
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-
-    "q_correlated_update" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-        | CASE WHEN s.n_name IS NOT NULL THEN c_mktsegment || '/' || s.n_name
-        |      ELSE c_mktsegment END AS c_mktsegment
-        |FROM customer c LEFT JOIN
-        | (SELECT n_nationkey, min(n_name) AS n_name FROM nation GROUP BY 1) s
-        | ON c.c_nationkey = s.n_nationkey""".stripMargin,
-
-    "q_geocode_prep" ->
-      """WITH base AS (
-        | SELECT c_custkey, c_name,
-        |  CASE WHEN c_acctbal < 0 THEN NULL
-        |       WHEN c_custkey % 10 = 0 THEN 0.0
-        |       ELSE c_acctbal % 90.0 END AS residential_lat,
-        |  c_nationkey * 7.5 - 90.0 AS residential_lng
-        | FROM customer)
-        |SELECT c_custkey, residential_lat, residential_lng,
-        | (c_name IS NOT NULL AND trim(c_name) <> ''
-        |   AND (residential_lat IS NULL OR residential_lat = 0.0)) AS needs_geocoding,
-        | CASE WHEN residential_lat IS NOT NULL AND residential_lng IS NOT NULL
-        |      THEN printf('POINT(%.6f %.6f)', residential_lng, residential_lat)
-        | END AS point_wkt
-        |FROM base""".stripMargin,
-
-    "q_edit_join" ->
-      """WITH c AS (
-        | SELECT c_custkey, c_name FROM customer WHERE c_custkey % 8 = 0)
-        |SELECT a.c_custkey AS a_id, b.c_custkey AS b_id,
-        |       CAST(levenshtein(a.c_name, b.c_name) AS INT) AS dist
-        |FROM c a JOIN c b ON a.c_custkey < b.c_custkey
-        |WHERE levenshtein(a.c_name, b.c_name) <= 2""".stripMargin,
-
-    // k-center greedy coreset — the sequential farthest-point sweep as
-    // a recursive CTE: one accepted center per level, dmin recomputed
-    // from the selected-id list state. Bit-exact cross-engine: both
-    // sides compute cosine as dot/(sqrt(na)·sqrt(nb)) from sequential
-    // index-order sums (list_dot_product ≡ the JVM fold), and min over
-    // centers is order-free. Zero-norm vectors are excluded on both
-    // sides (no cosine direction, no diversity contribution).
-    "q_kcenter" ->
-      """WITH RECURSIVE e AS (
-        | SELECT CAST(vec_id AS BIGINT) AS id,
-        |        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        | FROM embeddings
-        | WHERE embedding IS NOT NULL
-        |),
-        |nz AS (
-        | SELECT id, v FROM e WHERE list_dot_product(v, v) > 0
-        |),
-        |seed AS (SELECT id, v FROM nz ORDER BY id ASC LIMIT 1),
-        |g AS (
-        | SELECT 0 AS ord, id, NULL::DOUBLE AS dist,
-        |        [id] AS sel_ids FROM seed
-        | UNION ALL
-        | SELECT g.ord + 1, pick.id, pick.dmin,
-        |        list_append(g.sel_ids, pick.id)
-        | FROM g, LATERAL (
-        |   SELECT x.id,
-        |     min(1.0 - list_dot_product(x.v, c.v) /
-        |         (sqrt(list_dot_product(x.v, x.v)) *
-        |          sqrt(list_dot_product(c.v, c.v)))) AS dmin
-        |   FROM nz x JOIN nz c ON list_contains(g.sel_ids, c.id)
-        |   WHERE NOT list_contains(g.sel_ids, x.id)
-        |   GROUP BY x.id
-        |   ORDER BY dmin DESC, x.id ASC
-        |   LIMIT 1
-        | ) pick
-        | WHERE g.ord < 9
-        |)
-        |SELECT CAST(ord AS BIGINT) AS "order", id, dist FROM g""".stripMargin,
-
-    // J6 fuzzy trigram KNN + greedy 1:1 — cross-engine oracle for the
-    // reference's core operator. Trigram sets mirror Trigram.trigrams
-    // exactly (lowercase, [a-z0-9]+ word split — the corpus is pure
-    // ASCII lowercase, proven by the charset probe — '  w ' padding,
-    // distinct 3-grams); sim = shared/(|A|+|B|-shared) with the same
-    // IEEE op order as candidatePairs; the sequential greedy by
-    // (distance, source, target) is a recursive CTE peeling one
-    // accepted pair per level (pairs are few at fixture scale — the
-    // recursion is depth-bounded by the match count).
-    "q_fuzzy_match" ->
-      """WITH RECURSIVE src AS (
-        | SELECT doc_id AS working_source_id,
-        |        translate(substring(text, 1, 60), 'e', '3') AS snippet
-        | FROM documents WHERE doc_id % 37 = 0
-        |),
-        |tgt AS (
-        | SELECT doc_id, substring(text, 1, 60) AS snippet FROM documents
-        |),
-        |src_tri AS (
-        | SELECT DISTINCT working_source_id, substring(pw, j, 3) AS tri
-        | FROM (
-        |  SELECT working_source_id, '  ' || w || ' ' AS pw
-        |  FROM src,
-        |   unnest(regexp_extract_all(lower(snippet), '[a-z0-9]+')) AS u(w)
-        | ) words, unnest(range(1, length(pw) - 1)) AS r(j)
-        |),
-        |tgt_tri AS (
-        | SELECT DISTINCT doc_id, substring(pw, j, 3) AS tri
-        | FROM (
-        |  SELECT doc_id, '  ' || w || ' ' AS pw
-        |  FROM tgt,
-        |   unnest(regexp_extract_all(lower(snippet), '[a-z0-9]+')) AS u(w)
-        | ) words, unnest(range(1, length(pw) - 1)) AS r(j)
-        |),
-        |ssz AS (SELECT working_source_id, count(*) AS na
-        |        FROM src_tri GROUP BY 1),
-        |tsz AS (SELECT doc_id, count(*) AS nb FROM tgt_tri GROUP BY 1),
-        |pairs AS (
-        | SELECT c.working_source_id, c.doc_id, c.dist AS distance
-        | FROM (
-        |  SELECT s.working_source_id, t.doc_id,
-        |         1.0 - CAST(count(*) AS DOUBLE) /
-        |           (any_value(ss.na) + any_value(ts.nb) - count(*)) AS dist
-        |  FROM src_tri s
-        |  JOIN tgt_tri t USING (tri)
-        |  JOIN ssz ss ON ss.working_source_id = s.working_source_id
-        |  JOIN tsz ts ON ts.doc_id = t.doc_id
-        |  GROUP BY 1, 2
-        | ) c
-        | WHERE c.dist < 0.5
-        |),
-        |g AS (
-        | SELECT NULL::BIGINT AS working_source_id, NULL::BIGINT AS doc_id,
-        |        NULL::DOUBLE AS distance,
-        |        []::BIGINT[] AS used_s, []::BIGINT[] AS used_t, 0 AS n
-        | UNION ALL
-        | SELECT p.working_source_id, p.doc_id, p.distance,
-        |        list_append(g.used_s, p.working_source_id),
-        |        list_append(g.used_t, p.doc_id), g.n + 1
-        | FROM g, LATERAL (
-        |  SELECT working_source_id, doc_id, distance FROM pairs
-        |  WHERE NOT list_contains(g.used_s, working_source_id)
-        |    AND NOT list_contains(g.used_t, doc_id)
-        |  ORDER BY distance ASC, working_source_id ASC, doc_id ASC
-        |  LIMIT 1
-        | ) p
-        |)
-        |SELECT working_source_id, doc_id AS matched_key,
-        |       round(distance, 6) AS distance
-        |FROM g WHERE n > 0""".stripMargin,
-
-    "q_problink" -> problinkOracle(best = false),
-
-    "q_problink_best" -> problinkOracle(best = true),
-
-    "q_er_resolve" -> problinkResolveOracle,
-
-    "q_problink_graded" -> problinkGradedOracle,
-
-    "q_problink_em" -> problinkEmOracle,
-
-    "q_problink_em_graded" -> problinkEmGradedOracle,
-
-    "q_problink_tf" -> {
-      val (nA, nD) = ProblinkNameW
-      val (_, sD) = ProblinkSegW
-      s"""WITH src AS (
-         | SELECT c_custkey AS src_id, c_nationkey,
-         |  CASE WHEN c_custkey % 3 = 0 THEN c_name || 'X' ELSE c_name END AS name,
-         |  CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg
-         | FROM customer WHERE c_custkey % 8 = 0),
-         |freq AS (SELECT c_mktsegment AS v, count(*) AS c
-         |         FROM customer WHERE c_mktsegment IS NOT NULL GROUP BY 1),
-         |tot AS (SELECT sum(c) AS n FROM freq),
-         |p AS (
-         | SELECT s.src_id, t.c_custkey AS tgt_id,
-         |  levenshtein(s.name, t.c_name) <= 1 AS agree_name,
-         |  s.seg = t.c_mktsegment AS agree_seg,
-         |  CAST(f.c AS DOUBLE) / CAST((SELECT n FROM tot) AS DOUBLE) AS tf
-         | FROM src s JOIN customer t ON s.c_nationkey = t.c_nationkey
-         | LEFT JOIN freq f ON t.c_mktsegment = f.v)
-         |SELECT src_id, tgt_id, agree_name, agree_seg,
-         | CAST(
-         |  CASE WHEN agree_name THEN CAST($nA AS DECIMAL(28,6))
-         |       ELSE CAST($nD AS DECIMAL(28,6)) END +
-         |  CASE WHEN agree_seg THEN CAST(round(
-         |         log2(CAST(0.9 AS DOUBLE) / greatest(tf, CAST(1e-6 AS DOUBLE))),
-         |         6) AS DECIMAL(28,6))
-         |       ELSE CAST($sD AS DECIMAL(28,6)) END
-         | AS DOUBLE) AS match_weight
-         |FROM p""".stripMargin
-    },
-
-    "q_blocking_profile" ->
-      """WITH src AS (
-        | SELECT c_custkey AS src_id, c_nationkey,
-        |  CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg
-        | FROM customer WHERE c_custkey % 8 = 0),
-        |r1 AS (
-        | SELECT 'nation' AS rule,
-        |  CAST(coalesce(sum(sc * tc), 0) AS DOUBLE) AS est_pairs,
-        |  count(*) AS matched_keys,
-        |  CAST(coalesce(max(sc * tc), 0) AS DOUBLE) AS max_block_pairs
-        | FROM (SELECT c_nationkey AS k, count(*) AS sc FROM src GROUP BY 1) s
-        | JOIN (SELECT c_nationkey AS k, count(*) AS tc FROM customer GROUP BY 1) t
-        |   USING (k)),
-        |r2 AS (
-        | SELECT 'segment',
-        |  CAST(coalesce(sum(sc * tc), 0) AS DOUBLE),
-        |  count(*),
-        |  CAST(coalesce(max(sc * tc), 0) AS DOUBLE)
-        | FROM (SELECT seg AS k, count(*) AS sc FROM src GROUP BY 1) s
-        | JOIN (SELECT c_mktsegment AS k, count(*) AS tc FROM customer GROUP BY 1) t
-        |   USING (k)),
-        |r3 AS (
-        | SELECT 'nation_segment',
-        |  CAST(coalesce(sum(sc * tc), 0) AS DOUBLE),
-        |  count(*),
-        |  CAST(coalesce(max(sc * tc), 0) AS DOUBLE)
-        | FROM (SELECT c_nationkey AS k1, seg AS k2, count(*) AS sc
-        |       FROM src GROUP BY 1, 2) s
-        | JOIN (SELECT c_nationkey AS k1, c_mktsegment AS k2, count(*) AS tc
-        |       FROM customer GROUP BY 1, 2) t
-        |   USING (k1, k2))
-        |SELECT * FROM r1 UNION ALL SELECT * FROM r2
-        |UNION ALL SELECT * FROM r3""".stripMargin,
-
-    "q_exact_match" ->
-      """WITH cand AS (
-        | SELECT e.event_id, c.c_custkey AS tid, 1 AS grp FROM events e
-        |  JOIN customer c ON e.user_id = c.c_custkey AND e.value > 100
-        | UNION ALL
-        | SELECT e.event_id, c.c_custkey, 2 FROM events e
-        |  JOIN customer c ON e.user_id = c.c_custkey AND c.c_acctbal >= 0
-        | UNION ALL
-        | SELECT e.event_id, c.c_custkey, 3 FROM events e
-        |  JOIN customer c ON e.user_id = c.c_custkey),
-        |r AS (SELECT event_id, tid, grp,
-        |       row_number() OVER (PARTITION BY event_id ORDER BY grp, tid) rn
-        |      FROM cand)
-        |SELECT e.event_id, r.tid AS working_target_id,
-        |       r.grp AS working_exact_match_group
-        |FROM events e LEFT JOIN (SELECT * FROM r WHERE rn = 1) r
-        | ON e.event_id = r.event_id""".stripMargin,
-
-    "q_match_nested" ->
-      """WITH cand AS (
-        | SELECT e.event_id, c.c_custkey AS tid, 1 AS grp FROM events e
-        |  JOIN customer c ON e.user_id = c.c_custkey AND e.value > 200
-        | UNION ALL
-        | SELECT e.event_id, c.c_custkey, 2 FROM events e
-        |  JOIN customer c ON e.user_id = c.c_custkey AND c.c_acctbal < 0
-        | UNION ALL
-        | SELECT e.event_id, c.c_custkey, 3 FROM events e
-        |  JOIN customer c ON e.user_id = c.c_custkey),
-        |r AS (SELECT event_id, tid, grp,
-        |       row_number() OVER (PARTITION BY event_id ORDER BY grp, tid) rn
-        |      FROM cand)
-        |SELECT e.event_id, r.tid AS working_target_id,
-        |       r.grp AS working_exact_match_group
-        |FROM events e LEFT JOIN (SELECT * FROM r WHERE rn = 1) r
-        | ON e.event_id = r.event_id""".stripMargin,
-
-    "q_remove_expression" ->
-      """SELECT event_id, user_id, event_type, value FROM events""",
-
-    "q_match_aux" ->
-      """WITH cand AS (
-        | SELECT l.l_orderkey*10 + l.l_linenumber AS working_source_id,
-        |        s.s_suppkey AS tid
-        | FROM lineitem l
-        | JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        | JOIN nation n ON s.s_nationkey = n.n_nationkey AND n.n_regionkey < 2),
-        |r AS (SELECT working_source_id, tid,
-        |       row_number() OVER (PARTITION BY working_source_id ORDER BY tid) rn
-        |      FROM cand)
-        |SELECT l.l_orderkey*10 + l.l_linenumber AS working_source_id,
-        |       r.tid AS working_target_id,
-        |       CASE WHEN r.tid IS NOT NULL THEN 1 END AS working_exact_match_group
-        |FROM lineitem l LEFT JOIN (SELECT * FROM r WHERE rn = 1) r
-        | ON l.l_orderkey*10 + l.l_linenumber = r.working_source_id""".stripMargin,
-
-    "q_match_rate" ->
-      """WITH cand AS (
-        | SELECT e.event_id, c.c_custkey AS tid, 1 AS grp FROM events e
-        |  JOIN customer c ON e.user_id = c.c_custkey AND e.value > 100
-        | UNION ALL
-        | SELECT e.event_id, c.c_custkey, 2 FROM events e
-        |  JOIN customer c ON e.user_id = c.c_custkey AND c.c_acctbal >= 0
-        | UNION ALL
-        | SELECT e.event_id, c.c_custkey, 3 FROM events e
-        |  JOIN customer c ON e.user_id = c.c_custkey),
-        |r AS (SELECT event_id, grp,
-        |       row_number() OVER (PARTITION BY event_id ORDER BY grp, tid) rn
-        |      FROM cand),
-        |m AS (SELECT e.event_id, r.grp FROM events e
-        |      LEFT JOIN (SELECT * FROM r WHERE rn = 1) r
-        |       ON e.event_id = r.event_id)
-        |SELECT grp AS working_exact_match_group, count(*) AS count
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_merge_upsert" -> (mergeOracleCtes +
-      "SELECT * FROM upd UNION ALL SELECT * FROM ins"),
-
-    // identical result set to q_merge_upsert; the Spark side differs
-    // only in traversing the parquet write→read round trip
-    "q_merge_upsert_written" -> (mergeOracleCtes +
-      "SELECT * FROM upd UNION ALL SELECT * FROM ins"),
-
-    "q_merge_update_only" -> (mergeOracleCtes + "SELECT * FROM upd"),
-
-    "q_merge_insert_only" -> (mergeOracleCtes +
-      "SELECT * FROM tgt UNION ALL SELECT * FROM ins"),
-
-    "q_merge_returning" -> (mergeOracleCtes +
-      """, ret AS (
-        | SELECT s.c_custkey, s.c_name,
-        |        COALESCE(t.c_custkey, i.c_custkey) AS matched_custkey
-        | FROM src s
-        | LEFT JOIN tgt t ON s.c_custkey = t.c_custkey
-        | LEFT JOIN (SELECT c_custkey,
-        |             99 + row_number() OVER (ORDER BY c_custkey) AS new_id
-        |            FROM src WHERE c_custkey NOT IN (SELECT c_custkey FROM tgt)) i0
-        |  ON FALSE
-        | LEFT JOIN (
-        |   SELECT s2.c_custkey AS src_key,
-        |          99 + row_number() OVER (ORDER BY s2.c_custkey) AS c_custkey
-        |   FROM src s2 LEFT JOIN tgt t2 ON s2.c_custkey = t2.c_custkey
-        |   WHERE t2.c_custkey IS NULL) i
-        |  ON s.c_custkey = i.src_key)
-        |SELECT c_custkey, c_name, matched_custkey FROM ret""".stripMargin),
-
-    "q_dedup" ->
-      """WITH m AS (
-        | SELECT o_orderkey,
-        |        min(o_orderkey) OVER (PARTITION BY o_custkey, o_orderdate) AS survivor
-        | FROM orders),
-        |dup AS (SELECT o.*, m.survivor FROM orders o
-        |        JOIN m ON o.o_orderkey = m.o_orderkey
-        |        WHERE m.survivor < o.o_orderkey),
-        |best AS (SELECT survivor, min(o_orderkey) AS fold_key FROM dup GROUP BY survivor),
-        |fold AS (SELECT b.survivor, d.o_totalprice AS fold_price
-        |         FROM best b JOIN dup d ON d.o_orderkey = b.fold_key)
-        |SELECT o.o_orderkey, o.o_custkey, o.o_orderstatus,
-        |       CASE WHEN f.survivor IS NOT NULL THEN o.o_totalprice + f.fold_price
-        |            ELSE o.o_totalprice END AS o_totalprice,
-        |       o.o_orderdate, o.o_orderpriority
-        |FROM orders o LEFT JOIN fold f ON o.o_orderkey = f.survivor
-        |WHERE o.o_orderkey NOT IN (SELECT o_orderkey FROM dup)""".stripMargin,
-
-    "q_audit_coverage" ->
-      """SELECT count(*) AS total_count,
-        | count(CASE WHEN c_name IS NOT NULL AND trim(CAST(c_name AS VARCHAR)) <> '' THEN 1 END) AS c_name_coverage,
-        | count(CASE WHEN c_nationkey IS NOT NULL AND trim(CAST(c_nationkey AS VARCHAR)) <> '' THEN 1 END) AS c_nationkey_coverage,
-        | count(CASE WHEN c_acctbal IS NOT NULL AND trim(CAST(c_acctbal AS VARCHAR)) <> '' THEN 1 END) AS c_acctbal_coverage,
-        | count(CASE WHEN c_mktsegment IS NOT NULL AND trim(CAST(c_mktsegment AS VARCHAR)) <> '' THEN 1 END) AS c_mktsegment_coverage
-        |FROM customer""".stripMargin,
-
-    "q_audit_dupkeys" ->
-      """SELECT o_custkey, o_orderdate, count(*) AS dup_count
-        |FROM orders GROUP BY 1, 2 HAVING count(*) > 1""".stripMargin,
-
-    "q_audit_distribution" ->
-      """SELECT event_type, count(*) AS count FROM events
-        |GROUP BY 1 ORDER BY count DESC, event_type ASC LIMIT 20""".stripMargin,
-
-    "q_audit_expr_dist" ->
-      """SELECT (value > 50.0) AS value, count(*) AS count
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS survivor_id,
-        | count(*) AS dup_count
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "q_substring_spans" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(
-        |   string_split_regex(lower(trim(text)), '\s+'),
-        |   x -> x <> '') AS tk
-        | FROM documents),
-        |pos AS (
-        | SELECT doc_id, tk,
-        |  CAST(unnest(generate_series(0, len(tk) - 8)) AS BIGINT) AS pos
-        | FROM toks),
-        |occ AS (
-        | SELECT doc_id, pos, array_to_string(tk[pos+1 : pos+8], ' ') AS g
-        | FROM pos),
-        |dup AS (SELECT g FROM occ GROUP BY g HAVING min(doc_id) <> max(doc_id)),
-        |hits AS (SELECT occ.doc_id, occ.pos FROM occ JOIN dup USING (g)),
-        |w AS (
-        | SELECT doc_id, pos, max(pos + 7) OVER (PARTITION BY doc_id
-        |   ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |   AS prev_end
-        | FROM hits),
-        |isl AS (
-        | SELECT doc_id, pos,
-        |  sum(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-        |      THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        | FROM w)
-        |SELECT doc_id, min(pos) AS span_start, max(pos + 7) AS span_end,
-        | max(pos + 7) - min(pos) + 1 AS span_tokens
-        |FROM isl GROUP BY doc_id, island""".stripMargin,
-
-    "q_substring_clean" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(
-        |   string_split_regex(lower(trim(text)), '\s+'),
-        |   x -> x <> '') AS tk
-        | FROM documents),
-        |pos AS (
-        | SELECT doc_id, tk,
-        |  CAST(unnest(generate_series(0, len(tk) - 8)) AS BIGINT) AS pos
-        | FROM toks),
-        |occ AS (
-        | SELECT doc_id, pos, array_to_string(tk[pos+1 : pos+8], ' ') AS g
-        | FROM pos),
-        |dup AS (SELECT g FROM occ GROUP BY g HAVING min(doc_id) <> max(doc_id)),
-        |hits AS (SELECT occ.doc_id, occ.pos FROM occ JOIN dup USING (g)),
-        |w AS (
-        | SELECT doc_id, pos, max(pos + 7) OVER (PARTITION BY doc_id
-        |   ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |   AS prev_end
-        | FROM hits),
-        |isl AS (
-        | SELECT doc_id, pos,
-        |  sum(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-        |      THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        | FROM w),
-        |spans AS (
-        | SELECT doc_id, min(pos) AS s, max(pos + 7) AS e
-        | FROM isl GROUP BY doc_id, island),
-        |tok AS (
-        | SELECT doc_id, pos, tk[pos+1] AS tok FROM (
-        |  SELECT doc_id, tk,
-        |   CAST(unnest(generate_series(0, len(tk) - 1)) AS BIGINT) AS pos
-        |  FROM toks)),
-        |kept AS (
-        | SELECT t.doc_id, t.pos, t.tok FROM tok t
-        | WHERE NOT EXISTS (SELECT 1 FROM spans sp
-        |   WHERE sp.doc_id = t.doc_id AND t.pos BETWEEN sp.s AND sp.e)),
-        |reb AS (
-        | SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text,
-        |  count(*) AS kept_tokens
-        | FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(r.clean_text, '') AS clean_text,
-        | coalesce(r.kept_tokens, 0) AS kept_tokens,
-        | n.n - coalesce(r.kept_tokens, 0) AS removed_tokens
-        |FROM documents d
-        |LEFT JOIN reb r ON r.doc_id = d.doc_id
-        |JOIN (SELECT doc_id, len(list_filter(
-        |        string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x <> '')) AS n
-        |      FROM documents) n ON n.doc_id = d.doc_id""".stripMargin,
-
-    "q_repetition" ->
-      """WITH w AS (
-        | SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words
-        | FROM documents),
-        |b AS (
-        | SELECT doc_id, words, len(words) AS n,
-        |  CASE WHEN len(words) >= 2 THEN
-        |   list_transform(generate_series(1, len(words) - 1),
-        |     i -> words[i] || ' ' || words[i+1])
-        |  ELSE [] END AS grams
-        | FROM w)
-        |SELECT doc_id, CAST(n AS INTEGER) AS n_words,
-        | 1.0 - CAST(len(list_distinct(words)) AS DOUBLE) / n AS dup_word_frac,
-        | CASE WHEN n < 2 THEN 0.0 ELSE
-        |  CAST(list_max(list_transform(grams,
-        |        x -> len(list_filter(grams, y -> y = x)))) AS DOUBLE) / (n - 1)
-        | END AS top_bigram_frac
-        |FROM b""".stripMargin,
-
-    // mirrors gopherMetrics + gopherPass on the same planted text:
-    // every count is reconstructed (words, alpha words, #/.../…
-    // symbols, bullet and ellipsis lines, stopword presence) and the
-    // keep CASE compares the identical rounded doubles
-    "q_gopher_rules" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 0 THEN text || ' ### tail trails off ...'
-        |         || chr(10) || '- bullet one' || chr(10) || '- bullet two'
-        |       WHEN doc_id % 7 = 1 THEN text || chr(10)
-        |         || 'short trailing thought …'
-        |       ELSE text END AS t2
-        | FROM documents),
-        |m AS (
-        | SELECT doc_id, trim(t2) AS t,
-        |  string_split_regex(trim(t2), '\s+') AS words,
-        |  string_split(t2, chr(10)) AS lines
-        | FROM p),
-        |x AS (
-        | SELECT doc_id, len(words) AS n,
-        |  list_sum(list_transform(words, w -> length(w))) AS sum_len,
-        |  len(list_filter(words,
-        |    w -> regexp_matches(w, '[A-Za-z]'))) AS n_alpha,
-        |  length(t) - length(replace(t, '#', '')) AS n_hash,
-        |  (length(t) - length(replace(t, '...', ''))) // 3 AS n_dots,
-        |  length(t) - length(replace(t, '…', '')) AS n_ell,
-        |  len(lines) AS n_lines,
-        |  len(list_filter(lines,
-        |    l -> regexp_matches(trim(l), '^[-*•]'))) AS n_bullet,
-        |  len(list_filter(lines,
-        |    l -> regexp_matches(trim(l), '(\.\.\.|…)$'))) AS n_elll,
-        |  len(list_filter(['the','be','to','of','and','that','have','with'],
-        |    sw -> list_contains(list_transform(words, w -> lower(w)),
-        |      sw))) AS n_stop
-        | FROM m)
-        |SELECT doc_id, CAST(n AS INTEGER) AS n_words,
-        | round(sum_len / n, 4) AS mean_word_len,
-        | round(n_alpha / n, 4) AS frac_alpha_words,
-        | round((n_hash + n_dots + n_ell) / n, 4) AS symbol_ratio,
-        | round(n_bullet / n_lines, 4) AS frac_bullet_lines,
-        | round(n_elll / n_lines, 4) AS frac_ellipsis_lines,
-        | CAST(n_stop AS INTEGER) AS n_stopwords,
-        | (n >= 20 AND n <= 100000
-        |  AND round(sum_len / n, 4) >= 3.0 AND round(sum_len / n, 4) <= 10.0
-        |  AND round((n_hash + n_dots + n_ell) / n, 4) < 0.1
-        |  AND round(n_alpha / n, 4) >= 0.8
-        |  AND round(n_bullet / n_lines, 4) < 0.9
-        |  AND round(n_elll / n_lines, 4) < 0.3
-        |  AND n_stop >= 1) AS keep
-        |FROM x""".stripMargin,
-
-    // mirrors dedupLinesWithMetrics: keep-first via 1-based
-    // list_position == index, both fractions as int/int divisions
-    "q_line_dedup" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  text || chr(10) || 'subscribe to our newsletter' || chr(10)
-        |   || substring(text, 1, 25) || chr(10)
-        |   || 'subscribe to our newsletter' || chr(10)
-        |   || CASE WHEN doc_id % 3 = 0 THEN text
-        |      ELSE 'closing line for doc ' || CAST(doc_id AS VARCHAR)
-        |      END AS t2
-        | FROM documents),
-        |l AS (SELECT doc_id, string_split(t2, chr(10)) AS ls FROM p),
-        |f AS (
-        | SELECT doc_id, ls,
-        |  list_filter(list_transform(ls, (x, i) -> {'l': x, 'i': i}),
-        |    s -> list_position(ls, s.l) = s.i) AS fs
-        | FROM l)
-        |SELECT doc_id,
-        | array_to_string(list_transform(fs, s -> s.l), chr(10)) AS text,
-        | CAST(len(ls) AS INTEGER) AS n_lines,
-        | round((len(ls) - len(fs)) / len(ls), 4) AS dup_line_frac,
-        | CASE WHEN list_sum(list_transform(ls, x -> length(x))) = 0
-        |  THEN 0.0
-        |  ELSE round((list_sum(list_transform(ls, x -> length(x)))
-        |    - list_sum(list_transform(fs, s -> length(s.l))))
-        |    / list_sum(list_transform(ls, x -> length(x))), 4)
-        |  END AS dup_char_frac
-        |FROM f""".stripMargin,
-
-    // mirrors zipfStats: round-12 ln points in rank order, sequential
-    // list folds, one fixed IEEE slope expression
-    "q_zipf" ->
-      """WITH tok AS (
-        | SELECT unnest(list_filter(string_split_regex(lower(trim(text)),
-        |   '\s+'), x -> x <> '')) AS t
-        | FROM documents),
-        |c AS (SELECT t, count(*) AS n FROM tok GROUP BY 1),
-        |tot AS (
-        | SELECT CAST(sum(n) AS BIGINT) AS n_tokens,
-        |  CAST(count(*) AS BIGINT) AS n_types
-        | FROM c),
-        |top AS (
-        | SELECT n, row_number() OVER (ORDER BY n DESC, t ASC) AS r
-        | FROM c ORDER BY n DESC, t ASC LIMIT 200),
-        |ls AS (
-        | SELECT list(round(ln(r), 12) ORDER BY r) AS xs,
-        |  list(round(ln(n), 12) ORDER BY r) AS ys,
-        |  count(*) AS m
-        | FROM top),
-        |s AS (
-        | SELECT m,
-        |  list_aggregate(xs, 'sum') AS sx,
-        |  list_aggregate(ys, 'sum') AS sy,
-        |  list_aggregate(list_transform(generate_series(1, m),
-        |    i -> xs[i] * ys[i]), 'sum') AS sxy,
-        |  list_aggregate(list_transform(xs, x -> x * x), 'sum') AS sxx
-        | FROM ls)
-        |SELECT n_tokens, n_types, round(n_types / n_tokens, 6) AS ttr,
-        | round((m * sxy - sx * sy) / (m * sxx - sx * sx), 6) AS zipf_slope
-        |FROM tot, s""".stripMargin,
-
-    // mirrors vocabCoverage: same tokenization, top-500 by
-    // (count desc, term asc), left join, int/int rate
-    "q_vocab_coverage" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  unnest(list_filter(string_split_regex(lower(trim(text)),
-        |    '\s+'), x -> x <> '')) AS tk
-        | FROM documents),
-        |v AS (
-        | SELECT term FROM (
-        |  SELECT tk AS term, count(*) AS n FROM tok GROUP BY 1
-        |  ORDER BY n DESC, term ASC LIMIT 500)),
-        |a AS (
-        | SELECT t.doc_id AS doc_id, CAST(count(*) AS INTEGER) AS n_tokens,
-        |  CAST(sum(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END)
-        |    AS INTEGER) AS n_oov
-        | FROM tok t LEFT JOIN v ON t.tk = v.term GROUP BY 1)
-        |SELECT d.doc_id AS doc_id, coalesce(n_tokens, 0) AS n_tokens,
-        | coalesce(n_oov, 0) AS n_oov,
-        | CASE WHEN coalesce(n_tokens, 0) = 0 THEN 0.0
-        |  ELSE round(coalesce(n_oov, 0) / n_tokens, 6) END AS oov_rate
-        |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
-
-    // mirrors ngramOverlap: same tokenization, bigrams by position,
-    // clipped multiset intersection via least() over grouped counts,
-    // F1 composed from the unrounded IEEE ratios
-    "q_ngram_overlap" ->
-      """WITH pr AS (
-        | SELECT a.doc_id AS doc_id, a.text AS cand,
-        |  substring(a.text, 1, 80) || ' ' || b.text AS ref
-        | FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1),
-        |tk AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(lower(trim(cand)), '\s+'),
-        |    x -> x <> '') AS ct,
-        |  list_filter(string_split_regex(lower(trim(ref)), '\s+'),
-        |    x -> x <> '') AS rt
-        | FROM pr),
-        |cg AS (
-        | SELECT doc_id, ct[i] || ' ' || ct[i + 1] AS g
-        | FROM (SELECT doc_id, ct,
-        |   CAST(unnest(generate_series(1, len(ct) - 1)) AS BIGINT) AS i
-        |  FROM tk)),
-        |rg AS (
-        | SELECT doc_id, rt[i] || ' ' || rt[i + 1] AS g
-        | FROM (SELECT doc_id, rt,
-        |   CAST(unnest(generate_series(1, len(rt) - 1)) AS BIGINT) AS i
-        |  FROM tk)),
-        |cc AS (SELECT doc_id, g, count(*) AS c FROM cg GROUP BY 1, 2),
-        |rc AS (SELECT doc_id, g, count(*) AS r FROM rg GROUP BY 1, 2),
-        |ov AS (
-        | SELECT cc.doc_id AS doc_id,
-        |  CAST(sum(least(c, r)) AS INTEGER) AS ovl
-        | FROM cc JOIN rc ON cc.doc_id = rc.doc_id AND cc.g = rc.g
-        | GROUP BY 1),
-        |tot AS (
-        | SELECT doc_id,
-        |  CAST(greatest(len(ct) - 1, 0) AS INTEGER) AS n_cand,
-        |  CAST(greatest(len(rt) - 1, 0) AS INTEGER) AS n_ref
-        | FROM tk)
-        |SELECT t.doc_id AS doc_id, n_cand, n_ref,
-        | coalesce(ovl, 0) AS overlap,
-        | CASE WHEN n_cand = 0 THEN 0.0
-        |  ELSE round(coalesce(ovl, 0) / n_cand, 6) END AS "precision",
-        | CASE WHEN n_ref = 0 THEN 0.0
-        |  ELSE round(coalesce(ovl, 0) / n_ref, 6) END AS recall,
-        | CASE WHEN coalesce(ovl, 0) = 0 THEN 0.0
-        |  ELSE round(2 * (coalesce(ovl, 0) / n_cand)
-        |    * (coalesce(ovl, 0) / n_ref)
-        |    / (coalesce(ovl, 0) / n_cand + coalesce(ovl, 0) / n_ref), 6)
-        |  END AS f1
-        |FROM tot t LEFT JOIN ov USING (doc_id)""".stripMargin,
-
-    // mirrors stripBoilerplate on the same planted lines: distinct
-    // (doc, trimmed line) evidence, >=20-doc bar, anti-join strip,
-    // ORDER BY pos reassembly
-    "q_boilerplate" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  text || chr(10) || 'subscribe to our newsletter' || chr(10)
-        |   || CASE WHEN doc_id % 2 = 0 THEN '  cookie consent required'
-        |      ELSE 'footer for doc ' || CAST(doc_id AS VARCHAR) END
-        |   || chr(10) || '   subscribe to our newsletter' || chr(10)
-        |   || 'closing line for doc ' || CAST(doc_id AS VARCHAR) AS t2
-        | FROM documents),
-        |l AS (SELECT doc_id, string_split(t2, chr(10)) AS ls FROM p),
-        |x AS (
-        | SELECT doc_id, ls[i + 1] AS line, i AS pos
-        | FROM (SELECT doc_id, ls,
-        |   CAST(unnest(generate_series(0, len(ls) - 1)) AS BIGINT) AS i
-        |  FROM l)),
-        |bl AS (
-        | SELECT trim(line) AS t FROM x WHERE trim(line) <> ''
-        | GROUP BY 1 HAVING count(DISTINCT doc_id) >= 20),
-        |k AS (SELECT doc_id, pos, line FROM x
-        |      WHERE trim(line) NOT IN (SELECT t FROM bl)),
-        |r AS (
-        | SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text,
-        |  count(*) AS kept
-        | FROM k GROUP BY 1)
-        |SELECT p.doc_id AS doc_id, coalesce(r.text, '') AS text,
-        | CAST(len(l.ls) AS INTEGER) AS n_lines,
-        | CAST(len(l.ls) - coalesce(r.kept, 0) AS INTEGER) AS n_removed
-        |FROM p JOIN l USING (doc_id) LEFT JOIN r USING (doc_id)""".stripMargin,
-
-    // mirrors charEntropy: same grouped counts, p·log2(p) rounded to
-    // 12 through an order-free DECIMAL sum, entropy rounded to 6
-    "q_char_entropy" ->
-      """WITH c AS (
-        | SELECT doc_id, unnest(string_split_regex(text, '')) AS ch
-        | FROM documents),
-        |cf AS (SELECT doc_id, ch, count(*) AS k FROM c
-        |       WHERE ch <> '' GROUP BY 1, 2),
-        |n AS (SELECT doc_id, sum(k) AS n FROM cf GROUP BY 1)
-        |SELECT cf.doc_id AS doc_id, CAST(n.n AS BIGINT) AS n_chars_counted,
-        | round(-CAST(sum(CAST(round((k / n.n) * log2(k / n.n), 12)
-        |   AS DECIMAL(20,12))) AS DOUBLE), 6) AS entropy
-        |FROM cf JOIN n USING (doc_id) GROUP BY 1, 2""".stripMargin,
-
-    // mirrors c4Filter on the same 5 planted lines: line rules
-    // (terminal punct, >=5 words, no "javascript"), then the document
-    // rules on the assembled text ('lorem ipsum', '{', >=3 kept)
-    "q_c4_filter" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  'The opening sentence keeps ' || substring(text, 1, 30)
-        |    || ' going fine.' || chr(10) || 'too short' || chr(10)
-        |    || 'unpunctuated line with plenty of words present'
-        |    || chr(10)
-        |    || CASE WHEN doc_id % 7 = 0
-        |       THEN 'This javascript line would pollute the corpus badly.'
-        |       ELSE 'Another clean sentence with enough words here!' END
-        |    || chr(10)
-        |    || CASE WHEN doc_id % 11 = 0
-        |       THEN 'Lorem ipsum dolor sit amet forever.'
-        |       ELSE 'Closing thoughts from source ' || source
-        |         || ' wrap this up?' END AS t2
-        | FROM documents),
-        |k AS (
-        | SELECT doc_id, t2,
-        |  list_filter(string_split(t2, chr(10)),
-        |   l -> regexp_matches(trim(l), '[.!?"]$')
-        |    AND len(string_split_regex(trim(l), '\s+')) >= 5
-        |    AND NOT contains(lower(trim(l)), 'javascript')) AS kept,
-        |  len(string_split(t2, chr(10))) AS n_lines
-        | FROM p)
-        |SELECT doc_id, array_to_string(kept, chr(10)) AS text,
-        | CAST(len(kept) AS INTEGER) AS n_lines_kept,
-        | CAST(n_lines - len(kept) AS INTEGER) AS n_lines_dropped
-        |FROM k
-        |WHERE NOT contains(lower(t2), 'lorem ipsum')
-        | AND NOT contains(t2, '{')
-        | AND len(kept) >= 3""".stripMargin,
-
-    "q_contamination" ->
-      """WITH sh AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM documents)
-        | WHERE length(norm) > 0),
-        |te AS (SELECT doc_id, s FROM sh WHERE doc_id % 5 = 0),
-        |tr AS (SELECT doc_id, s FROM sh WHERE doc_id % 5 <> 0),
-        |p AS (
-        | SELECT te.doc_id AS test_id,
-        |  CAST(len(list_intersect(te.s, tr.s)) AS DOUBLE) / len(te.s) AS c
-        | FROM te, tr)
-        |SELECT test_id, max(c) AS max_containment,
-        |       max(c) >= 0.5 AS contaminated
-        |FROM p GROUP BY test_id""".stripMargin,
-
-    "q_redact_pii" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  CASE
-        |   WHEN doc_id % 5 = 0 THEN text || ' contact user' ||
-        |     CAST(doc_id AS VARCHAR) || '@example.com now'
-        |   WHEN doc_id % 5 = 1 THEN text || ' ssn 123-45-6789 end'
-        |   WHEN doc_id % 5 = 2 THEN text || ' call 555-123-4567 today'
-        |   ELSE text END AS planted
-        | FROM documents),
-        |r AS (
-        | SELECT doc_id, planted,
-        |  regexp_replace(regexp_replace(regexp_replace(planted,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{3}-\d{2}-\d{4}\b', '<SSN>', 'g'),
-        |    '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '<PHONE>', 'g') AS clean
-        | FROM p)
-        |SELECT doc_id, clean, clean <> planted AS was_redacted FROM r""".stripMargin,
-
-    "q_data_split" ->
-      """SELECT CASE
-        |  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' THEN 'train'
-        |  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'valid'
-        |  ELSE 'test' END AS split,
-        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "q_word_ngrams" ->
-      """WITH w AS (
-        | SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words
-        | FROM documents),
-        |g AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, len(words) - 1),
-        |    i -> words[i] || ' ' || words[i+1])) AS grams
-        | FROM w WHERE len(words) >= 2),
-        |e AS (SELECT doc_id, unnest(grams) AS gram FROM g)
-        |SELECT gram, count(*) AS n_docs FROM e WHERE gram <> ''
-        |GROUP BY gram ORDER BY n_docs DESC, gram ASC LIMIT 20""".stripMargin,
-
-    "q_ngram_jaccard" ->
-      """WITH sh AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM documents)
-        | WHERE length(norm) > 0),
-        |pairs AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) AS jaccard
-        | FROM sh a JOIN sh b
-        |  ON a.doc_id < b.doc_id
-        |   AND CAST(least(len(a.s), len(b.s)) AS DOUBLE)
-        |       / greatest(len(a.s), len(b.s)) >= 0.5)
-        |SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.5""".stripMargin,
-
-    "q_jaccard_threshold" ->
-      """WITH sh AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM documents WHERE doc_id % 5 = 0)
-        | WHERE length(norm) > 0),
-        |pairs AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) AS jaccard
-        | FROM sh a JOIN sh b
-        |  ON a.doc_id < b.doc_id
-        |   AND CAST(least(len(a.s), len(b.s)) AS DOUBLE)
-        |       / greatest(len(a.s), len(b.s)) >= 0.8)
-        |SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.8""".stripMargin,
-
-    // the FastHash.hash64 kernel (FNV-1a over UTF-16 code units +
-    // Murmur3 fmix64 finalizer) replayed in DuckDB HUGEINT modular
-    // arithmetic: 64-bit wrapping multiply decomposed into lo/hi
-    // 32-bit limbs mod 2^64, xor-shift on UBIGINT. Fixture text is
-    // BMP-only, so DuckDB codepoints == Java chars. Then the simhash
-    // sign vote per bit, and the full hamming-radius pair join — the
-    // same rebuild-the-hash discipline as the q_fuzzy_match pg_trgm
-    // oracle.
-    "q_dedup_minhash" -> dedupMinhashOracle,
-
-    "q_minhash_indexed" -> minhashIndexedOracle,
-
-    "q_dedup_sink" -> dedupSinkOracle,
-    // survivor-set oracle, valid by a measured fixture property: no
-    // natural embedding pair reaches cosine 0.985 at any SF (the gate
-    // thresholds at 0.99), so exactly the planted scaled dups drop
-    // against the index and the planted twins collapse to their
-    // originals — the published survivors are the vec_id % 3 = 0 slice
-    // verbatim. AnnSinkSpec pins the fixture assumption.
-    "q_ann_sink" ->
-      "SELECT vec_id, label FROM embeddings WHERE vec_id % 3 = 0",
-
-    "q_simhash" ->
-      """WITH toks AS (
-        | SELECT doc_id,
-        |  unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        | FROM documents),
-        |f AS (SELECT doc_id, CAST(list_reduce(
-        |   list_prepend(14695981039346656037::HUGEINT,
-        |     list_transform(generate_series(1, length(tok)),
-        |       i -> unicode(substr(tok, i, 1))::HUGEINT)),
-        |   (h, c) -> (xor(h::UBIGINT, c::UBIGINT)::HUGEINT
-        |              * 1099511628211) % 18446744073709551616)
-        |  AS UBIGINT) AS h1
-        | FROM toks),
-        |s1 AS (SELECT doc_id, xor(h1, h1 >> 33) AS a FROM f),
-        |s2 AS (SELECT doc_id, CAST((((a % 4294967296)::HUGEINT
-        |  * 18397679294719823053) + (((a // 4294967296)::HUGEINT
-        |  * (18397679294719823053 % 4294967296)) % 4294967296)
-        |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS b
-        | FROM s1),
-        |s3 AS (SELECT doc_id, xor(b, b >> 33) AS c FROM s2),
-        |s4 AS (SELECT doc_id, CAST((((c % 4294967296)::HUGEINT
-        |  * 14181476777654086739) + (((c // 4294967296)::HUGEINT
-        |  * (14181476777654086739 % 4294967296)) % 4294967296)
-        |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS d
-        | FROM s3),
-        |th AS (SELECT doc_id, xor(d, d >> 33) AS h FROM s4),
-        |bits AS (
-        | SELECT doc_id, b,
-        |  SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        | FROM th, (SELECT unnest(generate_series(0, 63)) AS b)
-        | GROUP BY doc_id, b),
-        |sigs AS (
-        | SELECT doc_id,
-        |  SUM(CASE WHEN s > 0 THEN (1::UBIGINT << b)
-        |      ELSE 0::UBIGINT END) AS sig
-        | FROM bits GROUP BY doc_id)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        | CAST(bit_count(xor(a.sig, b.sig)) AS INTEGER) AS hamming
-        |FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sig, b.sig)) <= 12""".stripMargin,
-
-    "q_unigram_encode" -> unigramEncodeOracle,
-
-    "q_bpe_encode" -> bpeEncodeOracle,
-
-    // the TRAINER replayed as 40 unrolled materialized-CTE iterations
-    "q_bpe_train" -> bpeTrainOracle(40),
-    "q_wordpiece_train" -> wordPieceTrainOracle(40),
-    "q_wordpiece_encode" -> wordPieceEncodeOracle,
-
-    "q_windowed_counts" ->
-      """SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us,
-        | event_type, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q_url_extract" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN
-        |   text || ' see https://sub' || CAST(doc_id % 7 AS VARCHAR)
-        |        || '.example-site.org/p/' || CAST(doc_id AS VARCHAR) || ' end'
-        |  ELSE text END AS t
-        | FROM documents)
-        |SELECT doc_id,
-        | regexp_extract(t, 'https?://[A-Za-z0-9.-]+(/[^ ]*)?', 0) AS url,
-        | regexp_extract(t, 'https?://([A-Za-z0-9.-]+)', 1) AS domain,
-        | regexp_extract(t, 'https?://[A-Za-z0-9.-]+(/[^ ]*)', 1) AS path,
-        | regexp_extract(t, 'https?://[A-Za-z0-9.-]+(/[^ ]*)?', 0) <> ''
-        |   AS has_url
-        |FROM p""".stripMargin,
-
-    "q_sample_strata" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE CASE WHEN source = 'src0'
-        | THEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '80000000'
-        | ELSE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '40000000'
-        |END""".stripMargin,
-
-    "q_pipeline_e2e" ->
-      """WITH RECURSIVE uniq AS (
-        | SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-        |d AS (
-        | SELECT doc_id, text, n_chars FROM documents
-        | WHERE doc_id IN (SELECT doc_id FROM uniq)),
-        |sh AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM d)
-        | WHERE length(norm) > 0),
-        |pairs AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM sh a JOIN sh b
-        |  ON a.doc_id < b.doc_id
-        |   AND CAST(least(len(a.s), len(b.s)) AS DOUBLE)
-        |       / greatest(len(a.s), len(b.s)) >= 0.5
-        | WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) >= 0.5),
-        |edges AS (
-        | SELECT id_a AS u, id_b AS v FROM pairs
-        | UNION SELECT id_b, id_a FROM pairs),
-        |reach(a, b) AS (
-        | SELECT u, v FROM edges
-        | UNION
-        | SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u
-        |  WHERE r.a <> e.v),
-        |comp AS (SELECT a AS doc_id, least(a, min(b)) AS cid
-        |         FROM reach GROUP BY a),
-        |kept AS (
-        | SELECT d.doc_id, d.n_chars FROM d LEFT JOIN comp c USING (doc_id)
-        | WHERE c.cid IS NULL OR c.cid = d.doc_id)
-        |SELECT CASE
-        |  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' THEN 'train'
-        |  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'valid'
-        |  ELSE 'test' END AS split,
-        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM kept GROUP BY 1""".stripMargin,
-
-    // connected components as a recursive transitive closure — fine at
-    // oracle scale (the pair graph is tiny); the Spark side uses
-    // large-star/small-star precisely because this closure is NOT the
-    // 100 TB answer
-    "q_cc_incremental" ->
-      """WITH RECURSIVE sh AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM documents)
-        | WHERE length(norm) > 0),
-        |pairs AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM sh a JOIN sh b
-        |  ON a.doc_id < b.doc_id
-        |   AND CAST(least(len(a.s), len(b.s)) AS DOUBLE)
-        |       / greatest(len(a.s), len(b.s)) >= 0.5
-        | WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) >= 0.5),
-        |edges AS (
-        | SELECT id_a AS u, id_b AS v FROM pairs
-        | UNION SELECT id_b, id_a FROM pairs),
-        |reach(a, b) AS (
-        | SELECT u, v FROM edges
-        | UNION
-        | SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u
-        |  WHERE r.a <> e.v)
-        |SELECT a AS id, least(a, min(b)) AS cluster_id
-        |FROM reach GROUP BY a""".stripMargin,
-
-    "q_assoc_rules" ->
-      """WITH it AS (
-        | SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
-        | WHERE l_orderkey % 3 = 0
-        |   AND l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
-        |keep AS (
-        | SELECT b, i FROM it WHERE b IN
-        |  (SELECT b FROM it GROUP BY b HAVING count(*) <= 1000)),
-        |n AS (SELECT count(DISTINCT b) AS nb FROM keep),
-        |ic AS (SELECT i, count(*) AS c FROM keep GROUP BY i),
-        |pc AS (
-        | SELECT a.i AS ia, b.i AS ib, count(*) AS n_ab
-        | FROM keep a JOIN keep b ON a.b = b.b AND a.i < b.i
-        | GROUP BY 1, 2 HAVING count(*) >= 1)
-        |SELECT pc.ia AS item_a, pc.ib AS item_b, pc.n_ab,
-        | ca.c AS n_a, cb.c AS n_b,
-        | round(CAST(pc.n_ab AS DOUBLE) / n.nb, 6) AS support,
-        | round(CAST(pc.n_ab AS DOUBLE) / ca.c, 6) AS conf_ab,
-        | round(CAST(pc.n_ab AS DOUBLE) / cb.c, 6) AS conf_ba,
-        | round(CAST(pc.n_ab AS DOUBLE) * n.nb /
-        |   (CAST(ca.c AS DOUBLE) * CAST(cb.c AS DOUBLE)), 6) AS lift
-        |FROM pc JOIN ic ca ON ca.i = pc.ia
-        |        JOIN ic cb ON cb.i = pc.ib
-        |CROSS JOIN n""".stripMargin,
-
-    "q_target_encode" ->
-      """WITH base AS (
-        | SELECT p.p_brand, CAST(l.l_extendedprice AS DECIMAL(18,6)) AS y
-        | FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        | WHERE l.l_extendedprice IS NOT NULL),
-        |g AS (SELECT CAST(sum(y) AS DOUBLE) AS gs, count(*) AS gn
-        |      FROM base)
-        |SELECT p_brand, count(*) AS n,
-        | round((CAST(sum(y) AS DOUBLE) + 10.0 * (g.gs / g.gn))
-        |   / (count(*) + 10.0), 6) AS enc
-        |FROM base CROSS JOIN g
-        |GROUP BY p_brand, g.gs, g.gn""".stripMargin,
-
-    "q_majority_vote" ->
-      """WITH a AS (
-        | SELECT event_id % 500 AS item, user_id % 11 AS annot,
-        |        event_type AS label
-        | FROM events
-        | WHERE event_id IS NOT NULL AND user_id IS NOT NULL
-        |   AND event_type IS NOT NULL),
-        |v AS (SELECT item, label, count(*) AS c FROM a GROUP BY 1, 2),
-        |w AS (SELECT item, label, c,
-        |       row_number() OVER (PARTITION BY item
-        |                          ORDER BY c DESC, label) AS rn,
-        |       CAST(sum(c) OVER (PARTITION BY item) AS BIGINT) AS total,
-        |       count(*) OVER (PARTITION BY item) AS n_labels
-        |      FROM v)
-        |SELECT item, label, c AS votes, total, n_labels,
-        | round(CAST(c AS DOUBLE) / total, 6) AS agreement
-        |FROM w WHERE rn = 1""".stripMargin,
-
-    "q_fleiss_kappa" ->
-      """WITH a AS (
-        | SELECT event_id % 500 AS item, user_id % 11 AS annot,
-        |        event_type AS label
-        | FROM events
-        | WHERE event_id IS NOT NULL AND user_id IS NOT NULL
-        |   AND event_type IS NOT NULL),
-        |nij AS (SELECT item, label, count(*) AS c FROM a GROUP BY 1, 2),
-        |pi AS (
-        | SELECT CAST(round(CAST(sum(c*(c-1)) AS DOUBLE) /
-        |          CAST(sum(c)*(sum(c)-1) AS DOUBLE), 12)
-        |        AS DECIMAL(38,12)) AS pi
-        | FROM nij GROUP BY item HAVING sum(c) >= 2),
-        |pbar AS (SELECT CAST(sum(pi) AS DOUBLE) / count(*) AS pbar,
-        |         count(*) AS n_items FROM pi),
-        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS nt FROM nij),
-        |pj AS (
-        | SELECT CAST(round((CAST(cj AS DOUBLE) / nt) *
-        |          (CAST(cj AS DOUBLE) / nt), 12) AS DECIMAL(38,12)) AS pj2
-        | FROM (SELECT label, CAST(sum(c) AS BIGINT) AS cj
-        |       FROM nij GROUP BY 1) CROSS JOIN tot),
-        |pe AS (SELECT CAST(sum(pj2) AS DOUBLE) AS pe,
-        |       count(*) AS n_categories FROM pj),
-        |cnt AS (SELECT count(*) AS n_ratings FROM a)
-        |SELECT n_items, n_categories, n_ratings,
-        | round(pbar, 9) AS p_bar, round(pe, 9) AS p_e,
-        | CASE WHEN pe >= 1.0 THEN NULL
-        |      ELSE round((pbar - pe) / (1.0 - pe), 9) END AS kappa
-        |FROM pbar CROSS JOIN pe CROSS JOIN cnt""".stripMargin,
-
-    "q_annotator_accuracy" ->
-      """WITH a AS (
-        | SELECT event_id % 500 AS item, user_id % 11 AS annot,
-        |        event_type AS label
-        | FROM events
-        | WHERE event_id IS NOT NULL AND user_id IS NOT NULL
-        |   AND event_type IS NOT NULL),
-        |v AS (SELECT item, label, count(*) AS c FROM a GROUP BY 1, 2),
-        |m AS (
-        | SELECT item, label AS maj FROM (
-        |  SELECT item, label,
-        |   row_number() OVER (PARTITION BY item
-        |                      ORDER BY c DESC, label) AS rn
-        |  FROM v) WHERE rn = 1)
-        |SELECT annot, count(*) AS n_rated,
-        | count(CASE WHEN a.label = m.maj THEN 1 END) AS n_agree,
-        | round(CAST(count(CASE WHEN a.label = m.maj THEN 1 END) AS DOUBLE)
-        |   / count(*), 6) AS accuracy
-        |FROM a JOIN m USING (item) GROUP BY annot""".stripMargin,
-
-    "q_merge_intervals" ->
-      """WITH sp AS (
-        | SELECT CAST(l_suppkey % 50 AS BIGINT) AS k,
-        |        CAST(l_partkey % 500 AS BIGINT) AS s,
-        |        CAST(l_partkey % 500 + l_orderkey % 20 + 1 AS BIGINT) AS e
-        | FROM lineitem),
-        |f AS (
-        | SELECT k, s, e,
-        |  max(e) OVER (PARTITION BY k ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-        | FROM sp),
-        |g AS (
-        | SELECT k, s, e,
-        |  CAST(sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY k ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |   AS BIGINT) AS island
-        | FROM f)
-        |SELECT k, min(s) AS s, max(e) AS e, count(*) AS n_spans
-        |FROM g GROUP BY k, island""".stripMargin,
-
-    "q_token_drift" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        | FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-        |b AS (SELECT term, count(*) AS o1 FROM tok
-        |      WHERE doc_id % 2 = 0 AND term <> '' GROUP BY 1),
-        |a2 AS (SELECT term, count(*) AS o2 FROM tok
-        |       WHERE doc_id % 2 = 1 AND term <> '' GROUP BY 1),
-        |t1 AS (SELECT CAST(sum(o1) AS BIGINT) AS n1 FROM b),
-        |t2 AS (SELECT CAST(sum(o2) AS BIGINT) AS n2 FROM a2),
-        |top AS (
-        | SELECT coalesce(b.term, a2.term) AS term,
-        |        CAST(coalesce(o1, 0) AS BIGINT) AS nb,
-        |        CAST(coalesce(o2, 0) AS BIGINT) AS na
-        | FROM b FULL OUTER JOIN a2 ON b.term = a2.term
-        | ORDER BY (coalesce(o1, 0) + coalesce(o2, 0)) DESC, term
-        | LIMIT 50)
-        |SELECT term, nb AS n_before, na AS n_after,
-        | round(CAST(nb AS DOUBLE) / n1, 9) AS p_before,
-        | round(CAST(na AS DOUBLE) / n2, 9) AS p_after,
-        | CASE WHEN n1 > 0 AND n2 > 0 THEN round(
-        |   (nb - CAST(nb + na AS DOUBLE) * n1 / (n1 + n2))
-        |     * (nb - CAST(nb + na AS DOUBLE) * n1 / (n1 + n2))
-        |     / (CAST(nb + na AS DOUBLE) * n1 / (n1 + n2))
-        | + (na - CAST(nb + na AS DOUBLE) * n2 / (n1 + n2))
-        |     * (na - CAST(nb + na AS DOUBLE) * n2 / (n1 + n2))
-        |     / (CAST(nb + na AS DOUBLE) * n2 / (n1 + n2)), 6) END AS chi2
-        |FROM top CROSS JOIN t1 CROSS JOIN t2""".stripMargin,
-
-    "q_krippendorff" ->
-      """WITH a AS (
-        | SELECT event_id % 500 AS item, user_id % 11 AS annot,
-        |        event_type AS label
-        | FROM events
-        | WHERE event_id IS NOT NULL AND user_id IS NOT NULL
-        |   AND event_type IS NOT NULL),
-        |nuc AS (SELECT item, label, count(*) AS c FROM a GROUP BY 1, 2),
-        |pu AS (
-        | SELECT item, CAST(sum(c) AS BIGINT) AS nu,
-        |  CAST(round(CAST(sum(c*(c-1)) AS DOUBLE) /
-        |    CAST(sum(c) - 1 AS DOUBLE), 12) AS DECIMAL(38,12)) AS occ
-        | FROM nuc GROUP BY item HAVING sum(c) >= 2),
-        |pc AS (
-        | SELECT n.label, CAST(sum(n.c) AS BIGINT) AS nc
-        | FROM nuc n JOIN pu ON pu.item = n.item GROUP BY 1),
-        |se AS (
-        | SELECT CAST(sum(CAST(nc AS DECIMAL(19,0)) *
-        |   CAST(nc - 1 AS DECIMAL(19,0))) AS DOUBLE) AS se,
-        |  count(*) AS n_categories FROM pc),
-        |tot AS (
-        | SELECT count(*) AS n_units, CAST(sum(nu) AS BIGINT) AS n_pairable,
-        |  CAST(sum(occ) AS DOUBLE) AS so FROM pu),
-        |d AS (
-        | SELECT n_units, n_categories, n_pairable,
-        |  CAST(1.0 AS DOUBLE) - so / n_pairable AS dor,
-        |  CAST(1.0 AS DOUBLE) - se /
-        |    (CAST(n_pairable AS DOUBLE) * (n_pairable - 1)) AS der
-        | FROM tot CROSS JOIN se)
-        |SELECT n_units, n_categories, n_pairable,
-        | round(dor, 9) AS d_o, round(der, 9) AS d_e,
-        | CASE WHEN der > CAST(0.0 AS DOUBLE)
-        |      THEN round(CAST(1.0 AS DOUBLE) - dor / der, 9) END AS alpha
-        |FROM d""".stripMargin,
-
-    "q_dialog_audit" ->
-      """WITH s AS (
-        | SELECT user_id, event_type AS r,
-        |  lag(event_type) OVER (PARTITION BY user_id
-        |                        ORDER BY ts, event_id) AS prev,
-        |  row_number() OVER (PARTITION BY user_id
-        |                     ORDER BY ts, event_id) AS rn
-        | FROM events
-        | WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |   AND event_type IS NOT NULL AND event_id IS NOT NULL)
-        |SELECT user_id, count(*) AS n_turns,
-        | count(CASE WHEN r = prev THEN 1 END) AS n_repeats,
-        | max(CASE WHEN rn = 1 THEN r END) AS first_role,
-        | count(DISTINCT r) AS n_roles
-        |FROM s GROUP BY user_id""".stripMargin,
-
-    "q_win_rates" ->
-      """WITH pr AS (
-        | SELECT CAST(l_partkey % 100 AS BIGINT) AS wi,
-        |        CAST(l_suppkey % 100 AS BIGINT) AS lo
-        | FROM lineitem
-        | WHERE l_partkey % 100 <> l_suppkey % 100),
-        |w AS (SELECT wi, lo, count(*) AS w FROM pr GROUP BY 1, 2),
-        |u AS (
-        | SELECT least(wi, lo) AS item_a, greatest(wi, lo) AS item_b,
-        |  CAST(sum(CASE WHEN wi < lo THEN w ELSE 0 END) AS BIGINT)
-        |    AS wins_a,
-        |  CAST(sum(CASE WHEN wi > lo THEN w ELSE 0 END) AS BIGINT)
-        |    AS wins_b
-        | FROM w GROUP BY 1, 2),
-        |c AS (
-        | SELECT item_a, item_b, wins_a, wins_b, wins_a + wins_b AS n,
-        |  CAST(wins_a AS DOUBLE) / (wins_a + wins_b) AS p
-        | FROM u)
-        |SELECT item_a, item_b, wins_a, wins_b, n,
-        | round(p, 9) AS win_rate_a,
-        | round((p + CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE) / (2 * n)
-        |   - CAST(1.96 AS DOUBLE) *
-        |     sqrt((p * (CAST(1.0 AS DOUBLE) - p)
-        |       + CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE) / (4 * n))
-        |      / n))
-        |  / (CAST(1.0 AS DOUBLE)
-        |     + CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE) / n), 9)
-        |  AS wilson_lb_a
-        |FROM c""".stripMargin,
-
-    "q_bradley_terry" ->
-      """WITH pr AS (
-        | SELECT CAST(l_partkey % 100 AS BIGINT) AS wi,
-        |        CAST(l_suppkey % 100 AS BIGINT) AS lo
-        | FROM lineitem
-        | WHERE l_partkey % 100 <> l_suppkey % 100),
-        |w AS (SELECT wi, lo, count(*) AS w FROM pr GROUP BY 1, 2),
-        |g AS (SELECT i, j, CAST(sum(w) AS BIGINT) AS n FROM (
-        |       SELECT wi AS i, lo AS j, w FROM w
-        |       UNION ALL SELECT lo, wi, w FROM w) GROUP BY 1, 2),
-        |wins AS (SELECT wi AS i, CAST(sum(w) AS BIGINT) AS wins
-        |         FROM w GROUP BY 1),
-        |base AS (
-        | SELECT g.i, coalesce(wins.wins, 0) AS wins,
-        |        CAST(sum(g.n) AS BIGINT) AS games,
-        |        CAST(coalesce(wins.wins, 0) AS DOUBLE)
-        |          + CAST(0.5 AS DOUBLE) * count(*) AS wsm
-        | FROM g LEFT JOIN wins ON wins.i = g.i
-        | GROUP BY g.i, wins.wins),
-        |p0 AS (SELECT i, CAST(1.0 AS DOUBLE) AS p FROM base),
-        |d1 AS (
-        | SELECT g.i, CAST(sum(CAST(round(
-        |          (CAST(g.n AS DOUBLE) + CAST(1.0 AS DOUBLE))
-        |            / (pi.p + pj.p), 12) AS DECIMAL(38,12))) AS DOUBLE) AS d
-        | FROM g JOIN p0 pi ON pi.i = g.i JOIN p0 pj ON pj.i = g.j
-        | GROUP BY g.i),
-        |r1 AS (SELECT base.i, base.wsm / d1.d AS raw
-        |       FROM base JOIN d1 ON d1.i = base.i),
-        |s1 AS (SELECT CAST(sum(CAST(round(raw, 12) AS DECIMAL(38,12)))
-        |        AS DOUBLE) AS s FROM r1),
-        |p1 AS (SELECT i, round(raw / s, 9) AS p FROM r1 CROSS JOIN s1),
-        |d2 AS (
-        | SELECT g.i, CAST(sum(CAST(round(
-        |          (CAST(g.n AS DOUBLE) + CAST(1.0 AS DOUBLE))
-        |            / (pi.p + pj.p), 12) AS DECIMAL(38,12))) AS DOUBLE) AS d
-        | FROM g JOIN p1 pi ON pi.i = g.i JOIN p1 pj ON pj.i = g.j
-        | GROUP BY g.i),
-        |r2 AS (SELECT base.i, base.wsm / d2.d AS raw
-        |       FROM base JOIN d2 ON d2.i = base.i),
-        |s2 AS (SELECT CAST(sum(CAST(round(raw, 12) AS DECIMAL(38,12)))
-        |        AS DOUBLE) AS s FROM r2),
-        |p2 AS (SELECT i, round(raw / s, 9) AS p FROM r2 CROSS JOIN s2)
-        |SELECT base.i AS item, base.wins, base.games, p2.p AS strength
-        |FROM base JOIN p2 ON p2.i = base.i""".stripMargin,
-
-    "q_hits" ->
-      """WITH e AS (
-        | SELECT DISTINCT -CAST(l_suppkey AS BIGINT) AS src,
-        |        CAST(l_partkey AS BIGINT) AS dst
-        | FROM lineitem),
-        |nodes AS (SELECT DISTINCT node FROM
-        | (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |h0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS s FROM nodes),
-        |a1r AS (
-        | SELECT n.node, coalesce(CAST(x.m AS DOUBLE),
-        |          CAST(0.0 AS DOUBLE)) AS raw
-        | FROM nodes n LEFT JOIN
-        |  (SELECT e.dst, sum(CAST(round(h.s, 12) AS DECIMAL(38,12))) AS m
-        |   FROM e JOIN h0 h ON h.node = e.src GROUP BY e.dst) x
-        |  ON x.dst = n.node),
-        |sa1 AS (SELECT CAST(sum(CAST(round(raw, 12) AS DECIMAL(38,12)))
-        |         AS DOUBLE) AS s FROM a1r),
-        |a1 AS (SELECT node, round(raw / s, 9) AS s
-        |       FROM a1r CROSS JOIN sa1),
-        |h1r AS (
-        | SELECT n.node, coalesce(CAST(x.m AS DOUBLE),
-        |          CAST(0.0 AS DOUBLE)) AS raw
-        | FROM nodes n LEFT JOIN
-        |  (SELECT e.src, sum(CAST(round(a.s, 12) AS DECIMAL(38,12))) AS m
-        |   FROM e JOIN a1 a ON a.node = e.dst GROUP BY e.src) x
-        |  ON x.src = n.node),
-        |sh1 AS (SELECT CAST(sum(CAST(round(raw, 12) AS DECIMAL(38,12)))
-        |         AS DOUBLE) AS s FROM h1r),
-        |h1 AS (SELECT node, round(raw / s, 9) AS s
-        |       FROM h1r CROSS JOIN sh1),
-        |a2r AS (
-        | SELECT n.node, coalesce(CAST(x.m AS DOUBLE),
-        |          CAST(0.0 AS DOUBLE)) AS raw
-        | FROM nodes n LEFT JOIN
-        |  (SELECT e.dst, sum(CAST(round(h.s, 12) AS DECIMAL(38,12))) AS m
-        |   FROM e JOIN h1 h ON h.node = e.src GROUP BY e.dst) x
-        |  ON x.dst = n.node),
-        |sa2 AS (SELECT CAST(sum(CAST(round(raw, 12) AS DECIMAL(38,12)))
-        |         AS DOUBLE) AS s FROM a2r),
-        |a2 AS (SELECT node, round(raw / s, 9) AS s
-        |       FROM a2r CROSS JOIN sa2),
-        |h2r AS (
-        | SELECT n.node, coalesce(CAST(x.m AS DOUBLE),
-        |          CAST(0.0 AS DOUBLE)) AS raw
-        | FROM nodes n LEFT JOIN
-        |  (SELECT e.src, sum(CAST(round(a.s, 12) AS DECIMAL(38,12))) AS m
-        |   FROM e JOIN a2 a ON a.node = e.dst GROUP BY e.src) x
-        |  ON x.src = n.node),
-        |sh2 AS (SELECT CAST(sum(CAST(round(raw, 12) AS DECIMAL(38,12)))
-        |         AS DOUBLE) AS s FROM h2r),
-        |h2 AS (SELECT node, round(raw / s, 9) AS s
-        |       FROM h2r CROSS JOIN sh2)
-        |SELECT h2.node, h2.s AS hub, a2.s AS authority
-        |FROM h2 JOIN a2 ON a2.node = h2.node""".stripMargin,
-
-    "q_ldiversity" ->
-      """SELECT c_nationkey, CAST(c_custkey % 40 AS BIGINT) AS bucket,
-        | count(*) AS group_size,
-        | count(DISTINCT c_mktsegment) AS distinct_sensitive
-        |FROM customer GROUP BY 1, 2
-        |HAVING count(DISTINCT c_mktsegment) < 4""".stripMargin,
-
-    "q_fd_profile" ->
-      """WITH f1 AS (
-        | SELECT x, max(c) AS m, sum(c) AS t FROM
-        |  (SELECT o_orderkey AS x, o_custkey AS y, count(*) AS c
-        |   FROM orders GROUP BY 1, 2) GROUP BY x),
-        |f2 AS (
-        | SELECT x, max(c) AS m, sum(c) AS t FROM
-        |  (SELECT o_custkey AS x, o_orderstatus AS y, count(*) AS c
-        |   FROM orders GROUP BY 1, 2) GROUP BY x),
-        |f3 AS (
-        | SELECT x, max(c) AS m, sum(c) AS t FROM
-        |  (SELECT o_orderstatus AS x, o_orderpriority AS y, count(*) AS c
-        |   FROM orders GROUP BY 1, 2) GROUP BY x)
-        |SELECT 'o_orderkey' AS determinant, 'o_custkey' AS dependent,
-        | CAST(sum(t) AS BIGINT) AS total_rows,
-        | count(*) AS ndv_determinant,
-        | CAST(sum(m) AS BIGINT) AS consistent_rows,
-        | round(CAST(sum(m) AS DOUBLE) / CAST(sum(t) AS BIGINT), 9)
-        |   AS confidence
-        |FROM f1
-        |UNION ALL
-        |SELECT 'o_custkey', 'o_orderstatus', CAST(sum(t) AS BIGINT),
-        | count(*), CAST(sum(m) AS BIGINT),
-        | round(CAST(sum(m) AS DOUBLE) / CAST(sum(t) AS BIGINT), 9)
-        |FROM f2
-        |UNION ALL
-        |SELECT 'o_orderstatus', 'o_orderpriority', CAST(sum(t) AS BIGINT),
-        | count(*), CAST(sum(m) AS BIGINT),
-        | round(CAST(sum(m) AS DOUBLE) / CAST(sum(t) AS BIGINT), 9)
-        |FROM f3""".stripMargin,
-
-    "q_token_budget" ->
-      """WITH n AS (
-        | SELECT doc_id,
-        |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |   ELSE len(string_split_regex(lower(trim(text)), '\s+')) END AS nt
-        | FROM documents),
-        |k AS (
-        | SELECT doc_id, CAST(nt AS BIGINT) AS n_toks,
-        |  md5(CAST(doc_id AS VARCHAR)) ||
-        |    lpad(CAST(doc_id AS VARCHAR), 20, '0') AS okey
-        | FROM n WHERE nt > 0),
-        |c AS (
-        | SELECT doc_id, n_toks,
-        |  CAST(sum(n_toks) OVER (ORDER BY okey) AS BIGINT) AS cum
-        | FROM k)
-        |SELECT doc_id, n_toks, cum AS cum_toks
-        |FROM c WHERE cum <= 15000""".stripMargin,
-
-    "q_mad_outliers" ->
-      """WITH m AS (
-        | SELECT event_type, quantile_cont(value, 0.5) AS med
-        | FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |d AS (
-        | SELECT e.event_id, e.event_type, e.value, m.med
-        | FROM events e JOIN m USING (event_type)
-        | WHERE e.value IS NOT NULL),
-        |md AS (
-        | SELECT event_type, quantile_cont(abs(value - med), 0.5) AS mad
-        | FROM d GROUP BY 1),
-        |z AS (
-        | SELECT d.event_id, d.event_type, d.value, d.med, md.mad,
-        |  CASE WHEN md.mad > CAST(0.0 AS DOUBLE) THEN
-        |   round((d.value - d.med) /
-        |     (CAST(1.4826 AS DOUBLE) * md.mad), 6) END AS robust_z
-        | FROM d JOIN md USING (event_type))
-        |SELECT event_id, event_type, value, med, mad, robust_z,
-        | (mad > CAST(0.0 AS DOUBLE)
-        |   AND abs(robust_z) > CAST(3.5 AS DOUBLE)) AS is_outlier
-        |FROM z""".stripMargin,
-
-    "q_temperature_mix" ->
-      """WITH n AS (
-        | SELECT lang,
-        |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |   ELSE len(string_split_regex(lower(trim(text)), '\s+')) END AS nt
-        | FROM documents WHERE lang IS NOT NULL),
-        |t AS (SELECT lang, CAST(sum(nt) AS BIGINT) AS n_tokens
-        |      FROM n GROUP BY lang HAVING sum(nt) > 0),
-        |w AS (SELECT lang, n_tokens,
-        |       round(sqrt(CAST(n_tokens AS DOUBLE)), 6) AS w FROM t),
-        |s AS (SELECT CAST(sum(CAST(w AS DECIMAL(38,6))) AS DOUBLE) AS s
-        |      FROM w)
-        |SELECT lang, n_tokens, round(w / s, 9) AS weight,
-        | round(least(CAST(1.0 AS DOUBLE),
-        |   CAST(10000.0 AS DOUBLE) * (w / s) / n_tokens), 9) AS rate
-        |FROM w CROSS JOIN s""".stripMargin,
-
-    "q_embed_drift" ->
-      """WITH v AS (
-        | SELECT vec_id, label,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        | FROM embeddings
-        | WHERE label IS NOT NULL AND embedding IS NOT NULL),
-        |bx AS (
-        | SELECT label, pos, e[pos] AS x FROM
-        |  (SELECT label, e, unnest(generate_series(1, len(e))) AS pos
-        |   FROM v WHERE vec_id % 2 = 0)),
-        |bm AS (
-        | SELECT label, pos,
-        |  CAST(sum(CAST(round(x, 12) AS DECIMAL(38,12))) AS DOUBLE)
-        |    / count(*) AS m,
-        |  count(*) AS n
-        | FROM bx GROUP BY 1, 2),
-        |bl AS (SELECT label, max(n) AS n_before,
-        |       list(m ORDER BY pos) AS mb FROM bm GROUP BY 1),
-        |ax AS (
-        | SELECT label, pos, e[pos] AS x FROM
-        |  (SELECT label, e, unnest(generate_series(1, len(e))) AS pos
-        |   FROM v WHERE vec_id % 2 = 1)),
-        |am AS (
-        | SELECT label, pos,
-        |  CAST(sum(CAST(round(x, 12) AS DECIMAL(38,12))) AS DOUBLE)
-        |    / count(*) AS m,
-        |  count(*) AS n
-        | FROM ax GROUP BY 1, 2),
-        |al AS (SELECT label, max(n) AS n_after,
-        |       list(m ORDER BY pos) AS ma FROM am GROUP BY 1)
-        |SELECT bl.label, bl.n_before, al.n_after,
-        | list_aggregate(list_transform(generate_series(1, len(bl.mb)),
-        |   i -> bl.mb[i] * al.ma[i]), 'sum') /
-        | (sqrt(list_aggregate(list_transform(generate_series(1, len(bl.mb)),
-        |   i -> bl.mb[i] * bl.mb[i]), 'sum')) *
-        |  sqrt(list_aggregate(list_transform(generate_series(1, len(al.ma)),
-        |   i -> al.ma[i] * al.ma[i]), 'sum'))) AS centroid_cosine,
-        | sqrt(list_aggregate(list_transform(generate_series(1, len(bl.mb)),
-        |   i -> (bl.mb[i] - al.ma[i]) * (bl.mb[i] - al.ma[i])), 'sum'))
-        |   AS l2_shift
-        |FROM bl JOIN al USING (label)""".stripMargin,
-
-    "q_preference_pairs" ->
-      """WITH it AS (
-        | SELECT l_orderkey AS g, l_partkey AS i,
-        |        max(CAST(l_extendedprice AS DOUBLE)) AS s
-        | FROM lineitem
-        | WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
-        |   AND l_extendedprice IS NOT NULL
-        | GROUP BY 1, 2),
-        |keep AS (
-        | SELECT * FROM it WHERE g IN
-        |  (SELECT g FROM it GROUP BY g HAVING count(*) <= 1000))
-        |SELECT a.g AS l_orderkey, a.i AS winner, b.i AS loser,
-        |       a.s - b.s AS margin
-        |FROM keep a JOIN keep b ON a.g = b.g AND a.s > b.s""".stripMargin,
-
-    "q_roc_auc" ->
-      """WITH s AS (
-        | SELECT value AS sc,
-        |  count(CASE WHEN event_type = 'purchase' THEN 1 END) AS pos,
-        |  count(CASE WHEN NOT (event_type = 'purchase') THEN 1 END) AS neg
-        | FROM events
-        | WHERE value IS NOT NULL AND event_type IS NOT NULL
-        | GROUP BY 1),
-        |c AS (
-        | SELECT sc, pos, neg,
-        |  CAST(coalesce(sum(neg) OVER (ORDER BY sc
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |   AS BIGINT) AS nb
-        | FROM s),
-        |t AS (
-        | SELECT CAST(sum(pos) AS BIGINT) AS p, CAST(sum(neg) AS BIGINT) AS n,
-        |  sum(CAST(pos AS DOUBLE) * nb +
-        |      CAST(0.5 AS DOUBLE) * pos * neg) AS u
-        | FROM c)
-        |SELECT p AS n_pos, n AS n_neg,
-        | CASE WHEN p > 0 AND n > 0
-        |      THEN round(u / (CAST(p AS DOUBLE) * n), 9) END AS auc
-        |FROM t""".stripMargin,
-
-    "q_calibration" ->
-      """WITH b AS (
-        | SELECT least(9, CAST(floor(s * 10) AS BIGINT)) AS bin, s, y FROM
-        |  (SELECT (event_id % 97) / CAST(97.0 AS DOUBLE) AS s,
-        |          event_type = 'purchase' AS y
-        |   FROM events
-        |   WHERE event_id IS NOT NULL AND event_type IS NOT NULL)
-        | WHERE s >= 0 AND s <= 1)
-        |SELECT bin, count(*) AS n,
-        | round(CAST(sum(CAST(round(s, 12) AS DECIMAL(38,12))) AS DOUBLE)
-        |   / count(*), 9) AS confidence,
-        | round(CAST(count(CASE WHEN y THEN 1 END) AS DOUBLE)
-        |   / count(*), 9) AS accuracy,
-        | round(CAST(count(CASE WHEN y THEN 1 END) AS DOUBLE) / count(*)
-        |   - CAST(sum(CAST(round(s, 12) AS DECIMAL(38,12))) AS DOUBLE)
-        |     / count(*), 9) AS gap
-        |FROM b GROUP BY bin""".stripMargin,
-
-    "q_cluster_dedup" ->
-      """WITH RECURSIVE sh AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM documents)
-        | WHERE length(norm) > 0),
-        |pairs AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM sh a JOIN sh b
-        |  ON a.doc_id < b.doc_id
-        |   AND CAST(least(len(a.s), len(b.s)) AS DOUBLE)
-        |       / greatest(len(a.s), len(b.s)) >= 0.5
-        | WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) >= 0.5),
-        |edges AS (
-        | SELECT id_a AS u, id_b AS v FROM pairs
-        | UNION SELECT id_b, id_a FROM pairs),
-        |reach(a, b) AS (
-        | SELECT u, v FROM edges
-        | UNION
-        | SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u
-        |  WHERE r.a <> e.v),
-        |comp AS (SELECT a AS doc_id, least(a, min(b)) AS cid
-        |         FROM reach GROUP BY a)
-        |SELECT d.doc_id AS doc_id, coalesce(c.cid, d.doc_id) AS cluster_id
-        |FROM documents d LEFT JOIN comp c USING (doc_id)""".stripMargin,
-
-    // the cluster CTE of q_cluster_dedup + q_data_split's md5 CASE on
-    // the component representative: every member of a near-dup
-    // cluster draws the same split
-    "q_split_leakproof" ->
-      """WITH RECURSIVE sh AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM documents)
-        | WHERE length(norm) > 0),
-        |pairs AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM sh a JOIN sh b
-        |  ON a.doc_id < b.doc_id
-        |   AND CAST(least(len(a.s), len(b.s)) AS DOUBLE)
-        |       / greatest(len(a.s), len(b.s)) >= 0.5
-        | WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) >= 0.5),
-        |edges AS (
-        | SELECT id_a AS u, id_b AS v FROM pairs
-        | UNION SELECT id_b, id_a FROM pairs),
-        |reach(a, b) AS (
-        | SELECT u, v FROM edges
-        | UNION
-        | SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u
-        |  WHERE r.a <> e.v),
-        |comp AS (SELECT a AS doc_id, least(a, min(b)) AS cid
-        |         FROM reach GROUP BY a),
-        |asg AS (
-        | SELECT d.doc_id AS doc_id,
-        |  coalesce(c.cid, d.doc_id) AS cluster_id
-        | FROM documents d LEFT JOIN comp c USING (doc_id))
-        |SELECT doc_id, cluster_id,
-        | CASE
-        |  WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 2) < 'cd'
-        |   THEN 'train'
-        |  WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 2) < 'e6'
-        |   THEN 'valid'
-        |  ELSE 'test' END AS split
-        |FROM asg""".stripMargin,
-
-    "q_dedup_dropped" ->
-      """WITH RECURSIVE sh AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM documents)
-        | WHERE length(norm) > 0),
-        |pairs AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM sh a JOIN sh b
-        |  ON a.doc_id < b.doc_id
-        |   AND CAST(least(len(a.s), len(b.s)) AS DOUBLE)
-        |       / greatest(len(a.s), len(b.s)) >= 0.5
-        | WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) >= 0.5),
-        |edges AS (
-        | SELECT id_a AS u, id_b AS v FROM pairs
-        | UNION SELECT id_b, id_a FROM pairs),
-        |reach(a, b) AS (
-        | SELECT u, v FROM edges
-        | UNION
-        | SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u
-        |  WHERE r.a <> e.v),
-        |comp AS (SELECT a AS doc_id, least(a, min(b)) AS cid
-        |         FROM reach GROUP BY a)
-        |SELECT doc_id, cid AS kept_id FROM comp
-        |WHERE cid <> doc_id""".stripMargin,
-
-    "q_cluster_dedup_best" ->
-      """WITH RECURSIVE sh AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM documents)
-        | WHERE length(norm) > 0),
-        |pairs AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM sh a JOIN sh b
-        |  ON a.doc_id < b.doc_id
-        |   AND CAST(least(len(a.s), len(b.s)) AS DOUBLE)
-        |       / greatest(len(a.s), len(b.s)) >= 0.5
-        | WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) >= 0.5),
-        |edges AS (
-        | SELECT id_a AS u, id_b AS v FROM pairs
-        | UNION SELECT id_b, id_a FROM pairs),
-        |reach(a, b) AS (
-        | SELECT u, v FROM edges
-        | UNION
-        | SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u
-        |  WHERE r.a <> e.v),
-        |comp AS (SELECT a AS doc_id, least(a, min(b)) AS cid
-        |         FROM reach GROUP BY a),
-        |assigned AS (
-        | SELECT d.doc_id, d.n_chars, coalesce(c.cid, d.doc_id) AS cid
-        | FROM documents d LEFT JOIN comp c USING (doc_id))
-        |SELECT doc_id, n_chars FROM (
-        | SELECT doc_id, n_chars, row_number() OVER (PARTITION BY cid
-        |   ORDER BY n_chars DESC, doc_id ASC) AS rn
-        | FROM assigned)
-        |WHERE rn = 1""".stripMargin,
-
-    "q_contamination_spans" ->
-      """WITH tn AS (
-        | SELECT doc_id AS test_id, norm FROM (
-        |   SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |   FROM documents WHERE doc_id % 5 = 0)
-        | WHERE length(norm) > 0),
-        |rn AS (
-        | SELECT doc_id AS train_id, norm FROM (
-        |   SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |   FROM documents WHERE doc_id % 5 <> 0)
-        | WHERE length(norm) > 0),
-        |tpos AS (
-        | SELECT test_id, pos, substring(norm, pos, 5) AS g FROM (
-        |   SELECT test_id, norm,
-        |     unnest(generate_series(1, greatest(1, length(norm) - 4))) AS pos
-        |   FROM tn)),
-        |tcnt AS (SELECT test_id, count(DISTINCT g) AS tn_cnt
-        |         FROM tpos GROUP BY test_id),
-        |rset AS (
-        | SELECT DISTINCT train_id, g FROM (
-        |   SELECT train_id, substring(norm, pos, 5) AS g FROM (
-        |     SELECT train_id, norm,
-        |       unnest(generate_series(1, greatest(1, length(norm) - 4))) AS pos
-        |     FROM rn))),
-        |m AS (
-        | SELECT t.test_id, r.train_id, t.g, t.pos
-        | FROM tpos t JOIN rset r ON t.g = r.g),
-        |p AS (
-        | SELECT test_id, train_id, count(DISTINCT g) AS n_shared,
-        |        min(pos) AS span_start, max(pos) + 4 AS span_end
-        | FROM m GROUP BY test_id, train_id)
-        |SELECT p.test_id, p.train_id, CAST(p.n_shared AS BIGINT) AS n_shared,
-        | CAST(p.n_shared AS DOUBLE) / c.tn_cnt AS containment,
-        | CAST(p.span_start AS BIGINT) AS span_start,
-        | CAST(p.span_end AS BIGINT) AS span_end
-        |FROM p JOIN tcnt c USING (test_id)
-        |WHERE CAST(p.n_shared AS DOUBLE) / c.tn_cnt >= 0.5""".stripMargin,
-
-    "q_asof_join" ->
-      """WITH l AS (
-        | SELECT event_id, user_id, ts, value FROM events
-        | WHERE event_type = 'click'),
-        |r AS (
-        | SELECT user_id, ts, max(event_id) AS p_event_id,
-        |        max_by(value, event_id) AS p_value
-        | FROM events WHERE event_type = 'purchase'
-        | GROUP BY user_id, ts)
-        |SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us, l.value,
-        |       r.p_event_id, r.p_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH flagged AS (
-        | SELECT user_id, event_id, ts, value,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |        OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 21600000000
-        |       THEN 1 ELSE 0 END AS is_new
-        | FROM events
-        | WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        | SELECT user_id, ts, value,
-        |  CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS session_idx
-        | FROM flagged)
-        |SELECT user_id, session_idx, count(*) AS n_events,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-        | min(epoch_us(ts)) AS start_us, max(epoch_us(ts)) AS end_us
-        |FROM sess GROUP BY user_id, session_idx""".stripMargin,
-
-    "q_pagerank" ->
-      """WITH e AS (
-        | SELECT -CAST(l_suppkey AS BIGINT) AS src,
-        |        CAST(l_partkey AS BIGINT) AS dst
-        | FROM lineitem),
-        |nodes AS (SELECT DISTINCT node FROM
-        | (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-        |ed AS (SELECT e.src, e.dst, d.deg FROM e
-        |       JOIN deg d ON d.src = e.src),
-        |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS "rank" FROM nodes),
-        |c1 AS (SELECT ed.dst,
-        |        sum(CAST(round(r."rank" / ed.deg, 12) AS DECIMAL(20,12)))
-        |          AS m
-        |       FROM ed JOIN r0 r ON r.node = ed.src GROUP BY ed.dst),
-        |r1 AS (SELECT n.node, round(CAST(0.15 AS DOUBLE) +
-        |         CAST(0.85 AS DOUBLE) *
-        |         coalesce(CAST(c1.m AS DOUBLE), 0.0), 7) AS "rank"
-        |       FROM nodes n LEFT JOIN c1 ON c1.dst = n.node),
-        |c2 AS (SELECT ed.dst,
-        |        sum(CAST(round(r."rank" / ed.deg, 12) AS DECIMAL(20,12)))
-        |          AS m
-        |       FROM ed JOIN r1 r ON r.node = ed.src GROUP BY ed.dst),
-        |r2 AS (SELECT n.node, round(CAST(0.15 AS DOUBLE) +
-        |         CAST(0.85 AS DOUBLE) *
-        |         coalesce(CAST(c2.m AS DOUBLE), 0.0), 7) AS "rank"
-        |       FROM nodes n LEFT JOIN c2 ON c2.dst = n.node),
-        |c3 AS (SELECT ed.dst,
-        |        sum(CAST(round(r."rank" / ed.deg, 12) AS DECIMAL(20,12)))
-        |          AS m
-        |       FROM ed JOIN r2 r ON r.node = ed.src GROUP BY ed.dst),
-        |r3 AS (SELECT n.node, round(CAST(0.15 AS DOUBLE) +
-        |         CAST(0.85 AS DOUBLE) *
-        |         coalesce(CAST(c3.m AS DOUBLE), 0.0), 7) AS "rank"
-        |       FROM nodes n LEFT JOIN c3 ON c3.dst = n.node)
-        |SELECT node, "rank" FROM r3""".stripMargin,
-
-    "q_asof_forward" ->
-      """WITH l AS (
-        | SELECT event_id, user_id, ts, value FROM events
-        | WHERE event_type = 'click'),
-        |r AS (
-        | SELECT user_id, ts, max(event_id) AS p_event_id,
-        |        max_by(value, event_id) AS p_value
-        | FROM events WHERE event_type = 'purchase'
-        | GROUP BY user_id, ts)
-        |SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us, l.value,
-        |       r.p_event_id, r.p_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts <= r.ts""".stripMargin,
-
-    "q_follow_join" ->
-      """SELECT l.user_id, l.event_id AS lead_id, r.event_id AS follow_id,
-        | l.event_type AS lead_type, r.event_type AS follow_type,
-        | epoch_us(r.ts) - epoch_us(l.ts) AS delay_us
-        |FROM events l JOIN events r
-        |  ON l.user_id = r.user_id
-        | AND r.ts >= l.ts
-        | AND epoch_us(r.ts) <= epoch_us(l.ts) + 1800000000
-        | AND l.event_id <> r.event_id
-        |WHERE l.user_id IS NOT NULL AND l.ts IS NOT NULL
-        |  AND r.ts IS NOT NULL""".stripMargin,
-
-    "q_transitions" ->
-      """WITH seq AS (
-        | SELECT user_id, event_type AS src,
-        |  lead(event_type) OVER (PARTITION BY user_id
-        |                         ORDER BY ts, event_id) AS dst
-        | FROM events
-        | WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |   AND event_type IS NOT NULL),
-        |c AS (SELECT src, dst, count(*) AS n FROM seq
-        |      WHERE dst IS NOT NULL GROUP BY src, dst),
-        |tot AS (SELECT src, sum(n) AS tn FROM c GROUP BY src)
-        |SELECT c.src, c.dst, c.n, ROUND(c.n / t.tn, 6) AS p
-        |FROM c JOIN tot t ON c.src = t.src""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT c_nationkey, c_mktsegment, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY ROLLUP(c_nationkey, c_mktsegment)""".stripMargin,
-
-    "q_resample" ->
-      """WITH ob AS (
-        | SELECT user_id, epoch_us(ts) // 21600000000 AS b,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        | FROM events
-        | WHERE ts IS NOT NULL AND user_id IS NOT NULL
-        | GROUP BY user_id, b),
-        |bounds AS (SELECT user_id, min(b) AS lo, max(b) AS hi
-        |           FROM ob GROUP BY user_id),
-        |spine AS (SELECT user_id, unnest(generate_series(lo, hi)) AS b
-        |          FROM bounds),
-        |j AS (
-        | SELECT s.user_id, s.b, coalesce(o.n_events, 0) AS n_events,
-        |  o.total
-        | FROM spine s LEFT JOIN ob o
-        |   ON o.user_id = s.user_id AND o.b = s.b)
-        |SELECT user_id, b * 21600000000 AS bucket_start_us, n_events,
-        | last_value(total IGNORE NULLS) OVER (PARTITION BY user_id
-        |   ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |   AS total_ffill
-        |FROM j""".stripMargin,
-
-    "q_anomaly" ->
-      """WITH base AS (
-        | SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(value AS DOUBLE) AS value,
-        |  CAST(value AS DECIMAL(18,6)) AS v
-        | FROM events
-        | WHERE ts IS NOT NULL AND user_id IS NOT NULL
-        |   AND value IS NOT NULL),
-        |wnd AS (
-        | SELECT event_id, user_id, ts_us, value,
-        |  count(*) OVER w AS n_win,
-        |  sum(v) OVER w AS s,
-        |  sum(v * v) OVER w AS sq
-        | FROM base
-        | WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
-        |   RANGE BETWEEN 43200000000 PRECEDING AND CURRENT ROW)),
-        |z AS (
-        | SELECT event_id, user_id, ts_us, value, n_win,
-        |  CASE WHEN sqrt(greatest(CAST(sq AS DOUBLE) / n_win -
-        |        (CAST(s AS DOUBLE) / n_win) * (CAST(s AS DOUBLE) / n_win),
-        |        0.0)) > 0
-        |   THEN round((value - CAST(s AS DOUBLE) / n_win) /
-        |     sqrt(greatest(CAST(sq AS DOUBLE) / n_win -
-        |       (CAST(s AS DOUBLE) / n_win) * (CAST(s AS DOUBLE) / n_win),
-        |       0.0)), 6)
-        |   ELSE 0.0 END AS z
-        | FROM wnd)
-        |SELECT event_id, user_id, ts_us, value, n_win, z,
-        | CASE WHEN n_win >= 5 AND abs(z) > 2.0 THEN 1 ELSE 0 END
-        |   AS is_anomaly
-        |FROM z""".stripMargin,
-
-    "q_interpolate" ->
-      """WITH ob AS (
-        | SELECT user_id, epoch_us(ts) // 21600000000 AS b,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        | FROM events
-        | WHERE ts IS NOT NULL AND user_id IS NOT NULL
-        | GROUP BY user_id, b),
-        |bounds AS (SELECT user_id, min(b) AS lo, max(b) AS hi
-        |           FROM ob GROUP BY user_id),
-        |spine AS (SELECT user_id, unnest(generate_series(lo, hi)) AS b
-        |          FROM bounds),
-        |j AS (
-        | SELECT s.user_id, s.b, coalesce(o.n_events, 0) AS n_events,
-        |  o.total
-        | FROM spine s LEFT JOIN ob o
-        |   ON o.user_id = s.user_id AND o.b = s.b),
-        |f AS (
-        | SELECT user_id, b, n_events, total,
-        |  last_value(total IGNORE NULLS) OVER (PARTITION BY user_id
-        |    ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS v0,
-        |  last_value(CASE WHEN total IS NOT NULL THEN b END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id
-        |    ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS b0,
-        |  first_value(total IGNORE NULLS) OVER (PARTITION BY user_id
-        |    ORDER BY b ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        |    AS v1,
-        |  first_value(CASE WHEN total IS NOT NULL THEN b END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id
-        |    ORDER BY b ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        |    AS b1
-        | FROM j)
-        |SELECT user_id, b * 21600000000 AS bucket_start_us, n_events,
-        | CASE WHEN total IS NOT NULL THEN total
-        |      ELSE v0 + (v1 - v0) *
-        |        (CAST(b - b0 AS DOUBLE) / CAST(b1 - b0 AS DOUBLE)) END
-        |   AS total_interp
-        |FROM f""".stripMargin,
-
-    "q_geo_join" ->
-      """WITH c AS (
-        | SELECT c_custkey,
-        |  CAST((c_custkey % 1200) AS DOUBLE) / 10.0 - 60.0 AS clat,
-        |  CAST(((c_custkey * 7) % 3600) AS DOUBLE) / 10.0 - 180.0 AS clon
-        | FROM customer),
-        |s AS (
-        | SELECT s_suppkey,
-        |  CAST(((s_suppkey * 13) % 1200) AS DOUBLE) / 10.0 - 60.0 AS slat,
-        |  CAST(((s_suppkey * 31) % 3600) AS DOUBLE) / 10.0 - 180.0 AS slon
-        | FROM supplier),
-        |d AS (
-        | SELECT c_custkey, s_suppkey,
-        |  round(2 * CAST(6371.0088 AS DOUBLE) * asin(sqrt(
-        |    sin(radians(slat - clat) / 2) * sin(radians(slat - clat) / 2) +
-        |    cos(radians(clat)) * cos(radians(slat)) *
-        |    sin(radians(slon - clon) / 2) * sin(radians(slon - clon) / 2))),
-        |    6) AS dist_km
-        | FROM c CROSS JOIN s)
-        |SELECT c_custkey, s_suppkey, dist_km FROM d
-        |WHERE dist_km <= 120.0""".stripMargin,
-
-    "q_expectations" ->
-      """SELECT 'not_null:event_id' AS rule, count(*) AS total_rows,
-        | count(*) FILTER (WHERE event_id IS NULL) AS violations,
-        | CASE WHEN count(*) FILTER (WHERE event_id IS NULL) = 0
-        |      THEN 1 ELSE 0 END AS pass
-        |FROM events
-        |UNION ALL
-        |SELECT 'non_blank:event_type', count(*),
-        | count(*) FILTER (WHERE NOT (event_type IS NOT NULL
-        |   AND trim(CAST(event_type AS VARCHAR)) <> '')),
-        | CASE WHEN count(*) FILTER (WHERE NOT (event_type IS NOT NULL
-        |   AND trim(CAST(event_type AS VARCHAR)) <> '')) = 0
-        |      THEN 1 ELSE 0 END
-        |FROM events
-        |UNION ALL
-        |SELECT 'unique:event_id', count(*),
-        | count(*) - count(DISTINCT struct_pack(k := event_id)),
-        | CASE WHEN count(*) - count(DISTINCT struct_pack(k := event_id)) = 0
-        |      THEN 1 ELSE 0 END
-        |FROM events
-        |UNION ALL
-        |SELECT 'between:value', count(*),
-        | count(*) FILTER (WHERE value IS NOT NULL
-        |   AND (value < 0.0 OR value > 500.0)),
-        | CASE WHEN count(*) FILTER (WHERE value IS NOT NULL
-        |   AND (value < 0.0 OR value > 500.0)) = 0 THEN 1 ELSE 0 END
-        |FROM events
-        |UNION ALL
-        |SELECT 'matches:event_type', count(*),
-        | count(*) FILTER (WHERE event_type IS NOT NULL
-        |   AND NOT regexp_matches(event_type, '^[a-z_]+$')),
-        | CASE WHEN count(*) FILTER (WHERE event_type IS NOT NULL
-        |   AND NOT regexp_matches(event_type, '^[a-z_]+$')) = 0
-        |      THEN 1 ELSE 0 END
-        |FROM events
-        |UNION ALL
-        |SELECT 'in_set:event_type', count(*),
-        | count(*) FILTER (WHERE event_type IS NOT NULL
-        |   AND event_type NOT IN ('click', 'view', 'purchase', 'signup')),
-        | CASE WHEN count(*) FILTER (WHERE event_type IS NOT NULL
-        |   AND event_type NOT IN ('click', 'view', 'purchase', 'signup')) = 0
-        |      THEN 1 ELSE 0 END
-        |FROM events
-        |UNION ALL
-        |SELECT 'holds:ts_set', count(*),
-        | count(*) FILTER (WHERE NOT coalesce(ts IS NOT NULL, FALSE)),
-        | CASE WHEN count(*) FILTER
-        |   (WHERE NOT coalesce(ts IS NOT NULL, FALSE)) = 0
-        |      THEN 1 ELSE 0 END
-        |FROM events""".stripMargin,
-
-    "q_cms_rollup" ->
-      """WITH js AS (SELECT unnest([0, 1, 2, 3]) AS j),
-        |cms AS (
-        | SELECT j, bucket, count(*) AS cnt FROM (
-        |  SELECT js.j,
-        |   ('0x' || substr(md5(CAST(js.j AS VARCHAR) || ':' ||
-        |      CAST(e.user_id AS VARCHAR)), 1, 8))::BIGINT % 1024 AS bucket
-        |  FROM events e CROSS JOIN js
-        |  WHERE e.user_id IS NOT NULL)
-        | GROUP BY j, bucket),
-        |probes AS (
-        | SELECT k.key, js.j,
-        |  ('0x' || substr(md5(CAST(js.j AS VARCHAR) || ':' || k.key),
-        |     1, 8))::BIGINT % 1024 AS bucket
-        | FROM (SELECT unnest(['1', '2', '3', '42', '777', '100000'])
-        |       AS key) k
-        | CROSS JOIN js)
-        |SELECT p.key, min(coalesce(c.cnt, 0)) AS est
-        |FROM probes p LEFT JOIN cms c
-        |  ON c.j = p.j AND c.bucket = p.bucket
-        |GROUP BY p.key""".stripMargin,
-
-    "q_multimodal_frames" ->
-      """WITH p AS (
-        | SELECT doc_id, 8 + doc_id % 8 AS w, 8 + doc_id % 5 AS h,
-        |  doc_id % 200 AS base
-        | FROM documents WHERE doc_id % 3 = 2),
-        |f AS (SELECT unnest([0, 2, 4]) AS fi)
-        |SELECT doc_id, CAST(fi AS INT) AS frame_idx,
-        | CAST(w AS DOUBLE) AS w, CAST(h AS DOUBLE) AS h,
-        | CAST(w*h*(base + 3*fi) + h*((w*(w-1))//2) + w*((h*(h-1))//2)
-        |   AS DOUBLE) / (w*h) AS mean_red
-        |FROM p CROSS JOIN f""".stripMargin,
-
-    "q_bitext_mine" ->
-      """WITH v AS (SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        | FROM embeddings),
-        |s AS (SELECT vec_id, e FROM v WHERE vec_id % 2 = 0),
-        |t AS (SELECT vec_id, e FROM v WHERE vec_id % 2 = 1),
-        |fs AS (
-        | SELECT s.vec_id AS src_id, t.vec_id AS tgt_id,
-        |  list_aggregate(list_transform(generate_series(1, len(s.e)),
-        |    i -> s.e[i] * t.e[i]), 'sum') /
-        |  (sqrt(list_aggregate(list_transform(generate_series(1, len(s.e)),
-        |    i -> s.e[i] * s.e[i]), 'sum')) *
-        |   sqrt(list_aggregate(list_transform(generate_series(1, len(t.e)),
-        |    i -> t.e[i] * t.e[i]), 'sum'))) AS cosine
-        | FROM s CROSS JOIN t),
-        |fk AS (SELECT * FROM (
-        |  SELECT src_id, tgt_id, cosine, row_number() OVER (
-        |   PARTITION BY src_id ORDER BY cosine DESC, tgt_id ASC) AS rank
-        |  FROM fs) WHERE rank <= 4),
-        |bk AS (SELECT * FROM (
-        |  SELECT src_id, tgt_id, cosine, row_number() OVER (
-        |   PARTITION BY tgt_id ORDER BY cosine DESC, src_id ASC) AS rank
-        |  FROM fs) WHERE rank <= 4),
-        |af AS (SELECT src_id, list_reduce(list(cosine ORDER BY rank),
-        |  (a, b) -> a + b) / 4.0 AS af FROM fk GROUP BY src_id),
-        |ab AS (SELECT tgt_id, list_reduce(list(cosine ORDER BY rank),
-        |  (a, b) -> a + b) / 4.0 AS ab FROM bk GROUP BY tgt_id),
-        |m AS (
-        | SELECT fk.src_id, fk.tgt_id, fk.cosine,
-        |  fk.cosine / ((af.af + ab.ab) / 2.0) AS margin
-        | FROM fk JOIN af ON fk.src_id = af.src_id
-        |         JOIN ab ON fk.tgt_id = ab.tgt_id)
-        |SELECT src_id, tgt_id, cosine, margin FROM (
-        | SELECT m.*, row_number() OVER (PARTITION BY src_id
-        |   ORDER BY margin DESC, tgt_id ASC) AS rn FROM m)
-        |WHERE rn = 1 AND margin >= CAST(1.0 AS DOUBLE)""".stripMargin,
-
-    "q_blocklist" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN
-        |   text || ' see https://sub' || CAST(doc_id % 7 AS VARCHAR)
-        |        || '.example-site.org/p/' || CAST(doc_id AS VARCHAR)
-        |        || ' end'
-        |  ELSE text END AS t
-        | FROM documents)
-        |SELECT regexp_extract(t, 'https?://([A-Za-z0-9.-]+)', 1)
-        |   AS domain, doc_id
-        |FROM p
-        |WHERE regexp_extract(t, 'https?://([A-Za-z0-9.-]+)', 1) NOT IN
-        | ('sub1.example-site.org', 'sub4.example-site.org')""".stripMargin,
-
-    "q_multimodal_decimate" ->
-      """WITH p AS (
-        | SELECT doc_id, 8000 + (doc_id % 4) * 4000 AS sr,
-        |  doc_id % 100 AS base
-        | FROM documents WHERE doc_id % 3 = 1)
-        |SELECT doc_id, CAST(sr // 4 AS DOUBLE) AS rate_out,
-        | 50.0 AS n_out,
-        | CAST(50 * base - 1250 +
-        |  list_sum(list_transform(generate_series(0, 49),
-        |    k -> (4 * k) % 50)) AS DOUBLE) / 50 AS mean_out
-        |FROM p""".stripMargin,
-
-    "q_window_topk" ->
-      """WITH c AS (
-        | SELECT epoch_us(date_trunc('hour', ts)) AS ws_us, event_type,
-        |  count(*) AS n
-        | FROM events GROUP BY 1, 2)
-        |SELECT ws_us, event_type, n,
-        | CAST(row_number() OVER (PARTITION BY ws_us
-        |   ORDER BY n DESC, event_type ASC) AS INT) AS rank
-        |FROM c QUALIFY rank <= 3""".stripMargin,
-
-    "q_labelprop" -> labelPropOracle,
-
-    "q_triangles" ->
-      """WITH li AS (
-        | SELECT l_orderkey, CAST(l_partkey AS BIGINT) AS p
-        | FROM lineitem WHERE l_orderkey % 7 = 0),
-        |e AS (
-        | SELECT DISTINCT a.p AS a, b.p AS b
-        | FROM li a JOIN li b
-        |   ON a.l_orderkey = b.l_orderkey AND a.p < b.p),
-        |tri AS (
-        | SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        | FROM e e1 JOIN e e2 ON e2.a = e1.b
-        | WHERE EXISTS (SELECT 1 FROM e e3
-        |               WHERE e3.a = e1.a AND e3.b = e2.b)),
-        |corners AS (
-        | SELECT x AS node FROM tri
-        | UNION ALL SELECT y FROM tri
-        | UNION ALL SELECT z FROM tri)
-        |SELECT node, count(*) AS triangles FROM corners GROUP BY node""".stripMargin,
-
-    "q_textrank" ->
-      """WITH t AS (
-        | SELECT doc_id, string_split_regex(lower(trim(text)), '\s+')
-        |   AS words
-        | FROM documents WHERE doc_id % 5 = 0),
-        |p AS (SELECT doc_id, unnest(generate_series(1, len(words))) AS i,
-        |       words FROM t),
-        |wp AS (SELECT doc_id, i, words[i] AS w FROM p
-        |       WHERE words[i] <> ''),
-        |e0 AS (
-        | SELECT a.w AS src, b.w AS dst FROM wp a JOIN wp b
-        | ON a.doc_id = b.doc_id AND b.i - a.i BETWEEN 1 AND 2
-        |    AND a.w <> b.w),
-        |e AS (SELECT src, dst FROM e0
-        |      UNION ALL SELECT dst AS src, src AS dst FROM e0),
-        |nodes AS (SELECT DISTINCT node FROM
-        | (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-        |ed AS (SELECT e.src, e.dst, d.deg FROM e
-        |       JOIN deg d ON d.src = e.src),
-        |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS "rank" FROM nodes),
-        |c1 AS (SELECT ed.dst,
-        |        sum(CAST(round(r."rank" / ed.deg, 12) AS DECIMAL(20,12)))
-        |          AS m
-        |       FROM ed JOIN r0 r ON r.node = ed.src GROUP BY ed.dst),
-        |r1 AS (SELECT n.node, round(CAST(0.15 AS DOUBLE) +
-        |         CAST(0.85 AS DOUBLE) *
-        |         coalesce(CAST(c1.m AS DOUBLE), 0.0), 7) AS "rank"
-        |       FROM nodes n LEFT JOIN c1 ON c1.dst = n.node),
-        |c2 AS (SELECT ed.dst,
-        |        sum(CAST(round(r."rank" / ed.deg, 12) AS DECIMAL(20,12)))
-        |          AS m
-        |       FROM ed JOIN r1 r ON r.node = ed.src GROUP BY ed.dst),
-        |r2 AS (SELECT n.node, round(CAST(0.15 AS DOUBLE) +
-        |         CAST(0.85 AS DOUBLE) *
-        |         coalesce(CAST(c2.m AS DOUBLE), 0.0), 7) AS "rank"
-        |       FROM nodes n LEFT JOIN c2 ON c2.dst = n.node)
-        |SELECT node AS word, "rank" FROM r2
-        |ORDER BY "rank" DESC, word ASC LIMIT 30""".stripMargin,
-
-    "q_kcore" ->
-      """WITH li AS (
-        | SELECT l_orderkey, CAST(l_partkey AS BIGINT) AS p
-        | FROM lineitem WHERE l_orderkey % 7 = 0),
-        |e0 AS (
-        | SELECT DISTINCT a.p AS a, b.p AS b
-        | FROM li a JOIN li b
-        |   ON a.l_orderkey = b.l_orderkey AND a.p < b.p),
-        |d0 AS (SELECT node, count(*) AS deg FROM
-        |  (SELECT a AS node FROM e0 UNION ALL SELECT b FROM e0)
-        |  GROUP BY node),
-        |k0 AS (SELECT node FROM d0 WHERE deg >= 3),
-        |e1 AS (SELECT a, b FROM e0
-        |  WHERE a IN (SELECT node FROM k0) AND b IN (SELECT node FROM k0)),
-        |d1 AS (SELECT node, count(*) AS deg FROM
-        |  (SELECT a AS node FROM e1 UNION ALL SELECT b FROM e1)
-        |  GROUP BY node),
-        |k1 AS (SELECT node FROM d1 WHERE deg >= 3),
-        |e2 AS (SELECT a, b FROM e1
-        |  WHERE a IN (SELECT node FROM k1) AND b IN (SELECT node FROM k1)),
-        |d2 AS (SELECT node, count(*) AS deg FROM
-        |  (SELECT a AS node FROM e2 UNION ALL SELECT b FROM e2)
-        |  GROUP BY node),
-        |k2 AS (SELECT node FROM d2 WHERE deg >= 3),
-        |e3 AS (SELECT a, b FROM e2
-        |  WHERE a IN (SELECT node FROM k2) AND b IN (SELECT node FROM k2))
-        |SELECT node, count(*) AS deg FROM
-        | (SELECT a AS node FROM e3 UNION ALL SELECT b FROM e3)
-        |GROUP BY node""".stripMargin,
-
-    "q_clustering" ->
-      """WITH li AS (
-        | SELECT l_orderkey, CAST(l_partkey AS BIGINT) AS p
-        | FROM lineitem WHERE l_orderkey % 7 = 0),
-        |e AS (
-        | SELECT DISTINCT a.p AS a, b.p AS b
-        | FROM li a JOIN li b
-        |   ON a.l_orderkey = b.l_orderkey AND a.p < b.p),
-        |deg AS (SELECT node, count(*) AS deg FROM
-        |  (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-        |  GROUP BY node),
-        |tri AS (
-        | SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        | FROM e e1 JOIN e e2 ON e2.a = e1.b
-        | WHERE EXISTS (SELECT 1 FROM e e3
-        |               WHERE e3.a = e1.a AND e3.b = e2.b)),
-        |tc AS (SELECT node, count(*) AS triangles FROM
-        |  (SELECT x AS node FROM tri
-        |   UNION ALL SELECT y FROM tri
-        |   UNION ALL SELECT z FROM tri) GROUP BY node)
-        |SELECT d.node, d.deg,
-        |       coalesce(tc.triangles, 0) AS triangles,
-        |       CASE WHEN d.deg < 2 THEN 0.0
-        |            ELSE (2.0 * coalesce(tc.triangles, 0)) /
-        |                 (d.deg * (d.deg - 1)) END AS coeff
-        |FROM deg d LEFT JOIN tc ON tc.node = d.node""".stripMargin,
-
-    "q_ppr" -> pprOracle,
-
-    "q_wsp" ->
-      """WITH RECURSIVE e AS (
-        | SELECT src, dst, min(w) AS w FROM (
-        |  SELECT -CAST(l_suppkey AS BIGINT) AS src,
-        |         CAST(l_partkey AS BIGINT) AS dst,
-        |         CAST(l_quantity AS BIGINT) % 3 + 1 AS w FROM lineitem
-        |  UNION ALL
-        |  SELECT CAST(l_partkey AS BIGINT),
-        |         -CAST(l_suppkey AS BIGINT),
-        |         CAST(l_quantity AS BIGINT) % 3 + 1 FROM lineitem)
-        | GROUP BY 1, 2),
-        |d(node, dist, hops) AS (
-        | SELECT * FROM (VALUES (CAST(-1 AS BIGINT), CAST(0 AS BIGINT), 0),
-        |                       (-2, 0, 0), (-3, 0, 0)) v(node, dist, hops)
-        | UNION
-        | SELECT e.dst, d.dist + e.w, d.hops + 1
-        | FROM d JOIN e ON e.src = d.node
-        | WHERE d.hops < 4)
-        |SELECT node, min(dist) AS dist FROM d GROUP BY node""".stripMargin,
-
-    "q_sssp" ->
-      """WITH RECURSIVE e AS (
-        | SELECT DISTINCT src, dst FROM (
-        |  SELECT -CAST(l_suppkey AS BIGINT) AS src,
-        |         CAST(l_partkey AS BIGINT) AS dst FROM lineitem
-        |  UNION ALL
-        |  SELECT CAST(l_partkey AS BIGINT),
-        |         -CAST(l_suppkey AS BIGINT) FROM lineitem)),
-        |d(node, dist) AS (
-        | SELECT * FROM (VALUES (CAST(-1 AS BIGINT), CAST(0 AS BIGINT)),
-        |                       (-2, 0), (-3, 0)) v(node, dist)
-        | UNION
-        | SELECT e.dst, d.dist + 1 FROM d JOIN e ON e.src = d.node
-        | WHERE d.dist < 4)
-        |SELECT node, min(dist) AS dist FROM d GROUP BY node""".stripMargin,
-
-    "q_mrl_truncate" ->
-      """WITH s AS (
-        | SELECT vec_id,
-        |  list_transform(embedding[1:16], x -> CAST(x AS DOUBLE)) AS vv
-        | FROM embeddings),
-        |n AS (
-        | SELECT vec_id, vv,
-        |  sqrt(list_reduce(list_transform(vv, x -> x * x),
-        |    (a, b) -> a + b)) AS nrm
-        | FROM s)
-        |SELECT vec_id, CAST(ix.ix - 1 AS INT) AS i,
-        | CASE WHEN nrm = 0.0 THEN vv[ix.ix]
-        |      ELSE vv[ix.ix] / nrm END AS v
-        |FROM n CROSS JOIN
-        | (SELECT unnest(generate_series(1, 16)) AS ix) ix""".stripMargin,
-
-    "q_kanon" ->
-      """SELECT lang, source, count(*) AS group_size
-        |FROM documents GROUP BY 1, 2
-        |HAVING count(*) < 50""".stripMargin,
-
-    "q_heavy_hitters" ->
-      """WITH t AS (
-        | SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |   AS tok
-        | FROM documents),
-        |t2 AS (SELECT tok FROM t WHERE tok <> '' AND tok IS NOT NULL),
-        |n AS (SELECT count(*) AS n FROM t2)
-        |SELECT t2.tok, count(*) AS cnt
-        |FROM t2 CROSS JOIN n
-        |GROUP BY t2.tok, n.n
-        |HAVING count(*) * 50 > n.n""".stripMargin,
-
-    "q_bloom_join" ->
-      """SELECT l.l_orderkey AS o_orderkey, l.l_linenumber,
-        | l.l_extendedprice, o.o_totalprice
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_totalprice > 350000.0""".stripMargin,
-
-    "q_kmeans" -> kmeansOracle,
-
-    "q_overlap_join" ->
-      """WITH iv AS (
-        | SELECT event_id, epoch_us(ts) AS lo_us,
-        |  epoch_us(ts) + (event_id % 50) * 60000000 AS hi_us
-        | FROM events WHERE ts IS NOT NULL)
-        |SELECT a.event_id AS a_id, b.event_id AS b_id,
-        | greatest(a.lo_us, b.lo_us) AS ov_lo_us,
-        | least(a.hi_us, b.hi_us) AS ov_hi_us
-        |FROM iv a JOIN iv b
-        |  ON a.event_id % 17 = 0 AND b.event_id % 23 = 0
-        |   AND a.lo_us <= b.hi_us AND b.lo_us <= a.hi_us""".stripMargin,
-
-    "q_enrich" ->
-      """SELECT e.user_id, e.event_id, e.event_type, c.c_mktsegment
-        |   AS segment
-        |FROM events e LEFT JOIN customer c
-        |  ON e.user_id = c.c_custkey""".stripMargin,
-
-    "q_multimodal_resize" ->
-      """WITH p AS (
-        | SELECT doc_id, 8 + doc_id % 8 AS w, 8 + doc_id % 5 AS h,
-        |  doc_id % 200 AS base
-        | FROM documents WHERE doc_id % 3 = 0)
-        |SELECT doc_id, 8.0 AS w_out, 8.0 AS h_out,
-        | CAST(64 * base
-        |  + 8 * list_sum(list_transform(generate_series(0, 7),
-        |      x -> (x * w) // 8))
-        |  + 8 * list_sum(list_transform(generate_series(0, 7),
-        |      y -> (y * h) // 8)) AS DOUBLE) / 64 AS mean_blue
-        |FROM p""".stripMargin,
-
-    "q_image_neardup" ->
-      """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        | CAST(0 AS INT) AS hamming
-        |FROM documents a JOIN documents b
-        |  ON a.doc_id % 50 = b.doc_id % 50 AND a.doc_id < b.doc_id
-        |WHERE a.doc_id % 3 = 0 AND b.doc_id % 3 = 0""".stripMargin,
-
-    "q_audio_neardup" ->
-      """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        | CAST(0 AS INT) AS hamming
-        |FROM documents a JOIN documents b
-        |  ON a.doc_id % 40 = b.doc_id % 40 AND a.doc_id < b.doc_id
-        |WHERE a.doc_id % 3 = 1 AND b.doc_id % 3 = 1""".stripMargin,
-
-    "q_zorder" -> zOrderOracle,
-
-    "q_bloom_layout" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders WHERE o_orderkey % 997 = 0""".stripMargin,
-
-    // manifest pruning is a plan optimization only: result rows are the
-    // plain range filter (1000.0/2000.0 are binary-exact doubles, so
-    // DuckDB's decimal literal parse equals the double compare)
-    "q_manifest_prune" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders
-        |WHERE o_totalprice >= 1000.0 AND o_totalprice <= 2000.0""".stripMargin,
-
-    "q_retention" ->
-      """WITH active AS (
-        | SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS b
-        | FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |first AS (SELECT user_id, min(b) AS cb FROM active GROUP BY 1),
-        |g AS (
-        | SELECT f.cb, a.b - f.cb AS bucket_offset, count(*) AS n_users
-        | FROM active a JOIN first f USING (user_id)
-        | GROUP BY 1, 2),
-        |sz AS (SELECT cb, count(*) AS cohort_size FROM first GROUP BY 1)
-        |SELECT g.cb * 604800000000 AS cohort_start_us, g.bucket_offset,
-        | g.n_users,
-        | CAST(g.n_users AS DOUBLE) / CAST(s.cohort_size AS DOUBLE)
-        |   AS retention
-        |FROM g JOIN sz s ON g.cb = s.cb""".stripMargin,
-
-    "q_rolling" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        | count(*) OVER w AS n_win,
-        | CAST(sum(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE)
-        |   AS sum_win
-        |FROM events
-        |WHERE ts IS NOT NULL AND user_id IS NOT NULL
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)"""
-        .stripMargin,
-
-    "q_funnel_rate" ->
-      """WITH f AS (
-        | SELECT DISTINCT l.event_type AS lead_type,
-        |  r.event_type AS follow_type, l.event_id AS lead_id
-        | FROM events l JOIN events r
-        |   ON l.user_id = r.user_id
-        |  AND r.ts >= l.ts
-        |  AND epoch_us(r.ts) <= epoch_us(l.ts) + 1800000000
-        |  AND l.event_id <> r.event_id
-        | WHERE l.user_id IS NOT NULL AND l.ts IS NOT NULL
-        |   AND r.ts IS NOT NULL),
-        |conv AS (
-        | SELECT lead_type, follow_type, count(*) AS n_converted
-        | FROM f GROUP BY 1, 2),
-        |tot AS (
-        | SELECT event_type AS lead_type, count(*) AS n_leads
-        | FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        | GROUP BY 1)
-        |SELECT c.lead_type, c.follow_type, c.n_converted, t.n_leads,
-        | CAST(c.n_converted AS DOUBLE) / CAST(t.n_leads AS DOUBLE)
-        |   AS conversion
-        |FROM conv c JOIN tot t ON c.lead_type = t.lead_type""".stripMargin,
-
-    "q_join_audit" ->
-      """WITH l AS (
-        | SELECT user_id AS k, count(*) AS lc FROM events
-        | WHERE user_id IS NOT NULL GROUP BY 1),
-        |r AS (
-        | SELECT o_custkey AS k, count(*) AS rc FROM orders
-        | WHERE o_custkey IS NOT NULL GROUP BY 1),
-        |j AS (SELECT l.lc, r.rc FROM l JOIN r USING (k)),
-        |ls AS (SELECT CAST(sum(lc) AS BIGINT) AS l_rows,
-        |       count(*) AS l_keys FROM l),
-        |rs AS (SELECT CAST(sum(rc) AS BIGINT) AS r_rows,
-        |       count(*) AS r_keys FROM r),
-        |js AS (SELECT count(*) AS matched_keys,
-        |  CAST(coalesce(sum(lc * rc), 0) AS DOUBLE) AS est_output_rows,
-        |  CAST(coalesce(max(lc * rc), 0) AS DOUBLE) AS max_key_fanout
-        | FROM j)
-        |SELECT * FROM ls CROSS JOIN rs CROSS JOIN js""".stripMargin,
-
-    "q_snapshot_rollback" ->
-      """SELECT doc_id, lang, source, n_chars FROM documents
-        |WHERE doc_id % 3 = 0""".stripMargin,
-
-    "q_snapshot_upsert" ->
-      """WITH cur AS (
-        | SELECT c_custkey, c_acctbal, c_mktsegment FROM customer),
-        |d AS (
-        | SELECT c_custkey, c_acctbal + 100.0 AS c_acctbal, c_mktsegment
-        | FROM customer WHERE c_custkey % 5 = 0
-        | UNION ALL
-        | SELECT c_custkey + 1000000, c_acctbal, c_mktsegment
-        | FROM customer WHERE c_custkey % 100 = 1)
-        |SELECT coalesce(d.c_custkey, cur.c_custkey) AS c_custkey,
-        | coalesce(d.c_acctbal, cur.c_acctbal) AS c_acctbal,
-        | coalesce(d.c_mktsegment, cur.c_mktsegment) AS c_mktsegment
-        |FROM cur FULL OUTER JOIN d ON cur.c_custkey = d.c_custkey"""
-        .stripMargin,
-
-    "q_snapshot_delete" ->
-      """SELECT c_custkey, c_acctbal, c_mktsegment
-        |FROM customer WHERE NOT (c_custkey % 7 = 0)""".stripMargin,
-
-    // pruned time travel = plain range filter over the versioned data
-    // (3000.0/5000.0 are binary-exact, decimal-literal-safe)
-    "q_snapshot_pruned" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders
-        |WHERE o_totalprice >= 3000.0 AND o_totalprice <= 5000.0""".stripMargin,
-
-    "q_snapshot_delete_all" ->
-      """SELECT o_custkey AS key, 'orders' AS tbl, count(*) AS n
-        |FROM orders
-        |WHERE o_orderkey % 2 = 0 AND NOT o_custkey % 7 = 0
-        |GROUP BY 1, 2
-        |UNION ALL
-        |SELECT c_custkey AS key, 'cust' AS tbl, count(*) AS n
-        |FROM customer
-        |WHERE c_custkey % 2 = 0 AND NOT c_custkey % 7 = 0
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_snapshot_multi" ->
-      """SELECT c.c_nationkey, count(*) AS n,
-        | CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |   AS revenue
-        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |WHERE o.o_orderkey % 2 = 0 AND c.c_custkey % 2 = 0
-        |GROUP BY c.c_nationkey""".stripMargin,
-
-    "q_sentence_chunks" ->
-      """WITH m AS (
-        | SELECT doc_id,
-        |  regexp_replace(trim(text), '([.!?])\s+', '\1', 'g') AS mk
-        | FROM documents WHERE doc_id % 4 = 1),
-        |l AS (SELECT doc_id, string_split(mk, '') AS sents FROM m),
-        |p AS (SELECT doc_id, unnest(generate_series(1, len(sents))) AS i,
-        |       sents FROM l),
-        |s AS (SELECT doc_id, i, sents[i] AS sent FROM p
-        |      WHERE trim(sents[i]) <> ''),
-        |c AS (SELECT doc_id, i, sent,
-        |       coalesce(sum(length(sent)) OVER (PARTITION BY doc_id
-        |         ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING
-        |         AND 1 PRECEDING), 0) AS bef
-        |      FROM s),
-        |k AS (SELECT doc_id, CAST(bef // 200 AS BIGINT) AS chunk_id,
-        |       i, sent FROM c)
-        |SELECT doc_id, chunk_id, count(*) AS n_sents,
-        | CAST(sum(length(sent)) AS BIGINT) AS n_chars,
-        | string_agg(sent, ' ' ORDER BY i) AS chunk_text
-        |FROM k GROUP BY doc_id, chunk_id""".stripMargin,
-
-    "q_script_profile" ->
-      """WITH t AS (
-        | SELECT doc_id, coalesce(text, '') AS s FROM documents
-        | WHERE doc_id % 7 = 2)
-        |SELECT doc_id,
-        | CAST(length(s) AS BIGINT) AS n_chars,
-        | CAST(length(s) - length(regexp_replace(s, '[A-Za-z]', '', 'g'))
-        |      AS BIGINT) AS latin,
-        | CAST(length(s) - length(regexp_replace(s, '[0-9]', '', 'g'))
-        |      AS BIGINT) AS digit,
-        | CAST(length(s) - length(regexp_replace(s, '\s', '', 'g'))
-        |      AS BIGINT) AS space,
-        | CAST(length(s) - length(regexp_replace(s,
-        |      '[\x{4E00}-\x{9FFF}]', '', 'g')) AS BIGINT) AS cjk,
-        | CAST(length(s) - length(regexp_replace(s,
-        |      '[\x{0400}-\x{04FF}]', '', 'g')) AS BIGINT) AS cyrillic
-        |FROM t""".stripMargin,
-
-    "q_feature_hash" ->
-      """WITH w AS (
-        | SELECT doc_id,
-        |  unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        | FROM documents WHERE doc_id % 3 = 0),
-        |f AS (
-        | SELECT doc_id,
-        |  ('0x' || substr(md5('b:' || term), 1, 8))::BIGINT % 128
-        |    AS bucket,
-        |  CASE WHEN ('0x' || substr(md5('s:' || term), 1, 1))::BIGINT
-        |         % 2 = 0
-        |       THEN 1 ELSE -1 END AS s
-        | FROM w WHERE term <> '')
-        |SELECT doc_id, bucket, CAST(sum(s) AS BIGINT) AS val
-        |FROM f GROUP BY doc_id, bucket""".stripMargin,
-
-    "q_quantile_rollup" -> quantileRollupOracle,
-
-    "q_stream_quantiles" -> streamQuantilesOracle,
-
-    "q_dataset_card" -> datasetCardOracle,
-
-    "q_fk_orphans" ->
-      """WITH fc AS (
-        | SELECT user_id AS k, count(*) AS n FROM events
-        | WHERE user_id IS NOT NULL GROUP BY 1),
-        |o AS (
-        | SELECT fc.k, fc.n FROM fc
-        | LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) d
-        |   ON fc.k = d.c_custkey
-        | WHERE d.c_custkey IS NULL)
-        |SELECT
-        | (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) FROM fc) AS fact_rows,
-        | (SELECT count(*) FROM fc) AS fact_keys,
-        | (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) FROM o) AS orphan_rows,
-        | (SELECT count(*) FROM o) AS orphan_keys,
-        | (SELECT CAST(min(k) AS VARCHAR) FROM o) AS sample_orphan_key,
-        | (SELECT count(*) FROM events WHERE user_id IS NULL) AS null_fk_rows""".stripMargin,
-
-    "q_skew_audit" ->
-      """WITH c AS (
-        | SELECT CAST(user_id AS VARCHAR) AS k, count(*) AS cnt
-        | FROM events WHERE user_id IS NOT NULL GROUP BY 1),
-        |top AS (SELECT k, cnt FROM c ORDER BY cnt DESC, k DESC LIMIT 1),
-        |a AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
-        |  count(*) AS n_keys, max(cnt) AS max_key_rows FROM c)
-        |SELECT a.n_rows, a.n_keys, a.max_key_rows, top.k AS top_key,
-        | CAST(a.n_rows AS DOUBLE) / CAST(a.n_keys AS DOUBLE)
-        |   AS mean_rows_per_key,
-        | CAST(a.max_key_rows AS DOUBLE) * CAST(a.n_keys AS DOUBLE)
-        |   / CAST(a.n_rows AS DOUBLE) AS skew_ratio
-        |FROM a CROSS JOIN top""".stripMargin,
-
-    "q_group_topk" ->
-      """SELECT doc_id, source, lang, n_chars,
-        | CAST(row_number() OVER (PARTITION BY source, lang
-        |   ORDER BY n_chars DESC, doc_id) AS INT) AS rank
-        |FROM documents
-        |QUALIFY rank <= 5""".stripMargin,
-
-    "q_sample_k" ->
-      """SELECT doc_id, source,
-        | CAST(row_number() OVER (PARTITION BY source
-        |   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS INT) AS rank
-        |FROM documents
-        |QUALIFY rank <= 30""".stripMargin,
-
-    // Efraimidis–Spirakis with a content-hash uniform: u from the
-    // first 8 md5 hex digits (DuckDB parses '0x…' casts), score
-    // ln(u)/w rounded to 6 with a doc_id tiebreak — engine-exact
-    "q_weighted_sample" ->
-      """SELECT doc_id, n_chars,
-        | round(ln((CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-        |     1, 8) AS BIGINT) + 0.5) / 4294967296.0) / n_chars,
-        |   6) AS score
-        |FROM documents
-        |ORDER BY score DESC, doc_id ASC
-        |LIMIT 100""".stripMargin,
-
-    // mirrors mixtureRates + mixtureSample: binary-exact weight
-    // literals, rate = least(1, budget*w / tokens) as IEEE doubles,
-    // md5 bound = round(rate * 2^32) rendered %08x (rate 1 -> the
-    // always-true 'zzzzzzzz' bucket, same as sampleByHash)
-    "q_token_mixture" ->
-      """WITH tok AS (
-        | SELECT doc_id, source,
-        |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |       ELSE len(string_split_regex(lower(trim(text)), '\s+')) END
-        |    AS n_tok
-        | FROM documents),
-        |tot AS (SELECT source, CAST(sum(n_tok) AS DOUBLE) AS t
-        |        FROM tok GROUP BY source),
-        |rates AS (SELECT source,
-        |  least(CAST(1 AS DOUBLE), CAST(4000 AS DOUBLE) *
-        |   (CASE source WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.25
-        |     WHEN 'src2' THEN 0.125 WHEN 'src3' THEN 0.125 END) / t)
-        |   AS rate
-        | FROM tot
-        | WHERE source IN ('src0', 'src1', 'src2', 'src3'))
-        |SELECT k.doc_id, k.source
-        |FROM tok k JOIN rates r ON k.source = r.source
-        |WHERE CASE
-        | WHEN CAST(round(r.rate * 4294967296.0) AS BIGINT) >= 4294967296
-        |  THEN TRUE
-        | ELSE substring(md5(CAST(k.doc_id AS VARCHAR)), 1, 8) <
-        |  printf('%08x', CAST(round(r.rate * 4294967296.0) AS BIGINT))
-        |END""".stripMargin,
-
-    "q_winsorize" ->
-      """WITH p AS (
-        | SELECT event_type, quantile_cont(value, 0.05) AS p05,
-        |  quantile_cont(value, 0.95) AS p95
-        | FROM events WHERE value IS NOT NULL GROUP BY event_type)
-        |SELECT e.event_id, e.event_type, e.value,
-        | least(greatest(e.value, p.p05), p.p95) AS value_w
-        |FROM events e JOIN p ON e.event_type = p.event_type
-        |WHERE e.value IS NOT NULL""".stripMargin,
-
-    "q_salted_join" ->
-      """SELECT e.event_id, n.n_name, e.value
-        |FROM events e JOIN nation n
-        |  ON CAST(e.user_id % 25 AS INTEGER) = n.n_nationkey""".stripMargin,
-
-    "q_scd2" ->
-      """WITH target AS (
-        | SELECT c_custkey, CAST(c_acctbal AS DOUBLE) AS acctbal,
-        |  c_mktsegment AS mktsegment, CAST(0 AS BIGINT) AS valid_from,
-        |  CAST(NULL AS BIGINT) AS valid_to
-        | FROM customer),
-        |src AS (
-        | SELECT c_custkey,
-        |  CASE WHEN c_custkey % 3 = 0 THEN CAST(c_acctbal AS DOUBLE) + 100.0
-        |       ELSE CAST(c_acctbal AS DOUBLE) END AS acctbal,
-        |  c_mktsegment AS mktsegment
-        | FROM customer WHERE c_custkey % 2 = 0),
-        |j AS (
-        | SELECT t.c_custkey, t.acctbal, t.mktsegment, t.valid_from,
-        |  t.valid_to, s.c_custkey AS spk, s.acctbal AS s_acctbal,
-        |  s.mktsegment AS s_mktsegment
-        | FROM target t FULL OUTER JOIN src s
-        |   ON t.c_custkey = s.c_custkey),
-        |old_rows AS (
-        | SELECT c_custkey, acctbal, mktsegment, valid_from,
-        |  CASE WHEN spk IS NOT NULL AND NOT (
-        |        acctbal IS NOT DISTINCT FROM s_acctbal
-        |        AND mktsegment IS NOT DISTINCT FROM s_mktsegment)
-        |       THEN 100 ELSE valid_to END AS valid_to
-        | FROM j WHERE c_custkey IS NOT NULL),
-        |new_rows AS (
-        | SELECT spk AS c_custkey, s_acctbal AS acctbal,
-        |  s_mktsegment AS mktsegment, CAST(100 AS BIGINT) AS valid_from,
-        |  CAST(NULL AS BIGINT) AS valid_to
-        | FROM j WHERE spk IS NOT NULL AND (c_custkey IS NULL OR NOT (
-        |   acctbal IS NOT DISTINCT FROM s_acctbal
-        |   AND mktsegment IS NOT DISTINCT FROM s_mktsegment)))
-        |SELECT * FROM old_rows UNION ALL SELECT * FROM new_rows""".stripMargin,
-
-    "q_range_join" ->
-      """SELECT e.event_id, n.n_nationkey, e.value
-        |FROM events e JOIN nation n
-        |  ON e.value >= CAST(n.n_nationkey * 4 AS DOUBLE)
-        | AND e.value <= n.n_nationkey * 4 + 3.5""".stripMargin,
-
-    "q_dsir" ->
-      """WITH g0 AS (
-        | SELECT doc_id, (doc_id % 10 = 0) AS t,
-        |  list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> x <> '') AS tk
-        | FROM documents),
-        |p AS (SELECT doc_id, t, tk,
-        |       unnest(generate_series(1, len(tk) - 1)) AS i FROM g0),
-        |g AS (SELECT doc_id, t, tk[i] || ' ' || tk[i+1] AS gram FROM p),
-        |sc AS (SELECT gram,
-        |        sum(CASE WHEN t THEN 1 ELSE 0 END) AS ct,
-        |        sum(CASE WHEN t THEN 0 ELSE 1 END) AS cr
-        |       FROM g GROUP BY gram),
-        |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-        |         CAST(sum(cr) AS BIGINT) AS nr, count(*) AS v FROM sc),
-        |lr AS (SELECT gram,
-        |        round(ln((ct + 0.5) / (CAST(nt AS DOUBLE) + 0.5 * v))
-        |            - ln((cr + 0.5) / (CAST(nr AS DOUBLE) + 0.5 * v)), 7)
-        |          AS lr
-        |       FROM sc, tot),
-        |dg AS (SELECT doc_id, gram, count(*) AS c FROM g
-        |       GROUP BY doc_id, gram),
-        |w AS (SELECT dg.doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
-        |        CAST(sum(CAST(c * lr AS DECIMAL(18,6))) AS DOUBLE)
-        |          AS weight
-        |      FROM dg JOIN lr USING (gram) GROUP BY dg.doc_id)
-        |SELECT d.doc_id, coalesce(w.n_grams, 0) AS n_grams,
-        | coalesce(w.weight, 0.0) AS weight
-        |FROM documents d LEFT JOIN w ON w.doc_id = d.doc_id""".stripMargin,
-
-    "q_dedup_events" ->
-      """WITH r AS (
-        | SELECT event_id, ts, user_id, event_type, value, props,
-        |  row_number() OVER (PARTITION BY user_id, event_type, value
-        |    ORDER BY ts, event_id) AS rn
-        | FROM events)
-        |SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type,
-        | value, props
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    "q_vocab" ->
-      """WITH w AS (
-        | SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        | FROM documents),
-        |c AS (SELECT term, count(*) AS n FROM w
-        |      WHERE term <> '' GROUP BY term),
-        |r AS (SELECT term, n,
-        |       row_number() OVER (ORDER BY n DESC, term ASC) AS rk FROM c)
-        |SELECT term, CAST(rk - 1 AS INTEGER) AS token_id,
-        | n AS n_occurrences
-        |FROM r WHERE rk <= 256""".stripMargin,
-
-    "q_tokenize" ->
-      """WITH w AS (
-        | SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        | FROM documents),
-        |c AS (SELECT term, count(*) AS n FROM w
-        |      WHERE term <> '' GROUP BY term),
-        |r AS (SELECT term,
-        |       row_number() OVER (ORDER BY n DESC, term ASC) AS rk FROM c),
-        |v AS (SELECT term, rk FROM r WHERE rk <= 64),
-        |t AS (SELECT doc_id,
-        |       string_split_regex(lower(trim(text)), '\s+') AS words
-        |      FROM documents WHERE doc_id % 25 = 0),
-        |p AS (SELECT doc_id,
-        |       unnest(generate_series(1, len(words))) AS i, words FROM t),
-        |wp AS (SELECT doc_id, i - 1 AS pos, words[i] AS term
-        |       FROM p WHERE words[i] <> '')
-        |SELECT wp.doc_id, CAST(wp.pos AS INTEGER) AS pos,
-        | COALESCE(CAST(v.rk - 1 AS INTEGER), -1) AS token_id
-        |FROM wp LEFT JOIN v ON wp.term = v.term""".stripMargin,
-
-    "q_tfidf" ->
-      """WITH w AS (
-        | SELECT doc_id,
-        |  unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        | FROM documents WHERE doc_id % 10 = 0),
-        |tfx AS (
-        | SELECT doc_id, term, count(*) AS tf FROM w
-        | WHERE term <> '' GROUP BY doc_id, term),
-        |dfx AS (SELECT term, count(*) AS df FROM tfx GROUP BY term),
-        |n AS (SELECT count(*) AS n_docs FROM documents
-        |      WHERE doc_id % 10 = 0),
-        |scored AS (
-        | SELECT t.doc_id, t.term, t.tf, d.df,
-        |  CAST(t.tf AS DOUBLE) * n.n_docs / d.df AS score
-        | FROM tfx t JOIN dfx d USING (term) CROSS JOIN n),
-        |r AS (
-        | SELECT *, row_number() OVER (
-        |   PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rk
-        | FROM scored)
-        |SELECT doc_id, term, tf, df, score FROM r WHERE rk <= 5""".stripMargin,
-
-    "q_bpe_pairs" ->
-      """WITH w AS (
-        | SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-        | FROM documents),
-        |p AS (
-        | SELECT substring(w, i, 2) AS pair
-        | FROM (SELECT w, unnest(generate_series(1, length(w) - 1)) AS i
-        |       FROM w WHERE length(w) >= 2)),
-        |c AS (SELECT pair, count(*) AS n FROM p GROUP BY pair),
-        |r AS (SELECT pair, n,
-        |       row_number() OVER (ORDER BY n DESC, pair ASC) AS rk FROM c)
-        |SELECT pair, n FROM r WHERE rk <= 50""".stripMargin,
-
-    "q_shuffle" ->
-      """SELECT doc_id, lang,
-        | row_number() OVER (ORDER BY
-        |   md5(CAST(doc_id AS VARCHAR) || ':epoch0')
-        |     || lpad(CAST(doc_id AS VARCHAR), 20, '0')) - 1 AS pos
-        |FROM documents""".stripMargin,
-
-    "q_shards" ->
-      """WITH s AS (
-        | SELECT doc_id, lang,
-        |  row_number() OVER (ORDER BY
-        |    md5(CAST(doc_id AS VARCHAR) || ':epoch0')
-        |      || lpad(CAST(doc_id AS VARCHAR), 20, '0')) - 1 AS pos
-        | FROM documents)
-        |SELECT doc_id, lang, pos, pos // 64 AS shard FROM s""".stripMargin,
-
-    // closed-form curriculum positions: same per-domain rank + same
-    // lexicographic domain index, recomputed independently
-    "q_curriculum" ->
-      """WITH d AS (
-        | SELECT doc_id, lang, n_chars FROM documents
-        | WHERE lang IS NOT NULL),
-        |ix AS (
-        | SELECT lang,
-        |  CAST(row_number() OVER (ORDER BY lang) - 1 AS INTEGER)
-        |    AS domain_idx
-        | FROM (SELECT DISTINCT lang FROM d)),
-        |n AS (SELECT count(*) AS n FROM ix)
-        |SELECT d.doc_id, d.lang, ix.domain_idx,
-        | CAST(row_number() OVER (PARTITION BY d.lang
-        |   ORDER BY d.n_chars, d.doc_id) AS INTEGER) AS domain_rank,
-        | (row_number() OVER (PARTITION BY d.lang
-        |   ORDER BY d.n_chars, d.doc_id) - 1) * n.n + ix.domain_idx
-        |   AS global_pos
-        |FROM d JOIN ix USING (lang) CROSS JOIN n""".stripMargin,
-
-    // the UniMax waterfilling loop replayed as a recursive CTE:
-    // smallest language first, integer floor division, remaining
-    // budget threaded through the recursion
-    "q_unimax" ->
-      """WITH RECURSIVE c AS (
-        | SELECT lang, CAST(sum(length(text)) AS BIGINT) AS tokens
-        | FROM documents WHERE lang IS NOT NULL GROUP BY 1),
-        |o AS (
-        | SELECT lang, tokens,
-        |  row_number() OVER (ORDER BY tokens, lang) AS i,
-        |  count(*) OVER () AS n
-        | FROM c),
-        |steps AS (
-        | SELECT 0::BIGINT AS i, CAST(400000 AS BIGINT) AS rem,
-        |  CAST(NULL AS BIGINT) AS quota, CAST(NULL AS VARCHAR) AS lang,
-        |  CAST(NULL AS BIGINT) AS tokens
-        | UNION ALL
-        | SELECT o.i, s.rem - least(3 * o.tokens, s.rem // (o.n - o.i + 1)),
-        |  least(3 * o.tokens, s.rem // (o.n - o.i + 1)), o.lang, o.tokens
-        | FROM steps s JOIN o ON o.i = s.i + 1)
-        |SELECT lang, tokens, quota AS alloc_tokens,
-        | CASE WHEN tokens = 0 THEN 0.0
-        |      ELSE CAST(quota AS DOUBLE) / CAST(tokens AS DOUBLE) END
-        |   AS epochs
-        |FROM steps WHERE i >= 1""".stripMargin,
-
-    "q_quantiles" ->
-      """SELECT lang, count(*) AS n_docs,
-        | min(n_chars) AS min_chars, max(n_chars) AS max_chars,
-        | quantile_cont(n_chars, 0.5) AS p50,
-        | quantile_cont(n_chars, 0.9) AS p90
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    "q_percent_rank" ->
-      """SELECT event_id, event_type, value,
-        | percent_rank() OVER (PARTITION BY event_type
-        |   ORDER BY value ASC) AS pr
-        |FROM events WHERE value IS NOT NULL""".stripMargin,
-
-    "q_robust_scale" ->
-      """WITH q AS (
-        | SELECT event_type,
-        |  quantile_cont(value, 0.25) AS q1,
-        |  quantile_cont(value, 0.5) AS med,
-        |  quantile_cont(value, 0.75) AS q3
-        | FROM events WHERE value IS NOT NULL GROUP BY 1)
-        |SELECT e.event_id, e.event_type, e.value,
-        | CASE WHEN NOT (q.q3 - q.q1 > 0.0) THEN 0.0
-        |      ELSE (e.value - q.med) / (q.q3 - q.q1) END AS scaled
-        |FROM events e JOIN q ON e.event_type = q.event_type
-        |WHERE e.value IS NOT NULL""".stripMargin,
-
-    "q_zscore" ->
-      """WITH a AS (
-        | SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS s1,
-        |  CAST(sum(CAST(value * value AS DECIMAL(28,6))) AS DOUBLE)
-        |    AS s2
-        | FROM events WHERE value IS NOT NULL GROUP BY 1)
-        |SELECT e.event_id, e.event_type, e.value,
-        | CASE WHEN a.n < 2 OR NOT (
-        |   (CAST(a.n AS DOUBLE) * a.s2 - a.s1 * a.s1)
-        |     / (CAST(a.n AS DOUBLE) * (CAST(a.n AS DOUBLE) - 1.0)) > 0.0)
-        |  THEN 0.0
-        |  ELSE (e.value - a.s1 / CAST(a.n AS DOUBLE)) /
-        |   sqrt((CAST(a.n AS DOUBLE) * a.s2 - a.s1 * a.s1)
-        |     / (CAST(a.n AS DOUBLE) * (CAST(a.n AS DOUBLE) - 1.0)))
-        | END AS z
-        |FROM events e JOIN a ON e.event_type = a.event_type
-        |WHERE e.value IS NOT NULL""".stripMargin,
-
-    "q_ntile" ->
-      """SELECT event_id, event_type, value,
-        | CAST(ntile(10) OVER (PARTITION BY event_type
-        |   ORDER BY value ASC, event_id ASC) AS INT) AS decile
-        |FROM events WHERE value IS NOT NULL""".stripMargin,
-
-    "q_mixture" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
-        | CASE lang
-        |  WHEN 'en' THEN '80000000'
-        |  WHEN 'zh' THEN 'zzzzzzzz'
-        |  WHEN 'de' THEN '40000000'
-        |  WHEN 'fr' THEN '1999999a'
-        |  WHEN 'es' THEN '00000000'
-        |  ELSE '00000000' END""".stripMargin,
-
-    "q_seq_pack" ->
-      """WITH n AS (
-        | SELECT doc_id,
-        |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |   ELSE len(string_split_regex(lower(trim(text)), '\s+')) END AS nt
-        | FROM documents),
-        |p AS (
-        | SELECT doc_id, CAST(nt AS BIGINT) AS nt,
-        |  CAST(coalesce(sum(nt) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |   AS BIGINT) AS o
-        | FROM n WHERE nt > 0),
-        |s AS (
-        | SELECT doc_id, nt, o,
-        |  unnest(generate_series(o // 512, (o + nt - 1) // 512)) AS seq_id
-        | FROM p)
-        |SELECT doc_id, CAST(seq_id AS BIGINT) AS seq_id,
-        | CAST(greatest(0, seq_id * 512 - o) AS BIGINT) AS doc_start,
-        | CAST(least((seq_id + 1) * 512 - o, nt)
-        |   - greatest(0, seq_id * 512 - o) AS BIGINT) AS n_toks
-        |FROM s""".stripMargin,
-
-    "q_pack_stats" ->
-      """WITH n AS (
-        | SELECT doc_id,
-        |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |   ELSE len(string_split_regex(lower(trim(text)), '\s+')) END AS nt
-        | FROM documents),
-        |p AS (
-        | SELECT doc_id, CAST(nt AS BIGINT) AS nt,
-        |  CAST(coalesce(sum(nt) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |   AS BIGINT) AS o
-        | FROM n WHERE nt > 0),
-        |s AS (
-        | SELECT doc_id, nt, o,
-        |  unnest(generate_series(o // 512, (o + nt - 1) // 512)) AS seq_id
-        | FROM p),
-        |x AS (
-        | SELECT CAST(seq_id AS BIGINT) AS seq_id,
-        |  CAST(least((seq_id + 1) * 512 - o, nt)
-        |    - greatest(0, seq_id * 512 - o) AS BIGINT) AS n_toks
-        | FROM s)
-        |SELECT seq_id, count(*) AS n_docs,
-        | CAST(sum(n_toks) AS BIGINT) AS n_toks
-        |FROM x GROUP BY seq_id""".stripMargin,
-
-    "q_embed_quantize" ->
-      """WITH v AS (
-        | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        | FROM embeddings WHERE vec_id % 10 = 0 AND embedding IS NOT NULL),
-        |m AS (
-        | SELECT vec_id, e,
-        |  list_max(list_transform(e, x -> abs(x))) AS maxabs
-        | FROM v)
-        |SELECT vec_id,
-        | CAST(unnest(generate_series(0, len(e) - 1)) AS INTEGER) AS dim,
-        | unnest(list_transform(generate_series(1, len(e)), i ->
-        |   CASE WHEN maxabs = 0 THEN 0
-        |        ELSE CAST(least(greatest(round(e[i] / (maxabs/127)), -127), 127)
-        |             AS INTEGER) END)) AS q,
-        | maxabs / 127 AS scale
-        |FROM m""".stripMargin,
-
-    "q_embed_topk" -> embedTopKOracle,
-
-    // SAME exhaustive-baseline SQL: the sharded-HNSW gate's candidate
-    // union covers the true top-3 at the gate's parameters (recall
-    // pinned 1.0 in HnswSpec) and the re-rank is bruteForceTopK's
-    // exact kernel, so the approximate path must match the brute-force
-    // oracle row for row
-    "q_hnsw_topk" -> embedTopKOracle,
-
-    // the persisted face probes bit-identically to the in-memory build
-    // (HnswIndexSpec parity pin) — same brute-force oracle
-    "q_hnsw_index" -> embedTopKOracle,
-    // the serving handle shares the probe kernel with hnswTopKIndexed
-    // (spec-pinned bit-parity), so it verifies against the same
-    // brute-force SQL through the same recall pin
-    "q_hnsw_handle" -> embedTopKOracle,
-
-    // outcome pins for the PQ/OPQ family (r11 — see SimsearchPins):
-    // quantized-long centroid training made every stage a pure
-    // function of content, so the deterministic outputs pin as
-    // constants, tripwire-guarded in PqPinSpec
-    "q_simsearch_pq" -> simsearchPinOracle("q_simsearch_pq"),
-    "q_simsearch_ivfpq" -> simsearchPinOracle("q_simsearch_ivfpq"),
-    "q_simsearch_indexed" -> simsearchPinOracle("q_simsearch_indexed"),
-    "q_simsearch_append" -> simsearchPinOracle("q_simsearch_append"),
-    "q_simsearch_opq" -> simsearchPinOracle("q_simsearch_opq"),
-
-    // weak labels recomputed independently (the qualityScore replay),
-    // predictions from the pinned negative set (quantized-gradient
-    // training is a pure function of content — see
-    // QualityClassifierPred0 / PqPinSpec)
-    "q_quality_classifier" -> qualityClassifierOracle,
-
-    // whitened projections pinned as exact round-trip decimal strings
-    // (Pca.train was bit-deterministic and layout-invariant since r8;
-    // see PcaPins / PqPinSpec's tripwire)
-    "q_pca" -> pcaPinOracle,
-
-    // the trained vocab pinned (driver-deterministic by construction;
-    // the libm-ulp blocker only applied to a cross-engine log
-    // RECOMPUTE — see UnigramTrainPins)
-    "q_unigram_train" -> unigramTrainOracle,
-
-    // HLL rollup pinned — pure integer outputs of order-invariant
-    // register maxes (see SketchRollupPins)
-    "q_sketch_rollup" -> sketchRollupOracle,
-
-    // FULL replay of the KMV/theta family: fmix64 over user_id (the
-    // q_simhash HUGEINT wrapping-multiply machinery), per-type k-min
-    // distinct hash sets, the union rollup recomputed directly from
-    // the value set (KMV union ≡ sketch of the union), and the
-    // estimator/intersection IEEE trees evaluated verbatim
-    // geometric-mechanism DP release replayed end to end: FNV/fmix64
-    // (hash64) over the key, ⊕ seed, fmix64 again, split into the two
-    // 31-bit fields, each geometric draw a COUNT of power-of-two
-    // threshold comparisons — integers only, bit-for-bit
-    "q_dp_counts" ->
-      """WITH c AS (
-        | SELECT event_type, count(*) AS n_true FROM events GROUP BY 1),
-        |f0 AS (SELECT event_type, n_true, CAST(list_reduce(
-        |   list_prepend(14695981039346656037::HUGEINT,
-        |     list_transform(generate_series(1, length(event_type)),
-        |       i -> unicode(substr(event_type, i, 1))::HUGEINT)),
-        |   (h, ch) -> (xor(h::UBIGINT, ch::UBIGINT)::HUGEINT
-        |               * 1099511628211) % 18446744073709551616)
-        |  AS UBIGINT) AS h FROM c),
-        |a1 AS (SELECT event_type, n_true, xor(h, h >> 33) AS a FROM f0),
-        |a2 AS (SELECT event_type, n_true, CAST((((a % 4294967296)::HUGEINT
-        |  * 18397679294719823053) + (((a // 4294967296)::HUGEINT
-        |  * (18397679294719823053 % 4294967296)) % 4294967296)
-        |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS b FROM a1),
-        |a3 AS (SELECT event_type, n_true, xor(b, b >> 33) AS c FROM a2),
-        |a4 AS (SELECT event_type, n_true, CAST((((c % 4294967296)::HUGEINT
-        |  * 14181476777654086739) + (((c // 4294967296)::HUGEINT
-        |  * (14181476777654086739 % 4294967296)) % 4294967296)
-        |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS d FROM a3),
-        |hs AS (SELECT event_type, n_true,
-        |        xor(xor(d, d >> 33), 42::UBIGINT) AS e FROM a4),
-        |b1 AS (SELECT event_type, n_true, xor(e, e >> 33) AS a FROM hs),
-        |b2 AS (SELECT event_type, n_true, CAST((((a % 4294967296)::HUGEINT
-        |  * 18397679294719823053) + (((a // 4294967296)::HUGEINT
-        |  * (18397679294719823053 % 4294967296)) % 4294967296)
-        |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS b FROM b1),
-        |b3 AS (SELECT event_type, n_true, xor(b, b >> 33) AS c FROM b2),
-        |b4 AS (SELECT event_type, n_true, CAST((((c % 4294967296)::HUGEINT
-        |  * 14181476777654086739) + (((c // 4294967296)::HUGEINT
-        |  * (14181476777654086739 % 4294967296)) % 4294967296)
-        |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS d FROM b3),
-        |hh AS (SELECT event_type, n_true, xor(d, d >> 33) AS h FROM b4),
-        |fld AS (SELECT event_type, n_true,
-        |        (h >> 33) & 2147483647 AS f1,
-        |        (h >> 2) & 2147483647 AS f2 FROM hh),
-        |dr AS (SELECT event_type, n_true,
-        |  len(list_filter(generate_series(1, 31),
-        |    j -> f1 < (1::UBIGINT << (31 - j)))) AS g1,
-        |  len(list_filter(generate_series(1, 31),
-        |    j -> f2 < (1::UBIGINT << (31 - j)))) AS g2
-        | FROM fld)
-        |SELECT event_type, n_true,
-        | CAST(g1 - g2 AS INTEGER) AS noise,
-        | n_true + (g1 - g2) AS noisy_n
-        |FROM dr""".stripMargin,
-
-    "q_theta_sketch" ->
-      """WITH v AS (
-        | SELECT DISTINCT event_type, CAST(user_id AS UBIGINT) AS x
-        | FROM events WHERE user_id IS NOT NULL),
-        |s1 AS (SELECT event_type, xor(x, x >> 33) AS a FROM v),
-        |s2 AS (SELECT event_type, CAST((((a % 4294967296)::HUGEINT
-        |  * 18397679294719823053) + (((a // 4294967296)::HUGEINT
-        |  * (18397679294719823053 % 4294967296)) % 4294967296)
-        |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS b
-        | FROM s1),
-        |s3 AS (SELECT event_type, xor(b, b >> 33) AS c FROM s2),
-        |s4 AS (SELECT event_type, CAST((((c % 4294967296)::HUGEINT
-        |  * 14181476777654086739) + (((c // 4294967296)::HUGEINT
-        |  * (14181476777654086739 % 4294967296)) % 4294967296)
-        |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS d
-        | FROM s3),
-        |hd AS (SELECT DISTINCT event_type,
-        |         CAST(xor(d, d >> 33) >> 1 AS BIGINT) AS h
-        |       FROM s4),
-        |rk AS (SELECT event_type, h,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY h)
-        |          AS rn
-        |       FROM hd),
-        |ks AS (SELECT event_type, list(h ORDER BY h) AS ks
-        |       FROM rk WHERE rn <= 64 GROUP BY event_type),
-        |ua AS (SELECT h FROM (SELECT DISTINCT h FROM hd)
-        |       ORDER BY h LIMIT 64),
-        |uks AS (SELECT list(h ORDER BY h) AS ks FROM ua),
-        |d AS (SELECT 'd' AS face, event_type AS key,
-        |       CASE WHEN len(ks) < 64 THEN CAST(len(ks) AS DOUBLE)
-        |            ELSE CAST(63 AS DOUBLE) / (CAST(ks[64] AS DOUBLE)
-        |              / CAST(9223372036854775808 AS DOUBLE)) END AS est
-        |      FROM ks),
-        |u AS (SELECT 'u' AS face, '__ALL__' AS key,
-        |       CASE WHEN len(ks) < 64 THEN CAST(len(ks) AS DOUBLE)
-        |            ELSE CAST(63 AS DOUBLE) / (CAST(ks[64] AS DOUBLE)
-        |              / CAST(9223372036854775808 AS DOUBLE)) END AS est
-        |      FROM uks),
-        |i0 AS (SELECT a.event_type AS ta, b.event_type AS tb,
-        |        a.ks AS ka, b.ks AS kb,
-        |        least(CASE WHEN len(a.ks) < 64 THEN 9223372036854775807
-        |                   ELSE a.ks[64] END,
-        |              CASE WHEN len(b.ks) < 64 THEN 9223372036854775807
-        |                   ELSE b.ks[64] END) AS theta
-        |       FROM ks a JOIN ks b ON a.event_type < b.event_type),
-        |i AS (SELECT 'i' AS face, ta || '|' || tb AS key,
-        |       CAST(len(list_filter(list_intersect(ka, kb),
-        |              x -> x < theta)) AS DOUBLE)
-        |        / (CAST(theta AS DOUBLE)
-        |           / CAST(9223372036854775808 AS DOUBLE)) AS est
-        |      FROM i0)
-        |SELECT * FROM d UNION ALL SELECT * FROM u
-        |UNION ALL SELECT * FROM i""".stripMargin,
-
-    // q_embed_topk's kernel scoring non-seeds against the mod-10
-    // seeds, then a two-stage vote: count per label, argmax by
-    // (votes desc, label asc)
-    "q_knn_classify" ->
-      """WITH v AS (
-        | SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e, label
-        | FROM embeddings),
-        |q AS (SELECT vec_id, e FROM v WHERE vec_id % 10 <> 0),
-        |sd AS (SELECT vec_id AS sid, e AS se, label
-        |       FROM v WHERE vec_id % 10 = 0),
-        |scored AS (
-        | SELECT q.vec_id, sd.sid, sd.label,
-        |  list_aggregate(list_transform(generate_series(1, len(q.e)),
-        |    i -> q.e[i] * sd.se[i]), 'sum') /
-        |  (sqrt(list_aggregate(list_transform(generate_series(1, len(q.e)),
-        |    i -> q.e[i] * q.e[i]), 'sum')) *
-        |   sqrt(list_aggregate(list_transform(generate_series(1, len(sd.se)),
-        |    i -> sd.se[i] * sd.se[i]), 'sum'))) AS cosine
-        | FROM q JOIN sd ON q.vec_id <> sd.sid),
-        |top AS (
-        | SELECT vec_id, label FROM (
-        |  SELECT vec_id, label, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY cosine DESC, sid ASC) AS rk
-        |  FROM scored)
-        | WHERE rk <= 5),
-        |votes AS (
-        | SELECT vec_id, label, count(*) AS n FROM top GROUP BY 1, 2)
-        |SELECT vec_id, label AS pred_label, CAST(n AS INTEGER) AS votes
-        |FROM (SELECT vec_id, label, n, row_number() OVER (
-        |   PARTITION BY vec_id ORDER BY n DESC, label ASC) AS rk
-        |  FROM votes)
-        |WHERE rk = 1""".stripMargin,
-
-    // q_embed_topk's kernel with the qrels exclusion (and self-pair)
-    // applied BEFORE ranking, so negatives rank dense 1..k
-    "q_hard_negatives" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |           FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 20 = 0),
-        |scored AS (
-        | SELECT q.query_id, v.vec_id AS neighbor_id,
-        |  list_aggregate(list_transform(generate_series(1, len(q.qe)),
-        |    i -> q.qe[i] * v.e[i]), 'sum') /
-        |  (sqrt(list_aggregate(list_transform(generate_series(1, len(q.qe)),
-        |    i -> q.qe[i] * q.qe[i]), 'sum')) *
-        |   sqrt(list_aggregate(list_transform(generate_series(1, len(v.e)),
-        |    i -> v.e[i] * v.e[i]), 'sum'))) AS cosine
-        | FROM q JOIN v ON q.query_id <> v.vec_id
-        |  AND v.vec_id % 7 <> q.query_id % 7),
-        |ranked AS (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id
-        |                     ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        | FROM scored)
-        |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 3""".stripMargin,
-
-    "q_embed_neardup" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |           FROM embeddings),
-        |p AS (
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        | list_aggregate(list_transform(generate_series(1, len(a.e)),
-        |   i -> a.e[i] * b.e[i]), 'sum') /
-        | (sqrt(list_aggregate(list_transform(generate_series(1, len(a.e)),
-        |   i -> a.e[i] * a.e[i]), 'sum')) *
-        |  sqrt(list_aggregate(list_transform(generate_series(1, len(b.e)),
-        |   i -> b.e[i] * b.e[i]), 'sum'))) AS cosine
-        |FROM v a JOIN v b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.4""".stripMargin,
-
-    // LSH near-dup gate: sound as an EXACT oracle because (a) the only
-    // pairs ≥0.99 in the planted fixture are exact ×2.0f-scaled copies
-    // (max natural pair cosine is 0.513 at sf0.01) and (b) sign-LSH
-    // recall on exact power-of-two-scaled copies is exactly 1 (the
-    // scaling is exact in IEEE float, so every hyperplane dot product
-    // keeps its sign bit). The oracle recomputes the exhaustive pair
-    // set over the same union; ids only — no float column in the hash.
-    "q_embed_neardup_lsh" ->
-      """WITH u AS (
-        | SELECT vec_id, embedding FROM embeddings
-        | UNION ALL
-        | SELECT vec_id + 1000000 AS vec_id,
-        |        list_transform(embedding, x -> CAST(x * 2.0 AS FLOAT)) AS embedding
-        | FROM embeddings WHERE vec_id % 50 = 0),
-        |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |      FROM u),
-        |n AS (SELECT vec_id, e,
-        |  sqrt(list_aggregate(list_transform(generate_series(1, len(e)),
-        |    i -> e[i] * e[i]), 'sum')) AS nrm FROM v),
-        |p AS (
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        | list_aggregate(list_transform(generate_series(1, len(a.e)),
-        |   i -> a.e[i] * b.e[i]), 'sum') / (a.nrm * b.nrm) AS cosine
-        |FROM n a JOIN n b ON a.vec_id < b.vec_id
-        |WHERE a.nrm > 0 AND b.nrm > 0)
-        |SELECT id_a, id_b FROM p WHERE cosine >= 0.99""".stripMargin,
-
-    // FULL independent recompute of the seeded (refineIterations = 0)
-    // SemDeDup pipeline: seed centroids = first 16 vectors by id;
-    // assignment = argmax cosine-to-seed (lowest seed id on ties —
-    // Spark's strict-> keeps the first/lowest index; NaN rows of a
-    // zero-norm vector tie everywhere and also fall to the lowest id,
-    // matching the kernel's NaN-never-wins arithmetic); candidate
-    // pairs within a cell at double cosine >= 0.4 (same sequential
-    // dot/(sqrt·sqrt) fold — SemDedupPinSpec pins the 1.3e-4 fixture
-    // margin so a last-ulp fold difference cannot flip a pair);
-    // components by recursive closure over the symmetric edge set;
-    // survivors = min-id representative per component + every row in
-    // no component (null-embedding rows included, as in dedupByPairs)
-    "q_semdedup" ->
-      """WITH RECURSIVE v AS MATERIALIZED (
-        | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        | FROM embeddings WHERE embedding IS NOT NULL),
-        |n AS MATERIALIZED (
-        | SELECT vec_id, e,
-        |  sqrt(list_aggregate(list_transform(generate_series(1, len(e)),
-        |    i -> e[i] * e[i]), 'sum')) AS nrm
-        | FROM v),
-        |seeds AS MATERIALIZED (
-        | SELECT vec_id AS cid, e AS c, nrm AS cnrm
-        | FROM n ORDER BY vec_id LIMIT 16),
-        |sim AS MATERIALIZED (
-        | SELECT n.vec_id, s.cid,
-        |  list_aggregate(list_transform(generate_series(1, len(n.e)),
-        |    i -> n.e[i] * s.c[i]), 'sum') / (n.nrm * s.cnrm) AS cs
-        | FROM n CROSS JOIN seeds s),
-        |assign AS MATERIALIZED (
-        | SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid,
-        |   row_number() OVER (PARTITION BY vec_id
-        |     ORDER BY cs DESC, cid ASC) AS rn
-        |  FROM sim) WHERE rn = 1),
-        |pairs AS MATERIALIZED (
-        | SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        | FROM assign ax
-        | JOIN assign ay ON ax.cid = ay.cid AND ax.vec_id < ay.vec_id
-        | JOIN n x ON x.vec_id = ax.vec_id
-        | JOIN n y ON y.vec_id = ay.vec_id
-        | WHERE x.nrm > 0 AND y.nrm > 0
-        |  AND list_aggregate(list_transform(generate_series(1, len(x.e)),
-        |    i -> x.e[i] * y.e[i]), 'sum') / (x.nrm * y.nrm) >= 0.4),
-        |edges AS MATERIALIZED (
-        | SELECT id_a AS a, id_b AS b FROM pairs
-        | UNION ALL
-        | SELECT id_b AS a, id_a AS b FROM pairs),
-        |r(node, t) AS (
-        | SELECT DISTINCT a, a FROM edges
-        | UNION
-        | SELECT e.b, r.t FROM r JOIN edges e ON e.a = r.node),
-        |comp AS (SELECT node, min(t) AS cid FROM r GROUP BY node)
-        |SELECT emb.vec_id, emb.label
-        |FROM embeddings emb
-        |LEFT JOIN comp ON emb.vec_id = comp.node
-        |WHERE comp.node IS NULL OR comp.cid = emb.vec_id""".stripMargin,
-
-    // FULL independent recompute of the seeded IVF probe path
-    // (q_simsearch_ivf): seed centroids → assignment (as q_semdedup)
-    // → per-cell MEANS → per-query top-4 cells by (cosine desc, cell
-    // id asc; NaN sims never picked — Spark's probe kernel skips
-    // them, the oracle filters isnan) → exact cosine top-3 within
-    // probed cells by (cosine desc, id asc), self-pairs and zero-norm
-    // rows excluded. Means are order-dependent double sums that
-    // differ in ulps between engines; the probe-gap and rank-gap
-    // fixture margins (SemDedupPinSpec) dwarf that.
-    "q_simsearch_ivf" ->
-      """WITH v AS MATERIALIZED (
-        | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        | FROM embeddings WHERE embedding IS NOT NULL),
-        |n AS MATERIALIZED (
-        | SELECT vec_id, e,
-        |  sqrt(list_aggregate(list_transform(generate_series(1, len(e)),
-        |    i -> e[i] * e[i]), 'sum')) AS nrm
-        | FROM v),
-        |seeds AS MATERIALIZED (
-        | SELECT vec_id AS cid, e AS c, nrm AS cnrm
-        | FROM n ORDER BY vec_id LIMIT 16),
-        |asim AS MATERIALIZED (
-        | SELECT n.vec_id, s.cid,
-        |  list_aggregate(list_transform(generate_series(1, len(n.e)),
-        |    i -> n.e[i] * s.c[i]), 'sum') / (n.nrm * s.cnrm) AS cs
-        | FROM n CROSS JOIN seeds s),
-        |assign AS MATERIALIZED (
-        | SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid,
-        |   row_number() OVER (PARTITION BY vec_id
-        |     ORDER BY cs DESC, cid ASC) AS rn
-        |  FROM asim) WHERE rn = 1),
-        |dims AS MATERIALIZED (
-        | SELECT unnest(generate_series(1, (SELECT max(len(e)) FROM v)))
-        |   AS i),
-        |mexp AS MATERIALIZED (
-        | SELECT a.cid, d.i, avg(x.e[d.i]) AS m
-        | FROM assign a JOIN v x USING (vec_id) CROSS JOIN dims d
-        | GROUP BY a.cid, d.i),
-        |means AS MATERIALIZED (
-        | SELECT cid, list(m ORDER BY i) AS c FROM mexp GROUP BY cid),
-        |mn AS MATERIALIZED (
-        | SELECT cid, c,
-        |  sqrt(list_aggregate(list_transform(generate_series(1, len(c)),
-        |    i -> c[i] * c[i]), 'sum')) AS cnrm
-        | FROM means),
-        |q AS MATERIALIZED (
-        | SELECT vec_id, e, nrm FROM n WHERE vec_id % 20 = 0),
-        |psim AS MATERIALIZED (
-        | SELECT q.vec_id AS qid, m.cid,
-        |  list_aggregate(list_transform(generate_series(1, len(q.e)),
-        |    i -> q.e[i] * m.c[i]), 'sum') / (q.nrm * m.cnrm) AS cs
-        | FROM q CROSS JOIN mn m),
-        |probes AS MATERIALIZED (
-        | SELECT qid, cid FROM (
-        |  SELECT qid, cid,
-        |   row_number() OVER (PARTITION BY qid
-        |     ORDER BY cs DESC, cid ASC) AS rn
-        |  FROM psim WHERE NOT isnan(cs)) WHERE rn <= 4),
-        |scored AS MATERIALIZED (
-        | SELECT p.qid, a.vec_id AS nid,
-        |  list_aggregate(list_transform(generate_series(1, len(x.e)),
-        |    i -> qq.e[i] * x.e[i]), 'sum') / (qq.nrm * x.nrm) AS cs
-        | FROM probes p
-        | JOIN assign a ON a.cid = p.cid AND a.vec_id <> p.qid
-        | JOIN n x ON x.vec_id = a.vec_id
-        | JOIN n qq ON qq.vec_id = p.qid
-        | WHERE x.nrm > 0 AND qq.nrm > 0)
-        |SELECT qid AS query_id, nid AS neighbor_id,
-        |  CAST(rn AS INT) AS rank
-        |FROM (SELECT qid, nid,
-        |   row_number() OVER (PARTITION BY qid
-        |     ORDER BY cs DESC, nid ASC) AS rn
-        |  FROM scored)
-        |WHERE rn <= 3""".stripMargin,
-
-    // FULL independent recompute (r12 — previously outcome-pinned with
-    // the claim "hashedDocVector rides JVM string hashing, so no SQL
-    // recompute exists"; the claim was wrong): Java String.hashCode is
-    // a 31-polynomial mod 2^32, replayed here with the same
-    // integer-wraparound machinery the fmix64 oracles use (powers
-    // table + HUGEINT multiply for the 0x85ebca6b mix step), Java %
-    // sign semantics spelled out. Vector slots are SINGLE float32
-    // assignments (featurize dedups buckets in a TreeMap), so
-    // CAST(count/n AS REAL) then CAST(slot·CAST(1/sqrt(ss) AS REAL)
-    // AS REAL) reproduces the JVM floats exactly (24-bit products are
-    // exact in doubles); downstream is the q_semdedup replay at
-    // nCells = 64, threshold 0.9. Decision boundaries stay guarded by
-    // SemDedupPinSpec's 6.2e-2 cosine margins (sum-order ulps can
-    // never flip them).
-    "q_text_semdedup" ->
-      """WITH RECURSIVE
-        |pwr(k, v) AS (
-        | SELECT 0, CAST(1 AS BIGINT)
-        | UNION ALL
-        | SELECT k + 1, (v * 31) % 4294967296 FROM pwr WHERE k < 1023),
-        |pws AS (SELECT list(v ORDER BY k) AS pw FROM pwr),
-        |t AS MATERIALIZED (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(lower(text), '\s+'),
-        |    x -> x <> '') AS ts
-        | FROM documents),
-        |g AS MATERIALIZED (
-        | SELECT doc_id, unnest(ts) AS gram FROM t
-        | UNION ALL
-        | SELECT doc_id, unnest(list_transform(
-        |   generate_series(1, len(ts) - 1),
-        |   i -> ts[i] || ' ' || ts[i + 1])) AS gram FROM t),
-        |bk AS MATERIALIZED (
-        | SELECT doc_id,
-        |  CASE WHEN s % 256 < 0 THEN s % 256 + 256 ELSE s % 256 END
-        |    AS bucket
-        | FROM (
-        |  SELECT doc_id,
-        |   CASE WHEN h >= 2147483648 THEN h - 4294967296 ELSE h END AS s
-        |  FROM (
-        |   SELECT doc_id, xor(h, h // 8192) AS h
-        |   FROM (
-        |    SELECT doc_id,
-        |     CAST((CAST(xor(h, h // 65536) AS HUGEINT) * 2246822507)
-        |       % 4294967296 AS BIGINT) AS h
-        |    FROM (
-        |     SELECT doc_id,
-        |      list_aggregate(list_transform(
-        |        generate_series(1, length(gram)),
-        |        i -> CAST(ord(substring(gram, i, 1)) AS BIGINT)
-        |             * pw[length(gram) - i + 1]), 'sum')
-        |        % 4294967296 AS h
-        |     FROM g, pws))))),
-        |cnt AS MATERIALIZED (
-        | SELECT doc_id, bucket, CAST(count(*) AS DOUBLE) AS c
-        | FROM bk GROUP BY 1, 2),
-        |tot AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS n
-        |        FROM bk GROUP BY 1),
-        |dense AS MATERIALIZED (
-        | SELECT gr.doc_id, gr.b,
-        |  coalesce(CAST(c.c / tt.n AS REAL), CAST(0 AS REAL)) AS f
-        | FROM (SELECT d.doc_id, gs.b
-        |       FROM (SELECT DISTINCT doc_id FROM t) d,
-        |            (SELECT unnest(generate_series(0, 255)) AS b) gs) gr
-        | LEFT JOIN cnt c ON c.doc_id = gr.doc_id AND c.bucket = gr.b
-        | JOIN tot tt ON tt.doc_id = gr.doc_id),
-        |raw AS MATERIALIZED (
-        | SELECT doc_id, list(f ORDER BY b) AS fv FROM dense GROUP BY doc_id),
-        |emb AS MATERIALIZED (
-        | SELECT doc_id,
-        |  CASE WHEN ss > 0 THEN
-        |   list_transform(fv, x -> CAST(CAST(x AS DOUBLE)
-        |     * CAST(CAST(1.0 AS DOUBLE) / sqrt(ss) AS REAL) AS REAL))
-        |  ELSE fv END AS e32
-        | FROM (
-        |  SELECT doc_id, fv,
-        |   list_aggregate(list_transform(fv,
-        |     x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum') AS ss
-        |  FROM raw)),
-        |n AS MATERIALIZED (
-        | SELECT doc_id, e,
-        |  sqrt(list_aggregate(list_transform(generate_series(1, len(e)),
-        |    i -> e[i] * e[i]), 'sum')) AS nrm
-        | FROM (SELECT doc_id,
-        |         list_transform(e32, x -> CAST(x AS DOUBLE)) AS e
-        |       FROM emb)),
-        |seeds AS MATERIALIZED (
-        | SELECT doc_id AS cid, e AS c, nrm AS cnrm
-        | FROM n ORDER BY doc_id LIMIT 64),
-        |sim AS MATERIALIZED (
-        | SELECT n.doc_id, s.cid,
-        |  list_aggregate(list_transform(generate_series(1, len(n.e)),
-        |    i -> n.e[i] * s.c[i]), 'sum') / (n.nrm * s.cnrm) AS cs
-        | FROM n CROSS JOIN seeds s),
-        |assign AS MATERIALIZED (
-        | SELECT doc_id, cid FROM (
-        |  SELECT doc_id, cid,
-        |   row_number() OVER (PARTITION BY doc_id
-        |     ORDER BY cs DESC, cid ASC) AS rn
-        |  FROM sim WHERE NOT isnan(cs)) WHERE rn = 1),
-        |pairs AS MATERIALIZED (
-        | SELECT x.doc_id AS id_a, y.doc_id AS id_b
-        | FROM assign ax
-        | JOIN assign ay ON ax.cid = ay.cid AND ax.doc_id < ay.doc_id
-        | JOIN n x ON x.doc_id = ax.doc_id
-        | JOIN n y ON y.doc_id = ay.doc_id
-        | WHERE x.nrm > 0 AND y.nrm > 0
-        |  AND list_aggregate(list_transform(generate_series(1, len(x.e)),
-        |    i -> x.e[i] * y.e[i]), 'sum') / (x.nrm * y.nrm) >= 0.9),
-        |edges AS MATERIALIZED (
-        | SELECT id_a AS a, id_b AS b FROM pairs
-        | UNION ALL
-        | SELECT id_b AS a, id_a AS b FROM pairs),
-        |r(node, t) AS (
-        | SELECT DISTINCT a, a FROM edges
-        | UNION
-        | SELECT e.b, r.t FROM r JOIN edges e ON e.a = r.node),
-        |comp AS (SELECT node, min(t) AS cid FROM r GROUP BY node)
-        |SELECT d.doc_id, d.source
-        |FROM documents d
-        |LEFT JOIN comp ON d.doc_id = comp.node
-        |WHERE comp.node IS NULL OR comp.cid = d.doc_id""".stripMargin,
-
-    // each cell recomputed per keyword: first_pos = SQL position,
-    // n_hits = replace-delta (non-overlapping count) — exactly the
-    // semantics keywordTags documents
-    "q_keyword_tags" ->
-      """WITH kw(keyword) AS (VALUES ('scan'), ('scan slow'),
-        |  ('table table'), ('fast'), ('ast'), ('a row')),
-        |h AS (
-        | SELECT d.doc_id, k.keyword,
-        |   position(k.keyword IN d.text) AS first_pos,
-        |   (length(d.text) - length(replace(d.text, k.keyword, '')))
-        |     // length(k.keyword) AS n_hits
-        | FROM documents d JOIN kw k ON contains(d.text, k.keyword))
-        |SELECT doc_id, keyword, first_pos, n_hits FROM h""".stripMargin,
-
-    "q_text_profile" -> textProfileOracle,
-
-    "q_domain_stats" -> domainStatsOracle,
-
-    "q_url_canonical" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  CASE (doc_id // 3) % 5
-        |   WHEN 0 THEN 'https://WWW.Example-Site.org/p/'
-        |     || CAST(doc_id // 15 AS VARCHAR) || '/'
-        |   WHEN 1 THEN 'https://example-site.org:443/p/'
-        |     || CAST(doc_id // 15 AS VARCHAR) || '?utm_source=x'
-        |   WHEN 2 THEN 'https://www.example-site.org/p/'
-        |     || CAST(doc_id // 15 AS VARCHAR) || '#frag'
-        |   WHEN 3 THEN 'https://Example-site.ORG/p/'
-        |     || CAST(doc_id // 15 AS VARCHAR) || '?id=7&utm_campaign=c&x=2'
-        |   ELSE 'http://example-site.org:80/p/'
-        |     || CAST(doc_id // 15 AS VARCHAR) || '/?utm_a=1&utm_b=2'
-        |  END AS url
-        | FROM documents WHERE doc_id % 3 = 0),
-        |c AS (
-        | SELECT doc_id, url,
-        |  regexp_replace(
-        |   regexp_replace(
-        |    regexp_replace(
-        |     regexp_replace(
-        |      regexp_replace(
-        |       regexp_replace(
-        |        regexp_replace(
-        |         regexp_replace(
-        |          regexp_replace(
-        |           lower(regexp_extract(regexp_replace(url, '#.*', ''),
-        |             '^(https?://[^/?#]*)', 1)) ||
-        |           regexp_replace(regexp_replace(url, '#.*', ''),
-        |             '^https?://[^/?#]*', ''),
-        |           '^(https?://)www\.', '\1'),
-        |          '^(http://[^/?#]*):80([/?#])', '\1\2'),
-        |         '^(http://[^/?#]*):80$', '\1'),
-        |        '^(https://[^/?#]*):443([/?#])', '\1\2'),
-        |       '^(https://[^/?#]*):443$', '\1'),
-        |      'utm_[A-Za-z0-9_]*=[^&#]*&', '', 'g'),
-        |     '[?&]utm_[A-Za-z0-9_]*=[^&#]*', '', 'g'),
-        |    '[?&]$', ''),
-        |   '(.)/$', '\1') AS canon
-        | FROM p)
-        |SELECT doc_id, url, canon,
-        | row_number() OVER (PARTITION BY canon ORDER BY doc_id) = 1
-        |   AS keep
-        |FROM c""".stripMargin,
-
-    "q_clean_text" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 0 THEN
-        |   '<p class="x">' || text || '</p> &amp; cafe' || chr(769)
-        |     || ' &lt;tag&gt;'
-        |  ELSE text END AS t
-        | FROM documents)
-        |SELECT doc_id,
-        | trim(regexp_replace(nfc_normalize(
-        |  replace(replace(replace(replace(replace(
-        |   regexp_replace(t, '<[^>]*>', ' ', 'g'),
-        |   '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |   '&amp;', '&')),
-        |  '\s+', ' ', 'g')) AS clean
-        |FROM p""".stripMargin,
-
-    "q_dedup_incremental" ->
-      """WITH corpus AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
-        |batch AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-        |hidx AS (
-        | SELECT md5(text) AS h, min(doc_id) AS cid
-        | FROM corpus GROUP BY 1),
-        |b0 AS (
-        | SELECT b.doc_id, b.text, e.cid AS exact_cid
-        | FROM batch b LEFT JOIN hidx e ON md5(b.text) = e.h),
-        |shc AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM corpus)
-        | WHERE length(norm) > 0),
-        |shb AS (
-        | SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    generate_series(1, greatest(1, length(norm) - 4)),
-        |    i -> substring(norm, i, 5))) AS s
-        | FROM (SELECT doc_id,
-        |        lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
-        |       FROM b0 WHERE exact_cid IS NULL)
-        | WHERE length(norm) > 0),
-        |near AS (
-        | SELECT a.doc_id, min(c.doc_id) AS cid
-        | FROM shb a JOIN shc c
-        |  ON CAST(least(len(a.s), len(c.s)) AS DOUBLE)
-        |      / greatest(len(a.s), len(c.s)) >= 0.5
-        |   AND CAST(len(list_intersect(a.s, c.s)) AS DOUBLE) /
-        |       (len(a.s) + len(c.s) - len(list_intersect(a.s, c.s)))
-        |       >= 0.5
-        | GROUP BY 1)
-        |SELECT b0.doc_id,
-        | CASE WHEN b0.exact_cid IS NOT NULL THEN 'exact_dup'
-        |      WHEN n.cid IS NOT NULL THEN 'near_dup'
-        |      ELSE 'unique' END AS status,
-        | coalesce(b0.exact_cid, n.cid) AS dup_of
-        |FROM b0 LEFT JOIN near n ON b0.doc_id = n.doc_id""".stripMargin,
-
-    "q_chunk" ->
-      """WITH f AS (
-        | SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS toks,
-        |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |       ELSE len(string_split_regex(lower(trim(text)), '\s+')) END AS n
-        | FROM documents),
-        |e AS (
-        | SELECT doc_id, toks,
-        |  unnest(generate_series(0, n - 1, 24)) AS s
-        | FROM f WHERE n > 0)
-        |SELECT doc_id,
-        | CAST(s // 24 AS BIGINT) AS chunk_id,
-        | CAST(s AS BIGINT) AS start_tok,
-        | CAST(len(toks[s + 1 : s + 32]) AS BIGINT) AS n_chunk_toks,
-        | array_to_string(toks[s + 1 : s + 32], ' ') AS chunk_text
-        |FROM e""".stripMargin,
-
-    "q_bm25" -> bm25Oracle,
-
-    // the indexed route is bit-identical to the direct route by
-    // construction (one scoring kernel, corpus-wide stats at save
-    // time), so it verifies against the same SQL
-    "q_bm25_indexed" -> bm25Oracle,
-    "q_bm25_append" -> bm25OracleTopK(10, " WHERE doc_id % 3 = 0"),
-    "q_bm25_forget" -> bm25ForgetOracle,
-    "q_rtbf_everywhere" -> rtbfEverywhereOracle,
-
-    // the sink-corpus RTBF gate runs at NO-LINK thresholds by
-    // construction (see the gate comment), so every batch row
-    // publishes and each surface's expectation is the slice minus the
-    // purge set — the batch assignment (id % 3) is the partition value
-    "q_rtbf_sinks" ->
-      """WITH p AS (
-        | SELECT doc_id AS id FROM documents
-        |  WHERE doc_id % 5 = 1 AND doc_id % 9 = 4
-        | UNION
-        | SELECT vec_id FROM embeddings
-        |  WHERE vec_id % 5 = 1 AND vec_id % 9 = 4)
-        |SELECT 'cat:docs' AS surface, doc_id AS key,
-        |       CAST(1.0 AS DOUBLE) AS n
-        |FROM documents
-        |WHERE doc_id % 5 = 1 AND doc_id NOT IN (SELECT id FROM p)
-        |UNION ALL
-        |SELECT 'dedup' AS surface, doc_id AS key,
-        |       CAST(doc_id % 2 AS DOUBLE) AS n
-        |FROM documents
-        |WHERE doc_id % 5 = 1 AND doc_id NOT IN (SELECT id FROM p)
-        |UNION ALL
-        |SELECT 'ann' AS surface, vec_id AS key,
-        |       CAST(vec_id % 2 AS DOUBLE) AS n
-        |FROM embeddings
-        |WHERE vec_id % 5 = 1 AND vec_id NOT IN (SELECT id FROM p)""".stripMargin,
-
-    "q_rrf" -> rrfOracle,
-
-    "q_retrieval_eval" ->
-      """WITH q(qid, term) AS (VALUES (1, 'the'), (2, 'data'), (3, 'der')),
-        |cand AS (
-        | SELECT CAST(q.qid AS BIGINT) AS qid, d.doc_id,
-        |        CAST(d.n_chars AS DOUBLE) AS score,
-        |        CAST(1 + CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END
-        |             AS DOUBLE) AS rel
-        | FROM q JOIN documents d ON contains(d.text, q.term)),
-        |run AS (
-        | SELECT qid, doc_id, score,
-        |        row_number() OVER (PARTITION BY qid
-        |          ORDER BY score DESC, doc_id ASC) AS rnk
-        | FROM cand QUALIFY rnk <= 20),
-        |ranked AS (SELECT qid, doc_id, rnk FROM run WHERE rnk <= 10),
-        |rel AS (
-        | SELECT qid, doc_id, rel,
-        |        row_number() OVER (PARTITION BY qid
-        |          ORDER BY rel DESC, doc_id ASC) AS i
-        | FROM cand),
-        |base AS (
-        | SELECT qid, count(*) AS n_rel,
-        |   sum(CASE WHEN i <= 10 THEN
-        |     CAST(round((power(CAST(2 AS DOUBLE), rel) - 1)
-        |       / log2(i + 1), 7) AS DECIMAL(18,7)) END) AS idcg
-        | FROM rel GROUP BY qid),
-        |hits AS (
-        | SELECT r.qid, count(*) AS hits,
-        |   sum(CAST(round((power(CAST(2 AS DOUBLE), rel.rel) - 1)
-        |     / log2(r.rnk + 1), 7) AS DECIMAL(18,7))) AS dcg,
-        |   max(round(CAST(1 AS DOUBLE) / r.rnk, 7)) AS rr
-        | FROM ranked r JOIN rel
-        |   ON rel.qid = r.qid AND rel.doc_id = r.doc_id
-        | GROUP BY r.qid)
-        |SELECT b.qid, b.n_rel,
-        |  coalesce(h.hits, 0) AS hits,
-        |  round(coalesce(h.hits, 0) / b.n_rel, 6) AS recall,
-        |  coalesce(h.rr, CAST(0 AS DOUBLE)) AS mrr,
-        |  round(CAST(coalesce(h.dcg, 0) AS DOUBLE)
-        |    / CAST(b.idcg AS DOUBLE), 6) AS ndcg
-        |FROM base b LEFT JOIN hits h ON h.qid = b.qid""".stripMargin,
-
-    "q_table_diff" ->
-      """WITH b AS (
-        | SELECT c_custkey, c_acctbal, c_mktsegment FROM customer),
-        |a AS (
-        | SELECT c_custkey,
-        |  CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 1.0
-        |       ELSE c_acctbal END AS c_acctbal,
-        |  CASE WHEN c_custkey % 11 = 0 THEN 'NEWSEG'
-        |       ELSE c_mktsegment END AS c_mktsegment
-        | FROM customer WHERE c_custkey % 7 <> 0
-        | UNION ALL
-        | SELECT c_custkey + 1000000, c_acctbal, c_mktsegment
-        | FROM customer WHERE c_custkey % 100 = 1),
-        |j AS (
-        | SELECT b.c_custkey AS bk, a.c_custkey AS ak,
-        |  b.c_acctbal AS b1, a.c_acctbal AS a1,
-        |  b.c_mktsegment AS b2, a.c_mktsegment AS a2
-        | FROM b FULL OUTER JOIN a ON b.c_custkey = a.c_custkey)
-        |SELECT coalesce(ak, bk) AS c_custkey,
-        | CASE WHEN bk IS NULL THEN 'added'
-        |      WHEN ak IS NULL THEN 'removed'
-        |      WHEN b1 IS NOT DISTINCT FROM a1
-        |       AND b2 IS NOT DISTINCT FROM a2 THEN 'unchanged'
-        |      ELSE 'changed' END AS status,
-        | CASE WHEN bk IS NOT NULL AND ak IS NOT NULL
-        |       AND NOT (b1 IS NOT DISTINCT FROM a1
-        |                AND b2 IS NOT DISTINCT FROM a2)
-        |      THEN array_to_string(list_filter([
-        |        CASE WHEN NOT (b1 IS NOT DISTINCT FROM a1)
-        |             THEN 'c_acctbal' END,
-        |        CASE WHEN NOT (b2 IS NOT DISTINCT FROM a2)
-        |             THEN 'c_mktsegment' END],
-        |        x -> x IS NOT NULL), ',')
-        |      ELSE '' END AS changed_cols
-        |FROM j""".stripMargin,
-
-    "q_lm_backoff" -> trigramBackoffOracle,
-
-    // mirrors TextAnalysis.pmiCollocations: double ratio tree (c12·N
-    // overflows BIGINT at scale on the Spark side, so both engines
-    // compute in doubles), ln rounded to 6, rank on the ROUNDED value
-    "q_pmi" ->
-      """WITH big AS (
-        | SELECT w1 || ' ' || w2 AS gram, w1, w2 FROM (
-        |  SELECT unnest(t[1 : len(t) - 1]) AS w1,
-        |         unnest(t[2 : len(t)]) AS w2
-        |  FROM (SELECT string_split_regex(lower(trim(text)), '\s+') AS t
-        |        FROM documents) WHERE len(t) >= 2)),
-        |cnt AS (SELECT gram, w1, w2, count(*) AS c12
-        |        FROM big GROUP BY gram, w1, w2),
-        |u1 AS (SELECT w1, count(*) AS c1 FROM big GROUP BY w1),
-        |u2 AS (SELECT w2, count(*) AS c2 FROM big GROUP BY w2),
-        |n AS (SELECT count(*) AS n_bigrams FROM big)
-        |SELECT c.gram, c.c12,
-        | round(ln((CAST(c.c12 AS DOUBLE) * n.n_bigrams) /
-        |          (CAST(u1.c1 AS DOUBLE) * u2.c2)), 6) AS pmi
-        |FROM cnt c
-        |JOIN u1 ON c.w1 = u1.w1
-        |JOIN u2 ON c.w2 = u2.w2
-        |CROSS JOIN n
-        |WHERE c.c12 >= 5
-        |ORDER BY pmi DESC, gram ASC LIMIT 50""".stripMargin,
-
-    // mirrors TextAnalysis.bigramLmScore: decimal-point constants that
-    // are not binary-exact (0.1) are CAST to DOUBLE so DuckDB's
-    // decimal-literal typing can't diverge from Spark's double math
-    "q_lm_perplexity" ->
-      """WITH toks AS (
-        | SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-        | FROM documents
-        | WHERE text IS NOT NULL AND trim(text) <> ''),
-        |big AS (
-        | SELECT doc_id, w1 || ' ' || w2 AS gram, w1
-        | FROM (SELECT doc_id,
-        |        unnest(t[1 : len(t) - 1]) AS w1,
-        |        unnest(t[2 : len(t)]) AS w2
-        |       FROM toks WHERE len(t) >= 2)),
-        |cnt AS (SELECT gram, count(*) AS c12 FROM big GROUP BY gram),
-        |ctx AS (SELECT w1, count(*) AS c1 FROM big GROUP BY w1),
-        |voc AS (SELECT count(DISTINCT tok) AS v
-        |        FROM (SELECT unnest(t) AS tok FROM toks)),
-        |sc AS (
-        | SELECT b.doc_id, count(*) AS n_bigrams,
-        |  CAST(sum(CAST(round(ln((c.c12 + CAST(0.1 AS DOUBLE)) /
-        |        (x.c1 + CAST(0.1 AS DOUBLE) * v.v)), 6)
-        |       AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_logprob
-        | FROM big b
-        | JOIN cnt c ON b.gram = c.gram
-        | JOIN ctx x ON b.w1 = x.w1
-        | CROSS JOIN voc v
-        | GROUP BY b.doc_id)
-        |SELECT doc_id, n_bigrams, avg_logprob,
-        | round(exp(-avg_logprob), 4) AS perplexity
-        |FROM sc""".stripMargin,
-
-    // mirrors TextAnalysis.perplexityBuckets over the q_lm_perplexity
-    // CTE chain: same md5 half-sample predicate as sampleByHash, same
-    // 1/3 and 2/3 cutpoints as IEEE double divisions, quantile_cont =
-    // Spark's exact percentile interpolation, both rounded to 6
-    "q_ppl_buckets" ->
-      """WITH toks AS (
-        | SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-        | FROM documents
-        | WHERE text IS NOT NULL AND trim(text) <> ''),
-        |big AS (
-        | SELECT doc_id, w1 || ' ' || w2 AS gram, w1
-        | FROM (SELECT doc_id,
-        |        unnest(t[1 : len(t) - 1]) AS w1,
-        |        unnest(t[2 : len(t)]) AS w2
-        |       FROM toks WHERE len(t) >= 2)),
-        |cnt AS (SELECT gram, count(*) AS c12 FROM big GROUP BY gram),
-        |ctx AS (SELECT w1, count(*) AS c1 FROM big GROUP BY w1),
-        |voc AS (SELECT count(DISTINCT tok) AS v
-        |        FROM (SELECT unnest(t) AS tok FROM toks)),
-        |sc AS (
-        | SELECT b.doc_id, count(*) AS n_bigrams,
-        |  CAST(sum(CAST(round(ln((c.c12 + CAST(0.1 AS DOUBLE)) /
-        |        (x.c1 + CAST(0.1 AS DOUBLE) * v.v)), 6)
-        |       AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_logprob
-        | FROM big b
-        | JOIN cnt c ON b.gram = c.gram
-        | JOIN ctx x ON b.w1 = x.w1
-        | CROSS JOIN voc v
-        | GROUP BY b.doc_id),
-        |ppl AS (SELECT doc_id, round(exp(-avg_logprob), 4) AS perplexity
-        |        FROM sc),
-        |thr AS (SELECT
-        |  round(quantile_cont(perplexity, CAST(1 AS DOUBLE) / 3), 6) AS t1,
-        |  round(quantile_cont(perplexity, CAST(2 AS DOUBLE) / 3), 6) AS t2
-        | FROM ppl
-        | WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '80000000')
-        |SELECT p.doc_id, p.perplexity,
-        | CASE WHEN p.perplexity <= t.t1 THEN 'head'
-        |      WHEN p.perplexity <= t.t2 THEN 'middle'
-        |      ELSE 'tail' END AS bucket
-        |FROM ppl p CROSS JOIN thr t""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value,
-        | count(*) AS count
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q_window_analytics" ->
-      """SELECT event_id, user_id,
-        | row_number() OVER w AS rn,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) OVER
-        |   (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |   AS running_value,
-        | lag(event_id, 1) OVER w AS prev_event_id
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-
-    "q_sql_extensions" ->
-      """SELECT o_orderkey,
-        | CAST(year(CAST(strftime(o_orderdate, '%Y-%m-%d') AS DATE)) AS VARCHAR)
-        |   || '_' ||
-        |   CASE o_orderkey % 5 WHEN 0 THEN 'primary' WHEN 1 THEN 'general'
-        |        WHEN 2 THEN 'presidential_primary' WHEN 3 THEN 'special'
-        |        ELSE 'xx' END AS election,
-        | CASE WHEN o_orderkey % 7 = 0 THEN
-        |   regexp_matches('user' || CAST(o_orderkey AS VARCHAR) || '@nodot',
-        |     '^\S*\.[a-zA-Z][a-zA-Z\.]*[a-zA-Z]$')
-        | ELSE
-        |   regexp_matches('user' || CAST(o_orderkey AS VARCHAR) || '@example.com',
-        |     '^\S*\.[a-zA-Z][a-zA-Z\.]*[a-zA-Z]$')
-        | END AS email_ok,
-        | CASE WHEN o_orderkey % 3 = 0 THEN TRY_CAST('garbage' AS DATE)
-        |      ELSE TRY_CAST(strftime(o_orderdate, '%Y-%m-%d') AS DATE)
-        | END AS coerced_date
-        |FROM orders""".stripMargin,
-
-    "q_csv_roundtrip" ->
-      "SELECT event_id, user_id, event_type, value FROM events",
-
-    "q_jsonl_roundtrip" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents",
-
-    "q_orc_roundtrip" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents",
-
-    "q_binary_source" ->
-      """WITH p AS (
-        | SELECT doc_id, 8 + doc_id % 8 AS w, 8 + doc_id % 5 AS h
-        | FROM documents WHERE doc_id % 97 = 0)
-        |SELECT doc_id, 'image/bmp' AS media_type,
-        | CAST(w AS DOUBLE) AS w, CAST(h AS DOUBLE) AS h,
-        | CAST(w*h*(doc_id % 200) + h*((w*(w-1))//2) + w*((h*(h-1))//2)
-        |      AS DOUBLE) / (w*h) AS mean_b
-        |FROM p""".stripMargin,
-
-    "q_multimodal_decode_real" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  8 + doc_id % 8 AS w, 8 + doc_id % 5 AS h
-        | FROM documents WHERE doc_id % 3 < 2)
-        |SELECT doc_id,
-        | CASE WHEN doc_id % 3 = 0 THEN 'image/bmp' ELSE 'audio/wav' END
-        |   AS media_type,
-        | CASE WHEN doc_id % 3 = 0 THEN CAST(w AS DOUBLE)
-        |      ELSE CAST(8000 + (doc_id % 4) * 4000 AS DOUBLE) END AS f1,
-        | CASE WHEN doc_id % 3 = 0 THEN CAST(h AS DOUBLE)
-        |      ELSE 1.0 END AS f2,
-        | CASE WHEN doc_id % 3 = 0 THEN 24.0
-        |      ELSE 200.0 END AS f3,
-        | CASE WHEN doc_id % 3 = 0 THEN
-        |   CAST(w*h*(doc_id % 200) + h*((w*(w-1))//2) + w*((h*(h-1))//2)
-        |        AS DOUBLE) / (w*h)
-        | ELSE CAST(200*(doc_id % 100) - 100 AS DOUBLE) / 200 END AS f4
-        |FROM p""".stripMargin,
-
-    "q_multimodal_meta" ->
-      """SELECT doc_id,
-        | CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image/png'
-        |      WHEN 1 THEN 'audio/wav' ELSE 'video/mp4' END AS media_type,
-        | CAST(octet_length(encode(text)) AS BIGINT) AS byte_length,
-        | md5(text) AS checksum
-        |FROM documents""".stripMargin,
-
-    // the stub-decode plumbing gate's visible columns are closed-form
-    // (payload = the text bytes, feature(0) = byte length), so the
-    // plumbing verifies cross-engine even though the decoder is a stub
-    "q_multimodal_decode" ->
-      """SELECT doc_id,
-        | CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image/png'
-        |      WHEN 1 THEN 'audio/wav' ELSE 'video/mp4' END AS media_type,
-        | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        | CAST(COALESCE(octet_length(encode(text)), 0) AS DOUBLE) AS f_len
-        |FROM documents""".stripMargin,
-
-    // PNG pixel (x,y) = id%200 + x + y ⇒ mean = base + (w−1)/2 + (h−1)/2,
-    // a multiple of 0.25 → the one double division on each side is exact.
-    // Stereo WAV frame sum = 3·(id%100) over 120 frames / 240 samples
-    // ⇒ mean = 1.5·(id%100), also exact.
-    "q_multimodal_png" ->
-      """WITH p AS (
-        | SELECT doc_id, 8 + doc_id % 8 AS w, 8 + doc_id % 5 AS h
-        | FROM documents)
-        |SELECT doc_id,
-        | CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'audio/wav' END
-        |   AS media_type,
-        | CASE WHEN doc_id % 2 = 0 THEN CAST(w AS DOUBLE)
-        |      ELSE CAST(8000 + (doc_id % 4) * 4000 AS DOUBLE) END AS f1,
-        | CASE WHEN doc_id % 2 = 0 THEN CAST(h AS DOUBLE)
-        |      ELSE 2.0 END AS f2,
-        | CASE WHEN doc_id % 2 = 0 THEN 8.0
-        |      ELSE 120.0 END AS f3,
-        | CASE WHEN doc_id % 2 = 0 THEN
-        |   CAST(w*h*(doc_id % 200) + h*((w*(w-1))//2) + w*((h*(h-1))//2)
-        |        AS DOUBLE) / (w*h)
-        | ELSE CAST(360 * (doc_id % 100) AS DOUBLE) / 240 END AS f4
-        |FROM p""".stripMargin,
-
-    // GIF shares pngBytes' pixel law (base + x + y, no wrap), so its
-    // mean is the same closed form; f3 = 8 (palette bit depth)
-    "q_multimodal_gif" ->
-      """WITH p AS (
-        | SELECT doc_id, 8 + doc_id % 8 AS w, 8 + doc_id % 5 AS h
-        | FROM documents)
-        |SELECT doc_id, 'image/gif' AS media_type,
-        | CAST(w AS DOUBLE) AS f1,
-        | CAST(h AS DOUBLE) AS f2,
-        | 8.0 AS f3,
-        | CAST(w*h*(doc_id % 200) + h*((w*(w-1))//2) + w*((h*(h-1))//2)
-        |      AS DOUBLE) / (w*h) AS f4
-        |FROM p""".stripMargin
-  )
-
-  /** The pinned unigram vocab for q_unigram_encode: every log-prob is
-    * a dyadic rational (multiple of 0.25), so the Viterbi DP's path
-    * sums are binary-exact on BOTH engines — cross-engine agreement
-    * needs no float tolerance, only the shared deterministic tiebreak
-    * (smallest split point = longest trailing piece). The DuckDB
-    * oracle's lookup CASE is generated from this same literal. */
-  /** Pinned ranked BPE merge table for `q_bpe_encode` — the
-    * [[PinnedUnigramVocab]] discipline applied to the other subword
-    * family: a FIXED table makes the greedy merge loop deterministic
-    * and data-independent, so the encode gate oracles exactly while
-    * q_bpe_train keeps the trainer covered. Chained entries (th→the,
-    * jo+in→join, sp+ar+k→spark) exercise multi-level merging on the
-    * fixture's vocabulary. Counts are carried for the API shape only —
-    * [[graft.ops.TextAnalysis.applyBpe]] reads ranks alone. */
-  private val PinnedBpeMerges: Array[(Int, String, String, Long)] = Array(
-    (0, "t", "h", 0L), (1, "th", "e", 0L), (2, "i", "n", 0L),
-    (3, "e", "r", 0L), (4, "a", "n", 0L), (5, "o", "n", 0L),
-    (6, "r", "e", 0L), (7, "s", "t", 0L), (8, "a", "t", 0L),
-    (9, "e", "n", 0L), (10, "o", "r", 0L), (11, "a", "r", 0L),
-    (12, "a", "l", 0L), (13, "o", "u", 0L), (14, "in", "g", 0L),
-    (15, "an", "d", 0L), (16, "e", "s", 0L), (17, "l", "e", 0L),
-    (18, "o", "w", 0L), (19, "r", "o", 0L), (20, "i", "s", 0L),
-    (21, "i", "t", 0L), (22, "a", "s", 0L), (23, "e", "d", 0L),
-    (24, "s", "e", 0L), (25, "c", "o", 0L), (26, "d", "a", 0L),
-    (27, "t", "a", 0L), (28, "da", "ta", 0L), (29, "j", "o", 0L),
-    (30, "jo", "in", 0L), (31, "s", "p", 0L), (32, "sp", "ar", 0L),
-    (33, "spar", "k", 0L), (34, "q", "u", 0L), (35, "qu", "e", 0L),
-    (36, "s", "c", 0L), (37, "sc", "an", 0L), (38, "f", "i", 0L),
-    (39, "fi", "l", 0L))
-
-  /** q_bpe_encode oracle — [[graft.ops.TextAnalysis.bpeEncodeWord]]'s
-    * greedy loop replayed in DuckDB as a recursive CTE over DISTINCT
-    * words: each step scores every adjacent subtoken pair with the
-    * pinned rank table (unknown pairs = Int.MaxValue), merges the
-    * LEFTMOST best-ranked pair (`list_position` returns the first
-    * minimum — the kernel keeps the first strictly-smaller rank), and
-    * stops when no pair is ranked. Length strictly decreases, so each
-    * word contributes at most len(word) states and exactly one
-    * terminal row. */
-  private def bpeEncodeOracle: String = {
-    val rankCase = "CASE " + PinnedBpeMerges.map { case (r, l, rt, _) =>
-      s"WHEN s[i] = '$l' AND s[i + 1] = '$rt' THEN $r"
-    }.mkString(" ") + " ELSE 2147483647 END"
-    s"""WITH RECURSIVE toks AS (
-       | SELECT doc_id, unnest(ts) AS w,
-       |  unnest(generate_series(0, len(ts) - 1)) AS pos
-       | FROM (SELECT doc_id,
-       |        string_split_regex(lower(trim(text)), '\\s+') AS ts
-       |       FROM documents WHERE text IS NOT NULL)),
-       |toks2 AS (SELECT doc_id, pos, w FROM toks WHERE w <> ''),
-       |words AS (SELECT DISTINCT w FROM toks2),
-       |st AS (
-       | SELECT w, list_transform(generate_series(1, length(w)),
-       |   i -> substring(w, i, 1)) AS s
-       | FROM words
-       | UNION ALL
-       | SELECT w, list_concat(list_concat(
-       |    s[1:bi - 1], [s[bi] || s[bi + 1]]), s[bi + 2:len(s)]) AS s
-       | FROM (
-       |  SELECT w, s, list_position(rk, list_min(rk)) AS bi
-       |  FROM (SELECT w, s,
-       |         list_transform(generate_series(1, len(s) - 1),
-       |           i -> $rankCase) AS rk
-       |        FROM st WHERE len(s) > 1)
-       |  WHERE list_min(rk) < 2147483647)),
-       |fin AS (
-       | SELECT w, s FROM st
-       | WHERE len(s) = 1 OR list_min(
-       |   list_transform(generate_series(1, len(s) - 1),
-       |     i -> $rankCase)) = 2147483647)
-       |SELECT t.doc_id, CAST(t.pos AS INTEGER) AS pos,
-       | array_to_string(f.s, ' ') AS subtokens
-       |FROM toks2 t JOIN fin f ON f.w = t.w""".stripMargin
-  }
-
-  /** DuckDB replay of [[TextAnalysis.trainBpeMerges]]: `nMerges`
-    * UNROLLED iterations as MATERIALIZED CTE chains (the default
-    * inlined CTEs would expand the 40-deep dependency tree
-    * exponentially). Each iteration: (1) `best_i` — adjacent-pair
-    * counts weighted by word frequency, argmax under the exact
-    * Scala tiebreak (count DESC, left ASC, right ASC); (2) `sel_i` —
-    * greedy LEFTMOST non-overlapping application sites. The greedy
-    * scan looks sequential but reduces to window functions: two
-    * candidate positions can only overlap when they are CONSECUTIVE,
-    * which forces left==right (s[i]=l, s[i+1]=r=l, s[i+2]=r), i.e. a
-    * run of one repeated symbol — and greedy takes every other
-    * position in such a run. So: gaps-and-islands over candidate
-    * positions, keep even offsets within each island. A merged symbol
-    * is l||r, which can never re-match l or r within the same
-    * iteration (it is strictly longer), so the snapshot-then-apply
-    * model is exact. (3) `it_{i+1}` — rebuild each word's symbol list
-    * (selected site → merged symbol, its right neighbor dropped via
-    * lag(sel)). Verified bit-identical to the Scala trainer at
-    * fixture scale including all-same-symbol run words. */
-  private def bpeTrainOracle(nMerges: Int): String = {
-    val base =
-      """WITH it0 AS MATERIALIZED (
-        |  SELECT w, n, list_transform(generate_series(1, length(w)),
-        |                              i -> substr(w, i, 1)) AS syms
-        |  FROM (SELECT w, count(*) AS n
-        |        FROM (SELECT unnest(
-        |                string_split_regex(lower(trim(text)), '\s+')) AS w
-        |              FROM documents)
-        |        WHERE w <> '' GROUP BY w
-        |        ORDER BY n DESC, w ASC LIMIT 65536))""".stripMargin
-    val iters = (0 until nMerges).map { i =>
-      s"""
-         |, best$i AS MATERIALIZED (
-         |  SELECT syms[pos] AS l, syms[pos+1] AS r, sum(n) AS c
-         |  FROM it$i, unnest(generate_series(1, len(syms)-1)) AS u(pos)
-         |  GROUP BY 1, 2
-         |  ORDER BY c DESC, l ASC, r ASC LIMIT 1),
-         |sel$i AS MATERIALIZED (
-         |  SELECT w, n, pos, sym, l, r,
-         |    cand AND (pos - min(CASE WHEN cand THEN pos END)
-         |                OVER (PARTITION BY w, grp)) % 2 = 0 AS sel
-         |  FROM (
-         |    SELECT w, n, pos, sym, cand, l, r,
-         |      pos - row_number() OVER (PARTITION BY w, cand ORDER BY pos)
-         |        AS grp
-         |    FROM (
-         |      SELECT t.w, t.n, u.pos, t.syms[u.pos] AS sym, b.l, b.r,
-         |        (u.pos < len(t.syms) AND t.syms[u.pos] = b.l
-         |           AND t.syms[u.pos+1] = b.r) AS cand
-         |      FROM it$i t CROSS JOIN best$i b,
-         |           unnest(generate_series(1, len(t.syms))) AS u(pos)))),
-         |it${i + 1} AS MATERIALIZED (
-         |  SELECT w, any_value(n) AS n,
-         |    list(CASE WHEN sel THEN l || r ELSE sym END ORDER BY pos)
-         |      FILTER (WHERE NOT coalesce(lag_sel, FALSE)) AS syms
-         |  FROM (SELECT *, lag(sel) OVER (PARTITION BY w ORDER BY pos)
-         |          AS lag_sel
-         |        FROM sel$i)
-         |  GROUP BY w)""".stripMargin
-    }.mkString
-    val unioned = (0 until nMerges)
-      .map(i => s"""SELECT $i AS rank, l AS "left", r AS "right", """ +
-        s"CAST(c AS BIGINT) AS freq FROM best$i")
-      .mkString(" UNION ALL ")
-    s"$base$iters\nSELECT * FROM ($unioned) ORDER BY rank"
-  }
-
-  /** DuckDB replay of [[TextAnalysis.trainWordPiece]] — the
-    * [[bpeTrainOracle]] machinery with WordPiece's three deltas:
-    * (1) it0 symbols carry `##` continuation prefixes; (2) the
-    * per-iteration argmax orders by the likelihood-gain score
-    * `CAST(c AS DOUBLE) / (CAST(cl AS DOUBLE) * CAST(cr AS DOUBLE))` —
-    * the SAME single-multiply-single-divide IEEE tree the Scala
-    * trainer evaluates, so the doubles are bit-equal and the argmax
-    * agrees (ties → smallest (l, r), both sides); (3) the merged
-    * symbol strips the right side's `##`. The greedy leftmost
-    * application sites reuse the gaps-and-islands argument verbatim:
-    * overlap still forces l == r (two `##` symbols), a run, every
-    * other position. */
-  private def wordPieceTrainOracle(nMerges: Int): String = {
-    val base =
-      """WITH it0 AS MATERIALIZED (
-        |  SELECT w, n, list_transform(generate_series(1, length(w)),
-        |      i -> CASE WHEN i = 1 THEN substr(w, i, 1)
-        |           ELSE '##' || substr(w, i, 1) END) AS syms
-        |  FROM (SELECT w, count(*) AS n
-        |        FROM (SELECT unnest(
-        |                string_split_regex(lower(trim(text)), '\s+')) AS w
-        |              FROM documents)
-        |        WHERE w <> '' GROUP BY w
-        |        ORDER BY n DESC, w ASC LIMIT 65536))""".stripMargin
-    val iters = (0 until nMerges).map { i =>
-      s"""
-         |, sc$i AS MATERIALIZED (
-         |  SELECT syms[pos] AS s, sum(n) AS c
-         |  FROM it$i, unnest(generate_series(1, len(syms))) AS u(pos)
-         |  GROUP BY 1),
-         |best$i AS MATERIALIZED (
-         |  SELECT p.l, p.r, p.c, sl.c AS cl, sr.c AS cr
-         |  FROM (SELECT syms[pos] AS l, syms[pos+1] AS r, sum(n) AS c
-         |        FROM it$i, unnest(generate_series(1, len(syms)-1)) AS u(pos)
-         |        GROUP BY 1, 2) p
-         |  JOIN sc$i sl ON sl.s = p.l
-         |  JOIN sc$i sr ON sr.s = p.r
-         |  ORDER BY CAST(p.c AS DOUBLE) /
-         |      (CAST(sl.c AS DOUBLE) * CAST(sr.c AS DOUBLE)) DESC,
-         |    p.l ASC, p.r ASC LIMIT 1),
-         |sel$i AS MATERIALIZED (
-         |  SELECT w, n, pos, sym, l, r,
-         |    cand AND (pos - min(CASE WHEN cand THEN pos END)
-         |                OVER (PARTITION BY w, grp)) % 2 = 0 AS sel
-         |  FROM (
-         |    SELECT w, n, pos, sym, cand, l, r,
-         |      pos - row_number() OVER (PARTITION BY w, cand ORDER BY pos)
-         |        AS grp
-         |    FROM (
-         |      SELECT t.w, t.n, u.pos, t.syms[u.pos] AS sym, b.l, b.r,
-         |        (u.pos < len(t.syms) AND t.syms[u.pos] = b.l
-         |           AND t.syms[u.pos+1] = b.r) AS cand
-         |      FROM it$i t CROSS JOIN best$i b,
-         |           unnest(generate_series(1, len(t.syms))) AS u(pos)))),
-         |it${i + 1} AS MATERIALIZED (
-         |  SELECT w, any_value(n) AS n,
-         |    list(CASE WHEN sel THEN l ||
-         |        (CASE WHEN r LIKE '##%' THEN substr(r, 3) ELSE r END)
-         |      ELSE sym END ORDER BY pos)
-         |      FILTER (WHERE NOT coalesce(lag_sel, FALSE)) AS syms
-         |  FROM (SELECT *, lag(sel) OVER (PARTITION BY w ORDER BY pos)
-         |          AS lag_sel
-         |        FROM sel$i)
-         |  GROUP BY w)""".stripMargin
-    }.mkString
-    val unioned = (0 until nMerges)
-      .map(i => s"""SELECT $i AS rank, l AS "left", r AS "right", """ +
-        s"CAST(c AS BIGINT) AS pair_n, CAST(cl AS BIGINT) AS left_n, " +
-        s"CAST(cr AS BIGINT) AS right_n FROM best$i")
-      .mkString(" UNION ALL ")
-    s"$base$iters\nSELECT * FROM ($unioned) ORDER BY rank"
-  }
-
-  /** The fixture-trained WordPiece vocab behind `q_wordpiece_encode`:
-    * the corpus alphabet (bare first chars + `##` continuations)
-    * plus the 40 learned merges — derived once from
-    * [[graft.ops.TextAnalysis.trainWordPiece]] /
-    * [[graft.ops.TextAnalysis.wordPieceVocab]] on the documents
-    * fixture (identical content at every SF), re-derived by the
-    * WordPieceSpec tripwire so a fixture regeneration fails by name,
-    * never as an opaque oracle hash mismatch. */
-  private[graft] val PinnedWordPieceVocab: Array[String] = Array(
-    "##a", "##b", "##bl", "##c", "##ch", "##d", "##e", "##g",
-    "##h", "##i", "##in", "##k", "##l", "##low", "##lu", "##lum",
-    "##lumn", "##m", "##n", "##o", "##oin", "##olumn", "##oup", "##ow",
-    "##p", "##r", "##s", "##sh", "##st", "##t", "##tch", "##u",
-    "##up", "##us", "##w", "##y", "a", "ag", "agg", "b",
-    "bi", "big", "c", "column", "cus", "cust", "custo", "custom",
-    "d", "dup", "f", "fi", "fil", "filt", "g", "h",
-    "j", "join", "k", "l", "li", "lin", "m", "o",
-    "p", "q", "qu", "r", "row", "s", "sp", "t",
-    "th", "v", "w", "wi", "win", "wind", "window")
-
-  /** q_wordpiece_encode oracle — the greedy longest-match-first walk
-    * replayed as a recursive CTE over DISTINCT words: at each step the
-    * chosen length is the largest L whose (`##`-prefixed past position
-    * 1) candidate is in the pinned vocab (`list_max` over a
-    * `list_contains` scan — bounded by the longest pinned piece); an
-    * unmatchable position voids the whole word to [UNK], the BERT
-    * contract the kernel implements. */
-  private def wordPieceEncodeOracle: String = {
-    val vocabList = PinnedWordPieceVocab.sorted
-      .map(p => s"'${p.replace("'", "''")}'").mkString("[", ", ", "]")
-    val maxLen = PinnedWordPieceVocab.map(_.stripPrefix("##").length).max
-    s"""WITH RECURSIVE toks AS (
-       | SELECT doc_id, unnest(ts) AS w,
-       |  unnest(generate_series(0, len(ts) - 1)) AS pos
-       | FROM (SELECT doc_id,
-       |        string_split_regex(lower(trim(text)), '\\s+') AS ts
-       |       FROM documents WHERE text IS NOT NULL)),
-       |toks2 AS (SELECT doc_id, pos, w FROM toks WHERE w <> ''),
-       |words AS (SELECT DISTINCT w FROM toks2),
-       |st AS (
-       | SELECT w, 1 AS p, '' AS acc FROM words
-       | UNION ALL
-       | SELECT w,
-       |   CASE WHEN bl = 0 THEN length(w) + 1 ELSE p + bl END AS p,
-       |   CASE WHEN bl = 0 THEN '[UNK]'
-       |        WHEN acc = '' THEN px || substr(w, p, bl)
-       |        ELSE acc || ' ' || px || substr(w, p, bl) END AS acc
-       | FROM (
-       |  SELECT w, p, acc, CASE WHEN p = 1 THEN '' ELSE '##' END AS px,
-       |    list_max(list_transform(
-       |      generate_series(1, least(length(w) - p + 1, $maxLen)),
-       |      L -> CASE WHEN list_contains($vocabList,
-       |             (CASE WHEN p = 1 THEN '' ELSE '##' END) ||
-       |               substr(w, p, L))
-       |           THEN L ELSE 0 END)) AS bl
-       |  FROM st WHERE p <= length(w))),
-       |fin AS (SELECT w, acc FROM st WHERE p > length(w))
-       |SELECT t.doc_id, CAST(t.pos AS INTEGER) AS pos,
-       | f.acc AS subtokens
-       |FROM toks2 t JOIN fin f ON f.w = t.w""".stripMargin
-  }
-
-  private val PinnedUnigramVocab: Array[(String, Double)] = Array(
-    ("th", -2.5), ("er", -2.75), ("in", -2.75), ("an", -3.0),
-    ("on", -3.0), ("st", -3.0), ("join", -3.0), ("row", -3.25),
-    ("hash", -3.25), ("ter", -3.25), ("ta", -3.25), ("scan", -3.5),
-    ("sort", -3.5), ("tch", -3.5), ("ge", -3.5), ("ll", -3.5),
-    ("ow", -3.5), ("ba", -3.75), ("col", -3.75), ("mer", -3.75),
-    ("ry", -3.75), ("ue", -3.75), ("up", -3.75), ("all", -3.75),
-    ("par", -3.75), ("cust", -4.0), ("omer", -4.0), ("umn", -4.0),
-    ("fil", -4.0), ("ord", -4.0), ("val", -4.0), ("data", -4.0),
-    ("line", -4.0), ("tor", -4.0), ("able", -4.0), ("spark", -4.0),
-    ("que", -4.25), ("sma", -4.25), ("ream", -4.25), ("fast", -4.25),
-    ("slow", -4.25), ("key", -4.25), ("gro", -4.25), ("wind", -4.5),
-    ("big", -4.5), ("vec", -4.5), ("agg", -4.5),
-    ("a", -3.25), ("e", -3.25), ("s", -3.0), ("t", -3.5), ("o", -3.0),
-    ("r", -3.5), ("i", -3.5), ("n", -3.5), ("l", -3.75), ("c", -3.5),
-    ("u", -3.75), ("m", -4.0), ("d", -4.0), ("g", -4.0), ("h", -4.25),
-    ("b", -4.25), ("p", -4.25), ("f", -4.5), ("k", -4.5), ("w", -4.75),
-    ("y", -5.0), ("v", -5.0), ("j", -5.0), ("q", -5.25), ("x", -5.5),
-    ("z", -5.75))
-
-  /** q_unigram_encode oracle — the Viterbi lattice replayed in DuckDB
-    * as a recursive CTE over DISTINCT words: `dp` carries the prefix
-    * best-score and backpointer lists (position j computed from
-    * candidates i ∈ [j−6, j) exactly like TextAnalysis.viterbiPieces;
-    * `list_position` of the max returns the FIRST hit = smallest i =
-    * the kernel's longest-trailing-piece tiebreak), `rec` walks the
-    * backpointers into pieces. The piece-score CASE is generated from
-    * [[PinnedUnigramVocab]]; unknown single chars cost −1000, unknown
-    * longer pieces −∞ — same as the kernel's UnkLp contract. */
-  /** DuckDB replay of the FULL MinHash-LSH pipeline behind
-    * `q_dedup_minhash` — not just the exact-Jaccard verify but the
-    * probabilistic candidate generation too, so the oracle agrees even
-    * on pairs LSH misses: shingle FNV-1a/fmix64 hashes (the q_simhash
-    * HUGEINT machinery), the pinned 64-function Mersenne-prime minhash
-    * family (coefficients inlined from the SAME derivation the kernel
-    * uses — [[graft.ops.TextDedup.minhashParams]]), Spark's
-    * Murmur3_x86_32 band hash replayed as ~80 chained CTE stages of
-    * 32-bit arithmetic (chained stages, not one nested lambda — each
-    * xor-shift step references its input twice, so naive nesting grows
-    * 2^steps), the band-bucket self-join, and the exact-Jaccard
-    * verify. Machine-built; every constant mirrors
-    * `FastHash.hash64` / `TextDedup.minhashLshPairs` / Spark's
-    * `Murmur3_x86_32.hashLong`. */
-  private def dedupMinhashOracle: String =
-    minhashLshOracle(numHashes = 64, bands = 8, docFilter = "TRUE",
-      tailSql = """cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-        |  FROM bh x JOIN bh y
-        |   ON x.band = y.band AND x.bhv = y.bhv AND x.doc_id < y.doc_id),
-        |vr AS (SELECT id_a, id_b,
-        |   len(list_intersect(xa.hs, yb.hs)) AS inter,
-        |   xa.nsh AS na, yb.nsh AS nb
-        |  FROM cand JOIN shl xa ON xa.doc_id = cand.id_a
-        |            JOIN shl yb ON yb.doc_id = cand.id_b)
-        |SELECT id_a, id_b,
-        | CAST(inter AS DOUBLE) / (na + nb - inter) AS jaccard
-        |FROM vr
-        |WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.8""".stripMargin)
-
-  /** The saved-index probe face (`q_minhash_indexed`): the same LSH
-    * replay at the index's 32-hash/8-band geometry, with the
-    * band-bucket join taken batch-side × corpus-side instead of as a
-    * self-join — the bloom/pushdown pruning being oracled AROUND is
-    * pure I/O avoidance, so the pair set must match exactly. */
-  private def minhashIndexedOracle: String =
-    minhashLshOracle(numHashes = 32, bands = 8,
-      docFilter = "(doc_id % 3 <> 0 OR doc_id % 9 = 0)",
-      tailSql = """cand AS (SELECT DISTINCT x.doc_id AS batch_id,
-        |   y.doc_id AS corpus_id
-        |  FROM bh x JOIN bh y ON x.band = y.band AND x.bhv = y.bhv
-        |  WHERE x.doc_id % 9 = 0 AND y.doc_id % 3 <> 0),
-        |vr AS (SELECT batch_id, corpus_id,
-        |   len(list_intersect(xa.hs, yb.hs)) AS inter,
-        |   xa.nsh AS na, yb.nsh AS nb
-        |  FROM cand JOIN shl xa ON xa.doc_id = cand.batch_id
-        |            JOIN shl yb ON yb.doc_id = cand.corpus_id)
-        |SELECT batch_id, corpus_id,
-        | round(CAST(inter AS DOUBLE) / (na + nb - inter), 6) AS jaccard
-        |FROM vr
-        |WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.8""".stripMargin)
-
-  /** The streaming sink face (`q_dedup_sink`): one applyBatch at the
-    * index geometry = batch docs minus corpus-linked minus non-min
-    * members of intra-batch near-dup components. The corpus link and
-    * the intra-batch pairs ride the SAME band replay; the component
-    * collapse is the recursive transitive closure the q_pipeline_e2e
-    * oracle established. Unshingleable docs (null/empty text) never
-    * enter the band table and survive as singletons — matching the
-    * sink, whose anti-join keeps them in `novel`. */
-  private def dedupSinkOracle: String =
-    minhashLshOracle(numHashes = 32, bands = 8, docFilter = "TRUE",
-      recursive = true,
-      tailSql = """candc AS (SELECT DISTINCT x.doc_id AS bid, y.doc_id AS cid
-        |  FROM bh x JOIN bh y ON x.band = y.band AND x.bhv = y.bhv
-        |  WHERE x.doc_id % 3 = 0 AND y.doc_id % 3 <> 0),
-        |linked AS (SELECT DISTINCT bid FROM candc
-        |  JOIN shl xa ON xa.doc_id = candc.bid
-        |  JOIN shl yb ON yb.doc_id = candc.cid
-        |  WHERE CAST(len(list_intersect(xa.hs, yb.hs)) AS DOUBLE)
-        |   / (xa.nsh + yb.nsh - len(list_intersect(xa.hs, yb.hs)))
-        |   >= 0.8),
-        |candi AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-        |  FROM bh x JOIN bh y ON x.band = y.band AND x.bhv = y.bhv
-        |   AND x.doc_id < y.doc_id
-        |  WHERE x.doc_id % 3 = 0 AND y.doc_id % 3 = 0
-        |   AND x.doc_id NOT IN (SELECT bid FROM linked)
-        |   AND y.doc_id NOT IN (SELECT bid FROM linked)),
-        |pairs AS (SELECT id_a, id_b FROM candi
-        |  JOIN shl xa ON xa.doc_id = candi.id_a
-        |  JOIN shl yb ON yb.doc_id = candi.id_b
-        |  WHERE CAST(len(list_intersect(xa.hs, yb.hs)) AS DOUBLE)
-        |   / (xa.nsh + yb.nsh - len(list_intersect(xa.hs, yb.hs)))
-        |   >= 0.8),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-        |  UNION SELECT id_b, id_a FROM pairs),
-        |reach(a, b) AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u
-        |   WHERE r.a <> e.v),
-        |comp AS (SELECT a AS doc_id, least(a, min(b)) AS cid
-        |         FROM reach GROUP BY a)
-        |SELECT d.doc_id, d.source FROM documents d
-        |LEFT JOIN comp c ON c.doc_id = d.doc_id
-        |WHERE d.doc_id % 3 = 0
-        | AND d.doc_id NOT IN (SELECT bid FROM linked)
-        | AND (c.cid IS NULL OR c.cid = d.doc_id)""".stripMargin)
-
-  private def minhashLshOracle(numHashes: Int, bands: Int,
-                               docFilter: String, tailSql: String,
-                               recursive: Boolean = false): String = {
-    val rows = numHashes / bands
-    val params = graft.ops.TextDedup.minhashParams(numHashes, 42L)
-    val paramRows = params.zipWithIndex
-      .map { case ((a, b), j) => s"($j, $a, $b)" }.mkString(", ")
-    // ---- 32-bit Murmur3 ops on BIGINT values in [0, 2^32) ----------
-    def m32(x: String, c: Long) =
-      s"CAST((CAST($x AS HUGEINT) * $c) % 4294967296 AS BIGINT)"
-    def rotl(x: String, r: Int) =
-      s"((($x) % ${1L << (32 - r)}) * ${1L << r} + (($x) // ${1L << (32 - r)}))"
-    def shr(x: String, nBits: Int) = s"(($x) // ${1L << nBits})"
-    def mixK1(k: String) = m32(rotl(m32(k, 3432918353L), 15), 461845907L)
-    def mixH1(h: String, k: String) =
-      s"(((${rotl(s"xor($h, $k)", 13)}) * 5 + 3864292196) % 4294967296)"
-    val stages = Seq.newBuilder[String]
-    var n = 0
-    def stage(expr: String): Unit = {
-      n += 1
-      stages += s"m$n AS (SELECT * EXCLUDE (h), CAST($expr AS BIGINT) AS h FROM m${n - 1})"
-    }
-    def fmixStages(len: Int): Unit = {
-      stage(s"xor(h, $len)")
-      stage(s"xor(h, ${shr("h", 16)})")
-      stage(m32("h", 2246822507L))
-      stage(s"xor(h, ${shr("h", 13)})")
-      stage(m32("h", 3266489909L))
-      stage(s"xor(h, ${shr("h", 16)})")
-    }
-    // hashLong(e_i, h) per slice element: the signature values are
-    // < 2^31, so the long's high word is 0 and mixK1(0) = 0
-    (0 until rows).foreach { i =>
-      stage(mixH1("h", mixK1(s"e$i")))
-      stage(mixH1("h", "0"))
-      fmixStages(8)
-    }
-    // then hashInt(band, h) — Spark hashes the trailing lit(j) child
-    stage(mixH1("h", mixK1("band")))
-    fmixStages(4)
-    val murmur = stages.result().mkString(",\n")
-    val pivot = (0 until rows).map(i =>
-      s"max(CASE WHEN j % $rows = $i THEN sv END) AS e$i").mkString(", ")
-    s"""WITH ${if (recursive) "RECURSIVE " else ""}d2 AS (
-       | SELECT doc_id,
-       |  lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm
-       | FROM documents
-       | WHERE text IS NOT NULL AND $docFilter
-       |  AND length(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) > 0),
-       |sg AS (
-       | SELECT doc_id, norm,
-       |  unnest(generate_series(1, greatest(1, length(norm) - 4))) AS i
-       | FROM d2),
-       |sg2 AS (SELECT doc_id, substring(norm, i, 5) AS s5 FROM sg),
-       |f AS (SELECT doc_id, CAST(list_reduce(
-       |   list_prepend(14695981039346656037::HUGEINT,
-       |     list_transform(generate_series(1, length(s5)),
-       |       c -> unicode(substr(s5, c, 1))::HUGEINT)),
-       |   (h, c) -> (xor(h::UBIGINT, c::UBIGINT)::HUGEINT
-       |              * 1099511628211) % 18446744073709551616)
-       |  AS UBIGINT) AS h1
-       | FROM sg2),
-       |s1 AS (SELECT doc_id, xor(h1, h1 >> 33) AS a FROM f),
-       |s2 AS (SELECT doc_id, CAST((((a % 4294967296)::HUGEINT
-       |  * 18397679294719823053) + (((a // 4294967296)::HUGEINT
-       |  * (18397679294719823053 % 4294967296)) % 4294967296)
-       |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS b
-       | FROM s1),
-       |s3 AS (SELECT doc_id, xor(b, b >> 33) AS c FROM s2),
-       |s4 AS (SELECT doc_id, CAST((((c % 4294967296)::HUGEINT
-       |  * 14181476777654086739) + (((c // 4294967296)::HUGEINT
-       |  * (14181476777654086739 % 4294967296)) % 4294967296)
-       |  * 4294967296) % 18446744073709551616 AS UBIGINT) AS dd
-       | FROM s3),
-       |th AS (SELECT DISTINCT doc_id, xor(dd, dd >> 33) AS hh FROM s4),
-       |shl AS (SELECT doc_id, list(hh) AS hs, count(*) AS nsh
-       |        FROM th GROUP BY doc_id),
-       |p(j, pa, pb) AS (VALUES $paramRows),
-       |sigs AS (SELECT doc_id, j,
-       |  min((pa * CAST(hh % 2147483648 AS BIGINT) + pb) % 2147483647)
-       |    AS sv
-       | FROM th, p GROUP BY doc_id, j),
-       |sp AS (SELECT doc_id, CAST(j // $rows AS INTEGER) AS band, $pivot
-       |       FROM sigs GROUP BY doc_id, j // $rows),
-       |m0 AS (SELECT *, CAST(42 AS BIGINT) AS h FROM sp),
-       |$murmur,
-       |bh AS (SELECT doc_id, band, h AS bhv FROM m$n),
-       |$tailSql""".stripMargin
-  }
-
-  private def unigramEncodeOracle: String = {
-    val lookup = PinnedUnigramVocab.map { case (p, lp) =>
-      s"WHEN '$p' THEN CAST($lp AS DOUBLE)"
-    }.mkString(" ")
-    val lpExpr = s"CASE substr(w, i + 1, j - i) $lookup" +
-      " ELSE CASE WHEN j - i = 1 THEN CAST(-1000.0 AS DOUBLE)" +
-      " ELSE CAST('-infinity' AS DOUBLE) END END"
-    s"""WITH RECURSIVE words AS (
-       |  SELECT DISTINCT w FROM (
-       |    SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |    FROM documents) WHERE w <> ''),
-       |dp AS (
-       |  SELECT w, 1 AS j, [CAST(0.0 AS DOUBLE)] AS best, [0] AS back
-       |  FROM words
-       |  UNION ALL
-       |  SELECT w, j + 1, list_append(best, list_max(sc)),
-       |    list_append(back,
-       |      greatest(0, j - 6) + list_position(sc, list_max(sc)) - 1)
-       |  FROM (
-       |    SELECT w, j, best, back,
-       |      list_transform(generate_series(greatest(0, j - 6), j - 1),
-       |        i -> best[i + 1] + $lpExpr) AS sc
-       |    FROM dp WHERE j <= length(w))),
-       |rec AS (
-       |  SELECT w, length(w) AS k, CAST([] AS VARCHAR[]) AS pieces, back
-       |  FROM dp WHERE j = length(w) + 1
-       |  UNION ALL
-       |  SELECT w, back[k + 1],
-       |    list_prepend(substr(w, back[k + 1] + 1, k - back[k + 1]),
-       |      pieces), back
-       |  FROM rec WHERE k > 0),
-       |seg AS (SELECT w, array_to_string(pieces, ' ') AS pieces
-       |        FROM rec WHERE k = 0),
-       |toks AS (
-       |  SELECT doc_id, generate_subscripts(l, 1) - 1 AS pos,
-       |         unnest(l) AS w
-       |  FROM (SELECT doc_id,
-       |        string_split_regex(lower(trim(text)), '\\s+') AS l
-       |        FROM documents))
-       |SELECT t.doc_id, CAST(t.pos AS INTEGER) AS pos, s.pieces
-       |FROM toks t JOIN seg s ON t.w = s.w
-       |WHERE t.w <> ''""".stripMargin
-  }
-
-  /** q_lm_backoff oracle — mirrors TextAnalysis.trigramLmScore branch
-    * for branch: identical IEEE ratio trees, ln rounded to 6 →
-    * DECIMAL sums, inexact constants (0.4, 0.4²) interpolated from the
-    * same Scala doubles and CAST to DOUBLE (DuckDB decimal-literal
-    * typing). The split predicate is q_data_split's proven md5 form. */
-  private def trigramBackoffOracle: String = {
-    val b = 0.4
-    s"""WITH sp AS (
-       | SELECT doc_id, text,
-       |  CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd'
-       |       THEN 'train' ELSE 'other' END AS split
-       | FROM documents),
-       |ttox AS (
-       | SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-       | FROM sp
-       | WHERE split = 'train' AND text IS NOT NULL AND trim(text) <> ''),
-       |scal AS (
-       | SELECT count(*) AS n, count(DISTINCT tok) AS v
-       | FROM (SELECT unnest(t) AS tok FROM ttox)),
-       |tr3 AS (
-       | SELECT g, count(*) AS c123 FROM (
-       |  SELECT w1 || ' ' || w2 || ' ' || w3 AS g FROM (
-       |   SELECT unnest(t[1 : len(t) - 2]) AS w1,
-       |          unnest(t[2 : len(t) - 1]) AS w2,
-       |          unnest(t[3 : len(t)]) AS w3
-       |   FROM ttox WHERE len(t) >= 3)) GROUP BY g),
-       |tr2 AS (
-       | SELECT g2, count(*) AS cbi FROM (
-       |  SELECT w1 || ' ' || w2 AS g2 FROM (
-       |   SELECT unnest(t[1 : len(t) - 1]) AS w1,
-       |          unnest(t[2 : len(t)]) AS w2
-       |   FROM ttox WHERE len(t) >= 2)) GROUP BY g2),
-       |ctx AS (
-       | SELECT split_part(g2, ' ', 1) AS w,
-       |        CAST(sum(cbi) AS BIGINT) AS cctx
-       | FROM tr2 GROUP BY 1),
-       |uni AS (
-       | SELECT tok AS w3, count(*) AS c3
-       | FROM (SELECT unnest(t) AS tok FROM ttox) GROUP BY 1),
-       |st AS (
-       | SELECT doc_id, g,
-       |  split_part(g, ' ', 1) || ' ' || split_part(g, ' ', 2) AS p12,
-       |  split_part(g, ' ', 2) || ' ' || split_part(g, ' ', 3) AS s23,
-       |  split_part(g, ' ', 2) AS w2,
-       |  split_part(g, ' ', 3) AS w3
-       | FROM (
-       |  SELECT doc_id, w1 || ' ' || w2 || ' ' || w3 AS g FROM (
-       |   SELECT doc_id,
-       |          unnest(t[1 : len(t) - 2]) AS w1,
-       |          unnest(t[2 : len(t) - 1]) AS w2,
-       |          unnest(t[3 : len(t)]) AS w3
-       |   FROM (SELECT doc_id,
-       |                string_split_regex(lower(trim(text)), '\\s+') AS t
-       |         FROM sp WHERE split <> 'train') WHERE len(t) >= 3))),
-       |sc AS (
-       | SELECT s.doc_id, count(*) AS n_trigrams,
-       |  CAST(sum(CAST(round(ln(
-       |    CASE WHEN t3.c123 IS NOT NULL THEN t3.c123 / b1.cbi
-       |         WHEN b2.cbi IS NOT NULL
-       |           THEN CAST($b AS DOUBLE) * (b2.cbi / cx.cctx)
-       |         ELSE CAST(${b * b} AS DOUBLE) *
-       |              ((coalesce(u.c3, 0) + 1) / (sl.n + sl.v))
-       |    END), 6) AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_logprob
-       | FROM st s
-       | LEFT JOIN tr3 t3 ON s.g = t3.g
-       | LEFT JOIN tr2 b1 ON s.p12 = b1.g2
-       | LEFT JOIN tr2 b2 ON s.s23 = b2.g2
-       | LEFT JOIN ctx cx ON s.w2 = cx.w
-       | LEFT JOIN uni u ON s.w3 = u.w3
-       | CROSS JOIN scal sl
-       | GROUP BY s.doc_id)
-       |SELECT doc_id, n_trigrams, avg_logprob,
-       | round(exp(-avg_logprob), 4) AS perplexity
-       |FROM sc""".stripMargin
-  }
-
-  /** q_bm25 oracle — mirrors Retrieval.bm25TopK expression for
-    * expression: same tokenization, idf rounded to 7 before the product,
-    * the product rounded to 6 and summed as DECIMAL(18,6) (order-free
-    * exact), so the only engine-specific steps are ln and round —
-    * both proven to agree at these scales by the existing rounded
-    * oracles. Constants are interpolated from the same Scala doubles
-    * the query evaluates (shortest-repr round-trip). */
-  private def bm25Oracle: String = bm25OracleTopK(10)
-
-  private def bm25OracleTopK(limit: Int, where: String = ""): String = {
-    val k1 = 1.2; val b = 0.75
-    val qt = Bm25Queries.flatMap { case (qid, q) =>
-      q.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-        .map(t => s"(CAST($qid AS BIGINT), '$t')")
-    }.mkString(", ")
-    val termSet = Bm25Queries
-      .flatMap(_._2.trim.toLowerCase.split("\\s+")).filter(_.nonEmpty)
-      .distinct.map(t => s"'$t'").mkString(", ")
-    s"""WITH base AS (
-       | SELECT doc_id,
-       |  string_split_regex(lower(trim(text)), '\\s+') AS toks,
-       |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-       |       ELSE len(string_split_regex(lower(trim(text)), '\\s+')) END AS dl
-       | FROM documents$where),
-       |stats AS (
-       | SELECT CAST(count(*) AS DOUBLE) AS n,
-       |  CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-       | FROM base),
-       |qt(qid, term) AS (VALUES $qt),
-       |tf AS (
-       | SELECT doc_id, dl, term, count(*) AS tf
-       | FROM (SELECT doc_id, dl, unnest(toks) AS term FROM base)
-       | WHERE term IN ($termSet)
-       | GROUP BY doc_id, dl, term),
-       |dfs AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-       |scored AS (
-       | SELECT q.qid, t.doc_id,
-       |  sum(CAST(round(
-       |    round(ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5)), 7)
-       |    * ((t.tf * CAST(${k1 + 1.0} AS DOUBLE)) /
-       |       (t.tf + $k1 * (1.0 - $b + ($b * t.dl) / s.avgdl))), 6)
-       |   AS DECIMAL(18,6))) AS sc
-       | FROM tf t
-       | CROSS JOIN stats s
-       | JOIN dfs d ON t.term = d.term
-       | JOIN qt q ON t.term = q.term
-       | GROUP BY q.qid, t.doc_id)
-       |SELECT qid, doc_id, CAST(sc AS DOUBLE) AS score
-       |FROM scored
-       |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sc DESC, doc_id) <= $limit""".stripMargin
-  }
-
-  /** q_embed_topk / q_hnsw_topk oracle — exhaustive cosine top-3 over
-    * the mod-20 query slice, the sequential-fold kernel shape proven
-    * bit-identical to the engine's `cosine` expression. */
-  private def embedTopKOracle: String =
-    """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |           FROM embeddings),
-      |q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 20 = 0),
-      |scored AS (
-      | SELECT q.query_id, v.vec_id AS neighbor_id,
-      |  list_aggregate(list_transform(generate_series(1, len(q.qe)),
-      |    i -> q.qe[i] * v.e[i]), 'sum') /
-      |  (sqrt(list_aggregate(list_transform(generate_series(1, len(q.qe)),
-      |    i -> q.qe[i] * q.qe[i]), 'sum')) *
-      |   sqrt(list_aggregate(list_transform(generate_series(1, len(v.e)),
-      |    i -> v.e[i] * v.e[i]), 'sum'))) AS cosine
-      | FROM q JOIN v ON q.query_id <> v.vec_id),
-      |ranked AS (SELECT query_id, neighbor_id,
-      |  row_number() OVER (PARTITION BY query_id
-      |                     ORDER BY cosine DESC, neighbor_id ASC) AS rank
-      | FROM scored)
-      |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 3""".stripMargin
-
-  /** q_bm25_forget oracle — the two delete-lifecycle phases, each with
-    * its own statistics scope: 'tombstoned' scores the SURVIVING
-    * candidate set with FULL-corpus df/n/avgdl (soft-delete — exactly
-    * what the probe computes while the tombstone stands), 'compacted'
-    * is the plain BM25 oracle on the purged corpus (compaction ≡
-    * rebuild). Same rounded-DECIMAL scoring shape as [[bm25Oracle]];
-    * the purge predicate (doc_id % 7 = 2) is interpolated once so the
-    * gate and the oracle can never drift. */
-  private def bm25ForgetOracle: String = {
-    val k1 = 1.2; val b = 0.75
-    val slice = "doc_id % 2 = 0"
-    val keep = "doc_id % 7 <> 2"
-    val qt = Bm25Queries.flatMap { case (qid, q) =>
-      q.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-        .map(t => s"(CAST($qid AS BIGINT), '$t')")
-    }.mkString(", ")
-    val termSet = Bm25Queries
-      .flatMap(_._2.trim.toLowerCase.split("\\s+")).filter(_.nonEmpty)
-      .distinct.map(t => s"'$t'").mkString(", ")
-    def score(statsCte: String, dfsCte: String, tfPred: String) =
-      s"""SELECT q.qid, t.doc_id,
-         |  sum(CAST(round(
-         |    round(ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5)), 7)
-         |    * ((t.tf * CAST(${k1 + 1.0} AS DOUBLE)) /
-         |       (t.tf + $k1 * (1.0 - $b + ($b * t.dl) / s.avgdl))), 6)
-         |   AS DECIMAL(18,6))) AS sc
-         | FROM tf t
-         | CROSS JOIN $statsCte s
-         | JOIN $dfsCte d ON t.term = d.term
-         | JOIN qt q ON t.term = q.term
-         | WHERE $tfPred
-         | GROUP BY q.qid, t.doc_id""".stripMargin
-    s"""WITH base AS (
-       | SELECT doc_id,
-       |  string_split_regex(lower(trim(text)), '\\s+') AS toks,
-       |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-       |       ELSE len(string_split_regex(lower(trim(text)), '\\s+')) END AS dl
-       | FROM documents WHERE $slice),
-       |stats AS (
-       | SELECT CAST(count(*) AS DOUBLE) AS n,
-       |  CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-       | FROM base),
-       |stats2 AS (
-       | SELECT CAST(count(*) AS DOUBLE) AS n,
-       |  CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-       | FROM base WHERE $keep),
-       |qt(qid, term) AS (VALUES $qt),
-       |tf AS (
-       | SELECT doc_id, dl, term, count(*) AS tf
-       | FROM (SELECT doc_id, dl, unnest(toks) AS term FROM base)
-       | WHERE term IN ($termSet)
-       | GROUP BY doc_id, dl, term),
-       |dfs AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-       |dfs2 AS (SELECT term, count(*) AS df FROM tf WHERE $keep GROUP BY term),
-       |sc1 AS (${score("stats", "dfs", keep)}),
-       |sc2 AS (${score("stats2", "dfs2", keep)})
-       |SELECT * FROM (
-       | SELECT 'tombstoned' AS phase, qid, doc_id, CAST(sc AS DOUBLE) AS score
-       | FROM sc1
-       | QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sc DESC, doc_id) <= 10
-       | UNION ALL
-       | SELECT 'compacted' AS phase, qid, doc_id, CAST(sc AS DOUBLE) AS score
-       | FROM sc2
-       | QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sc DESC, doc_id) <= 10)""".stripMargin
-  }
-
-  /** q_rtbf_everywhere oracle — per-surface expectations: the catalog
-    * tables are exact anti-join SQL; the index-probe faces reduce to
-    * pinned constants (0 hits on purged ids — physically erased; a
-    * guaranteed self-hit on surviving controls — exact-copy probes
-    * link at jaccard 1.0 / cosine 1.0, and the ann faces ride the
-    * fixture's 0.985 no-natural-pair margin); the BM25 surface is the
-    * purged-corpus scoring SQL verbatim (compaction ≡ rebuild). */
-
-  /**
-   * r11 outcome pins for the five PQ/OPQ simsearch gates — the
-   * q_text_semdedup technique applied to the quantized-trained PQ
-   * family: [[graft.ops.Similarity.pqTrain]]'s centroid updates now
-   * accumulate order-free quantized longs (bit-identical codebooks
-   * across any partition layout, PqPinSpec), the assignment/ADC/
-   * re-rank stages were always pure per-row functions, and the OPQ
-   * rotation rides Pca.train's already-order-free moments — so each
-   * gate's (query_id, neighbor_id, rank) output is a pure function of
-   * fixture content, pinnable as constants. No independent engine can
-   * recompute a k-means float iteration (the necessity argument the
-   * rows-only rows carried since r2); the pins' honesty rests on that
-   * purity, the layout-invariance spec, and PqPinSpec's tripwire
-   * re-derivation at the driver's correctness SF (a fixture
-   * regeneration fails THERE with a named reason, not as an opaque
-   * hash mismatch). ONE source of truth: the oracle SQL below is
-   * GENERATED from this map, and the spec compares against this map.
-   */
-  private[graft] val SimsearchPins: Map[String, Seq[(Long, Long, Int)]] = Map(
-    ("q_simsearch_pq", Seq(
-      (0L,365L,1),(0L,334L,2),(0L,387L,3),(20L,354L,1),(20L,302L,2),
-      (20L,252L,3),(40L,359L,1),(40L,139L,2),(40L,306L,3),(60L,48L,1),
-      (60L,245L,2),(60L,189L,3),(80L,230L,1),(80L,488L,2),(80L,317L,3),
-      (100L,398L,1),(100L,279L,2),(100L,360L,3),(120L,421L,1),
-      (120L,112L,2),(120L,18L,3),(140L,111L,1),(140L,296L,2),
-      (140L,384L,3),(160L,432L,1),(160L,164L,2),(160L,95L,3),
-      (180L,265L,1),(180L,153L,2),(180L,59L,3),(200L,204L,1),
-      (200L,32L,2),(200L,143L,3),(220L,494L,1),(220L,151L,2),
-      (220L,353L,3),(240L,168L,1),(240L,68L,2),(240L,436L,3),
-      (260L,94L,1),(260L,489L,2),(260L,363L,3),(280L,391L,1),
-      (280L,459L,2),(280L,269L,3),(300L,53L,1),(300L,477L,2),
-      (300L,446L,3),(320L,462L,1),(320L,98L,2),(320L,321L,3),(340L,7L,1),
-      (340L,269L,2),(340L,87L,3),(360L,189L,1),(360L,100L,2),
-      (360L,263L,3),(380L,39L,1),(380L,165L,2),(380L,185L,3),
-      (400L,451L,1),(400L,443L,2),(400L,475L,3),(420L,248L,1),
-      (420L,48L,2),(420L,470L,3),(440L,172L,1),(440L,13L,2),(440L,75L,3),
-      (460L,441L,1),(460L,281L,2),(460L,490L,3),(480L,54L,1),
-      (480L,286L,2),(480L,197L,3))),
-    ("q_simsearch_ivfpq", Seq(
-      (0L,365L,1),(0L,334L,2),(0L,387L,3),(20L,117L,1),(20L,354L,2),
-      (20L,252L,3),(40L,139L,1),(40L,306L,2),(40L,13L,3),(60L,48L,1),
-      (60L,489L,2),(60L,186L,3),(80L,429L,1),(80L,316L,2),(80L,195L,3),
-      (100L,398L,1),(100L,279L,2),(100L,45L,3),(120L,421L,1),
-      (120L,112L,2),(120L,18L,3),(140L,111L,1),(140L,296L,2),
-      (140L,253L,3),(160L,164L,1),(160L,417L,2),(160L,389L,3),
-      (180L,153L,1),(180L,59L,2),(180L,161L,3),(200L,32L,1),
-      (200L,410L,2),(200L,135L,3),(220L,494L,1),(220L,353L,2),
-      (220L,178L,3),(240L,168L,1),(240L,68L,2),(240L,436L,3),
-      (260L,489L,1),(260L,234L,2),(260L,446L,3),(280L,391L,1),
-      (280L,269L,2),(280L,310L,3),(300L,245L,1),(300L,27L,2),
-      (300L,305L,3),(320L,389L,1),(320L,98L,2),(320L,444L,3),(340L,7L,1),
-      (340L,87L,2),(340L,381L,3),(360L,189L,1),(360L,263L,2),
-      (360L,75L,3),(380L,39L,1),(380L,185L,2),(380L,289L,3),
-      (400L,451L,1),(400L,475L,2),(400L,182L,3),(420L,48L,1),
-      (420L,374L,2),(420L,41L,3),(440L,172L,1),(440L,13L,2),(440L,75L,3),
-      (460L,441L,1),(460L,281L,2),(460L,155L,3),(480L,79L,1),
-      (480L,54L,2),(480L,100L,3))),
-    ("q_simsearch_indexed", Seq(
-      (0L,365L,1),(0L,334L,2),(0L,387L,3),(20L,117L,1),(20L,354L,2),
-      (20L,252L,3),(40L,139L,1),(40L,306L,2),(40L,13L,3),(60L,48L,1),
-      (60L,489L,2),(60L,186L,3),(80L,429L,1),(80L,316L,2),(80L,195L,3),
-      (100L,398L,1),(100L,279L,2),(100L,45L,3),(120L,421L,1),
-      (120L,112L,2),(120L,18L,3),(140L,111L,1),(140L,296L,2),
-      (140L,253L,3),(160L,164L,1),(160L,417L,2),(160L,389L,3),
-      (180L,153L,1),(180L,59L,2),(180L,161L,3),(200L,32L,1),
-      (200L,410L,2),(200L,135L,3),(220L,494L,1),(220L,353L,2),
-      (220L,178L,3),(240L,168L,1),(240L,68L,2),(240L,436L,3),
-      (260L,489L,1),(260L,234L,2),(260L,446L,3),(280L,391L,1),
-      (280L,269L,2),(280L,310L,3),(300L,245L,1),(300L,27L,2),
-      (300L,305L,3),(320L,389L,1),(320L,98L,2),(320L,444L,3),(340L,7L,1),
-      (340L,87L,2),(340L,381L,3),(360L,189L,1),(360L,263L,2),
-      (360L,75L,3),(380L,39L,1),(380L,185L,2),(380L,289L,3),
-      (400L,451L,1),(400L,475L,2),(400L,182L,3),(420L,48L,1),
-      (420L,374L,2),(420L,41L,3),(440L,172L,1),(440L,13L,2),(440L,75L,3),
-      (460L,441L,1),(460L,281L,2),(460L,155L,3),(480L,79L,1),
-      (480L,54L,2),(480L,100L,3))),
-    ("q_simsearch_append", Seq(
-      (0L,334L,1),(0L,387L,2),(0L,423L,3),(20L,117L,1),(20L,354L,2),
-      (20L,302L,3),(40L,139L,1),(40L,249L,2),(40L,126L,3),(60L,189L,1),
-      (60L,49L,2),(60L,334L,3),(80L,488L,1),(80L,429L,2),(80L,317L,3),
-      (100L,398L,1),(100L,279L,2),(100L,360L,3),(120L,202L,1),
-      (120L,225L,2),(120L,170L,3),(140L,111L,1),(140L,389L,2),
-      (140L,253L,3),(160L,164L,1),(160L,95L,2),(160L,173L,3),
-      (180L,153L,1),(180L,59L,2),(180L,293L,3),(200L,204L,1),
-      (200L,32L,2),(200L,143L,3),(220L,494L,1),(220L,353L,2),
-      (220L,178L,3),(240L,375L,1),(240L,241L,2),(240L,372L,3),
-      (260L,67L,1),(260L,302L,2),(260L,472L,3),(280L,459L,1),
-      (280L,269L,2),(280L,288L,3),(300L,446L,1),(300L,318L,2),
-      (300L,27L,3),(320L,389L,1),(320L,321L,2),(320L,426L,3),(340L,7L,1),
-      (340L,87L,2),(340L,381L,3),(360L,100L,1),(360L,75L,2),
-      (360L,172L,3),(380L,39L,1),(380L,165L,2),(380L,185L,3),
-      (400L,443L,1),(400L,475L,2),(400L,358L,3),(420L,48L,1),
-      (420L,41L,2),(420L,466L,3),(440L,172L,1),(440L,13L,2),(440L,75L,3),
-      (460L,441L,1),(460L,342L,2),(460L,490L,3),(480L,79L,1),
-      (480L,100L,2),(480L,197L,3))),
-    ("q_simsearch_opq", Seq(
-      (0L,365L,1),(0L,387L,2),(0L,423L,3),(20L,117L,1),(20L,11L,2),
-      (20L,354L,3),(40L,359L,1),(40L,139L,2),(40L,306L,3),(60L,48L,1),
-      (60L,245L,2),(60L,189L,3),(80L,230L,1),(80L,488L,2),(80L,317L,3),
-      (100L,398L,1),(100L,279L,2),(100L,360L,3),(120L,421L,1),
-      (120L,112L,2),(120L,18L,3),(140L,111L,1),(140L,384L,2),
-      (140L,258L,3),(160L,432L,1),(160L,164L,2),(160L,389L,3),
-      (180L,265L,1),(180L,153L,2),(180L,59L,3),(200L,204L,1),
-      (200L,32L,2),(200L,143L,3),(220L,494L,1),(220L,151L,2),
-      (220L,353L,3),(240L,168L,1),(240L,68L,2),(240L,436L,3),
-      (260L,94L,1),(260L,489L,2),(260L,363L,3),(280L,71L,1),
-      (280L,269L,2),(280L,310L,3),(300L,53L,1),(300L,477L,2),
-      (300L,446L,3),(320L,462L,1),(320L,389L,2),(320L,98L,3),(340L,7L,1),
-      (340L,269L,2),(340L,87L,3),(360L,189L,1),(360L,100L,2),
-      (360L,75L,3),(380L,39L,1),(380L,165L,2),(380L,185L,3),
-      (400L,451L,1),(400L,443L,2),(400L,475L,3),(420L,248L,1),
-      (420L,470L,2),(420L,374L,3),(440L,172L,1),(440L,13L,2),
-      (440L,75L,3),(460L,441L,1),(460L,281L,2),(460L,342L,3),
-      (480L,79L,1),(480L,202L,2),(480L,54L,3))))
-
-  /**
-   * r11 outcome pin for `q_quality_classifier`: the doc_ids the
-   * quantized-trained logistic model predicts NEGATIVE at sf0.01 (the
-   * smaller class — 40 of 500). Same contract as [[SimsearchPins]]:
-   * the quantized-long epoch gradient makes the trained weights a
-   * pure function of fixture content (bit-identical across layouts,
-   * PqPinSpec), the oracle recomputes weak_label INDEPENDENTLY (the
-   * proven-exact qualityScore SQL replay) and pins only the learned
-   * prediction, and the tripwire spec re-derives this list by name.
-   */
-  private[graft] val QualityClassifierPred0: Seq[Long] = Seq(
-    5L, 6L, 16L, 19L, 22L, 26L, 43L, 74L, 79L, 94L, 106L, 107L, 110L,
-    116L, 156L, 158L, 164L, 204L, 214L, 226L, 236L, 254L, 256L, 273L,
-    305L, 327L, 347L, 368L, 384L, 387L, 407L, 418L, 421L, 438L, 455L,
-    457L, 469L, 472L, 481L, 492L)
-
-  /** Oracle for `q_quality_classifier`: weak_label recomputed in SQL
-    * (the qualityScore replay — same expression tree the hash-exact
-    * profile/domain gates already prove), prediction from the pinned
-    * negative set. KEEP THE SUB-SCORE SQL IN LOCKSTEP with
-    * [[textProfileOracle]] and [[domainStatsOracle]] — the three
-    * hand-written replays of TextAnalysis.qualityScore must change
-    * together or exactly one gate's hash breaks. */
-  private def qualityClassifierOracle: String = {
-    val stops = graft.ops.TextAnalysis.StopwordLists.head._2
-      .map(w => s"'$w'").mkString(",")
-    val pred0 = QualityClassifierPred0.mkString(",")
-    s"""WITH f AS (
-       | SELECT doc_id,
-       |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-       |       ELSE len(regexp_split_to_array(lower(trim(text)), '\\s+'))
-       |  END AS n_toks,
-       |  length(regexp_replace(trim(text), '\\s+', '', 'g')) AS n_nospace,
-       |  length(text) - length(regexp_replace(text, '[.,!?;:()"'']', '', 'g'))
-       |    AS n_punct,
-       |  length(text) AS n_chars,
-       |  len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-       |    t -> list_contains([$stops], t))) AS stop_hits
-       | FROM documents),
-       |q AS (
-       | SELECT doc_id,
-       |  round(least(CAST(n_toks AS DOUBLE) / 20.0, 1.0) * 0.4
-       |   + (CASE WHEN (CASE WHEN n_toks > 0
-       |        THEN CAST(n_nospace AS DOUBLE) / n_toks ELSE 0.0 END)
-       |        BETWEEN 3 AND 10 THEN 1.0 ELSE 0.5 END) * 0.2
-       |   + (1.0 - least((CASE WHEN n_chars > 0
-       |        THEN CAST(n_punct AS DOUBLE) / n_chars ELSE 0.0 END)
-       |        * 4.0, 1.0)) * 0.2
-       |   + (CASE WHEN CAST(stop_hits AS DOUBLE)
-       |        / greatest(CAST(n_toks AS DOUBLE), 1.0) >= 0.01
-       |        THEN 1.0 ELSE 0.5 END) * 0.2, 4) AS quality
-       | FROM f)
-       |SELECT doc_id,
-       |  CASE WHEN doc_id IN ($pred0) THEN 0 ELSE 1 END AS quality_pred,
-       |  CAST(quality >= 0.9 AS INT) AS weak_label
-       |FROM q""".stripMargin
-  }
-
-
-  /**
-   * r11 outcome pin for `q_pca`: the whitened projections at sf0.01,
-   * as EXACT shortest-round-trip decimal strings (Double.toString —
-   * both engines' correctly-rounded decimal parse returns the same
-   * bits, so the pinned constants are bit-equal to the computed
-   * doubles). Honesty rests on the same contract as [[SimsearchPins]]:
-   * Pca.train is bit-identical across partition layouts by
-   * construction (order-free quantized-long moments + fixed-sweep
-   * Jacobi — spec-pinned since r8), projection is a pure per-row
-   * kernel, and PqPinSpec's tripwire re-derives every row at the
-   * driver's correctness SF. The eigensolve itself has no SQL
-   * recompute — that necessity argument stands; what changed is that
-   * a PURE function's output is a pinnable property of the fixture.
-   */
-  private[graft] val PcaPins: Seq[(Long, String, String, String, String)] = Seq(
-    (0L, "-0.3952577984913906", "-0.5664853582315074", "0.16819701601003795", "-0.5468978739359448"),
-    (1L, "0.47678188448812836", "-1.1278532537818893", "0.42583407283671953", "0.20107322545648965"),
-    (2L, "-1.6395206474656367", "0.23655167553198062", "-1.2418996605466792", "-0.4412062469736"),
-    (3L, "1.8026555348530549", "0.5690173088347827", "0.5794015592120609", "-0.9492911884918508"),
-    (4L, "0.3505154983355561", "-0.027350686041647473", "0.018357515805419795", "1.361905661324491"),
-    (5L, "1.5982495344858147", "-1.3718895491280592", "-0.8709364019515053", "-0.295659972234138"),
-    (6L, "-0.23661851001890521", "1.1231006599710205", "-0.029106433753749848", "0.8128967041913161"),
-    (7L, "-0.6527970847335571", "-1.1504051957107284", "-0.673643670005193", "2.050164513517384"),
-    (8L, "1.2935392386382865", "1.052302426878401", "-0.24507641698155913", "-0.31659607250169997"),
-    (9L, "-0.5939512577889667", "0.3383535374852315", "-1.2907111475597897", "0.4958421810730433"),
-    (10L, "0.9996292471112737", "-0.977709554767559", "0.1885035613321416", "-1.4340333993577237"),
-    (11L, "0.11026245715853168", "0.3995590458949116", "0.5579220939006974", "-0.9229561315856648"),
-    (12L, "1.0711044486162413", "-0.004538314123669738", "-0.5275217134884573", "-0.986238948247002"),
-    (13L, "0.4390917642499827", "0.7740581735983433", "-0.23773160018969175", "0.8310764353143838"),
-    (14L, "0.8627635766069056", "-0.1780269822352917", "-0.4092882274338447", "-0.22833639962444968"),
-    (15L, "-0.9057895351910794", "-0.4695184727668527", "1.4229657110924772", "-1.2323831364250197"),
-    (16L, "2.407622859984441", "-0.2042928344790953", "0.7400666014993836", "-0.8770080203622983"),
-    (17L, "-1.71006411333083", "0.7654303508952971", "1.7623608281579246", "-0.8188634946923236"),
-    (18L, "0.4812723194049785", "0.363175403359264", "-1.441380461687983", "-1.4760590844889243"),
-    (19L, "-0.9404608705584194", "-2.3006296674440048", "-0.4607457740510132", "-0.14501181269105443"),
-    (20L, "-1.9734545593698014", "1.1064545209485463", "1.261933514356854", "0.2314753133697045"),
-    (21L, "-0.7914889341166251", "0.3405600065400426", "-0.3690455068552639", "-0.27383985885397494"),
-    (22L, "-0.3937075224351417", "-0.8485735216299003", "-0.7535385475564639", "-0.46670640049168216"),
-    (23L, "-0.05685019816064071", "-1.5173240066123241", "0.7710679246322769", "0.13997417881312124"),
-    (24L, "-0.7661707776481665", "-0.560760306338213", "-1.568905230807103", "-0.20653434627407327"),
-    (25L, "1.2619440694007695", "-0.05515763734072629", "-1.1899368572509972", "1.0040524450931576"),
-    (26L, "0.22522589871522172", "-0.9168446070542967", "-0.009617096375655854", "2.10138803104648"),
-    (27L, "0.5903508993515015", "-0.14538471887057663", "-0.8382332553679328", "-0.6247669892247267"),
-    (28L, "-0.3548849425198371", "0.46860123390180053", "0.8007137627173273", "0.9423469585623236"),
-    (29L, "-0.7668321405389366", "0.6658745766850453", "0.6555534415743445", "0.9686263552675819"),
-    (30L, "0.9087167313153344", "0.6196710520513712", "1.086058813926764", "0.1540534024685008"),
-    (31L, "1.1131463878929464", "-0.6894761538531743", "0.37978345689215903", "-0.027391953759977068"),
-    (32L, "-0.19314004393618647", "-0.32341326679733895", "1.0968852427342684", "-0.9731155303574125"),
-    (33L, "0.4555493589881441", "-1.6784290802383135", "-1.1538367511883043", "-0.3767196172429191"),
-    (34L, "-1.133934287795946", "-1.9252344602379818", "-0.7326601441581496", "-0.07454987323951671"),
-    (35L, "2.2392518672482655", "-0.24978322172939463", "0.804964143786653", "-1.251837534905685"),
-    (36L, "-0.13407166513904814", "-1.0296489769034092", "0.31019424953782126", "-0.7672266260711256"),
-    (37L, "0.8019475001303221", "0.38989739751577956", "-0.38580688826946075", "-0.08888532302926268"),
-    (38L, "-0.6828065774162113", "-0.543488476921239", "-0.5482752902235757", "0.9846917249893992"),
-    (39L, "0.9563436485199128", "-1.51802399581435", "-0.5221522440136374", "-1.2957203851080372"),
-    (40L, "0.207158383728652", "1.0956040797473847", "1.1808096780743542", "0.6256822683244819"),
-    (41L, "0.09888295721100512", "-1.5964294433028148", "0.6927586405972341", "-0.09172910247256923"),
-    (42L, "-0.7539512831888436", "0.2738360564697483", "-0.5664188571804297", "0.23567277979906304"),
-    (43L, "0.7932637462752369", "0.5871298359613023", "-0.9349530959500074", "-1.0218199827775185"),
-    (44L, "1.4335580198568718", "-1.063419113822842", "-0.04837443965381668", "-0.7540940082186229"),
-    (45L, "-0.937932466359872", "-1.1184311009277825", "-0.752335934778444", "1.265184481669753"),
-    (46L, "0.3996847567097088", "-1.568617319735721", "1.2196333313457648", "-0.8444314968900251"),
-    (47L, "0.7506769988279652", "1.0989003302399318", "0.680567156341348", "0.3136848734305426"),
-    (48L, "0.21385654259846457", "-2.0672843878882765", "-0.33591564034316485", "1.4938461402541887"),
-    (49L, "-1.7491355310536174", "-0.502894571678153", "-1.6234892418942972", "1.0101633079404704"),
-    (50L, "1.5740389952568496", "0.8787582054356771", "-0.08410187379095253", "-1.602756951806311"),
-    (51L, "0.833111944638094", "-0.43568036419522693", "1.2947367330031072", "-0.5217535991371112"),
-    (52L, "-0.5761878244399846", "-0.036554569599467415", "0.3610203441216989", "-1.1409544792466861"),
-    (53L, "-0.7708395869120821", "2.726170450338968", "-0.7269086272887654", "0.23994237392932774"),
-    (54L, "-2.258462843970308", "-0.8288784732185038", "-1.1727089972147413", "-0.7717275232877883"),
-    (55L, "-1.6988585806485932", "0.12106847256989674", "0.20756960215711745", "1.4361821323569595"),
-    (56L, "0.45039018238519224", "-0.1520554723941597", "0.3116957737886082", "1.1118879400243664"),
-    (57L, "0.9298319539051058", "-0.6158415431873493", "0.5453411854475709", "1.4327179939135442"),
-    (58L, "1.2249783011284443", "-0.2751851681740775", "0.21313173759498708", "-0.3951802584801761"),
-    (59L, "-0.5132746275636629", "-0.42745932084369864", "1.2789412829038598", "0.03960302772095606"),
-    (60L, "-1.1399641102702889", "-0.7045115846765824", "-2.0240282502304865", "0.8937207239900852"),
-    (61L, "1.3883684162752286", "0.6709435422783768", "0.768251132302344", "0.497350197027853"),
-    (62L, "-1.4902338006619131", "0.020181290089323924", "-0.13826950770685187", "0.656181722030202"),
-    (63L, "1.0748550129806107", "-0.1623489328578005", "-0.47226911497655866", "-0.6105955955607328"),
-    (64L, "-0.4572971079973658", "-0.4961332563511725", "-0.29485264854274007", "0.07319445336638267"),
-    (65L, "-0.39725816126293645", "-1.8510370616345897", "-0.4102089362252338", "-0.5616485356767726"),
-    (66L, "-1.19752309824973", "1.0011671080626872", "1.4880840277830882", "-0.4648852501205333"),
-    (67L, "-1.1207517098373945", "-0.7298447886021089", "0.597930159609483", "0.17697638826669676"),
-    (68L, "-1.2495905588672565", "-1.046761100940761", "-0.6692444625488748", "-0.8347482451967733"),
-    (69L, "-0.5558617493155641", "0.2410012290197212", "-1.7383070415639703", "-3.618078716430796"),
-    (70L, "-0.9917649859857696", "1.1566010426415083", "2.4467579084507576", "-0.9889759967043805"),
-    (71L, "-0.7363723560992073", "-0.027497087081569258", "-0.7851666366913237", "0.24710828367248952"),
-    (72L, "-0.5347795238734113", "0.5793305861695681", "2.193599981515976", "0.08361596431060661"),
-    (73L, "0.29806838958432064", "1.06136190642345", "-0.9617947046596288", "-1.313248765510099"),
-    (74L, "0.4727628125880921", "1.2577148702055796", "0.6464249429713792", "0.10774922724004089"),
-    (75L, "-0.18008524543263088", "0.8118401337491339", "-2.8338154470290564", "0.5918958091522465"),
-    (76L, "-0.25626705802465904", "0.4241784019117262", "0.5128108291559017", "0.01864041677654731"),
-    (77L, "-1.4360362091914642", "-0.6140441764099798", "2.0233175238381658", "-1.3332585511749544"),
-    (78L, "-0.4696768595585537", "-0.7974644571302153", "-1.6251323560223565", "-0.30761840598911394"),
-    (79L, "0.36220720939513457", "1.0412565520982966", "2.0356643713486906", "-0.9951839367949306"),
-    (80L, "1.1124985768969717", "-1.4460072166213318", "0.030723427046791874", "-0.1684613983673837"),
-    (81L, "-0.6739315509502747", "1.4658458977102218", "-0.5821296188870494", "0.264932920564366"),
-    (82L, "-1.2865888574347888", "3.1166133846310218", "0.01864279839752066", "-1.442394691187024"),
-    (83L, "0.011015846582876394", "1.3099421155592306", "1.704436171863017", "-0.8103292754118585"),
-    (84L, "-0.6637894601124188", "-1.082788721502944", "1.0548490356525289", "1.3185780843803014"),
-    (85L, "0.14795849913689837", "1.0252489510918459", "-1.6262440980209556", "-0.5066344018284893"),
-    (86L, "0.11336096360235559", "-0.9907852381840622", "-1.0222300269522653", "0.08357038631061438"),
-    (87L, "-1.2127831916166985", "-1.3112245250314882", "-1.3729428524676652", "0.7546497034742808"),
-    (88L, "1.9626419568600362", "0.9997491974612458", "-0.37907155718926633", "0.8884441020841963"),
-    (89L, "0.44962449063130944", "0.29056847957931237", "-2.075263822697087", "0.026427102992628314"),
-    (90L, "-0.6297795277637978", "1.475516773409612", "-0.007395767883640996", "2.162145299247844"),
-    (91L, "-0.20492759824174453", "0.9040567538078899", "0.5318103797788675", "-0.1560280471234505"),
-    (92L, "1.31465348167755", "-0.10042322810542968", "-1.6150389146419697", "0.512376938290384"),
-    (93L, "0.5824352008559138", "0.34467684600103177", "0.6554607733098148", "1.068632384135093"),
-    (94L, "-1.8113052929763824", "0.34106442614921895", "-0.15861866031460517", "-0.004193548687759674"),
-    (95L, "-1.6139140848848337", "-1.6510384516347651", "-0.028723006427370103", "-0.18420771740320607"),
-    (96L, "0.3089196957495057", "0.4027879227612307", "0.5232855279142307", "0.7010174648261522"),
-    (97L, "-1.812447285958553", "0.4811979492666857", "-1.0599173192469162", "-1.1460614674428657"),
-    (98L, "-0.9534312676971848", "1.048288392726206", "-0.9668126749214251", "-1.105925235798576"),
-    (99L, "0.07222036346047979", "0.43085468234112967", "0.3337688050277063", "0.36085958375614846"),
-    (100L, "-0.20937640718802006", "0.05349772308827649", "-1.3039222946628104", "-0.7439148072727846"),
-    (101L, "1.14508788473386", "-1.7362165617548777", "-0.722781575308279", "0.7136505468082301"),
-    (102L, "1.273590423300856", "1.8261840190118248", "1.3584726323933698", "0.8421700072338398"),
-    (103L, "-0.8926240609749511", "-1.5193641833862792", "-0.5240029692487975", "0.878681826327567"),
-    (104L, "0.03123951851180098", "1.460180710119441", "2.327732053695643", "0.8916251529714805"),
-    (105L, "1.4165971518128597", "0.05794911311126914", "1.6457285243366833", "-0.7943822574099387"),
-    (106L, "-1.1466384108400312", "-0.3240561454904614", "0.16714321145286193", "-0.169185854319125"),
-    (107L, "0.0798295373186594", "1.0466825840203233", "0.01754442359943169", "0.6552389201708677"),
-    (108L, "-1.5213163242242789", "-1.0552046800925614", "1.406099025202568", "1.2987106938844104"),
-    (109L, "-1.7836260376620023", "0.16480463023229916", "0.4518853535994132", "0.8521198197513858"),
-    (110L, "-0.1826075949352372", "-0.2585620784010989", "1.887498576427545", "-0.005363013698920548"),
-    (111L, "0.562739112591598", "1.108328980411123", "0.22058219527854384", "-1.2712812482824454"),
-    (112L, "-0.6833888120630572", "-1.107940565996125", "-0.30165206482644885", "-1.3405749593428602"),
-    (113L, "0.35362694495718594", "0.9396338270459895", "-0.5214813681687028", "1.2698851342163566"),
-    (114L, "0.4097758321099466", "-1.5137759239322435", "1.0142527129834233", "1.6383499131912584"),
-    (115L, "-0.2802566075810812", "1.0471401954206907", "1.6253141471284585", "0.3723032058166501"),
-    (116L, "-0.6002638581490342", "1.2911907250018066", "-0.019436379422230397", "1.1692476411871795"),
-    (117L, "-1.808982777572594", "1.1745695614409282", "0.6270710561100729", "-0.59711472732173"),
-    (118L, "0.2662509334700247", "0.5897631043113243", "-0.20010687778993103", "-1.3201252995342625"),
-    (119L, "-0.4460510469639685", "1.2049952640711523", "0.113773080938024", "-1.1141181316521316"),
-    (120L, "-0.579245646693936", "0.7189461019165385", "-0.3611766210458578", "-0.9959961582751667"),
-    (121L, "1.3946174293958091", "0.06405195038797619", "-0.13721254127516033", "0.05840064539178377"),
-    (122L, "0.7887798614542454", "-0.562963837841853", "-0.6702111463233946", "-0.4456848490132697"),
-    (123L, "1.9018373399941892", "-1.4005662460125605", "0.6567694869347437", "1.083084197226961"),
-    (124L, "0.8724980391001906", "-0.7701882504773394", "-0.8707693785094158", "-0.8325107766727031"),
-    (125L, "2.4642364317381458", "-0.4464238041662462", "-0.29522298486952325", "-0.08627274916714138"),
-    (126L, "1.79626986842334", "-0.041989674966903", "1.8290782972717143", "2.0703796317398506"),
-    (127L, "1.5332979899574612", "0.1796531992437761", "-1.2398461354239172", "0.20003605382486878"),
-    (128L, "-1.547199096016933", "-0.692997080659857", "0.18474746412091958", "0.6520509396910592"),
-    (129L, "-0.2604520375350203", "0.8219840338186531", "-0.35521723608595945", "-1.8610837555447308"),
-    (130L, "0.4795788875600141", "1.396695618704329", "0.6193640525897908", "1.082197342754276"),
-    (131L, "0.9549389884134105", "-0.22247268061117223", "0.9204452080308695", "0.32575688814592735"),
-    (132L, "1.0105264279974346", "0.3452699521960612", "0.5186120660155179", "-1.3012691087133226"),
-    (133L, "1.128927762403778", "0.30493277346538356", "-2.773306149559326", "0.09877055172957586"),
-    (134L, "-1.2729096681469443", "0.5917412524581598", "1.5219062938667314", "-0.38159935975033377"),
-    (135L, "-1.7406892044697155", "-0.5187333011736406", "1.0250723893538944", "-2.595854387779667"),
-    (136L, "-1.6524036742845125", "0.10291751882941784", "-0.8443247281398109", "0.29913638027653056"),
-    (137L, "0.48590735263825013", "0.2622365111357102", "-0.5229230469842249", "0.6743145752806904"),
-    (138L, "0.35799040353086375", "-0.8406061829483477", "0.8126049563895851", "-0.707277464882556"),
-    (139L, "0.28303242686576835", "0.46014651599119955", "0.2877246829363646", "-0.7121088516680075"),
-    (140L, "-0.9705621307976446", "-0.09804484237297857", "0.16424124851345243", "-0.7490248072232196"),
-    (141L, "-0.9009615382700947", "-0.8002363935302803", "-0.2329229209080373", "-0.8627943507268161"),
-    (142L, "-0.24943846884223683", "0.19560750726326923", "1.2294921951473334", "0.39671828191437764"),
-    (143L, "-0.03371545138164876", "-0.7848937779504094", "1.8764641757597726", "-2.689066533528547"),
-    (144L, "1.0215980977614485", "-0.5130433616942615", "-0.22167325956332834", "-0.1676217072700067"),
-    (145L, "-1.930185823392362", "0.5174291439008935", "-0.6355368020491288", "-0.17482729865258143"),
-    (146L, "0.7604340430070461", "1.3434110528192824", "-0.8904611594393397", "1.0888372744778771"),
-    (147L, "0.676241045409774", "-0.17291045376818093", "0.578266281864128", "0.7908823261841841"),
-    (148L, "0.21181856937546173", "1.4953743431152684", "-0.09829226376029677", "-0.9240936391132599"),
-    (149L, "0.4149693686460133", "0.19486909395717367", "-1.5361490154640627", "-0.2550320105721898"),
-    (150L, "1.0657393884886959", "-0.298821502724325", "-0.7875568477222916", "-2.0537698754214744"),
-    (151L, "0.16113127556420462", "0.14903233125086957", "-1.2525561426528844", "-0.9071121009445707"),
-    (152L, "0.6155534805946808", "-0.13464813440596043", "-0.736514114259566", "-1.6909544226102011"),
-    (153L, "0.8587172850262528", "-0.5228498468905683", "-0.5991937798846233", "1.7692447849109363"),
-    (154L, "0.0581210744781668", "-1.2976024378543853", "-0.07000611332630952", "-0.5384048301759885"),
-    (155L, "-0.18319455826566108", "0.3896751670077738", "0.49646952335261724", "1.190095390155508"),
-    (156L, "0.6467224604940692", "-0.782718179135108", "-1.3859328243188271", "0.4786538506319654"),
-    (157L, "0.6037591653467274", "-1.6855837427825948", "0.2290788420107853", "-1.780403929755849"),
-    (158L, "1.2627099965238935", "-1.6578880850262485", "0.11480999297405792", "-0.6863989752532109"),
-    (159L, "-0.1915362355017317", "1.119078265284033", "0.10398677254070214", "-0.39475469221926074"),
-    (160L, "-0.16355269159833435", "0.40055479876459377", "0.7872663749611314", "-0.47152103677386703"),
-    (161L, "1.2994089923215622", "-0.29537171424856107", "1.2814395365248035", "-0.1207922944734852"),
-    (162L, "1.1281642472758768", "-1.3985814703685373", "0.12958287584501438", "0.8066393237652618"),
-    (163L, "0.989654012937932", "-0.010138415296845107", "1.1609901851781246", "-0.9508789463251038"),
-    (164L, "0.6551747303277976", "-1.1016436589220773", "0.5580582726635237", "0.9005418523911752"),
-    (165L, "-1.3237207852561863", "-0.2711647316810128", "0.6773361425077886", "0.12757696256039439"),
-    (166L, "0.417295480081568", "0.9834548998811673", "0.3937119273717122", "2.143629705080477"),
-    (167L, "-0.9065454414747601", "0.07811598737356687", "-0.3095041928124262", "0.4365031339273078"),
-    (168L, "-0.03572178659695633", "-0.3823940454219021", "-0.2218134549480959", "1.1774128513857358"),
-    (169L, "-0.14734617627595273", "-0.2327242418920825", "-1.072146841701783", "1.1111525209766784"),
-    (170L, "-0.902950911707334", "-8.659756127139827E-4", "0.4745629889224473", "1.2481695489547069"),
-    (171L, "-0.3987901038260579", "-0.8581176021789495", "2.3792506713251784", "1.3141030519371315"),
-    (172L, "0.6920400644718164", "2.8929036123502208", "-0.10995702127896982", "-0.09658194174450814"),
-    (173L, "0.36628283051065386", "0.7786332624948467", "1.0491937257443331", "-0.9464819519184018"),
-    (174L, "1.2472934327890806", "-0.730039170120867", "1.3805014708264631", "-1.5864951598687373"),
-    (175L, "-1.236788243560173", "0.943293985465499", "0.3286040101436134", "0.7082779139812159"),
-    (176L, "-0.7182340753205065", "-0.980230929706078", "1.4227670397736996", "-1.18749177091543"),
-    (177L, "-0.5045312719225478", "1.4282464397170045", "-1.1006216665555695", "-0.904920458166528"),
-    (178L, "0.5056430197557928", "1.2588727001586228", "-0.48029172499482115", "-0.41010255061394113"),
-    (179L, "-0.9372720466423341", "0.6545460134886575", "-0.3786605792104018", "-0.7311233547080812"),
-    (180L, "0.3667418328828001", "0.5919858278761969", "0.9156547949842211", "0.024680039145329846"),
-    (181L, "0.17812947560498218", "-0.9788141908216568", "-1.3350613435522516", "-1.0659525371516216"),
-    (182L, "0.31459441564256124", "-0.7331120004825258", "-1.6344284150298187", "1.1112970077830144"),
-    (183L, "-0.869646262450238", "1.7151360181249742", "-0.10299345661419468", "0.42694440961735414"),
-    (184L, "-0.14264434291689165", "-1.0064031052802622", "-0.27090089911953685", "0.5938163697291452"),
-    (185L, "-0.9315403474713801", "-2.142043339570287", "-0.5071956317111623", "-0.18046705407822838"),
-    (186L, "-1.8207105117364482", "1.1573085322226933", "-1.9726308678363536", "0.5955442744994145"),
-    (187L, "-1.5964282025015408", "-1.856506927513243", "1.3663377379402744", "-0.8083805883810751"),
-    (188L, "-1.335276856332649", "-0.09427207341038008", "-0.1796541255924873", "-0.3272902964214642"),
-    (189L, "0.40794556322038156", "-0.2675259079989702", "-0.9420765877472104", "1.1830760818999704"),
-    (190L, "-0.9956915313173291", "-1.7234164352302093", "0.496331919432406", "-0.1498806778715876"),
-    (191L, "-0.18195677756021003", "0.28837481626463984", "-0.7133256201684902", "-0.8722636043524598"),
-    (192L, "1.542639914628979", "2.4276631177166217", "0.6117447805492443", "0.2552015634108579"),
-    (193L, "-2.0441448667223985", "-1.105349152503326", "0.9491094952845147", "-0.4096086999181364"),
-    (194L, "0.2362498970824636", "-0.1534016576065299", "-0.41968018249433775", "-0.6049745681414807"),
-    (195L, "1.3435992430791506", "-0.5996568418760021", "-0.017892820311408587", "0.12693182234791334"),
-    (196L, "0.42357437994947955", "-0.10908053234638612", "1.4529098598278434", "0.5438310293473744"),
-    (197L, "-2.4527959927785115", "1.4130379959900357", "1.2607598980566215", "0.05703690876881463"),
-    (198L, "1.6309826897112556", "0.9879562888130032", "-1.7413390937022097", "-1.8482499795081742"),
-    (199L, "0.141648817581039", "-1.1837815192960617", "0.6262688467912404", "2.027960734070653"),
-    (200L, "-0.5921611942999068", "-0.7579377808613728", "0.8833279989989737", "-0.7717004391133264"),
-    (201L, "1.3347127208808043", "-0.07172682623267407", "2.520681201702054", "-0.23625647216917878"),
-    (202L, "-0.8471014766876389", "2.1544380352354464", "-0.0945768743346174", "-0.2015129642028365"),
-    (203L, "1.3358981453644627", "-1.0382861317360066", "-0.5343619537930264", "0.6741040275246744"),
-    (204L, "-0.18858106515279865", "-0.3321653316870882", "1.1209694025900612", "-0.09142045215502567"),
-    (205L, "-0.055888250075034666", "0.07235646360911095", "0.40022411518810097", "0.09919371219488705"),
-    (206L, "-0.07540290253048673", "0.5273829522549593", "-0.3418349686664888", "-1.1131871988387387"),
-    (207L, "0.21287765660976649", "-1.1310252080059662", "0.9583176388981064", "-0.8897307200244784"),
-    (208L, "0.12206840191013384", "0.6079792825468117", "0.5893937231522057", "-1.7513858951948138"),
-    (209L, "-1.2777616134046825", "-1.4337728616062644", "0.26977768633847643", "1.6159727566628121"),
-    (210L, "-0.35093432069082625", "-0.2705856120393684", "2.5963521950014887", "-0.8934065213269109"),
-    (211L, "1.5058355640189762", "-0.8684260436150222", "0.4446847448904542", "0.22424554016332787"),
-    (212L, "0.33381387140353036", "0.08487926272942366", "1.585953431920253", "-0.2349096614380918"),
-    (213L, "-1.766034514178356", "-0.25420787480643753", "0.39107075019076226", "1.06716082692764"),
-    (214L, "-0.7417502451645932", "0.4972671291373533", "0.30443377691806506", "0.1352603127374709"),
-    (215L, "0.37489248303717215", "-0.3220868730896918", "-0.14624362577965158", "1.6302664860146021"),
-    (216L, "1.2684547475214276", "1.2987716689326543", "0.33099014188321285", "0.8249061693536635"),
-    (217L, "0.8114734891876118", "0.2565472136960843", "-0.8665497904465231", "1.111292830784692"),
-    (218L, "0.7009094327700631", "0.07777991494276053", "0.2945206796525469", "1.643629271174786"),
-    (219L, "1.0607731423345397", "0.5578150646713725", "0.23207521741293244", "1.0285725580437965"),
-    (220L, "-0.34797259268574965", "-0.19280836789130204", "-1.012878199336546", "-0.4342478638541953"),
-    (221L, "-0.08250242512027987", "-0.7929754406628174", "-0.0514299043060157", "1.9265350736369968"),
-    (222L, "0.7117899062021547", "-0.17669750725005673", "1.6167670185831138", "-0.6924990719122968"),
-    (223L, "-1.3676779787318467", "0.08982464404236144", "0.7156701830499048", "-0.6472252695378011"),
-    (224L, "0.9130329930170834", "-0.12598298509653966", "1.460374439619471", "-1.241979834049375"),
-    (225L, "-0.3790522090726776", "-0.2466384612114809", "-0.7989721938749726", "1.028528044151109"),
-    (226L, "0.6246733838123621", "-0.04854249679453077", "0.9202757037924334", "0.19364192951996648"),
-    (227L, "0.32772440655057333", "0.482576352905595", "-0.12091586427362234", "0.07043773986488844"),
-    (228L, "-0.05419376895574162", "0.9374880220425612", "-0.778560277166627", "-0.6859063127541105"),
-    (229L, "-0.0071738775305296345", "-1.1649208886806224", "0.47610706320526924", "1.194182782185671"),
-    (230L, "1.126913577592963", "-0.49847361777423005", "-0.11571601468199703", "-0.4684353437541826"),
-    (231L, "1.1635543058851043", "0.9093124811608624", "-0.5103579208721368", "-1.1432147370774464"),
-    (232L, "-0.6474087196080366", "-0.4634102380615474", "0.7572706677519513", "0.4923168568727793"),
-    (233L, "0.7614237969830524", "0.16333015925856315", "0.7574193748570465", "-0.013400654401975784"),
-    (234L, "-1.7558737857696258", "1.276239782857623", "0.8668491457304558", "0.875247075914237"),
-    (235L, "1.114984489223991", "-1.8444432593221052", "1.6134478255446696", "-0.10602750327757705"),
-    (236L, "0.37975320426676296", "-0.36570888854338884", "-0.7798149470586208", "0.31753028663420096"),
-    (237L, "1.2882147380733935", "0.3658365508231442", "-0.5096149918153886", "0.25296693232877915"),
-    (238L, "0.13579506419969478", "2.371653184551193", "1.0230190774446577", "1.1843257265177576"),
-    (239L, "-0.2612791228568478", "-0.23461267744480482", "-0.3022733502348998", "-0.601944371327402"),
-    (240L, "-0.07828647041678717", "-2.2331648350192466", "0.8741602191020068", "-0.5166905123404825"),
-    (241L, "-0.3502938153445977", "-0.7768156995098057", "-0.1974543882241511", "-1.5892817138438973"),
-    (242L, "-0.6200263911612692", "-0.18065019074771174", "-0.15117122135051675", "0.5057197939371029"),
-    (243L, "0.2842517496749128", "1.0288366106747318", "-0.26112896399606866", "0.1408012320879621"),
-    (244L, "0.25424849998315", "-0.7477978987141765", "-0.7511345325736206", "-0.23215332865673452"),
-    (245L, "-0.13367667701862906", "1.8045882533921973", "0.30166030238901465", "0.9679909741184756"),
-    (246L, "-0.533959868212371", "-0.05797718698761899", "-1.1932961953444903", "-1.3027530442441662"),
-    (247L, "-1.9105073615715553", "1.204885136102709", "0.625850310369325", "-0.46997106415785184"),
-    (248L, "0.5232488401941032", "-0.5551028353613193", "-0.46386292830180365", "-1.135356714040185"),
-    (249L, "0.7233493464548071", "0.8344266659040872", "0.7586240476263105", "-0.8139235858653341"),
-    (250L, "-0.7904626836441632", "0.9032464661720957", "-0.1482329938945938", "-0.39026840294178194"),
-    (251L, "0.6117579109705812", "0.5177398807955038", "0.6028245220542219", "-0.009282041378268881"),
-    (252L, "-0.05866705617245584", "2.099771565125693", "0.07860253016385998", "0.6557905982993609"),
-    (253L, "-0.5565849415983085", "-0.4168649542838741", "0.8350986468768634", "0.2779847661619425"),
-    (254L, "2.3849344684139013", "0.8202920865875322", "-1.0445821482290465", "-0.6286545481736211"),
-    (255L, "-0.186030236614559", "-0.5431080508275992", "-0.66055365531337", "-0.16923740390552058"),
-    (256L, "0.8878712295302563", "0.15780647510706142", "-2.5280380632300194", "-0.36717724105980043"),
-    (257L, "-1.0454125328542245", "-0.32106404480580597", "-0.6678927559159484", "-0.23902121354885475"),
-    (258L, "-0.8870797431367118", "-0.346945731547603", "-0.04042567223347917", "-1.0073821660501656"),
-    (259L, "0.07219812859122046", "-0.7630041603991999", "0.926456806296874", "-0.2469772705279695"),
-    (260L, "-2.879666496196719", "-0.28083030792257047", "-0.6160016806027953", "-0.3617516402558093"),
-    (261L, "0.05412922472090088", "-0.4216697863068851", "0.15741306947335076", "-0.5953509468830414"),
-    (262L, "2.508192522133865", "0.2936651119657689", "0.1195118165690629", "1.4731626111171878"),
-    (263L, "0.7025347616391648", "-0.6457143743825009", "-1.9773960108430602", "-1.5271764076751837"),
-    (264L, "-0.7817037718939276", "0.0824485028165903", "1.2957145526083635", "0.3713705468336107"),
-    (265L, "-0.27473274606018444", "2.177354684475719", "0.6080893727784884", "-0.20841318550670893"),
-    (266L, "0.9765726871046675", "-0.46889833391597335", "-1.767688684955914", "-1.256531792661741"),
-    (267L, "0.8406395488913391", "1.0504581276877023", "-0.585875344944314", "0.43361809669744494"),
-    (268L, "-0.044478601829247774", "-0.11390839029320113", "0.7333419521353367", "0.3570202053948298"),
-    (269L, "-0.20669578265064648", "-0.3765820948583254", "-1.669418083874206", "1.4154764786400031"),
-    (270L, "0.8930686735413514", "1.170340812216436", "-1.2188352190903102", "0.5265638271386008"),
-    (271L, "-0.08465967499989689", "0.19883394584639527", "1.1964660977471224", "0.20263075546354198"),
-    (272L, "-0.10038767807363957", "-1.8495182783419697", "0.3499703127881468", "-2.753891201206135"),
-    (273L, "-0.3065188022141158", "-1.109200430230264", "-1.0963713186309483", "-0.433141204348942"),
-    (274L, "0.09372258384960974", "2.653963112654692", "-0.2676774867564839", "0.17067849870064783"),
-    (275L, "-0.8527058687162485", "-1.008497625311567", "-0.8523925797681033", "0.3483915104326564"),
-    (276L, "-0.1550613007265282", "0.756751598797615", "-0.20412785994569038", "0.4053631930118447"),
-    (277L, "-0.008393219065117632", "1.3738617862398184", "-0.07829192251770763", "-0.5926925835594146"),
-    (278L, "-0.1002141173166299", "0.7238883634702747", "-0.3670067793361723", "-1.4173227983661927"),
-    (279L, "0.05480769646758738", "0.11248685492994744", "-0.5892048517465663", "0.6105866925954361"),
-    (280L, "-0.07555798764489342", "1.0797137071602687", "-1.449769480004456", "2.691553274475353"),
-    (281L, "-0.4820607802878798", "0.7059799952324548", "1.2234064461124086", "-0.4303404377054444"),
-    (282L, "2.1573199081877723", "-2.548605782114205", "1.3805926427867703", "-0.24859304664703444"),
-    (283L, "-0.2277571182168854", "0.5647016876606384", "-0.17977213761694558", "0.6036264311201603"),
-    (284L, "0.037862461255810935", "-0.9849928685667615", "1.5497134409613633", "0.9577522129323945"),
-    (285L, "-0.3611642057398176", "-1.7027326551243909", "-0.5446154797337792", "-1.77852681883668"),
-    (286L, "-1.445122294601114", "-0.7807093147310478", "0.7388475823397836", "0.37368372099214275"),
-    (287L, "0.5794990901129986", "1.26481635190322", "-0.07303577709326507", "2.4602064140614224"),
-    (288L, "2.1255147791527635", "0.0017062117105684771", "-0.647409746875748", "1.8062524484234361"),
-    (289L, "1.2604665437949665", "0.8059736647065124", "-0.8518972674180276", "-0.32333757092777404"),
-    (290L, "-0.5202046227906826", "0.5529208363686552", "-0.4658798414465601", "-0.5522646275876187"),
-    (291L, "1.1900654606576941", "2.2177444676595237", "-0.8229622195693859", "2.016699081603741"),
-    (292L, "0.4560783412723542", "-1.1976467055786375", "0.8143309891667981", "1.552267821045122"),
-    (293L, "0.8347214317909902", "0.12900479448535854", "-0.37540544431793266", "-0.7978816902429589"),
-    (294L, "-1.1927255215183816", "-1.5453988263953473", "-1.38199321252548", "0.66335230139774"),
-    (295L, "1.1214788750082993", "-2.258082216272476", "-0.6146568955853997", "-0.9264410282009119"),
-    (296L, "-0.5953655849642436", "-0.26079283030855827", "1.1862000794557446", "0.7648239376362524"),
-    (297L, "0.700954073486699", "1.7229454625174034", "-0.23021984038533091", "-0.19711032438214407"),
-    (298L, "-0.6471606637822966", "0.15460222117407063", "-2.0108180199807206", "1.3386658824309592"),
-    (299L, "0.2620590535025803", "0.7523734420918181", "0.2143426534810101", "0.6432053254550802"),
-    (300L, "0.27360696906196286", "0.9124219405786722", "-0.015405531018872135", "-0.6348020027341956"),
-    (301L, "0.7814732151343429", "0.26645097888329333", "-1.0431151968562644", "-2.4011617336603197"),
-    (302L, "-2.447683696160855", "-0.406841495220555", "1.2418204855805426", "0.6382981188721906"),
-    (303L, "1.1015493698500871", "-0.30430310168864394", "0.7754668027772704", "-0.5755727207551525"),
-    (304L, "-0.11507282780894744", "1.3268303030099609", "0.09288706328740778", "-0.7803646505761154"),
-    (305L, "-0.22180498625563075", "1.4525035926160845", "0.6244288049628287", "-0.18851926863390062"),
-    (306L, "0.4100445856185589", "0.8130243265092593", "0.8093691133970541", "0.30159217014514544"),
-    (307L, "-0.4774567900881387", "0.6004915044232667", "1.0186668110330823", "1.619981914441048"),
-    (308L, "1.2715696085255512", "-0.6552565896086111", "2.2134692374120792", "0.374903911852028"),
-    (309L, "-0.3287706466107342", "0.04222508133382466", "-0.0503637471880824", "0.1190941060791473"),
-    (310L, "-1.1013844018213987", "1.0106485572488226", "0.01921671064595059", "0.43187097248983786"),
-    (311L, "-2.0309887852941846", "-0.6615938836897807", "-0.8388487105974932", "0.2304806394151505"),
-    (312L, "0.29210738911727097", "-0.9767554894008387", "1.5617636360403937", "-1.8872784894827568"),
-    (313L, "-0.46041770453573544", "-0.966214259796926", "-0.36619151640871117", "-0.8821933106094578"),
-    (314L, "1.300925791171173", "1.0336983991272715", "-0.21083882911267934", "1.3038564336173735"),
-    (315L, "0.07967501808446939", "0.8399055707912567", "1.2023076461192945", "-0.015692056754445065"),
-    (316L, "2.1426161013751748", "-0.6123420942077316", "0.053662163132284786", "0.10125704343456854"),
-    (317L, "1.108723431075351", "-0.8605818162377207", "-0.8046158015181174", "0.19800711008019004"),
-    (318L, "-0.7777906515822511", "1.7346820097868332", "0.1951939565835864", "-0.5688597508464458"),
-    (319L, "-1.1907349776412859", "1.2047070079546138", "-0.0930453196393413", "0.7227431642176925"),
-    (320L, "-1.6910363199023999", "1.1291818279202468", "-0.04402279995307921", "-1.1023400649736823"),
-    (321L, "0.009245553771545414", "2.0985913001105834", "-0.8592655475144015", "-0.8399414731039628"),
-    (322L, "1.7275700486905745", "0.7864497587001436", "0.757548924494979", "2.6151218149761815"),
-    (323L, "-1.1611955509776344", "1.453110889083614", "0.3546341852651253", "0.5022749112714618"),
-    (324L, "-0.32950488533807387", "-0.7903244098174711", "0.7067947793100331", "3.2687800356113694"),
-    (325L, "-0.5495894705437449", "1.630546840068008", "-1.5296380298369725", "-1.621354861323127"),
-    (326L, "1.2970316903504162", "4.985293608764581E-5", "-0.319697093752734", "-1.2220143951862035"),
-    (327L, "-0.12340036372606077", "-0.1670022548125577", "0.019977337913455528", "0.022121268477254256"),
-    (328L, "-0.10258201316920515", "1.2609579216049966", "-0.4027654884833668", "-0.5784075836336984"),
-    (329L, "0.26500694009555104", "-0.5389250569576828", "1.398714752977264", "1.8822892721342424"),
-    (330L, "0.2761769904639195", "0.6539253873692485", "0.1448529667758029", "0.13027065513971478"),
-    (331L, "-0.4999016170976189", "0.7826958459250225", "-0.6215900634452949", "-1.722764290530681"),
-    (332L, "-0.011487265609577869", "-0.6308637601847376", "-0.2494420324929311", "2.4285597303431548"),
-    (333L, "-0.5088028798638013", "-0.3677643963797203", "0.07211241718234619", "0.8810261717437581"),
-    (334L, "-0.3039606458055072", "-0.8737623564200429", "-1.6948185576164672", "0.21602341124603033"),
-    (335L, "-0.2746157333930924", "-0.25193194212980846", "-0.16437119255486665", "-2.2389334379027814"),
-    (336L, "-0.3291125943581196", "0.7406540719033131", "0.6677586937475115", "-1.117538652588694"),
-    (337L, "0.5801929211675632", "-0.6021609558943316", "-1.9451963328311825", "-0.3627984657299115"),
-    (338L, "0.9844463166205648", "0.39016060720236306", "1.2765991987240053", "0.24919314140897947"),
-    (339L, "-0.6213172816643575", "-1.1311830749444576", "-0.6372937456601003", "1.47406855524698"),
-    (340L, "-1.3314158546262929", "0.1912843139451269", "-1.699307915981782", "1.2597295675356817"),
-    (341L, "0.41167424597706986", "-0.3278568669614248", "-0.20332980792702926", "0.7622673644258087"),
-    (342L, "0.8364405178520488", "0.7287187166245851", "0.7152875601814482", "0.5217061942068296"),
-    (343L, "1.3345317543032795", "-0.7550251023372854", "-0.35956017345429525", "-2.0504975736256004"),
-    (344L, "0.9248460615393465", "1.797759200918798", "-0.7761219677172956", "0.99164449239104"),
-    (345L, "1.3266212350219613", "-0.2789507701156818", "0.33173235042385524", "0.7016646694546487"),
-    (346L, "0.4831028075058537", "0.20416898561820782", "1.5181811284173088", "-1.0857996064753273"),
-    (347L, "-0.06829051268019551", "-0.23437121285369877", "0.4773849593832985", "-0.0064844634063609225"),
-    (348L, "-1.406021439666865", "1.2599630628156848", "0.1311912692195388", "-0.21468761631075345"),
-    (349L, "1.5185015249629894", "-0.06088677540006794", "0.4908947747383473", "1.0239823674535893"),
-    (350L, "-1.0185835486175796", "1.0461281062364542", "-1.3808102114967722", "-0.007420610218639263"),
-    (351L, "0.9335286771159612", "-0.521958694547673", "-0.4746629112699727", "-0.024351253669677858"),
-    (352L, "-1.4944786446761518", "-0.946599496385359", "0.662413775491014", "-1.0884379829265272"),
-    (353L, "-1.0113665926767614", "0.3317672416346478", "-0.02179620417296734", "0.22315702135285834"),
-    (354L, "-1.7750029537712653", "-0.004370102301711439", "1.9304459985388054", "-0.03660252917812692"),
-    (355L, "-0.8788802637065678", "1.7007145449572567", "0.21912124026486313", "-1.0420470152496377"),
-    (356L, "1.0480090730644371", "0.12780491168380206", "-0.4735583513735712", "-0.8228980766716778"),
-    (357L, "-0.6616168681965902", "-2.2711114354179798", "-0.26105524338534436", "1.1521722823678224"),
-    (358L, "-0.6650361924181692", "-0.3093285638965975", "0.00817817803361913", "-0.5624770225704326"),
-    (359L, "1.334851174472718", "-0.09322497543231108", "-0.12328790626693747", "1.7444137483682864"),
-    (360L, "0.5041429499647749", "0.47327465026951293", "-2.3504543709474763", "-0.33886331462829594"),
-    (361L, "0.15038239161256511", "-2.9712347547489744", "0.5885113820892364", "0.4710632290278314"),
-    (362L, "-0.6149458318118616", "-1.3611609753543972", "-0.5853944590678611", "-0.8394233705494353"),
-    (363L, "0.22259583543410907", "-0.9553227195941061", "0.39975562309188856", "-0.221472900001416"),
-    (364L, "-1.0013805174698722", "0.15877920114631286", "-0.39583996612385924", "-1.303344234383371"),
-    (365L, "-1.5661094150444919", "-0.9296573946954865", "-0.1365569607576042", "-0.5988043358958575"),
-    (366L, "-0.6353757888257237", "-0.8217086109895795", "1.1346243541715155", "0.8020301671368838"),
-    (367L, "-0.650994945261696", "-0.6214294709402083", "-0.21933938288403362", "-0.01775076885647492"),
-    (368L, "-1.514933953190364", "-0.23755758636568786", "1.401067398228973", "0.349781589844262"),
-    (369L, "-1.1328208483295858", "1.3180268218338878", "-0.2797911157215336", "0.7882622416025319"),
-    (370L, "-0.7646221094043886", "0.9159158374374192", "0.2969788158236183", "0.6843640053645974"),
-    (371L, "-0.6638416388567709", "-0.438945234711277", "-0.1321044258736328", "-0.04580765532032544"),
-    (372L, "0.23858899386188567", "-0.1130656762281871", "0.07422145869461322", "0.6854483535986978"),
-    (373L, "1.0505145160220446", "0.13180012211635023", "-0.3653852114425217", "0.9583267728556503"),
-    (374L, "0.18387840989029502", "0.31947486317694207", "-0.7106139149944358", "-0.6963737428352125"),
-    (375L, "-0.8657953585979872", "-1.7220878656435867", "-0.9653394463322432", "-0.08884392444146863"),
-    (376L, "1.4333809806400386", "0.7166045473493516", "0.9118636879709608", "0.35236632619727065"),
-    (377L, "-0.809951850900166", "0.7984833569197085", "0.37085344718650776", "0.6612581582558835"),
-    (378L, "0.04594580053694912", "-0.4323515553593239", "-0.5580259579740775", "-0.1987063411678133"),
-    (379L, "0.9656612521432668", "0.17869229781114557", "0.424436831723932", "-0.831755701123329"),
-    (380L, "-0.28112352926382456", "-0.25155285793542254", "-1.3400883756610353", "-0.6007321148993103"),
-    (381L, "-0.7800116360481827", "-0.07922286279518553", "-0.5324216596615093", "1.7880127478801882"),
-    (382L, "0.04214019816910094", "-0.3923796499650582", "-3.1621417137375016", "0.44447529789833984"),
-    (383L, "-0.2284074775420493", "0.19925602305609044", "1.436081500500535", "0.26259153655990464"),
-    (384L, "-1.3095516079921337", "0.8756136176700454", "-1.0238451411974532", "0.5105600656521063"),
-    (385L, "-1.9931767362602324", "-0.3446108634720755", "1.5357695094406079", "1.6601638824308858"),
-    (386L, "0.14854386151871696", "-1.0116957595774427", "-1.3040190758387227", "-0.47859897718307715"),
-    (387L, "0.028185522791140435", "-0.02709153275084181", "-0.617777991728185", "-0.1876003359156692"),
-    (388L, "0.3968948422123133", "-2.1778593456668887", "0.11647063265772317", "0.5321740311646388"),
-    (389L, "-1.1970310600988312", "0.9680908733235623", "0.3494025837678691", "-1.6644550146740043"),
-    (390L, "-0.09192112396635985", "-0.15050038237281596", "0.8134078404019033", "-0.40415712631153816"),
-    (391L, "2.0080869728284907", "-0.5465113787724949", "0.23899324468249533", "0.6868191644667435"),
-    (392L, "1.1569962491050771", "0.9540127468219262", "1.6091552114895136", "-0.930600129236172"),
-    (393L, "-1.1252952329138635", "0.4741789207688335", "1.4115710518784332", "0.7161326991545516"),
-    (394L, "-1.0695139438564147", "-0.7718149405349897", "0.5484429289594207", "-1.1367578319122678"),
-    (395L, "-0.789092534818527", "1.3345312189686191", "-1.904098084542327", "0.8848683946504833"),
-    (396L, "0.49735813964245495", "0.43638607238841143", "0.23797659647318833", "-1.7616419793971216"),
-    (397L, "0.8012777866870362", "-0.5090782586064136", "-1.7413275946184608", "-0.7668044943991188"),
-    (398L, "1.240181816744936", "-0.6320248062024426", "-0.9088934797001016", "-0.7545104841173431"),
-    (399L, "-0.9742709002446736", "0.03989717473813797", "0.46879183146008", "-1.1422490311537814"),
-    (400L, "-0.5906016668171559", "-0.5229390952610531", "-0.22487300651215741", "1.3544735716447758"),
-    (401L, "-0.23587030002596587", "0.3366555088309387", "0.679846343656508", "0.4235578454740021"),
-    (402L, "2.2428983340603716", "-0.1290726412125524", "1.1151173563746046", "0.932249961836132"),
-    (403L, "-0.32939804015372554", "0.927340326399956", "-1.6653839849052587", "-0.14037379610567818"),
-    (404L, "0.24672336621957208", "-0.451254885774626", "-0.9087755993148675", "-0.6799979858721897"),
-    (405L, "1.0001652050555667", "1.1755856203836352", "0.08806054827467374", "0.22754300344339848"),
-    (406L, "1.3416904330073733", "1.0036792965361228", "0.4225828293893406", "1.4337625501572013"),
-    (407L, "-1.0020434295744054", "0.984553029344883", "0.18252104189503743", "0.905713305803008"),
-    (408L, "-0.5353066802816909", "0.5706665980032735", "-0.6668675953812859", "1.0943588339738946"),
-    (409L, "-0.22150099524211195", "-1.305809405476216", "0.4424993980932426", "-1.0745569296299617"),
-    (410L, "-0.28206914647624093", "-2.1388146705209365", "0.19280904744876984", "-2.104942632792916"),
-    (411L, "-0.33859944717359675", "0.5345909940584159", "-0.8809672559307339", "-0.4864995479321969"),
-    (412L, "-2.2981243622465577", "-1.0774921079305886", "1.445714285647928", "-0.042278332599974995"),
-    (413L, "-0.9251578122615095", "0.5151412366206847", "0.7875860139390765", "0.9280691248789253"),
-    (414L, "1.0398173320082045", "0.9058690753339341", "-1.1472458913917614", "-0.48129099790590524"),
-    (415L, "-0.3221564055952575", "-1.6568898622166335", "-0.5346166354079436", "0.34534824828340077"),
-    (416L, "0.17390944770991099", "0.362265164616467", "0.27420228441005123", "-0.49948754275706386"),
-    (417L, "-0.3185524656062494", "1.4007303395949795", "0.28564497516213955", "-1.934520237079046"),
-    (418L, "-1.0658051365100378", "-0.23959456705434365", "-1.3978174868851039", "0.24222069315923886"),
-    (419L, "1.8349878485263307", "-1.3824485429527544", "0.5176222158811986", "0.2917394663582459"),
-    (420L, "-0.26687158558937957", "-0.7002487769844278", "-0.5025066806083217", "0.4740729664256416"),
-    (421L, "2.047809366539301", "0.5429579791466717", "-0.43574647611440454", "-1.5417155306044708"),
-    (422L, "-0.8858529866152397", "0.38036708797643765", "0.8498293634313486", "-0.18931331098946264"),
-    (423L, "-1.062960120210854", "-0.8337615331972272", "1.2256682496275977", "0.9636056816858959"),
-    (424L, "-1.3287947985851511", "-0.1823510243026489", "2.2790704415945466", "0.010723011877093128"),
-    (425L, "0.6679549253206324", "0.3724018577956248", "-0.3197321019693298", "0.9754567554535986"),
-    (426L, "-0.395497234064359", "0.4030070312807612", "-1.765778497207939", "0.4503869718012639"),
-    (427L, "0.8434949886101897", "0.9428460802761822", "-0.8341229551937022", "0.5350859129088918"),
-    (428L, "1.7916488772380497", "0.2519889615674105", "1.422109475375337", "-0.4223959212375289"),
-    (429L, "0.790219780832495", "0.8389443470156104", "0.7206116633396848", "0.18161655090343687"),
-    (430L, "-0.6429255560254756", "2.128582848736025", "0.3953660546036463", "1.4103538101217108"),
-    (431L, "-0.25130416635272074", "0.9992451944878018", "-0.08719859140621512", "-2.014637983745978"),
-    (432L, "0.29131469998415677", "1.4073864583028366", "0.40941429240629534", "-1.5353653060664911"),
-    (433L, "-0.07329033964524254", "-1.8385193677098235", "-0.817962202075415", "-0.14758794583513435"),
-    (434L, "-0.8114718510981995", "-0.5528442275256766", "-1.5397527013139756", "0.3915463924708302"),
-    (435L, "-1.1883704570791223", "-1.137297679016263", "0.5527524186268327", "0.30205290852159766"),
-    (436L, "-1.6201653155922637", "-2.6806035503634122", "1.2302667990209046", "-0.48356212119347697"),
-    (437L, "1.1347111139191635", "-0.964152529940409", "-1.148651279015714", "-0.631342333142251"),
-    (438L, "0.2431928538017716", "-0.03251054338080918", "-2.7228659020572485", "-1.0863695978974528"),
-    (439L, "0.13465487473320473", "-0.9598954797718322", "0.15695533664816905", "0.7321627221708714"),
-    (440L, "0.04267218017034069", "1.2862354353017607", "-1.3826350277975115", "1.6135301637224488"),
-    (441L, "1.452352232897756", "-0.40648232888387215", "2.0540848255433724", "0.8790525837178382"),
-    (442L, "-0.533252371601218", "-1.829268789967677", "-1.5566707835284828", "-0.6960885201057244"),
-    (443L, "-1.2066751471704458", "-1.4493272096421996", "-0.03989684157212272", "1.6541393544652527"),
-    (444L, "-2.555965760094815", "0.41597836477361494", "0.4898485253378555", "-1.858156497393432"),
-    (445L, "0.5975440471300736", "-0.05577076258610934", "-2.086293875429364", "3.1226056560850717"),
-    (446L, "-0.6329721232230989", "1.0807067342866319", "1.2639386064038989", "0.09531071836619982"),
-    (447L, "-0.30312572954231687", "2.0204928054035527", "0.23720090889810627", "0.760787167574893"),
-    (448L, "-0.9157836148665592", "-0.11888382568696015", "1.158996282178973", "-0.6700373234492294"),
-    (449L, "-0.7067476423801619", "0.31234668871554006", "-1.0987268652163136", "-0.8622959528473167"),
-    (450L, "0.24697616255623533", "0.7509257712369867", "-1.8624004948723425", "0.012743637392628154"),
-    (451L, "1.513628292909485", "-1.9607282027989237", "0.3145774170580363", "0.05751138412818446"),
-    (452L, "0.09415832288212556", "-1.4462839272819343", "0.5199733272911551", "1.1263023845159514"),
-    (453L, "0.668617806362817", "0.42425011823530595", "0.2727881356515957", "-0.24866005659123236"),
-    (454L, "0.41080262503286713", "-1.0689156665988748", "-0.9245649796263515", "0.026415896539820537"),
-    (455L, "2.6313205923983767", "0.09475011275380858", "0.06706136073128886", "-0.5289709043220399"),
-    (456L, "1.3107715820428927", "0.8763674622682524", "-0.013809252303232687", "-1.4966164085213716"),
-    (457L, "-0.9496335504019461", "1.25581968995368", "-0.8314465339500668", "1.0692803819057497"),
-    (458L, "-1.442551883918669", "0.615497165142879", "-0.6780711485685333", "-0.8885592315851165"),
-    (459L, "-0.45425594612699793", "0.7554680282328383", "-0.25481348279753274", "0.9871139599270626"),
-    (460L, "1.2828394794562927", "-4.580317744565041E-4", "2.320505359926543", "0.26501153275397726"),
-    (461L, "1.1351070504523568", "0.5054410682132431", "-0.9060888557848397", "0.08356984650379005"),
-    (462L, "-1.615198087265001", "1.241138246971713", "-1.187466992119905", "-1.6136280838021848"),
-    (463L, "1.2118387285565089", "0.7489377604095537", "1.776753919056133", "-0.8922866739099738"),
-    (464L, "0.9987202548503209", "-0.05243026281724518", "-0.49159260413570344", "0.1223318876032165"),
-    (465L, "-0.45633344350632243", "0.8508616205609679", "-1.6454110663669632", "0.033954331742973604"),
-    (466L, "0.20094113199347635", "-1.217509416727883", "-0.8326282619125771", "1.6203914682422238"),
-    (467L, "-1.4619778557924128", "-2.267741928460202", "0.1125260179480104", "1.2715239632913562"),
-    (468L, "1.9169455552097014", "-0.34504361327072636", "-2.0866729558011414", "-0.20023887459257972"),
-    (469L, "1.873437639163558", "-0.9210109719750948", "1.253057909383224", "-0.286781356338098"),
-    (470L, "-0.33172013715422105", "0.3707387362273236", "1.724593845599384", "0.7588206070194701"),
-    (471L, "-0.9946454086392724", "0.24830241197881242", "-1.9805454014920894", "0.3542624583554371"),
-    (472L, "-0.4133162242400142", "-1.3079581577795196", "-0.9518838715130781", "0.36463220469632085"),
-    (473L, "-0.2339396341284563", "-0.5660665752681242", "0.500045295313594", "2.4252476755544534"),
-    (474L, "0.45883699666583916", "-0.3637924191923725", "-0.6467174853382369", "0.48979318401289573"),
-    (475L, "0.44365202726938213", "0.505685590173143", "-0.06055805364574012", "2.0462961671177045"),
-    (476L, "0.3679228840349494", "0.7742318127738429", "0.7289324872425801", "-1.6680955546748362"),
-    (477L, "0.8084455755271568", "1.1383341393872684", "1.7113333831729733", "-1.6304535512677536"),
-    (478L, "-0.8909594546460443", "0.01933558918447628", "-1.2624900262572916", "-0.9163750151365504"),
-    (479L, "0.1325162241528667", "0.5428437853671749", "-1.4274864768482178", "0.8449648591400761"),
-    (480L, "-1.1211548876785578", "0.16013306735049287", "-0.0932327489996978", "-0.39415909462699106"),
-    (481L, "-0.7335847651810219", "-1.689376069816829", "-1.061592065969895", "0.36677732908447186"),
-    (482L, "-0.18463338263867998", "1.3013151212464884", "0.27430247660343204", "1.6330344661124334"),
-    (483L, "0.7699147423673441", "0.489075687596408", "1.0292008448784766", "-0.7432145276194544"),
-    (484L, "-0.35255642506138185", "-0.8644110185747804", "0.7892434474937575", "-0.4623919810683483"),
-    (485L, "0.6340074175959436", "-1.08449184298285", "0.4686451500347448", "0.6817985221432267"),
-    (486L, "-0.2784339466360965", "-0.9628471838388502", "0.5908368332629184", "0.24221693707696124"),
-    (487L, "1.8601629746982826", "0.8805701914451861", "0.6868566709258145", "0.09884518550776261"),
-    (488L, "0.14845322612959447", "-0.04873320793287029", "1.0539146060135767", "-1.464029530495482"),
-    (489L, "-0.5452457589255846", "-1.2708624174507441", "-1.6790536206957052", "-0.235335494647422"),
-    (490L, "0.2698914097421345", "-0.6767962404574278", "0.8194603580502322", "0.636827230856621"),
-    (491L, "0.3385177257179183", "1.5080176131181091", "0.12327108164368271", "-0.45020966148168506"),
-    (492L, "-2.268281744225092", "0.14254855553681955", "-0.9555526018007937", "0.34922205933243905"),
-    (493L, "1.2878115635355487", "0.4895389124221083", "-0.6550780681946505", "-0.7295473067335073"),
-    (494L, "-0.7283153997161905", "0.7401850255125627", "-0.28207526618294765", "-0.001288210765710697"),
-    (495L, "1.291426291759275", "-0.9662429871503329", "-0.5503206141587855", "-0.3413431006938067"),
-    (496L, "0.6410436065497815", "0.22805799313164193", "0.15345714486203785", "0.3912885053673085"),
-    (497L, "0.3261161521344819", "-1.1154525128175838", "0.9836807522417115", "-1.4836320897050337"),
-    (498L, "-0.33744385387240255", "-1.9951847658084916", "0.454340806736944", "-0.16076012264884412"),
-    (499L, "1.5091473607166532", "-0.64079558840169", "-1.482037133092313", "0.984522188481354"))
-
-  /** VALUES-table oracle for `q_pca` from [[PcaPins]]. */
-  private def pcaPinOracle: String = {
-    val rows = PcaPins.map { case (id, a, b, c, d) =>
-      s"($id,CAST('$a' AS DOUBLE),CAST('$b' AS DOUBLE)," +
-        s"CAST('$c' AS DOUBLE),CAST('$d' AS DOUBLE))"
-    }.mkString(",")
-    s"""SELECT CAST(vec_id AS BIGINT) AS vec_id, pc0, pc1, pc2, pc3
-       |FROM (VALUES $rows) AS t(vec_id, pc0, pc1, pc2, pc3)"""
-      .stripMargin
-  }
-
-
-  /**
-   * r11 outcome pin for `q_unigram_train`: the trained unigram vocab
-   * at sf0.01 — (piece, 6-dp-rounded log-prob as an exact round-trip
-   * decimal string). `trainUnigramLm` is ONE exact integer
-   * word-count aggregate (order-free) followed by driver arithmetic
-   * over a sorted array — bit-deterministic on any partition layout
-   * by construction (its scaladoc's long-standing claim, now
-   * tripwire-pinned). The old rows-only blocker was CROSS-ENGINE:
-   * recomputing the logs in DuckDB differs by a libm ulp; pinning the
-   * JVM's own output sidesteps the recompute entirely.
-   */
-  private[graft] val UnigramTrainPins: Seq[(String, String)] = Seq(
-    ("a", "-3.00526"),
-    ("agg", "-3.659941"),
-    ("b", "-10.463446"),
-    ("batch", "-3.620763"),
-    ("big", "-3.68808"),
-    ("c", "-10.463446"),
-    ("column", "-3.62397"),
-    ("custom", "-3.62397"),
-    ("d", "-7.20535"),
-    ("data", "-3.652202"),
-    ("e", "-3.730044"),
-    ("er", "-3.62397"),
-    ("f", "-3.713515"),
-    ("filter", "-3.625041"),
-    ("g", "-10.463446"),
-    ("group", "-3.6858"),
-    ("h", "-3.730044"),
-    ("hash", "-3.610147"),
-    ("i", "-10.463446"),
-    ("j", "-10.463446"),
-    ("join", "-3.592355"),
-    ("k", "-10.463446"),
-    ("key", "-3.665506"),
-    ("l", "-10.463446"),
-    ("line", "-3.650002"),
-    ("m", "-10.463446"),
-    ("merge", "-3.641249"),
-    ("n", "-10.463446"),
-    ("o", "-10.463446"),
-    ("order", "-3.647806"),
-    ("ort", "-3.692657"),
-    ("p", "-10.463446"),
-    ("part", "-3.6858"),
-    ("q", "-3.693804"),
-    ("r", "-3.693804"),
-    ("row", "-3.61438"),
-    ("s", "-3.692657"),
-    ("scan", "-3.621831"),
-    ("slow", "-3.641249"),
-    ("small", "-3.630414"),
-    ("spark", "-3.683524"),
-    ("st", "-3.713515"),
-    ("stream", "-3.674474"),
-    ("t", "-3.730044"),
-    ("table", "-3.652202"),
-    ("u", "-10.463446"),
-    ("ue", "-3.693804"),
-    ("up", "-7.20535"),
-    ("v", "-10.463446"),
-    ("value", "-3.66439"),
-    ("vector", "-3.647806"),
-    ("w", "-10.463446"),
-    ("window", "-3.676729"),
-    ("y", "-3.693804"))
-
-  /** Oracle for `q_unigram_train` from [[UnigramTrainPins]]. */
-  private def unigramTrainOracle: String = {
-    val rows = UnigramTrainPins.map { case (p, lp) =>
-      s"('${p.replace("'", "''")}',CAST('$lp' AS DOUBLE))"
-    }.mkString(",")
-    s"""SELECT piece, log_prob
-       |FROM (VALUES $rows) AS t(piece, log_prob)""".stripMargin
-  }
-
-  /**
-   * r11 outcome pin for `q_sketch_rollup`: the HLL rollup at sf0.01 —
-   * pure integer outputs (row counts + distinct estimates).
-   * DataSketches HLL registers are order-invariant MAXES, so the
-   * estimate is a pure function of the value set at any layout; the
-   * former "no SQL oracle" row only ever reflected that DuckDB cannot
-   * replay the sketch registers, which pinning does not need.
-   */
-  private[graft] val SketchRollupPins: Seq[(String, Long, Long)] = Seq(
-    ("signup", 2017L, 150L),
-    ("click", 2006L, 150L),
-    ("purchase", 1981L, 150L),
-    ("error", 2014L, 150L),
-    ("view", 1982L, 150L),
-    ("__ALL__", 10000L, 150L))
-
-  /** Oracle for `q_sketch_rollup` from [[SketchRollupPins]]. */
-  private def sketchRollupOracle: String = {
-    val rows = SketchRollupPins.map { case (et, n, d) =>
-      s"('${et.replace("'", "''")}',$n,$d)"
-    }.mkString(",")
-    s"""SELECT event_type, CAST(n_rows AS BIGINT) AS n_rows,
-       |  CAST(approx_distinct AS BIGINT) AS approx_distinct
-       |FROM (VALUES $rows) AS t(event_type, n_rows, approx_distinct)"""
-      .stripMargin
-  }
-
-  /** VALUES-table oracle for a [[SimsearchPins]] gate. */
-  private def simsearchPinOracle(name: String): String = {
-    val rows = SimsearchPins(name)
-      .map { case (q, n, r) => s"($q,$n,$r)" }.mkString(",")
-    s"""SELECT CAST(query_id AS BIGINT) AS query_id,
-       |  CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       |  CAST(rank AS INT) AS rank
-       |FROM (VALUES $rows) AS t(query_id, neighbor_id, rank)"""
-      .stripMargin
-  }
-
-  private def rtbfEverywhereOracle: String = {
-    val k1 = 1.2; val b = 0.75
-    val qt = Bm25Queries.flatMap { case (qid, q) =>
-      q.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-        .map(t => s"(CAST($qid AS BIGINT), '$t')")
-    }.mkString(", ")
-    val termSet = Bm25Queries
-      .flatMap(_._2.trim.toLowerCase.split("\\s+")).filter(_.nonEmpty)
-      .distinct.map(t => s"'$t'").mkString(", ")
-    s"""WITH base AS (
-       | SELECT doc_id,
-       |  string_split_regex(lower(trim(text)), '\\s+') AS toks,
-       |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-       |       ELSE len(string_split_regex(lower(trim(text)), '\\s+')) END AS dl
-       | FROM documents WHERE doc_id % 4 = 0 AND NOT doc_id % 9 = 4),
-       |stats AS (
-       | SELECT CAST(count(*) AS DOUBLE) AS n,
-       |  CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-       | FROM base),
-       |qt(qid, term) AS (VALUES $qt),
-       |tf AS (
-       | SELECT doc_id, dl, term, count(*) AS tf
-       | FROM (SELECT doc_id, dl, unnest(toks) AS term FROM base)
-       | WHERE term IN ($termSet)
-       | GROUP BY doc_id, dl, term),
-       |dfs AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-       |scored AS (
-       | SELECT q.qid, t.doc_id,
-       |  sum(CAST(round(
-       |    round(ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5)), 7)
-       |    * ((t.tf * CAST(${k1 + 1.0} AS DOUBLE)) /
-       |       (t.tf + $k1 * (1.0 - $b + ($b * t.dl) / s.avgdl))), 6)
-       |   AS DECIMAL(18,6))) AS sc
-       | FROM tf t
-       | CROSS JOIN stats s
-       | JOIN dfs d ON t.term = d.term
-       | JOIN qt q ON t.term = q.term
-       | GROUP BY q.qid, t.doc_id)
-       |SELECT 'bm25:' || CAST(qid AS VARCHAR) AS surface, doc_id AS key,
-       |  CAST(sc AS DOUBLE) AS n
-       |FROM scored
-       |QUALIFY row_number() OVER (PARTITION BY qid
-       |                           ORDER BY sc DESC, doc_id) <= 10
-       |UNION ALL SELECT 'cat:docs', doc_id, CAST(1.0 AS DOUBLE)
-       | FROM documents WHERE doc_id % 4 = 0 AND NOT doc_id % 9 = 4
-       |UNION ALL SELECT 'cat:vecs', vec_id, CAST(1.0 AS DOUBLE)
-       | FROM embeddings WHERE NOT vec_id % 9 = 4
-       |UNION ALL SELECT 'minhash', doc_id, CAST(0.0 AS DOUBLE)
-       | FROM documents WHERE doc_id % 4 = 0 AND doc_id % 9 = 4
-       |UNION ALL SELECT 'minhash_ctl', doc_id, CAST(1.0 AS DOUBLE)
-       | FROM documents WHERE doc_id % 4 = 0 AND doc_id % 9 = 5
-       |  AND text IS NOT NULL AND trim(text) <> ''
-       |UNION ALL SELECT 'ann', vec_id, CAST(0.0 AS DOUBLE)
-       | FROM embeddings WHERE vec_id % 9 = 4
-       |UNION ALL SELECT 'ann_ctl', vec_id, CAST(1.0 AS DOUBLE)
-       | FROM embeddings WHERE vec_id % 9 = 5
-       |UNION ALL SELECT 'hnsw', vec_id, CAST(0.0 AS DOUBLE)
-       | FROM embeddings WHERE vec_id % 9 = 4
-       |UNION ALL SELECT 'hnsw_ctl', vec_id, CAST(1.0 AS DOUBLE)
-       | FROM embeddings WHERE vec_id % 9 = 5""".stripMargin
-  }
-
-  /** q_labelprop oracle — Graphs.labelPropagation unrolled: the same
-    * symmetrized multigraph, per-round neighbor-label counts with the
-    * same (count desc, label asc) argmax, `iterations` rounds. */
-  /** q_quantile_rollup oracle — the DDSketch bucket/walk/decode chain
-    * in SQL, literals (ln γ, midpoint factor) interpolated from the
-    * SAME driver formulas the operator uses (the problink-weights
-    * convention: zero cross-engine transcendental drift). */
-  private def quantileRollupOracle: String = {
-    val lnG = graft.operators.Audits.ddLnGamma(0.02).toString
-    val mid = graft.operators.Audits.ddMidFactor(0.02).toString
-    s"""WITH raw AS (
-       | SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents
-       | WHERE n_chars IS NOT NULL),
-       |b AS (
-       | SELECT lang,
-       |  CASE WHEN v > 0 THEN CAST(ceil(round(ln(v)/$lnG, 6)) AS INT)
-       |       WHEN v = 0 THEN -1048576
-       |       ELSE -2097152 - CAST(ceil(round(ln(-v)/$lnG, 6)) AS INT)
-       |  END AS qb,
-       | count(*) AS cnt
-       | FROM raw GROUP BY 1, 2),
-       |wl AS (
-       | SELECT lang, qb, cnt FROM b
-       | UNION ALL
-       | SELECT '__ALL__', qb, CAST(sum(cnt) AS BIGINT) FROM b GROUP BY 2),
-       |c AS (
-       | SELECT lang, qb,
-       |  CAST(sum(cnt) OVER (PARTITION BY lang ORDER BY qb
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |    AS cum,
-       |  CAST(sum(cnt) OVER (PARTITION BY lang) AS BIGINT) AS n
-       | FROM wl),
-       |p AS (
-       | SELECT lang, q, min(qb) AS qb, max(n) AS n_rows
-       | FROM c CROSS JOIN (VALUES (CAST(0.5 AS DOUBLE)),
-       |   (CAST(0.9 AS DOUBLE)), (CAST(0.99 AS DOUBLE))) t(q)
-       | WHERE cum >= greatest(1, ceil(q * n))
-       | GROUP BY 1, 2)
-       |SELECT lang, q, n_rows,
-       | CASE WHEN qb > -1048576
-       |        THEN round(exp(CAST(qb AS DOUBLE) * $lnG) * $mid, 6)
-       |      WHEN qb = -1048576 THEN 0.0
-       |      ELSE -round(exp(CAST(-2097152 - qb AS DOUBLE) * $lnG)
-       |        * $mid, 6)
-       | END AS approx_value
-       |FROM p""".stripMargin
-  }
-
-  /** q_stream_quantiles oracle — the DDSketch bucket/walk/decode chain
-    * of [[quantileRollupOracle]] with the 6h event-time window start
-    * as the dimension (epoch-aligned integer floor division, exactly
-    * Spark's `window()` alignment). */
-  private def streamQuantilesOracle: String = {
-    val lnG = graft.operators.Audits.ddLnGamma(0.02).toString
-    val mid = graft.operators.Audits.ddMidFactor(0.02).toString
-    s"""WITH raw AS (
-       | SELECT (epoch_us(ts) // 21600000000) * 21600000000
-       |    AS win_start_us,
-       |  CAST(value AS DOUBLE) AS v
-       | FROM events WHERE value IS NOT NULL),
-       |b AS (
-       | SELECT win_start_us,
-       |  CASE WHEN v > 0 THEN CAST(ceil(round(ln(v)/$lnG, 6)) AS INT)
-       |       WHEN v = 0 THEN -1048576
-       |       ELSE -2097152 - CAST(ceil(round(ln(-v)/$lnG, 6)) AS INT)
-       |  END AS qb,
-       |  count(*) AS cnt
-       | FROM raw GROUP BY 1, 2),
-       |c AS (
-       | SELECT win_start_us, qb,
-       |  CAST(sum(cnt) OVER (PARTITION BY win_start_us ORDER BY qb
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |    AS cum,
-       |  CAST(sum(cnt) OVER (PARTITION BY win_start_us) AS BIGINT) AS n
-       | FROM b),
-       |p AS (
-       | SELECT win_start_us, q, min(qb) AS qb, max(n) AS n_rows
-       | FROM c CROSS JOIN (VALUES (CAST(0.5 AS DOUBLE)),
-       |   (CAST(0.9 AS DOUBLE))) t(q)
-       | WHERE cum >= greatest(1, ceil(q * n))
-       | GROUP BY 1, 2)
-       |SELECT win_start_us, q, n_rows,
-       | CASE WHEN qb > -1048576
-       |        THEN round(exp(CAST(qb AS DOUBLE) * $lnG) * $mid, 6)
-       |      WHEN qb = -1048576 THEN 0.0
-       |      ELSE -round(exp(CAST(-2097152 - qb AS DOUBLE) * $lnG)
-       |        * $mid, 6)
-       | END AS approx_value
-       |FROM p""".stripMargin
-  }
-
-  /** q_ppr oracle — personalizedPageRank's 3 iterations unrolled, the
-    * q_pagerank oracle shape with the seed-indicator restart term;
-    * e-value and 1−d are interpolated from the SAME driver arithmetic
-    * the operator uses (IEEE 1.0−0.85 is NOT 0.15 — the computed
-    * double round-trips through its shortest-repr literal). */
-  private def pprOracle: String = {
-    val seeds = Seq(-1L, -2L, -3L)
-    val eVal = BigDecimal(1.0 / seeds.size)
-      .setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val restart = (1.0 - 0.85).toString
-    def ind(alias: String) =
-      s"""CASE WHEN $alias.node IN (${seeds.mkString(", ")})
-         |      THEN CAST($eVal AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END"""
-        .stripMargin
-    val rounds = (1 to 3).map { i =>
-      s"""c$i AS (SELECT ed.dst,
-         |        sum(CAST(round(r."rank" / ed.deg, 12) AS DECIMAL(20,12)))
-         |          AS m
-         |       FROM ed JOIN r${i - 1} r ON r.node = ed.src GROUP BY ed.dst),
-         |r$i AS (SELECT n.node, round(CAST($restart AS DOUBLE) *
-         |         (${ind("n")}) + CAST(0.85 AS DOUBLE) *
-         |         coalesce(CAST(c$i.m AS DOUBLE), CAST(0.0 AS DOUBLE)), 7)
-         |           AS "rank"
-         |       FROM nodes n LEFT JOIN c$i ON c$i.dst = n.node)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (
-       | SELECT -CAST(l_suppkey AS BIGINT) AS src,
-       |        CAST(l_partkey AS BIGINT) AS dst
-       | FROM lineitem),
-       |nodes AS (SELECT DISTINCT node FROM
-       | (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-       |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-       |ed AS (SELECT e.src, e.dst, d.deg FROM e
-       |       JOIN deg d ON d.src = e.src),
-       |r0 AS (SELECT n.node, ${ind("n")} AS "rank" FROM nodes n),
-       |$rounds
-       |SELECT node, "rank" FROM r3""".stripMargin
-  }
-
-  /** q_dataset_card oracle — totals/blanks/tokens plus the DDSketch
-    * grand-total quantile chain over char lengths, metric names as
-    * literals on both sides (deriving "p50" from q·100 crosses a
-    * double→int cast whose rounding differs by engine). */
-  private def datasetCardOracle: String = {
-    val lnG = graft.operators.Audits.ddLnGamma(0.02).toString
-    val mid = graft.operators.Audits.ddMidFactor(0.02).toString
-    s"""WITH base AS (
-       | SELECT coalesce(CAST(lang AS VARCHAR), '_null') AS lang2,
-       |  CAST(length(coalesce(text, '')) AS BIGINT) AS chars,
-       |  CASE WHEN text IS NULL OR trim(coalesce(text, '')) = ''
-       |       THEN 1 ELSE 0 END AS blank,
-       |  CASE WHEN text IS NULL OR trim(coalesce(text, '')) = '' THEN 0
-       |       ELSE len(string_split_regex(lower(trim(coalesce(text, ''))),
-       |                '\\s+')) END AS toks
-       | FROM documents),
-       |tot AS (
-       | SELECT CAST(count(*) AS BIGINT) AS n,
-       |  CAST(sum(blank) AS BIGINT) AS blanks,
-       |  CAST(sum(chars) AS BIGINT) AS chars,
-       |  CAST(sum(toks) AS BIGINT) AS toks
-       | FROM base),
-       |b AS (
-       | SELECT CASE WHEN v > 0 THEN CAST(ceil(round(ln(v)/$lnG, 6)) AS INT)
-       |        WHEN v = 0 THEN -1048576
-       |        ELSE -2097152 - CAST(ceil(round(ln(-v)/$lnG, 6)) AS INT)
-       |   END AS qb,
-       |  count(*) AS cnt
-       | FROM (SELECT CAST(chars AS DOUBLE) AS v FROM base) GROUP BY 1),
-       |c AS (
-       | SELECT qb,
-       |  CAST(sum(cnt) OVER (ORDER BY qb ROWS BETWEEN UNBOUNDED PRECEDING
-       |    AND CURRENT ROW) AS BIGINT) AS cum,
-       |  CAST(sum(cnt) OVER () AS BIGINT) AS nn
-       | FROM b),
-       |p AS (
-       | SELECT q, min(qb) AS qb FROM c
-       | CROSS JOIN (VALUES (CAST(0.5 AS DOUBLE)),
-       |                    (CAST(0.95 AS DOUBLE))) t(q)
-       | WHERE cum >= greatest(1, ceil(q * nn)) GROUP BY 1),
-       |dec AS (
-       | SELECT q,
-       |  CASE WHEN qb > -1048576
-       |         THEN round(exp(CAST(qb AS DOUBLE) * $lnG) * $mid, 6)
-       |       WHEN qb = -1048576 THEN 0.0
-       |       ELSE -round(exp(CAST(-2097152 - qb AS DOUBLE) * $lnG)
-       |         * $mid, 6)
-       |  END AS av
-       | FROM p)
-       |SELECT 'corpus/n_docs' AS metric, CAST(n AS DOUBLE) AS "value"
-       |FROM tot
-       |UNION ALL SELECT 'corpus/blank_docs', CAST(blanks AS DOUBLE) FROM tot
-       |UNION ALL SELECT 'corpus/total_chars', CAST(chars AS DOUBLE) FROM tot
-       |UNION ALL SELECT 'corpus/total_tokens', CAST(toks AS DOUBLE) FROM tot
-       |UNION ALL SELECT 'corpus/mean_doc_tokens',
-       |  CAST(toks AS DOUBLE) / CAST(n AS DOUBLE) FROM tot
-       |UNION ALL SELECT 'lang/' || lang2 || '/docs',
-       |  CAST(count(*) AS DOUBLE) FROM base GROUP BY lang2
-       |UNION ALL SELECT 'length/chars_p50', av FROM dec WHERE q = 0.5
-       |UNION ALL SELECT 'length/chars_p95', av FROM dec WHERE q = 0.95"""
-      .stripMargin
-  }
-
-  private def labelPropOracle: String = {
-    val iters = 2
-    val rounds = (1 to iters).map { i =>
-      s"""c$i AS (
-         | SELECT e.u, l.label, count(*) AS c
-         | FROM e JOIN l${i - 1} l ON e.v = l.node
-         | GROUP BY 1, 2),
-         |l$i AS (
-         | SELECT u AS node, label FROM (
-         |  SELECT u, label,
-         |   row_number() OVER (PARTITION BY u
-         |     ORDER BY c DESC, label ASC) AS rn
-         |  FROM c$i)
-         | WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e0 AS (
-       | SELECT -CAST(l_suppkey AS BIGINT) AS u,
-       |        CAST(l_partkey AS BIGINT) AS v
-       | FROM lineitem),
-       |e AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
-       |l0 AS (SELECT DISTINCT u AS node, u AS label FROM e),
-       |$rounds
-       |SELECT node, label FROM l$iters""".stripMargin
-  }
-
-  /** q_kmeans oracle — KMeans.fit unrolled to SQL: the same init
-    * (4 smallest ids), the same sequential left-fold squared-L2
-    * (`list_reduce` folds (t1+t2)+t3…, identical to Spark's
-    * `aggregate` starting at 0.0 since 0.0+t1 == t1), the same
-    * exact 2^-20-quantized integer mean sums, the same (dist, c)
-    * tie-break. Two update rounds, then the final assignment. */
-  private def kmeansOracle: String = {
-    val D = 64
-    val K = 4
-    def dist(e: String, cv: String) =
-      s"list_reduce(list_transform(generate_series(1, $D), " +
-        s"j -> (CAST($e[j] AS DOUBLE) - $cv[j]) * " +
-        s"(CAST($e[j] AS DOUBLE) - $cv[j])), (a, b) -> a + b)"
-    def assign(name: String, centTab: String) =
-      s"""$name AS (
-         | SELECT vec_id, c, d FROM (
-         |  SELECT vec_id, c, d,
-         |   row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn
-         |  FROM (SELECT e.vec_id, i.c,
-         |         ${dist("e.embedding", "i.cv")} AS d
-         |        FROM embeddings e CROSS JOIN $centTab i))
-         | WHERE rn = 1)""".stripMargin
-    def update(mName: String, cName: String, aTab: String, prevTab: String) =
-      s"""$mName AS (
-         | SELECT a.c, j.i,
-         |  CAST(sum(CAST(floor(CAST(e.embedding[j.i] AS DOUBLE)
-         |    * 1048576.0) AS BIGINT)) AS DOUBLE)
-         |   / CAST(count(*) AS DOUBLE) / 1048576.0 AS v
-         | FROM $aTab a JOIN embeddings e USING (vec_id)
-         | CROSS JOIN (SELECT unnest(generate_series(1, $D)) AS i) j
-         | GROUP BY a.c, j.i),
-         |$cName AS (
-         | SELECT p.c, list(coalesce(m.v, p.cv[p.i]) ORDER BY p.i) AS cv
-         | FROM (SELECT c, unnest(generate_series(1, $D)) AS i, cv
-         |       FROM $prevTab) p
-         | LEFT JOIN $mName m ON m.c = p.c AND m.i = p.i
-         | GROUP BY p.c)""".stripMargin
-    s"""WITH init AS (
-       | SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c,
-       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-       | FROM (SELECT vec_id, embedding FROM embeddings
-       |       ORDER BY vec_id LIMIT $K)),
-       |${assign("a0", "init")},
-       |${update("m1", "c1", "a0", "init")},
-       |${assign("a1", "c1")},
-       |${update("m2", "c2", "a1", "c1")},
-       |${assign("a2", "c2")}
-       |SELECT vec_id, CAST(c AS INT) AS cluster, d AS dist
-       |FROM a2""".stripMargin
-  }
-
-  /** q_zorder oracle — the Morton interleave spelled out as 42 bit
-    * terms OR-ed together (DuckDB's >> & << | operate on BIGINT);
-    * generated from the same `bits` constant the query uses, so both
-    * sides compute the identical integer. */
-  private def zOrderOracle: String = {
-    val terms = (0 until 21).flatMap(i => Seq(
-      s"(((l_partkey >> $i) & 1) << ${2 * i})",
-      s"(((l_suppkey >> $i) & 1) << ${2 * i + 1})"))
-    // single line: a '|' inside stripMargin's body would be eaten
-    s"SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, " +
-      s"CAST(${terms.mkString(" | ")} AS BIGINT) AS zval FROM lineitem"
-  }
-
-  /** q_rrf oracle — bm25 top-20 (the proven-exact pipeline) fused with
-    * a document-length prior ranking; fusion terms ride DECIMAL. */
-  private def rrfOracle: String = {
-    val qids = Bm25Queries.map(_._1).distinct
-      .map(q => s"(CAST($q AS BIGINT))").mkString(", ")
-    s"""WITH bm AS (${bm25OracleTopK(20)}),
-       |bmr AS (
-       | SELECT qid, doc_id, row_number() OVER (PARTITION BY qid
-       |   ORDER BY score DESC, doc_id) AS rnk
-       | FROM bm),
-       |t20 AS (SELECT doc_id, n_chars FROM documents
-       |        ORDER BY n_chars, doc_id LIMIT 20),
-       |qids(qid) AS (VALUES $qids),
-       |pr AS (
-       | SELECT q.qid, t.doc_id, row_number() OVER (PARTITION BY q.qid
-       |   ORDER BY t.n_chars, t.doc_id) AS rnk
-       | FROM t20 t CROSS JOIN qids q),
-       |u AS (
-       | SELECT qid, doc_id,
-       |  CAST(round(CAST(1.0 AS DOUBLE) / (60 + rnk), 12)
-       |    AS DECIMAL(18,12)) AS t
-       | FROM (SELECT * FROM bmr UNION ALL SELECT * FROM pr)),
-       |f AS (SELECT qid, doc_id, sum(t) AS s FROM u GROUP BY qid, doc_id)
-       |SELECT qid, doc_id, CAST(s AS DOUBLE) AS rrf_score FROM f
-       |QUALIFY row_number() OVER (PARTITION BY qid
-       |  ORDER BY s DESC, doc_id) <= 10""".stripMargin
-  }
-
-  /** q_domain_stats oracle — the quality sub-scores mirror
-    * textProfileOracle's proven-exact forms; sums ride DECIMAL(12,4)
-    * (order-free exact) and the hugeint count-sum casts to BIGINT.
-    * KEEP IN LOCKSTEP with [[textProfileOracle]] and
-    * [[qualityClassifierOracle]] (three replays of qualityScore). */
-  private def domainStatsOracle: String = {
-    val stops = graft.ops.TextAnalysis.StopwordLists.head._2
-      .map(w => s"'$w'").mkString(",")
-    s"""WITH p AS (
-       | SELECT doc_id,
-       |  CASE WHEN doc_id % 3 = 0 THEN
-       |   text || ' see https://sub' || CAST(doc_id % 7 AS VARCHAR)
-       |        || '.example-site.org/p/' || CAST(doc_id AS VARCHAR) || ' end'
-       |  ELSE text END AS t
-       | FROM documents),
-       |f AS (
-       | SELECT doc_id,
-       |  regexp_extract(t, 'https?://([A-Za-z0-9.-]+)', 1) AS domain,
-       |  regexp_split_to_array(lower(trim(t)), '\\s+') AS toks,
-       |  CASE WHEN t IS NULL OR trim(t) = '' THEN 0
-       |       ELSE len(regexp_split_to_array(lower(trim(t)), '\\s+')) END AS n_toks,
-       |  length(t) - length(regexp_replace(t, '[.,!?;:()"'']', '', 'g')) AS n_punct,
-       |  length(t) AS n_chars,
-       |  length(regexp_replace(trim(t), '\\s+', '', 'g')) AS n_nospace
-       | FROM p),
-       |q AS (
-       | SELECT doc_id, domain, n_toks,
-       |  least(CAST(n_toks AS DOUBLE) / 20.0, 1.0) AS len_score,
-       |  CASE WHEN (CASE WHEN n_toks > 0
-       |              THEN CAST(n_nospace AS DOUBLE) / n_toks ELSE 0.0 END)
-       |            BETWEEN 3 AND 10 THEN 1.0 ELSE 0.5 END AS shape_score,
-       |  1.0 - least((CASE WHEN n_chars > 0
-       |               THEN CAST(n_punct AS DOUBLE) / n_chars
-       |               ELSE 0.0 END) * 4.0, 1.0) AS punct_score,
-       |  CASE WHEN CAST(len(list_filter(toks, x -> list_contains([$stops], x)))
-       |            AS DOUBLE) / greatest(CAST(n_toks AS DOUBLE), 1.0) >= 0.01
-       |       THEN 1.0 ELSE 0.5 END AS stop_score
-       | FROM f)
-       |SELECT domain, count(*) AS n_docs,
-       | CAST(sum(CAST(round(len_score * 0.4 + shape_score * 0.2
-       |       + punct_score * 0.2 + stop_score * 0.2, 4) AS DECIMAL(12,4)))
-       |      AS DOUBLE) AS sum_quality,
-       | CAST(sum(n_toks) AS BIGINT) AS n_toks
-       |FROM q GROUP BY domain""".stripMargin
-  }
-
-  /** q_text_profile oracle — mirrors TextAnalysis.profile expression by
-    * expression (same normalization, same fold order, same rounding). */
-  private def textProfileOracle: String = {
-    val stopword = (words: Seq[String]) =>
-      s"len(list_filter(toks, t -> list_contains([${words.map(w => s"'$w'").mkString(",")}], t)))"
-    val langs = TextAnalysis.StopwordLists
-    val n = langs.size
-    val scoreDefs = langs.zipWithIndex.map { case ((lang, words), i) =>
-      s"${stopword(words)} * 8 + ${n - i} AS s_$lang"
-    }.mkString(", ")
-    val bestExpr = langs.map(l => s"s_${l._1}").mkString("greatest(", ", ", ")")
-    val langCase = langs.map { case (lang, _) =>
-      s"WHEN s_$lang = best THEN '$lang'"
-    }.mkString(" ")
-    val allZero = langs.map(l => s"s_${l._1} <= $n").mkString(" AND ")
-    s"""WITH base AS (
-       | SELECT doc_id, text,
-       |  lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm,
-       |  regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-       | FROM documents),
-       |counts AS (
-       | SELECT doc_id, text, norm, toks,
-       |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0 ELSE len(toks) END AS n_tokens,
-       |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS n_subwords,
-       |  length(text) - length(regexp_replace(text, '[.,!?;:()"'']', '', 'g')) AS n_punct,
-       |  $scoreDefs
-       | FROM base),
-       |feat AS (
-       | SELECT doc_id, length(text) AS n_chars, n_tokens, n_subwords,
-       |  CASE WHEN n_tokens > 0 THEN
-       |    round(CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE) / n_tokens, 4)
-       |  ELSE 0.0 END AS mean_token_len,
-       |  CASE WHEN length(text) > 0 THEN
-       |    round(CAST(n_punct AS DOUBLE) / length(text), 4)
-       |  ELSE 0.0 END AS punct_ratio,
-       |  $bestExpr AS best, $allZero AS all_zero,
-       |  ${langs.map(l => s"s_${l._1}").mkString(", ")},
-       |  CASE WHEN n_tokens > 0
-       |   THEN CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE) / n_tokens
-       |   ELSE 0.0 END AS mtl_raw,
-       |  CASE WHEN length(text) > 0
-       |   THEN CAST(n_punct AS DOUBLE) / length(text) ELSE 0.0 END AS pr_raw,
-       |  ${stopword(langs.head._2)} AS en_hits, toks, norm, text
-       | FROM counts),
-       |quality AS (
-       | SELECT *,
-       |  least(CAST(n_tokens AS DOUBLE) / 20.0, 1.0) AS len_score,
-       |  CASE WHEN mtl_raw >= 3 AND mtl_raw <= 10 THEN 1.0 ELSE 0.5 END AS shape_score,
-       |  1.0 - least(pr_raw * 4.0, 1.0) AS punct_score,
-       |  CASE WHEN CAST(en_hits AS DOUBLE) /
-       |        greatest(CAST(n_tokens AS DOUBLE), 1.0) >= 0.01
-       |       THEN 1.0 ELSE 0.5 END AS stop_score
-       | FROM feat)
-       |SELECT doc_id, n_chars, n_tokens, n_subwords, mean_token_len, punct_ratio,
-       | CASE WHEN all_zero THEN 'unknown' $langCase ELSE 'unknown' END AS lang_pred,
-       | round(len_score * 0.4 + shape_score * 0.2 + punct_score * 0.2
-       |       + stop_score * 0.2, 4) AS quality,
-       | CASE WHEN length(norm) = 0 THEN NULL ELSE
-       |  list_min(list_transform(
-       |    generate_series(1, greatest(1, length(norm) - 7)),
-       |    i -> md5(substring(norm, i, 8)))) END AS fingerprint
-       |FROM quality""".stripMargin
-  }
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.build).toMap
+
+  /** DuckDB dialect, over the same parquet tables; the rows-only gates
+    * have no entry. */
+  val oracleSql: Map[String, String] =
+    gates.flatMap(g => g.oracle.map(g.name -> _)).toMap
+
+  /** `SPARK_GRAFT_ONLY`: an optional comma-separated list of gate names
+    * for targeted local runs; unset, every gate runs. */
+  private[graft] val only: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+
+  /** The gates `Bench` and `Verify` run: those named in
+    * `SPARK_GRAFT_ONLY`, or all of them. */
+  private[graft] def selected: Seq[Gate] =
+    gates.filter(g => only.forall(_.contains(g.name)))
 }

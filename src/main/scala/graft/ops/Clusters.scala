@@ -104,7 +104,8 @@ object Clusters {
                              idBCol: String, maxRounds: Int,
                              driverFinishLimit: Long): DataFrame = {
     val idType = pairs.schema(idACol).dataType
-    if (Dispatch.integralId(pairs, idACol) && Dispatch.integralId(pairs, idBCol)) {
+    if (Dispatch.integralType(idType) &&
+        Dispatch.integralType(pairs.schema(idBCol).dataType)) {
       val e0 = canon(pairs.select(col(idACol).cast("long").as("u"),
         col(idBCol).cast("long").as("v")))
       ccLongs(e0, maxRounds, driverFinishLimit)

@@ -2,18 +2,17 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Shared predicates for the adaptive-path dispatchers (the dense
   * tiled paths key documents by a long-cast id, so only integral id
   * types can take them — checked in one place instead of per
   * operator). */
 private[graft] object Dispatch {
-  def integralId(df: DataFrame, idCol: String): Boolean =
-    df.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
+  def integralType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
 
   /** Spread a CPU-heavy narrow kernel across the session's cores when
     * the upstream scan cannot (optimization-guide §2.5, input skew:

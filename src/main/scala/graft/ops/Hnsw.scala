@@ -336,12 +336,12 @@ object Hnsw {
     val spark = corpus.sparkSession
     import spark.implicits._
     val idType = corpus.schema(idCol).dataType
-    require(Similarity.integralType(idType),
+    require(Dispatch.integralType(idType),
       s"hnswTopK requires an integral id column, got $idType: the " +
         "shard key, level hash and candidate merge all ride the long " +
         "id, and a lossy cast would merge distinct keys")
     val qIdType = queries.schema(idCol).dataType
-    require(Similarity.integralType(qIdType),
+    require(Dispatch.integralType(qIdType),
       s"hnswTopK requires an integral QUERY id column, got $qIdType " +
         "(same long-cast contract as the corpus side)")
     require(Similarity.atMost(queries, queryCollectLimit),
@@ -681,7 +681,7 @@ object Hnsw {
     val spark = queries.sparkSession
     import spark.implicits._
     val qIdType = queries.schema(idCol).dataType
-    require(Similarity.integralType(qIdType),
+    require(Dispatch.integralType(qIdType),
       s"HNSW probe requires an integral query id column, got $qIdType")
     require(Similarity.atMost(queries, limit),
       s"HNSW probe broadcasts queries into every shard: more than " +

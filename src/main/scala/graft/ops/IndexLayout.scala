@@ -32,7 +32,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
  * long cast, which yields null — matching nothing, silently — for any
  * other type, and a later compaction would then discard the purge
  * intent. Save, append and tombstone all refuse such ids
- * ([[requireIntegralId]]).
+ * ([[requireIntegralId]]), and an append widens a narrower integral id
+ * to the stored one ([[Family.appendable]]).
  *
  * A MISSING component is never read as "validly empty" (the
  * [[Layout.readParquetIfData]] contract): after an atomicSwap crash
@@ -88,12 +89,33 @@ object IndexLayout {
     private[ops] def rosterIdField(spark: SparkSession,
                                    path: String): StructField =
       idField(spark.read.parquet(s"$path/$roster").schema)
+
+    /** `batch` ready to append to the index at `path`: its id must be
+      * integral, and a narrower one widens to the type the roster's
+      * footer stores. Parquet readers take one footer's type for the
+      * whole directory, so an INT32 id file beside INT64 ones fails a
+      * later read. A wider id is refused (narrowing would wrap); an
+      * index holding no data files stores no type and takes the
+      * batch's. */
+    private[ops] def appendable(batch: DataFrame, idCol: String,
+                                path: String, op: String): DataFrame = {
+      requireIntegralId(batch, idCol, op)
+      val got = batch.schema(idCol).dataType
+      Layout.readParquetIfData(batch.sparkSession, s"$path/$roster")
+        .map(r => idField(r.schema).dataType).filter(_ != got)
+        .fold(batch) { stored =>
+          require(got.defaultSize < stored.defaultSize,
+            s"$op: id column $idCol is $got, wider than the $stored " +
+              s"the $name index stores")
+          batch.withColumn(idCol, col(idCol).cast(stored))
+        }
+    }
   }
 
   /** Refuse a non-integral id column: see the object note. */
   private[ops] def requireIntegralId(df: DataFrame, idCol: String, op: String): Unit = {
     val dt = df.schema(idCol).dataType
-    require(Similarity.integralType(dt),
+    require(Dispatch.integralType(dt),
       s"$op requires an integral id column, got $dt: the delete " +
         "lifecycle matches ids through a long cast, which yields null " +
         "(matches nothing, silently) for any other type")

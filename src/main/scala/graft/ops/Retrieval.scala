@@ -296,7 +296,7 @@ object Retrieval {
   def appendBm25Index(docs: DataFrame, idCol: String, textCol: String,
                       path: String,
                       termNdvPerBucket: Long = DefaultTermNdv): Unit = {
-    IndexLayout.requireIntegralId(docs, idCol, "appendBm25Index")
+    val batch = Bm25Family.appendable(docs, idCol, path, "appendBm25Index")
     val spark = docs.sparkSession
     import spark.implicits._
     val (nDocs0, sumDl0, nBuckets) = spark.read.schema(StatsSchema)
@@ -304,7 +304,7 @@ object Retrieval {
       .select(col("n_docs").cast("long"), col("sum_dl").cast("long"),
         col("n_buckets").cast("int"))
       .as[(Long, Long, Int)].head()
-    val base = docs.select(col(idCol),
+    val base = batch.select(col(idCol),
       TextAnalysis.tokens(col(textCol)).as("_toks"),
       TextAnalysis.tokenCount(col(textCol)).cast("long").as("dl"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -163,15 +163,6 @@ object Similarity {
     df.limit(cap + 1).count() <= limit
   }
 
-  private[ops] def integralType(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-
   /** Bounded-heap global top-k over a scored frame: groups `scored` by
     * `query_id` and keeps the k best `neighbor_id`s by (`cosine` DESC,
     * id ASC) via the [[org.apache.spark.sql.graftshim.TopKPairsAgg]]
@@ -242,7 +233,7 @@ object Similarity {
       }
     val scored = c.join(qSide, col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", cosine(col("__qv"), col("__cv")))
-    if (integralType(idType)) heapTopK(scored, k, idType)
+    if (Dispatch.integralType(idType)) heapTopK(scored, k, idType)
     else {
       // non-integral ids can't ride the long-payload heap; the window
       // path is still map-side bounded via Catalyst's WindowGroupLimit.
@@ -360,7 +351,7 @@ object Similarity {
     // ranks assigned AFTER the exclusion (dense 1..k per query); the
     // bounded-heap aggregate replaces the per-query window — same
     // (cosine DESC, id ASC) order, O(k) state, map-side combine
-    if (integralType(idType)) heapTopK(scored, k, idType)
+    if (Dispatch.integralType(idType)) heapTopK(scored, k, idType)
     else {
       // null cosines dropped — heap-path parity (see bruteForceTopK)
       val w = Window.partitionBy(col("query_id"))
@@ -408,7 +399,7 @@ object Similarity {
     // (map-side partial heaps); labels rejoin from the broadcast seed
     // frame after selection
     val topk =
-      if (integralType(sidType))
+      if (Dispatch.integralType(sidType))
         scored
           .filter(col("__cos").isNotNull)
           .groupBy(col(idCol))
@@ -746,7 +737,7 @@ object Similarity {
       .filter(!isnan(col("cosine")))
     // bounded-heap ranking (O(k) state, map-side combine) — the same
     // funnel-free shape as bruteForceTopK
-    if (integralType(idType)) heapTopK(scored, k, idType)
+    if (Dispatch.integralType(idType)) heapTopK(scored, k, idType)
     else {
       // null cosines dropped — heap-path parity (see bruteForceTopK)
       val w = Window.partitionBy(col("query_id"))
@@ -774,7 +765,7 @@ object Similarity {
    */
   def cosineNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, blocks: Int = 32): DataFrame = {
-    val idIntegral = Dispatch.integralId(corpus, idCol)
+    val idIntegral = Dispatch.integralType(corpus.schema(idCol).dataType)
     if (!idIntegral) {
       val nonNull = corpus.filter(col(vecCol).isNotNull)
       val a = nonNull.select(col(idCol).as("id_a"),
@@ -1047,13 +1038,13 @@ object Similarity {
    */
   def appendIvfPqIndex(newRows: DataFrame, idCol: String, vecCol: String,
                        path: String): Unit = {
-    IndexLayout.requireIntegralId(newRows, idCol, "appendIvfPqIndex")
+    val batch = IvfPqFamily.appendable(newRows, idCol, path, "appendIvfPqIndex")
     val spark = newRows.sparkSession
     val cb = loadPqCodebook(spark, s"$path/codebook")
     val (cellIds, centroids) =
       collectCentroids(
         spark.read.schema(CellsSchema).parquet(s"$path/cells"))
-    val assigned = newRows.filter(col(vecCol).isNotNull)
+    val assigned = batch.filter(col(vecCol).isNotNull)
       .withColumn("cell_id", assignKernel(cellIds, centroids)(col(vecCol)))
     val codes = pqEncode(assigned, idCol, vecCol, cb,
       keep = Seq("cell_id", vecCol))

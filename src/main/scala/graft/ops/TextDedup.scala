@@ -21,7 +21,7 @@ import graft.functions.FastHash
  *    branch-predictable merge-intersection per candidate pair.
  *    (Collision odds per pair ≈ |A|·|B|/2^64 — immaterial.)
  *  - Pairwise work is always blocked (LSH bands / hash buckets /
- *    length bands) so nothing is O(n²) at 100 TB, and per-document prep
+ *    prefix filters) so nothing is O(n²) at 100 TB, and per-document prep
  *    is persisted before any self-join so it cannot be re-evaluated per
  *    candidate pair.
  *
@@ -453,7 +453,7 @@ object TextDedup {
     // (one cheap agg) and only collect the exact vocabulary when it
     // plausibly fits.
     val vocabOpt = Dispatch.denseVocab(toks, col("__h"),
-      Dispatch.integralId(prepared, idCol), denseVocabLimit)
+      Dispatch.integralType(prepared.schema(idCol).dataType), denseVocabLimit)
     vocabOpt match {
       case Some(vocab) =>
         val orig = prepared.schema(idCol).dataType
@@ -597,63 +597,6 @@ object TextDedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /**
-   * Exact n-gram Jaccard dedup with deterministic length-band blocking
-   * (no probabilistic LSH): pairs are compared iff their normalized
-   * lengths fall within one band of each other — a pair with Jaccard ≥ t
-   * has size ratio ≥ t, so true pairs are never missed for sane
-   * (t, bandWidth) and the result is fully oracle-expressible in plain
-   * SQL. The size-ratio prefilter (implied by the threshold) skips the
-   * merge kernel for hopeless pairs.
-   *
-   * NOTE: prefer [[ngramJaccardPairs]] — length bands carry no signal
-   * on same-length corpora (measured 290 s vs 2 s at sf0.1), and the
-   * band constraint changes the result set (cross-band pairs are
-   * excluded by DESIGN here, not missed). Kept for callers who want
-   * exactly the banded semantics.
-   */
-  def ngramJaccardPairsBanded(df: DataFrame, idCol: String, textCol: String,
-                        shingleLen: Int = 5, threshold: Double = 0.8,
-                        bandWidth: Int = 32, saltBuckets: Int = 32): DataFrame = {
-    val prepared = df
-      .select(col(idCol), shingleHashes(col(textCol), shingleLen).as("__sh"),
-        floor(length(lower(regexp_replace(trim(col(textCol)), "\\s+", " "))) / bandWidth)
-          .as("__band"))
-      .filter(size(col("__sh")) > 0)
-      .persist()
-    // compare within band b and neighbor band b+1 (covers ±1)
-    val expanded = prepared
-      .withColumn("__probe", explode(array(col("__band"), col("__band") + 1)))
-    // length bands are few and fat (classic self-join skew): salt the
-    // left side by id, replicate the right side across salts — the same
-    // pair set, split saltBuckets ways so every core gets work
-    val left = expanded.select(col(idCol).as("id_a"),
-      col("__sh").as("__sa"), col("__band").as("__ba"), col("__probe"),
-      pmod(col(idCol), lit(saltBuckets)).as("__salt"))
-    val right = expanded.select(col(idCol).as("id_b"),
-      col("__sh").as("__sb"), col("__band").as("__bb"), col("__probe"))
-      .withColumn("__salt", explode(array((0 until saltBuckets).map(lit(_)): _*)))
-    left
-      // shuffle-hash: partition the pair work by (probe, salt); a
-      // broadcast join would run every pair on the streamed side's
-      // few cached partitions
-      .hint("shuffle_hash")
-      .join(right, Seq("__probe", "__salt"))
-      .filter(col("id_a") < col("id_b") &&
-        // count each pair once: in the band-pair where probe = max band
-        col("__probe") === greatest(col("__ba"), col("__bb")))
-      // size prefilter implied by the threshold: J ≥ t ⇒ min/max ≥ t,
-      // checked with the same division compare as the final filter
-      // (multiplicative t·max rounds differently and can drop
-      // exact-boundary pairs)
-      .filter(least(size(col("__sa")), size(col("__sb"))).cast("double") /
-        greatest(size(col("__sa")), size(col("__sb"))) >= lit(threshold))
-      .withColumn("jaccard", jaccardAtLeastKernel(threshold)(col("__sa"), col("__sb")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      .distinct()
-  }
-
   // ---- Cross-corpus contamination --------------------------------------
 
   /**
@@ -687,7 +630,8 @@ object TextDedup {
       .union(rPrep.select(explode(col("__sh")).as("__h")))
     // the dense grid long-casts BOTH sides' ids
     val vocabOpt = Dispatch.denseVocab(toks, col("__h"),
-      Dispatch.integralId(tPrep, idCol) && Dispatch.integralId(rPrep, idCol),
+      Dispatch.integralType(tPrep.schema(idCol).dataType) &&
+        Dispatch.integralType(rPrep.schema(idCol).dataType),
       denseVocabLimit)
     val scores = vocabOpt match {
       case Some(vocab) => denseContainment(tPrep, rPrep, idCol, vocab, blocks)
@@ -751,7 +695,8 @@ object TextDedup {
     val toks = tPrep.select(explode(col("__sh")).as("__h"))
       .union(rPrep.select(explode(col("__sh")).as("__h")))
     val vocabOpt = Dispatch.denseVocab(toks, col("__h"),
-      Dispatch.integralId(tPrep, idCol) && Dispatch.integralId(rPrep, idCol),
+      Dispatch.integralType(tPrep.schema(idCol).dataType) &&
+        Dispatch.integralType(rPrep.schema(idCol).dataType),
       denseVocabLimit)
     val orig = tPrep.schema(idCol).dataType
     val pairs = vocabOpt match {
@@ -967,7 +912,7 @@ object TextDedup {
     val pieces0 = maxHamming + 1
     val blockingSelective =
       (1L << math.min(62, 64 / pieces0)) > 2L * pieces0
-    val takeDense = Dispatch.integralId(sigs, idCol) && {
+    val takeDense = Dispatch.integralType(sigs.schema(idCol).dataType) && {
       val n = sigs.count()
       n <= denseLimit && (n <= 5000 || !blockingSelective)
     }
@@ -1063,8 +1008,8 @@ object TextDedup {
     // same adaptive dispatch as ngramJaccardPairs: a small shared
     // shingle universe makes prefixes structurally useless (every
     // prefix token is corpus-common) while bitmap tiles are cheap
-    val idOk = Dispatch.integralId(preparedB, "__bid") &&
-      Dispatch.integralId(preparedC, "__cid")
+    val idOk = Dispatch.integralType(preparedB.schema("__bid").dataType) &&
+      Dispatch.integralType(preparedC.schema("__cid").dataType)
     val toksU = preparedB.select(explode(col("__sh")).as("__h"))
       .unionAll(preparedC.select(explode(col("__sh")).as("__h")))
     val pairs =
@@ -1282,7 +1227,7 @@ object TextDedup {
   def appendMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                          path: String,
                          bhNdvPerGroup: Long = DefaultBhNdv): Unit = {
-    IndexLayout.requireIntegralId(df, idCol, "appendMinhashIndex")
+    val batch = MinhashFamily.appendable(df, idCol, path, "appendMinhashIndex")
     val spark = df.sparkSession
     import spark.implicits._
     val (shingleLen, numHashes, bands, seed) =
@@ -1292,7 +1237,7 @@ object TextDedup {
           col("seed").cast("long"))
         .as[(Int, Int, Int, Long)].head()
     val rows = numHashes / bands
-    val prepared = df
+    val prepared = batch
       .select(col(idCol), shingleHashes(col(textCol), shingleLen).as("__shh"))
       .filter(size(col("__shh")) > 0)
       .withColumn("__bands",

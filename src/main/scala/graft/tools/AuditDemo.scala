@@ -1,12 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives the DatabaseAudit surface over real parquet (demo/evidence). */
 object AuditDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Gateway.localSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val customer = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     val rep = graft.operators.DatabaseAudit.audit(customer,

@@ -1,15 +1,10 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Clusters, TextDedup}
 object CCProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Gateway.localSession(32)
     val dir = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     def tme[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

@@ -1,14 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints whether trigram_similarity runs inside WholeStageCodegen
   * (checked over a real scan — a local relation is collapsed to a
   * LocalTableScan with no codegen stage at all). */
 object CodegenCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Gateway.localSession(2)
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.Functions.register(spark)
     val df = spark.read

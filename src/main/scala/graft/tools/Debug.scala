@@ -1,14 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object Debug {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Gateway.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     args.drop(1).foreach { q =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.TextDedup
@@ -9,13 +8,8 @@ import graft.ops.TextDedup
   * (candidate volume vs verify cost) — profiling harness, not a gate. */
 object NgramProfile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Gateway.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val threshold = 0.5
     val df = spark.read.parquet(s"$dir/documents.parquet")

@@ -1,12 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 object PqTune {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = graft.Gateway.localSession(8)
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")

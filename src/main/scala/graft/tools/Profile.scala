@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage wall/task breakdown for one or more gates under the EXACT
   * Bench session shape (local[$SPARK_GRAFT_CPUS], shuffle.partitions =
@@ -24,15 +23,8 @@ object Profile {
     var inRecords: Long = 0L, var outRecords: Long = 0L)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Gateway.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     try spark.read.parquet(s"$dir/region.parquet").count()
     catch { case _: Throwable => }

@@ -142,15 +142,8 @@ object Scaling {
     val dirBig = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val queries = args.lift(2).map(_.split(",").toSeq)
       .getOrElse(DefaultQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Gateway.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // warmup both datasets' footers + codegen
     try {
       spark.read.parquet(s"$dirSmall/region.parquet").count()

@@ -92,24 +92,13 @@ object Stress {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts has shipped as TIMESTAMP(NANOS) in some fixture
-      // generations; keep the legacy conf so that layout reads as long
-      // (we don't touch the ts column here either way)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 13 legs of caller-owned persists accumulate in unified memory;
-      // the default 4096-row reader batches over leg 14's shingle-set
-      // ARRAY column then fail to reserve buffer space ("Cannot reserve
-      // additional contiguous bytes"). Halving the batch keeps the
-      // vectorized reader comfortable for ~2 KB rows.
-      .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Gateway.localSession(32)
+    // 13 legs of caller-owned persists accumulate in unified memory;
+    // the default 4096-row reader batches over leg 14's shingle-set
+    // ARRAY column then fail to reserve buffer space ("Cannot reserve
+    // additional contiguous bytes"). Quartering the batch keeps the
+    // vectorized reader comfortable for ~2 KB rows.
+    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "1024")
     spark.sparkContext.addSparkListener(new FunnelListener)
     import spark.implicits._
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -256,7 +245,7 @@ object Stress {
     val nDocs = docs10.count()
     tme(f"bm25 10x ($nDocs%,d docs, 3 queries)") {
       val hits = graft.ops.Retrieval.bm25TopK(docs10, "doc_id", "text",
-        graft.SparkEntry.Bm25Queries, k = 10)
+        graft.gates.IndexGates.Bm25Queries, k = 10)
       val n = hits.count()
       assert(n == 30, s"expected 30 bm25 hits, got $n")
     }

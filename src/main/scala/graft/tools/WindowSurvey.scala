@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Window, WindowGroupLimit}
 import org.apache.spark.sql.graftshim.PlanProbe
 
@@ -21,13 +20,7 @@ object WindowSurvey {
     }.isDefined
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Gateway.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dirS = sys.env.getOrElse("SURVEY_SMALL", "/root/testdata/sf0.001")
     val dirB = sys.env.getOrElse("SURVEY_BIG", "/root/testdata/sf0.01")

@@ -1,14 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off derivation helper for the WordPiece vocab pin: trains on
   * the fixture and prints the induced vocab as Scala source. */
 object WpDerive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Gateway.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val docs = spark.read.parquet(s"$dir/documents.parquet")

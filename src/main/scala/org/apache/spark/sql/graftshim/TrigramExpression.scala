@@ -57,7 +57,7 @@ object TrigramColumns {
 /**
  * SparkSessionExtensions installer: makes the native functions
  * available without a Gateway — e.g.
- * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+ * `withExtensions(new GraftExtensions)` on a session builder, or
  * `spark.sql.extensions=org.apache.spark.sql.graftshim.GraftExtensions`.
  */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {

@@ -399,4 +399,45 @@ class IndexDeleteLifecycleSpec extends SparkSpec {
         s"${f.name}: a refused call must leave the index serving")
     }
   }
+
+  /** (file, id column, its type) for every parquet file under `dir`
+    * that has an id column, read from each file's own footer. HNSW nodes store the id as
+    * `id`; the other families keep the caller's name. */
+  private def idTypesPerFile(dir: String, idCol: String) = {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try files.iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+      .map(f => f -> spark.read.parquet(f).schema)
+      .flatMap { case (f, sc) =>
+        sc.fields.find(c => c.name == idCol || c.name == "id")
+          .map(c => (f, c.name, c.dataType)) }
+    finally files.close()
+  }
+
+  test("an Int-id append to a Long-saved index writes only INT64 id " +
+    "files in every family; a wider id is refused") {
+    val base = fresh("idxwiden")
+    families.foreach { f =>
+      val dir = s"$base/${f.name}"
+      f.save(f.rows(f.corpus), dir)
+      f.append(f.rows(Seq(100L))
+        .withColumn(f.idCol, col(f.idCol).cast("int")), dir)
+      val files = idTypesPerFile(dir, f.idCol)
+      assert(files.exists { case (file, c, _) =>
+        !spark.read.parquet(file).filter(col(c) === 100L).isEmpty
+      }, s"${f.name}: the appended id is in no file")
+      files.foreach { case (file, _, dt) =>
+        assert(dt == org.apache.spark.sql.types.LongType,
+          s"${f.name}: $file stores its id as $dt")
+      }
+      // HNSW stores every id as a long whatever the input type
+      if (f.name != "hnsw") {
+        val narrow = s"$dir.int"
+        f.save(f.rows(f.corpus)
+          .withColumn(f.idCol, col(f.idCol).cast("int")), narrow)
+        intercept[IllegalArgumentException](f.append(f.rows(Seq(100L)), narrow))
+      }
+    }
+  }
 }

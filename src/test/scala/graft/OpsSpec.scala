@@ -82,12 +82,6 @@ class OpsSpec extends SparkSpec {
     assert(out.length == 1)
     // shingles: 12 each, 11 shared → J = 11/13
     assert(math.abs(out.head._3 - 11.0 / 13.0) < 1e-9)
-    // banded variant computes the identical jaccard
-    val banded = TextDedup.ngramJaccardPairsBanded(df, "id", "t",
-      shingleLen = 5, threshold = 0.1, bandWidth = 32)
-      .as[(Long, Long, Double)].collect()
-    assert(banded.length == 1 &&
-      math.abs(banded.head._3 - 11.0 / 13.0) < 1e-9)
   }
 
   test("dense and prefix jaccard paths return identical pairs") {

@@ -512,24 +512,4 @@ class PlanAuditSpec extends SparkSpec {
     })
     assert(below.nonEmpty, "bloom UDF filter is not below the join")
   }
-
-  test("query inventory source has no silently-shadowed duplicate keys") {
-    // Map literals dedupe duplicate keys silently (last wins): adding a
-    // second "q_x" entry replaces the first with NO failure anywhere —
-    // the gate count just stays flat. Parse the source to catch it.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val cut = src.indexOf("def oracleSql")
-    def keys(s: String) =
-      "\"(q_\\w+)\" ->".r.findAllMatchIn(s).map(_.group(1)).toSeq
-    val qKeys = keys(src.substring(0, cut))
-    val oKeys = keys(src.substring(cut))
-    for ((ks, what) <- Seq((qKeys, "queries"), (oKeys, "oracleSql"))) {
-      val dups = ks.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
-      assert(dups.isEmpty, s"duplicate $what keys shadow earlier entries: $dups")
-    }
-    assert(oKeys.toSet.subsetOf(qKeys.toSet),
-      s"oracle entries without a query: ${oKeys.toSet -- qKeys.toSet}")
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
 /**
- * Guards behind the r11 PQ/OPQ outcome pins (`SparkEntry.SimsearchPins`
+ * Guards behind the r11 PQ/OPQ outcome pins (`gates.VectorGates.SimsearchPins`
  * → the five `q_simsearch_{pq,ivfpq,indexed,append,opq}` oracles):
  *
  *  - `pqTrain`'s centroid updates accumulate order-free QUANTIZED
@@ -71,7 +71,7 @@ class PqPinSpec extends SparkSpec {
       .score(labeled01, "doc_id", "text", model)
       .filter(col("quality_pred") === 0)
       .select(col("doc_id")).as[Long].collect().sorted.toSeq
-    assert(pred0 == SparkEntry.QualityClassifierPred0,
+    assert(pred0 == gates.TextGates.QualityClassifierPred0,
       s"negative set moved off its pin (${pred0.size} ids) — " +
         "re-derive and update QualityClassifierPred0 WITH this tripwire")
     spark.catalog.clearCache()
@@ -85,7 +85,7 @@ class PqPinSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), (1 until r.length).map(r.getDouble)))
       .sortBy(_._1).toSeq
-    val pinned = SparkEntry.PcaPins.map { case (id, a, b, c, d) =>
+    val pinned = gates.VectorGates.PcaPins.map { case (id, a, b, c, d) =>
       (id, Seq(a, b, c, d).map(java.lang.Double.parseDouble))
     }.sortBy(_._1)
     assert(got.size == pinned.size)
@@ -113,14 +113,14 @@ class PqPinSpec extends SparkSpec {
       .collect().map(r => (r.getString(0),
         java.lang.Double.toString(r.getDouble(1))))
       .sortBy(_._1).toSeq
-    assert(gotUg == SparkEntry.UnigramTrainPins.sortBy(_._1),
+    assert(gotUg == gates.TokenGates.UnigramTrainPins.sortBy(_._1),
       "q_unigram_train moved off its pin — re-derive and update " +
         "UnigramTrainPins WITH this tripwire")
     // sketch rollup: register maxes are order-invariant; the pin
     val gotSk = SparkEntry.queries("q_sketch_rollup")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
-    assert(gotSk == SparkEntry.SketchRollupPins.sortBy(_._1),
+    assert(gotSk == gates.StatsGates.SketchRollupPins.sortBy(_._1),
       "q_sketch_rollup moved off its pin — re-derive and update " +
         "SketchRollupPins WITH this tripwire")
     spark.catalog.clearCache()
@@ -129,7 +129,7 @@ class PqPinSpec extends SparkSpec {
   test("the five pinned simsearch gates re-derive EXACTLY the pin map " +
     "at the driver's correctness SF (fixture-regeneration tripwire)") {
     val dir = "/root/testdata/sf0.01"
-    SparkEntry.SimsearchPins.foreach { case (name, pinned) =>
+    gates.VectorGates.SimsearchPins.foreach { case (name, pinned) =>
       val got = SparkEntry.queries(name)(spark, dir)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))

@@ -88,10 +88,10 @@ class WordPieceSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val merges = TextAnalysis.trainWordPiece(docs, "text", nMerges = 40)
     val vocab = TextAnalysis.wordPieceVocab(docs, "text", merges)
-    assert(vocab == SparkEntry.PinnedWordPieceVocab.toSet,
+    assert(vocab == gates.TokenGates.PinnedWordPieceVocab.toSet,
       "induced vocab diverged from the pin — " +
-        s"missing ${SparkEntry.PinnedWordPieceVocab.toSet -- vocab}, " +
-        s"extra ${vocab -- SparkEntry.PinnedWordPieceVocab.toSet}; " +
+        s"missing ${gates.TokenGates.PinnedWordPieceVocab.toSet -- vocab}, " +
+        s"extra ${vocab -- gates.TokenGates.PinnedWordPieceVocab.toSet}; " +
         "re-derive with graft.tools.WpDerive and update the pin WITH " +
         "this tripwire")
   }
