@@ -310,33 +310,26 @@ object ImportGates {
 
     // J4: auxiliary join table participating in the match condition
     Gate("q_match_aux", (s, dir) => {
-      val src = t(s, dir, "lineitem")
-        .withColumn(Matcher.SourceId,
-          col("l_orderkey") * 10 + col("l_linenumber"))
       val spec = MatchSpec(
         groups = Seq(ExactGroup(
           Seq(KeyPair("l_suppkey", "s_suppkey")),
           auxJoins = Seq(AuxJoin(t(s, dir, "nation"), "aux",
             "t.s_nationkey = aux.n_nationkey AND aux.n_regionkey < 2")))),
         targetPk = "s_suppkey")
-      Matcher.matchRecords(src, t(s, dir, "supplier"), spec)
-        .select(col(Matcher.SourceId), col(Matcher.TargetId),
-          col(Matcher.MatchGroup))
+      Matcher.matchRecords(Matcher.withSourceId(t(s, dir, "lineitem")),
+        t(s, dir, "supplier"), spec)
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"),
+          col(Matcher.TargetId), col(Matcher.MatchGroup))
     },
-      Some("""WITH cand AS (
-        | SELECT l.l_orderkey*10 + l.l_linenumber AS working_source_id,
-        |        s.s_suppkey AS tid
-        | FROM lineitem l
-        | JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        | JOIN nation n ON s.s_nationkey = n.n_nationkey AND n.n_regionkey < 2),
-        |r AS (SELECT working_source_id, tid,
-        |       row_number() OVER (PARTITION BY working_source_id ORDER BY tid) rn
-        |      FROM cand)
-        |SELECT l.l_orderkey*10 + l.l_linenumber AS working_source_id,
-        |       r.tid AS working_target_id,
-        |       CASE WHEN r.tid IS NOT NULL THEN 1 END AS working_exact_match_group
-        |FROM lineitem l LEFT JOIN (SELECT * FROM r WHERE rn = 1) r
-        | ON l.l_orderkey*10 + l.l_linenumber = r.working_source_id""".stripMargin)),
+      // each lineitem row is matched on its own key: the min supplier pk
+      // per key among suppliers whose nation is in regions 0-1
+      Some("""SELECT l.l_orderkey, l.l_linenumber, l.l_suppkey,
+        |       m.tid AS working_target_id,
+        |       CASE WHEN m.tid IS NOT NULL THEN 1 END AS working_exact_match_group
+        |FROM lineitem l LEFT JOIN (
+        | SELECT s_suppkey AS k, min(s_suppkey) AS tid FROM supplier
+        | JOIN nation ON s_nationkey = n_nationkey AND n_regionkey < 2
+        | GROUP BY 1) m ON l.l_suppkey = m.k""".stripMargin)),
 
     // A6: match-rate counts over the staged match
     Gate("q_match_rate", (s, dir) => {

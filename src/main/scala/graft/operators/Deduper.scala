@@ -23,7 +23,11 @@ import org.apache.spark.sql.functions._
  * reference's `RecordDeduper < RecordMerger` has it. survivors = table
  * ⟖(anti) duplicates-by-pk; fold = the M1 update, [[Merger.fold]], with
  * the duplicate rows as source. The self-match ([[Deduper.selfMatch]])
- * is shared with [[DedupAudit]]. Both invariant counts come from ONE
+ * is shared with [[DedupAudit]]. It is no pair self-join: under the
+ * orientation `$T < $S` each group is its per-key min pk joined onto the
+ * table, and a row is a duplicate when that min is below its own pk
+ * ([[Matcher.matchRecords]]), so a duplicate group of k rows costs k
+ * rows, not k(k−1)/2 pairs. Both invariant counts come from ONE
  * mid-pipeline action ([[Matcher.selfMatchReport]]: one aggregation,
  * no self-join) that runs before any output is built; the matched DF
  * is cached first because that action and the outputs both read it

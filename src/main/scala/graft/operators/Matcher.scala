@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, EqualTo}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 import graft.types.Template
 
@@ -23,16 +25,17 @@ import graft.types.Template
  *  - nested matchers splice their groups in order (record_matcher.rb:48-58).
  *
  * Spark-first design: instead of translating the reference's sequential
- * UPDATE-per-group (k chained scans), each group's candidates are
- * computed as an independent equi-join, unioned, and resolved with ONE
- * window: min (group_idx, target_pk) per source row. Semantically
- * identical to the staged loop (a row matched by group i keeps it over
- * any group j > i) but embarrassingly parallel — at 100 TB the k joins
- * run concurrently against the same cached/broadcast target, and the
- * single window shuffle on working_source_id replaces k full-table
- * UPDATE passes. The multi-candidate nondeterminism of Postgres
- * UPDATE..FROM is resolved deterministically to min(t.pk) (divergence
- * documented, SURVEY §7.4).
+ * UPDATE-per-group (k chained scans), each group is one table joined
+ * onto the source: `min(pk)` per target key (an aggregate, which
+ * combines a hot key map-side), left-joined on the group's keys. The
+ * winner is one `CASE` over the groups' hits in declaration order —
+ * the staged loop's first-match-wins (a row matched by group i keeps it
+ * over any group j > i). Like the reference's UPDATE, the working row is
+ * matched in place: it is never unioned or windowed, and only a group
+ * with a theta constraint joins a result back by its id (see
+ * [[Matcher.matchRecords]]). The multi-candidate nondeterminism of Postgres UPDATE..FROM
+ * is resolved deterministically to min(t.pk) (divergence documented,
+ * SURVEY §7.4).
  */
 final case class KeyPair(sourceKey: String, targetKey: String)
 
@@ -90,7 +93,9 @@ object Matcher {
   /**
    * Ensure the working source id column exists.
    * `monotonically_increasing_id` is unique-not-dense, which is all the
-   * reference uses SERIAL for (a join key, record_matcher.rb:43).
+   * reference uses SERIAL for (a join key, record_matcher.rb:43). A
+   * caller-supplied id is kept as it is and must be unique too: see
+   * [[matchRecords]].
    *
    * The id is assigned per evaluation, from partition layout: it is
    * stable across re-evaluations only when the source itself is
@@ -104,54 +109,139 @@ object Matcher {
     else source.withColumn(SourceId, monotonically_increasing_id())
 
   /**
-   * Run all exact groups; returns the source plus
-   * `working_target_id` (nullable) and `working_exact_match_group`
-   * (1-based index of the winning group, null if unmatched).
+   * Run all exact groups; returns `working_source_id`, the source's
+   * other columns in order, then `working_target_id` (nullable) and
+   * `working_exact_match_group` (1-based index of the winning group, null
+   * if unmatched). `working_source_id` must be unique: a theta group (see
+   * below) resolves its candidates per id, so rows sharing an id would
+   * share those.
+   *
+   * Each group is one table left-joined onto the source; the winner is
+   * one `CASE WHEN hit₁ THEN tid₁ WHEN hit₂ THEN tid₂ …` in group order.
+   * A group's constraints sort by the sides they name:
+   *  - `$S` only: a predicate in the group's hit (null counts as false);
+   *  - `$T` only: a filter on the (aux-joined) target;
+   *  - the orientation `$T < $S` on the target pk: the group's min pk
+   *    qualifies exactly when any candidate does, so it tests the min;
+   *  - anything else naming both sides (or neither): a theta group.
+   * A group without theta constraints is `min(pk)` per target key, so a
+   * key shared by k source and m target rows costs k + m rows, not k·m.
+   * A theta group keeps its inner join and takes the min per source id.
+   * Without an orientation a candidate with a null pk wins with a null
+   * id (the staged loop's nulls-first order); null keys never match.
    */
   def matchRecords(sourceWithId: DataFrame, target: DataFrame,
                    spec: MatchSpec): DataFrame = {
     require(sourceWithId.columns.contains(SourceId),
       s"source must carry $SourceId (use Matcher.withSourceId)")
-    val s = sourceWithId.as("s")
-
-    val candidateSets: Seq[DataFrame] = spec.groups.zipWithIndex.map {
-      case (g, idx) =>
-        // pre-join aux tables into the target side (J4)
-        val tgt = g.auxJoins.foldLeft(target.as("t")) { (df, aux) =>
-          df.join(aux.df.as(aux.alias), expr(aux.condition))
-        }
-        val keyCond: Column = g.keys
-          .map(k => col(s"s.${k.sourceKey}") === col(s"t.${k.targetKey}"))
-          .reduce(_ && _)
-        val thetaCond: Seq[Column] = g.constraints.map { c =>
-          Template.toColumn(c.template, Some(s"s.${c.column}"),
-            Some(s"t.${c.targetColumn.getOrElse(c.column)}"))
-        }
-        val cond = (keyCond +: thetaCond).reduce(_ && _)
-        s.join(tgt, cond, "inner")
-          .select(
-            col(s"s.$SourceId"),
-            col(s"t.${spec.targetPk}").as(TargetId),
-            lit(idx + 1).as(MatchGroup))
-    }
-
-    if (candidateSets.isEmpty)
+    val pkType = target.schema(spec.targetPk).dataType
+    if (spec.groups.isEmpty)
       return sourceWithId
-        .withColumn(TargetId, lit(null).cast(
-          target.schema(spec.targetPk).dataType))
+        .withColumn(TargetId, lit(null).cast(pkType))
         .withColumn(MatchGroup, lit(null).cast("int"))
 
-    val all = candidateSets.reduce(_ unionByName _)
-    // first-match-wins + deterministic min-pk tiebreak in one window
-    val w = Window.partitionBy(col(SourceId))
-      .orderBy(col(MatchGroup).asc, col(TargetId).asc)
-    val resolved = all
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-
-    sourceWithId.join(resolved, Seq(SourceId), "left")
+    val (joined, arms) = spec.groups.zipWithIndex
+      .foldLeft((sourceWithId.as("s"), Vector.empty[(Column, Column)])) {
+        case ((acc, done), (g, i)) =>
+          val (next, hit, tid) =
+            joinGroup(acc, sourceWithId, target, spec.targetPk, g, s"__g${i + 1}")
+          (next, done :+ (hit -> tid))
+      }
+    def firstHit(value: Int => Column): Column =
+      arms.indices.tail.foldLeft(when(arms.head._1, value(0))) { (c, i) =>
+        c.when(arms(i)._1, value(i))
+      }
+    val sourceCols = SourceId +: sourceWithId.columns.filter(_ != SourceId).toSeq
+    joined.select(sourceCols.map(c => col(s"s.`$c`")) :+
+      firstHit(i => arms(i)._2).cast(pkType).as(TargetId) :+
+      firstHit(i => lit(i + 1)).as(MatchGroup): _*)
   }
+
+  /** `$T < $S` with `$T` the target pk: a min over the candidates
+    * satisfies it exactly when one of them does. */
+  private def isOrientation(c: MatchConstraint, pk: String): Boolean =
+    c.template.filterNot(_.isWhitespace) == "$T<$S" &&
+      c.targetColumn.getOrElse(c.column) == pk
+
+  /**
+   * Left-join group `g` onto `acc` (the source aliased `s`, with the
+   * earlier groups' columns). Returns the join, the group's hit and its
+   * target id; the columns it adds are prefixed `tag`.
+   *
+   * A key table Spark would broadcast (its `(keys, pk)` projection's
+   * size estimate is within `spark.sql.autoBroadcastJoinThreshold`) is
+   * reduced in one task and broadcast: the broadcast sends it through
+   * the driver anyway, and a partitioned aggregate would add a shuffle
+   * per group. A larger one is hash-aggregated and joined as Spark
+   * plans it.
+   */
+  private def joinGroup(acc: DataFrame, source: DataFrame, target: DataFrame,
+                        pk: String, g: ExactGroup, tag: String)
+      : (DataFrame, Column, Column) = {
+    // pre-join aux tables into the target side (J4)
+    val tgt = g.auxJoins.foldLeft(target.as("t")) { (df, aux) =>
+      df.join(aux.df.as(aux.alias), expr(aux.condition))
+    }
+    def tRef(c: MatchConstraint) = s"t.${c.targetColumn.getOrElse(c.column)}"
+    def cond(c: MatchConstraint, tRef: String): Column =
+      Template.toColumn(c.template, Some(s"s.${c.column}"), Some(tRef))
+    def sides(c: MatchConstraint) =
+      (Template.referencesSource(c.template), Template.referencesTarget(c.template))
+    val (orient, rest) = g.constraints.partition(isOrientation(_, pk))
+    val sOnly = rest.filter(sides(_) == ((true, false)))
+    val tOnly = rest.filter(sides(_) == ((false, true)))
+    val theta = rest.filter { c => val (s, t) = sides(c); s == t }
+    val tPk = col(s"t.$pk")
+    val tid = s"${tag}_tid"
+    // the staged loop's order puts a null pk first: such a candidate wins
+    def nullsFirstMin(p: Column) = when(max(p.isNull), lit(null)).otherwise(min(p))
+
+    if (theta.nonEmpty) {
+      val sid = s"${tag}_sid"
+      val keyCond = g.keys.map(k =>
+        col(s"s.${k.sourceKey}") === col(s"t.${k.targetKey}"))
+      val best = source.as("s")
+        .join(tgt, (keyCond ++ g.constraints.map(c => cond(c, tRef(c)))).reduce(_ && _))
+        .groupBy(col(s"s.$SourceId").as(sid))
+        .agg(nullsFirstMin(tPk).as(tid))
+      return (acc.join(best, col(s"s.$SourceId") === col(sid), "left"),
+        col(sid).isNotNull, col(tid))
+    }
+
+    val keyNames = g.keys.indices.map(j => s"${tag}_k$j")
+    val keyCols = g.keys.zip(keyNames).map { case (k, name) =>
+      val tk = col(s"t.${k.targetKey}")
+      val compared = comparedType(source.sparkSession,
+        source.select(col(k.sourceKey)).schema.head.dataType,
+        tgt.select(tk).schema.head.dataType)
+      tk.cast(compared).as(name)
+    }
+    val projected = tOnly.foldLeft(tgt)((df, c) => df.filter(cond(c, tRef(c))))
+      .select(keyCols :+ tPk.as(pk): _*)
+      .filter(keyNames.map(col(_).isNotNull).reduce(_ && _))
+    val threshold = source.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val small = threshold >= 0 &&
+      projected.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+    val perKey = (if (small) projected.coalesce(1) else projected)
+      .groupBy(keyNames.map(col): _*)
+      .agg((if (orient.isEmpty) nullsFirstMin(col(pk)) else min(col(pk))).as(tid))
+    val on = g.keys.zip(keyNames).map { case (k, name) =>
+      col(s"s.${k.sourceKey}") === col(name) }.reduce(_ && _)
+    // `$T` in an orientation names the group's min pk
+    val hit = (col(keyNames.head).isNotNull +: (sOnly ++ orient).map(c => cond(c, tid)))
+      .map(coalesce(_, lit(false))).reduce(_ && _)
+    (acc.join(if (small) broadcast(perKey) else perKey, on, "left"), hit, col(tid))
+  }
+
+  /** The type Spark compares `a = b` in. A target key is grouped in it,
+    * so target values that all equal one source value share one row. */
+  private def comparedType(spark: SparkSession, a: DataType, b: DataType): DataType =
+    if (a == b) a
+    else spark.range(1)
+      .select(lit(null).cast(a) === lit(null).cast(b))
+      .queryExecution.analyzed match {
+        case Project(Seq(Alias(EqualTo(l, _), _)), _) => l.dataType
+      }
 
   /**
    * Stage the whole match the way merge and its audit run it: assign

@@ -176,16 +176,22 @@ object Merger {
    * rows folding into one base row) reduces in parallel instead of
    * funneling its whole window partition through one task. `pick` is
    * unique among `rows`, so the winner is well-defined (Postgres
-   * UPDATE..FROM picks an arbitrary one; SURVEY §7.4).
+   * UPDATE..FROM picks an arbitrary one; SURVEY §7.4). The aggregate
+   * carries only the columns the routes read from the row (`copies` and
+   * the `mergeExpressions` columns), or `pick` alone when there are none
+   * (a struct needs a field): Catalyst does not prune struct fields
+   * through `min_by`.
    */
   private[operators] def fold(base: DataFrame, baseKey: String, rows: DataFrame,
                               rowKey: String, pick: String, spec: MergeSpec,
                               copies: Seq[String]): DataFrame = {
-    val rest = rows.columns.filter(_ != rowKey)
+    val routed = (copies ++ spec.mergeExpressions.keys).distinct
+      .filter(c => c != rowKey && rows.columns.contains(c))
+    val carried = if (routed.isEmpty) Seq(pick) else routed
     val best = rows
       .groupBy(col(rowKey))
-      .agg(min_by(struct(rest.map(col).toIndexedSeq: _*), col(pick)).as("__best"))
-      .select(col(rowKey) +: rest.map(c => col(s"__best.$c").as(c)).toIndexedSeq: _*)
+      .agg(min_by(struct(carried.map(col): _*), col(pick)).as("__best"))
+      .select(col(rowKey) +: carried.map(c => col(s"__best.$c").as(c)): _*)
     val joined = base.as("t").join(best.as("s"),
       col(s"t.$baseKey") === col(s"s.$rowKey"), "left")
     val hit = col(s"s.$rowKey").isNotNull

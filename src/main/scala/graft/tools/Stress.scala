@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ExactGroup, Fuzzy, MatchSpec, MergeSpec, Merger}
+import graft.operators.{ExactGroup, Fuzzy, MatchSpec, Matcher, MergeSpec, Merger}
 import graft.ops.{Clusters, Similarity}
 
 /**
@@ -26,7 +26,8 @@ import graft.ops.{Clusters, Similarity}
  *  3. Merger.merge with a pathological hot key (half of a 10×-events
  *     source matching ONE target row): the pipeline must complete with
  *     no stage funneling into a single task (no task reads more than
- *     MaxTaskShare of its stage's shuffle records).
+ *     MaxTaskShare of its stage's shuffle records). Then the quadratic
+ *     shape: one non-pk key value on 20k source and 20k target rows.
  *
  * A task-level listener enforces the no-funnel property for EVERY
  * scenario, not just the merge.
@@ -208,6 +209,28 @@ object Stress {
       res.unpersist()
     }
     assertNoFunnel("merge-hot-key")
+    // the quadratic shape: ONE value of a non-pk key column on 20k source
+    // AND 20k target rows. A pair join would emit 4e8 candidates; the
+    // per-key min matches every source row to the key's min pk in
+    // 20k + 20k rows.
+    val nQuad = 20000L
+    // `id * 0` rather than a literal, which the optimizer would fold
+    // into a key-less join
+    def hotPhone = concat(lit("HOT"), (col("id") * 0).cast("string")).as("c_phone")
+    val quadTarget = spark.range(nQuad).select((col("id") + 1).as("c_custkey"),
+      hotPhone, lit(0.0).as("c_acctbal"))
+    val quadSource = spark.range(nQuad).select(col("id").as("working_source_id"),
+      hotPhone, lit(1.0).as("c_acctbal"))
+    tme(f"merge quadratic key ($nQuad%,d x $nQuad%,d rows)") {
+      val res = Merger.merge(quadSource, quadTarget, MergeSpec(
+        matchSpec = MatchSpec(Seq(ExactGroup.onColumns("c_phone")), targetPk = "c_custkey"),
+        mergeExpressions = Map("c_acctbal" -> "$T + $S")))
+      val toMin = res.matched.filter(col(Matcher.TargetId) === 1L).count()
+      assert(toMin == nQuad, s"$toMin of $nQuad source rows matched the key's min pk")
+      res.newTarget.write.format("noop").mode("overwrite").save()
+      res.unpersist()
+    }
+    assertNoFunnel("match-quadratic-key")
 
     // ---- 4. SemDeDup cell join at 10× embeddings -----------------------
     // 50k vectors (10 replicas of each sf0.1 embedding under distinct

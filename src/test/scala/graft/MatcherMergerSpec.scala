@@ -47,6 +47,45 @@ class MatcherMergerSpec extends SparkSpec {
     assert(m == Set(101L)) // alice's target bal=10 fails $T > 15
   }
 
+  test("a key shared by 2,000 source and 2,000 target rows joins 2,000 " +
+    "rows, not 4 million, with the key table broadcast or shuffled") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val n = 2000L
+    // one key value, computed so the optimizer cannot fold it away
+    val hot = (col("id") * 0).cast("string").as("k")
+    val hotSource = spark.range(n).select(col("id").as(Matcher.SourceId), hot)
+    val hotTarget = spark.range(n).select((col("id") + 1).as("pk"), hot)
+    val hotSpec = MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "pk")
+    Seq("10485760", "-1").foreach { threshold =>
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        val m = Matcher.matchRecords(hotSource, hotTarget, hotSpec)
+        val rows = m.collect()
+        assert(rows.length == n, threshold)
+        assert(rows.forall(r => r.getAs[Long](Matcher.TargetId) == 1L &&
+          r.getAs[Int](Matcher.MatchGroup) == 1), threshold)
+        val joins = Plans.collect(m.queryExecution.executedPlan) {
+          case j: BaseJoinExec => j.metrics("numOutputRows").value
+        }
+        assert(joins.nonEmpty && joins.forall(_ <= n),
+          s"threshold $threshold: join output rows $joins")
+      }
+    }
+  }
+
+  test("keys of different types group as Spark compares them: one row " +
+    "per source row") {
+    // "1" and "01" both equal the int 1, so they are one key
+    val tgt = Seq((1L, "1"), (2L, "01"), (3L, "2")).toDF("pk", "k")
+    val src = Seq((10L, 1), (11L, 2), (12L, 5)).toDF(Matcher.SourceId, "k")
+    val m = Matcher.matchRecords(src, tgt,
+      MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "pk"))
+      .select(Matcher.SourceId, Matcher.TargetId)
+      .as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
+    assert(m == Seq((10L, Some(1L)), (11L, Some(3L)), (12L, None)))
+  }
+
   test("merge update+insert: row conservation and routing") {
     val res = Merger.merge(source, target, MergeSpec(
       matchSpec = spec,

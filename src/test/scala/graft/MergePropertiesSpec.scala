@@ -83,6 +83,91 @@ class MergePropertiesSpec extends SparkSpec {
         assert(m(sid) == expect, s"round $r source $sid key $k")
       }
     }
+    // random specs against a brute-force per-row reference, with the key
+    // tables broadcast and shuffled
+    Seq("10485760", "-1").foreach { threshold =>
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        (1 to 2 * Rounds).foreach(r => randomSpecRound(r, threshold))
+      }
+    }
+  }
+
+  private type Tgt = (Option[Long], Option[String], Option[Int], Option[Double], Int)
+  private type Src = (Long, Option[String], Option[Int], Option[Double], Option[Long])
+
+  // one group's pool: its keys, constraints of each kind (`$S` only,
+  // `$T` only, the pk orientation, a theta) and an aux join on t.a
+  private val sOnly = MatchConstraint("v", "$S > 4")
+  private val tOnly = MatchConstraint("v", "$T >= 3")
+  private val oriented = MatchConstraint("id", "$T < $S")
+  private val theta = MatchConstraint("v", "$T <> $S")
+
+  private def randomSpecRound(r: Int, label: String): Unit = {
+    def opt[A](g: Gen[A], nulls: Int = 1): Gen[Option[A]] =
+      Gen.frequency(5 -> g.map(Some(_)), nulls -> Gen.const(None))
+    val genT: Gen[Tgt] = for {
+      id <- opt(Gen.choose(1L, 12L)) // duplicate and null pks
+      k <- opt(Gen.choose(0, 4).map(i => s"k$i"))
+      k2 <- opt(Gen.choose(0, 2))
+      v <- opt(Gen.choose(0, 9).map(_.toDouble))
+      a <- Gen.choose(0, 3)
+    } yield (id, k, k2, v, a)
+    val genS: Gen[Long => Src] = for {
+      k <- opt(Gen.choose(0, 5).map(i => s"k$i"))
+      k2 <- opt(Gen.choose(0, 2))
+      v <- opt(Gen.choose(0, 9).map(_.toDouble))
+      id <- opt(Gen.choose(0L, 14L))
+    } yield (sid: Long) => (sid, k, k2, v, id)
+    val genGroup: Gen[ExactGroup] = for {
+      twoKeys <- Gen.oneOf(false, true)
+      cs <- Gen.someOf(sOnly, tOnly, oriented, theta)
+      aux <- Gen.oneOf(false, true)
+    } yield ExactGroup(
+      KeyPair("k", "k") +: (if (twoKeys) Seq(KeyPair("k2", "k2")) else Nil),
+      cs.toSeq,
+      if (aux) Seq(AuxJoin(null, "x", "t.a = x.a AND x.ok")) else Nil)
+    val t = sample(Gen.listOfN(20, genT), 5000 + r)
+    val s = sample(Gen.listOfN(20, genS), 6000 + r).zipWithIndex
+      .map { case (f, i) => f(i.toLong) }
+    val auxOk = sample(Gen.listOfN(4, Gen.oneOf(false, true)), 7000 + r)
+    val groups = sample(Gen.choose(1, 3).flatMap(Gen.listOfN(_, genGroup)), 8000 + r)
+    val auxDf = auxOk.zipWithIndex.map { case (ok, a) => (a, ok) }.toDF("a", "ok")
+    val spec = MatchSpec(groups.map(g =>
+      g.copy(auxJoins = g.auxJoins.map(_.copy(df = auxDf)))), targetPk = "id")
+
+    // brute force: SQL's three-valued logic, a null counting as false
+    def holds(c: MatchConstraint, src: Src, tgt: Tgt): Boolean = c match {
+      case `sOnly`    => src._4.exists(_ > 4)
+      case `tOnly`    => tgt._4.exists(_ >= 3)
+      case `oriented` => tgt._1.zip(src._5).exists { case (a, b) => a < b }
+      case `theta`    => tgt._4.zip(src._4).exists { case (a, b) => a != b }
+    }
+    def keysMatch(g: ExactGroup, src: Src, tgt: Tgt): Boolean =
+      src._2.isDefined && src._2 == tgt._2 &&
+        (g.keys.size == 1 || (src._3.isDefined && src._3 == tgt._3))
+    def expected(src: Src): (Option[Long], Option[Int]) =
+      groups.zipWithIndex.iterator.map { case (g, i) =>
+        val cands = t.filter(tgt => (g.auxJoins.isEmpty || auxOk(tgt._5)) &&
+          keysMatch(g, src, tgt) && g.constraints.forall(holds(_, src, tgt)))
+        // a null pk sorts first, as in the staged loop
+        if (cands.isEmpty) None
+        else Some((if (cands.exists(_._1.isEmpty)) None
+          else Some(cands.flatMap(_._1).min), Some(i + 1)))
+      }.collectFirst { case Some(hit) => hit }.getOrElse((None, None))
+
+    val source = s.toDF(Matcher.SourceId, "k", "k2", "v", "id")
+    val target = t.toDF("id", "k", "k2", "v", "a")
+    val out = Matcher.matchRecords(source, target, spec)
+    assert(out.columns.toSeq == source.columns.toSeq ++
+      Seq(Matcher.TargetId, Matcher.MatchGroup), s"$label round $r")
+    val got = out.select(Matcher.SourceId, Matcher.TargetId, Matcher.MatchGroup)
+      .as[(Long, Option[Long], Option[Int])].collect()
+    assert(got.length == s.size, s"$label round $r: ${got.length} rows")
+    val bySid = got.map { case (sid, tid, g) => sid -> ((tid, g)) }.toMap
+    s.foreach { src =>
+      assert(bySid(src._1) == expected(src),
+        s"$label round $r source $src groups ${groups.mkString("; ")}")
+    }
   }
 
   test("pk write-back from the key map equals the newTarget-join formula") {

@@ -512,4 +512,57 @@ class PlanAuditSpec extends SparkSpec {
     })
     assert(below.nonEmpty, "bloom UDF filter is not below the join")
   }
+
+  test("equality-only merge and dedup match with no window and no " +
+    "exchange keyed on working_source_id") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.operators._
+    // every node, through AQE and into the plans of the caches read
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case other => (other.children ++ other.subqueries).flatMap(nodes)
+    })
+    def audit(what: String, df: DataFrame): Unit = {
+      val all = nodes(df.queryExecution.executedPlan)
+      assert(!all.exists(_.isInstanceOf[WindowExec]), s"$what has a window")
+      val bySourceId = all.collect {
+        case e: ShuffleExchangeExec if (e.outputPartitioning match {
+          case keyed: Expression => keyed.references.exists(_.name == Matcher.SourceId)
+          case _ => false
+        }) => e
+      }
+      assert(bySourceId.isEmpty, s"$what shuffles on ${Matcher.SourceId}")
+    }
+    val customer = spark.read.parquet(s"$sf0001/customer.parquet")
+    val merge = Merger.merge(
+      customer.select(col("c_custkey"), col("c_name"), col("c_acctbal")),
+      customer.filter(col("c_custkey") < 100),
+      MergeSpec(MatchSpec(Seq(ExactGroup.onColumns("c_custkey"),
+        ExactGroup.onColumns("c_name")), targetPk = "c_custkey"),
+        mergeExpressions = Map("c_acctbal" -> "$T + $S")))
+    audit("merge", merge.matched)
+    merge.unpersist()
+    val orders = spark.read.parquet(s"$sf0001/orders.parquet")
+    Seq(
+      Seq(ExactGroup.onColumns("o_custkey", "o_orderdate")),
+      Seq(ExactGroup.onColumns("o_custkey", "o_orderdate"),
+        ExactGroup.onColumns("o_orderstatus", "o_orderdate"))
+    ).foreach { groups =>
+      val spec = MergeSpec(MatchSpec(groups, targetPk = "o_orderkey"),
+        mergeExpressions = Map("o_totalprice" -> "$T + $S"))
+      // an explicit orientation takes the general (self-match) path
+      val res = Deduper.dedup(orders, spec,
+        orientation = Some(Deduper.defaultOrientation("o_orderkey")),
+        enforceInvariants = false)
+      audit(s"dedup newTable (${groups.size} groups)", res.newTable)
+      audit(s"dedup duplicates (${groups.size} groups)", res.duplicates)
+      res.unpersist()
+    }
+  }
 }

@@ -8,6 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf0001 = "/root/testdata/sf0.001"
+
+  /** Run `f` with the SQL conf `kv` set, then restore the prior values. */
+  def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val before = kv.map { case (c, _) => c -> spark.conf.getOption(c) }
+    kv.foreach { case (c, v) => spark.conf.set(c, v) }
+    try f finally before.foreach {
+      case (c, Some(v)) => spark.conf.set(c, v)
+      case (c, None)    => spark.conf.unset(c)
+    }
+  }
 }
 
 object SparkSpec {
