@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Dispatch
+
 /**
  * Audit reports (SURVEY.md §2.5 A1-A6, §3.3) — dry-run profiling of
  * sources, tables, and merges. Reference: lib/voter_file/csv_audit.rb,
@@ -416,11 +418,16 @@ object Audits {
    * single pass. Returns one row: total plus `<col>_coverage` counts.
    */
   def coverage(df: DataFrame, columns: Seq[String]): DataFrame = {
-    val aggs = count(lit(1)).as("total_count") +:
-      columns.map(c =>
-        count(when(nonBlank(col(c)), lit(1))).as(s"${c}_coverage"))
+    val aggs = coverageAggs(columns)
     df.agg(aggs.head, aggs.tail: _*)
   }
+
+  /** [[coverage]]'s aggregates: the row count, then one non-blank count
+    * per column. */
+  private[operators] def coverageAggs(columns: Seq[String]): Seq[Column] =
+    count(lit(1)).as("total_count") +:
+      columns.map(c =>
+        count(when(nonBlank(col(c)), lit(1))).as(s"${c}_coverage"))
 
   /** A3: duplicate-key detection — keys occurring more than once.
     * (csv_audit.rb:104-111 probes with LIMIT 1; we return the full
@@ -848,16 +855,20 @@ final case class MergeAuditReport(
 }
 
 object MergeAudit {
+  /** One scan of the staged match observes the total and one count per
+    * declared group, 1 … groups + fuzzy columns (see
+    * [[Matcher.fuzzyGroupIndex]]); only non-zero groups are reported.
+    * The match needs no cache of its own. */
   def audit(source: DataFrame, target: DataFrame, spec: MergeSpec): MergeAuditReport = {
-    val staged = Matcher.stage(source, target, spec.matchSpec)
-    // one pass: the unmatched rows are the null group, so the total is
-    // the sum over all groups and the match needs no cache of its own
-    val byGroup =
-      try Audits.matchGroupCounts(staged.matched).collect()
+    val ms = spec.matchSpec
+    val groups = 1 to ms.groups.size + ms.fuzzyColumns.size
+    val staged = Matcher.stage(source, target, ms)
+    val r =
+      try Dispatch.scanOnce(staged.matched, count(lit(1)) +:
+        groups.map(g => count(when(col(Matcher.MatchGroup) === g, true))): _*)
       finally staged.unpersist()
-    val counts = byGroup.filterNot(_.isNullAt(0))
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    MergeAuditReport(byGroup.map(_.getLong(1)).sum, counts)
+    MergeAuditReport(r.getLong(0), groups.zipWithIndex
+      .map { case (g, i) => g -> r.getLong(1 + i) }.filter(_._2 > 0).toMap)
   }
 }
 
@@ -946,49 +957,46 @@ final case class CsvAuditReport(
 object CsvAudit {
   /** One pass over `df`. Per-key duplicate counts (csv_audit.rb:34-37
     * runs one GROUP BY per key) are folded into one aggregation: each
-    * row contributes one (key, value) record per audited key, a single
-    * shuffle counts value multiplicities for every key at once, and
-    * only the ≤|keys|-row result reaches the driver. The coverage
-    * counts ride the first key's records (one per row) through the same
-    * aggregation; without keys they are [[Audits.coverage]]. */
+    * row contributes one (key, value) record per distinct audited key,
+    * a single shuffle counts value multiplicities for every key at
+    * once, and the scan of that result observes, per key, the values
+    * seen more than once. The coverage counts ride the first key's
+    * records (one per row) through the same aggregation; without keys
+    * they are [[Audits.coverage]]'s, observed on one scan of `df`. */
   def audit(df: DataFrame, keys: Seq[String], columns: Seq[String],
             malformedCount: Long = 0L): CsvAuditReport = {
+    val audited = keys.distinct
     val covCols = "__total" +: columns.indices.map(i => s"__cov$i")
-    // one Long per coverage column (total first) and one per key
-    val (cov, kd) =
-      if (keys.isEmpty) {
-        val r = Audits.coverage(df, columns).head()
-        (covCols.indices.map(r.getLong), Map.empty[String, Long])
-      } else {
+    // one Long per coverage column (total first), then one per key
+    val r =
+      if (audited.isEmpty) Dispatch.scanOnce(df, Audits.coverageAggs(columns): _*)
+      else {
         val flags = lit(1) +: columns.map(c =>
           when(Audits.nonBlank(col(c)), 1).otherwise(0))
         val zeros = flags.map(_ => lit(0))
-        val pairs = df.select(explode(array(keys.zipWithIndex.map { case (k, i) =>
+        val pairs = df.select(explode(array(audited.zipWithIndex.map { case (k, i) =>
           struct(lit(k).as("k") +: col(k).cast("string").as("v") +:
             (if (i == 0) flags else zeros).zip(covCols).map { case (f, n) => f.as(n) }: _*)
         }: _*)).as("p")).select(col("p.*"))
-        val rows = pairs
+        val perValue = pairs
           .groupBy(col("k"), col("v"))
           .agg(count(lit(1)).as("c"), covCols.map(c => sum(col(c)).as(c)): _*)
-          .groupBy(col("k"))
-          .agg(count(when(col("c") > 1, true)).as("dups"),
-            covCols.map(c => sum(col(c)).as(c)): _*)
-          .collect()
-        // an empty frame yields no rows: all counts 0
-        val first = rows.find(_.getString(0) == keys.head)
-        (covCols.indices.map(i => first.fold(0L)(_.getLong(2 + i))),
-          rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
+        // an empty frame sums to null: all counts 0
+        Dispatch.scanOnce(perValue,
+          covCols.map(c => coalesce(sum(col(c)), lit(0L))) ++
+            audited.map(k => count(when(col("k") === k && col("c") > 1, true))): _*)
       }
-    val covMap = columns.zipWithIndex.map { case (c, i) => c -> cov(i + 1) }.toMap
-    val keyDups = keys.map(k => k -> kd.getOrElse(k, 0L)).toMap
-    CsvAuditReport(cov.head, malformedCount, keyDups, covMap, keys, columns)
+    val covMap = columns.zipWithIndex.map { case (c, i) => c -> r.getLong(i + 1) }.toMap
+    val keyDups = audited.zipWithIndex
+      .map { case (k, i) => k -> r.getLong(covCols.size + i) }.toMap
+    CsvAuditReport(r.getLong(0), malformedCount, keyDups, covMap, keys, columns)
   }
 }
 
 /** Table profiling (database_audit.rb:20-45,67-114): per-column
   * coverage + rates, value distributions for chosen columns, and the
-  * geocoding progress stats — one coverage pass + one small
-  * aggregation per distribution. */
+  * geocoding progress stats — one scan observes the coverage and the
+  * geocoding count, plus one small aggregation per distribution. */
 final case class DatabaseAuditReport(
     rowCount: Long,
     coverage: Map[String, Long],
@@ -1014,8 +1022,13 @@ object DatabaseAudit {
             distributionLimit: Int = 20,
             geocodingAddressColumn: Option[String] = None,
             geocodingLatColumn: String = "residential_lat"): DatabaseAuditReport = {
-    val cov = Audits.coverage(df, coverageColumns).collect()(0)
-    val total = cov.getLong(0)
+    // addresses still waiting for coordinates
+    val needsGeocoding = geocodingAddressColumn.map { addr =>
+      val lat = col(geocodingLatColumn)
+      count(when(Audits.nonBlank(col(addr)) && (lat.isNull || lat === 0.0), true))
+    }
+    val cov = Dispatch.scanOnce(df,
+      Audits.coverageAggs(coverageColumns) ++ needsGeocoding: _*)
     val covMap = coverageColumns.zipWithIndex.map { case (c, i) =>
       c -> cov.getLong(i + 1)
     }.toMap
@@ -1024,11 +1037,7 @@ object DatabaseAudit {
         .map(r => (Option(r.get(0)).map(_.toString).getOrElse("NULL"),
           r.getLong(1)))
     }.toMap
-    val geo = geocodingAddressColumn.map { addr =>
-      val lat = org.apache.spark.sql.functions.col(geocodingLatColumn)
-      df.filter(Audits.nonBlank(org.apache.spark.sql.functions.col(addr)) &&
-        (lat.isNull || lat === 0.0)).count()
-    }
-    DatabaseAuditReport(total, covMap, dists, geo)
+    val geo = needsGeocoding.map(_ => cov.getLong(coverageColumns.size + 1))
+    DatabaseAuditReport(cov.getLong(0), covMap, dists, geo)
   }
 }

@@ -57,8 +57,9 @@ object Deduper {
   def defaultOrientation(pk: String): MatchConstraint =
     MatchConstraint(pk, "$T < $S")
 
-  /** Does the spec qualify for the window fast path? Single same-name
-    * equality group, no theta/aux/fuzzy, default orientation. */
+  /** Does the spec qualify for the per-key-min fast path
+    * ([[dedupFast]])? Single same-name equality group, no
+    * theta/aux/fuzzy, default orientation. */
   private def isFastPath(spec: MergeSpec,
                          orientation: Option[MatchConstraint]): Boolean = {
     val ms = spec.matchSpec

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Trigram
+import graft.ops.Dispatch
 
 /**
  * Trigram fuzzy KNN matching with one-to-one greedy assignment (J6,
@@ -187,13 +188,14 @@ object Fuzzy {
       maxCrossPairs: Long): (DataFrame, Seq[DataFrame]) = {
     // materialized: each side feeds multiple consumers (count probe /
     // frequency cap / join) — without a barrier the trigram prep would
-    // be recomputed per consumer. The source is counted before the
-    // target prep is planned: a target read off a cached upstream (the
-    // claimed targets of a cached exact match) is then planned against
-    // that cache's real size, so a small claimed set is broadcast rather
-    // than the target hash-shuffled.
+    // be recomputed per consumer. Each side's cache is filled by the
+    // scan that observes its row count (one job, no aggregate stage).
+    // The source is filled before the target prep is planned: a target
+    // read off a cached upstream (the claimed targets of a cached exact
+    // match) is then planned against that cache's real size, so a small
+    // claimed set is broadcast rather than the target hash-shuffled.
     val sPrep = prepTrigrams(source, sourceId, sourceCol, "__sn").persist()
-    val sCount = sPrep.count()
+    val sCount = Dispatch.countRows(sPrep)
     val probe = sCount <= broadcastLimit
     val nPart = source.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
@@ -204,7 +206,7 @@ object Fuzzy {
       if (probe) target.select(col(targetId), col(targetCol)).repartition(nPart)
       else target,
       targetId, targetCol, "__tn").persist()
-    lazy val tCount = tPrep.count()
+    lazy val tCount = Dispatch.countRows(tPrep)
     if (probe && sCount * tCount <= maxCrossPairs) {
       // result parity with the index path: its frequency cap drops
       // ultra-common trigrams from the shared counts, so collect the

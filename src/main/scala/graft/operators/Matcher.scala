@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
+import graft.ops.Dispatch
 import graft.types.Template
 
 /**
@@ -279,10 +280,11 @@ object Matcher {
    * Σₖ A(k)·B(k). Each matched row emits one record keyed by its pk and
    * one keyed by its target, each unmatched row one record under a null
    * key (partial aggregation collapses those map-side); one `groupBy`
-   * on the key gives A, B and the per-key counts, and one global sum
-   * the report. The products carry multiplicity, so duplicate pks are
-   * exact; a null pk lands under the null key, whose A is 0 (a target
-   * is never null), as a null never joins.
+   * on the key gives A, B and the per-key counts, and the scan of its
+   * result observes the report's sums (no second aggregate stage). The
+   * products carry multiplicity, so duplicate pks are exact; a null pk
+   * lands under the null key, whose A is 0 (a target is never null), as
+   * a null never joins.
    *
    * Group indices are 1 … `spec.groups.size + spec.fuzzyColumns.size`
    * (exact groups, then [[fuzzyGroupIndex]]); only non-zero groups are
@@ -313,7 +315,7 @@ object Matcher {
         groups.map(g => count(when(col("g") === g, true)).as(s"g$g")): _*)
     val totals = Seq(sum(col("n")), sum(col("a") * col("b")), sum(col("r"))) ++
       groups.map(g => sum(col(s"g$g")))
-    val row = perKey.agg(totals.head, totals.tail: _*).head()
+    val row = Dispatch.scanOnce(perKey, totals: _*)
     def at(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
     DedupAuditReport(
       totalCount = at(0),

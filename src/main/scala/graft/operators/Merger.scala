@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Dispatch
 import graft.types.Template
 
 /**
@@ -35,8 +36,9 @@ import graft.types.Template
  * side when small — it is keyed by a `min_by` aggregate, so a hot key
  * combines map-side, before the join); the insert branch is a narrow
  * projection; the union is free. Inserted rows get fresh pks generated as
- * max(existing)+dense rank — one tiny extra aggregate, deterministic for
- * the oracle, unique at any scale.
+ * max(existing)+dense rank — the max observed on one scan of the target's
+ * pk, the rank's per-partition counts read in the job that fills its
+ * cache — deterministic for the oracle, unique at any scale.
  *
  * The match is evaluated once per merge: [[Matcher.stage]] caches the
  * exact match before a fuzzy pass, and the persisted `matched` feeds the
@@ -116,9 +118,10 @@ object Merger {
    *      collection and the final projection see the SAME partition
    *      layout (range boundaries come from sampling, so an unpersisted
    *      plan could re-sample between jobs);
-   *   3. collect per-partition counts (≤ numPartitions rows — a tiny
-   *      driver agg), prefix-sum them into partition base offsets, and
-   *      broadcast-join the offsets back.
+   *   3. count each partition's rows in the job that fills the cache
+   *      (one `mapPartitions` collect of ≤ numPartitions numbers, no
+   *      aggregate exchange), prefix-sum them into partition base
+   *      offsets, and broadcast-join the offsets back.
    * rank = partitionBase + localOffset + 1 equals the global
    * row_number by `orderCol` regardless of where sampling placed the
    * boundaries, because partitions are ordered and internally sorted.
@@ -140,23 +143,20 @@ object Merger {
       .sortWithinPartitions(col(orderCol).asc)
       .withColumn("__mono", monotonically_increasing_id())
       .persist()
-    val parts = ranged
-      .groupBy(shiftright(col("__mono"), 33).as("__pid"))
-      .agg(count(lit(1)).as("__cnt"), min(col("__mono")).as("__mstart"))
-      .collect()
-      .sortBy(_.getLong(0))
-    val offsets = parts.scanLeft(0L)(_ + _.getLong(1)).init
-    val offRows = parts.zip(offsets).map { case (r, off) =>
-      (r.getLong(0), r.getLong(2), off)
-    }.toSeq
     import spark.implicits._
-    val offDf = offRows.toDF("__pid", "__mstart", "__off")
+    // partition i's ids are (i << 33) + local offset: its first id names
+    // it, and its row count is all the offsets need
+    val parts = ranged.select(col("__mono")).as[Long].mapPartitions { it =>
+      if (it.hasNext) Iterator((it.next() >> 33, 1L + it.size)) else Iterator.empty
+    }.collect().sortBy(_._1)
+    val offsets = parts.scanLeft(0L)(_ + _._2).init
+    val offDf = parts.map(_._1).zip(offsets).toSeq.toDF("__pid", "__off")
     val ranked = ranged
       .withColumn("__pid", shiftright(col("__mono"), 33))
       .join(broadcast(offDf), Seq("__pid"))
       .withColumn(rankCol,
-        lit(base) + col("__off") + (col("__mono") - col("__mstart")) + 1)
-      .drop("__pid", "__mono", "__mstart", "__off")
+        lit(base) + col("__off") + col("__mono").bitwiseAND(LocalMask) + 1)
+      .drop("__pid", "__mono", "__off")
     (ranked, ranged)
   }
 
@@ -255,8 +255,9 @@ object Merger {
       if (spec.updateOnly) (newTargetUpdated, None, None)
       else {
         // fresh pks: max(existing) + global rank by source id —
-        // deterministic and unique; the max() is a single tiny agg.
-        val maxPk = target.agg(max(col(pk)).cast("long")).collect()(0)
+        // deterministic and unique; the max is observed on one scan of
+        // the target's pk column.
+        val maxPk = Dispatch.scanOnce(target, max(col(pk)).cast("long"))
         val base = if (maxPk.isNullAt(0)) 0L else maxPk.getLong(0)
         val (ranked, ranged) = rankWithCache(unmatched, SourceId, "__new_pk", base)
         val withPk = ranked.withColumn("__new_pk",

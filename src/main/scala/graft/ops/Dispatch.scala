@@ -1,18 +1,57 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
-/** Shared predicates for the adaptive-path dispatchers (the dense
-  * tiled paths key documents by a long-cast id, so only integral id
-  * types can take them — checked in one place instead of per
-  * operator). */
+/** Shared predicates and driver reads for the adaptive-path dispatchers
+  * (the dense tiled paths key documents by a long-cast id, so only
+  * integral id types can take them — checked in one place instead of
+  * per operator), and the one-job read of a count or total that a
+  * dispatch or a report needs ([[scanOnce]]). */
 private[graft] object Dispatch {
   def integralType(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
     case _ => false
   }
+
+  /** The values of the global aggregates `aggs` over `df`, in order,
+    * read off ONE job: `df` runs through the `noop` sink with the
+    * aggregates observed (`Dataset.observe`) instead of being
+    * aggregated. `df.agg(...).collect()` costs two jobs under AQE (the
+    * partial-aggregate map stage and a one-task final stage), three on
+    * a persisted frame (the cache fill first); here the aggregates ride
+    * the scan's own tasks, a persisted `df` is filled by that same job,
+    * and an aggregated `df` keeps only its own exchange.
+    *
+    * `df` is first projected to the columns `aggs` read: the observe
+    * node blocks column pruning, so the sink would otherwise read every
+    * column of a wide scan.
+    *
+    * The cost is driver bytes: every task returns the aggregates'
+    * partial state, with their input expressions, beside its result —
+    * about 6 KB for a first count and 1.5 KB for each further simple
+    * aggregate per task, where `agg(...).collect()` fetches about 3 KB
+    * per task in all (a 4-task parquet scan, `local[8]`). Keep `aggs`
+    * short. An empty `df` gives each aggregate's empty value: 0 for a
+    * count, null for a max or a sum. */
+  def scanOnce(df: DataFrame, aggs: Column*): Row = {
+    require(aggs.nonEmpty, "scanOnce needs an aggregate")
+    val names = aggs.indices.map(i => s"__agg$i")
+    val named = aggs.zip(names).map { case (a, n) => a.as(n) }
+    val read = df.agg(named.head, named.tail: _*)
+      .queryExecution.analyzed.references
+    val cols = df.queryExecution.analyzed.output.zip(df.columns)
+      .collect { case (a, c) if read.contains(a) => df.col(s"`$c`") }
+    val obs = Observation()
+    df.select(cols: _*).observe(obs, named.head, named.tail: _*)
+      .write.format("noop").mode("overwrite").save()
+    val m = obs.get
+    Row.fromSeq(names.map(m))
+  }
+
+  /** `df`'s row count, observed on one scan ([[scanOnce]]). */
+  def countRows(df: DataFrame): Long = scanOnce(df, count(lit(1))).getLong(0)
 
   /** Spread a CPU-heavy narrow kernel across the session's cores when
     * the upstream scan cannot (optimization-guide §2.5, input skew:

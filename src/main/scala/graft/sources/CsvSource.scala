@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Dispatch
+
 /**
  * CSV ingestion with the reference's dialect + repair semantics
  * (S1-S4 in SURVEY.md §2.1).
@@ -224,19 +226,20 @@ object CsvSource {
 
   /** Count of malformed rows (for CSVAudit, A1/csv_audit.rb:119-133):
     * raw lines minus the header minus parsed rows. The repair path
-    * counts all cleaned lines and the kept ones (data lines passing
-    * the arity contract, exactly what [[read]] returns) in one
-    * conditional-count aggregate, so the call is two small actions:
-    * the header line and that aggregate. An empty input counts 0. */
+    * observes all cleaned lines and the kept ones (data lines passing
+    * the arity contract, exactly what [[read]] returns) on one scan, so
+    * the call is two one-job actions: the header line and that scan.
+    * An empty input counts 0. */
   def malformedCount(spark: SparkSession, spec: CsvSpec): Long = {
     val head = header(spark, spec)
     val (lines, parsed) =
       if (isPlain(spec))
-        (cleanedLines(spark, spec).count(), readWith(spark, spec, head).count())
+        (Dispatch.countRows(cleanedLines(spark, spec)),
+          Dispatch.countRows(readWith(spark, spec, head)))
       else {
         val keep = isData(head) && arityOk(spec, schemaOf(head, spec))
-        val r = cleanedLines(spark, spec)
-          .agg(count(lit(1)), count(when(keep, true))).head()
+        val r = Dispatch.scanOnce(cleanedLines(spark, spec),
+          count(lit(1)), count(when(keep, true)))
         (r.getLong(0), r.getLong(1))
       }
     math.max(0L, lines - 1 - parsed)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -102,7 +103,15 @@ class MergePropertiesSpec extends SparkSpec {
   private val oriented = MatchConstraint("id", "$T < $S")
   private val theta = MatchConstraint("v", "$T <> $S")
 
-  private def randomSpecRound(r: Int, label: String): Unit = {
+  /** One random round: source and target rows (null keys, null and
+    * duplicate pks), the aux table's flags and a spec of 1-3 groups. */
+  private final case class RandomRound(s: Seq[Src], t: Seq[Tgt], auxOk: Seq[Boolean],
+                                       groups: Seq[ExactGroup], spec: MatchSpec) {
+    def source: DataFrame = s.toDF(Matcher.SourceId, "k", "k2", "v", "id")
+    def target: DataFrame = t.toDF("id", "k", "k2", "v", "a")
+  }
+
+  private def randomRound(r: Int): RandomRound = {
     def opt[A](g: Gen[A], nulls: Int = 1): Gen[Option[A]] =
       Gen.frequency(5 -> g.map(Some(_)), nulls -> Gen.const(None))
     val genT: Gen[Tgt] = for {
@@ -134,6 +143,12 @@ class MergePropertiesSpec extends SparkSpec {
     val auxDf = auxOk.zipWithIndex.map { case (ok, a) => (a, ok) }.toDF("a", "ok")
     val spec = MatchSpec(groups.map(g =>
       g.copy(auxJoins = g.auxJoins.map(_.copy(df = auxDf)))), targetPk = "id")
+    RandomRound(s, t, auxOk, groups, spec)
+  }
+
+  private def randomSpecRound(r: Int, label: String): Unit = {
+    val rr = randomRound(r)
+    val RandomRound(s, t, auxOk, groups, spec) = rr
 
     // brute force: SQL's three-valued logic, a null counting as false
     def holds(c: MatchConstraint, src: Src, tgt: Tgt): Boolean = c match {
@@ -155,9 +170,8 @@ class MergePropertiesSpec extends SparkSpec {
           else Some(cands.flatMap(_._1).min), Some(i + 1)))
       }.collectFirst { case Some(hit) => hit }.getOrElse((None, None))
 
-    val source = s.toDF(Matcher.SourceId, "k", "k2", "v", "id")
-    val target = t.toDF("id", "k", "k2", "v", "a")
-    val out = Matcher.matchRecords(source, target, spec)
+    val source = rr.source
+    val out = Matcher.matchRecords(source, rr.target, spec)
     assert(out.columns.toSeq == source.columns.toSeq ++
       Seq(Matcher.TargetId, Matcher.MatchGroup), s"$label round $r")
     val got = out.select(Matcher.SourceId, Matcher.TargetId, Matcher.MatchGroup)
@@ -167,6 +181,34 @@ class MergePropertiesSpec extends SparkSpec {
     s.foreach { src =>
       assert(bySid(src._1) == expected(src),
         s"$label round $r source $src groups ${groups.mkString("; ")}")
+    }
+  }
+
+  test("the merge and dedup audits equal what merge and dedup read off their match") {
+    import org.apache.spark.sql.functions.col
+    import Matcher.{TargetId, MatchGroup}
+    def groupCounts(m: DataFrame): Map[Int, Long] =
+      m.filter(col(MatchGroup).isNotNull).groupBy(MatchGroup).count()
+        .as[(Int, Long)].collect().toMap
+    (1 to Rounds).foreach { r =>
+      val rr = randomRound(r)
+      val spec = MergeSpec(rr.spec)
+      val audit = MergeAudit.audit(rr.source, rr.target, spec)
+      val merged = Merger.merge(rr.source, rr.target, spec)
+      try assert(audit == MergeAuditReport(merged.matched.count(),
+        groupCounts(merged.matched)), s"merge round $r: ${rr.groups.mkString("; ")}")
+      finally merged.unpersist()
+      // the table matched against itself; the invariants are not enforced,
+      // so a violating round still reports them
+      val orientation = Some(Deduper.defaultOrientation("id"))
+      val table = rr.target
+      val dedupAudit = DedupAudit.audit(table, spec, orientation)
+      val deduped = Deduper.dedup(table, spec, orientation, enforceInvariants = false)
+      try assert(dedupAudit == DedupAuditReport(table.count(),
+        groupCounts(deduped.duplicates), deduped.reflexiveCount,
+        deduped.symmetricCount), s"dedup round $r: ${rr.groups.mkString("; ")}")
+      finally deduped.unpersist()
+      assert(deduped.duplicates.filter(col(TargetId).isNull).isEmpty)
     }
   }
 
@@ -227,7 +269,6 @@ class MergePropertiesSpec extends SparkSpec {
   }
 
   test("one-pass self-match report equals the count and self-join formulas") {
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.col
     import Matcher.{TargetId, MatchGroup}
     // the formulas the report replaces: a count, a group count, a
