@@ -32,90 +32,35 @@ import org.apache.spark.sql.functions._
  * no self-join) that runs before any output is built; the matched DF
  * is cached first because that action and the outputs both read it
  * (SURVEY §7.4-5). Transitive chains (a→b→c) violate the symmetric
- * invariant and raise, exactly like the reference. Both paths return
- * the table's columns in the table's order.
+ * invariant and raise, exactly like the reference. Every spec takes
+ * this one path and checks its invariants, a single equality group with
+ * the default orientation too: with duplicate pks a row can be both a
+ * survivor and a duplicate, so neither count is zero by construction.
+ * The result has the table's columns in the table's order.
  */
 final case class DedupResult(
     newTable: DataFrame,
     duplicates: DataFrame,
     reflexiveCount: Long,
     symmetricCount: Long,
-    /** The cache the outputs are built on: the persisted self-match
-      * join (general path only; the fast path caches nothing).
+    /** The cache the outputs are built on: the persisted self-match.
       * Caller-owned. */
-    private[graft] val caches: Seq[DataFrame] = Nil) {
+    private[graft] val caches: Seq[DataFrame]) {
   /** Release the caches once the outputs have been consumed.
-    * Safe no-op on the fast path / after a prior call. */
+    * Safe no-op after a prior call. */
   def unpersist(): Unit = caches.foreach(_.unpersist())
 }
 
 object Deduper {
-  import Matcher.{SourceId, TargetId, MatchGroup}
+  import Matcher.TargetId
 
   /** Default merge orientation: keep the smaller pk
     * (dedup_driver.rb:57-59). */
   def defaultOrientation(pk: String): MatchConstraint =
     MatchConstraint(pk, "$T < $S")
 
-  /** Does the spec qualify for the per-key-min fast path
-    * ([[dedupFast]])? Single same-name equality group, no
-    * theta/aux/fuzzy, default orientation. */
-  private def isFastPath(spec: MergeSpec,
-                         orientation: Option[MatchConstraint]): Boolean = {
-    val ms = spec.matchSpec
-    orientation.isEmpty && ms.fuzzyColumns.isEmpty && ms.groups.size == 1 && {
-      val g = ms.groups.head
-      g.constraints.isEmpty && g.auxJoins.isEmpty &&
-        g.keys.forall(k => k.sourceKey == k.targetKey)
-    }
-  }
-
   /**
-   * Fast path for the canonical dedup (single equality key group, keep
-   * min pk): survivor assignment is ONE per-key min joined back — no
-   * self-join, no working-source materialization, and the
-   * reflexive/symmetric invariants are provably zero (every duplicate
-   * points at its group's min pk; the min never points anywhere).
-   * Semantically identical to the general path (the oracle SQL for
-   * q_dedup is written in the equivalent window form).
-   */
-  private def dedupFast(table: DataFrame, spec: MergeSpec): DedupResult = {
-    val pk = spec.matchSpec.targetPk
-    val keyNames = spec.matchSpec.groups.head.keys.map(_.sourceKey)
-    val keys = keyNames.map(col)
-    // per-key min via AGGREGATE + join-back, not min().over(key window):
-    // the aggregate reduces a hot duplicate key map-side and the join
-    // back is AQE-skew-splittable, where a window partition funnels the
-    // whole hot key through one task (a 100 TB corpus WILL have a
-    // pathological duplicate group). The distinct-key side is small, so
-    // Spark broadcasts it when it fits.
-    // Null keys never match in the join formulation (NULL ≠ NULL) and a
-    // left join leaves their group-min null — force null-keyed rows to
-    // be their own survivors, as in the general path.
-    val anyNullKey = keys.map(_.isNull).reduce(_ || _)
-    val mins = table.groupBy(keys: _*).agg(min(col(pk)).as("__gmin"))
-    val tagged = table.join(mins, keyNames, "left")
-      .withColumn("__survivor",
-        when(anyNullKey, col(pk)).otherwise(col("__gmin")))
-      .drop("__gmin")
-    // null pks never participate in matching (join semantics); keep
-    // them as survivors rather than letting null comparisons drop them
-    val dupes0 = tagged.filter(
-      col(pk).isNotNull && col(pk) =!= col("__survivor"))
-    val survivors = tagged.filter(
-      col(pk).isNull || col(pk) === col("__survivor"))
-      .select(table.columns.map(col).toIndexedSeq: _*)
-    val folded = Merger.fold(survivors, pk, dupes0, "__survivor", pk, spec, Nil)
-    // duplicates report in the general path's working shape and order:
-    // source id, the table's columns, target id, match group
-    val dupes = dupes0.select(col(pk).as(SourceId) +:
-      table.columns.toIndexedSeq.map(col) :+
-      col("__survivor").as(TargetId) :+ lit(1).as(MatchGroup): _*)
-    DedupResult(folded, dupes, reflexiveCount = 0L, symmetricCount = 0L)
-  }
-
-  /**
-   * The self-match both [[dedup]]'s general path and [[DedupAudit]] run:
+   * The self-match both [[dedup]] and [[DedupAudit]] run:
    * every exact group gains the orientation constraint, and the table is
    * matched against itself. Returned unpersisted with the oriented spec.
    * Fuzzy columns are refused: the fuzzy pass has no orientation, so an
@@ -137,7 +82,6 @@ object Deduper {
   def dedup(table: DataFrame, spec: MergeSpec,
             orientation: Option[MatchConstraint] = None,
             enforceInvariants: Boolean = true): DedupResult = {
-    if (isFastPath(spec, orientation)) return dedupFast(table, spec)
     val pk = spec.matchSpec.targetPk
     val (ms, matched) = selfMatch(table, spec, orientation)
     val cached = matched.persist()

@@ -31,10 +31,10 @@ import graft.ops.Dispatch
  *     [[DefaultBroadcastLimit]] rows) the source becomes an in-memory
  *     postings index, the role of the reference's gist_trgm_ops index,
  *     broadcast and probed by every target row; the target crosses the
- *     shuffle once, as its (pk, string) projection. A larger source, or
- *     a pair product above [[DefaultMaxCrossPairs]], takes the
- *     inverted-index join instead: explode both sides into trigram
- *     hashes, join on the hash, aggregate per pair.
+ *     shuffle once, as its (pk, string) projection, whatever its size.
+ *     A larger source takes the inverted-index join instead: explode
+ *     both sides into trigram hashes, join on the hash, aggregate per
+ *     pair.
  *
  *  2. ASSIGNMENT is the sequential greedy. The (thresholded, usually
  *     small) pair set is checkpointed, and up to
@@ -152,44 +152,39 @@ object Fuzzy {
       .withColumn("__sh", triHashes(col(strCol)))
       .select(col(idCol), col("__sh"), size(col("__sh")).as(nCol))
 
-  /** Probe-path pair budget: the probe costs one increment per shared
-    * (trigram, source, target) co-occurrence, so |S|·|T| pairs is only
-    * its worst case (every pair shares a trigram); above this product a
-    * small source against a huge target still takes the index path. */
-  val DefaultMaxCrossPairs: Long = 500000000L
-
   /**
    * All (sourceId, targetId, distance) pairs with distance < limit.
    * sim = shared/(|A| + |B| − shared) over the padded-trigram sets —
    * the exact pg_trgm formula, computed algebraically.
    *
-   * Small source sides become a broadcast postings index probed by the
-   * target rows (the target's (pk, string) projection is repartitioned
-   * first so the trigram prep and the probe spread across cores); large
-   * ones go through the inverted-index join on trigram hashes with a
-   * frequency cap against ultra-common-trigram blow-up.
+   * A source of at most `broadcastLimit` rows, whatever the target's
+   * size, becomes a broadcast postings index probed by the target rows
+   * (the target's (pk, string) projection is repartitioned first so the
+   * trigram prep and the probe spread across cores); larger ones go
+   * through the inverted-index join on trigram hashes. Both branches
+   * drop the trigrams over `maxTrigramFreq` on either side.
    */
   def candidatePairs(
       source: DataFrame, sourceId: String, sourceCol: String,
       target: DataFrame, targetId: String, targetCol: String,
       limit: Double = DefaultLimit,
       maxTrigramFreq: Long = DefaultMaxTrigramFreq,
-      broadcastLimit: Long = DefaultBroadcastLimit,
-      maxCrossPairs: Long = DefaultMaxCrossPairs): DataFrame =
+      broadcastLimit: Long = DefaultBroadcastLimit): DataFrame =
     pairsWithCaches(source, sourceId, sourceCol, target, targetId, targetCol,
-      limit, maxTrigramFreq, broadcastLimit, maxCrossPairs)._1
+      limit, maxTrigramFreq, broadcastLimit)._1
 
   /** [[candidatePairs]] plus the trigram-prep caches its lazy result still
     * reads; the caller releases them once the pairs are materialized. */
   private def pairsWithCaches(
       source: DataFrame, sourceId: String, sourceCol: String,
       target: DataFrame, targetId: String, targetCol: String,
-      limit: Double, maxTrigramFreq: Long, broadcastLimit: Long,
-      maxCrossPairs: Long): (DataFrame, Seq[DataFrame]) = {
+      limit: Double, maxTrigramFreq: Long, broadcastLimit: Long)
+      : (DataFrame, Seq[DataFrame]) = {
     // materialized: each side feeds multiple consumers (count probe /
     // frequency cap / join) — without a barrier the trigram prep would
-    // be recomputed per consumer. Each side's cache is filled by the
-    // scan that observes its row count (one job, no aggregate stage).
+    // be recomputed per consumer. The source's cache, and on the probe
+    // branch the target's, is filled by the scan that observes its row
+    // count (one job, no aggregate stage).
     // The source is filled before the target prep is planned: a target
     // read off a cached upstream (the claimed targets of a cached exact
     // match) is then planned against that cache's real size, so a small
@@ -206,11 +201,11 @@ object Fuzzy {
       if (probe) target.select(col(targetId), col(targetCol)).repartition(nPart)
       else target,
       targetId, targetCol, "__tn").persist()
-    lazy val tCount = Dispatch.countRows(tPrep)
-    if (probe && sCount * tCount <= maxCrossPairs) {
+    if (probe) {
       // result parity with the index path: its frequency cap drops
       // ultra-common trigrams from the shared counts, so collect the
       // (few) over-cap trigram hashes and skip them in the kernel too
+      val tCount = Dispatch.countRows(tPrep)
       val overCap: Array[Long] =
         // a trigram's doc-frequency is bounded by the side's row count,
         // so corpora smaller than the cap provably have nothing over it
@@ -364,7 +359,9 @@ object Fuzzy {
    * remaining pairs is necessarily accepted by the sequential greedy
    * (no earlier pair can touch either endpoint), so each round assigns
    * all such pairs and drops their endpoints; induction on the global
-   * order gives exact equivalence. Note the weaker proposal scheme
+   * order gives exact equivalence. The loop needs no round cap: the
+   * remaining pairs' global minimum is always a local minimum, so every
+   * round assigns at least one pair. Note the weaker proposal scheme
    * (per-source best, conflicts resolved per target AMONG PROPOSALS) is
    * NOT equivalent: a target's true-best source may propose elsewhere,
    * letting a farther pair win — e.g. pairs (s1,t1,.1),(s2,t1,.2),
@@ -377,7 +374,6 @@ object Fuzzy {
    * counts the pairs, that path is two jobs.
    */
   def greedyAssign(pairs: DataFrame, sourceId: String, targetId: String,
-                   maxRounds: Int = 200,
                    driverLimit: Long = DefaultDriverAssignLimit): DataFrame = {
     val spark = pairs.sparkSession
     // localCheckpoint (eager): truncates the logical plan (the loop
@@ -410,9 +406,8 @@ object Fuzzy {
     } else {
       var remaining = checkpoint
       val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var round = 0
       var done = false
-      while (!done && round < maxRounds) {
+      while (!done) {
         val bySource = Window.partitionBy(col(sourceId))
           .orderBy(col("distance").asc, col(targetId).asc)
         val byTarget = Window.partitionBy(col(targetId))
@@ -432,7 +427,6 @@ object Fuzzy {
           remaining = next
           if (nNext == 0) done = true
         }
-        round += 1
       }
       // the result reads only the per-round winners
       releaseCheckpoint(remaining)
@@ -469,8 +463,7 @@ object Fuzzy {
       val (pairs, prep) = pairsWithCaches(
         unmatchedSrc.select(col(SourceId), col(fcol)), SourceId, fcol,
         available.select(col(targetPk), col(fcol)), targetPk, fcol,
-        limit, DefaultMaxTrigramFreq, DefaultBroadcastLimit,
-        DefaultMaxCrossPairs)
+        limit, DefaultMaxTrigramFreq, DefaultBroadcastLimit)
       // greedyAssign materializes the assignment, so the prep is done
       val assigned =
         try greedyAssign(pairs, SourceId, targetPk)

@@ -52,11 +52,10 @@ object CsvSource {
     * java.util.regex semantics as the `regexp_replace` the data lines
     * go through, so the result equals the cleaned first line. */
   private def header(spark: SparkSession, spec: CsvSpec): Option[String] =
-    spark.read.option("encoding", spec.encoding).text(spec.path)
-      .limit(1).collect().headOption.map { r =>
-        val h = r.getString(0)
-        spec.removeExpression.fold(h)(h.replaceAll(_, ""))
-      }
+    lines(spark, spec).limit(1).collect().headOption.map { r =>
+      val h = r.getString(0)
+      spec.removeExpression.fold(h)(h.replaceAll(_, ""))
+    }
 
   /** The schema a header implies; an empty input has no header row —
     * zero columns, not a crash. */
@@ -66,12 +65,19 @@ object CsvSource {
         StructField(normalizeHeader(c, spec.quote), StringType, nullable = true)
       }))
 
-  /** Raw text lines (column `value`) with `removeExpression` stripped
-    * — the reference's sed pass (csv_file.rb:30-38). */
+  /** The input's lines (column `value`) decoded from their bytes with
+    * `spec.encoding`: the text source ignores an `encoding` option. An
+    * encoding `decode` does not support fails the read. */
+  private def lines(spark: SparkSession, spec: CsvSpec): DataFrame =
+    spark.read.text(spec.path)
+      .select(decode(col("value").cast("binary"), spec.encoding).as("value"))
+
+  /** Decoded lines with `removeExpression` stripped — the reference's
+    * sed pass (csv_file.rb:30-38). */
   private def cleanedLines(spark: SparkSession, spec: CsvSpec): DataFrame = {
-    val lines = spark.read.option("encoding", spec.encoding).text(spec.path)
-    spec.removeExpression.fold(lines)(re =>
-      lines.withColumn("value", regexp_replace(col("value"), re, "")))
+    val raw = lines(spark, spec)
+    spec.removeExpression.fold(raw)(re =>
+      raw.withColumn("value", regexp_replace(col("value"), re, "")))
   }
 
   /** Data lines: every cleaned line except the header, dropped by value

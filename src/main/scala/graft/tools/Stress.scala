@@ -29,6 +29,9 @@ import graft.ops.{Clusters, Similarity}
  *     MaxTaskShare of its stage's shuffle records). Then the quadratic
  *     shape: one non-pk key value on 20k source and 20k target rows.
  *
+ * Legs 4-23 stress the ops families; leg 24 ([[fuzzyCandidates]]) runs
+ * fuzzy candidate generation at 3k × 190k against a brute-force sample.
+ *
  * A task-level listener enforces the no-funnel property for EVERY
  * scenario, not just the merge.
  *
@@ -90,6 +93,48 @@ object Stress {
     val r = df.agg(count(lit(1)),
       sum(xxhash64(col(a), col(b)).cast("decimal(38,0)"))).collect()(0)
     (r.getLong(0), String.valueOf(r.get(1)))
+  }
+
+  /** Leg 24: fuzzy candidates for 3k unmatched sources × 190k targets
+    * on a synthetic "first last number street type" key, past the old
+    * pair-product bound. The source fits the broadcast, so the postings
+    * probe must run (no Join in the plan), and its pairs for 100 sources
+    * must equal a brute-force `Trigram.distance` cross join. */
+  private[graft] def fuzzyCandidates(spark: SparkSession): Unit = {
+    import spark.implicits._
+    val rnd = new java.util.SplittableRandom(24L)
+    def letter(s: String) = s.charAt(rnd.nextInt(s.length))
+    def vocab(n: Int, syllables: Int) = Array.fill(n)((0 to rnd.nextInt(syllables))
+      .map(_ => s"${letter("bcdfghjklmnprstvw")}${letter("aeiou")}").mkString)
+    val words = Seq(vocab(400, 3), vocab(3000, 3), vocab(600, 2),
+      Array("st", "ave", "rd", "ln", "dr", "ct", "way"))
+    // skewed draws: low indices repeat, as common names do
+    def pick(xs: Array[String]) = { val u = rnd.nextDouble(); xs((u * u * xs.length).toInt) }
+    def key() = { val Seq(f, l, st, ty) = words.map(pick); s"$f $l ${1 + rnd.nextInt(9999)} $st $ty" }
+    val targets = Array.fill(190000)(key())
+    // a third of the sources are one-letter edits of a target's key
+    val sources = Array.tabulate(3000)(i => if (i % 3 != 0) key() else {
+      val k = targets(rnd.nextInt(targets.length))
+      k.updated(rnd.nextInt(k.length), letter("bcdfghjklmnprstvw"))
+    })
+    def frame(keys: Array[String], id: String) =
+      keys.toSeq.zipWithIndex.map { case (k, i) => (i.toLong, k) }.toDF(id, "key")
+    val (source, target) = (frame(sources, "sid"), frame(targets, "tid"))
+    val pairs = Fuzzy.candidatePairs(source, "sid", "key", target, "tid", "key")
+    val got = tme("fuzzy candidates (3,000 x 190,000)") {
+      pairs.as[(Long, Long, Double)].collect().toSet
+    }
+    assert(!pairs.queryExecution.optimizedPlan.exists(_.nodeName == "Join"),
+      "expected the broadcast probe, found a join")
+    val distance = udf((a: String, b: String) => graft.functions.Trigram.distance(a, b))
+    val want = tme("fuzzy brute force (100 sources)") {
+      source.filter(col("sid") < 100).withColumnRenamed("key", "skey").crossJoin(target)
+        .select(col("sid"), col("tid"), distance(col("skey"), col("key")).as("d"))
+        .filter(col("d") < Fuzzy.DefaultLimit).as[(Long, Long, Double)].collect().toSet
+    }
+    assert(got.filter(_._1 < 100) == want, s"probe and brute force diverge: " +
+      s"${got.count(_._1 < 100)} vs ${want.size} pairs on 100 sources")
+    println(f"[stress] fuzzy candidates agree: ${got.size}%,d pairs, ${want.size} sampled")
   }
 
   def main(args: Array[String]): Unit = {
@@ -1279,6 +1324,9 @@ object Stress {
       assert(SinkCorpus.purge(purge, "id", scBase, "doc_id") == 0)
     }
     assertNoFunnel("sink-corpus-purge")
+
+    fuzzyCandidates(spark)
+    assertNoFunnel("fuzzy-candidates")
 
     println("[stress] ALL OK")
     spark.stop()

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.{CsvSource, CsvSpec}
@@ -19,6 +20,16 @@ class CsvGatewaySpec extends SparkSpec {
     val df = CsvSource.read(spark, spec)
     assert(df.columns.toSeq == Seq("first_name", "last_name", "zip"))
     assert(df.schema.fields.forall(_.dataType.typeName == "string"))
+    // the default LATIN1 encoding (É and Ü are one byte each) decodes
+    // the same on the repair path and the native reader
+    val latin = Files.createTempFile("graft_csv", ".csv")
+    Files.write(latin, "name,city\nJOSÉ,MÜNSTER\n".getBytes(StandardCharsets.ISO_8859_1))
+    for (dropMalformed <- Seq(true, false)) {
+      val ls = CsvSpec(latin.toString, quote = "\"", dropMalformed = dropMalformed)
+      assert(CsvSource.read(spark, ls).as[(String, String)].collect().toSeq ==
+        Seq(("JOSÉ", "MÜNSTER")), s"dropMalformed = $dropMalformed")
+      assert(CsvSource.malformedCount(spark, ls) == 0)
+    }
   }
 
   test("remove expression strips pattern before parsing") {

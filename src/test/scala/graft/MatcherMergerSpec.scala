@@ -256,8 +256,8 @@ class MatcherMergerSpec extends SparkSpec {
     val dspec = MergeSpec(
       matchSpec = MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"),
       columnMap = Seq("note" -> "k"), mergeExpressions = Map("v" -> "$T + $S"))
-    // fast path (default orientation) and general path, also with the pk
-    // not in the first column: rows and column order are the table's
+    // implicit and explicit default orientation, also with the pk not in
+    // the first column: rows and column order are the table's
     for (table <- Seq(t, t.select("note", "id", "k", "v"));
          orientation <- Seq(None, Some(Deduper.defaultOrientation("id")))) {
       val res = Deduper.dedup(table, dspec, orientation)

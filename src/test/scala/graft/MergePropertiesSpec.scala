@@ -313,53 +313,66 @@ class MergePropertiesSpec extends SparkSpec {
     }
   }
 
-  test("dedup fast path treats null keys as non-matching (like the join)") {
+  test("dedup treats null keys as non-matching (like the join)") {
     val table = Seq(
       (1L, Some("k"), 1.0), (2L, Some("k"), 2.0),
       (3L, None, 3.0), (4L, None, 4.0) // null keys: never duplicates
     ).toDF("id", "k", "v")
     val spec = MergeSpec(matchSpec =
       MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"))
-    val fast = Deduper.dedup(table, spec)
-    val general = Deduper.dedup(table, spec,
+    val implicitOrientation = Deduper.dedup(table, spec)
+    val explicitOrientation = Deduper.dedup(table, spec,
       orientation = Some(Deduper.defaultOrientation("id")))
-    assert(fast.newTable.select("id").as[Long].collect().toSet ==
+    assert(implicitOrientation.newTable.select("id").as[Long].collect().toSet ==
       Set(1L, 3L, 4L))
-    assert(general.newTable.select("id").as[Long].collect().toSet ==
+    assert(explicitOrientation.newTable.select("id").as[Long].collect().toSet ==
       Set(1L, 3L, 4L))
   }
 
-  test("dedup fast path keeps null-pk rows (join-semantics parity)") {
+  test("dedup keeps null-pk rows (join semantics)") {
     val table = Seq(
       (Some(1L), "k", 1.0), (Some(2L), "k", 2.0), (None, "k", 3.0)
     ).toDF("id", "k", "v")
     val spec = MergeSpec(matchSpec =
       MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"))
-    val fast = Deduper.dedup(table, spec)
+    val res = Deduper.dedup(table, spec)
     // null-pk row is neither a duplicate nor dropped
-    assert(fast.newTable.count() == 2)
-    assert(fast.newTable.filter($"id".isNull).count() == 1)
-    assert(fast.duplicates.count() == 1)
+    assert(res.newTable.count() == 2)
+    assert(res.newTable.filter($"id".isNull).count() == 1)
+    assert(res.duplicates.count() == 1)
   }
 
-  test("dedup fast path and general (join) path agree") {
-    (1 to Rounds).foreach { r =>
-      val t = sample(genTarget, 300 + r)
-      val table = t.toDF("id", "k", "v")
-      val spec = MergeSpec(
-        matchSpec = MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"),
-        mergeExpressions = Map("v" -> "$T + $S"))
-      val fast = Deduper.dedup(table, spec) // default orientation → fast
-      val general = Deduper.dedup(table, spec, // explicit → general path
-        orientation = Some(Deduper.defaultOrientation("id")))
-      assert(fast.newTable.columns sameElements table.columns, s"round $r")
-      assert(general.newTable.columns sameElements table.columns, s"round $r")
-      val a = fast.newTable.select("id", "k", "v")
-      val b = general.newTable.select("id", "k", "v")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"round $r")
-      assert(fast.duplicates.count() == general.duplicates.count(), s"round $r")
-      assert(fast.duplicates.columns.toSeq == general.duplicates.columns.toSeq,
-        s"round $r")
-    }
+  // Duplicate pks: a pk is a duplicate when any row holding it is, so a
+  // single equality group under the default orientation is no proof that
+  // the invariants are zero.
+  private val dupPkSpec = MergeSpec(matchSpec =
+    MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"))
+
+  test("dedup with duplicate pks drops every row of a duplicate pk (q_dedup's NOT IN)") {
+    val rows = Seq((5L, "a"), (3L, "a"), (5L, "b"), (7L, "c"), (8L, "c"))
+    val table = rows.toDF("id", "k")
+    val res = Deduper.dedup(table, dupPkSpec)
+    try {
+      assert(res.reflexiveCount == 0 && res.symmetricCount == 0)
+      // the oracle's dup: rows whose key's min pk is below their own pk
+      val minPk = rows.groupBy(_._2).map { case (k, rs) => k -> rs.map(_._1).min }
+      val dupPks = rows.filter { case (id, k) => minPk(k) < id }.map(_._1).toSet
+      assert(dupPks == Set(5L, 8L))
+      val expect = rows.filterNot { case (id, _) => dupPks(id) }.toSet
+      assert(res.newTable.as[(Long, String)].collect().toSet == expect)
+      assert(res.newTable.columns sameElements table.columns)
+      assert(res.duplicates.select("id").as[Long].collect().toSet == dupPks)
+    } finally res.unpersist()
+  }
+
+  test("dedup with duplicate pks refuses a survivor that is also a duplicate") {
+    // 5 -> 2 on key a, 2 -> 1 on key b: pk 2 survives and is a duplicate
+    val table = Seq((2L, "a"), (5L, "a"), (2L, "b"), (1L, "b")).toDF("id", "k")
+    assert(DedupAudit.audit(table, dupPkSpec).symmetricCount == 1)
+    val e = intercept[IllegalArgumentException](Deduper.dedup(table, dupPkSpec))
+    assert(e.getMessage.contains("1 symmetric matches"))
+    val res = Deduper.dedup(table, dupPkSpec, enforceInvariants = false)
+    try assert(res.reflexiveCount == 0 && res.symmetricCount == 1)
+    finally res.unpersist()
   }
 }

@@ -216,9 +216,12 @@ class ReportExecutionsSpec extends SparkSpec {
       returnToSource = Seq("id" -> "ret"))))
     try assert(merge.updatedSource.filter(col("ret") > 0).count() == 8)
     finally merge.unpersist()
-    val dedup = withinBudget("Deduper.dedup", DedupBudget)(
-      Deduper.dedup(table, spec, orientation))
-    try assert(dedup.newTable.count() == 3) finally dedup.unpersist()
+    // the explicit and the default orientation take the same path
+    for (o <- Seq(orientation, None)) {
+      val dedup = withinBudget(s"Deduper.dedup($o)", DedupBudget)(
+        Deduper.dedup(table, spec, o))
+      try assert(dedup.newTable.count() == 3) finally dedup.unpersist()
+    }
     withinBudget("DedupAudit", DedupAuditBudget)(DedupAudit.audit(table, spec, orientation))
     val f = Files.createTempFile("graft_budget", ".csv")
     Files.writeString(f, "id,name\n1,a\n2,\n2,c\n3,d,EXTRA\n")
