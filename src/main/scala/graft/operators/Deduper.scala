@@ -27,7 +27,10 @@ import org.apache.spark.sql.functions._
  * orientation `$T < $S` each group is its per-key min pk joined onto the
  * table, and a row is a duplicate when that min is below its own pk
  * ([[Matcher.matchRecords]]), so a duplicate group of k rows costs k
- * rows, not k(k−1)/2 pairs. Both invariant counts come from ONE
+ * rows in the scan, not k(k−1)/2 pairs. The key table, broadcast while
+ * it is small, holds only the repeated keys (`min(pk) < max(pk)`) of a
+ * group with no `$T`-only filter and no aux join: a key whose rows share
+ * one pk has no duplicate. Both invariant counts come from ONE
  * mid-pipeline action ([[Matcher.selfMatchReport]]: one aggregation,
  * no self-join) that runs before any output is built; the matched DF
  * is cached first because that action and the outputs both read it
@@ -76,7 +79,7 @@ object Deduper {
     val orient = orientation.getOrElse(defaultOrientation(ms0.targetPk))
     val ms = ms0.copy(groups = ms0.groups.map(g =>
       g.copy(constraints = g.constraints :+ orient)))
-    (ms, Matcher.matchRecords(Matcher.withSourceId(table), table, ms))
+    (ms, Matcher.matchRecords(Matcher.withSourceId(table), table, ms, selfMatch = true))
   }
 
   def dedup(table: DataFrame, spec: MergeSpec,

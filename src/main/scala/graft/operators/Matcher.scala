@@ -31,9 +31,12 @@ import graft.types.Template
  * combines a hot key map-side), left-joined on the group's keys. The
  * winner is one `CASE` over the groups' hits in declaration order —
  * the staged loop's first-match-wins (a row matched by group i keeps it
- * over any group j > i). Like the reference's UPDATE, the working row is
- * matched in place: it is never unioned or windowed, and only a group
- * with a theta constraint joins a result back by its id (see
+ * over any group j > i). In a self-match (dedup and its audit) an
+ * oriented group's table keeps only the keys whose pks differ: a key
+ * whose rows share one pk has no duplicate (see [[Matcher.joinGroup]]).
+ * Like the reference's UPDATE, the working row is matched in place: it
+ * is never unioned or windowed, and only a group with a theta
+ * constraint joins a result back by its id (see
  * [[Matcher.matchRecords]]). The multi-candidate nondeterminism of Postgres UPDATE..FROM
  * is resolved deterministically to min(t.pk) (divergence documented,
  * SURVEY §7.4).
@@ -132,7 +135,14 @@ object Matcher {
    * id (the staged loop's nulls-first order); null keys never match.
    */
   def matchRecords(sourceWithId: DataFrame, target: DataFrame,
-                   spec: MatchSpec): DataFrame = {
+                   spec: MatchSpec): DataFrame =
+    matchRecords(sourceWithId, target, spec, selfMatch = false)
+
+  /** [[matchRecords]] for a caller that guarantees `target` is the
+    * table `sourceWithId` adds its id to ([[Deduper.selfMatch]]), so a
+    * key table may drop the keys no row can hit (see [[joinGroup]]). */
+  private[operators] def matchRecords(sourceWithId: DataFrame, target: DataFrame,
+                                      spec: MatchSpec, selfMatch: Boolean): DataFrame = {
     require(sourceWithId.columns.contains(SourceId),
       s"source must carry $SourceId (use Matcher.withSourceId)")
     val pkType = target.schema(spec.targetPk).dataType
@@ -145,7 +155,8 @@ object Matcher {
       .foldLeft((sourceWithId.as("s"), Vector.empty[(Column, Column)])) {
         case ((acc, done), (g, i)) =>
           val (next, hit, tid) =
-            joinGroup(acc, sourceWithId, target, spec.targetPk, g, s"__g${i + 1}")
+            joinGroup(acc, sourceWithId, target, spec.targetPk, g, s"__g${i + 1}",
+              selfMatch)
           (next, done :+ (hit -> tid))
       }
     def firstHit(value: Int => Column): Column =
@@ -175,9 +186,18 @@ object Matcher {
    * the driver anyway, and a partitioned aggregate would add a shuffle
    * per group. A larger one is hash-aggregated and joined as Spark
    * plans it.
+   *
+   * In a self-match (`selfMatch`: the source is the target) a group
+   * oriented pk to pk (`t.pk < s.pk`), with no `$T`-only filter, no aux
+   * join and every key naming one column on both sides, keeps only the
+   * keys with `min(pk) < max(pk)`. Each row of such a key is also one of
+   * its target rows, so a row with pk `p` hits only when
+   * `min < p ≤ max`: a key whose pks are all equal or all null hits
+   * nothing. The key table of a dedup therefore holds its repeated keys,
+   * not every key of the table.
    */
   private def joinGroup(acc: DataFrame, source: DataFrame, target: DataFrame,
-                        pk: String, g: ExactGroup, tag: String)
+                        pk: String, g: ExactGroup, tag: String, selfMatch: Boolean)
       : (DataFrame, Column, Column) = {
     // pre-join aux tables into the target side (J4)
     val tgt = g.auxJoins.foldLeft(target.as("t")) { (df, aux) =>
@@ -223,9 +243,16 @@ object Matcher {
     val threshold = source.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val small = threshold >= 0 &&
       projected.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
-    val perKey = (if (small) projected.coalesce(1) else projected)
+    val grouped = (if (small) projected.coalesce(1) else projected)
       .groupBy(keyNames.map(col): _*)
-      .agg((if (orient.isEmpty) nullsFirstMin(col(pk)) else min(col(pk))).as(tid))
+    val repeatedOnly = selfMatch && g.auxJoins.isEmpty && tOnly.isEmpty &&
+      orient.exists(_.column == pk) && g.keys.forall(k => k.sourceKey == k.targetKey)
+    val minPk = (if (orient.isEmpty) nullsFirstMin(col(pk)) else min(col(pk))).as(tid)
+    val maxPk = s"${tag}_max"
+    val perKey =
+      if (repeatedOnly) grouped.agg(minPk, max(col(pk)).as(maxPk))
+        .filter(col(tid) < col(maxPk)).drop(maxPk)
+      else grouped.agg(minPk)
     val on = g.keys.zip(keyNames).map { case (k, name) =>
       col(s"s.${k.sourceKey}") === col(name) }.reduce(_ && _)
     // `$T` in an orientation names the group's min pk

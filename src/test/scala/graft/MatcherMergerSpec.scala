@@ -219,6 +219,45 @@ class MatcherMergerSpec extends SparkSpec {
     unchecked.unpersist()
   }
 
+  test("a self-match key table keeps only the keys a row can hit, in the " +
+    "audit and the dedup") {
+    val spec = MergeSpec(matchSpec =
+      MatchSpec(Seq(ExactGroup.onColumns("k")), targetPk = "id"))
+    val tOnly = MergeSpec(matchSpec = MatchSpec(Seq(ExactGroup(Seq(KeyPair("k", "k")),
+      constraints = Seq(MatchConstraint("v", "$T >= 3")))), targetPk = "id"))
+    val byV = Some(MatchConstraint("v", "$T < $S", Some("id")))
+    // rows (pk, key, v), the spec, the orientation, and each duplicate's
+    // pk -> its target
+    val cases = Seq[(Seq[(Option[Long], String, Int)], MergeSpec,
+        Option[MatchConstraint], Map[Long, Long])](
+      // one pk twice on one key: neither row is below the other
+      (Seq((Some(3L), "k", 0), (Some(3L), "k", 0)), spec, None, Map.empty),
+      // {3, 3, 5}: 5 alone is a duplicate
+      (Seq((Some(3L), "k", 0), (Some(3L), "k", 0), (Some(5L), "k", 0)), spec, None,
+        Map(5L -> 3L)),
+      // a key whose pks are all null: nothing matches
+      (Seq((None, "k", 0), (None, "k", 0)), spec, None, Map.empty),
+      // `$T >= 3` leaves the target {3}, one pk on the key, yet row 5
+      // still matches 3: a filtered target is no key table to prune
+      (Seq((Some(3L), "k", 9), (Some(5L), "k", 1)), tOnly, None, Map(5L -> 3L)),
+      // an orientation on v, not the pk: the key's one pk 3 is below v = 9
+      (Seq((Some(3L), "k", 9), (Some(3L), "k", 1)), spec, byV, Map(3L -> 3L)))
+    for (threshold <- Seq("10485760", "-1");
+         ((rows, s, o, dupes), i) <- cases.zipWithIndex)
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        val t = rows.toDF("id", "k", "v")
+        val label = s"case ${i + 1}, threshold $threshold"
+        val groups = if (dupes.isEmpty) Map.empty[Int, Long] else Map(1 -> dupes.size.toLong)
+        val reflexive = dupes.count { case (p, tid) => p == tid }.toLong
+        assert(DedupAudit.audit(t, s, o) ==
+          DedupAuditReport(rows.size, groups, reflexive, 0), label)
+        val res = Deduper.dedup(t, s, o, enforceInvariants = false)
+        try assert(res.duplicates.select("id", Matcher.TargetId).as[(Long, Long)]
+          .collect().toMap == dupes, label)
+        finally res.unpersist()
+      }
+  }
+
   test("dedup refuses fuzzy columns in both the audit and the dedup") {
     // the fuzzy pass has no orientation: 3 and 4 (unmatched by k) would
     // each match themselves at distance 0

@@ -111,16 +111,25 @@ class MergePropertiesSpec extends SparkSpec {
     def target: DataFrame = t.toDF("id", "k", "k2", "v", "a")
   }
 
+  /** The aux table: row `a` carries flag `auxOk(a)`. */
+  private def auxTable(auxOk: Seq[Boolean]): DataFrame =
+    auxOk.zipWithIndex.map { case (ok, a) => (a, ok) }.toDF("a", "ok")
+
+  private def opt[A](g: Gen[A], nulls: Int = 1): Gen[Option[A]] =
+    Gen.frequency(5 -> g.map(Some(_)), nulls -> Gen.const(None))
+
+  /** A target row: duplicate and null pks, null keys, `k2` in 0 to
+    * `k2Max` and the aux key `a` in 0 to `aMax`. */
+  private def genTgt(k2Max: Int, aMax: Int): Gen[Tgt] = for {
+    id <- opt(Gen.choose(1L, 12L))
+    k <- opt(Gen.choose(0, 4).map(i => s"k$i"))
+    k2 <- opt(Gen.choose(0, k2Max))
+    v <- opt(Gen.choose(0, 9).map(_.toDouble))
+    a <- Gen.choose(0, aMax)
+  } yield (id, k, k2, v, a)
+
   private def randomRound(r: Int): RandomRound = {
-    def opt[A](g: Gen[A], nulls: Int = 1): Gen[Option[A]] =
-      Gen.frequency(5 -> g.map(Some(_)), nulls -> Gen.const(None))
-    val genT: Gen[Tgt] = for {
-      id <- opt(Gen.choose(1L, 12L)) // duplicate and null pks
-      k <- opt(Gen.choose(0, 4).map(i => s"k$i"))
-      k2 <- opt(Gen.choose(0, 2))
-      v <- opt(Gen.choose(0, 9).map(_.toDouble))
-      a <- Gen.choose(0, 3)
-    } yield (id, k, k2, v, a)
+    val genT = genTgt(k2Max = 2, aMax = 3)
     val genS: Gen[Long => Src] = for {
       k <- opt(Gen.choose(0, 5).map(i => s"k$i"))
       k2 <- opt(Gen.choose(0, 2))
@@ -140,7 +149,7 @@ class MergePropertiesSpec extends SparkSpec {
       .map { case (f, i) => f(i.toLong) }
     val auxOk = sample(Gen.listOfN(4, Gen.oneOf(false, true)), 7000 + r)
     val groups = sample(Gen.choose(1, 3).flatMap(Gen.listOfN(_, genGroup)), 8000 + r)
-    val auxDf = auxOk.zipWithIndex.map { case (ok, a) => (a, ok) }.toDF("a", "ok")
+    val auxDf = auxTable(auxOk)
     val spec = MatchSpec(groups.map(g =>
       g.copy(auxJoins = g.auxJoins.map(_.copy(df = auxDf)))), targetPk = "id")
     RandomRound(s, t, auxOk, groups, spec)
@@ -182,6 +191,86 @@ class MergePropertiesSpec extends SparkSpec {
       assert(bySid(src._1) == expected(src),
         s"$label round $r source $src groups ${groups.mkString("; ")}")
     }
+  }
+
+  test("a self-match equals a brute-force self-match, in the audit and the dedup") {
+    // distinct tables under the broadcast and the shuffled key tables
+    val rounds = 10
+    Seq("10485760" -> 0, "-1" -> rounds).foreach { case (threshold, from) =>
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        (from + 1 to from + rounds).foreach(r => selfMatchRound(r, threshold))
+      }
+    }
+  }
+
+  /** One random table of 24 rows (null keys, null and duplicate pks)
+    * matched against itself through [[DedupAudit]] and [[Deduper.dedup]],
+    * each row's target and group checked against a brute-force
+    * self-match under the default orientation. The round's first group
+    * cycles through the kinds a key table may or may not drop keys for:
+    * same-name keys (pruned), a `$T`-only filter, an aux join, an FK
+    * pair `k2 = a`, a theta; 0-1 random groups follow it. */
+  private def selfMatchRound(r: Int, label: String): Unit = {
+    val t = sample(Gen.listOfN(24, genTgt(k2Max = 5, aMax = 5)), 9000 + r)
+    val auxOk = sample(Gen.listOfN(6, Gen.oneOf(false, true)), 9100 + r)
+    val aux = AuxJoin(auxTable(auxOk), "x", "t.a = x.a AND x.ok")
+    val same = Seq(Seq(KeyPair("k", "k")), Seq(KeyPair("k", "k"), KeyPair("k2", "k2")))
+    val fk = Seq(Seq(KeyPair("k2", "a")), Seq(KeyPair("k", "k"), KeyPair("k2", "a")))
+    val sometimes = Gen.frequency(3 -> Gen.const(false), 1 -> Gen.const(true))
+    def group(keys: Seq[Seq[KeyPair]], fixed: Seq[MatchConstraint],
+              optional: Seq[MatchConstraint], withAux: Gen[Boolean]): Gen[ExactGroup] =
+      for (ks <- Gen.oneOf(keys); cs <- Gen.someOf(optional); x <- withAux)
+        yield ExactGroup(ks, fixed ++ cs, if (x) Seq(aux) else Nil)
+    val first = Seq(
+      group(same, Nil, Seq(sOnly), Gen.const(false)),
+      group(same, Seq(tOnly), Nil, Gen.const(false)),
+      group(same, Nil, Nil, Gen.const(true)),
+      group(fk, Nil, Seq(sOnly), Gen.const(false)),
+      group(same ++ fk, Seq(theta), Seq(sOnly, tOnly), sometimes))(r % 5)
+    val any = group(same ++ fk, Nil, Seq(sOnly, tOnly, theta), sometimes)
+    val groups = sample(for (g <- first; n <- Gen.choose(0, 1); rest <- Gen.listOfN(n, any))
+      yield g +: rest, 9200 + r)
+    val spec = MergeSpec(MatchSpec(groups, targetPk = "id"))
+
+    def column(row: Tgt, c: String): Option[Any] = c match {
+      case "k"  => row._2
+      case "k2" => row._3
+      case "a"  => Some(row._5)
+    }
+    def holds(c: MatchConstraint, src: Tgt, tgt: Tgt): Boolean = c match {
+      case `sOnly`    => src._4.exists(_ > 4)
+      case `tOnly`    => tgt._4.exists(_ >= 3)
+      case `oriented` => tgt._1.zip(src._1).exists { case (a, b) => a < b }
+      case `theta`    => tgt._4.zip(src._4).exists { case (a, b) => a != b }
+    }
+    // the first group with a candidate: its min pk and 1-based index
+    def expected(src: Tgt): Option[(Long, Int)] =
+      groups.zipWithIndex.iterator.map { case (g, i) =>
+        val cands = t.filter(tgt => (g.auxJoins.isEmpty || auxOk(tgt._5)) &&
+          g.keys.forall(k => column(src, k.sourceKey).isDefined &&
+            column(src, k.sourceKey) == column(tgt, k.targetKey)) &&
+          (g.constraints :+ oriented).forall(holds(_, src, tgt)))
+        if (cands.isEmpty) None else Some((cands.flatMap(_._1).min, i + 1))
+      }.collectFirst { case Some(hit) => hit }
+    val want = t.indices.flatMap(i => expected(t(i)).map(i -> _)).toMap
+    val symmetric = want.toSeq.map { case (i, (tid, _)) =>
+      want.keys.count(j => t(j)._1.contains(tid) && t(j)._1 != t(i)._1) }.sum
+    val report = DedupAuditReport(t.size,
+      want.values.groupBy(_._2).map { case (g, hits) => g -> hits.size.toLong },
+      0, symmetric.toLong)
+
+    val what = s"$label round $r groups ${groups.mkString("; ")}"
+    val table = t.zipWithIndex.map { case ((id, k, k2, v, a), i) => (i, id, k, k2, v, a) }
+      .toDF("row", "id", "k", "k2", "v", "a")
+    assert(DedupAudit.audit(table, spec) == report, what)
+    val res = Deduper.dedup(table, spec, enforceInvariants = false)
+    try {
+      assert((res.reflexiveCount, res.symmetricCount) == ((0L, report.symmetricCount)), what)
+      val got = res.duplicates.select("row", Matcher.TargetId, Matcher.MatchGroup)
+        .as[(Int, Long, Int)].collect()
+      assert(got.length == want.size, what)
+      assert(got.map { case (i, tid, g) => i -> ((tid, g)) }.toMap == want, what)
+    } finally res.unpersist()
   }
 
   test("the merge and dedup audits equal what merge and dedup read off their match") {

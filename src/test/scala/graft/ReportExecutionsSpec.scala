@@ -3,9 +3,10 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.functions.{col, count, lit, max, udf}
+import org.apache.spark.sql.functions.{col, concat, count, lit, max, udf}
 import org.apache.spark.sql.graftshim.ListenerDrain
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -55,14 +56,13 @@ class ReportExecutionsSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** The shuffle bytes written by the tasks `body` runs, with its result. */
-  private def shuffleBytes[A](body: => A): (A, Long) = {
+  /** `metric` summed over the tasks `body` runs, with its result. */
+  private def taskBytes[A](metric: TaskMetrics => Long)(body: => A): (A, Long) = {
     val sc = spark.sparkContext
     val bytes = new AtomicLong
     val listener = new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        if (t.taskMetrics != null) bytes.addAndGet(metric(t.taskMetrics))
     }
     ListenerDrain.drain(sc)
     sc.addSparkListener(listener)
@@ -72,6 +72,13 @@ class ReportExecutionsSpec extends SparkSpec {
       (a, bytes.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The shuffle bytes written by the tasks `body` runs, with its result. */
+  private def shuffleBytes[A](body: => A): (A, Long) =
+    taskBytes(_.shuffleWriteMetrics.bytesWritten)(body)
+
+  /** The task-result bytes the driver fetches for `body`, with its result. */
+  private def driverBytes[A](body: => A): (A, Long) = taskBytes(_.resultSize)(body)
 
   private val table = Seq((1L, "k", "a"), (2L, "k", "b"), (3L, "j", "c"),
     (4L, "j", "d"), (5L, "z", "e")).toDF("id", "k", "v")
@@ -235,5 +242,21 @@ class ReportExecutionsSpec extends SparkSpec {
       table, coverageColumns = Seq("k", "v"), geocodingAddressColumn = Some("v"),
       geocodingLatColumn = "id"))
     assert(db.rowCount == 5 && db.needsGeocodingCount.contains(0L))
+  }
+
+  // Task-result bytes of the DedupAudit call below (local[8]): 47,788
+  // with the key table holding the 10 repeated keys, 214,524 when it
+  // held all 20,000.
+  private val DedupAuditDriverBytes = 100000L
+
+  test("a dedup audit sends the repeated keys through the driver, not every key") {
+    // 20,000 rows on unique keys, then 10 more on 10 of those keys
+    val n = 20000L
+    val keyed = spark.range(n + 10).select(col("id"),
+      concat(lit("k"), col("id") % n).as("k"))
+    val (rep, bytes) = driverBytes(DedupAudit.audit(keyed, spec, orientation))
+    assert(rep == DedupAuditReport(n + 10, Map(1 -> 10L), 0, 0))
+    assert(bytes <= DedupAuditDriverBytes,
+      s"DedupAudit fetched $bytes task-result bytes, bound $DedupAuditDriverBytes")
   }
 }
